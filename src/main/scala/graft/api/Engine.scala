@@ -11,7 +11,7 @@ import graft.core.{PathKeys, ScopeMatch}
 import graft.embed.{Embedder, HashedEmbedder}
 import graft.ingest.{DirectoryScanner, Ingest}
 import graft.search.{Bm25, HybridSearch}
-import graft.store.ChunkStore
+import graft.store.{ChunkStore, DirSwap}
 import graft.sync.SyncPlanner
 
 /** Driver-side facade mirroring the reference's tool surface
@@ -31,9 +31,6 @@ final class Engine(
     annLists: Int = 16,
     annProbes: Int = 8,
     annThreshold: Long = Engine.AnnCorpusThreshold,
-    annStrategy: String = "ivf",
-    annPlanes: Int = 8,
-    annProbeRadius: Int = 1,
     mkCaptioner: Option[() => graft.ingest.Captioner] = None) {
 
   import spark.implicits._
@@ -45,25 +42,14 @@ final class Engine(
     * mutations refresh only the file's bucket (1/numBuckets of the corpus). */
   private[graft] val ftsIndex =
     new graft.store.FtsIndexStore(spark, storePath + "-fts", numBuckets)
-  /** persisted ANN index on the same refresh cadence — the reference keeps
-    * its vector index inside the store and queries it with an ANN scan,
-    * never a full scan (`src/vectordb/index.ts:352-353`). Two pluggable
-    * index families behind the same probe seam: "ivf" (KMeans lists,
-    * recall-tuned via annProbes/annLists) and "srp" (deterministic
-    * hyperplane buckets, recall via annProbeRadius — the oracle-replayable
-    * family). Below `annThreshold` chunks the index is dropped and queries
-    * brute-force (exact, and cheaper than probe overhead at tool scale). */
-  private[graft] val annBackend: Engine.AnnBackend = annStrategy match {
-    case "ivf" => new Engine.IvfBackend(
-      new graft.store.AnnIndexStore(spark, storePath + "-ann", numBuckets),
-      annLists, annProbes)
-    case "srp" => new Engine.SrpBackend(
-      new graft.store.SrpIndexStore(spark, storePath + "-ann-srp",
-        mkEmbedder().dim, annPlanes, numBuckets),
-      annProbeRadius)
-    case other => throw new IllegalArgumentException(
-      s"annStrategy must be ivf or srp, got: $other")
-  }
+  /** persisted IVF ANN index on the same refresh cadence — the reference
+    * keeps its vector index inside the store and queries it with an ANN
+    * scan, never a full scan (`src/vectordb/index.ts:352-353`). Recall is
+    * tuned by annProbes/annLists. Below `annThreshold` chunks the index is
+    * dropped and queries brute-force (exact, and cheaper than probe
+    * overhead at tool scale). */
+  private[graft] val annIndex =
+    new graft.store.AnnIndexStore(spark, storePath + "-ann", numBuckets)
   /** Distributed exact-path binary read — replaces
     * `spark.read.format("binaryFile").load(paths: _*)` on the sync paths.
     * Passing N explicit paths as LISTING ROOTS makes InMemoryFileIndex
@@ -156,21 +142,21 @@ final class Engine(
     * own stats table (numBuckets rows), never a standalone corpus count —
     * the full-rebuild arm's only corpus scan is the rebuild itself, which
     * is unavoidable, and a single-file bucketed change scans one bucket. */
-  private def refreshAnn(changed: Option[String]): Unit =
+  private def refreshAnn(changed: Option[String]): Unit = {
     changed match {
-      case Some(p) if numBuckets > 0 && annBackend.exists =>
+      case Some(p) if numBuckets > 0 && annIndex.exists =>
         val b = store.bucketOf(p)
-        annBackend.refreshBucket(store.readBucket(b), b)
-        if (annBackend.rowCount() < annThreshold) annBackend.drop()
+        annIndex.refreshBucket(store.readBucket(b), b)
       case _ =>
         // rebuild unconditionally (its scan is the one unavoidable corpus
         // read — a standalone pre-count would scan the table twice), then
         // enforce the threshold from the index's own stats table. A
         // below-threshold corpus pays a rebuild-then-drop, but a corpus
         // below threshold is small by definition.
-        annBackend.rebuild(store.read())
-        if (annBackend.rowCount() < annThreshold) annBackend.drop()
+        annIndex.rebuild(store.read(), annLists)
     }
+    if (annIndex.rowCount() < annThreshold) annIndex.drop()
+  }
   private def embedder: Embedder = mkEmbedder()
 
   final case class IngestResult(filePath: String, chunkCount: Long,
@@ -195,17 +181,17 @@ final class Engine(
     val qArr = embedder.embed(query)
     val qv = typedLit(qArr.toSeq)
     val tokens = "[a-z0-9]+".r.findAllIn(query.toLowerCase).toSeq.distinct
-    // ANN route (SURVEY §7 step 7): above the corpus threshold the candidate
-    // top-(2·limit) comes from the persisted IVF index — nProbe list
-    // partitions read, scope filter applied BEFORE the top-k so scoped
-    // queries still fill their k. Below it (or with no index) the exact
-    // brute-force scan runs; both paths score with the same expression.
+    // ANN route (SURVEY §7 step 7): above the corpus threshold an unscoped
+    // query's candidate top-(2·limit) comes from the persisted IVF index —
+    // only the nProbe nearest list partitions are read. A scoped query takes
+    // the exact scan, whose scope filter runs below the top-k: the nearest
+    // lists may hold no in-scope chunk, so probing first could return fewer
+    // than `limit` rows while in-scope chunks exist. Both paths score with
+    // the same expression.
     val annCands =
-      if (annBackend.exists && annBackend.rowCount() >= annThreshold)
-        Some(annBackend.probe(qArr.toSeq,
-          limit * HybridSearch.CandidateMultiplier,
-          where = if (scope.isEmpty) None
-                  else Some(ScopeMatch.inScope(col("filePath"), scope))))
+      if (scope.isEmpty && annIndex.exists && annIndex.rowCount() >= annThreshold)
+        Some(annIndex.probe(qArr, annProbes,
+          limit * HybridSearch.CandidateMultiplier))
       else None
     // BM25 stats are GLOBAL regardless of scope — the reference's FTS index
     // is corpus-wide and scope only restricts which rows come back — so the
@@ -851,8 +837,15 @@ final class Engine(
 
   /** once-per-batch maintenance (the reference's `optimize()` after a sync
     * batch, `src/server/index.ts:546-549`): compact fragmented chunk
-    * partitions and sweep stale swap debris */
-  def optimize(): Unit = mutationGuard.synchronized { store.optimize() }
+    * partitions and sweep stale swap debris beside the chunk table and
+    * both index roots */
+  def optimize(): Unit = mutationGuard.synchronized {
+    store.optimize()
+    val fs = new org.apache.hadoop.fs.Path(storePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (index <- Seq("-fts", "-ann"))
+      DirSwap.sweepDebris(fs, storePath + index, DirSwap.DebrisAgeMs)
+  }
 
   /** Export the chunk corpus in the sharded training layout
     * ([[graft.ops.CorpusWriter]]): split=/shard= directories, content-hash
@@ -931,54 +924,6 @@ object Engine {
     * overhead + recall loss buy nothing at tool scale); above it the probe
     * reads nProbe/nLists of the corpus instead of all of it. */
   val AnnCorpusThreshold = 4096L
-
-  /** uniform seam over the two persisted ANN index families — the engine's
-    * refresh/probe logic is strategy-blind */
-  private[graft] sealed trait AnnBackend {
-    def exists: Boolean
-    def rowCount(): Long
-    def drop(): Unit
-    def rebuild(rows: org.apache.spark.sql.DataFrame): Unit
-    def refreshBucket(rows: org.apache.spark.sql.DataFrame, bucket: Long): Unit
-    /** streaming-freshness append: a batch's vectors become probe-visible
-      * without a rebuild (both families support it; IVF self-rebuilds once
-      * its centroid-drift counter trips) */
-    def appendBatch(rows: org.apache.spark.sql.DataFrame): Long
-    def probe(queryVec: Seq[Float], k: Int,
-              where: Option[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame
-  }
-
-  private[graft] final class IvfBackend(
-      val index: graft.store.AnnIndexStore, nLists: Int, nProbe: Int)
-      extends AnnBackend {
-    def exists: Boolean = index.exists
-    def rowCount(): Long = index.rowCount()
-    def drop(): Unit = index.drop()
-    def rebuild(rows: org.apache.spark.sql.DataFrame): Unit = index.rebuild(rows, nLists)
-    def refreshBucket(rows: org.apache.spark.sql.DataFrame, bucket: Long): Unit =
-      index.refreshBucket(rows, bucket)
-    def appendBatch(rows: org.apache.spark.sql.DataFrame): Long =
-      index.appendBatch(rows, nLists)
-    def probe(queryVec: Seq[Float], k: Int,
-              where: Option[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame =
-      index.probe(queryVec.toArray, nProbe, k, where)
-  }
-
-  private[graft] final class SrpBackend(
-      val index: graft.store.SrpIndexStore, radius: Int)
-      extends AnnBackend {
-    def exists: Boolean = index.exists
-    def rowCount(): Long = index.rowCount()
-    def drop(): Unit = index.drop()
-    def rebuild(rows: org.apache.spark.sql.DataFrame): Unit = index.rebuild(rows)
-    def refreshBucket(rows: org.apache.spark.sql.DataFrame, bucket: Long): Unit =
-      index.refreshBucket(rows, bucket)
-    def appendBatch(rows: org.apache.spark.sql.DataFrame): Long =
-      index.appendBatch(rows)
-    def probe(queryVec: Seq[Float], k: Int,
-              where: Option[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame =
-      index.probe(queryVec, k, radius, where)
-  }
 
   /** recover the external source id from a managed raw-data path
     * (reference `src/utils/raw-data-utils.ts:196-214`) */

@@ -137,7 +137,8 @@ object CleanCorpus {
     // d_corpus_pipeline's stage-count union was analyzed), and (b) runs
     // the verify join ONCE — its three downstream consumers previously
     // re-derived it from the cached inputs per consumer (~1.1 s warm at
-    // sf0.1, PipelineProbe r16). Distinct from the r16-REJECTED
+    // sf0.1, measured r16 by the PipelineProbe scratch main, now in git
+    // history). Distinct from the r16-REJECTED
     // nearShingled persist: that cached the WIDE corpus-scale frame
     // (cold materialization barrier over rows+shingle arrays, +1.5 s);
     // this pins only the thin verified-duplicate ID LIST, bounded by the

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions.udf
 
 /** Shared decimal-compaction helpers for the q1-family exact-money sums
   * (the two-level compact aggregate documented at the `q1_pricing_summary`
-  * registry entry). Hoisted here so the registry query and the Q1Probe
-  * ladder run ONE definition instead of drifting copies (r15 ADVICE). */
+  * registry entry). Hoisted here (r15 ADVICE) so the registry query and
+  * the Q1Probe ladder (a scratch probe main, now in git history) ran ONE
+  * definition instead of diverging copies. */
 object Decimals {
 
   /** Per-row unscaled DECIMAL(·,8) long of a double: BigDecimal.valueOf is

@@ -1971,7 +1971,7 @@ object DedupQueries {
         val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ann-srp-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
         val st = new graft.store.SrpIndexStore(s, dir, dim = 64, planes = 8,
-          0, Seq("vec_id"), "embedding")
+          Seq("vec_id"), "embedding")
         // both probe sides are signature-memoized (SourceStamp): zero jobs
         // when neither the corpus nor the index dir changed
         val nCorpus = graft.core.SourceStamp.memoLong(

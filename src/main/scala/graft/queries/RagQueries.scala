@@ -325,13 +325,13 @@ object RagQueries {
               |FROM fin ORDER BY boosted, doc_id LIMIT 10""".stripMargin),
       bench = true),
 
-    // ----- §3.1 via the Engine's ANN route: persisted SRP probe feeding the
-    // SAME hybrid pipeline (api/Engine.scala:129-135 wires exactly this shape
-    // above annThreshold: probe → candidate join → boost → re-rank → k).
-    // Benched end-to-end and hash-gated — the SRP family is the
-    // oracle-replayable one, so the WHOLE routed path replays in SQL. The
-    // probe's scan is partition-pruned to the query's abucket (PlanSpec pins
-    // the pruning on the store; the index dir is shared with
+    // ----- §3.1 via the Engine's ANN route shape: persisted SRP probe
+    // feeding the SAME hybrid pipeline (Engine.queryDocuments wires this
+    // shape above annThreshold with its IVF index: probe → candidate join →
+    // boost → re-rank → k). Benched end-to-end and hash-gated — the SRP
+    // family is the oracle-replayable one, so the WHOLE routed path replays
+    // in SQL. The probe's scan is partition-pruned to the query's abucket
+    // (PlanSpec pins the pruning on the store; the index dir is shared with
     // ann_srp_store_probe so the bench builds it once). -----
     Q("q_hybrid_ann",
       (s, d) => {
@@ -341,7 +341,7 @@ object RagQueries {
         val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ann-srp-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_") // shared with ann_srp_store_probe
         val st = new graft.store.SrpIndexStore(s, dir, dim = Dim, planes = 8,
-          0, Seq("vec_id"), "embedding")
+          Seq("vec_id"), "embedding")
         // one staleness probe shared by both indexes, signature-memoized —
         // zero jobs when the embeddings dir is unchanged
         val nCorpus = graft.core.SourceStamp.memoLong(
@@ -354,15 +354,15 @@ object RagQueries {
         // candidate set = bucket-pruned probe top-(2·limit); recover the
         // fileCol by a broadcast join of the ≤ 20 probe rows onto the slim
         // (filePath, chunkIndex) projection — the engine's candidate shape
-        // hammingRadius=1 is the engine's recall setting (annProbeRadius):
-        // the probe reads the query's bucket plus its 8 Hamming-1 neighbor
-        // partitions — still a pruned scan, ~9/256 of the index
+        // hammingRadius=1: the probe reads the query's bucket plus its 8
+        // Hamming-1 neighbor partitions — still a pruned scan, ~9/256 of
+        // the index
         val cand = st.probe(qArr, k = 20, hammingRadius = 1)
           .select(col("vec_id").cast("int").as("chunkIndex"), col("score"))
         val annC = ch.select("filePath", "chunkIndex")
           .join(broadcast(cand), Seq("chunkIndex"))
           .select("filePath", "chunkIndex", "score")
-        // BOTH persisted indexes, as the engine routes it: SRP candidates +
+        // BOTH persisted indexes, as the engine routes it: ANN candidates +
         // FTS postings (dir shared with q_hybrid_idx, built once per corpus)
         val ftsDir = s"${System.getProperty("java.io.tmpdir")}/graft-fts-idx-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_")

@@ -390,7 +390,8 @@ object Relational {
     // is compact (one long) only while the result precision stays <= 18,
     // i.e. input precision <= 8 under the sum's +10 rule — a DECIMAL(30,2)
     // sum accumulates through BigDecimal and measures 5x the scan
-    // (Q1Probe, sf0.1: scan 0.20 s, decimal30 sums 1.02 s, compact 0.49 s).
+    // (Q1Probe scratch main, now in git history; sf0.1: scan 0.20 s,
+    // decimal30 sums 1.02 s, compact 0.49 s).
     // Level 1 groups by (keys, partition id) and sums exact DECIMAL(8,2)
     // per-row casts in compact buffers — safe because one partition's
     // partial is bounded by split size (≤ ~6M rows × 1e7 cents ≈ 6e13,
@@ -410,7 +411,8 @@ object Relational {
     // each partial (lo < 1e8 after) then long-sums: hi bounded by the
     // total sum (< 9e13 even at 1e12 rows x 1e5), lo by partitions × 1e8
     // (9e10 partitions before overflow). Probe: the wide-decimal sum cost
-    // 0.6 s over the scan at sf0.1; this shape ~0.2 s (Q1Probe ladder).
+    // 0.6 s over the scan at sf0.1; this shape ~0.2 s (Q1Probe ladder, git
+    // history).
     // round-2 on the final output: per-row double->decimal casts can
     // disagree between engines in the last decimal ulp; at sf0.1 the
     // accumulated 1e-8 noise crossed a double ulp at 5e9 magnitude — the

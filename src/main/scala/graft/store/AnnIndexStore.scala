@@ -1,7 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -26,8 +25,8 @@ import graft.search.VectorSearch
   *    (the Engine's ANN-vs-brute-force routing reads it per query).
   *
   * Incremental refresh keeps centroids FIXED and reassigns only the changed
-  * path bucket (classic IVF posture — lists drift from optimal as data
-  * drifts; the next full rebuild re-trains the coarse quantizer). */
+  * path bucket (classic IVF posture — the lists move away from optimal as
+  * the data changes; the next full rebuild re-trains the coarse quantizer). */
 final class AnnIndexStore(
     protected val spark: SparkSession, protected val path: String,
     protected val numBuckets: Int = 0,
@@ -51,8 +50,9 @@ final class AnnIndexStore(
     // and uncached each pass re-ran the full upstream scan — IngestStress
     // (r16, 100k docs / 1.36M chunks) attributed its only straggler tasks
     // (22-31 s vs p95 0.25 s) to exactly this: `takeSample at KMeans` over
-    // the uncached lineage. A/B on that table (AnnRebuildProbe): fit
-    // 13.0-14.5 s uncached → 6.6-9.2 s cached.
+    // the uncached lineage. A/B on that table (a scratch probe main,
+    // AnnRebuildProbe, now in git history): fit 13.0-14.5 s uncached →
+    // 6.6-9.2 s cached.
     val src = rows.select(idCols.map(col) :+ col(vecCol): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -74,84 +74,13 @@ final class AnnIndexStore(
             .toDF("list_id", "centroid")
             .write.mode(SaveMode.Overwrite).parquet(tmp))
         writeStats(assigned)
-        writeDrift(0L) // fresh centroids: the staleness clock restarts
       } finally assigned.unpersist()
     } finally src.unpersist()
   }
 
-  private val driftPath = path + "/drift"
-
-  /** rows appended against FIXED centroids since the last training pass —
-    * the staleness signal [[appendBatch]]'s rebuild trigger reads */
-  def appendedSinceRebuild(): Long =
-    if (!fs.exists(new HPath(driftPath))) 0L
-    else graft.core.SourceStamp.memoLong(driftPath, "drift") {
-      graft.core.Tables.openParquet(spark, driftPath)
-        .agg(coalesce(sum("appended"), lit(0L))).head().getLong(0)
-    }
-
-  private def writeDrift(n: Long): Unit = {
-    import spark.implicits._
-    DirSwap.swapInto(fs, path, driftPath)(tmp =>
-      Seq(n).toDF("appended").write.mode(SaveMode.Overwrite).parquet(tmp))
-  }
-
-  /** Append one batch's vectors to the stored lists — freshness parity with
-    * [[SrpIndexStore.appendBatch]] for the streaming-ingest cadence: the
-    * batch is assigned against the STORED centroids (no retraining) and
-    * parquet-appended into its (pbucket?, list_id) partitions, so probes
-    * see the new vectors immediately; stats merge bucket-wise. A reader
-    * mid-append sees a superset of the previous index — probes may return
-    * brand-new vectors early, never lose old ones.
-    *
-    * Appending against fixed centroids DRIFTS the lists away from optimal
-    * as the data distribution moves (the classic IVF staleness), so a
-    * counter tracks rows appended since the last training; once it exceeds
-    * `driftRebuildAt` of the index's total, this append finishes by
-    * re-training — a full [[rebuild]] sourced from the index's OWN stored
-    * vectors (assignments carry them), no corpus rescan, drift counter
-    * reset. Bootstraps via [[rebuild]] when the index is absent. Returns
-    * rows appended. */
-  def appendBatch(rows: DataFrame, nLists: Int, driftRebuildAt: Double = 0.5,
-                  seed: Long = 42L): Long = {
-    if (!exists) { rebuild(rows, nLists, seed); return rowCount() }
-    val sp = spark
-    import sp.implicits._
-    val src = rows.select(idCols.map(col) :+ col(vecCol): _*)
-    val assignedB = Similarity.assignToLists(src, vecCol, loadCentroids())
-    val a = (if (bucketed) assignedB.withColumn("pbucket", bucketCol) else assignedB)
-      .persist()
-    try {
-      val n = a.count()
-      if (n == 0L) return 0L
-      val parts = if (bucketed) Seq("pbucket", "list_id") else Seq("list_id")
-      a.write.mode(SaveMode.Append).partitionBy(parts: _*).parquet(assignmentsPath)
-      // signature-memoized stats read (BucketedIndexStore.storedBucketMap):
-      // zero Spark jobs until the swap below rewrites the dir
-      val cur = storedBucketMap()
-      val add: Map[Long, Long] =
-        if (bucketed) a.groupBy("pbucket").agg(count(lit(1)).as("n"))
-          .as[(Long, Long)].collect().toMap
-        else Map(0L -> n)
-      val merged = (cur.keySet ++ add.keySet).toSeq.sorted
-        .map(b => (b, cur.getOrElse(b, 0L) + add.getOrElse(b, 0L)))
-      DirSwap.swapInto(fs, path, statsPath)(tmp =>
-        merged.toDF("pbucket", "n_rows")
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      val appended = appendedSinceRebuild() + n
-      val total = merged.map(_._2).sum
-      if (appended.toDouble > driftRebuildAt * total.toDouble) {
-        val all = sp.read.parquet(assignmentsPath)
-          .select(idCols.map(col) :+ col(vecCol): _*)
-        rebuild(all, nLists, seed) // resets the drift counter
-      } else writeDrift(appended)
-      n
-    } finally a.unpersist()
-  }
-
   /** The k×dim centroid table — a pure function of the centroids dir, so
     * it is signature-memoized ([[graft.core.SourceStamp.memo]]): every
-    * probe/append/refresh needs it, and without the stamp each call was a
+    * probe/refresh needs it, and without the stamp each call was a
     * parquet-read+sort+collect Spark job (at 100 TB scale: a fixed
     * scheduling barrier per query answering what a manifest read answers).
     * A rebuild rewrites the dir and invalidates the stamp. The cached rows
@@ -182,12 +111,10 @@ final class AnnIndexStore(
 
   /** ANN top-k: rank centroids by distance to the query (driver-side, tiny),
     * read ONLY the nearest `nProbe` list partitions, brute-force rerank
-    * within them. `where` pre-filters candidates (scope pushdown) BEFORE the
-    * top-k so a scoped query still fills its k. Scores are the same
-    * dot-distance expression as the brute-force path — the two paths return
-    * identical values on the rows they share. */
-  def probe(queryVec: Array[Float], nProbe: Int, k: Int,
-            where: Option[Column] = None): DataFrame = {
+    * within them. Scores are the same dot-distance expression as the
+    * brute-force path — the two paths return identical values on the rows
+    * they share. */
+  def probe(queryVec: Array[Float], nProbe: Int, k: Int): DataFrame = {
     val cents = loadCentroids()
     def dist2(c: Array[Float]): Double = {
       var s = 0.0; var i = 0
@@ -199,10 +126,8 @@ final class AnnIndexStore(
     // read only the probed lists' directories (prunedPartitionRead):
     // listing cost follows nProbe, never the index size; the isin stays
     // as the (now trivially-true) partition filter PlanSpec pins
-    val stored = prunedPartitionRead(assignmentsPath, "list_id", lists)
+    prunedPartitionRead(assignmentsPath, "list_id", lists)
       .filter(col("list_id").isin(lists.map(Integer.valueOf).toSeq: _*))
-    val scoped = where.map(stored.filter).getOrElse(stored)
-    scoped
       .withColumn("score", VectorSearch.dotDistance(col(vecCol), typedLit(queryVec.toSeq)))
       .orderBy(col("score") +: idCols.map(col): _*)
       .limit(k)

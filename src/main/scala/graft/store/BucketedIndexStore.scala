@@ -56,8 +56,9 @@ private[store] trait BucketedIndexStore {
     * makes the probe listing O(probed buckets), never O(index). `basePath`
     * keeps the partition columns in the schema, so callers' `isin` filter
     * still applies (and still shows as PartitionFilters — the plan shape
-    * PlanSpec pins). Falls back to the full read when no probed directory
-    * exists (empty probe result — the filter then returns no rows). */
+    * PlanSpec pins). When no probed directory exists the probe's answer is
+    * empty, and the method returns a zero-row frame with the table's
+    * schema. */
   protected final def prunedPartitionRead(
       tablePath: String, partCol: String, values: Seq[Any]): DataFrame = {
     // ONE globStatus with a {v1,v2,…} alternation instead of one RPC per

@@ -56,29 +56,12 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
         .write.partitionBy("pbucket").mode(SaveMode.Append).parquet(path)
     else chunks.write.mode(SaveMode.Append).parquet(path)
 
-  /** atomic replace of one directory: write tmp, swap, drop old.
-    * tmp/old live OUTSIDE the table root (a `pbucket=N.tmp-...` dir inside
-    * it would be parsed as a partition value and poison every later read),
-    * and every rename result is checked — a silent false would leave the
-    * table missing or doubled. */
-  private def swapDir(target: String, df: DataFrame): Unit = {
-    val nano = System.nanoTime()
-    val tmp = s"$path.swap-$nano"
-    val old = s"$path.old-$nano"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val p = new HPath(target); val t = new HPath(tmp); val o = new HPath(old)
-    val f = fs
-    val parent = p.getParent
-    if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-    if (f.exists(p) && !f.rename(p, o))
-      throw new java.io.IOException(s"swap failed: could not move $target aside")
-    if (!f.rename(t, p)) {
-      // restore the original before failing
-      if (f.exists(o)) f.rename(o, p)
-      throw new java.io.IOException(s"swap failed: could not move $tmp into place")
-    }
-    if (f.exists(o)) f.delete(o, true)
-  }
+  /** atomic replace of one directory through [[DirSwap]]; its tmp/old
+    * siblings live OUTSIDE the table root (a `pbucket=N` sibling inside it
+    * would be parsed as a partition value and poison every later read) */
+  private def swapDir(target: String, df: DataFrame): Unit =
+    DirSwap.swapInto(fs, path, target)(tmp =>
+      df.write.mode(SaveMode.Overwrite).parquet(tmp))
 
   /** current rows of one bucket partition (bucketed mode only) */
   def readBucket(bucket: Long): DataFrame = {
@@ -191,14 +174,13 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
         else spark.read.schema(ChunkSchema.schema).parquet(liveDirs: _*)
       val keep = existing.join(affectedDF, Seq("filePath"), "left_anti")
       val out = keep.unionByName(projected).withColumn("pbucket", bucketCol)
-      val nano = System.nanoTime()
-      val tmp = s"$path.swap-$nano"
+      val (tmp, oldBase) = DirSwap.siblings(path)
       out.write.partitionBy("pbucket").mode(SaveMode.Overwrite).parquet(tmp)
       if (!f.exists(new HPath(path))) f.mkdirs(new HPath(path))
       buckets.foreach { b =>
         val live = new HPath(s"$path/pbucket=$b")
         val fresh = new HPath(s"$tmp/pbucket=$b")
-        val old = new HPath(s"$path.old-$nano-$b")
+        val old = new HPath(s"$oldBase-$b")
         val hadLive = f.exists(live)
         if (hadLive && !f.rename(live, old))
           throw new java.io.IOException(
@@ -254,12 +236,10 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
     *     holding more than `maxFragments` parquet files into one file via
     *     the same atomic swap as upsert (append-heavy ingest fragments:
     *     each insert adds files; per-bucket reads degrade with file count);
-    *  2. delete leftover `.old-*`/`.swap-*` dirs from crashed swaps older
-    *     than `cleanupOlderThanMs` (completed swaps clean up after
-    *     themselves; age-gating avoids racing an in-flight swap — the
-    *     reference's 60 s version-cleanup threshold,
-    *     `src/vectordb/types.ts:15-16`). */
-  def optimize(maxFragments: Int = 4, cleanupOlderThanMs: Long = 60000L): Unit = {
+    *  2. sweep swap debris older than `cleanupOlderThanMs`
+    *     ([[DirSwap.sweepDebris]]). */
+  def optimize(maxFragments: Int = 4,
+               cleanupOlderThanMs: Long = DirSwap.DebrisAgeMs): Unit = {
     val f = fs
     def fragmentCount(dir: String): Int = {
       val p = new HPath(dir)
@@ -281,20 +261,6 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
     } else if (fragmentCount(path) > maxFragments) {
       swapDir(path, read().coalesce(1))
     }
-    // stale swap debris: siblings named <table>.old-<nano> / <table>.swap-<nano>
-    val tablePath = new HPath(path)
-    val parent = tablePath.getParent
-    if (parent != null && f.exists(parent)) {
-      val prefix = tablePath.getName
-      val cutoff = System.currentTimeMillis() - cleanupOlderThanMs
-      f.listStatus(parent).map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith(prefix + ".old-") || n.startsWith(prefix + ".swap-")
-        }
-        .foreach { p =>
-          if (f.getFileStatus(p).getModificationTime < cutoff) f.delete(p, true)
-        }
-    }
+    DirSwap.sweepDebris(f, path, cleanupOlderThanMs)
   }
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 
 /** Persisted MinHash signature index — the dedup sibling of
-  * [[FtsIndexStore]] (BM25 postings) and [[AnnIndexStore]]/[[SrpIndexStore]]
-  * (vectors): near-dup state the engine maintains ACROSS mutation batches so
-  * deduplication is incremental, not a corpus rescan.
+  * [[FtsIndexStore]] (BM25 postings) and [[AnnIndexStore]] (vectors):
+  * near-dup state maintained ACROSS mutation batches so deduplication is
+  * incremental, not a corpus rescan. Its batch-sized [[appendBatch]] serves
+  * CleanStateStore and StreamingIngest; the Engine does not use it.
   *
   * Why it exists: every whole-corpus dedup query re-shingles and re-hashes
   * all N documents to find pairs — correct for a one-shot build, wrong for a

@@ -1,7 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -13,96 +12,42 @@ import graft.search.VectorSearch
   * function of the vector (md5-derived ±1 hyperplanes,
   * [[Similarity.srpBucket]]), so the whole index — build, layout, probe —
   * replays exactly in the DuckDB oracle, which KMeans-trained lists cannot.
+  * The registry's `ann_srp_store_probe` and `q_hybrid_ann` queries use it;
+  * the Engine serves from the IVF index.
   *
-  * Layout under `path/`: `assignments/` partitioned by (pbucket?, abucket)
-  * — a probe filters `abucket` to the query's bucket (plus optional
-  * Hamming-1 neighbors for recall) and reads ONLY those partitions;
-  * `stats/` per-pbucket row counts, written last. Incremental per-path-
-  * bucket refresh needs no model state: the bucket function is pure. */
+  * Layout under `path/`: `assignments/` partitioned by `abucket` — a probe
+  * filters `abucket` to the query's bucket (plus optional Hamming
+  * neighbors for recall) and reads ONLY those partitions; `stats/` the row
+  * count, written last. */
 final class SrpIndexStore(
     protected val spark: SparkSession, protected val path: String,
     dim: Int, planes: Int,
-    protected val numBuckets: Int = 0,
     idCols: Seq[String] = Seq("filePath", "chunkIndex"),
     vecCol: String = "vector") extends BucketedIndexStore {
 
   require(planes >= 1 && planes <= 30, "planes must be in 1..30")
 
+  protected val numBuckets = 0
+  protected def bucketKey = lit(0L)
+
   private val assignmentsPath = path + "/assignments"
 
-  protected def bucketKey = graft.ops.Dedup.hash60(col(idCols.head))
-
-  private def assigned(rows: DataFrame): DataFrame = {
-    val base = rows.select(idCols.map(col) :+ col(vecCol): _*)
-      .withColumn("abucket", Similarity.srpBucket(vecCol, dim, planes))
-    if (bucketed) base.withColumn("pbucket", bucketCol) else base
-  }
-
   def rebuild(rows: DataFrame): Unit = {
-    val a = assigned(rows).persist()
+    val a = rows.select(idCols.map(col) :+ col(vecCol): _*)
+      .withColumn("abucket", Similarity.srpBucket(vecCol, dim, planes))
+      .persist()
     try {
       if (a.isEmpty) { drop(); return }
-      val parts = if (bucketed) Seq("pbucket", "abucket") else Seq("abucket")
       DirSwap.swapInto(fs, path, assignmentsPath)(tmp =>
-        a.write.partitionBy(parts: _*).mode(SaveMode.Overwrite).parquet(tmp))
-      writeStats(a)
-    } finally a.unpersist()
-  }
-
-  /** reassign ONE path bucket (the bucket function is pure — no model to
-    * load) and swap only that partition + its stats row */
-  def refreshBucket(bucketRows: DataFrame, bucket: Long): Unit = {
-    import spark.implicits._
-    require(bucketed, "refreshBucket requires a bucketed index")
-    require(exists, "refreshBucket requires an existing index (rebuild first)")
-    val a = assigned(bucketRows).drop("pbucket").persist()
-    try {
-      val nMine = a.count()
-      DirSwap.swapInto(fs, path, s"$assignmentsPath/pbucket=$bucket")(tmp =>
         a.write.partitionBy("abucket").mode(SaveMode.Overwrite).parquet(tmp))
-      replaceBucketStats(bucket, nMine)
-    } finally a.unpersist()
-  }
-
-  /** Append one batch's vectors to the stored index — the streaming-ingest
-    * cadence (same discipline as MinhashIndexStore.appendBatch): the bucket
-    * function is pure, so a batch signs itself and parquet-appends into its
-    * abucket partitions; no model state, no directory swap, index grows by
-    * |batch|. Bootstraps via [[rebuild]] when absent. A reader mid-append
-    * sees a superset of the previous index in SOME buckets — probes may
-    * return brand-new vectors early, never lose old ones. Returns rows
-    * appended. */
-  def appendBatch(rows: DataFrame): Long = {
-    if (!exists) { rebuild(rows); return rowCount() }
-    val sp = spark
-    import sp.implicits._
-    val a = assigned(rows).persist()
-    try {
-      val n = a.count()
-      if (n == 0L) return 0L
-      val parts = if (bucketed) Seq("pbucket", "abucket") else Seq("abucket")
-      a.write.mode(SaveMode.Append).partitionBy(parts: _*).parquet(assignmentsPath)
-      // signature-memoized stats read (BucketedIndexStore.storedBucketMap):
-      // zero Spark jobs until the swap below rewrites the dir
-      val cur = storedBucketMap()
-      val add: Map[Long, Long] =
-        if (bucketed) a.groupBy("pbucket").agg(count(lit(1)).as("n"))
-          .as[(Long, Long)].collect().toMap
-        else Map(0L -> n)
-      val merged = (cur.keySet ++ add.keySet).toSeq.sorted
-        .map(b => (b, cur.getOrElse(b, 0L) + add.getOrElse(b, 0L)))
-      DirSwap.swapInto(fs, path, statsPath)(tmp =>
-        merged.toDF("pbucket", "n_rows")
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      n
+      writeStats(a)
     } finally a.unpersist()
   }
 
   /** probe the query's bucket (hammingRadius=0, the oracle-replayable form)
     * or its Hamming-neighborhood (radius 1–2 trades read volume for recall);
     * partition pruning keeps the scan to the probed buckets only */
-  def probe(queryVec: Seq[Float], k: Int, hammingRadius: Int = 0,
-            where: Option[Column] = None): DataFrame = {
+  def probe(queryVec: Seq[Float], k: Int, hammingRadius: Int = 0): DataFrame = {
     val qb = Similarity.srpBucketScala(queryVec, dim, planes)
     val buckets: Seq[Long] = hammingRadius match {
       case 0 => Seq(qb)
@@ -115,10 +60,8 @@ final class SrpIndexStore(
     // read only the probed buckets' directories (prunedPartitionRead):
     // listing cost follows the probe, never the index size; the isin stays
     // as the (now trivially-true) partition filter PlanSpec pins
-    val stored = prunedPartitionRead(assignmentsPath, "abucket", buckets)
+    prunedPartitionRead(assignmentsPath, "abucket", buckets)
       .filter(col("abucket").isin(buckets.map(java.lang.Long.valueOf): _*))
-    val scoped = where.map(stored.filter).getOrElse(stored)
-    scoped
       .withColumn("score", VectorSearch.dotDistance(col(vecCol), typedLit(queryVec)))
       .orderBy(col("score") +: idCols.map(col): _*)
       .limit(k)

@@ -632,8 +632,8 @@ class EngineSpec extends AnyFunSuite {
       annLists = 4, annProbes = 4, annThreshold = 1L)
     val s = annEngine.sync()
     assert(s.upserted === 30)
-    assert(annEngine.annBackend.exists)
-    assert(annEngine.annBackend.rowCount() === annEngine.status()._1)
+    assert(annEngine.annIndex.exists)
+    assert(annEngine.annIndex.rowCount() === annEngine.status()._1)
 
     // a second engine over the SAME store with an unreachable threshold
     // stays on the exact brute-force scan — the two paths must agree
@@ -644,7 +644,7 @@ class EngineSpec extends AnyFunSuite {
         .select("filePath", "chunkIndex", "score", "boosted").collect().toSeq
         .map(r => (r.getString(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
     assert(rows(annEngine) === rows(bruteEngine))
-    // scoped query through the ANN route still fills from the scoped subset
+    // a scoped query takes the exact scan and keeps to its scope
     val scoped = annEngine.queryDocuments("paragraph number", limit = 5,
       scope = Seq(s"$root/doc7.md"))
     assert(scoped.collect().forall(_.getAs[String]("filePath").endsWith("doc7.md")))
@@ -656,21 +656,57 @@ class EngineSpec extends AnyFunSuite {
     annEngine.ingestFile(s"$root/doc30.md")
     val hit = annEngine.queryDocuments("volcano geology magma", limit = 3).collect().head
     assert(hit.getAs[String]("filePath").endsWith("doc30.md"))
+  }
 
-    // the SRP strategy behind the SAME seam: planes=1 + radius=1 probes
-    // both buckets (exhaustive) — must also agree with brute force exactly,
-    // and its per-bucket refresh must serve a new doc immediately
-    val srpEngine = new Engine(spark, store, Seq(root), numBuckets = 4,
-      annThreshold = 1L, annStrategy = "srp", annPlanes = 1, annProbeRadius = 1)
-    srpEngine.sync() // all skips; index builds on... (see below)
-    // sync with zero mutations does not rebuild indexes — force one ingest
-    write(s"$root/doc31.md",
-      "# Doc 31\nglacier ice cores preserve ancient climate records in trapped air bubbles deep below.")
-    srpEngine.ingestFile(s"$root/doc31.md")
-    assert(srpEngine.annBackend.exists)
-    assert(rows(srpEngine) === rows(bruteEngine))
-    val hit31 = srpEngine.queryDocuments("glacier ice cores", limit = 3).collect().head
-    assert(hit31.getAs[String]("filePath").endsWith("doc31.md"))
+  test("scoped query above the ANN threshold returns the brute-force rows for a far scope") {
+    // one probed list (annProbes = 1) holds the chunks nearest the query;
+    // a scope over a distant topic has none there, so a probe-then-filter
+    // route would come back short or empty. Scoped queries take the exact
+    // scan, which applies the scope before the top-k.
+    val root = Files.createTempDirectory("annscope-root").toString
+    val store = Files.createTempDirectory("annscope-store").toString + "/chunks"
+    for (i <- 0 until 24)
+      write(s"$root/near/doc$i.md",
+        s"# Near $i\n" + s"spark shuffle partitions executors stage $i. " * 5)
+    for (i <- 0 until 6)
+      write(s"$root/far/doc$i.md",
+        s"# Far $i\n" + s"pasta cooking tomato sauce basil garlic $i. " * 5)
+    val annEngine = new Engine(spark, store, Seq(root),
+      annLists = 8, annProbes = 1, annThreshold = 1L)
+    assert(annEngine.sync().upserted === 30)
+    assert(annEngine.annIndex.exists)
+    val bruteEngine = new Engine(spark, store, Seq(root), annThreshold = Long.MaxValue)
+    def rows(e: Engine) =
+      e.queryDocuments("spark shuffle partitions", limit = 5, scope = Seq(s"$root/far"))
+        .select("filePath", "chunkIndex", "score", "boosted").collect().toSeq
+        .map(r => (r.getString(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
+    val expected = rows(bruteEngine)
+    assert(expected.size === 5)
+    assert(expected.forall(_._1.startsWith(s"$root/far/")))
+    assert(rows(annEngine) === expected)
+  }
+
+  test("optimize sweeps stale swap debris beside the chunk table and both index roots") {
+    val root = Files.createTempDirectory("debris-root").toString
+    val base = Files.createTempDirectory("debris-store").toString + "/chunks"
+    write(s"$root/a.md", "# A\nSpark executors process partitions in parallel across the cluster.")
+    val engine = new Engine(spark, base, Seq(root))
+    engine.sync()
+    val hourAgo = System.currentTimeMillis() - 3600 * 1000L
+    val planted = for (suffix <- Seq("", "-fts", "-ann"); kind <- Seq("swap", "old"))
+      yield {
+        val stale = new java.io.File(s"$base$suffix-$kind-111")
+        val fresh = new java.io.File(s"$base$suffix-$kind-222")
+        stale.mkdirs(); fresh.mkdirs()
+        stale.setLastModified(hourAgo)
+        (stale, fresh)
+      }
+    engine.optimize()
+    for ((stale, fresh) <- planted) {
+      assert(!stale.exists, s"stale debris kept: $stale")
+      assert(fresh.exists, s"fresh debris (possible in-flight swap) swept: $fresh")
+    }
+    assert(new java.io.File(base + "-fts").exists, "index root itself must survive")
   }
 
   test("engine-default IVF read path: recall@10 vs brute force at production probes") {
@@ -692,7 +728,7 @@ class EngineSpec extends AnyFunSuite {
     val ivf = new Engine(spark, store, Seq(root), numBuckets = 4,
       annThreshold = 1L) // production annLists=16/annProbes=8 defaults
     assert(ivf.sync().upserted === 96)
-    assert(ivf.annBackend.exists)
+    assert(ivf.annIndex.exists)
     val brute = new Engine(spark, store, Seq(root), numBuckets = 4,
       annThreshold = Long.MaxValue)
     val queries = Seq("spark shuffle partitions", "pasta tomato dinner",

@@ -165,10 +165,10 @@ class StoreSearchSpec extends AnyFunSuite {
     val beforeRows = st.read().orderBy("filePath", "chunkIndex").collect()
 
     // plant stale + fresh swap debris next to the table
-    val stale = new java.io.File(root.toString + "/table.old-123")
+    val stale = new java.io.File(root.toString + "/table-old-123")
     stale.mkdirs()
     stale.setLastModified(System.currentTimeMillis() - 3600 * 1000L)
-    val fresh = new java.io.File(root.toString + "/table.swap-456")
+    val fresh = new java.io.File(root.toString + "/table-swap-456")
     fresh.mkdirs()
 
     st.optimize(maxFragments = 2, cleanupOlderThanMs = 60000L)
@@ -360,66 +360,11 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(c3.length <= 4 && c3.length < c1.length)
   }
 
-  test("IVF appendBatch: appended vectors are probe-visible; drift counter forces retrain") {
-    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = Files.createTempDirectory("ann-append").toString + "/ann"
-    val st = new graft.store.AnnIndexStore(spark, dir, 0, Seq("vec_id"), "embedding")
-    // build on the first 40% of vectors, stream the rest in as append
-    // batches — the SRP store's freshness cadence, now on the IVF family
-    // (appends will total 60% of the final index, past the 0.5 drift bar)
-    val cut = (e.count() * 4 / 10)
-    st.rebuild(e.filter($"vec_id" < cut), nLists = 16)
-    val before = st.rowCount()
-    assert(st.appendedSinceRebuild() === 0L)
-
-    // a small batch appends WITHOUT retraining (below the drift threshold)
-    val b1 = e.filter($"vec_id" >= cut && $"vec_id" < cut + 40)
-    assert(st.appendBatch(b1, nLists = 16) === 40L)
-    assert(st.rowCount() === before + 40L)
-    assert(st.appendedSinceRebuild() === 40L) // counter advanced, no retrain
-    // an appended vector is immediately probe-visible: probing with its own
-    // embedding must return it at distance ~0 (self is always in the
-    // nearest list — it defines it)
-    val qv = e.filter($"vec_id" === cut).select("embedding").head().getSeq[Float](0).toArray
-    val hit = st.probe(qv, nProbe = 4, k = 1).select("vec_id").as[Long].head()
-    assert(hit === cut)
-
-    // recall gate still holds on the mixed built+appended index
-    val recalls = Seq(0L, 7L, cut + 11).map { q =>
-      val v = e.filter($"vec_id" === q).select("embedding").head().getSeq[Float](0).toArray
-      val indexed = e.filter($"vec_id" < cut + 40)
-      val brute = indexed
-        .withColumn("score", VectorSearch.dotDistance($"embedding", typedLit(v.toSeq)))
-        .orderBy("score", "vec_id").limit(10).select("vec_id").as[Long].collect().toSet
-      val ann = st.probe(v, nProbe = 8, k = 10).select("vec_id").as[Long].collect().toSet
-      ann.intersect(brute).size / 10.0
-    }
-    assert(recalls.sum / recalls.size >= 0.8,
-      s"post-append recall@10 ${recalls.sum / recalls.size} < 0.8")
-
-    // a big batch trips the drift threshold (appended > 0.5 · total) →
-    // the append finishes with a full retrain from the index's own
-    // vectors: counter resets, every row survives, probes stay correct
-    val b2 = e.filter($"vec_id" >= cut + 40)
-    val n2 = st.appendBatch(b2, nLists = 16)
-    assert(st.rowCount() === e.count())
-    assert(n2 === e.count() - before - 40L)
-    assert(st.appendedSinceRebuild() === 0L, "drift rebuild did not reset the counter")
-    // retrained index probes the full corpus exactly at nProbe = all lists
-    val qvAll = e.filter($"vec_id" === 3).select("embedding").head().getSeq[Float](0).toArray
-    val bruteAll = e
-      .withColumn("score", VectorSearch.dotDistance($"embedding", typedLit(qvAll.toSeq)))
-      .orderBy("score", "vec_id").limit(10)
-      .select($"vec_id", $"score").as[(Long, Double)].collect().toSeq
-    assert(st.probe(qvAll, nProbe = 16, k = 10)
-      .select($"vec_id", $"score").as[(Long, Double)].collect().toSeq === bruteAll)
-  }
-
   test("persisted SRP index: probe equals the inline bucket scan; radius widens monotonically") {
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("srp-idx").toString + "/srp"
     val st = new graft.store.SrpIndexStore(spark, dir, dim = 64, planes = 8,
-      0, Seq("vec_id"), "embedding")
+      Seq("vec_id"), "embedding")
     st.rebuild(e)
     assert(st.rowCount() === e.count())
     val qv = e.filter($"vec_id" === 0).select("embedding").head().getSeq[Float](0)
@@ -441,32 +386,6 @@ class StoreSearchSpec extends AnyFunSuite {
     val r2 = st.probe(qv, k = 500, hammingRadius = 2).select("vec_id").as[Long].collect().toSet
     assert(r0.subsetOf(r1) && r1.subsetOf(r2))
     assert(r1.size > r0.size) // neighbors actually contribute on real data
-  }
-
-  test("SRP appendBatch: appended vectors become probe-visible, index equals one-shot rebuild") {
-    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val batch1 = e.filter($"vec_id" < 400)
-    val batch2 = e.filter($"vec_id" >= 400)
-    val dir = Files.createTempDirectory("srp-append").toString + "/srp"
-    val st = new graft.store.SrpIndexStore(spark, dir, dim = 64, planes = 8,
-      0, Seq("vec_id"), "embedding")
-    st.appendBatch(batch1) // bootstrap = rebuild
-    assert(st.rowCount() === batch1.count())
-    val n2 = st.appendBatch(batch2)
-    assert(n2 === batch2.count())
-    assert(st.rowCount() === e.count())
-    // a probe with a BATCH-2 vector finds it: the appended partition serves
-    val late = e.filter($"vec_id" === 450).select("embedding").head().getSeq[Float](0)
-    val hits = st.probe(late, k = 5).select("vec_id").as[Long].collect().toSet
-    assert(hits.contains(450L))
-    // appended index ≡ one-shot rebuild over the same rows, probe for probe
-    val dir2 = Files.createTempDirectory("srp-oneshot").toString + "/srp"
-    val oneShot = new graft.store.SrpIndexStore(spark, dir2, dim = 64, planes = 8,
-      0, Seq("vec_id"), "embedding")
-    oneShot.rebuild(e)
-    val qv = e.filter($"vec_id" === 0).select("embedding").head().getSeq[Float](0)
-    assert(st.probe(qv, k = 20).select("vec_id").as[Long].collect().toSeq ===
-      oneShot.probe(qv, k = 20).select("vec_id").as[Long].collect().toSeq)
   }
 
   test("minhash index: delta candidates equal the full-run pairs touching the batch") {

@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class (graft.Verify / graft.Bench) against the compiled
 # classes without sbt startup overhead. Usage:
-#   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+#   tools/run.sh graft.Verify <testdata>/sf0.01 /tmp/verify_out
 set -euo pipefail
+# classes of the checkout this script lives in, wherever it is run from
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 CLS="$1"; shift
 JARS=$(ls /opt/spark/jars/*.jar | tr '\n' ':')
 ADD_OPENS=""
@@ -15,4 +17,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} ${SPARK_GRAFT_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:$JARS" "$CLS" "$@"
+  -cp "$CLASSES:$JARS" "$CLS" "$@"
