@@ -4,13 +4,16 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.{PathKeys, ScopeMatch}
 import graft.embed.{Embedder, HashedEmbedder}
 import graft.ingest.{DirectoryScanner, Ingest}
-import graft.search.{Bm25, HybridSearch}
+import graft.search.{Bm25, HybridSearch, VectorSearch}
 import graft.store.{ChunkStore, DirSwap}
 import graft.sync.SyncPlanner
 
@@ -167,6 +170,12 @@ final class Engine(
   private def now(): String = java.time.Instant.now().toString
 
   // ---- query_documents (reference §3.1) ----
+  /** Spark runs only the two corpus-scale reads: the candidate
+    * top-(2·limit), collected once, and — when the query has tokens and
+    * candidates survive grouping — one BM25 pass over the index for the hit
+    * files. The stages between them run on the driver
+    * ([[HybridSearch.searchHits]]), and the result comes back as a local
+    * DataFrame, so collecting it runs no job. */
   def queryDocuments(query: String, limit: Int = 10,
                      scope: Seq[String] = Seq.empty,
                      grouping: Option[String] = None,
@@ -174,40 +183,67 @@ final class Engine(
                      maxFiles: Option[Int] = None,
                      weight: Double = HybridSearch.DefaultWeight): DataFrame = {
     require(query.trim.nonEmpty, "query must be non-empty")
+    require(limit >= 1 && limit <= 20, "limit must be in 1..20") // ref: index.ts:346-348
     val chunks0 = store.read()
     // scope pushdown below the scoring projection (ref: index.ts:356-360)
     val chunks = if (scope.isEmpty) chunks0
       else chunks0.filter(ScopeMatch.inScope(col("filePath"), scope))
     val qArr = embedder.embed(query)
-    val qv = typedLit(qArr.toSeq)
     val tokens = "[a-z0-9]+".r.findAllIn(query.toLowerCase).toSeq.distinct
+    val k = limit * HybridSearch.CandidateMultiplier
     // ANN route (SURVEY §7 step 7): above the corpus threshold an unscoped
     // query's candidate top-(2·limit) comes from the persisted IVF index —
-    // only the nProbe nearest list partitions are read. A scoped query takes
-    // the exact scan, whose scope filter runs below the top-k: the nearest
+    // only the nProbe nearest list partitions are read, and the probed keys
+    // fetch their text back from the chunk table. A scoped query takes the
+    // exact scan, whose scope filter runs below the top-k: the nearest
     // lists may hold no in-scope chunk, so probing first could return fewer
     // than `limit` rows while in-scope chunks exist. Both paths score with
     // the same expression.
-    val annCands =
+    val candidates =
       if (scope.isEmpty && annIndex.exists && annIndex.rowCount() >= annThreshold)
-        Some(annIndex.probe(qArr, annProbes,
-          limit * HybridSearch.CandidateMultiplier))
-      else None
+        withText(chunks, annIndex.probe(qArr, annProbes, k).collect())
+      else VectorSearch.topK(chunks, typedLit(qArr.toSeq), k,
+          tiebreak = Seq("filePath", "chunkIndex"))
+        .select("filePath", "chunkIndex", "text", "fileTitle", "score").collect().toSeq
+        .map(r => HybridSearch.Hit(r.getString(0), r.getInt(1), r.getString(2),
+          r.getString(3), r.getDouble(4)))
+    graft.core.DriverProbe.record("query_candidates", candidates.size.toLong, k.toLong)
     // BM25 stats are GLOBAL regardless of scope — the reference's FTS index
     // is corpus-wide and scope only restricts which rows come back — so the
-    // ad-hoc fallback builds its index from the UNSCOPED table too, keeping
-    // indexed and index-less scoring identical. No tokens → no index work.
-    val idx =
-      if (tokens.isEmpty) None
-      else ftsIndex.load().orElse(Some(Bm25.buildIndex(chunks0,
-        Seq("filePath", "chunkIndex"), Bm25.wordTokens(col("text")))))
-    HybridSearch.search(chunks, qv,
+    // ad-hoc fallback (no persisted index) builds its index from the
+    // UNSCOPED table too, keeping indexed and index-less scoring identical
+    def keywordScores(files: Seq[String]): Map[(String, Int), Double] =
+      Bm25.scoreTerms(ftsIndex.queryTerms(tokens, files).getOrElse {
+        val idx = Bm25.buildIndex(chunks0, Seq("filePath", "chunkIndex"),
+          Bm25.wordTokens(col("text")))
+        Bm25.queryTerms(idx, tokens, files, Bm25.sumStats(idx.stats))
+      }, tokens)
+    val hits = HybridSearch.searchHits(candidates,
       HybridSearch.Params(limit = limit, maxDistance = maxDistance,
         weight = weight, maxFiles = maxFiles, grouping = grouping,
         queryTokens = tokens),
-      ftsIndex = idx, annCandidates = annCands)
-      .select("filePath", "chunkIndex", "text", "fileTitle", "score", "boosted")
+      keywordScores)
+    spark.createDataFrame(hits.map(h =>
+      Row(h.filePath, h.chunkIndex, h.text, h.fileTitle, h.score, h.boosted)).asJava,
+      Engine.QuerySchema)
   }
+
+  /** candidate rows for probed (filePath, chunkIndex, score) keys, in probe
+    * order: one chunk-table read filtered to exactly those keys fetches
+    * their text and title. A key the table no longer holds drops out, as
+    * an inner join would drop it. */
+  private def withText(chunks: DataFrame, probed: Array[Row]): Seq[HybridSearch.Hit] =
+    if (probed.isEmpty) Seq.empty
+    else {
+      val wanted = probed.toSeq.groupMap(_.getString(0))(_.getInt(1)).map { case (f, ixs) =>
+        col("filePath") === f && col("chunkIndex").isin(ixs: _*)
+      }.reduce(_ || _)
+      val text = chunks.filter(wanted).select("filePath", "chunkIndex", "text", "fileTitle")
+        .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
+      probed.toSeq.flatMap(p => text.get((p.getString(0), p.getInt(1))).map(t =>
+        HybridSearch.Hit(t.getString(0), t.getInt(1), t.getString(2), t.getString(3),
+          p.getDouble(2))))
+    }
 
   // ---- ingest_file (reference §3.2) ----
   /** Single-document ingest computes chunks + vectors ONCE, driver-side
@@ -637,26 +673,28 @@ final class Engine(
   private val realpathUdf =
     org.apache.spark.sql.functions.udf((p: String) => PathKeys.realpathForMatch(p))
 
+  /** One collect of the store's per-file aggregate, cross-referenced
+    * with the directory scan on the driver: both sides are O(files) and the
+    * tool's answer is too. */
   def listFiles(): DataFrame = {
     val scanned = DirectoryScanner.scanRoots(roots,
-      excludePrefixes = Seq(storePath, rawDataDir))
-      .files.map(f => (PathKeys.realpathForMatch(f.path), f.path, f.bytes))
-      .toDF("key", "path", "bytes")
+      excludePrefixes = Seq(storePath, rawDataDir)).files
     // realpath BOTH sides (reference list.ts:31-70 keys on realpathForMatch)
     // so symlinked-but-identical spellings still cross-reference
-    val ingested = store.listFiles().withColumn("key", realpathUdf(col("filePath")))
-    val displayUdf = org.apache.spark.sql.functions.udf(
-      (p: String) => PathKeys.displayPath(p))
-    scanned.join(ingested, Seq("key"), "left_outer")
-      .select(col("path"),
-        // home-abbreviated twin for anything user-facing (F18): the raw
-        // `path` stays the machine key, `display_path` is what gets shown
-        displayUdf(col("path")).as("display_path"),
-        col("bytes"),
-        col("chunkCount").isNotNull.as("ingested"),
-        coalesce(col("chunkCount"), lit(0L)).as("chunk_count"),
-        col("lastModified"))
-      .orderBy("path")
+    val ingested = store.fileStats().collect()
+      .groupBy(r => PathKeys.realpathForMatch(r.getString(0)))
+    val rows = scanned.flatMap { f =>
+      // home-abbreviated twin for anything user-facing (F18): the raw
+      // `path` stays the machine key, `display_path` is what gets shown
+      def row(chunkCount: Option[Long], lastModified: String) =
+        Row(f.path, PathKeys.displayPath(f.path), f.bytes, chunkCount.isDefined,
+          chunkCount.getOrElse(0L), lastModified)
+      ingested.get(PathKeys.realpathForMatch(f.path)) match {
+        case Some(hits) => hits.toSeq.map(r => row(Some(r.getLong(1)), r.getString(2)))
+        case None => Seq(row(None, null))
+      }
+    }.sortBy(r => org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
+    spark.createDataFrame(rows.asJava, Engine.ListFilesSchema)
   }
 
   /** Near-duplicate file pairs over the ingested corpus at a Jaccard
@@ -924,6 +962,24 @@ object Engine {
     * overhead + recall loss buy nothing at tool scale); above it the probe
     * reads nProbe/nLists of the corpus instead of all of it. */
   val AnnCorpusThreshold = 4096L
+
+  /** [[Engine.queryDocuments]]'s output columns */
+  private val QuerySchema: StructType = StructType(Seq(
+    StructField("filePath", StringType, nullable = false),
+    StructField("chunkIndex", IntegerType, nullable = false),
+    StructField("text", StringType, nullable = false),
+    StructField("fileTitle", StringType),
+    StructField("score", DoubleType, nullable = false),
+    StructField("boosted", DoubleType, nullable = false)))
+
+  /** [[Engine.listFiles]]'s output columns */
+  private val ListFilesSchema: StructType = StructType(Seq(
+    StructField("path", StringType, nullable = false),
+    StructField("display_path", StringType, nullable = false),
+    StructField("bytes", LongType, nullable = false),
+    StructField("ingested", BooleanType, nullable = false),
+    StructField("chunk_count", LongType, nullable = false),
+    StructField("lastModified", StringType)))
 
   /** recover the external source id from a managed raw-data path
     * (reference `src/utils/raw-data-utils.ts:196-214`) */

@@ -13,6 +13,10 @@ package graft.core
   * ingest), so a future edit that accidentally collects chunk-scale or
   * corpus-scale rows fails its first sync, not a 100 TB sync.
   *
+  * The read tools report their collects the same way, bounded by the
+  * result they serve: a query's candidate top-(2·limit) and its matched
+  * BM25 postings, a neighbor read's chunk-index range.
+  *
   * Same concurrency contract as TrainerProbe: [[maxRows]] is JVM-global
   * (fine for the bound story — each fetch asserts its own bound);
   * [[hook]] is for single-engine harnesses (IngestStress, specs) and is
@@ -25,8 +29,8 @@ object DriverProbe {
 
   def record(site: String, rows: Long, bound: Long): Unit = {
     require(rows <= bound,
-      s"$site materialized $rows driver rows — above the batch bound " +
-        s"$bound; sync driver fetches must stay file-batch-scale")
+      s"$site materialized $rows driver rows — above its bound $bound; " +
+        "driver fetches must stay batch- or result-scale")
     synchronized { if (rows > maxRows) maxRows = rows }
     val h = hook
     if (h != null)

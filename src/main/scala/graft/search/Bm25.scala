@@ -72,9 +72,12 @@ object Bm25 {
     Index(postings, dl, stats)
   }
 
-  /** BM25 scores for `queryTokens` from a prebuilt index: only the query's
-    * postings survive the filter (pushdown-friendly), per-token df is a tiny
-    * broadcast, and the per-doc sum shuffles only matching docs. */
+  /** BM25 scores for `queryTokens` from a prebuilt index, as a lazy
+    * DataFrame: only the query's postings survive the filter
+    * (pushdown-friendly), per-token df is a tiny broadcast, and the per-doc
+    * sum shuffles only matching docs. The registry queries use this form
+    * through [[HybridSearch.search]]; `Engine.queryDocuments` collects the
+    * same inputs with [[queryTerms]] and scores them with [[scoreTerms]]. */
   def scoreIndexed(idx: Index, idCols: Seq[String], queryTokens: Seq[String],
                    p: Params = Params()): DataFrame = {
     val idc = idCols.map(col)
@@ -91,6 +94,81 @@ object Bm25 {
         col("idf") * (col("tf") * (p.k1 + 1.0)) /
           (col("tf") + lit(p.k1) * (lit(1.0 - p.b) + lit(p.b) * col("dl") / col("avgdl"))))
       .groupBy(idc: _*).agg(sum("w").as("bm25"))
+  }
+
+  /** One query's BM25 inputs, collected to the driver: corpus stats, each
+    * query token's global document frequency, the (doc, token, tf)
+    * postings of the documents to score, and those documents' lengths. */
+  final case class QueryTerms(nDocs: Long, sumDl: Long, df: Map[String, Long],
+                              postings: Seq[((String, Int), String, Long)],
+                              docLens: Map[(String, Int), Long])
+
+  /** (n_docs, sum_dl) summed over the rows of a stats table — one row, or
+    * one per path bucket; an empty corpus's null sum counts as 0 */
+  def sumStats(stats: DataFrame): (Long, Long) =
+    stats.select("n_docs", "sum_dl").collect().foldLeft((0L, 0L)) { case ((n, s), r) =>
+      (n + r.getLong(0), s + (if (r.isNullAt(1)) 0L else r.getLong(1)))
+    }
+
+  /** The query's BM25 inputs for the documents of `files`, in two Spark
+    * jobs over the (filePath, chunkIndex)-keyed index: one postings scan
+    * filtered to the query's tokens that counts each token's global df and
+    * keeps the postings inside `files`, then the doc lengths of the matched
+    * documents. `stats` is (n_docs, sum_dl). Both collects are bounded: the
+    * matched postings by the tokens times the matched documents
+    * ([[graft.core.DriverProbe]]). */
+  def queryTerms(idx: Index, queryTokens: Seq[String], files: Seq[String],
+                 stats: (Long, Long)): QueryTerms = {
+    val tokens = queryTokens.distinct
+    val fileSet = files.toSet
+    val parts = idx.postings.filter(col("tok").isin(tokens: _*))
+      .select(col("tok"), col("filePath"), col("chunkIndex"), col("tf").cast("long"))
+      .rdd.mapPartitions { rows =>
+        val df = scala.collection.mutable.HashMap.empty[String, Long]
+        val kept = Vector.newBuilder[((String, Int), String, Long)]
+        rows.foreach { r =>
+          val (tok, file) = (r.getString(0), r.getString(1))
+          df(tok) = df.getOrElse(tok, 0L) + 1L
+          if (fileSet(file)) kept += (((file, r.getInt(2)), tok, r.getLong(3)))
+        }
+        Iterator((df.toMap, kept.result()))
+      }.collect()
+    val df = parts.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
+    val postings = parts.toSeq.flatMap(_._2)
+    val docs = postings.map(_._1).distinct
+    val docLens =
+      if (docs.isEmpty) Map.empty[(String, Int), Long]
+      else {
+        val wanted = docs.groupMap(_._1)(_._2).map { case (f, ixs) =>
+          col("filePath") === f && col("chunkIndex").isin(ixs: _*)
+        }.reduce(_ || _)
+        idx.docLens.filter(wanted).select("filePath", "chunkIndex", "dl").collect()
+          .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      }
+    graft.core.DriverProbe.record("query_keyword_postings", postings.size.toLong,
+      tokens.size.toLong * docLens.size)
+    QueryTerms(stats._1, stats._2, df, postings, docLens)
+  }
+
+  /** BM25 per document from collected [[QueryTerms]] — the arithmetic of
+    * [[scoreIndexed]] evaluated in the same order (StrictMath.log, as
+    * Spark's `log`), with each document's terms summed in query-token
+    * order. Documents without a length row score nothing, as the inner
+    * join drops them there. */
+  def scoreTerms(t: QueryTerms, queryTokens: Seq[String],
+                 p: Params = Params()): Map[(String, Int), Double] = {
+    val avgdl = t.sumDl.toDouble / t.nDocs.toDouble
+    val order = queryTokens.distinct.zipWithIndex.toMap
+    t.postings.filter(x => t.docLens.contains(x._1)).groupBy(_._1).map { case (doc, ps) =>
+      val dl = t.docLens(doc).toDouble
+      doc -> ps.sortBy(x => order(x._2)).foldLeft(0.0) { case (acc, (_, tok, tf0)) =>
+        val dfq = t.df(tok)
+        val idf = StrictMath.log(1.0 + ((t.nDocs - dfq) + 0.5) / (dfq + 0.5))
+        val tf = tf0.toDouble
+        acc + idf * (tf * (p.k1 + 1.0)) /
+          (tf + p.k1 * ((1.0 - p.b) + p.b * dl / avgdl))
+      }
+    }
   }
 
   /** BM25 scores computed corpus-in, index-out-of-line: statistics (N,

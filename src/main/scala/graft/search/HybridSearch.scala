@@ -1,8 +1,10 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The hybrid query dataflow of the reference
   * (`src/vectordb/index.ts:339-431`, SURVEY §3.1). Stage order is
@@ -13,11 +15,25 @@ import org.apache.spark.sql.expressions.Window
   *   match ⇒ 0) → re-sort by boosted → per-file filter (AFTER boost) →
   *   final limit.
   *
-  * Scale notes: everything after the top-k runs on ≤ 2·limit ≤ 40 rows, so
-  * the unpartitioned windows used for grouping are driver-cheap by
-  * construction (the limit is enforced first — the reference bounds limit to
-  * 1..20, `src/vectordb/index.ts:346-348`). The expensive stages — vector
-  * scan and BM25 postings — are full DataFrame ops that scale out.
+  * Two forms of the same dataflow, one per caller:
+  *  - [[searchHits]], the serving form `Engine.queryDocuments` uses: Spark
+  *    runs only the corpus-scale reads (the candidate top-(2·limit) and one
+  *    BM25 pass for the query's tokens), and every stage after the top-k
+  *    runs as plain Scala over the ≤ 2·limit ≤ 40 collected rows
+  *    ([[groupHits]], [[boostHits]], [[fileFilterHits]]). At that size a
+  *    Spark window, join or aggregate costs an analysis pass and a job per
+  *    stage and buys nothing.
+  *  - [[search]], the DataFrame form the registry queries (`q_hybrid*`,
+  *    `v_grouping`, `q_file_filter`, `rag_e2e_search`) and their plan pins
+  *    use: the whole dataflow as one lazy plan. Its post-top-k windows are
+  *    unpartitioned, which is deliberate on the bounded candidate set (the
+  *    reference bounds limit to 1..20, `src/vectordb/index.ts:346-348`).
+  *
+  * The Scala stages are twins of [[applyGrouping]], [[applyKeywordBoost]]
+  * and [[applyFileFilter]] — the [[graft.core.ScopeMatch]] pattern: they
+  * order rows the way Spark does and evaluate the same arithmetic in the
+  * same order (a sequential sum for the gap mean, the Welford updates of
+  * Spark's `stddev_pop`), so both forms keep the same rows.
   */
 object HybridSearch {
 
@@ -45,11 +61,7 @@ object HybridSearch {
                     scoreCol: String = "score",
                     tiebreak: Seq[String] = Seq(),
                     keepGroupCol: Boolean = false): DataFrame = {
-    val keepGroups = mode match {
-      case "similar" => 1
-      case "related" => 2
-      case other => throw new IllegalArgumentException(s"grouping mode: $other")
-    }
+    val keepGroups = groupsKept(mode)
     // unpartitioned window: input is the bounded (≤ 2·limit) candidate set,
     // so a single window partition is deliberate (WindowExec's degradation
     // warning is silenced in the mains — a constant partition key would be
@@ -96,6 +108,96 @@ object HybridSearch {
       .filter(col("_rank") <= maxFiles)
       .select(fileCol)
     results.join(broadcast(best), Seq(fileCol), "left_semi")
+  }
+
+  /** One row of the driver-side tail — the Engine's output columns.
+    * `boosted` equals `score` until [[boostHits]] sets it. */
+  final case class Hit(filePath: String, chunkIndex: Int, text: String,
+                       fileTitle: String, score: Double, boosted: Double)
+  object Hit {
+    def apply(filePath: String, chunkIndex: Int, text: String,
+              fileTitle: String, score: Double): Hit =
+      Hit(filePath, chunkIndex, text, fileTitle, score, score)
+  }
+
+  /** Spark's sort order on (key, filePath, chunkIndex): doubles by
+    * `SQLOrderingUtil` (-0.0 = 0.0, NaN last), strings by UTF-8 bytes */
+  private def sqlOrder(key: Hit => Double): Ordering[Hit] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(key(a), key(b))
+    if (c != 0) c
+    else {
+      val f = UTF8String.fromString(a.filePath).compareTo(UTF8String.fromString(b.filePath))
+      if (f != 0) f else Integer.compare(a.chunkIndex, b.chunkIndex)
+    }
+  }
+  private val byScore = sqlOrder(_.score)
+  private val byBoosted = sqlOrder(_.boosted)
+
+  private def groupsKept(mode: String): Int = mode match {
+    case "similar" => 1
+    case "related" => 2
+    case other => throw new IllegalArgumentException(s"grouping mode: $other")
+  }
+
+  /** [[applyGrouping]] over collected rows; returns the kept rows in
+    * (score, filePath, chunkIndex) order */
+  def groupHits(hits: Seq[Hit], mode: String): Seq[Hit] = {
+    val keepGroups = groupsKept(mode)
+    val sorted = hits.sorted(byScore)
+    val gaps = sorted.zip(sorted.drop(1)).map { case (a, b) => b.score - a.score }
+    // avg: a sequential sum over the gaps, divided by their count;
+    // stddev_pop: Spark's central-moment updates, in the same row order
+    var sum = 0.0; var n = 0.0; var mean = 0.0; var m2 = 0.0
+    gaps.foreach { g =>
+      sum += g
+      n += 1.0
+      val delta = g - mean
+      val deltaN = delta / n
+      mean += deltaN
+      m2 += delta * (delta - deltaN)
+    }
+    // no gaps ⇒ Spark's stats are null and no row is a boundary
+    val threshold =
+      if (gaps.isEmpty) Double.PositiveInfinity
+      else sum / n + GapStdMultiplier * math.sqrt(m2 / n)
+    val groups = gaps.scanLeft(0)((grp, g) => if (g > threshold) grp + 1 else grp)
+    sorted.zip(groups).collect { case (h, grp) if grp < keepGroups => h }
+  }
+
+  /** [[applyKeywordBoost]] over collected rows: `bm25` holds the scores of
+    * every keyword-matching document in the hit files (the
+    * max-normalisation set), keyed by (filePath, chunkIndex) */
+  def boostHits(hits: Seq[Hit], bm25: Map[(String, Int), Double],
+                weight: Double): Seq[Hit] = {
+    val mx = if (bm25.isEmpty) 0.0 else bm25.values.max
+    hits.map { h =>
+      val norm = bm25.get((h.filePath, h.chunkIndex)).fold(0.0)(_ / mx)
+      h.copy(boosted = h.score / (1.0 + norm * weight))
+    }
+  }
+
+  /** [[applyFileFilter]] over collected rows (on `boosted`); keeps the
+    * input order */
+  def fileFilterHits(hits: Seq[Hit], maxFiles: Int): Seq[Hit] = {
+    val bestPerFile = hits.groupBy(_.filePath).values.map(_.min(byBoosted)).toSeq
+    val kept = bestPerFile.sorted(byBoosted).take(maxFiles).map(_.filePath).toSet
+    hits.filter(h => kept(h.filePath))
+  }
+
+  /** The post-top-k dataflow of [[search]] over the collected candidate
+    * top-(2·limit) rows. `keywordScores` runs the BM25 pass for the hit
+    * files (after grouping, as the reference restricts its FTS query) and
+    * is called only when there are tokens and rows to boost. */
+  def searchHits(candidates: Seq[Hit], p: Params,
+                 keywordScores: Seq[String] => Map[(String, Int), Double]): Seq[Hit] = {
+    require(p.limit >= 1 && p.limit <= 20, "limit must be in 1..20") // ref: index.ts:346-348
+    val inRange = p.maxDistance.fold(candidates)(md => candidates.filter(_.score <= md))
+    val grouped = p.grouping.fold(inRange)(m => groupHits(inRange, m))
+    val boosted =
+      if (p.queryTokens.isEmpty || grouped.isEmpty) grouped
+      else boostHits(grouped, keywordScores(grouped.map(_.filePath).distinct), p.weight)
+    val filtered = p.maxFiles.fold(boosted)(n => fileFilterHits(boosted, n))
+    filtered.sorted(byBoosted).take(p.limit)
   }
 
   /** Full hybrid search over a chunks DataFrame with columns

@@ -56,21 +56,29 @@ private[store] trait BucketedIndexStore {
     * makes the probe listing O(probed buckets), never O(index). `basePath`
     * keeps the partition columns in the schema, so callers' `isin` filter
     * still applies (and still shows as PartitionFilters — the plan shape
-    * PlanSpec pins). When no probed directory exists the probe's answer is
-    * empty, and the method returns a zero-row frame with the table's
-    * schema. */
+    * PlanSpec pins). When no value is probed or no probed directory exists
+    * the probe's answer is empty, and the method returns a zero-row frame
+    * with the table's schema. Values must be integral ids. */
   protected final def prunedPartitionRead(
       tablePath: String, partCol: String, values: Seq[Any]): DataFrame = {
     // ONE globStatus with a {v1,v2,…} alternation instead of one RPC per
     // probed value (r17 VERDICT #5): driver-side listing RPCs are O(1) per
-    // probe, not O(nProbe) — the values are numeric bucket/list ids by
-    // construction (no glob metacharacters)
-    val alts = values.distinct.mkString(",")
-    val valGlob = if (values.distinct.size == 1) alts else s"{$alts}"
-    val pat =
-      if (bucketed) new HPath(s"$tablePath/pbucket=*/$partCol=$valGlob")
-      else new HPath(s"$tablePath/$partCol=$valGlob")
-    val dirs = Option(fs.globStatus(pat)).toSeq.flatten.map(_.getPath.toString)
+    // probe, not O(nProbe). The values go into the pattern unescaped, so
+    // only integral ids (no glob metacharacters) are accepted.
+    require(values.forall {
+      case _: Int | _: Long | _: Short | _: Byte => true
+      case _ => false
+    }, s"partition ids must be integral: ${values.take(5).mkString(", ")}")
+    val ids = values.distinct
+    val dirs =
+      if (ids.isEmpty) Seq.empty // nothing probed: no `{}` pattern to list
+      else {
+        val valGlob = if (ids.size == 1) ids.head.toString else ids.mkString("{", ",", "}")
+        val pat =
+          if (bucketed) new HPath(s"$tablePath/pbucket=*/$partCol=$valGlob")
+          else new HPath(s"$tablePath/$partCol=$valGlob")
+        Option(fs.globStatus(pat)).toSeq.flatten.map(_.getPath.toString)
+      }
     // The probe schema is memoized behind the STATS dir signature, NOT the
     // table's: stats is a few tiny files rewritten LAST by every mutation
     // path (rebuild / appendBatch / refreshBucket — the exists/staleness

@@ -199,28 +199,36 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
   /** neighbor range read (reference `src/vectordb/index.ts:138-164`,
     * handler clamp `src/server/index.ts:1035-1037`): chunks of one file with
     * chunkIndex ∈ [max(0, target-before), target+after], sorted asc
-    * (a contract, not incidental order), target flagged. */
+    * (a contract, not incidental order), target flagged. The range is at
+    * most 101 rows, so it is collected in one Spark job and sorted on the
+    * driver; the returned DataFrame is local. */
   def neighbors(filePath: String, target: Int, before: Int = 2, after: Int = 2): DataFrame = {
     require(before >= 0 && before <= 50 && after >= 0 && after <= 50,
       "before/after must be in 0..50") // ref: tool-input.ts:195-204
     val lo = math.max(0, target - before)
     val hi = target + after
-    read().filter(col("filePath") === filePath && col("chunkIndex").between(lo, hi))
+    val range = read().filter(col("filePath") === filePath && col("chunkIndex").between(lo, hi))
       .withColumn("isTarget", col("chunkIndex") === target)
-      .orderBy("chunkIndex")
+    val rows = range.collect()
+    graft.core.DriverProbe.record("neighbors_range", rows.length.toLong, hi - lo + 1L)
+    val sorted = rows.sortBy(_.getInt(range.schema.fieldIndex("chunkIndex")))
+    spark.createDataFrame(java.util.Arrays.asList(sorted: _*), range.schema)
   }
+
+  /** per-file (filePath, chunkCount, lastModified) aggregate, unordered */
+  def fileStats(): DataFrame =
+    read().groupBy("filePath")
+      .agg(count(lit(1)).as("chunkCount"), max("timestamp").as("lastModified"))
 
   /** per-file listing aggregate (reference `listFiles`,
     * `src/vectordb/index.ts:511-556`) */
-  def listFiles(): DataFrame =
-    read().groupBy("filePath")
-      .agg(count(lit(1)).as("chunkCount"), max("timestamp").as("lastModified"))
-      .orderBy("filePath")
+  def listFiles(): DataFrame = fileStats().orderBy("filePath")
 
-  /** status counts (reference `src/vectordb/index.ts:585-595`) */
+  /** status counts (reference `src/vectordb/index.ts:585-595`): chunks and
+    * distinct files from one aggregate */
   def status(): (Long, Long) = {
-    val df = read()
-    (df.count(), df.select("filePath").distinct().count())
+    val r = read().agg(count(lit(1)), countDistinct("filePath")).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** manifest projection for sync (reference `listChunkHashes`,

@@ -134,22 +134,29 @@ final class FtsIndexStore(spark: SparkSession, path: String, numBuckets: Int = 0
         stats))
     }
 
+  /** (n_docs, sum_dl) from the stats table, summed over its per-bucket
+    * rows when bucketed. Memoized behind the stats dir's filesystem
+    * signature ([[graft.core.SourceStamp]]): zero Spark jobs while the index
+    * is unchanged; a rebuild/refresh rewrites stats and invalidates. None
+    * when the index does not exist. */
+  def corpusStats(): Option[(Long, Long)] =
+    if (!exists) None
+    else Some(graft.core.SourceStamp.memo(statsPath, "corpusStats") {
+      Bm25.sumStats(spark.read.parquet(statsPath))
+    })
+
   /** recorded corpus size from the stats table — the cheap side of the
     * cross-run cache staleness probe (readers compared this against a
-    * corpus count). Memoized behind the stats dir's filesystem signature
-    * ([[graft.core.SourceStamp]]): zero Spark jobs while the index is
-    * unchanged; a rebuild/refresh rewrites stats and invalidates. -1 when
-    * the index does not exist (never equal to any real corpus count). */
-  def nDocs(): Long =
-    if (!exists) -1L
-    else graft.core.SourceStamp.memoLong(statsPath, "nDocs") {
-      val rawStats = spark.read.parquet(statsPath)
-      val st =
-        if (rawStats.columns.contains("pbucket"))
-          rawStats.agg(sum("n_docs").as("n_docs"))
-        else rawStats.select("n_docs")
-      st.head().getLong(0)
-    }
+    * corpus count); the memoized [[corpusStats]]. -1 when the index does
+    * not exist (never equal to any real corpus count). */
+  def nDocs(): Long = corpusStats().fold(-1L)(_._1)
+
+  /** one query's BM25 inputs for the documents of `files` from the
+    * persisted index ([[Bm25.queryTerms]] with the memoized stats); None
+    * when the index does not exist */
+  def queryTerms(queryTokens: Seq[String], files: Seq[String]): Option[Bm25.QueryTerms] =
+    for (idx <- load(); stats <- corpusStats())
+      yield Bm25.queryTerms(idx, queryTokens, files, stats)
 
   def drop(): Unit = if (fs.exists(new HPath(path))) fs.delete(new HPath(path), true)
 }

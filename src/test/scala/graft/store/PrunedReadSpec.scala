@@ -47,5 +47,18 @@ class PrunedReadSpec extends AnyFunSuite {
     assert(none.count() === 0L)
     assert(none.columns.toSet === Set("id", "part", "payload"))
     assert(none.filter(col("part").isin(98, 99)).select("id").count() === 0L)
+
+    // NO probed value: the same zero-row frame, without building a `{}`
+    // glob (which names a literal "{}" directory)
+    val nothing = fx.readValues(table, "part", Seq.empty)
+    assert(nothing.count() === 0L)
+    assert(nothing.columns.toSet === Set("id", "part", "payload"))
+
+    // values go into the glob unescaped, so only integral ids are accepted:
+    // "*" or "1,2}" would widen the probe to directories it never named
+    for (bad <- Seq[Seq[Any]](Seq("*"), Seq(10, "1,2}"), Seq(10.0)))
+      intercept[IllegalArgumentException](fx.readValues(table, "part", bad))
+    assert(fx.readValues(table, "part", Seq(20L)).select("id").as[Long].collect().toSeq ===
+      Seq(3L))
   }
 }
