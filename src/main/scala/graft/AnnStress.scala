@@ -81,8 +81,7 @@ object AnnStress {
 
       val dir = s"$workDir/ann-stress-x$factor"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val st = new graft.store.AnnIndexStore(spark, dir, 0,
-        Seq("vec_id"), "embedding")
+      val st = new graft.store.AnnIndexStore(spark, dir, Seq("vec_id"), "embedding")
 
       // ---- timed: full rebuild (train + assign + partitioned write) ----
       collector.reset()

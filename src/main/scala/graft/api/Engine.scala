@@ -30,7 +30,6 @@ final class Engine(
     storePath: String,
     roots: Seq[String],
     mkEmbedder: () => Embedder = () => new HashedEmbedder(64),
-    numBuckets: Int = 0,
     annLists: Int = 16,
     annProbes: Int = 8,
     annThreshold: Long = Engine.AnnCorpusThreshold,
@@ -38,13 +37,12 @@ final class Engine(
 
   import spark.implicits._
 
-  val store = new ChunkStore(spark, storePath, numBuckets)
+  val store = new ChunkStore(spark, storePath)
   private val rawDataDir = storePath + "-raw-data"
-  /** persisted FTS index, refreshed once per mutation batch (the reference's
-    * optimize() cadence — never once per file). In bucketed mode, single-file
-    * mutations refresh only the file's bucket (1/numBuckets of the corpus). */
+  /** persisted FTS index, rebuilt once per mutation batch (the reference's
+    * optimize() cadence — never once per file) */
   private[graft] val ftsIndex =
-    new graft.store.FtsIndexStore(spark, storePath + "-fts", numBuckets)
+    new graft.store.FtsIndexStore(spark, storePath + "-fts")
   /** persisted IVF ANN index on the same refresh cadence — the reference
     * keeps its vector index inside the store and queries it with an ANN
     * scan, never a full scan (`src/vectordb/index.ts:352-353`). Recall is
@@ -52,7 +50,7 @@ final class Engine(
     * dropped and queries brute-force (exact, and cheaper than probe
     * overhead at tool scale). */
   private[graft] val annIndex =
-    new graft.store.AnnIndexStore(spark, storePath + "-ann", numBuckets)
+    new graft.store.AnnIndexStore(spark, storePath + "-ann")
   /** Distributed exact-path binary read — replaces
     * `spark.read.format("binaryFile").load(paths: _*)` on the sync paths.
     * Passing N explicit paths as LISTING ROOTS makes InMemoryFileIndex
@@ -128,36 +126,17 @@ final class Engine(
 
   private def refreshIndexes(): Unit = {
     describing("graft index: FTS rebuild") { ftsIndex.rebuild(store.read()) }
-    describing("graft index: ANN refresh") { refreshAnn(None) }
+    describing("graft index: ANN refresh") { refreshAnn() }
   }
-  private def refreshIndexesFor(filePath: String): Unit =
-    if (numBuckets > 0 && ftsIndex.exists) {
-      val b = store.bucketOf(filePath)
-      ftsIndex.refreshBucket(store.readBucket(b), b)
-      refreshAnn(Some(filePath))
-    } else refreshIndexes()
-  /** maintain the ANN index across the corpus-size threshold: below it the
-    * index is dropped (brute force is exact and faster there); a bucketed
-    * single-file change above it reassigns ONE bucket; anything else
-    * rebuilds in full.
-    *
-    * Corpus-count discipline: every threshold decision reads the index's
-    * own stats table (numBuckets rows), never a standalone corpus count —
-    * the full-rebuild arm's only corpus scan is the rebuild itself, which
-    * is unavoidable, and a single-file bucketed change scans one bucket. */
-  private def refreshAnn(changed: Option[String]): Unit = {
-    changed match {
-      case Some(p) if numBuckets > 0 && annIndex.exists =>
-        val b = store.bucketOf(p)
-        annIndex.refreshBucket(store.readBucket(b), b)
-      case _ =>
-        // rebuild unconditionally (its scan is the one unavoidable corpus
-        // read — a standalone pre-count would scan the table twice), then
-        // enforce the threshold from the index's own stats table. A
-        // below-threshold corpus pays a rebuild-then-drop, but a corpus
-        // below threshold is small by definition.
-        annIndex.rebuild(store.read(), annLists)
-    }
+  /** maintain the ANN index across the corpus-size threshold: rebuild it
+    * unconditionally (its scan is the one unavoidable corpus read — a
+    * standalone pre-count would scan the table twice), then enforce the
+    * threshold from the index's own stats table: below it the index is
+    * dropped (brute force is exact and faster there). A below-threshold
+    * corpus pays a rebuild-then-drop, but such a corpus is small by
+    * definition. */
+  private def refreshAnn(): Unit = {
+    annIndex.rebuild(store.read(), annLists)
     if (annIndex.rowCount() < annThreshold) annIndex.drop()
   }
   private def embedder: Embedder = mkEmbedder()
@@ -216,7 +195,7 @@ final class Engine(
       Bm25.scoreTerms(ftsIndex.queryTerms(tokens, files).getOrElse {
         val idx = Bm25.buildIndex(chunks0, Seq("filePath", "chunkIndex"),
           Bm25.wordTokens(col("text")))
-        Bm25.queryTerms(idx, tokens, files, Bm25.sumStats(idx.stats))
+        Bm25.queryTerms(idx.postings, idx.docLens, tokens, files, Bm25.sumStats(idx.stats))
       }, tokens)
     val hits = HybridSearch.searchHits(candidates,
       HybridSearch.Params(limit = limit, maxDistance = maxDistance,
@@ -254,7 +233,7 @@ final class Engine(
     * containment, parser/index.ts:165-235). */
   def ingestFile(path: String): IngestResult = mutationGuard.synchronized {
     val r = ingestFileNoRefresh(path)
-    refreshIndexesFor(r.filePath)
+    refreshIndexes()
     r
   }
 
@@ -419,20 +398,23 @@ final class Engine(
   }
 
   // ---- sync (reference §3.3: gather → plan → execute) ----
-  /** No scope → reconcile all roots. With a scope, each requested path is
-    * validated for containment (lexical + canonical, refused otherwise) and
-    * becomes its own depth-zero scan root (directory) or a direct target
-    * (file) — upserts are scope-limited, matching the reference
+  /** Gather → plan → execute.
+    *
+    * Scope: none → reconcile all roots. With a scope, each requested path
+    * is validated for containment (lexical + canonical, refused otherwise)
+    * and becomes its own depth-zero scan root (directory) or a direct
+    * target (file) — upserts are scope-limited, matching the reference
     * (sync.ts:500-530). WITHIN a scanned root, coverage stays complete —
     * scope is never pushed into the walk itself (prune safety,
-    * server/index.ts:1153-1157). */
-  /** Gather → plan → execute. Below `distributedThreshold` files ON BOTH
-    * SIDES — disk walk AND db manifest — the gather is the reference-parity
-    * driver loop (one tool call over a workspace — a few thousand files —
-    * is below Spark's parallelism grain). At or above it on EITHER side,
-    * the gather DISTRIBUTES: the disk manifest is a `binaryFile` scan +
-    * `sha2` on the executors, the db manifest never leaves the cluster, the
-    * two reconcile in [[SyncPlanner.planActionsDF]]'s single full-outer
+    * server/index.ts:1153-1157).
+    *
+    * Gather: below `distributedThreshold` files ON BOTH SIDES — disk walk
+    * AND db manifest — the gather is the reference-parity driver loop (one
+    * tool call over a workspace — a few thousand files — is below Spark's
+    * parallelism grain). At or above it on EITHER side, the gather
+    * DISTRIBUTES: the disk manifest is a `binaryFile` scan + `sha2` on the
+    * executors, the db manifest never leaves the cluster, the two
+    * reconcile in [[SyncPlanner.planActionsDF]]'s single full-outer
     * shuffle, and only the ACTION rows (upserts/prunes — the work, not the
     * world) are collected. Routing on the db side too makes the driver
     * collect provably bounded: a near-empty scan root over a large store
@@ -864,7 +846,7 @@ final class Engine(
   def deleteDocument(path: String): Unit = mutationGuard.synchronized {
     val spelled = PathKeys.storageSpelling(path)
     store.deleteFile(spelled)
-    refreshIndexesFor(spelled)
+    refreshIndexes()
   }
 
   def readChunkNeighbors(path: String, chunkIndex: Int,

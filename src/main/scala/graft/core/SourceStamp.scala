@@ -31,8 +31,8 @@ object SourceStamp {
 
   /** Retention bound per memo map (r15 VERDICT "What's wrong #1"): the
     * maps previously grew without bound across `(key, dir)` pairs for the
-    * JVM's lifetime, and [[memo]]'s values are not small (a bucket map is
-    * numBuckets entries; a centroid table is k×dim floats) — an engine
+    * JVM's lifetime, and [[memo]]'s values are not small (a centroid table
+    * is k×dim floats) — an engine
     * session churning index generations leaked retained heap. Every put
     * now (a) evicts entries whose dir no longer exists on disk (deleted /
     * rebuilt-elsewhere index generations), and (b) if still over the cap,
@@ -151,12 +151,12 @@ object SourceStamp {
   private val memoRef = new BoundedMemo
 
   /** [[memoLong]] generalized to any reference value (r14 VERDICT ask #3:
-    * the index stores' bucket maps and centroid tables are pure functions
+    * the index stores' centroid tables and schemas are pure functions
     * of their dirs just like the row counts). ADDITIONAL CONTRACTS beyond
     * memoLong's: (a) the returned object is SHARED across hits — `compute`
     * must return an immutable value, or the caller must defensively copy
     * before mutating (loadCentroids does); (b) values may be arbitrarily
-    * large (centroid tables, bucket maps) and are retained STRONGLY until
+    * large (centroid tables) and are retained STRONGLY until
     * dead-dir / LRU eviction (cap [[MaxEntries]]) — don't memoize values
     * that dwarf the index they stand for. */
   def memo[T <: AnyRef](dir: String, key: String)(compute: => T): T =

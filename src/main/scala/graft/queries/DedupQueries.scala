@@ -2192,7 +2192,7 @@ object DedupQueries {
           .select("embedding").head().getSeq[Float](0).toArray
         val dir = s"${System.getProperty("java.io.tmpdir")}/graft-ann-ivf-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
-        val st = new graft.store.AnnIndexStore(s, dir, 0, Seq("vec_id"), "embedding")
+        val st = new graft.store.AnnIndexStore(s, dir, Seq("vec_id"), "embedding")
         // build once per (tmpdir, sf): warm pass builds, timed pass probes;
         // probe sides signature-memoized — zero jobs when nothing changed
         val nCorpus = graft.core.SourceStamp.memoLong(

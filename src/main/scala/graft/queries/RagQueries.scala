@@ -294,7 +294,7 @@ object RagQueries {
           .withColumnRenamed("embedding", "vector")
         val dir = s"${System.getProperty("java.io.tmpdir")}/graft-fts-idx-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
-        val fts = new graft.store.FtsIndexStore(s, dir, 0)
+        val fts = new graft.store.FtsIndexStore(s, dir)
         // staleness probe for the cross-run tmp cache: embeddings count ==
         // chunk-table count (1:1 join by construction). Both sides are
         // signature-memoized (SourceStamp / FtsIndexStore.nDocs): when
@@ -366,7 +366,7 @@ object RagQueries {
         // FTS postings (dir shared with q_hybrid_idx, built once per corpus)
         val ftsDir = s"${System.getProperty("java.io.tmpdir")}/graft-fts-idx-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
-        val fts = new graft.store.FtsIndexStore(s, ftsDir, 0)
+        val fts = new graft.store.FtsIndexStore(s, ftsDir)
         val ftsStale = fts.nDocs() != nCorpus
         if (ftsStale) fts.rebuild(ch)
         HybridSearch.search(ch, typedLit(qArr.toSeq),

@@ -111,17 +111,19 @@ object Bm25 {
     }
 
   /** The query's BM25 inputs for the documents of `files`, in two Spark
-    * jobs over the (filePath, chunkIndex)-keyed index: one postings scan
+    * jobs over the (filePath, chunkIndex)-keyed postings and doc-length
+    * tables of an [[Index]]: one postings scan
     * filtered to the query's tokens that counts each token's global df and
     * keeps the postings inside `files`, then the doc lengths of the matched
     * documents. `stats` is (n_docs, sum_dl). Both collects are bounded: the
     * matched postings by the tokens times the matched documents
     * ([[graft.core.DriverProbe]]). */
-  def queryTerms(idx: Index, queryTokens: Seq[String], files: Seq[String],
+  def queryTerms(postingTable: DataFrame, docLenTable: DataFrame,
+                 queryTokens: Seq[String], files: Seq[String],
                  stats: (Long, Long)): QueryTerms = {
     val tokens = queryTokens.distinct
     val fileSet = files.toSet
-    val parts = idx.postings.filter(col("tok").isin(tokens: _*))
+    val parts = postingTable.filter(col("tok").isin(tokens: _*))
       .select(col("tok"), col("filePath"), col("chunkIndex"), col("tf").cast("long"))
       .rdd.mapPartitions { rows =>
         val df = scala.collection.mutable.HashMap.empty[String, Long]
@@ -142,7 +144,7 @@ object Bm25 {
         val wanted = docs.groupMap(_._1)(_._2).map { case (f, ixs) =>
           col("filePath") === f && col("chunkIndex").isin(ixs: _*)
         }.reduce(_ || _)
-        idx.docLens.filter(wanted).select("filePath", "chunkIndex", "dl").collect()
+        docLenTable.filter(wanted).select("filePath", "chunkIndex", "dl").collect()
           .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
       }
     graft.core.DriverProbe.record("query_keyword_postings", postings.size.toLong,

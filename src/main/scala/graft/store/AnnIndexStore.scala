@@ -9,34 +9,27 @@ import graft.search.VectorSearch
 /** Persisted IVF ANN index next to the chunk table — the scale twin of the
   * brute-force vector scan behind the SAME query API (reference ANN scan,
   * `src/vectordb/index.ts:352-353`; SURVEY §7 step 7 "swap brute-force top-k
-  * behind the same API"). Refresh cadence matches [[FtsIndexStore]]: once per
-  * mutation batch; per-path-bucket incremental in bucketed mode.
+  * behind the same API"). Refresh cadence matches [[FtsIndexStore]]: one
+  * full rebuild per mutation batch.
   *
   * Layout under `path/`:
   *  - `assignments/` — (idCols…, vector, list_id), partitioned by
-  *    (pbucket?, list_id). A probe filters `list_id IN (nearest nProbe)` and
+  *    list_id. A probe filters `list_id IN (nearest nProbe)` and
   *    reads ONLY those partitions — PartitionFilters on the scan, pinned in
   *    StoreSearchSpec. At 100 TB each list is further splittable; the probe
   *    cost is corpus/nLists · nProbe, independent of total corpus size.
   *  - `centroids/` — nLists tiny rows (list_id, centroid); collected driver-
   *    side at probe time to rank lists (µs-scale: nLists ≤ a few hundred).
-  *  - `stats/` — per-pbucket row counts, written LAST so [[exists]] only
-  *    ever observes a complete index; answers [[rowCount]] without a scan
-  *    (the Engine's ANN-vs-brute-force routing reads it per query).
-  *
-  * Incremental refresh keeps centroids FIXED and reassigns only the changed
-  * path bucket (classic IVF posture — the lists move away from optimal as
-  * the data changes; the next full rebuild re-trains the coarse quantizer). */
+  *  - `stats/` — the row count, written LAST so [[exists]] only ever
+  *    observes a complete index; answers [[rowCount]] without a scan
+  *    (the Engine's ANN-vs-brute-force routing reads it per query). */
 final class AnnIndexStore(
     protected val spark: SparkSession, protected val path: String,
-    protected val numBuckets: Int = 0,
     idCols: Seq[String] = Seq("filePath", "chunkIndex"),
-    vecCol: String = "vector") extends BucketedIndexStore {
+    vecCol: String = "vector") extends StatsLastIndexStore {
 
   private val assignmentsPath = path + "/assignments"
   private val centroidsPath = path + "/centroids"
-
-  protected def bucketKey = graft.ops.Dedup.hash60(col(idCols.head))
 
   /** full rebuild: train the coarse quantizer, assign every vector, swap all
     * three directories in (stats last). Empty input drops the index — the
@@ -63,12 +56,10 @@ final class AnnIndexStore(
       if (n < 2L) { drop(); return }
       val idx = Similarity.buildIvfCols(src, idCols, vecCol,
         math.min(nLists.toLong, n).toInt, seed, rowCount = Some(n))
-      val assigned = (if (bucketed) idx.assignments.withColumn("pbucket", bucketCol)
-                      else idx.assignments).persist()
+      val assigned = idx.assignments.persist()
       try {
-        val parts = if (bucketed) Seq("pbucket", "list_id") else Seq("list_id")
         DirSwap.swapInto(fs, path, assignmentsPath)(tmp =>
-          assigned.write.partitionBy(parts: _*).mode(SaveMode.Overwrite).parquet(tmp))
+          assigned.write.partitionBy("list_id").mode(SaveMode.Overwrite).parquet(tmp))
         DirSwap.swapInto(fs, path, centroidsPath)(tmp =>
           idx.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
             .toDF("list_id", "centroid")
@@ -80,7 +71,7 @@ final class AnnIndexStore(
 
   /** The k×dim centroid table — a pure function of the centroids dir, so
     * it is signature-memoized ([[graft.core.SourceStamp.memo]]): every
-    * probe/refresh needs it, and without the stamp each call was a
+    * probe needs it, and without the stamp each call was a
     * parquet-read+sort+collect Spark job (at 100 TB scale: a fixed
     * scheduling barrier per query answering what a manifest read answers).
     * A rebuild rewrites the dir and invalidates the stamp. The cached rows
@@ -90,24 +81,6 @@ final class AnnIndexStore(
       spark.read.parquet(centroidsPath).orderBy("list_id")
         .collect().map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     }.map(_.clone())
-
-  /** reassign ONE path bucket's vectors against the stored centroids and
-    * swap only that bucket's partition (1/numBuckets of the index — the same
-    * cost profile as ChunkStore/FtsIndexStore single-file mutations) */
-  def refreshBucket(bucketRows: DataFrame, bucket: Long): Unit = {
-    import spark.implicits._
-    require(bucketed, "refreshBucket requires a bucketed index")
-    require(exists, "refreshBucket requires an existing index (rebuild first)")
-    val assigned = Similarity.assignToLists(
-      bucketRows.select(idCols.map(col) :+ col(vecCol): _*), vecCol, loadCentroids())
-      .persist()
-    try {
-      val nMine = assigned.count()
-      DirSwap.swapInto(fs, path, s"$assignmentsPath/pbucket=$bucket")(tmp =>
-        assigned.write.partitionBy("list_id").mode(SaveMode.Overwrite).parquet(tmp))
-      replaceBucketStats(bucket, nMine)
-    } finally assigned.unpersist()
-  }
 
   /** ANN top-k: rank centroids by distance to the query (driver-side, tiny),
     * read ONLY the nearest `nProbe` list partitions, brute-force rerank

@@ -17,21 +17,14 @@ import graft.core.ChunkSchema
   * file's partition; plain parquet here, but the zero-chunk fail-fast BEFORE
   * any destructive step (`:635-642`) is preserved as a hard invariant.
   *
-  * Scale posture: the table would be partitioned by a path-hash bucket
-  * (`bucket(filePath)`) so delete/upsert touches one partition and per-file
-  * reads prune to one bucket; neighbor reads push (filePath, chunkIndex)
-  * predicates to parquet row groups.
+  * Scale posture: one unbucketed table, rewritten whole by every mutation
+  * batch through [[DirSwap]]; neighbor reads push (filePath, chunkIndex)
+  * predicates to parquet row groups. The scale layout for the chunk table
+  * is [[VersionedStore]]'s — bucket-granular copy-on-write upserts behind
+  * compare-and-swap commits — and moving the table onto it is ROADMAP.md
+  * open item 3 (one commit protocol), not a second path here.
   */
-final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
-
-  private def bucketed: Boolean = numBuckets > 0
-
-  /** partition id for a file: portable 60-bit md5 hash mod numBuckets —
-    * identical Scala/Column twins so planner and executor agree */
-  def bucketOf(filePath: String): Long =
-    math.floorMod(graft.ops.Dedup.hash60Scala(filePath), numBuckets.toLong)
-
-  private def bucketCol = pmod(graft.ops.Dedup.hash60(col("filePath")), lit(numBuckets.toLong))
+final class ChunkStore(spark: SparkSession, path: String) {
 
   private def fs: FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -39,59 +32,22 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
   def exists: Boolean = fs.exists(new HPath(path))
 
   def read(): DataFrame =
-    if (exists)
-      spark.read.schema(
-        if (bucketed) ChunkSchema.schema.add("pbucket", "long") else ChunkSchema.schema)
-        .parquet(path)
-        .select(ChunkSchema.schema.fieldNames.map(col): _*)
+    if (exists) spark.read.schema(ChunkSchema.schema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ChunkSchema.schema)
 
-  /** append-only insert (first write creates the table). In bucketed mode
-    * rows land in their path-hash partition directory, so every later
-    * per-file operation touches exactly one partition. */
+  /** append-only insert (first write creates the table) */
   def insert(chunks: DataFrame): Unit =
-    if (bucketed)
-      chunks.withColumn("pbucket", bucketCol)
-        .write.partitionBy("pbucket").mode(SaveMode.Append).parquet(path)
-    else chunks.write.mode(SaveMode.Append).parquet(path)
+    chunks.write.mode(SaveMode.Append).parquet(path)
 
-  /** atomic replace of one directory through [[DirSwap]]; its tmp/old
-    * siblings live OUTSIDE the table root (a `pbucket=N` sibling inside it
-    * would be parsed as a partition value and poison every later read) */
-  private def swapDir(target: String, df: DataFrame): Unit =
-    DirSwap.swapInto(fs, path, target)(tmp =>
+  /** atomic replace of the table with `df` through [[DirSwap]] (its tmp/old
+    * siblings live beside the table root, never inside it) */
+  private def swapTable(df: DataFrame): Unit =
+    DirSwap.swapInto(fs, path, path)(tmp =>
       df.write.mode(SaveMode.Overwrite).parquet(tmp))
 
-  /** current rows of one bucket partition (bucketed mode only) */
-  def readBucket(bucket: Long): DataFrame = {
-    require(bucketed, "readBucket requires a bucketed store")
-    val partDir = s"$path/pbucket=$bucket"
-    if (fs.exists(new HPath(partDir)))
-      spark.read.schema(ChunkSchema.schema).parquet(partDir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ChunkSchema.schema)
-  }
-
-  /** rewrite only what a single-file mutation touches: the file's bucket
-    * partition in bucketed mode (1/numBuckets of the data — the 100 TB
-    * shape), the whole table otherwise */
-  private def rewriteForFile(filePath: String,
-                             transform: DataFrame => DataFrame): Unit = {
-    if (bucketed) {
-      val b = bucketOf(filePath)
-      val partDir = s"$path/pbucket=$b"
-      val existing =
-        if (fs.exists(new HPath(partDir)))
-          spark.read.schema(ChunkSchema.schema).parquet(partDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ChunkSchema.schema)
-      swapDir(partDir, transform(existing))
-    } else swapDir(path, transform(read()))
-  }
-
   def deleteFile(filePath: String): Unit =
-    rewriteForFile(filePath, _.filter(col("filePath") =!= filePath))
+    swapTable(read().filter(col("filePath") =!= filePath))
 
   /** upsert = replace all chunks of `filePath` with `newChunks`.
     * Fails BEFORE any destructive step if newChunks is empty — the
@@ -99,102 +55,53 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
   def upsertFile(filePath: String, newChunks: DataFrame): Unit = {
     if (newChunks.isEmpty)
       throw new graft.ingest.Ingest.NoChunksError(filePath)
-    rewriteForFile(filePath,
-      _.filter(col("filePath") =!= filePath)
-        .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))
+    swapTable(read().filter(col("filePath") =!= filePath)
+      .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))
   }
 
   /** Batched upsert — the sync execute path at scale: replace all chunks
     * of `replacePaths` with the matching rows of `newChunks` AND delete
-    * all rows of `deletePaths`, as ONE Spark write job (plus O(affected
-    * buckets) driver-side renames in bucketed mode) instead of one
-    * table/bucket rewrite per file. `newChunks` must contain rows ONLY
-    * for `replacePaths`; files in neither list keep their rows, and in
-    * bucketed mode their buckets are not even read. The zero-chunk
+    * all rows of `deletePaths`, as ONE Spark write job instead of one
+    * table rewrite per file. `newChunks` must contain rows ONLY for
+    * `replacePaths`; files in neither list keep their rows. The zero-chunk
     * invariant lives one level up: the sync executor lists a file in
-    * `replacePaths` only when its parse produced chunks, so a
-    * zero-chunk file's existing rows survive by construction.
-    * Crash posture (bucketed): buckets swap one rename at a time, so a
-    * crash mid-sequence leaves some buckets new and some old — each
-    * bucket is internally consistent (never torn), and the next sync
-    * reconciles the remainder by content hash. */
+    * `replacePaths` only when its parse produced chunks, so a zero-chunk
+    * file's existing rows survive by construction. */
   def upsertFiles(newChunks: DataFrame, replacePaths: Seq[String],
                   deletePaths: Seq[String] = Seq.empty): Unit = {
     import spark.implicits._
     val affected = (replacePaths ++ deletePaths).distinct
     if (affected.isEmpty) return
-    val projected = newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)
     // removal via broadcast anti-join, not a giant literal IN list — the
     // affected set is every dirty file of the batch
-    upsertCore(projected, broadcast(affected.toDF("filePath")),
-      affected.map(bucketOf).distinct.sorted)
+    replaceFiles(newChunks, broadcast(affected.toDF("filePath")))
   }
 
   /** [[upsertFiles]] with the replace set derived FROM `newChunks` instead
-    * of a driver-side path list: the anti-join key set and (bucketed) the
-    * affected-bucket list come from aggregates over the rows, so the driver
-    * never holds O(dirty files) strings — only O(numBuckets) bucket ids in
-    * bucketed mode. Returns the number of distinct files the rows cover
-    * (the batch's `upserted` count), from the same aggregate. Zero-chunk
-    * semantics are inherited: a file with no rows in `newChunks` is absent
-    * from the derived replace set, so its existing rows survive. */
+    * of a driver-side path list: the anti-join key set comes from the rows
+    * themselves, so the driver never holds O(dirty files) strings. Returns
+    * the number of distinct files the rows cover (the batch's `upserted`
+    * count). Zero-chunk semantics are inherited: a file with no rows in
+    * `newChunks` is absent from the derived replace set, so its existing
+    * rows survive. */
   def upsertFilesFromRows(newChunks: DataFrame,
                           deletePaths: Seq[String] = Seq.empty): Long = {
     import spark.implicits._
-    val projected = newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)
-    val producedPaths = projected.select("filePath").distinct()
+    val producedPaths = newChunks.select("filePath").distinct()
     val produced = producedPaths.count()
     if (produced == 0L && deletePaths.isEmpty) return 0L
     // no broadcast hint here: the derived key set is unbounded (every dirty
     // file of the batch), so AQE's runtime sizing picks broadcast vs
     // shuffled anti-join — the one place the literal-list path could not
-    val affectedDF =
-      producedPaths.unionByName(deletePaths.toDF("filePath")).distinct()
-    val buckets =
-      if (!bucketed) Seq.empty[Long]
-      else affectedDF.select(bucketCol.as("b")).distinct()
-        .as[Long].collect().toSeq.sorted // O(numBuckets), bounded
-    upsertCore(projected, affectedDF, buckets)
+    replaceFiles(newChunks,
+      producedPaths.unionByName(deletePaths.toDF("filePath")).distinct())
     produced
   }
 
-  private def upsertCore(projected: DataFrame, affectedDF: DataFrame,
-                         buckets: Seq[Long]): Unit = {
-    if (!bucketed) {
-      val keep = read().join(affectedDF, Seq("filePath"), "left_anti")
-      swapDir(path, keep.unionByName(projected))
-    } else {
-      val f = fs
-      val liveDirs = buckets.map(b => s"$path/pbucket=$b")
-        .filter(d => f.exists(new HPath(d)))
-      val existing =
-        if (liveDirs.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ChunkSchema.schema)
-        else spark.read.schema(ChunkSchema.schema).parquet(liveDirs: _*)
-      val keep = existing.join(affectedDF, Seq("filePath"), "left_anti")
-      val out = keep.unionByName(projected).withColumn("pbucket", bucketCol)
-      val (tmp, oldBase) = DirSwap.siblings(path)
-      out.write.partitionBy("pbucket").mode(SaveMode.Overwrite).parquet(tmp)
-      if (!f.exists(new HPath(path))) f.mkdirs(new HPath(path))
-      buckets.foreach { b =>
-        val live = new HPath(s"$path/pbucket=$b")
-        val fresh = new HPath(s"$tmp/pbucket=$b")
-        val old = new HPath(s"$oldBase-$b")
-        val hadLive = f.exists(live)
-        if (hadLive && !f.rename(live, old))
-          throw new java.io.IOException(
-            s"batch swap failed: could not move $live aside")
-        if (f.exists(fresh) && !f.rename(fresh, live)) {
-          if (hadLive) f.rename(old, live)
-          throw new java.io.IOException(
-            s"batch swap failed: could not move $fresh into place")
-        }
-        if (hadLive) f.delete(old, true)
-      }
-      f.delete(new HPath(tmp), true)
-    }
-  }
+  /** rewrite the table without the `affected` files' rows, plus `newChunks` */
+  private def replaceFiles(newChunks: DataFrame, affected: DataFrame): Unit =
+    swapTable(read().join(affected, Seq("filePath"), "left_anti")
+      .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))
 
   /** neighbor range read (reference `src/vectordb/index.ts:138-164`,
     * handler clamp `src/server/index.ts:1035-1037`): chunks of one file with
@@ -240,35 +147,19 @@ final class ChunkStore(spark: SparkSession, path: String, numBuckets: Int = 0) {
   /** S12 compaction — the reference's `table.optimize({cleanupOlderThan})`
     * (`src/vectordb/index.ts:317-324`), called once per batch, not per
     * file. Two jobs:
-    *  1. rewrite every partition (bucket, or the whole unbucketed table)
-    *     holding more than `maxFragments` parquet files into one file via
-    *     the same atomic swap as upsert (append-heavy ingest fragments:
-    *     each insert adds files; per-bucket reads degrade with file count);
+    *  1. rewrite the table into one file when it holds more than
+    *     `maxFragments` parquet files, via the same atomic swap as upsert
+    *     (append-heavy ingest fragments: each insert adds files);
     *  2. sweep swap debris older than `cleanupOlderThanMs`
     *     ([[DirSwap.sweepDebris]]). */
   def optimize(maxFragments: Int = 4,
                cleanupOlderThanMs: Long = DirSwap.DebrisAgeMs): Unit = {
     val f = fs
-    def fragmentCount(dir: String): Int = {
-      val p = new HPath(dir)
-      if (!f.exists(p)) 0
-      else f.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
-    if (bucketed) {
-      val root = new HPath(path)
-      if (f.exists(root)) {
-        f.listStatus(root).filter(_.isDirectory)
-          .map(_.getPath).filter(_.getName.startsWith("pbucket="))
-          .foreach { part =>
-            if (fragmentCount(part.toString) > maxFragments) {
-              val df = spark.read.schema(ChunkSchema.schema).parquet(part.toString)
-              swapDir(part.toString, df.coalesce(1))
-            }
-          }
-      }
-    } else if (fragmentCount(path) > maxFragments) {
-      swapDir(path, read().coalesce(1))
-    }
+    val root = new HPath(path)
+    val fragments =
+      if (!f.exists(root)) 0
+      else f.listStatus(root).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    if (fragments > maxFragments) swapTable(read().coalesce(1))
     DirSwap.sweepDebris(f, path, cleanupOlderThanMs)
   }
 }

@@ -82,7 +82,7 @@ final class CleanStateStore(
   private val statsPath = path + "/stats"
 
   private val mh = new MinhashIndexStore(spark, path + "/mh",
-    cfg.nHashes, cfg.bands, cfg.rowsPerBand, cfg.shingleK, 0, idCol)
+    cfg.nHashes, cfg.bands, cfg.rowsPerBand, cfg.shingleK, idCol)
 
   private def fs =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -399,19 +399,21 @@ final class CleanStateStore(
     val fRaw = Future(result.batchSource.count())
     val fQual = Future(result.quality.count())
     val fNear = Future(result.nearNew.count())
+    // snapshots are localCheckpoints: their blocks live on the checkpointed
+    // RDD, not in the CacheManager, so df.unpersist would be a no-op
+    def release(df: DataFrame): Unit =
+      Dedup.checkpointRdd(df).foreach(_.unpersist(blocking = true))
     // await EVERY phase-1 future before looking at any failure (ADVICE r17:
     // rethrowing while siblings still ran leaked their Spark jobs and any
-    // already-completed checkpoint blocks), then unpersist the snapshots
+    // already-completed checkpoint blocks), then release the snapshots
     // that did complete and rethrow the first failure
     val phase1: Seq[Future[Any]] =
       Seq(fExact, fFps, fK4, fRev, fHold, fPost, fRaw, fQual, fNear)
     val tried = phase1.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     tried.collectFirst { case scala.util.Failure(t) => t }.foreach { t =>
       tried.foreach {
-        case scala.util.Success(df: org.apache.spark.sql.Dataset[_]) =>
-          df.unpersist(blocking = false): Unit
-        case scala.util.Success((df: org.apache.spark.sql.Dataset[_], _)) =>
-          df.unpersist(blocking = false): Unit
+        case scala.util.Success(df: org.apache.spark.sql.Dataset[_]) => release(df.toDF())
+        case scala.util.Success((df: org.apache.spark.sql.Dataset[_], _)) => release(df.toDF())
         case _ => ()
       }
       throw t
@@ -456,8 +458,7 @@ final class CleanStateStore(
       // post-absorb reader would silently miss the appended files
       spark.catalog.refreshByPath(path)
     } finally {
-      Seq(exactSnap, fpsSnap, k4Snap, revSnap, holdSnap, postSnap)
-        .foreach(_.unpersist(blocking = true))
+      Seq(exactSnap, fpsSnap, k4Snap, revSnap, holdSnap, postSnap).foreach(release)
     }
   }
 }

@@ -16,7 +16,7 @@ private[graft] object DirSwap {
   val DebrisAgeMs = 60000L
 
   /** fresh (tmp, old) sibling names of `base` */
-  def siblings(base: String): (String, String) = {
+  private def siblings(base: String): (String, String) = {
     val nano = System.nanoTime()
     (s"$base-swap-$nano", s"$base-old-$nano")
   }

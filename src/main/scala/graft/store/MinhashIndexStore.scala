@@ -23,9 +23,8 @@ import graft.ops.Dedup
   * reference refreshes its FTS index per mutation batch instead of
   * rebuilding (`src/server/index.ts:546-549`) applied to dedup state.
   *
-  * Layout under `path/`: `bands/` (id, band, band_hash)
-  * [+ pbucket partition when bucketed], `sigs/` (id, sig) for
-  * introspection/rebuild audits, `stats/` per-bucket row counts written
+  * Layout under `path/`: `bands/` (id, band, band_hash), `sigs/` (id, sig)
+  * for introspection/rebuild audits, `stats/` the row count written
   * LAST ([[exists]] keys on stats, so readers only see complete indexes —
   * the FtsIndexStore discipline). All writes go through [[DirSwap]].
   *
@@ -35,16 +34,14 @@ import graft.ops.Dedup
 final class MinhashIndexStore(
     protected val spark: SparkSession, protected val path: String,
     nHashes: Int, bands: Int, rowsPerBand: Int,
-    shingleK: Int = 5, protected val numBuckets: Int = 0,
-    idCol: String = "doc_id") extends BucketedIndexStore {
+    shingleK: Int = 5,
+    idCol: String = "doc_id") extends StatsLastIndexStore {
 
   require(bands * rowsPerBand == nHashes,
     s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal nHashes ($nHashes)")
 
   private val bandsPath = path + "/bands"
   private val sigsPath = path + "/sigs"
-
-  protected def bucketKey = Dedup.hash60(col(idCol).cast("string"))
 
   /** (id, sig) for docs with a non-empty shingle set — the signature
     * projection every caller shares (per-row, scan-speed, no shuffle) */
@@ -64,39 +61,11 @@ final class MinhashIndexStore(
     val sigs = signatures(docs, textCol).persist()
     try {
       if (sigs.isEmpty) { drop(); return }
-      val banded =
-        if (bucketed) bandsOf(sigs).withColumn("pbucket", bucketCol)
-        else bandsOf(sigs)
-      val parts = if (bucketed) Seq("pbucket") else Seq.empty
-      DirSwap.swapInto(fs, path, bandsPath) { tmp =>
-        val w = banded.write.mode(SaveMode.Overwrite)
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp)
-      }
-      DirSwap.swapInto(fs, path, sigsPath) { tmp =>
-        val s = if (bucketed) sigs.withColumn("pbucket", bucketCol) else sigs
-        val w = s.write.mode(SaveMode.Overwrite)
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp)
-      }
-      writeStats(if (bucketed) sigs.withColumn("pbucket", bucketCol) else sigs)
-    } finally sigs.unpersist()
-  }
-
-  /** re-sign ONE path bucket and swap only its partitions + stats row —
-    * the per-mutation-batch refresh (1/numBuckets of the corpus, same
-    * contract as FtsIndexStore.refreshBucket) */
-  def refreshBucket(bucketDocs: DataFrame, bucket: Long,
-                    textCol: String = "text"): Unit = {
-    import spark.implicits._
-    require(bucketed, "refreshBucket requires a bucketed index")
-    require(exists, "refreshBucket requires an existing index (rebuild first)")
-    val sigs = signatures(bucketDocs, textCol).persist()
-    try {
-      val nMine = sigs.count()
-      DirSwap.swapInto(fs, path, s"$bandsPath/pbucket=$bucket")(tmp =>
+      DirSwap.swapInto(fs, path, bandsPath)(tmp =>
         bandsOf(sigs).write.mode(SaveMode.Overwrite).parquet(tmp))
-      DirSwap.swapInto(fs, path, s"$sigsPath/pbucket=$bucket")(tmp =>
+      DirSwap.swapInto(fs, path, sigsPath)(tmp =>
         sigs.write.mode(SaveMode.Overwrite).parquet(tmp))
-      replaceBucketStats(bucket, nMine)
+      writeStats(sigs)
     } finally sigs.unpersist()
   }
 
@@ -118,26 +87,13 @@ final class MinhashIndexStore(
     try {
       val n = sigs.count()
       if (n == 0L) return 0L
-      val parts = if (bucketed) Seq("pbucket") else Seq.empty
-      def appendTo(df: DataFrame, dest: String): Unit = {
-        val d = if (bucketed) df.withColumn("pbucket", bucketCol) else df
-        val w = d.write.mode(SaveMode.Append)
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(dest)
-      }
-      appendTo(bandsOf(sigs), bandsPath)
-      appendTo(sigs, sigsPath)
-      // signature-memoized stats read (BucketedIndexStore.storedBucketMap):
-      // zero Spark jobs until the swap below rewrites the dir
-      val cur = storedBucketMap()
-      val add: Map[Long, Long] =
-        if (bucketed) sigs.withColumn("pbucket", bucketCol)
-          .groupBy("pbucket").agg(count(lit(1)).as("n"))
-          .as[(Long, Long)].collect().toMap
-        else Map(0L -> n)
-      val merged = (cur.keySet ++ add.keySet).toSeq.sorted
-        .map(b => (b, cur.getOrElse(b, 0L) + add.getOrElse(b, 0L)))
+      bandsOf(sigs).write.mode(SaveMode.Append).parquet(bandsPath)
+      sigs.write.mode(SaveMode.Append).parquet(sigsPath)
+      // rowCount is signature-memoized: zero Spark jobs until the swap
+      // below rewrites the stats dir
+      val merged = rowCount() + n
       DirSwap.swapInto(fs, path, statsPath)(tmp =>
-        merged.toDF("pbucket", "n_rows")
+        Seq((0L, merged)).toDF("pbucket", "n_rows")
           .write.mode(SaveMode.Overwrite).parquet(tmp))
       n
     } finally sigs.unpersist()

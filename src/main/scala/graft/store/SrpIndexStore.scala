@@ -23,12 +23,9 @@ final class SrpIndexStore(
     protected val spark: SparkSession, protected val path: String,
     dim: Int, planes: Int,
     idCols: Seq[String] = Seq("filePath", "chunkIndex"),
-    vecCol: String = "vector") extends BucketedIndexStore {
+    vecCol: String = "vector") extends StatsLastIndexStore {
 
   require(planes >= 1 && planes <= 30, "planes must be in 1..30")
-
-  protected val numBuckets = 0
-  protected def bucketKey = lit(0L)
 
   private val assignmentsPath = path + "/assignments"
 

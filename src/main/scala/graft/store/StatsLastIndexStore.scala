@@ -1,24 +1,19 @@
 package graft.store
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the persisted index stores ([[AnnIndexStore]],
-  * [[SrpIndexStore]], [[MinhashIndexStore]]): the path-bucket column, the
-  * stats-table discipline (written LAST so [[exists]] only ever observes a
-  * complete index; answers [[rowCount]] without a data scan), and the
-  * read-modify-write of one bucket's stats row after an incremental
-  * refresh. [[FtsIndexStore]] keeps its own stats shape (per-bucket BM25
-  * corpus partials, not plain row counts) and does not extend this. */
-private[store] trait BucketedIndexStore {
+  * [[SrpIndexStore]], [[MinhashIndexStore]]): the stats-table discipline
+  * (written LAST so [[exists]] only ever observes a complete index; answers
+  * [[rowCount]] without a data scan) and the pruned probe read of a
+  * partitioned table. [[FtsIndexStore]] keeps its own stats shape (BM25
+  * corpus totals, not plain row counts) and does not extend this. */
+private[store] trait StatsLastIndexStore {
   protected def spark: SparkSession
   protected def path: String
-  protected def numBuckets: Int
-  /** 60-bit key hash whose pmod is a row's path bucket */
-  protected def bucketKey: Column
 
-  protected final def bucketed: Boolean = numBuckets > 0
   protected final def statsPath: String = path + "/stats"
 
   protected final def fs =
@@ -40,8 +35,6 @@ private[store] trait BucketedIndexStore {
 
   def drop(): Unit =
     if (fs.exists(new HPath(path))) fs.delete(new HPath(path), true)
-
-  protected final def bucketCol: Column = pmod(bucketKey, lit(numBuckets.toLong))
 
   /** Read ONLY the named partition values' directories of a partitioned
     * assignments table — the probe-side read (r17). A bare
@@ -74,16 +67,14 @@ private[store] trait BucketedIndexStore {
       if (ids.isEmpty) Seq.empty // nothing probed: no `{}` pattern to list
       else {
         val valGlob = if (ids.size == 1) ids.head.toString else ids.mkString("{", ",", "}")
-        val pat =
-          if (bucketed) new HPath(s"$tablePath/pbucket=*/$partCol=$valGlob")
-          else new HPath(s"$tablePath/$partCol=$valGlob")
-        Option(fs.globStatus(pat)).toSeq.flatten.map(_.getPath.toString)
+        Option(fs.globStatus(new HPath(s"$tablePath/$partCol=$valGlob")))
+          .toSeq.flatten.map(_.getPath.toString)
       }
     // The probe schema is memoized behind the STATS dir signature, NOT the
     // table's: stats is a few tiny files rewritten LAST by every mutation
-    // path (rebuild / appendBatch / refreshBucket — the exists/staleness
-    // discipline), so it is the store's version marker, exactly as the
-    // rowCount/bucketMap memos already use it. Signing the partitioned
+    // path (rebuild / appendBatch — the exists/staleness discipline), so
+    // it is the store's version marker, exactly as the rowCount memo
+    // already uses it. Signing the partitioned
     // table itself would walk every index file driver-side PER PROBE —
     // measured ~70–130 ms on the ×100 AnnStress tree (11k files), i.e.
     // an O(index) pass re-smuggled into the read this method exists to
@@ -112,38 +103,12 @@ private[store] trait BucketedIndexStore {
     }
   }
 
-  /** write the (pbucket, n_rows) stats table — call LAST in a rebuild;
-    * `df` must already carry `pbucket` when the store is bucketed */
-  protected final def writeStats(df: DataFrame): Unit = {
-    val stats =
-      if (bucketed) df.groupBy("pbucket").agg(count(lit(1)).as("n_rows"))
-      else df.agg(count(lit(1)).as("n_rows")).withColumn("pbucket", lit(0L))
+  /** write the (pbucket, n_rows) stats table — call LAST in a rebuild.
+    * `pbucket` is the constant 0, kept so the stats layout stays the one
+    * existing stores were written with. */
+  protected final def writeStats(df: DataFrame): Unit =
     DirSwap.swapInto(fs, path, statsPath)(tmp =>
-      stats.select("pbucket", "n_rows")
+      df.agg(count(lit(1)).as("n_rows")).withColumn("pbucket", lit(0L))
+        .select("pbucket", "n_rows")
         .write.mode(SaveMode.Overwrite).parquet(tmp))
-  }
-
-  /** the stored per-bucket row counts — a pure function of the stats dir,
-    * signature-memoized like [[rowCount]] (r14 VERDICT ask #3: this was a
-    * collect() Spark job on every append/refresh; the map re-reads only
-    * when a swap rewrites the dir and invalidates the stamp) */
-  protected final def storedBucketMap(): Map[Long, Long] = {
-    val sp = spark
-    import sp.implicits._
-    graft.core.SourceStamp.memo(statsPath, "bucketMap") {
-      sp.read.parquet(statsPath)
-        .select("pbucket", "n_rows").as[(Long, Long)].collect().toMap
-    }
-  }
-
-  /** replace ONE bucket's stats row (read-modify-write of the tiny
-    * numBuckets-row table) after an incremental bucket refresh */
-  protected final def replaceBucketStats(bucket: Long, n: Long): Unit = {
-    val sp = spark
-    import sp.implicits._
-    val others = storedBucketMap().toSeq.filter(_._1 != bucket)
-    DirSwap.swapInto(fs, path, statsPath)(tmp =>
-      (others :+ (bucket, n)).toDF("pbucket", "n_rows")
-        .write.mode(SaveMode.Overwrite).parquet(tmp))
-  }
 }

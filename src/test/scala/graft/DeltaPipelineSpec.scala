@@ -228,4 +228,53 @@ class DeltaPipelineSpec extends AnyFunSuite {
     assert(nN === truth3.nearDeduped.count())
     assert(nF === truth3.decontaminated.count())
   }
+
+  test("absorb releases its checkpoint snapshots on success and on a phase-1 failure") {
+    // absorb snapshots its frames with localCheckpoint; those blocks live
+    // on the checkpointed RDDs, so only an RDD-level unpersist frees them.
+    // RDD ids are monotonic per context (SoakSpec's floor idiom): after
+    // absorb and the result's own release, no RDD created from the floor
+    // on may still be persisted.
+    val hold = col("doc_id").isin(5L)
+    val stored = df(Seq(
+      1L -> words("alpha"),
+      2L -> words("beta"),
+      5L -> words("bench")))
+    val batch = df(Seq(
+      201L -> words("zeta"),
+      202L -> (words("beta") + " tail"))) // near-dup of stored 2
+    val st = new CleanStateStore(spark, tmpDir("delta-blocks"))
+    st.rebuild(stored, hold)
+    def floor(): Int = spark.sparkContext.parallelize(Seq(0), 1).id
+    def persistedSince(f: Int): Seq[Int] =
+      spark.sparkContext.getPersistentRDDs.keys.filter(_ >= f).toSeq.sorted
+
+    // phase-1 failure: the batch-size count runs a UDF that throws, while
+    // the snapshots beside it complete
+    val boom = udf { (id: Long) =>
+      if (id > 0L) throw new IllegalStateException("injected absorb failure")
+      true
+    }
+    val countsBefore = st.stageCounts()
+    val (r1, release1) = st.applyBatchReleasable(batch, stored.union(batch), hold)
+    val f1 = floor()
+    val err = intercept[Exception] {
+      st.absorb(r1.copy(batchSource = r1.batchSource.filter(boom(col("doc_id")))))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected absorb failure")))
+    release1()
+    assert(persistedSince(f1).isEmpty,
+      s"failed absorb left persisted RDDs: ${persistedSince(f1).mkString(",")}")
+    assert(st.stageCounts() === countsBefore, "a phase-1 failure must not write state")
+
+    // success
+    val (r2, release2) = st.applyBatchReleasable(batch, stored.union(batch), hold)
+    val f2 = floor()
+    st.absorb(r2)
+    release2()
+    assert(persistedSince(f2).isEmpty,
+      s"absorb left persisted RDDs: ${persistedSince(f2).mkString(",")}")
+    assert(ids(st.survivors()) === ids(funnel(stored.union(batch), hold).decontaminated))
+  }
 }

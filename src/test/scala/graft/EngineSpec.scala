@@ -271,32 +271,6 @@ class EngineSpec extends AnyFunSuite {
     assert(r.coverage.unobservedPrefixes.exists(p => s"$deep/too-deep.md".startsWith(p)))
   }
 
-  test("bucketed engine: incremental index refresh equals full rebuild") {
-    val root = Files.createTempDirectory("bucketed-root").toString
-    val storeDir = Files.createTempDirectory("bucketed-store").toString + "/chunks"
-    (0 until 6).foreach(i => write(s"$root/doc$i.md",
-      s"# Doc $i\nDocument number $i talks about spark joins windows and aggregate pipelines " +
-        s"with partitioned distributed state number $i."))
-    val engine = new Engine(spark, storeDir, Seq(root), numBuckets = 4)
-    engine.sync()
-    assert(engine.ftsIndex.exists)
-    def results() = engine.queryDocuments("spark joins", limit = 5).collect()
-      .map(r => (r.getAs[String]("filePath"), r.getAs[Double]("boosted"))).toSeq
-
-    // single-file mutation → incremental bucket refresh
-    write(s"$root/doc3.md", "# Doc 3\nCompletely rewritten content about cooking pasta and tomato sauces instead.")
-    engine.ingestFile(s"$root/doc3.md")
-    val incremental = results()
-    // force a FULL rebuild and compare: identical rankings
-    engine.ftsIndex.rebuild(engine.store.read())
-    assert(results() === incremental)
-    // deletion through the incremental path stays consistent too
-    engine.deleteDocument(s"$root/doc5.md")
-    val afterDelete = results()
-    engine.ftsIndex.rebuild(engine.store.read())
-    assert(results() === afterDelete)
-  }
-
   test("persisted FTS index: built per batch, indexed path equals ad-hoc") {
     val (engine, _) = mkEngine()
     engine.sync()
@@ -467,7 +441,7 @@ class EngineSpec extends AnyFunSuite {
   test("batched sync execute: 100+ dirty files, O(1) jobs, counts equal the loop path") {
     // two identical workspaces, two engines: one forced down the per-file
     // execute loop, one down the batched binaryFile→chunk+embed→single-
-    // overwrite executor (bucketed, so the per-bucket swap path runs too)
+    // overwrite executor
     def fill(root: String): Unit = {
       (0 until 104).foreach { i =>
         write(s"$root/docs/f$i.md",
@@ -482,8 +456,7 @@ class EngineSpec extends AnyFunSuite {
     val loopEngine = new Engine(spark,
       Files.createTempDirectory("bsync-sa").toString + "/chunks", Seq(rootA))
     val batchEngine = new Engine(spark,
-      Files.createTempDirectory("bsync-sb").toString + "/chunks", Seq(rootB),
-      numBuckets = 8)
+      Files.createTempDirectory("bsync-sb").toString + "/chunks", Seq(rootB))
 
     def countJobs(body: => Engine#SyncSummary): (Engine#SyncSummary, Int) = {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -628,7 +601,7 @@ class EngineSpec extends AnyFunSuite {
     // must agree with brute force EXACTLY — what's under test is the routing
     // and the persisted layout, not recall (gated in StoreSearchSpec);
     // annThreshold=1 forces the index on at this corpus size
-    val annEngine = new Engine(spark, store, Seq(root), numBuckets = 4,
+    val annEngine = new Engine(spark, store, Seq(root),
       annLists = 4, annProbes = 4, annThreshold = 1L)
     val s = annEngine.sync()
     assert(s.upserted === 30)
@@ -637,7 +610,7 @@ class EngineSpec extends AnyFunSuite {
 
     // a second engine over the SAME store with an unreachable threshold
     // stays on the exact brute-force scan — the two paths must agree
-    val bruteEngine = new Engine(spark, store, Seq(root), numBuckets = 4,
+    val bruteEngine = new Engine(spark, store, Seq(root),
       annThreshold = Long.MaxValue)
     def rows(e: Engine) =
       e.queryDocuments("spark shuffle partitions", limit = 10)
@@ -649,8 +622,8 @@ class EngineSpec extends AnyFunSuite {
       scope = Seq(s"$root/doc7.md"))
     assert(scoped.collect().forall(_.getAs[String]("filePath").endsWith("doc7.md")))
 
-    // single-file ingest above threshold routes through the per-bucket
-    // refresh (fixed centroids) — the new doc must be immediately probe-visible
+    // single-file ingest above threshold refreshes the index — the new doc
+    // must be immediately probe-visible
     write(s"$root/doc30.md",
       "# Doc 30\nentirely novel topic: volcano geology magma chambers erupting basalt.")
     annEngine.ingestFile(s"$root/doc30.md")
@@ -725,11 +698,11 @@ class EngineSpec extends AnyFunSuite {
     for (i <- 0 until 96)
       write(s"$root/doc$i.md",
         s"# Doc $i\n" + s"${topics(i % 8)} paragraph number $i variant ${i / 8}. " * 4)
-    val ivf = new Engine(spark, store, Seq(root), numBuckets = 4,
+    val ivf = new Engine(spark, store, Seq(root),
       annThreshold = 1L) // production annLists=16/annProbes=8 defaults
     assert(ivf.sync().upserted === 96)
     assert(ivf.annIndex.exists)
-    val brute = new Engine(spark, store, Seq(root), numBuckets = 4,
+    val brute = new Engine(spark, store, Seq(root),
       annThreshold = Long.MaxValue)
     val queries = Seq("spark shuffle partitions", "pasta tomato dinner",
       "quantum particle", "football goals", "garden bloom",

@@ -178,38 +178,6 @@ class SoakSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.dedup.postingVerifyFactor")
   }
 
-  test("bucketed engine session: per-bucket refresh cycles leave no blocks and bounded disk") {
-    // the bucketed mode's mutation path (single-file upsert → ONE bucket's
-    // chunk/FTS/ANN partitions rewritten) persists and swaps different
-    // state than the full-rebuild path — give it the same soak: repeated
-    // single-file mutations must not accumulate blocks or disk
-    val root = Files.createTempDirectory("soakb-root").toString
-    val storeBase = Files.createTempDirectory("soakb-store").toString
-    for (i <- 0 until 8)
-      write(s"$root/doc$i.txt",
-        s"Bucketed soak document $i token bq$i. " + ("content words " * 30))
-    val floor = blockFloor()
-    val engine = new Engine(spark, storeBase + "/chunks", Seq(root), numBuckets = 4)
-    assert(engine.sync().upserted === 8)
-    assert(engine.queryDocuments("bucketed soak").count() > 0)
-    val blockBaseline = blocksSince(floor).size
-    val diskBaseline = treeBytes(storeBase)
-    for (cycle <- 1 to 4) {
-      // rotate the mutated file so DIFFERENT buckets refresh across cycles
-      val victim = s"$root/doc${cycle % 8}.txt"
-      write(victim, s"Bucketed soak document REVISED cycle $cycle token bq${cycle % 8}. " +
-        ("fresh words " * 30))
-      assert(engine.sync().upserted === 1, s"cycle $cycle")
-      assert(engine.queryDocuments(s"revised cycle").count() > 0)
-      assert(blocksSince(floor).size === blockBaseline,
-        s"bucketed cycle $cycle leaked persisted blocks: " +
-          blocksSince(floor).mkString(","))
-      val disk = treeBytes(storeBase)
-      assert(disk <= diskBaseline * 2 + (1 << 20),
-        s"bucketed cycle $cycle: store tree grew $diskBaseline -> $disk")
-    }
-  }
-
   test("cleanCorpus op: repeated funnel calls leave no blocks on the carry AND posting routes") {
     // VERDICT r14 ask #5: the funnel's two stage caches plus its routed
     // verify's persists are exactly the class this soak exists to gate.

@@ -118,50 +118,19 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(manifest("/a/y.md") === null)
   }
 
-  test("bucketed layout: per-file upsert rewrites only the file's partition") {
-    val base = Files.createTempDirectory("bucketed").toString + "/table"
-    val st = new ChunkStore(spark, base, numBuckets = 8)
-    val files = (0 until 12).map(i => s"/corpus/doc$i.md")
-    st.insert(files.flatMap(f => Seq(mkChunk(f, 0, s"text of $f"))).toDF())
-    assert(st.read().count() === 12)
-
-    val target = files.head
-    val targetBucket = st.bucketOf(target)
-    // snapshot modification times of all OTHER partitions
-    def partFiles(): Map[String, Long] = {
-      val d = new java.io.File(base)
-      d.listFiles().filter(_.getName.startsWith("pbucket="))
-        .flatMap(p => p.listFiles().map(f => f.getPath -> f.lastModified()))
-        .toMap
-    }
-    val before = partFiles().filter(!_._1.contains(s"pbucket=$targetBucket"))
-    st.upsertFile(target, Seq(mkChunk(target, 0, "updated"), mkChunk(target, 1, "second")).toDF())
-    val after = partFiles().filter(!_._1.contains(s"pbucket=$targetBucket"))
-    assert(after === before) // untouched partitions bit-identical
-    assert(st.read().filter($"filePath" === target).count() === 2)
-    assert(st.read().count() === 13)
-
-    st.deleteFile(target)
-    assert(st.read().filter($"filePath" === target).count() === 0)
-    assert(st.read().count() === 11)
-    // neighbors + listing still work through the bucketed layout
-    assert(st.listFiles().count() === 11)
-  }
-
   test("optimize compacts fragmented partitions and sweeps stale swap debris") {
     val root = Files.createTempDirectory("compact")
     val base = root.toString + "/table"
-    val st = new ChunkStore(spark, base, numBuckets = 2)
-    // 6 separate inserts of the same file set → every bucket accumulates
-    // one parquet fragment per insert
+    val st = new ChunkStore(spark, base)
+    // 6 separate inserts of the same file set → the table accumulates at
+    // least one parquet fragment per insert
     val files = (0 until 4).map(i => s"/corpus/doc$i.md")
     (0 until 6).foreach { gen =>
       st.insert(files.map(f => mkChunk(f, gen, s"gen $gen of $f")).toDF())
     }
     def fragments(): Int = new java.io.File(base).listFiles()
-      .filter(_.getName.startsWith("pbucket="))
-      .map(_.listFiles().count(f => f.getName.endsWith(".parquet"))).sum
-    assert(fragments() >= 12, "inserts should fragment the partitions")
+      .count(f => f.getName.endsWith(".parquet"))
+    assert(fragments() >= 6, "inserts should fragment the table")
     val beforeRows = st.read().orderBy("filePath", "chunkIndex").collect()
 
     // plant stale + fresh swap debris next to the table
@@ -172,7 +141,7 @@ class StoreSearchSpec extends AnyFunSuite {
     fresh.mkdirs()
 
     st.optimize(maxFragments = 2, cleanupOlderThanMs = 60000L)
-    assert(fragments() === 2, "one file per bucket after compaction")
+    assert(fragments() === 1, "one file after compaction")
     assert(st.read().orderBy("filePath", "chunkIndex").collect() === beforeRows)
     assert(!stale.exists, "stale debris swept")
     assert(fresh.exists, "fresh debris (possible in-flight swap) kept")
@@ -280,7 +249,7 @@ class StoreSearchSpec extends AnyFunSuite {
   test("persisted IVF index: probe prunes to nProbe list partitions; recall gated on real embeddings") {
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("ann-idx").toString + "/ann"
-    val st = new graft.store.AnnIndexStore(spark, dir, 0, Seq("vec_id"), "embedding")
+    val st = new graft.store.AnnIndexStore(spark, dir, Seq("vec_id"), "embedding")
     assert(!st.exists && st.rowCount() === 0L)
     st.rebuild(e, nLists = 16)
     assert(st.exists)
@@ -326,7 +295,7 @@ class StoreSearchSpec extends AnyFunSuite {
     graft.core.SourceStamp.clear()
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("ann-stamp").toString + "/ann"
-    val st = new graft.store.AnnIndexStore(spark, dir, 0, Seq("vec_id"), "embedding")
+    val st = new graft.store.AnnIndexStore(spark, dir, Seq("vec_id"), "embedding")
     st.rebuild(e, nLists = 8)
     def countJobs[A](body: => A): (A, Int) = {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -425,71 +394,6 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(!delta.exists(p => p._1 == 11L || p._2 == 11L)) // distinct doc pairs with nothing
     st.drop()
     assert(!st.exists)
-  }
-
-  test("bucketed minhash index: single-bucket refresh tracks new text") {
-    import graft.ops.Dedup
-    val nb = 4
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega"
-    val docs = (0L until 12L).map(i => (i, s"doc $i " + base + s" tail $i"))
-      .toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("mh-idx-b").toString + "/mh"
-    val st = new graft.store.MinhashIndexStore(spark, dir,
-      nHashes = 16, bands = 4, rowsPerBand = 4, numBuckets = nb)
-    st.rebuild(docs)
-    val before = st.rowCount()
-
-    // rewrite doc 0's bucket: doc 0 becomes an exact twin of doc 1
-    val b0 = Dedup.hash60Scala("0") % nb
-    val bucketDocs = docs.filter(
-      pmod(Dedup.hash60($"doc_id".cast("string")), lit(nb.toLong)) === b0)
-      .withColumn("text", when($"doc_id" === 0L,
-        lit(s"doc 1 $base tail 1")).otherwise($"text"))
-    st.refreshBucket(bucketDocs, b0)
-    assert(st.rowCount() === before) // same docs, new signatures
-
-    // a batch equal to doc 1's text must now find doc 0 as a candidate
-    val probe = Seq((100L, s"doc 1 $base tail 1")).toDF("doc_id", "text")
-    val cands = st.deltaCandidates(probe).as[(Long, Long)].collect().toSet
-    assert(cands.contains((0L, 100L)) && cands.contains((1L, 100L)))
-    st.drop()
-  }
-
-  test("bucketed ANN index: single-bucket refresh tracks a file's new vectors") {
-    val chunks = (0 until 24).map(i => mkChunk(s"/corpus/doc$i.md", 0, s"document $i about topic ${i % 6}"))
-    val dir = Files.createTempDirectory("ann-bucketed").toString + "/ann"
-    val st = new graft.store.AnnIndexStore(spark, dir, numBuckets = 4)
-    st.rebuild(chunks.toDF(), nLists = 4)
-    val total = st.rowCount()
-    assert(total === 24L)
-
-    // replace one file's chunks (two rows now) and refresh ONLY its bucket
-    val target = "/corpus/doc3.md"
-    val bucket = math.floorMod(graft.ops.Dedup.hash60Scala(target), 4L)
-    val bucketRows = chunks.filter(c =>
-        math.floorMod(graft.ops.Dedup.hash60Scala(c.filePath), 4L) == bucket)
-      .filterNot(_.filePath == target) ++
-      Seq(mkChunk(target, 0, "fresh text about spark shuffles"),
-          mkChunk(target, 1, "more fresh text about partitions"))
-    st.refreshBucket(bucketRows.toDF(), bucket)
-    assert(st.rowCount() === 25L) // 24 - 1 + 2
-
-    // the refreshed vectors are probe-visible: query exactly the new text
-    val qv = embedder.embed("fresh text about spark shuffles")
-    val top = st.probe(qv, nProbe = 4, k = 1).collect().head
-    assert(top.getAs[String]("filePath") === target)
-    assert(top.getAs[Double]("score") < 1e-6) // self-match (float-sum rounding)
-
-    // refresh a bucket to EMPTY (its last file deleted): stats drop, the
-    // probe still works over the remaining buckets
-    val emptied = chunks.take(0).toDF()
-    st.refreshBucket(emptied, bucket)
-    assert(st.rowCount() === 25L - bucketRows.size)
-    val survivors = st.probe(qv, nProbe = 4, k = 50).collect()
-    assert(survivors.nonEmpty)
-    assert(survivors.forall(r =>
-      math.floorMod(graft.ops.Dedup.hash60Scala(r.getAs[String]("filePath")), 4L) != bucket))
   }
 
   test("sketch store: incremental appends equal the one-shot sketches") {

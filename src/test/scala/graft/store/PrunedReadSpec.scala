@@ -14,9 +14,7 @@ class PrunedReadSpec extends AnyFunSuite {
 
   private final class Fixture(
       protected val spark: org.apache.spark.sql.SparkSession,
-      protected val path: String) extends BucketedIndexStore {
-    protected def numBuckets: Int = 0
-    protected def bucketKey: org.apache.spark.sql.Column = lit(0L)
+      protected val path: String) extends StatsLastIndexStore {
     def readValues(table: String, partCol: String, vs: Seq[Any]) =
       prunedPartitionRead(table, partCol, vs)
   }
