@@ -46,8 +46,9 @@ final class Engine(
   /** persisted IVF ANN index on the same refresh cadence — the reference
     * keeps its vector index inside the store and queries it with an ANN
     * scan, never a full scan (`src/vectordb/index.ts:352-353`). Recall is
-    * tuned by annProbes/annLists. Below `annThreshold` chunks the index is
-    * dropped and queries brute-force (exact, and cheaper than probe
+    * tuned by annProbes/annLists. Below `annThreshold` chunks a refresh
+    * trains nothing and drops the index (the rebuild's own row count
+    * decides), and queries brute-force (exact, and cheaper than probe
     * overhead at tool scale). */
   private[graft] val annIndex =
     new graft.store.AnnIndexStore(spark, storePath + "-ann")
@@ -117,27 +118,24 @@ final class Engine(
   /** run `body` under a job description so engine phases attribute cleanly
     * in the UI / listener tooling (IngestStress job table); restores the
     * PREVIOUS description (r16 ADVICE: restoring null silently cleared any
-    * ambient caller-set description, and broke nesting) */
+    * ambient caller-set description, and broke nesting). Every job of a
+    * mutation runs under one: `graft sync: …`, `graft ingest: parse`,
+    * `graft store: upsert|delete`, `graft index: …`. */
   private def describing[T](desc: String)(body: => T): T = {
     val prev = spark.sparkContext.getLocalProperty("spark.job.description")
     spark.sparkContext.setJobDescription(desc)
     try body finally spark.sparkContext.setJobDescription(prev)
   }
 
+  /** rebuild both indexes from one open of the chunk table. The ANN
+    * rebuild takes `annThreshold` as its minimum row count, so below the
+    * threshold its one count drops the index before any training. */
   private def refreshIndexes(): Unit = {
-    describing("graft index: FTS rebuild") { ftsIndex.rebuild(store.read()) }
-    describing("graft index: ANN refresh") { refreshAnn() }
-  }
-  /** maintain the ANN index across the corpus-size threshold: rebuild it
-    * unconditionally (its scan is the one unavoidable corpus read — a
-    * standalone pre-count would scan the table twice), then enforce the
-    * threshold from the index's own stats table: below it the index is
-    * dropped (brute force is exact and faster there). A below-threshold
-    * corpus pays a rebuild-then-drop, but such a corpus is small by
-    * definition. */
-  private def refreshAnn(): Unit = {
-    annIndex.rebuild(store.read(), annLists)
-    if (annIndex.rowCount() < annThreshold) annIndex.drop()
+    val chunks = store.read()
+    describing("graft index: FTS rebuild") { ftsIndex.rebuild(chunks) }
+    describing("graft index: ANN refresh") {
+      annIndex.rebuild(chunks, annLists, minRows = annThreshold)
+    }
   }
   private def embedder: Embedder = mkEmbedder()
 
@@ -251,8 +249,8 @@ final class Engine(
       if (graft.ingest.PdfIngest.isPdf(spelled)) {
         import spark.implicits._
         val raw = Seq((spelled, bytes)).toDF("filePath", "content")
-        val docs = graft.ingest.PdfIngest.pdfDocsDF(spark, raw, mkEmbedder)
-          .as[Ingest.Doc].collect()
+        val docs = describing("graft ingest: parse")(
+          graft.ingest.PdfIngest.pdfDocsDF(spark, raw, mkEmbedder).as[Ingest.Doc].collect())
         // one input file → at most one doc row (DriverProbe: a future
         // pdfDocsDF edit that fans out per-page rows fails here, loudly)
         graft.core.DriverProbe.record("ingest_pdf_doc", docs.length, 1L)
@@ -282,7 +280,8 @@ final class Engine(
     // pages ingests caption-only (ref visual.ts builds caption chunks
     // regardless of text-chunk count).
     if (rows.isEmpty) throw new Ingest.NoChunksError(spelled)
-    mutationGuard.synchronized(store.upsertFile(spelled, rows.toDF()))
+    mutationGuard.synchronized(
+      describing("graft store: upsert")(store.upsertFile(spelled, rows.toDF())))
     val title = doc.titleOverride.getOrElse(
       graft.ingest.TitleExtractor.forFile(doc.content, spelled).value)
     IngestResult(spelled, rows.size.toLong, title, ts)
@@ -440,7 +439,7 @@ final class Engine(
     val scopeKeys = scope.map(PathKeys.syncPathKey)
     val excludes = Seq(storePath, rawDataDir)
 
-    val (upserts, prunes, skipped, held) =
+    val (upserts, prunes, skipped, held) = describing("graft sync: gather+plan") {
       if (allFiles.size >= distributedThreshold ||
           store.manifest().limit(distributedThreshold).count() >=
             math.max(1L, distributedThreshold.toLong))
@@ -469,6 +468,7 @@ final class Engine(
           SyncPlanner.Request(scopeKeys, excludes, fileRequest = fileRequest))
         (plan.upserts, plan.prunes, plan.skipped.size.toLong, plan.held.size.toLong)
       }
+    }
 
     // execute under the mutation guard: stale/prune deletes must serialize
     // with concurrent writers just like upserts (reentrant from syncStart)
@@ -487,9 +487,9 @@ final class Engine(
           for (u <- upserts) {
             try { ingestFileNoRefresh(u.path); up += 1 }
             catch { case _: Ingest.NoChunksError => em += 1 }
-            for (stale <- u.staleSpellings) store.deleteFile(stale)
+            describing("graft store: delete")(u.staleSpellings.foreach(store.deleteFile))
           }
-          for (spelling <- pruneSpellings) store.deleteFile(spelling)
+          describing("graft store: delete")(pruneSpellings.foreach(store.deleteFile))
           (up, em)
         }
       // ONE index refresh per batch iff anything mutated (ref: single
@@ -844,8 +844,7 @@ final class Engine(
 
   // ---- remaining tools ----
   def deleteDocument(path: String): Unit = mutationGuard.synchronized {
-    val spelled = PathKeys.storageSpelling(path)
-    store.deleteFile(spelled)
+    describing("graft store: delete")(store.deleteFile(PathKeys.storageSpelling(path)))
     refreshIndexes()
   }
 

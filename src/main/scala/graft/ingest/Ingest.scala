@@ -206,14 +206,29 @@ object Ingest {
     // is the trigger's business — the spread applies to BATCH inputs only
     val cores = docs.sparkSession.sparkContext.defaultParallelism
     val spread =
-      if (!docs.isStreaming &&
-          docs.queryExecution.toRdd.getNumPartitions < cores)
-        docs.repartition(cores)
+      if (!docs.isStreaming && underSplit(docs, cores)) docs.repartition(cores)
       else docs
     spread.mapPartitions { it =>
       val embedder = mkEmbedder()
       it.flatMap(doc => chunkAndCaption(doc, Seq.empty, embedder, timestamp, cfg))
     }
+  }
+
+  /** whether a batch input splits into fewer than `cores` partitions. An
+    * input whose plan has an exchange or a subquery already runs at
+    * `spark.sql.shuffle.partitions` splits, and probing it would execute
+    * those stages once here and again in the caller's action (AQE stages
+    * are not shared across query executions), so it counts as split.
+    * Otherwise the split count is the leaf scans' carried through narrow
+    * operators, which `toRdd` reports without running a job. */
+  private def underSplit(docs: Dataset[_], cores: Int): Boolean = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val staged = docs.queryExecution.executedPlan.exists {
+      case _: Exchange | _: AdaptiveSparkPlanExec => true
+      case p => p.subqueries.nonEmpty
+    }
+    !staged && docs.queryExecution.toRdd.getNumPartitions < cores
   }
 
   /** Visual-mode batched builder: docs carry their page captions

@@ -32,10 +32,11 @@ final class AnnIndexStore(
   private val centroidsPath = path + "/centroids"
 
   /** full rebuild: train the coarse quantizer, assign every vector, swap all
-    * three directories in (stats last). Empty input drops the index — the
-    * query path falls back to the brute-force scan. `nLists` is clamped to
-    * the row count (KMeans cannot seed more centers than points). */
-  def rebuild(rows: DataFrame, nLists: Int, seed: Long = 42L): Unit = {
+    * three directories in (stats last). Below max(2, `minRows`) rows its
+    * one count drops the index before any training — the query path falls
+    * back to the brute-force scan. `nLists` is clamped to the row count
+    * (KMeans cannot seed more centers than points). */
+  def rebuild(rows: DataFrame, nLists: Int, seed: Long = 42L, minRows: Long = 2L): Unit = {
     import spark.implicits._
     // The slim (ids, vector) projection is PERSISTED for the whole train+
     // assign window: KMeans consumes it many times (the distinct-count
@@ -49,11 +50,11 @@ final class AnnIndexStore(
     val src = rows.select(idCols.map(col) :+ col(vecCol): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = src.count()
-      // below 2 vectors there is nothing to quantize (KMeans needs k >= 2)
-      // and nothing an index could beat — the query path's brute-force
-      // fallback covers this regime
-      if (n < 2L) { drop(); return }
+      // one job that fills the cache (Dataset.count under AQE runs three)
+      val n = src.queryExecution.toRdd.count()
+      // KMeans needs k >= 2; below the caller's minimum the query path's
+      // brute-force scan serves, so there is nothing to train
+      if (n < math.max(2L, minRows)) { drop(); return }
       val idx = Similarity.buildIvfCols(src, idCols, vecCol,
         math.min(nLists.toLong, n).toInt, seed, rowCount = Some(n))
       val assigned = idx.assignments.persist()

@@ -264,8 +264,9 @@ final class CleanStateStore(
     // candidates touching the batch, from the stored band table (index
     // probe, batch bands broadcast) — exactly the union LSH pairs that
     // involve a batch doc
+    val indexed = mh.rowCount() > 0L
     val cand =
-      if (mh.rowCount() > 0L)
+      if (indexed)
         mh.deltaCandidates(exactNew.select(col(idCol), col(textCol)), textCol)
       else Dedup.lshCandidatePairs(
         Dedup.lshBands(
@@ -340,6 +341,9 @@ final class CleanStateStore(
       // nearNew is a localCheckpoint — its blocks live on the RDD, not in
       // the CacheManager (df.unpersist would be a silent no-op)
       Dedup.checkpointRdd(nearNew).foreach(_.unpersist(blocking = true))
+      // so is deltaCandidates' pair set; the unindexed arm's pairs are a
+      // plain plan, whose leaves must not be unpersisted
+      if (indexed) Dedup.checkpointRdd(cand).foreach(_.unpersist(blocking = true))
       batchHoldSh.unpersist(blocking = true)
       bexpl.unpersist(blocking = true)
       finalNew.unpersist(blocking = true)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -230,11 +232,13 @@ class DeltaPipelineSpec extends AnyFunSuite {
   }
 
   test("absorb releases its checkpoint snapshots on success and on a phase-1 failure") {
-    // absorb snapshots its frames with localCheckpoint; those blocks live
-    // on the checkpointed RDDs, so only an RDD-level unpersist frees them.
-    // RDD ids are monotonic per context (SoakSpec's floor idiom): after
-    // absorb and the result's own release, no RDD created from the floor
-    // on may still be persisted.
+    // absorb snapshots its frames with localCheckpoint, and applyBatch
+    // checkpoints its near-dup survivors and (over a non-empty minhash
+    // index) deltaCandidates' pair set; those blocks live on the
+    // checkpointed RDDs, so only an RDD-level unpersist frees them. RDD ids
+    // are monotonic per context (SoakSpec's floor idiom): after
+    // applyBatchReleasable, absorb and the result's own release, no RDD
+    // created from the floor on may still be persisted.
     val hold = col("doc_id").isin(5L)
     val stored = df(Seq(
       1L -> words("alpha"),
@@ -243,8 +247,12 @@ class DeltaPipelineSpec extends AnyFunSuite {
     val batch = df(Seq(
       201L -> words("zeta"),
       202L -> (words("beta") + " tail"))) // near-dup of stored 2
-    val st = new CleanStateStore(spark, tmpDir("delta-blocks"))
+    val dir = tmpDir("delta-blocks")
+    val st = new CleanStateStore(spark, dir)
     st.rebuild(stored, hold)
+    // the stored survivors seed the minhash index, so applyBatch probes it
+    // through deltaCandidates
+    assert(Files.exists(Paths.get(dir, "mh", "stats")))
     def floor(): Int = spark.sparkContext.parallelize(Seq(0), 1).id
     def persistedSince(f: Int): Seq[Int] =
       spark.sparkContext.getPersistentRDDs.keys.filter(_ >= f).toSeq.sorted
@@ -256,8 +264,8 @@ class DeltaPipelineSpec extends AnyFunSuite {
       true
     }
     val countsBefore = st.stageCounts()
-    val (r1, release1) = st.applyBatchReleasable(batch, stored.union(batch), hold)
     val f1 = floor()
+    val (r1, release1) = st.applyBatchReleasable(batch, stored.union(batch), hold)
     val err = intercept[Exception] {
       st.absorb(r1.copy(batchSource = r1.batchSource.filter(boom(col("doc_id")))))
     }
@@ -269,8 +277,8 @@ class DeltaPipelineSpec extends AnyFunSuite {
     assert(st.stageCounts() === countsBefore, "a phase-1 failure must not write state")
 
     // success
-    val (r2, release2) = st.applyBatchReleasable(batch, stored.union(batch), hold)
     val f2 = floor()
+    val (r2, release2) = st.applyBatchReleasable(batch, stored.union(batch), hold)
     st.absorb(r2)
     release2()
     assert(persistedSince(f2).isEmpty,

@@ -459,22 +459,8 @@ class EngineSpec extends AnyFunSuite {
       Files.createTempDirectory("bsync-sb").toString + "/chunks", Seq(rootB))
 
     def countJobs(body: => Engine#SyncSummary): (Engine#SyncSummary, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val s = body
-        val before = jobs.get()
-        spark.sparkContext.parallelize(1 to 2, 1).count() // flush sentinel
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (jobs.get() <= before && System.nanoTime() < deadline) Thread.sleep(20)
-        (s, jobs.get() - 1) // minus the sentinel
-      } finally spark.sparkContext.removeSparkListener(l)
+      val (s, descs) = jobDescriptions(body)
+      (s, descs.size)
     }
 
     val (loopSummary, loopJobs) =
@@ -657,6 +643,103 @@ class EngineSpec extends AnyFunSuite {
     assert(expected.size === 5)
     assert(expected.forall(_._1.startsWith(s"$root/far/")))
     assert(rows(annEngine) === expected)
+  }
+
+  /** `body`'s Spark jobs, as the job description each ran under (null when
+    * none), counted by a listener; a sentinel job flushes the listener bus
+    * before the list is read */
+  private def jobDescriptions[A](body: => A): (A, Seq[String]) = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        descs.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description")))): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      val before = descs.size
+      spark.sparkContext.parallelize(1 to 2, 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (descs.size <= before && System.nanoTime() < deadline) Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      (out, descs.asScala.toSeq.dropRight(1).map(_.orNull)) // minus the sentinel
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("ANN threshold crossing: below it a refresh trains nothing; every mutation job is described") {
+    val root = Files.createTempDirectory("annx-root").toString
+    val store = Files.createTempDirectory("annx-store").toString + "/chunks"
+    for (i <- 0 until 6)
+      write(s"$root/doc$i.md", s"# Doc $i\n" + s"spark shuffle partitions executors $i. " * 5)
+    val brute = new Engine(spark, store, Seq(root), annThreshold = Long.MaxValue)
+    assert(brute.sync().upserted === 6)
+    val base = brute.status()._1
+    // the threshold sits just above the store: one more chunk stays below
+    // it, a second crosses it. annProbes = annLists makes the probe
+    // exhaustive, so the IVF route must return the exact rows.
+    val engine = new Engine(spark, store, Seq(root),
+      annLists = 4, annProbes = 4, annThreshold = base + 2)
+    val annDir = Paths.get(store + "-ann")
+    val ann = "graft index: ANN refresh"
+    def rows(e: Engine) =
+      e.queryDocuments("spark shuffle partitions", limit = 10)
+        .select("filePath", "chunkIndex", "score", "boosted").collect().toSeq
+        .map(r => (r.getString(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
+
+    // below: the refresh's one count drops the index, no KMeans runs
+    write(s"$root/tiny.md", "Volcano geology studies magma chambers erupting basalt.")
+    val (tiny, belowJobs) = jobDescriptions(engine.ingestFile(s"$root/tiny.md"))
+    assert(tiny.chunkCount === 1L && engine.status()._1 === base + 1)
+    assert(belowJobs.count(_ == ann) <= 1, belowJobs.mkString(", "))
+    assert(!Files.exists(annDir))
+    assert(belowJobs.forall(d => d != null && d.startsWith("graft ")),
+      s"undescribed ingestFile jobs: ${belowJobs.mkString(", ")}")
+
+    // crossing: the same refresh trains and persists the index, and an
+    // unscoped query reads its assignments
+    write(s"$root/cross.md",
+      "# Cross\nBasalt magma chambers feed the volcano beneath the crater rim every spring.")
+    engine.ingestFile(s"$root/cross.md")
+    assert(engine.status()._1 >= base + 2)
+    assert(engine.annIndex.exists)
+    assert(engine.annIndex.rowCount() === engine.status()._1)
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = scanned.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    val ivfRows =
+      try jobDescriptions(rows(engine))._1 // the sentinel flushes the listener bus
+      finally spark.listenerManager.unregister(qel)
+    import scala.jdk.CollectionConverters._
+    assert(scanned.asScala.exists(_.contains("-ann/assignments")),
+      "an unscoped query above the threshold must take the IVF route")
+    assert(ivfRows === rows(brute))
+
+    // back below: deleteDocument drops the index, queries brute-force
+    val (_, deleteJobs) = jobDescriptions(engine.deleteDocument(s"$root/cross.md"))
+    assert(engine.status()._1 === base + 1)
+    assert(deleteJobs.count(_ == ann) <= 1, deleteJobs.mkString(", "))
+    assert(!Files.exists(annDir))
+    assert(deleteJobs.forall(d => d != null && d.startsWith("graft ")),
+      s"undescribed deleteDocument jobs: ${deleteJobs.mkString(", ")}")
+    assert(rows(engine) === rows(brute))
+
+    // a per-file sync (one edit, one prune) describes every job too
+    write(s"$root/doc0.md",
+      "# Doc 0\nRewritten: granite and obsidian rocks cool from lava flows near the summit.")
+    Files.delete(Paths.get(s"$root/doc1.md"))
+    Files.delete(Paths.get(s"$root/cross.md"))
+    val (summary, syncJobs) = jobDescriptions(engine.sync())
+    assert(summary.upserted === 1L && summary.pruned === 1L)
+    assert(syncJobs.forall(d => d != null && d.startsWith("graft ")),
+      s"undescribed sync jobs: ${syncJobs.mkString(", ")}")
+    assert(syncJobs.count(_ == ann) <= 1)
   }
 
   test("optimize sweeps stale swap debris beside the chunk table and both index roots") {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, collect_list, concat_ws, lit}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,6 +42,51 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, Int, String, String)].collect().sortBy(r => (r._1, r._2))
     assert(streamed.nonEmpty)
     assert(streamed.toSeq === batch.toSeq)
+  }
+
+  test("buildChunks runs a shuffle-bearing input's exchange once; an under-split scan still spreads") {
+    // the split-count probe must not execute the input's stages ahead of
+    // the real run: a grouped input's exchange writes shuffle data once
+    val parts = Seq(
+      ("/s/a.md", "Apache Spark processes data with distributed operators across many executors."),
+      ("/s/a.md", "It supports joins windows and aggregates over large datasets."),
+      ("/s/b.txt", "Cooking pasta requires boiling water with salt until al dente."))
+    val grouped = parts.toDF("filePath", "content")
+      .groupBy("filePath")
+      .agg(concat_ws(" ", collect_list("content")).as("content"))
+      .select(col("filePath"), col("content"), lit(null).cast("string").as("rawHash"),
+        lit(null).cast("string").as("titleOverride"))
+      .as[Ingest.Doc]
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet(): Unit
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    val rows =
+      try {
+        val out = Ingest.buildChunks(grouped, () => new HashedEmbedder(64), "2026-01-01T00:00:00Z")
+          .select("filePath", "chunkIndex").as[(String, Int)].collect()
+        // a sentinel job flushes the listener bus past every earlier event
+        val before = jobs.get()
+        spark.sparkContext.parallelize(1 to 2, 1).count()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (jobs.get() <= before && System.nanoTime() < deadline) Thread.sleep(20)
+        out
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(rows.map(_._1).toSet === Set("/s/a.md", "/s/b.txt"))
+    assert(shuffleStages.get() === 1, s"${shuffleStages.get()} shuffle-writing stages")
+
+    // a one-split local input (no exchange) is still spread over the cores
+    val oneSplit = Seq(Ingest.Doc("/s/c.md", "Short single document.")).toDS()
+    val spread = Ingest.buildChunks(oneSplit, () => new HashedEmbedder(64), "2026-01-01T00:00:00Z")
+    assert(spread.queryExecution.executedPlan.toString.contains(
+      s"RoundRobinPartitioning(${spark.sparkContext.defaultParallelism})"))
   }
 
   test("windowed counts with watermark over event-time") {
