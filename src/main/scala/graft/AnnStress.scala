@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.TaskMetricsCollector
+import graft.core.{GraftSession, Profile}
 
 /** ANN index-BUILD stress: the one scale-relevant family without an
   * adversarial row through round 12 (VERDICT r12 ask #2). Times the
@@ -30,21 +29,7 @@ object AnnStress {
     val workDir = args(1)
     val factors = (if (args.length > 2) args(2) else "100,1000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
-
-    val collector = new TaskMetricsCollector
-    spark.sparkContext.addSparkListener(collector)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // SPARK_GRAFT_ANN_PERTURB=1: displace each copy's first component by
     // (vec_id % 997) · 1e-5 — every inflated vector becomes DISTINCT, so
@@ -84,14 +69,8 @@ object AnnStress {
       val st = new graft.store.AnnIndexStore(spark, dir, Seq("vec_id"), "embedding")
 
       // ---- timed: full rebuild (train + assign + partitioned write) ----
-      collector.reset()
-      val t0 = System.nanoTime()
-      st.rebuild(emb, nLists)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // async listener bus drain (ScaleStress gotcha)
-      val (bSpillMax, bSpillTot, bShuf, bTasks) =
-        (collector.maxTaskSpill, collector.totalSpill,
-          collector.shuffleWrite, collector.tasks)
+      val (_, build) = Profile.window(spark.sparkContext)(st.rebuild(emb, nLists))
+      val buildSec = build.wallSec
 
       // the ONLY driver materialization contract: k×dim centroids, nothing
       // else — KMeans' clamp may train fewer lists than asked only when the
@@ -111,7 +90,6 @@ object AnnStress {
       val k = 10
       val nProbe = 8
       var recallSum = 0.0
-      collector.reset()
       val tp0 = System.nanoTime()
       val probed = queryIds.map { qid =>
         qid -> st.probe(qVecs(qid), nProbe, k)
@@ -129,14 +107,16 @@ object AnnStress {
       require(recall >= 0.95, s"recall gate FAILED at x$factor: $recall")
 
       System.err.println(f"[ann-stress] x$factor n=$n nLists=${cents.length} " +
-        f"build=$buildSec%.1fs (shuf ${bShuf / 1e6}%.1fMB spill ${bSpillTot / 1e6}%.1fMB " +
-        f"maxTask ${bSpillMax / 1e6}%.1fMB tasks $bTasks) " +
+        f"build=$buildSec%.1fs (shuf ${build.shuffleWrite / 1e6}%.1fMB " +
+        f"spill ${build.totalSpill / 1e6}%.1fMB maxTask ${build.maxTaskSpill / 1e6}%.1fMB " +
+        f"tasks ${build.tasks.size} jobs ${build.jobs.size} gap ${build.driverGapMs} ms) " +
         f"probe5=$probeSec%.2fs recall@$k=$recall%.3f")
       f"""  "x$factor": {"n_vectors": $n, "n_lists": ${cents.length}, """ +
-        f""""build_sec": $buildSec%.3f, "build_shuffle_write": $bShuf, """ +
-        f""""build_total_spill": $bSpillTot, "build_max_task_spill": $bSpillMax, """ +
-        f""""build_tasks": $bTasks, "probe5_sec": $probeSec%.3f, """ +
-        f""""recall_at_$k": $recall%.4f, "driver_materialized_rows": ${cents.length}}"""
+        f""""build_sec": $buildSec%.3f, "build_shuffle_write": ${build.shuffleWrite}, """ +
+        f""""build_total_spill": ${build.totalSpill}, "build_max_task_spill": ${build.maxTaskSpill}, """ +
+        f""""build_tasks": ${build.tasks.size}, "probe5_sec": $probeSec%.3f, """ +
+        f""""recall_at_$k": $recall%.4f, "driver_materialized_rows": ${cents.length}, """ +
+        f""""build_profile": ${build.json}}"""
     }
     println(rows.mkString(s"""{"base": "$baseDir",\n""", ",\n", "\n}"))
     spark.stop()

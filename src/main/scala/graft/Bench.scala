@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{GraftSession, Profile}
 import graft.queries.Registry
 
 /** Benchmark main: runs the headline queries (Registry entries flagged
@@ -8,26 +8,18 @@ import graft.queries.Registry
   * line. Results are fully materialized via a noop-format write so column
   * pruning can't skip the interesting work (a bare count() would let Catalyst
   * drop every projection).
+  *
+  * Each timed pass runs inside a [[Profile]] window: the passes line carries
+  * the pass's Spark job count and driver gap next to its wall, and every
+  * job of every timed pass (start offset, duration, description or call
+  * site) goes to stderr. `SPARK_GRAFT_BENCH_ONLY=<q>` plus
+  * `SPARK_GRAFT_BENCH_PASSES` is the per-query profiling command.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // external bucketed tables carry their own path; this only keeps the
-      // (otherwise empty) default warehouse dir out of the repo checkout
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
 
     val headline = {
       val flagged = Registry.all.filter(_.bench)
@@ -50,10 +42,15 @@ object Bench {
     // CacheManager never tracks — left alone they accumulate over the warm
     // pass and squeeze execution memory for the first timed queries), so
     // each timed query does ALL its data work from a clean BlockManager.
-    headline.foreach { q =>
-      try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      graft.core.GraftSession.releaseAllBlocks(spark)
+    // its wall per query is reported (`warm_sec`) but never totalled
+    val warm = headline.map { q =>
+      val t0 = System.nanoTime()
+      val sec =
+        try { q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+              (System.nanoTime() - t0) / 1e9 }
+        catch { case _: Throwable => -1.0 }
+      GraftSession.releaseAllBlocks(spark)
+      q.name -> sec
     }
     // Three timed passes per query, reported as the per-query MEDIAN: a
     // single timed pass absorbs host noise (GC pauses, co-tenant I/O) as 2-6x
@@ -69,28 +66,29 @@ object Bench {
     // 2.3s->72.3s with no code change) and each time a judge had to re-run
     // queries idle to tell noise from regression. With steal_pct next to every
     // wall the artifact adjudicates itself: high wall + high steal = host
-    // noise, high wall + ~0 steal = look at the code. Zero extra Spark jobs.
+    // noise, high wall + ~0 steal = look at the code. The sample costs no
+    // Spark job; the Profile window's two sentinel jobs run outside the
+    // timed region.
     // iowait% rides next to steal% since r18: the r17 driver artifact had
     // t_pack_sequences at 7.7x its floor with steal≈0 on every pass — a
     // noise class (co-tenant disk I/O) the steal column cannot see. With
     // both shares in the artifact a slow wall adjudicates itself: high
     // steal OR high iowait = host noise, both ~0 = look at the code.
     val results = headline.map { q =>
-      val timed = (1 to passes).map { _ =>
-        val s0 = graft.core.StealSampler.snapshotIo()
-        val t0 = System.nanoTime()
-        // a failed query reports -1, not its time-to-crash, and is excluded
-        // from the total — a fast failure must not look like a fast query
-        val elapsed =
+      val timed = (1 to passes).map { i =>
+        val (elapsed, rec) = Profile.window(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          // a failed query reports -1, not its time-to-crash, and is excluded
+          // from the total — a fast failure must not look like a fast query
           try { q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
                 (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => -1.0 }
-        val (steal, iowait) =
-          graft.core.StealSampler.pctIo(s0, graft.core.StealSampler.snapshotIo())
-        graft.core.GraftSession.releaseAllBlocks(spark)
-        (elapsed, steal, iowait)
+        }
+        GraftSession.releaseAllBlocks(spark)
+        rec.jobLines.foreach(l => System.err.println(s"[bench] ${q.name} pass $i $l"))
+        (elapsed, rec)
       }
-      (q.name, timed.map(_._1), timed.map(_._2), timed.map(_._3))
+      (q.name, timed)
     }
     def median(ts: Seq[Double]): Double = {
       val ok = ts.filter(_ >= 0).sorted
@@ -102,25 +100,21 @@ object Bench {
     // comma-decimal locales — invalid JSON
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val qs = results.map { case (k, ts, _, _) => "\"" + k + "\":" + fmt(median(ts)) }
+    def perPass(v: ((Double, Profile.Record)) => String): String = results.map {
+      case (k, ps) => "\"" + k + "\":" + ps.map(v).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val medians = results.map { case (k, ps) => k -> median(ps.map(_._1)) }
+    val qs = medians.map { case (k, m) => "\"" + k + "\":" + fmt(m) }.mkString("{", ",", "}")
+    val warmRaw = warm.map { case (k, sec) => "\"" + k + "\":" + fmt(sec) }
       .mkString("{", ",", "}")
-    val raw = results.map { case (k, ts, _, _) =>
-      "\"" + k + "\":" + ts.map(fmt).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val stealRaw = results.map { case (k, _, ss, _) =>
-      "\"" + k + "\":" + ss.map(fmt).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val iowaitRaw = results.map { case (k, _, _, ws) =>
-      "\"" + k + "\":" + ws.map(fmt).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = results.map { case (_, ts, _, _) => median(ts) }.filter(_ >= 0).sum
+    val total = medians.map(_._2).filter(_ >= 0).sum
     // run-level steal summary for the compact line: max and median across all
     // per-pass samples, so a truncated-tail consumer can still tell a clean
     // run (steal_max ~0) from a contaminated one without the passes line
-    val allSteals = results.flatMap(_._3).filter(_ >= 0)
+    val allSteals = results.flatMap(_._2.map(_._2.stealPct)).filter(_ >= 0)
     val stealMax = if (allSteals.isEmpty) -1.0 else allSteals.max
     val stealMed = median(allSteals)
-    val allIo = results.flatMap(_._4).filter(_ >= 0)
+    val allIo = results.flatMap(_._2.map(_._2.iowaitPct)).filter(_ >= 0)
     val ioMax = if (allIo.isEmpty) -1.0 else allIo.max
     val ioMed = median(allIo)
     // Two lines, raw passes FIRST and the parsed medians LAST: the round
@@ -132,8 +126,12 @@ object Bench {
     // is machine-readable again; the full per-pass arrays stay one line up
     // for outlier-vs-uniform-slowdown diagnosis (and in PERF.md).
     val passesLine =
-      s"""{"metric":"passes","passes":$raw,"steal_pct":$stealRaw,""" +
-        s""""iowait_pct":$iowaitRaw,"sf":"$sfDir"}"""
+      s"""{"metric":"passes","passes":${perPass(p => fmt(p._1))},""" +
+        s""""steal_pct":${perPass(p => fmt(p._2.stealPct))},""" +
+        s""""iowait_pct":${perPass(p => fmt(p._2.iowaitPct))},""" +
+        s""""jobs":${perPass(_._2.jobs.size.toString)},""" +
+        s""""driver_gap_ms":${perPass(_._2.driverGapMs.toString)},""" +
+        s""""warm_sec":$warmRaw,"sf":"$sfDir"}"""
     println(passesLine)
     val totalLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** BPE trainer throughput main: times [[graft.ops.Bpe.learnBatched]] at a
   * production-shaped merge count for several batch widths K on the same
@@ -27,18 +27,7 @@ object BpeThroughput {
     val ks = if (args.length > 2) args(2).split(",").map(_.trim.toInt).toSeq
              else Seq(1, 64)
     val ckptEvery = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     import org.apache.spark.sql.functions._
     val docs = graft.core.Tables.documents(spark, sfDir)
@@ -49,7 +38,7 @@ object BpeThroughput {
 
     def r2(x: Double): Double = math.round(x * 100) / 100.0
     val rows = ks.map { k =>
-      graft.core.GraftSession.releaseAllBlocks(spark)
+      GraftSession.releaseAllBlocks(spark)
       docs.persist(); docs.count() // re-pin the corpus the release dropped
       val t0 = System.nanoTime()
       val merges = graft.ops.Bpe.learnBatched(docs, "text", numMerges,

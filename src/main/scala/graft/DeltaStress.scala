@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{StealSampler, TaskMetricsCollector}
+import graft.core.{GraftSession, Profile}
 import graft.store.CleanStateStore
 
 /** Does d_delta_pipeline's cost follow the BATCH or the accumulated state?
@@ -35,16 +35,8 @@ object DeltaStress {
     val baseDir = args(0)
     val workDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.GraftSession.quietNoisyLoggers()
 
     val permute = udf { (text: String, salt: Long) =>
       val ws = text.split("\\s+")
@@ -83,21 +75,14 @@ object DeltaStress {
       .withColumn("doc_id", col("doc_id") + lit(100000000L))
     val hold = col("doc_id") % 97 === 0
 
-    val collector = new TaskMetricsCollector
-    spark.sparkContext.addSparkListener(collector)
     def timed(name: String)(body: => Unit): Unit = {
       for (i <- 1 to 3) {
-        graft.core.GraftSession.releaseAllBlocks(spark)
-        collector.reset()
-        val s0 = StealSampler.snapshot()
-        val t0 = System.nanoTime()
-        body
-        val sec = (System.nanoTime() - t0) / 1e9
-        val steal = StealSampler.pct(s0, StealSampler.snapshot())
-        Thread.sleep(300) // listener bus drain
-        println(f"$name run$i wall=$sec%.2fs steal=$steal%.1f%% " +
-          f"shufW=${collector.shuffleWrite / 1e6}%.1fMB " +
-          f"spill=${collector.totalSpill / 1e6}%.1fMB tasks=${collector.tasks}")
+        GraftSession.releaseAllBlocks(spark)
+        val (_, r) = Profile.window(spark.sparkContext)(body)
+        println(f"$name run$i wall=${r.wallSec}%.2fs steal=${r.stealPct}%.1f%% " +
+          f"shufW=${r.shuffleWrite / 1e6}%.1fMB " +
+          f"spill=${r.totalSpill / 1e6}%.1fMB tasks=${r.tasks.size} " +
+          f"jobs=${r.jobs.size} gap=${r.driverGapMs}ms")
       }
     }
 

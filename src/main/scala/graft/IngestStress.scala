@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.core.{DriverProbe, GraftSession, Profile}
 
 /** TEXT-leg ingest stress — the RasterStress twin for the flagship WRITE
   * path (r15 VERDICT ask #1): parse → sentence split → Max-Min chunker →
@@ -13,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * ZIP+XML through the S7 parser), pdf (4%, text-object PDFs through the
   * S6 byte parser) — then runs `Engine.sync()` against a FRESH store and
   * reports:
-  *   - wall + per-task executor-time distribution (p50/p95/max) + parallel
-  *     efficiency for the cold full-corpus sync (plan → batched ingest →
+  *   - the cold full-corpus sync's [[graft.core.Profile]] record: wall,
+  *     jobs, driver gap, per-task executor-time distribution (p50/p95/max)
+  *     and parallel efficiency (plan → batched ingest →
   *     FTS + ANN index refresh — everything the engine actually does);
   *   - the warm re-sync wall (all skips: gather + distributed plan only);
   *   - `DriverProbe.maxRows` — every sync driver fetch is runtime-asserted
@@ -23,68 +23,11 @@ import org.apache.spark.sql.SparkSession
   *
   *   tools/run.sh graft.IngestStress <workDir> [numDocs=50000]
   *
-  * Scan-packing: staged files are 0.5–3 KB, so the session pins
+  * Scan-packing: staged files are 0.5–3 KB, so the session sets
   * openCostInBytes=64KB / maxPartitionBytes=8MB (the RasterStress knobs) —
   * ~50k files pack into a few hundred real tasks, the same knob a 100 TB
   * crawl ingest tunes. */
 object IngestStress {
-
-  private final class TaskTimes extends SparkListener {
-    val runMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    /** (ms, stageId) for straggler attribution */
-    val tagged =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
-    val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        runMs.add(m.executorRunTime): Unit
-        tagged.add((m.executorRunTime, t.stageId)): Unit
-      }
-    }
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stageNames.put(s.stageInfo.stageId,
-        s.stageInfo.name.linesIterator.next().take(100)): Unit
-    }
-    /** (jobId, description/callsite, wallMs) for phase attribution */
-    val jobs =
-      new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long)]()
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val desc = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .orElse(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))))
-        .getOrElse("?")
-      jobs.put(j.jobId, (desc.take(100), j.time, -1L)): Unit
-    }
-    override def onJobEnd(
-        j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val e = jobs.get(j.jobId)
-      if (e != null) jobs.put(j.jobId, (e._1, e._2, j.time)): Unit
-    }
-    /** top-N jobs by wall */
-    def topJobs(n: Int): Seq[(Long, Int, String)] = {
-      import scala.jdk.CollectionConverters._
-      jobs.asScala.toSeq.collect {
-        case (id, (desc, s, e)) if e > 0 => (e - s, id, desc)
-      }.sortBy(-_._1).take(n)
-    }
-    def reset(): Unit = { runMs.clear(); tagged.clear() }
-    def snapshot(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      runMs.iterator().asScala.map(_.longValue()).toSeq.sorted
-    }
-    /** top-N slowest tasks with their stage names */
-    def top(n: Int): Seq[(Long, String)] = {
-      import scala.jdk.CollectionConverters._
-      tagged.iterator().asScala.toSeq.sortBy(-_._1).take(n)
-        .map { case (ms, sid) =>
-          (ms, s"stage $sid: ${stageNames.getOrDefault(sid, "?")}") }
-    }
-  }
 
   /** deterministic pseudo-prose for one doc id: seeded word stream over a
     * fixed vocabulary, sentence-cased with periods so the sentence splitter
@@ -133,17 +76,9 @@ object IngestStress {
     val workDir = args(0)
     val numDocs = if (args.length > 1) args(1).toInt else 50000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val spark = GraftSession.local(cpus.toInt)
+    spark.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
 
     // ---- stage: N mixed files, written DISTRIBUTED (the RasterStress
     // pattern — each task materializes its id range; ~1000 files per
@@ -179,12 +114,10 @@ object IngestStress {
     }
     if (storeDir.exists()) rmTree(storeDir)
 
-    val listener = new TaskTimes
-    spark.sparkContext.addSparkListener(listener)
-    graft.core.DriverProbe.reset()
+    DriverProbe.reset()
     val probeSites =
       new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    graft.core.DriverProbe.hook = (site, rows, bound) => {
+    DriverProbe.hook = (site, rows, bound) => {
       probeSites.merge(site, (rows, bound),
         (a: (Long, Long), b: (Long, Long)) => if (a._1 >= b._1) a else b)
       ()
@@ -197,53 +130,32 @@ object IngestStress {
     // the timed DAG: the engine's real sync — distributed gather+plan,
     // ONE batched binaryFile → parse → chunk → embed → store overwrite,
     // then the per-batch FTS + ANN index refresh
-    listener.reset()
-    val t1 = System.nanoTime()
-    val summary = engine.sync()
-    val wall = (System.nanoTime() - t1) / 1e9
-    Thread.sleep(500) // async listener bus: let queued task-ends land
-    val times = listener.snapshot()
-    val slowTasks = listener.top(5)
-    val slowJobs = listener.topJobs(10)
-    val sumJobMs = listener.topJobs(100000).map(_._1).sum
+    val (summary, cold) = Profile.window(spark.sparkContext)(engine.sync())
 
     // warm re-sync: nothing dirty — gather + plan only, all skips
-    listener.reset()
-    val t2 = System.nanoTime()
-    val re = engine.sync()
-    val rewall = (System.nanoTime() - t2) / 1e9
+    val (re, warm) = Profile.window(spark.sparkContext)(engine.sync())
 
-    def pct(p: Double): Long =
-      if (times.isEmpty) 0L
-      else times(math.min(times.size - 1, (p * times.size).toInt))
-    val sumTaskSec = times.sum / 1e3
-    val eff = if (times.isEmpty) 0.0 else sumTaskSec / (wall * cpus.toInt)
     System.err.println(
       f"[ingest-stress] docs=$numDocs upserted=${summary.upserted} " +
-      f"empty=${summary.empty} wall=$wall%.1fs resync=$rewall%.1fs " +
-      f"(skipped=${re.skipped}) tasks=${times.size} " +
-      f"taskMs p50=${pct(0.5)} p95=${pct(0.95)} max=${times.lastOption.getOrElse(0L)} " +
-      f"sumTask=$sumTaskSec%.1fs parallelEff=$eff%.2f " +
-      f"driverProbeMaxRows=${graft.core.DriverProbe.maxRows}")
+      f"empty=${summary.empty} wall=${cold.wallSec}%.1fs resync=${warm.wallSec}%.1fs " +
+      f"(skipped=${re.skipped}) jobs=${cold.jobs.size} tasks=${cold.tasks.size} " +
+      f"taskMs p50=${cold.taskMsPct(0.5)} p95=${cold.taskMsPct(0.95)} " +
+      f"max=${cold.taskMsPct(1.0)} sumTask=${cold.sumTaskSec}%.1fs " +
+      f"parallelEff=${cold.parallelEfficiency}%.2f driverGap=${cold.driverGapMs} ms " +
+      f"driverProbeMaxRows=${DriverProbe.maxRows}")
     probeSites.forEach((site, rb) => System.err.println(
       f"[ingest-stress]   probe site=$site%-22s maxRows=${rb._1}%8d bound=${rb._2}"))
-    slowTasks.foreach { case (ms, st) =>
-      System.err.println(f"[ingest-stress]   slow task ${ms}%6d ms  $st")
-    }
-    System.err.println(f"[ingest-stress]   sum job wall=${sumJobMs / 1e3}%.1fs " +
-      f"(driver-only gap=${wall - sumJobMs / 1e3}%.1fs of $wall%.1fs)")
-    slowJobs.foreach { case (ms, id, desc) =>
-      System.err.println(f"[ingest-stress]   slow job  ${ms}%6d ms  job $id: $desc")
-    }
-    graft.core.DriverProbe.hook = null
+    cold.jobs.filter(_.endMs >= 0).sortBy(j => j.startMs - j.endMs).take(10)
+      .foreach { j =>
+        System.err.println(f"[ingest-stress]   slow job ${j.endMs - j.startMs}%6d ms  " +
+          f"job ${j.id}: ${j.label}")
+      }
+    DriverProbe.hook = null
     println(
       f"""{"metric":"text_ingest","docs":$numDocs,"upserted":${summary.upserted},""" +
-      f""""empty":${summary.empty},"wall_sec":$wall%.2f,"resync_sec":$rewall%.2f,""" +
-      f""""stage_sec":$stageSec%.2f,"tasks":${times.size},""" +
-      f""""task_ms_p50":${pct(0.5)},"task_ms_p95":${pct(0.95)},""" +
-      f""""task_ms_max":${times.lastOption.getOrElse(0L)},""" +
-      f""""sum_task_sec":$sumTaskSec%.2f,"parallel_efficiency":$eff%.3f,""" +
-      f""""driver_probe_max_rows":${graft.core.DriverProbe.maxRows}}""")
+      f""""empty":${summary.empty},"resync_sec":${warm.wallSec}%.2f,""" +
+      f""""stage_sec":$stageSec%.2f,"driver_probe_max_rows":${DriverProbe.maxRows},""" +
+      s"""${cold.fields}}""")
     spark.stop()
   }
 }

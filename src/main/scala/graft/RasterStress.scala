@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.{GraftSession, Profile}
 
 /** S6 raster-leg ingest stress: stages N fixture PDFs (the s6 14-class
   * codec rotation — raw/Flate/predictor/DCT/CCITT/JBIG2 generic/symbol/
@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * as real files on disk, then times the engine's actual ingest DAG — a
   * distributed `binaryFile` scan feeding [[graft.ingest.PdfImages.extract]]
   * (the same scan shape `Engine.syncBatch` uses for PDF paths) — and
-  * reports the per-task time distribution.
+  * reports its [[graft.core.Profile]] record: the per-task time
+  * distribution is the skew evidence — a driver bottleneck or a hot class
+  * would show as one outlier task or as wall ≫ Σtask/cores.
   *
   * What this proves (the claim the dedup 100× rows don't cover): the
   * raster codecs are per-doc CPU INSIDE executor tasks — no driver-side
@@ -21,43 +23,19 @@ import org.apache.spark.sql.functions._
   *
   * Scan-packing knobs: fixture PDFs are ~1-3 KB, so the default 4 MB
   * openCostInBytes would synthesize thousands of near-empty splits; the
-  * session pins openCostInBytes=64KB / maxPartitionBytes=8MB so ~50k files
+  * session sets openCostInBytes=64KB / maxPartitionBytes=8MB so ~50k files
   * pack into a few hundred real tasks (each decoding ~100+ docs across the
   * whole class rotation) — the same knob a 100 TB crawl ingest tunes.
   */
 object RasterStress {
 
-  /** per-task executor run times (ms) for the timed job, via the listener
-    * bus — the skew evidence: a driver bottleneck or a hot class would
-    * show as one outlier task or as wall ≫ Σtask/cores */
-  private final class TaskTimes extends SparkListener {
-    val runMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) runMs.add(m.executorRunTime): Unit
-    }
-    def reset(): Unit = runMs.clear()
-    def snapshot(): Seq[Long] = {
-      import scala.jdk.CollectionConverters._
-      runMs.iterator().asScala.map(_.longValue()).toSeq.sorted
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val workDir = args(0)
     val numDocs = if (args.length > 1) args(1).toInt else 50000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val spark = GraftSession.local(cpus.toInt)
+    spark.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
 
     // ---- stage: N fixture PDFs as real files, written DISTRIBUTED (each
     // task materializes its id range; ~1000 files per subdir keeps the
@@ -85,9 +63,6 @@ object RasterStress {
       System.err.println(f"[raster-stress] staged $numDocs PDFs in $stageSec%.1fs")
     }
 
-    val listener = new TaskTimes
-    spark.sparkContext.addSparkListener(listener)
-
     // the timed DAG: binaryFile scan → per-file decode of every embedded
     // image → ONE global aggregate (forces full decode of every pixel
     // stream; sum_luma is the checksum the s6 oracle pins per doc)
@@ -110,33 +85,22 @@ object RasterStress {
 
     // untimed warm pass (codegen + listing), then the timed steady state
     ingest().write.format("noop").mode("overwrite").save()
-    listener.reset()
-    val t1 = System.nanoTime()
-    val byCodec = ingest().collect().sortBy(_.getString(0))
-    val wall = (System.nanoTime() - t1) / 1e9
-    Thread.sleep(500) // async listener bus: let queued task-ends land
-    val times = listener.snapshot()
-    def pct(p: Double): Long =
-      if (times.isEmpty) 0L else times(math.min(times.size - 1,
-        (p * times.size).toInt))
-    val sumTaskSec = times.sum / 1e3
+    val (rows, prof) = Profile.window(spark.sparkContext)(ingest().collect())
+    val byCodec = rows.sortBy(_.getString(0))
     val nImages = byCodec.map(_.getLong(1)).sum
     val sumLuma = byCodec.map(_.getLong(3)).sum
-    val eff = sumTaskSec / (wall * cpus.toInt)
     System.err.println(
-      f"[raster-stress] docs=$numDocs images=$nImages wall=$wall%.1fs " +
-      f"tasks=${times.size} taskMs min=${times.headOption.getOrElse(0L)} " +
-      f"p50=${pct(0.5)} p95=${pct(0.95)} max=${times.lastOption.getOrElse(0L)} " +
-      f"sumTask=$sumTaskSec%.1fs parallelEff=$eff%.2f")
+      f"[raster-stress] docs=$numDocs images=$nImages wall=${prof.wallSec}%.1fs " +
+      f"tasks=${prof.tasks.size} taskMs min=${prof.taskMs.headOption.getOrElse(0L)} " +
+      f"p50=${prof.taskMsPct(0.5)} p95=${prof.taskMsPct(0.95)} max=${prof.taskMsPct(1.0)} " +
+      f"sumTask=${prof.sumTaskSec}%.1fs parallelEff=${prof.parallelEfficiency}%.2f")
     byCodec.foreach(r => System.err.println(
       f"[raster-stress]   codec=${r.getString(0)}%-7s images=${r.getLong(1)}%7d " +
       f"px=${r.getLong(2)}%10d sumLuma=${r.getLong(3)}"))
     println(
       f"""{"metric":"raster_ingest","docs":$numDocs,"images":$nImages,""" +
-      f""""sum_luma":$sumLuma,"wall_sec":$wall%.2f,"stage_sec":$stageSec%.2f,""" +
-      f""""tasks":${times.size},"task_ms_p50":${pct(0.5)},""" +
-      f""""task_ms_p95":${pct(0.95)},"task_ms_max":${times.lastOption.getOrElse(0L)},""" +
-      f""""sum_task_sec":$sumTaskSec%.2f,"parallel_efficiency":$eff%.3f}""")
+      f""""sum_luma":$sumLuma,"stage_sec":$stageSec%.2f,""" +
+      s"""${prof.fields}}""")
     spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.TaskMetricsCollector
+
+import graft.core.{GraftSession, Profile}
 import graft.queries.Registry
 
 /** Scale-stress main: times the dedup headline queries on the base corpus and
@@ -36,18 +36,7 @@ object ScaleStress {
     val baseDir = args(0)
     val workDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // inflated twins of the documents + embeddings tables — everything the
     // stressable queries read. Written once; re-runs reuse them.
@@ -67,46 +56,37 @@ object ScaleStress {
       inflated.write.mode("overwrite").parquet(s"$bigDir/embeddings.parquet")
     }
 
-    val collector = new TaskMetricsCollector
-    spark.sparkContext.addSparkListener(collector)
-
-    def timed(name: String, dir: String): (Double, Long, Long, Long, Long, Double, Double) = {
+    // the untimed warm pass keeps codegen compile + scan setup out of the
+    // number; the window's steal/iowait samples are the PERF.md ritual (no
+    // scale wall without its noise samples — iowait catches the co-tenant
+    // disk contention steal is blind to, r17 VERDICT #2)
+    def timed(name: String, dir: String): Profile.Record = {
       val q = Registry.byName(name)
-      // untimed warm pass: codegen compile + scan setup out of the number
       q.build(spark, dir).write.format("noop").mode("overwrite").save()
-      graft.core.GraftSession.releaseAllBlocks(spark)
-      collector.reset()
-      val s0 = graft.core.StealSampler.snapshotIo()
-      val t0 = System.nanoTime()
-      q.build(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // concurrent host-steal + iowait over the timed window (the PERF.md
-      // ritual: no scale wall without its noise samples — iowait catches
-      // the co-tenant disk contention steal is blind to, r17 VERDICT #2)
-      val (steal, iowait) =
-        graft.core.StealSampler.pctIo(s0, graft.core.StealSampler.snapshotIo())
-      graft.core.GraftSession.releaseAllBlocks(spark)
-      // listener bus is async (and its drain API is private[spark]) — give
-      // queued task-end events a beat to land before reading the counters
-      Thread.sleep(500)
-      (sec, collector.maxTaskSpill, collector.totalSpill,
-        collector.shuffleWrite, collector.tasks, steal, iowait)
+      GraftSession.releaseAllBlocks(spark)
+      val (_, rec) = Profile.window(spark.sparkContext) {
+        q.build(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+      GraftSession.releaseAllBlocks(spark)
+      rec
     }
 
     val rows = headline.map { name =>
-      val (t1, _, _, sw1, _, steal1, io1) = timed(name, baseDir)
-      val (tN, maxSpill, totSpill, swN, tasks, stealN, ioN) = timed(name, bigDir)
+      val one = timed(name, baseDir)
+      val big = timed(name, bigDir)
+      val (t1, tN) = (one.wallSec, big.wallSec)
       val entry =
         f"""  "$name": {"t_1x_sec": $t1%.3f, "t_${factor}x_sec": $tN%.3f, """ +
-        f""""ratio": ${tN / t1}%.2f, "shuffle_write_1x": $sw1, """ +
-        f""""shuffle_write_${factor}x": $swN, "max_task_spill": $maxSpill, """ +
-        f""""total_spill": $totSpill, "tasks_${factor}x": $tasks, """ +
-        f""""steal_pct_1x": $steal1%.2f, "steal_pct_${factor}x": $stealN%.2f, """ +
-        f""""iowait_pct_1x": $io1%.2f, "iowait_pct_${factor}x": $ioN%.2f}"""
+        f""""ratio": ${tN / t1}%.2f, "shuffle_write_1x": ${one.shuffleWrite}, """ +
+        f""""shuffle_write_${factor}x": ${big.shuffleWrite}, "max_task_spill": ${big.maxTaskSpill}, """ +
+        f""""total_spill": ${big.totalSpill}, "tasks_${factor}x": ${big.tasks.size}, """ +
+        f""""steal_pct_1x": ${one.stealPct}%.2f, "steal_pct_${factor}x": ${big.stealPct}%.2f, """ +
+        f""""iowait_pct_1x": ${one.iowaitPct}%.2f, "iowait_pct_${factor}x": ${big.iowaitPct}%.2f, """ +
+        f""""profile_${factor}x": ${big.json}}"""
       System.err.println(f"[stress] $name%-18s 1x=$t1%6.2fs ${factor}x=$tN%6.2fs " +
-        f"ratio=${tN / t1}%5.2f shufW ${sw1 / 1e6}%8.1fMB -> ${swN / 1e6}%8.1fMB " +
-        f"maxTaskSpill=${maxSpill / 1e6}%6.1fMB steal=$steal1%.1f%%/$stealN%.1f%% " +
-        f"iowait=$io1%.1f%%/$ioN%.1f%%")
+        f"ratio=${tN / t1}%5.2f shufW ${one.shuffleWrite / 1e6}%8.1fMB -> ${big.shuffleWrite / 1e6}%8.1fMB " +
+        f"maxTaskSpill=${big.maxTaskSpill / 1e6}%6.1fMB steal=${one.stealPct}%.1f%%/${big.stealPct}%.1f%% " +
+        f"iowait=${one.iowaitPct}%.1f%%/${big.iowaitPct}%.1f%%")
       entry
     }
     println(rows.mkString(s"""{"factor": $factor, "base": "$baseDir",\n""", ",\n", "\n}"))

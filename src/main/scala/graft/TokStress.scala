@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.TaskMetricsCollector
-import graft.ops.TrainerProbe
+import graft.core.{DriverProbe, GraftSession, Profile}
 
 /** Tokenizer-trainer stress (VERDICT r14 ask #2): the one heavyweight
   * family without an adversarial scale row — BPE / WordPiece / Unigram-LM
@@ -25,38 +23,29 @@ import graft.ops.TrainerProbe
   * factor-proportional word-dict build and FLAT rounds.
   *
   * Measured per trainer at 1× and at factor×:
-  *  - total wall + listener-bus shuffle/spill/tasks;
+  *  - total wall + the [[graft.core.Profile]] record (shuffle/spill/tasks);
   *  - init wall (start → first argmax fetch = the word-dict aggregation)
   *    vs loop wall, and per-round wall/shuffle deltas off the
-  *    TrainerProbe hook;
-  *  - the driver's max collected rows (TrainerProbe.maxRows), asserted
+  *    DriverProbe hook;
+  *  - the driver's max collected rows (DriverProbe.maxRows), asserted
   *    in-trainer against the vocab bound on EVERY fetch (the AnnStress
   *    nLists pattern — a corpus-bounded collect fails its first run).
-  * Per-round shuffle/spill deltas are read off the async listener bus
+  * Per-round shuffle/spill deltas are read off the window's running totals
   * between driver barriers, so they are attribution-approximate; walls
   * and row counts are exact. */
 object TokStress {
 
-  private final case class Round(label: String, round: Int, rows: Long,
-                                 bound: Long, wallSec: Double,
-                                 shufW: Long, spill: Long)
+  /** one trainer fetch; `site` is "<label> round <n>" for loop fetches */
+  private final case class Round(site: String, rows: Long, bound: Long,
+                                 wallSec: Double, shufW: Long, spill: Long) {
+    def label: String = site.takeWhile(_ != ' ')
+  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args(0)
     val workDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // inflated twin (reuses ScaleStress's tree when present)
     val bigDir = s"$workDir/sf_x$factor"
@@ -68,54 +57,45 @@ object TokStress {
       inflated.write.mode("overwrite").parquet(s"$bigDir/documents.parquet")
     }
 
-    val collector = new TaskMetricsCollector
-    spark.sparkContext.addSparkListener(collector)
-
     def run(name: String, dir: String)(body: => Int): String = {
       val rounds = scala.collection.mutable.ArrayBuffer.empty[Round]
-      var lastT = System.nanoTime()
-      var lastShuf = 0L
-      var lastSpill = 0L
-      TrainerProbe.reset()
-      TrainerProbe.hook = (label, round, rows, bound) => {
-        val now = System.nanoTime()
-        val (sw, sp) = (collector.shuffleWrite, collector.totalSpill)
-        rounds += Round(label, round, rows, bound, (now - lastT) / 1e9,
-          sw - lastShuf, sp - lastSpill)
-        lastT = now; lastShuf = sw; lastSpill = sp
+      DriverProbe.reset()
+      val (outSize, prof) = Profile.observe(spark.sparkContext) { p =>
+        var lastT = System.nanoTime()
+        var lastShuf = 0L
+        var lastSpill = 0L
+        DriverProbe.hook = (site, rows, bound) => {
+          val now = System.nanoTime()
+          val (sw, sp) = (p.shuffleWrite, p.totalSpill)
+          rounds += Round(site, rows, bound, (now - lastT) / 1e9,
+            sw - lastShuf, sp - lastSpill)
+          lastT = now; lastShuf = sw; lastSpill = sp
+        }
+        try body finally DriverProbe.hook = null
       }
-      collector.reset()
-      val t0 = System.nanoTime()
-      lastT = t0
-      val outSize = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      TrainerProbe.hook = null
-      Thread.sleep(500) // async listener bus drain (ScaleStress gotcha)
+      val wall = prof.wallSec
       // per-fetch detail for the PERF.md iteration tables
       for (r <- rounds)
-        System.err.println(f"[tok-round] $name ${r.label} ${r.round}%4d " +
+        System.err.println(f"[tok-round] $name ${r.site}%-28s " +
           f"rows=${r.rows}%6d bound=${r.bound}%6d dt=${r.wallSec}%7.3fs " +
           f"shufW=${r.shufW / 1e6}%8.2fMB spill=${r.spill / 1e6}%7.1fMB")
-      graft.core.GraftSession.releaseAllBlocks(spark)
+      GraftSession.releaseAllBlocks(spark)
       val argmaxRounds = rounds.filter(_.label.endsWith(".argmax"))
       val emRounds = rounds.filter(_.label == "unigram.estep")
       val loopRounds = if (argmaxRounds.nonEmpty) argmaxRounds else emRounds
       val initSec = rounds.headOption.map(_.wallSec).getOrElse(0.0)
-      val loopSec = loopRounds.drop(1).map(_.wallSec).sum
       val perRound = loopRounds.drop(1).map(_.wallSec)
       val meanRound = if (perRound.nonEmpty) perRound.sum / perRound.size else 0.0
       val maxRound = if (perRound.nonEmpty) perRound.max else 0.0
       System.err.println(f"[tok-stress] $name%-22s wall=$wall%7.1fs " +
         f"init=$initSec%6.1fs rounds=${loopRounds.size}%4d " +
         f"mean=$meanRound%6.3fs max=$maxRound%6.3fs " +
-        f"maxDriverRows=${TrainerProbe.maxRows}%6d shufW=${collector.shuffleWrite / 1e6}%9.1fMB " +
-        f"spill=${collector.totalSpill / 1e6}%8.1fMB maxTaskSpill=${collector.maxTaskSpill / 1e6}%6.1fMB")
-      f""""$name": {"wall_sec": $wall%.3f, "init_sec": $initSec%.3f, """ +
+        f"maxDriverRows=${DriverProbe.maxRows}%6d shufW=${prof.shuffleWrite / 1e6}%9.1fMB " +
+        f"spill=${prof.totalSpill / 1e6}%8.1fMB maxTaskSpill=${prof.maxTaskSpill / 1e6}%6.1fMB")
+      f""""$name": {"init_sec": $initSec%.3f, """ +
         f""""n_rounds": ${loopRounds.size}, "mean_round_sec": $meanRound%.4f, """ +
-        f""""max_round_sec": $maxRound%.4f, "max_driver_rows": ${TrainerProbe.maxRows}, """ +
-        f""""out_size": $outSize, "shuffle_write": ${collector.shuffleWrite}, """ +
-        f""""total_spill": ${collector.totalSpill}, "max_task_spill": ${collector.maxTaskSpill}, """ +
-        f""""tasks": ${collector.tasks}}"""
+        f""""max_round_sec": $maxRound%.4f, "max_driver_rows": ${DriverProbe.maxRows}, """ +
+        f""""out_size": $outSize, ${prof.fields}}"""
     }
 
     // untimed warmup: absorb codegen/scan-setup compile so the 1× runs
@@ -127,7 +107,7 @@ object TokStress {
       graft.ops.WordPiece.learn(docs, "text", numMerges = 8, minCount = 2,
         batchK = 8): Unit
       graft.ops.Unigram.learn(docs, "text", targetSize = 120, seedSize = 200): Unit
-      graft.core.GraftSession.releaseAllBlocks(spark)
+      GraftSession.releaseAllBlocks(spark)
     }
 
     val results = scala.collection.mutable.ArrayBuffer.empty[String]

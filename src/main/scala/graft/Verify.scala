@@ -1,30 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.GraftSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // read parquet ms/ns timestamps as TIMESTAMP (UTC) — keeps timestamp
-      // semantics identical to the DuckDB oracle (which is tz-naive)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) — read as long, converted in Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // external bucketed tables carry their own path; this only keeps the
-      // (otherwise empty) default warehouse dir out of the repo checkout
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    // GraftSession reads parquet ms/ns timestamps as TIMESTAMP (UTC), which
+    // keeps timestamp semantics identical to the tz-naive DuckDB oracle,
+    // and events.ts (TIMESTAMP(NANOS)) as a long that Tables converts
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=name1,name2 narrows the dump for local
     // iteration (same contract as Bench's SPARK_GRAFT_BENCH_ONLY); the
@@ -46,7 +33,7 @@ object Verify {
       // rag pipelines) or localCheckpoint (connected components, delta
       // dedup) release them here — ~90 queries in one session would
       // otherwise accumulate stored blocks for the whole run
-      graft.core.GraftSession.releaseAllBlocks(spark)
+      GraftSession.releaseAllBlocks(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -440,33 +440,37 @@ final class Engine(
     val excludes = Seq(storePath, rawDataDir)
 
     val (upserts, prunes, skipped, held) = describing("graft sync: gather+plan") {
-      if (allFiles.size >= distributedThreshold ||
-          store.manifest().limit(distributedThreshold).count() >=
-            math.max(1L, distributedThreshold.toLong))
-        describing("graft sync: distributed gather+plan") {
-          planDistributed(allFiles, scanned.coverage.unobservedPrefixes,
-            scopeKeys, excludes, fileRequest)
-        }
-      else {
-        val disk = allFiles.map { f =>
-          val content = Files.readAllBytes(Paths.get(f))
-          SyncPlanner.DiskFile(PathKeys.syncPathKey(f), f,
-            Some(Ingest.sha256Hex(new String(content, StandardCharsets.UTF_8))))
-        }
-        val manifestRows = store.manifest().collect()
-        // this branch is only reachable when the limit-probe above counted
-        // the manifest UNDER the routing threshold (DriverProbe: a routing
-        // edit that lets a big manifest reach the driver loop fails here)
-        graft.core.DriverProbe.record("sync_manifest_small",
-          manifestRows.length, distributedThreshold.toLong)
-        val db = manifestRows.toSeq.map { r =>
-          val p = r.getString(0)
-          SyncPlanner.DbEntry(PathKeys.syncPathKey(p), p, Option(r.getString(1)))
-        }
-        val plan = SyncPlanner.plan(disk, db,
-          SyncPlanner.Coverage(scanned.coverage.unobservedPrefixes),
-          SyncPlanner.Request(scopeKeys, excludes, fileRequest = fileRequest))
-        (plan.upserts, plan.prunes, plan.skipped.size.toLong, plan.held.size.toLong)
+      // one bounded read routes AND plans: at least `distributedThreshold`
+      // rows means the distributed route; fewer means the read saw the
+      // whole manifest, and those rows are the driver plan's db side
+      val smallManifest =
+        if (allFiles.size >= distributedThreshold) None
+        else Some(store.manifest().limit(distributedThreshold).collect())
+          .filter(_.length < math.max(1L, distributedThreshold.toLong))
+      smallManifest match {
+        case None =>
+          describing("graft sync: distributed gather+plan") {
+            planDistributed(allFiles, scanned.coverage.unobservedPrefixes,
+              scopeKeys, excludes, fileRequest)
+          }
+        case Some(manifestRows) =>
+          val disk = allFiles.map { f =>
+            val content = Files.readAllBytes(Paths.get(f))
+            SyncPlanner.DiskFile(PathKeys.syncPathKey(f), f,
+              Some(Ingest.sha256Hex(new String(content, StandardCharsets.UTF_8))))
+          }
+          // DriverProbe: a routing edit that lets a big manifest reach the
+          // driver loop fails here
+          graft.core.DriverProbe.record("sync_manifest_small",
+            manifestRows.length, distributedThreshold.toLong)
+          val db = manifestRows.toSeq.map { r =>
+            val p = r.getString(0)
+            SyncPlanner.DbEntry(PathKeys.syncPathKey(p), p, Option(r.getString(1)))
+          }
+          val plan = SyncPlanner.plan(disk, db,
+            SyncPlanner.Coverage(scanned.coverage.unobservedPrefixes),
+            SyncPlanner.Request(scopeKeys, excludes, fileRequest = fileRequest))
+          (plan.upserts, plan.prunes, plan.skipped.size.toLong, plan.held.size.toLong)
       }
     }
 

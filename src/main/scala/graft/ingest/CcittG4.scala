@@ -98,7 +98,6 @@ object CcittG4 {
 
   private final class BitReader(data: Array[Byte]) {
     var pos = 0 // bit position
-    def hasBits(n: Int): Boolean = pos + n <= data.length * 8
     def peek(n: Int): Int = { // zero-padded past the end (final fill bits)
       var v = 0; var i = 0
       while (i < n) {

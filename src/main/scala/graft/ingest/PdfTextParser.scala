@@ -804,20 +804,6 @@ object PdfTextParser {
       }
     }
 
-  /** per-page font-name → ToUnicode [[CMap]], from the page's (inheritable,
-    * per §7.7.3.4 — intermediate /Pages nodes commonly hold it) /Resources
-    * → /Font dict (direct or one indirect hop). Resolution order per font:
-    * (1) a usable /ToUnicode CMap; (2) for Type0 (CID-keyed) fonts
-    * without one, glyph→unicode recovered from the embedded TrueType
-    * 'cmap' table ([[cidFontCMap]]); (3) a Type0 font with NEITHER still
-    * maps — to an EMPTY width-2 CMap, so its glyph-id shows are consumed
-    * pairwise and dropped (byte-decoding them would garble; this is the
-    * "emit nothing rather than garbage" posture applied to fonts). Only
-    * simple fonts with no map at all fall back to byte decoding. */
-  private[ingest] def pageFontCMaps(page: PdfObj, byNum: Map[Int, PdfObj])
-      : Map[String, CMap] =
-    fontsFromResources(pageResources(page, byNum), byNum)
-
   /** the page's (inheritable) /Resources dict, one indirect hop resolved */
   private[ingest] def pageResources(page: PdfObj,
                                     byNum: Map[Int, PdfObj]): Option[PDict] =
@@ -830,6 +816,16 @@ object PdfTextParser {
       case _ => None
     }
 
+  /** font-name → ToUnicode [[CMap]] from a /Resources dict (a page's is
+    * inheritable, per §7.7.3.4 — intermediate /Pages nodes commonly hold
+    * it, see [[pageResources]]) → /Font dict (direct or one indirect hop).
+    * Resolution order per font: (1) a usable /ToUnicode CMap; (2) for Type0 (CID-keyed) fonts
+    * without one, glyph→unicode recovered from the embedded TrueType
+    * 'cmap' table ([[cidFontCMap]]); (3) a Type0 font with NEITHER still
+    * maps — to an EMPTY width-2 CMap, so its glyph-id shows are consumed
+    * pairwise and dropped (byte-decoding them would garble; this is the
+    * "emit nothing rather than garbage" posture applied to fonts). Only
+    * simple fonts with no map at all fall back to byte decoding. */
   private[ingest] def fontsFromResources(res: Option[PDict],
                                          byNum: Map[Int, PdfObj])
       : Map[String, CMap] = {

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverProbe
+
 /** Byte-pair-encoding vocabulary training over a document corpus —
   * beyond-reference training-pipeline operator (the reference counts
   * tokens, `src/utils/token-counter.ts`, but never LEARNS a vocabulary;
@@ -236,8 +238,8 @@ object Bpe {
       val fetched = pairCounts.orderBy(desc("cnt"), asc("a"), asc("b"))
         .head(candidateFetch(batchK))
       // runtime pin: the per-round driver materialization is bounded by
-      // the vocab knob, never the corpus (TrainerProbe contract)
-      TrainerProbe.record("bpe.argmax", round, fetched.length.toLong,
+      // the vocab knob, never the corpus (DriverProbe contract)
+      DriverProbe.record(s"bpe.argmax round $round", fetched.length.toLong,
         candidateFetch(batchK).toLong)
       val cands = fetched
         .iterator

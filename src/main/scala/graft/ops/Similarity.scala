@@ -67,18 +67,6 @@ object Similarity {
     bucket
   }
 
-  /** ANN top-k: probe the query's SRP bucket, brute-force rerank inside it.
-    * Returns (idCol, score) sorted asc by dot distance. */
-  def annTopK(df: DataFrame, idCol: String, vecColName: String, dim: Int,
-              queryVec: Column, queryBucket: Column, planes: Int, k: Int): DataFrame = {
-    val bucketed = df.withColumn("bucket", srpBucket(vecColName, dim, planes))
-    bucketed.filter(col("bucket") === queryBucket)
-      .withColumn("score", VectorSearch.dotDistance(col(vecColName), queryVec))
-      .orderBy(col("score"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("score"))
-  }
-
   // ---- IVF (inverted-file) ANN: k-means coarse quantizer + probed lists ----
 
   /** An IVF index: each vector assigned to its nearest centroid's list.

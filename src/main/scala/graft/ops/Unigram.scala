@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverProbe
+
 /** Unigram-LM tokenizer training (SentencePiece's default algorithm:
   * Kudo, "Subword Regularization: Improving Neural Network Translation
   * Models with Multiple Subword Candidates", ACL 2018 §3) — the second
@@ -156,12 +158,12 @@ object Unigram {
     }.reduceByKey(_ + _)
     val chars = subCounts.filter(_._1.length == 1).collect()
     // alphabet-bounded: ≤ 65536 distinct single UTF-16 chars can exist
-    TrainerProbe.record("unigram.alphabet", 0, chars.length.toLong, 65536L)
+    DriverProbe.record("unigram.alphabet", chars.length.toLong, 65536L)
     val multi = subCounts.filter(_._1.length > 1)
       .map { case (p, c) => (p, c) }
       .sortBy({ case (p, c) => (-c, p) })
       .take(math.max(0, seedSize - chars.length))
-    TrainerProbe.record("unigram.seed", 0, multi.length.toLong, seedSize.toLong)
+    DriverProbe.record("unigram.seed", multi.length.toLong, seedSize.toLong)
     var vocab: Map[String, Double] = {
       val all = (chars ++ multi).toMap
       val total = all.values.sum.toDouble
@@ -190,7 +192,7 @@ object Unigram {
       // runtime pin: the collected E-step aggregate is VOCAB-sized — every
       // emitted key flows through lp.get, so |counts| ≤ |vocab| holds by
       // construction and this fails the first run that breaks it
-      TrainerProbe.record("unigram.estep", emIdx, counts.size.toLong,
+      DriverProbe.record(s"unigram.estep round $emIdx", counts.size.toLong,
         vocab.size.toLong)
       emIdx += 1
       // M-step with determinism rounding (see scaladoc); single chars are

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverProbe
+
 /** WordPiece tokenizer training and application — the third tokenizer
   * family next to [[Bpe]] and [[Unigram]], and the BERT-lineage one
   * (Schuster & Nakajima 2012; the HF `tokenizers` WordPiece trainer is
@@ -128,8 +130,8 @@ object WordPiece {
         .orderBy(desc("score"), desc("cnt"), asc("a"), asc("b"))
         .head(Bpe.candidateFetch(batchK))
       // runtime pin: per-round driver rows bounded by the vocab knob,
-      // never the corpus (TrainerProbe contract)
-      TrainerProbe.record("wordpiece.argmax", rank, cands0.length.toLong,
+      // never the corpus (DriverProbe contract)
+      DriverProbe.record(s"wordpiece.argmax round $rank", cands0.length.toLong,
         Bpe.candidateFetch(batchK).toLong)
       val cands = cands0
         .iterator
@@ -209,7 +211,7 @@ object WordPiece {
       .distinct().collect().map(_.getString(0)).toSet
     // alphabet-bounded by construction: initSymbols emits 1-char heads and
     // "##"+char continuations, so ≤ 2·65536 distinct UTF-16 forms exist
-    TrainerProbe.record("wordpiece.alphabet", 0, alphabet.size.toLong, 131072L)
+    DriverProbe.record("wordpiece.alphabet", alphabet.size.toLong, 131072L)
     alphabet ++ merges.map(_.merged)
   }
 

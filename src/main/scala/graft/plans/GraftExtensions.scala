@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 /** Session extensions wiring the engine's custom Catalyst pieces into any
   * SparkSession — SURVEY §2's custom-operator ladder, rung (c): inject at
-  * session build time via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`), or retrofit a live
+  * session build time via the builder's `withExtensions(new
+  * GraftExtensions)` (or `spark.sql.extensions=graft.plans.GraftExtensions`),
+  * or retrofit a live
   * session with [[GraftExtensions.install]].
   *
   *  - `float_vector_dot(a, b)` registered as a SQL function, so plain

@@ -26,7 +26,7 @@ object Decimals {
 
   /** [[unscaled8]] of `price * (1 - disc)` with the q1 compact path's
     * DOMAIN GUARDS (r15 ADVICE: the DECIMAL(8,2) casts silently null at
-    * |v| ≥ 1e6 — a violation must fail loudly, the TrainerProbe posture):
+    * |v| ≥ 1e6 — a violation must fail loudly, the DriverProbe posture):
     * requires 0 ≤ price < 1e6, 0 ≤ qty < 1e6 (qty rides along purely for
     * the guard — it feeds the sibling (8,2) cast in the same aggregate)
     * and 0 ≤ disc ≤ 1 (the hi/lo `div`/`%` split assumes a non-negative

@@ -262,30 +262,36 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("TrainerProbe: every driver fetch reports vocab-bounded, hook sees each round, bound breach throws") {
-    import graft.ops.TrainerProbe
-    val events = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long, Long)]
-    TrainerProbe.reset()
-    TrainerProbe.hook = (l, r, rows, b) => events += ((l, r, rows, b))
+    import graft.core.DriverProbe
+    val events = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    DriverProbe.reset()
+    DriverProbe.hook = (site, rows, b) => events += ((site, rows, b))
     try {
       val docs = Seq("low lower lowest", "new newer newest", "wide wider widest")
         .toDF("text")
       val merges = Bpe.learnBatched(docs, "text", numMerges = 12, minCount = 1, batchK = 4)
       assert(merges.nonEmpty)
       assert(events.nonEmpty, "the trainer must report its argmax fetches")
-      assert(events.forall { case (l, _, rows, bound) =>
-        l == "bpe.argmax" && rows <= bound
+      assert(events.forall { case (site, rows, bound) =>
+        site.startsWith("bpe.argmax round ") && rows <= bound
       })
-      assert(TrainerProbe.maxRows === events.map(_._3).max)
+      assert(DriverProbe.maxRows === events.map(_._2).max)
       // rounds arrive in order from the single driver loop thread
-      assert(events.map(_._2) === events.map(_._2).sorted)
-    } finally TrainerProbe.hook = null
+      val rounds = events.map(_._1.stripPrefix("bpe.argmax round ").toInt)
+      assert(rounds === rounds.sorted)
+    } finally DriverProbe.hook = null
     // the runtime pin itself: a fetch above its vocab bound must throw
     // (the corpus-bounded-collect regression this probe exists to catch)
-    intercept[IllegalArgumentException] {
-      TrainerProbe.record("test.argmax", 0, rows = 100L, bound = 10L)
+    val e = intercept[IllegalArgumentException] {
+      DriverProbe.record("test.argmax round 0", rows = 100L, bound = 10L)
     }
-    TrainerProbe.reset()
-    assert(TrainerProbe.maxRows === 0L)
+    assert(e.getMessage.contains("test.argmax round 0 materialized 100 driver rows"))
+    // a throwing hook never aborts the trainer that reports
+    DriverProbe.hook = (_, _, _) => throw new RuntimeException("boom")
+    try DriverProbe.record("test.argmax round 1", rows = 1L, bound = 1L)
+    finally DriverProbe.hook = null
+    DriverProbe.reset()
+    assert(DriverProbe.maxRows === 0L)
   }
 
   test("encode matches a by-hand greedy application") {

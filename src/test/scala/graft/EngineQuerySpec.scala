@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, typedLit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Engine
-import graft.core.{GraftSession, ScopeMatch}
+import graft.core.{GraftSession, Profile, ScopeMatch}
 import graft.embed.HashedEmbedder
 import graft.search.{Bm25, HybridSearch}
 
@@ -134,24 +134,10 @@ class EngineQuerySpec extends AnyFunSuite {
     assert(adHoc === indexed)
   }
 
-  /** Spark jobs `body` starts, counted by a listener; a sentinel job flushes
-    * the listener bus before the count is read */
+  /** Spark jobs `body` starts, counted in a [[Profile]] window */
   private def countJobs[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      val before = jobs.get()
-      spark.sparkContext.parallelize(1 to 2, 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (jobs.get() <= before && System.nanoTime() < deadline) Thread.sleep(20)
-      (out, jobs.get() - 1)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (out, rec) = Profile.window(spark.sparkContext)(body)
+    (out, rec.jobs.size)
   }
 
   test("warm read calls: a plain query runs ≤ 6 Spark jobs, neighbors 1, status ≤ 3") {

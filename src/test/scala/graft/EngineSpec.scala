@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Engine
-import graft.core.GraftSession
+import graft.core.{GraftSession, Profile}
 import graft.ingest.DirectoryScanner
 
 /** End-to-end workflows through the tool facade — the Spark twin of the
@@ -645,27 +645,11 @@ class EngineSpec extends AnyFunSuite {
     assert(rows(annEngine) === expected)
   }
 
-  /** `body`'s Spark jobs, as the job description each ran under (null when
-    * none), counted by a listener; a sentinel job flushes the listener bus
-    * before the list is read */
+  /** `body`'s Spark jobs, as the job description each ran under (the
+    * action's call site when none), from a [[Profile]] window */
   private def jobDescriptions[A](body: => A): (A, Seq[String]) = {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        descs.add(Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description")))): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      val before = descs.size
-      spark.sparkContext.parallelize(1 to 2, 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (descs.size <= before && System.nanoTime() < deadline) Thread.sleep(20)
-      import scala.jdk.CollectionConverters._
-      (out, descs.asScala.toSeq.dropRight(1).map(_.orNull)) // minus the sentinel
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (out, rec) = Profile.window(spark.sparkContext)(body)
+    (out, rec.jobs.map(_.label))
   }
 
   test("ANN threshold crossing: below it a refresh trains nothing; every mutation job is described") {
@@ -714,7 +698,7 @@ class EngineSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(qel)
     val ivfRows =
-      try jobDescriptions(rows(engine))._1 // the sentinel flushes the listener bus
+      try jobDescriptions(rows(engine))._1 // the window drains the listener bus
       finally spark.listenerManager.unregister(qel)
     import scala.jdk.CollectionConverters._
     assert(scanned.asScala.exists(_.contains("-ann/assignments")),
@@ -740,6 +724,23 @@ class EngineSpec extends AnyFunSuite {
     assert(syncJobs.forall(d => d != null && d.startsWith("graft ")),
       s"undescribed sync jobs: ${syncJobs.mkString(", ")}")
     assert(syncJobs.count(_ == ann) <= 1)
+  }
+
+  test("no-op sync: one bounded manifest read routes and plans") {
+    val root = Files.createTempDirectory("noop-root").toString
+    val store = Files.createTempDirectory("noop-store").toString + "/chunks"
+    for (i <- 0 until 8)
+      write(s"$root/doc$i.md", s"# Doc $i\n" + s"spark shuffle partitions executors $i. " * 5)
+    val engine = new Engine(spark, store, Seq(root))
+    assert(engine.sync().upserted === 8)
+    assert(engine.sync().skipped === 8) // warm: schema and stats memos
+    val (summary, jobs) = jobDescriptions(engine.sync())
+    assert(summary.skipped === 8 && summary.upserted === 0 && summary.pruned === 0)
+    info(s"no-op sync: ${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assert(jobs.forall(_ == "graft sync: gather+plan"), jobs.mkString(", "))
+    // a routing count followed by a manifest collect ran 5 jobs here; one
+    // limited collect of the distinct manifest runs its shuffle and its take
+    assert(jobs.size <= 2, jobs.mkString(", "))
   }
 
   test("optimize sweeps stale swap debris beside the chunk table and both index roots") {

@@ -1955,26 +1955,12 @@ class OpsSpec extends AnyFunSuite {
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))))
       .toMap
     // job pin: footerStats is driver-side footer metadata — it must launch
-    // ZERO Spark jobs (a job here means the data was re-scanned). Listener
-    // events are delivered in order, so once the sentinel job's start is
-    // observed, any earlier job start would have been observed too.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
+    // ZERO Spark jobs (a job here means the data was re-scanned)
+    val (got, rec) = graft.core.Profile.window(spark.sparkContext) {
+      ZOrder.footerStats(spark, files, Seq("user_id", "value")).collect()
     }
-    spark.sparkContext.addSparkListener(listener)
-    val got = try {
-      val rows = ZOrder.footerStats(spark, files, Seq("user_id", "value")).collect()
-      spark.sparkContext.parallelize(1 to 2, 1).count() // sentinel job
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.get() === 1,
-        s"footerStats launched ${jobs.get() - 1} Spark job(s) — a data re-scan")
-      rows
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rec.jobs.isEmpty,
+      s"footerStats launched ${rec.jobs.size} Spark job(s) — a data re-scan")
     // footer stats == scan stats, file by file (non-empty files; empty
     // part files are footer-stated with n_rows=0 and no scan-side row)
     val gotNonEmpty = got.filter(_.getAs[Long]("n_rows") > 0)

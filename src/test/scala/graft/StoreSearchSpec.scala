@@ -298,22 +298,8 @@ class StoreSearchSpec extends AnyFunSuite {
     val st = new graft.store.AnnIndexStore(spark, dir, Seq("vec_id"), "embedding")
     st.rebuild(e, nLists = 8)
     def countJobs[A](body: => A): (A, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val out = body
-        val before = jobs.get()
-        spark.sparkContext.parallelize(1 to 2, 1).count() // flush sentinel
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (jobs.get() <= before && System.nanoTime() < deadline) Thread.sleep(20)
-        (out, jobs.get() - 1) // minus the sentinel
-      } finally spark.sparkContext.removeSparkListener(l)
+      val (out, rec) = graft.core.Profile.window(spark.sparkContext)(body)
+      (out, rec.jobs.size)
     }
     val (c1, _) = countJobs(st.loadCentroids()) // first read warms the stamp
     val (c2, jobsHit) = countJobs(st.loadCentroids())

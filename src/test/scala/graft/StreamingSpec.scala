@@ -57,30 +57,12 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("filePath"), col("content"), lit(null).cast("string").as("rawHash"),
         lit(null).cast("string").as("titleOverride"))
       .as[Ingest.Doc]
-    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
-          shuffleStages.incrementAndGet(): Unit
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+    val (rows, rec) = graft.core.Profile.window(spark.sparkContext) {
+      Ingest.buildChunks(grouped, () => new HashedEmbedder(64), "2026-01-01T00:00:00Z")
+        .select("filePath", "chunkIndex").as[(String, Int)].collect()
     }
-    spark.sparkContext.addSparkListener(l)
-    val rows =
-      try {
-        val out = Ingest.buildChunks(grouped, () => new HashedEmbedder(64), "2026-01-01T00:00:00Z")
-          .select("filePath", "chunkIndex").as[(String, Int)].collect()
-        // a sentinel job flushes the listener bus past every earlier event
-        val before = jobs.get()
-        spark.sparkContext.parallelize(1 to 2, 1).count()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (jobs.get() <= before && System.nanoTime() < deadline) Thread.sleep(20)
-        out
-      } finally spark.sparkContext.removeSparkListener(l)
     assert(rows.map(_._1).toSet === Set("/s/a.md", "/s/b.txt"))
-    assert(shuffleStages.get() === 1, s"${shuffleStages.get()} shuffle-writing stages")
+    assert(rec.shuffleStages === 1, s"${rec.shuffleStages} shuffle-writing stages")
 
     // a one-split local input (no exchange) is still spread over the cores
     val oneSplit = Seq(Ingest.Doc("/s/c.md", "Short single document.")).toDS()

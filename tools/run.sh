@@ -1,7 +1,11 @@
 #!/bin/bash
-# Run a graft main class (graft.Verify / graft.Bench) against the compiled
-# classes without sbt startup overhead. Usage:
+# Run a graft main class against the compiled classes without sbt startup
+# overhead. The mains: graft.Verify (oracle dump), graft.Bench (headline
+# timings + per-pass Profile records), graft.PlanCheck (formatted plans),
+# and the stress harnesses graft.ScaleStress, AnnStress, DeltaStress,
+# IngestStress, RasterStress, TokStress and BpeThroughput. Usage:
 #   tools/run.sh graft.Verify <testdata>/sf0.01 /tmp/verify_out
+#   SPARK_GRAFT_BENCH_ONLY=q_hybrid tools/run.sh graft.Bench
 set -euo pipefail
 # classes of the checkout this script lives in, wherever it is run from
 CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
