@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Profile}
+import graft.core.{GraftSession, Profile, Seam}
 import graft.store.CleanStateStore
 
 /** Does d_delta_pipeline's cost follow the BATCH or the accumulated state?
@@ -97,14 +97,14 @@ object DeltaStress {
       } else println(s"x$k state reused: stageCounts=${st.stageCounts()}")
       val full = stored(k).union(batch)
       timed(s"x$k delta") {
-        val (r, release) = st.applyBatchReleasable(batch, full, hold)
-        try { r.finalNew.count(): Unit; r.revoked.count(): Unit }
-        finally release()
+        Seam.scoped { seam =>
+          val r = st.applyBatch(seam, batch, full, hold)
+          r.finalNew.count(): Unit; r.revoked.count(): Unit
+        }
       }
       timed(s"x$k survivors") {
-        val (r, release) = st.applyBatchReleasable(batch, full, hold)
-        try r.survivors.write.format("noop").mode("overwrite").save()
-        finally release()
+        Seam.scoped(seam => st.applyBatch(seam, batch, full, hold)
+          .survivors.write.format("noop").mode("overwrite").save())
       }
     }
     spark.stop()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{PathKeys, ScopeMatch}
+import graft.core.{PathKeys, ScopeMatch, Seam}
 import graft.embed.{Embedder, HashedEmbedder}
 import graft.ingest.{DirectoryScanner, Ingest}
 import graft.search.{Bm25, HybridSearch, VectorSearch}
@@ -705,52 +705,41 @@ final class Engine(
     * iterating the earlier handle fails with removed-block errors.
     * Consume each result before re-running the tool — the same contract
     * StreamingIngest documents for its named result dirs. */
-  def nearDuplicateFiles(threshold: Double = 0.8): DataFrame = {
-    val perFile = store.read()
+  def nearDuplicateFiles(threshold: Double = 0.8): DataFrame = Seam.scoped { seam =>
+    val perFile = seam.persist(store.read()
       .groupBy("filePath")
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("chunkIndex"), col("text")))),
         s => s("text")), " ").as("text"))
-      .withColumn("file_id", graft.ops.Dedup.hash60(col("filePath")))
-      .persist()
-    // releasable verify (r13 soak finding): the handle-less pair verify
-    // persisted its candidate list per CALL — one leaked block per tool
-    // invocation for the session's lifetime. The checkpoint is eager, so
-    // every intermediate releases in the finally; the checkpoint itself
-    // rotates per API name below.
-    var release: () => Unit = () => ()
-    try {
-      val withSh = perFile
-        .withColumn("ws", graft.ops.Dedup.wordsArray("text"))
-        .withColumn("shs", graft.ops.Dedup.wordShingles("ws", 5))
-      val (pairs, rel) = graft.ops.Dedup.nearDupPairsAtReleasable(
-        withSh.select(col("file_id"), col("shs")), "file_id", "shs", threshold)
-      release = rel
-      val ids = perFile.select(col("file_id"), col("filePath"))
-      checkpointBounded("nearDuplicateFiles", pairs
-        .join(ids.select(col("file_id").as("id_a"), col("filePath").as("pa")), Seq("id_a"))
-        .join(ids.select(col("file_id").as("id_b"), col("filePath").as("pb")), Seq("id_b"))
-        .select(least(col("pa"), col("pb")).as("path_a"),
-          greatest(col("pa"), col("pb")).as("path_b"), col("jaccard"))
-        .orderBy("path_a", "path_b"))
-    } finally { release(); perFile.unpersist(): Unit }
+      .withColumn("file_id", graft.ops.Dedup.hash60(col("filePath"))))
+    // the result checkpoint is eager, so every intermediate (the per-file
+    // cache, the verify's pair list) is released when `seam` closes; the
+    // checkpoint itself rotates per API name below
+    val withSh = perFile
+      .withColumn("ws", graft.ops.Dedup.wordsArray("text"))
+      .withColumn("shs", graft.ops.Dedup.wordShingles("ws", 5))
+    val pairs = graft.ops.Dedup.nearDupPairsAt(seam,
+      withSh.select(col("file_id"), col("shs")), "file_id", "shs", threshold)
+    val ids = perFile.select(col("file_id"), col("filePath"))
+    checkpointBounded("nearDuplicateFiles", pairs
+      .join(ids.select(col("file_id").as("id_a"), col("filePath").as("pa")), Seq("id_a"))
+      .join(ids.select(col("file_id").as("id_b"), col("filePath").as("pb")), Seq("id_b"))
+      .select(least(col("pa"), col("pb")).as("path_a"),
+        greatest(col("pa"), col("pb")).as("path_b"), col("jaccard"))
+      .orderBy("path_a", "path_b"))
   }
 
-  /** Live materialized result per API NAME — the blocks bound on the
-    * engine's eager `localCheckpoint` results (the disk twin is
-    * StreamingIngest's named result dirs): a re-invocation of the same
-    * tool releases the predecessor's checkpoint blocks, so a long-lived
-    * session holds at most one materialized result per tool instead of
-    * one per call. Same lifecycle contract: a returned DataFrame is valid
-    * until the SAME tool runs again. */
-  private val liveCheckpoints =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[org.apache.spark.rdd.RDD[_]]]()
-  private def checkpointBounded(name: String,
-                                df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cp = df.localCheckpoint(true)
-    val mine = graft.ops.Dedup.checkpointRdd(cp)
-    val prev = liveCheckpoints.put(name, mine)
-    if (prev != null) prev.foreach(_.unpersist(blocking = true))
+  /** One seam per API NAME owning the engine's eager checkpointed results
+    * (the disk twin is StreamingIngest's named result dirs): a
+    * re-invocation of the same tool closes its predecessor's seam, so a
+    * long-lived session holds at most one materialized result per tool
+    * instead of one per call. Same lifecycle contract: a returned
+    * DataFrame is valid until the SAME tool runs again. */
+  private val liveSeams = new java.util.concurrent.ConcurrentHashMap[String, Seam]()
+  private def checkpointBounded(name: String, df: DataFrame): DataFrame = {
+    val owner = Seam()
+    val cp = owner.checkpoint(df)
+    Option(liveSeams.put(name, owner)).foreach(_.close())
     cp
   }
 

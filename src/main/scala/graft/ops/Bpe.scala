@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.DriverProbe
+import graft.core.{DriverProbe, Seam}
 
 /** Byte-pair-encoding vocabulary training over a document corpus —
   * beyond-reference training-pipeline operator (the reference counts
@@ -28,8 +28,8 @@ import graft.core.DriverProbe
   * Cost per merge therefore follows the AFFECTED subset (for a zipfian
   * vocab, a sliver after the first few merges), while a naive recount pays
   * the whole symbol table 50 000 times. Both iterating tables are
-  * `localCheckpoint(true)`ed per round — CONCURRENTLY, the two jobs
-  * overlap — with eager release of the superseded blocks: the same
+  * checkpointed per round through one [[graft.core.Seam]] — CONCURRENTLY,
+  * the two jobs overlap — with eager release of the superseded blocks: the same
   * lineage/memory discipline as [[Dedup.connectedComponents]] (a reliable
   * checkpoint replaces the local one on a cluster). Windowed (every-N)
   * checkpointing was measured and rejected — see [[learnBatched]].
@@ -191,21 +191,21 @@ object Bpe {
         math.min(8, spark.sparkContext.defaultParallelism).toString)
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try learnBatchedLoop(spark, docs, textCol, numMerges, minCount, batchK,
-      checkpointEvery)
+    try Seam.scoped(learnBatchedLoop(_, spark, docs, textCol, numMerges,
+      minCount, batchK, checkpointEvery))
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
 
-  private def learnBatchedLoop(spark: SparkSession, docs: DataFrame,
+  private def learnBatchedLoop(seam: Seam, spark: SparkSession, docs: DataFrame,
                                textCol: String, numMerges: Int, minCount: Long,
                                batchK: Int, checkpointEvery: Int): Seq[Merge] = {
 
     // corpus → word-frequency dict (the ONE corpus-sized aggregation),
     // then words → char symbol sequences
-    var words = docs
+    var words = seam.checkpoint(docs
       .select(explode(Dedup.wordsArray(textCol)).as("w"))
       // the ONE corpus-sized shuffle keeps full parallelism regardless of
       // the loop-scoped shuffle-partition override (the groupBy reuses
@@ -215,14 +215,12 @@ object Bpe {
       // split-on-empty can emit a trailing "" depending on the regex
       // engine's limit semantics — drop any empty symbols defensively
       .select(filter(split(col("w"), ""), c => length(c) > 0).as("syms"), col("cnt"))
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint(true)
+      .filter(size(col("syms")) >= 2))
 
-    var pairCounts = words
+    var pairCounts = seam.checkpoint(words
       .select(explode(adjacentPairs(col("syms"))).as("p"), col("cnt"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
+      .agg(sum("cnt").as("cnt")))
 
     val merges = Seq.newBuilder[Merge]
     // the round-0 checkpoints above are the current lineage roots; replaced
@@ -304,15 +302,11 @@ object Bpe {
           // submit them from separate threads so they overlap on the (idle
           // during a barrier) executor cores: the round pays
           // max(ckpt_pairs, ckpt_words), not the sum
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val fp = Future(nextPairs0.localCheckpoint(true))
-          val fw = Future(nextWords0.localCheckpoint(true))
-          val nextPairs = Await.result(fp, Duration.Inf)
-          val nextWords = Await.result(fw, Duration.Inf)
-          // superseded checkpoints' blocks released eagerly (Dedup CC notes)
-          releaseCheckpoint(ckptPairs); releaseCheckpoint(ckptWords)
+          val Seq(nextPairs, nextWords) = seam.checkpointAll(Seq(nextPairs0, nextWords0))
+          // superseded checkpoints' blocks released eagerly (Dedup CC
+          // notes), without waiting on the BlockManager
+          seam.release(ckptPairs, blocking = false)
+          seam.release(ckptWords, blocking = false)
           ckptPairs = nextPairs; ckptWords = nextWords
           pairCounts = nextPairs; words = nextWords
         } else {
@@ -320,14 +314,8 @@ object Bpe {
         }
       }
     }
-    releaseCheckpoint(ckptPairs); releaseCheckpoint(ckptWords)
     merges.result()
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** BPE-encode `textCol` with a learned merge table: standard greedy
     * application by merge rank (always the LOWEST-rank applicable merge

@@ -2,8 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
+
+import graft.core.Seam
 
 /** Knobs for the cleaning funnel. Defaults are the values the benchmark
   * queries pin against the DuckDB oracle.
@@ -58,7 +59,7 @@ final case class CleanCorpusStages(
   *  - exact dedup is one map-side-combined hash-groupBy on normalized
   *    fingerprints;
   *  - near-dup is banded LSH candidates + the measured-routed exact-Jaccard
-  *    verify ([[Dedup.jaccardOnPairsRoutedReleasable]]) — never all-pairs;
+  *    verify ([[Dedup.jaccardOnPairs]]) — never all-pairs;
   *  - decontamination joins the holdout's distinct shingles WITHOUT a
   *    forced broadcast: AQE sizes the build side at runtime (holdout sets
   *    are small by construction — that is what makes them holdouts — so
@@ -70,11 +71,11 @@ final case class CleanCorpusStages(
   * Caching contract: the quality survivors feed two consumers (the
   * fingerprint groupBy and the canonical semi-join) and the shingled
   * exact-survivors feed three (signatures, both verify sides, the
-  * contamination explode), so both are persisted MEMORY_AND_DISK. In a
-  * run-one-query harness the JVM exit reclaims them; a long-lived session
-  * (the engine's tool loop) MUST take [[CleanCorpus.cleanCorpusReleasable]]
-  * and run the handle after consuming the stage frames — the spanDedup
-  * lifecycle contract ([[Dedup.spanDedupReleasable]]). */
+  * contamination explode), so both are persisted MEMORY_AND_DISK in the
+  * caller's seam, with the verify's pair list and the dropped-id
+  * checkpoint. Consume the stage frames inside the seam's scope —
+  * re-evaluating one after the seam closes recomputes from source
+  * (correct, just uncached). */
 object CleanCorpus {
 
   /** The funnel's quality-stage predicate, factored so the incremental
@@ -88,42 +89,25 @@ object CleanCorpus {
       g.getField("ellipsis_ratio") <= cfg.maxEllipsisRatio
   }
 
-  /** handle-less [[cleanCorpusReleasable]] — run-one-query harnesses only;
-    * long-lived sessions take the releasable form. */
-  def cleanCorpus(df: DataFrame, idCol: String, textCol: String,
+  def cleanCorpus(seam: Seam, df: DataFrame, idCol: String, textCol: String,
                   isHoldout: Option[Column] = None,
                   cfg: CleanCorpusConfig = CleanCorpusConfig(),
-                  droppedBuckets: Option[LongAccumulator] = None): CleanCorpusStages =
-    cleanCorpusReleasable(df, idCol, textCol, isHoldout, cfg, droppedBuckets)._1
-
-  /** [[cleanCorpus]] plus ONE release handle that unpersists every block
-    * the funnel cached (both stage caches and the routed verify's pair
-    * list). Consume the stage frames you need FIRST, then release —
-    * re-evaluating a stage frame after release recomputes from source
-    * (correct, just uncached). */
-  def cleanCorpusReleasable(df: DataFrame, idCol: String, textCol: String,
-                            isHoldout: Option[Column] = None,
-                            cfg: CleanCorpusConfig = CleanCorpusConfig(),
-                            droppedBuckets: Option[LongAccumulator] = None)
-      : (CleanCorpusStages, () => Unit) = {
+                  droppedBuckets: Option[LongAccumulator] = None): CleanCorpusStages = {
     require(cfg.bands * cfg.rowsPerBand == cfg.nHashes,
       s"bands(${cfg.bands}) * rowsPerBand(${cfg.rowsPerBand}) must equal nHashes(${cfg.nHashes})")
     val inCols = df.columns.map(col).toSeq
-    val quality = df
-      .filter(qualityPredicate(textCol, cfg))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val quality = seam.persist(df.filter(qualityPredicate(textCol, cfg)))
     val canon = quality
       .groupBy(TextAnalysis.fingerprint(col(textCol)).as("_fp"))
       .agg(min(idCol).as(idCol))
-    val exactShingled = quality
+    val exactShingled = seam.persist(quality
       .join(canon.select(idCol), Seq(idCol), "left_semi")
       .withColumn("_ws", Dedup.wordsArray(textCol))
-      .withColumn("_shs", Dedup.wordShingles("_ws", cfg.shingleK))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_shs", Dedup.wordShingles("_ws", cfg.shingleK)))
     val withSig = exactShingled.filter(size(col("_shs")) > 0)
       .withColumn("_hs", Dedup.shingleBaseHashes("_shs"))
       .withColumn("_sig", Dedup.minhashSignature("_hs", cfg.nHashes))
-    val (verified, releaseVerify) = Dedup.jaccardOnPairsRoutedReleasable(
+    val verified = Dedup.jaccardOnPairs(seam,
       Dedup.lshCandidatePairs(
         Dedup.lshBands(withSig, idCol, "_sig", cfg.bands, cfg.rowsPerBand),
         idCol, droppedBuckets = droppedBuckets),
@@ -143,9 +127,8 @@ object CleanCorpus {
     // (cold materialization barrier over rows+shingle arrays, +1.5 s);
     // this pins only the thin verified-duplicate ID LIST, bounded by the
     // verified pairs. Value-neutral: same ids, same downstream rows.
-    val dropped = verified.filter(col("jaccard") >= cfg.nearDupThreshold)
-      .select(col("id_b").as(idCol)).distinct()
-      .localCheckpoint(true)
+    val dropped = seam.checkpoint(verified.filter(col("jaccard") >= cfg.nearDupThreshold)
+      .select(col("id_b").as(idCol)).distinct())
     // still NOT persisted (r16 interleaved A/B, honored): consumers
     // re-derive nearShingled from the persisted exactShingled + the
     // checkpointed dropped leaf — a cheap anti-join, not a verify re-run
@@ -173,20 +156,11 @@ object CleanCorpus {
           .join(contaminated, Seq(idCol), "left_anti")
           .select(inCols: _*)
     }
-    val stages = CleanCorpusStages(
+    CleanCorpusStages(
       corpus = df,
       quality = quality.select(inCols: _*),
       exactDeduped = exactShingled.select(inCols: _*),
       nearDeduped = nearShingled.select(inCols: _*),
       decontaminated = decontaminated)
-    val release = () => {
-      quality.unpersist(blocking = true)
-      exactShingled.unpersist(blocking = true)
-      // dropped is a localCheckpoint — blocks live on the RDD, outside
-      // the CacheManager
-      Dedup.checkpointRdd(dropped).foreach(_.unpersist(blocking = true))
-      releaseVerify()
-    }
-    (stages, release)
   }
 }

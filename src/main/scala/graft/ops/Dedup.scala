@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Seam
+
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
   *
@@ -145,55 +147,24 @@ object Dedup {
     *  - the cleaned text is rebuilt MAP-SIDE by a k-expansion boolean mask
     *    over the cached words array (per-row UDF, measured-justified:
     *    one linear pass), joined shuffle-hash so the corpus side is never
-    *    external-sorted;
-    *  - the reconstruct join can SPLIT by coverage (r15 VERDICT #3): in a
-    *    genuinely clean corpus most documents have ZERO covered positions,
-    *    yet the single left join ships every document's word array through
-    *    the shuffle. With `spark.graft.dedup.spanSplitMaxCoveredFraction`
-    *    (or the parameter) set above 0, the covered-doc ids are counted
-    *    off the persisted cov table; when the covered fraction is at or
-    *    under the knob AND the id set fits the broadcast budget
-    *    (`spark.graft.dedup.maxBroadcastPairs`), clean docs take a
-    *    BROADCAST anti join (map-side pass-through — their arrays never
-    *    cross the wire) and only covered docs ride the shuffle-hash join.
-    *    The DEFAULT (0.0) pins the single-join shape with ZERO measurement
-    *    jobs and no cov-table persist — the r13 lesson (fixed per-call
-    *    driver jobs regressed every verify consumer), re-measured r16:
-    *    this repo's test corpus is 61% covered at sf0.1 (bounded word
-    *    list ⇒ heavy cross-doc 5-gram repeats) and 100% covered under the
-    *    ×100 verbatim inflation, so the split is pure overhead HERE
-    *    (2.5 s vs 1.65 s at sf0.1) while remaining the right shape for a
-    *    real mostly-clean corpus — hence reachable, not default.
-    * Use the releasable form in long-lived sessions; the handle unpersists
-    * the cached tokenized corpus (and the cov table when the split
-    * measurement persisted it). */
-  def spanDedup(df: DataFrame, idCol: String, textCol: String,
-                k: Int): DataFrame =
-    spanDedupReleasable(df, idCol, textCol, k)._1
-
-  def spanDedupReleasable(df: DataFrame, idCol: String, textCol: String,
-                          k: Int, splitMaxCoveredFraction: Double = -1.0)
-      : (DataFrame, () => Unit) = {
-    val maxCovered =
-      if (splitMaxCoveredFraction >= 0) splitMaxCoveredFraction
-      else df.sparkSession.conf
-        .get("spark.graft.dedup.spanSplitMaxCoveredFraction", "0.0").toDouble
-    val words = df
+    *    external-sorted.
+    * A coverage split (clean docs bypassing the join by a broadcast anti
+    * join) measured 2.44–2.93 s against 1.57–1.70 s at sf0.1 and was
+    * deleted (PERF.md). The words cache belongs to `seam`: run the terminal
+    * action inside its scope. */
+  def spanDedup(seam: Seam, df: DataFrame, idCol: String, textCol: String,
+                k: Int): DataFrame = {
+    val words = seam.persist(df
       .withColumn("_ws", wordsArray(textCol))
-      .select(col(idCol), col("_ws"), size(col("_ws")).as("_n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("_ws"), size(col("_ws")).as("_n")))
     val grams = words.select(col(idCol),
       posexplode(wordShingleHashesAt("_ws", k)).as(Seq("_p", "_g")))
     val dupG = grams.groupBy("_g").agg(count(lit(1)).as("_cnt"))
       .filter(col("_cnt") > 1).select("_g")
-    val covSets0 = grams.join(dupG, "_g")
+    val covSets = grams.join(dupG, "_g")
       .select(col(idCol), col("_p"))
       .repartition(col(idCol))
       .groupBy(idCol).agg(collect_set(col("_p")).as("_cov"))
-    val covSets =
-      if (maxCovered > 0)
-        covSets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else covSets0
     val rebuild = udf { (ws0: Seq[String], cov: Seq[Int]) =>
       // null text → wordsArray yields null; same contract as the sibling
       // shingle UDFs (null in → empty doc out), this is a public op now
@@ -217,47 +188,13 @@ object Dedup {
       }
       (kept, sb.toString)
     }
-    def joined(w: DataFrame): DataFrame = w
+    words
       .join(covSets.hint("shuffle_hash"), Seq(idCol), "left")
       .select(col(idCol), col("_n"), rebuild(col("_ws"), col("_cov")).as("_r"))
       .select(col(idCol), col("_n").cast("long").as("n_words"),
         col("_r._1").as("n_kept"),
         (col("_n") - col("_r._1")).cast("long").as("n_removed"),
         col("_r._2").as("cleaned"))
-    // Coverage-split routing, reached ONLY when the knob opts into
-    // measurement (two bounded jobs over persisted frames: covered-id
-    // count off the cov table, total-doc count off the tokenized corpus —
-    // the gram pipeline still runs exactly once, into the cache). The
-    // default path skips both jobs and the cov persist entirely.
-    val out =
-      if (maxCovered <= 0) joined(words)
-      else {
-        val maxIds = resolveMaxBroadcastPairs(words, -1L)
-        val nCovered = covSets
-          .limit((math.min(maxIds, Int.MaxValue - 1L) + 1L).toInt).count()
-        val nDocs = math.max(words.count(), 1L)
-        if (nCovered <= maxIds && nCovered <= maxCovered * nDocs) {
-          val coveredIds = covSets.select(idCol)
-          // clean docs: map-side identity rebuild — kept = n_words,
-          // nothing removed, cleaned = the words re-joined (byte-identical
-          // to the rebuild UDF's mask-nothing path, including the
-          // null-text row: concat_ws over a null array is "" and n_kept
-          // coalesces to 0)
-          val cleanOut = words
-            .join(broadcast(coveredIds), Seq(idCol), "left_anti")
-            .select(col(idCol), col("_n").cast("long").as("n_words"),
-              coalesce(col("_n").cast("long"), lit(0L)).as("n_kept"),
-              (col("_n") - coalesce(col("_n"), lit(0))).cast("long").as("n_removed"),
-              concat_ws(" ", col("_ws")).as("cleaned"))
-          joined(words.join(broadcast(coveredIds), Seq(idCol), "left_semi"))
-            .unionByName(cleanOut)
-        } else joined(words)
-      }
-    (out, () => {
-      words.unpersist(blocking = true)
-      if (maxCovered > 0) covSets.unpersist(blocking = true)
-      ()
-    })
   }
 
   private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
@@ -329,26 +266,16 @@ object Dedup {
     * capped) banded join, and every candidate is verified with the exact
     * broadcast per-pair Jaccard — the scale shape the benched
     * d_jaccard_pairs_lsh pins, behind a one-argument knob. */
-  def nearDupPairsAt(df: DataFrame, idCol: String, shinglesCol: String,
-                     threshold: Double, nHashes: Int = 128): DataFrame =
-    nearDupPairsAtReleasable(df, idCol, shinglesCol, threshold, nHashes)._1
-
-  /** [[nearDupPairsAt]] plus the verify stage's release handle — the
-    * long-lived-session form (engine tool calls): the candidate pair list
-    * (and the posting route's candidate projection, when taken) is
-    * persisted until the handle runs. The verify is the r13 measured-routed
-    * shape ([[jaccardOnPairsRoutedReleasable]]). */
-  def nearDupPairsAtReleasable(df: DataFrame, idCol: String, shinglesCol: String,
-                               threshold: Double,
-                               nHashes: Int = 128): (DataFrame, () => Unit) = {
+  def nearDupPairsAt(seam: Seam, df: DataFrame, idCol: String,
+                     shinglesCol: String, threshold: Double,
+                     nHashes: Int = 128): DataFrame = {
     val (b, r) = bandingFor(threshold, nHashes)
     val withSig = df.filter(size(col(shinglesCol)) > 0)
       .withColumn("_hs", shingleBaseHashes(shinglesCol))
       .withColumn("_sig", minhashSignature("_hs", nHashes))
     val candidates = lshCandidatePairs(lshBands(withSig, idCol, "_sig", b, r), idCol)
-    val (verified, release) =
-      jaccardOnPairsRoutedReleasable(candidates, df, idCol, shinglesCol)
-    (verified.filter(col("jaccard") >= threshold), release)
+    jaccardOnPairs(seam, candidates, df, idCol, shinglesCol)
+      .filter(col("jaccard") >= threshold)
   }
 
   /** LSH banding: explode signature into (bandId, bandHash) rows.
@@ -443,34 +370,24 @@ object Dedup {
 
   /** exact n-gram Jaccard pairs over a shingle posting join; emits
     * (id_a, id_b, jaccard) for pairs sharing >= 1 shingle. */
-  def jaccardPairs(df: DataFrame, idCol: String, shinglesCol: String,
-                   threshold: Double): DataFrame =
-    jaccardPairsReleasable(df, idCol, shinglesCol, threshold)._1
-
-  /** [[jaccardPairs]] plus a release handle for the persisted postings —
-    * same contract as [[routedPairJoinReleasable]]: invoke after the
-    * terminal action; the handle-less overload leaves the blocks to the
-    * caller's session. */
-  def jaccardPairsReleasable(df: DataFrame, idCol: String, shinglesCol: String,
-                             threshold: Double): (DataFrame, () => Unit) = {
+  def jaccardPairs(seam: Seam, df: DataFrame, idCol: String,
+                   shinglesCol: String, threshold: Double): DataFrame = {
     // set size rides along the posting explode, so the per-pair union size
     // is recovered from the grouped rows themselves (max of a functionally-
     // dependent column) — no separate sizes relation, no post-agg joins.
     // Persisting the postings makes the self-join read the (expensive)
     // shingle projection once instead of once per side.
-    val posts = df.select(col(idCol), size(col(shinglesCol)).as("n_sh"),
-        explode(col(shinglesCol)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val posts = seam.persist(df.select(col(idCol), size(col(shinglesCol)).as("n_sh"),
+        explode(col(shinglesCol)).as("sh")))
     val l = posts.select(col("sh"), col(idCol).as("id_a"), col("n_sh").as("n_a"))
     val r = posts.select(col("sh"), col(idCol).as("id_b"), col("n_sh").as("n_b"))
-    val out = l.join(r, "sh").filter(col("id_a") < col("id_b"))
+    l.join(r, "sh").filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"), max("n_a").as("n_a"), max("n_b").as("n_b"))
       .withColumn("jaccard",
         round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 4))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    (out, () => { posts.unpersist(blocking = true); () })
   }
 
   /** Cross-document duplicate k-gram coverage — per document, the fraction
@@ -484,13 +401,7 @@ object Dedup {
     * Scale shape: both aggregations and the join are keyed on the gram —
     * two gram-hash shuffles over O(total grams) rows, never a document
     * pair join. Shingles arrive distinct per doc ([[wordShingles]]), so
-    * the gram→doc count IS the containing-doc count. */
-  def dupGramCoverage(docs: DataFrame, idCol: String,
-                      shinglesCol: String): DataFrame =
-    dupGramCoverageReleasable(docs, idCol, shinglesCol)._1
-
-  /** [[dupGramCoverage]] plus a release handle for the persisted compact
-    * shingle projection (same contract as [[jaccardPairsReleasable]]).
+    * the gram→doc count IS the containing-doc count.
     *
     * Plan shape (r15 rebuild — the r14 span-dedup playbook applied):
     * shingles are DISTINCT per doc ([[wordShingles]]), so a gram whose
@@ -511,10 +422,9 @@ object Dedup {
     * one-sided and vanishing for a ">= 2 docs" threshold signal (~1e-7 at
     * 1M distinct grams; even at 10^12 corpus grams the chance any count is
     * off stays in the percent range, far below the signal's own noise). */
-  def dupGramCoverageReleasable(docs: DataFrame, idCol: String,
-                                shinglesCol: String): (DataFrame, () => Unit) = {
-    val compact = docs.select(col(idCol), col(shinglesCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def dupGramCoverage(seam: Seam, docs: DataFrame, idCol: String,
+                      shinglesCol: String): DataFrame = {
+    val compact = seam.persist(docs.select(col(idCol), col(shinglesCol)))
     val totals = compact.select(col(idCol), size(col(shinglesCol)).as("n_grams"))
     // ONE gram-keyed pass: per gram, (occurrence count, smallest owner).
     // count==1 ⟹ min(doc) IS the sole owner; grams with count >= 2 are
@@ -523,12 +433,11 @@ object Dedup {
       .groupBy("_cg").agg(count(lit(1)).as("_ndocs"), min(col(idCol)).as(idCol))
       .filter(col("_ndocs") === 1)
       .groupBy(idCol).agg(count(lit(1)).as("_nsolo"))
-    val out = totals.join(solo, Seq(idCol), "left")
+    totals.join(solo, Seq(idCol), "left")
       .select(col(idCol),
         (round((col("n_grams") - coalesce(col("_nsolo"), lit(0L))) /
           greatest(col("n_grams"), lit(1)), 4) + 0.0).as("dup_gram_frac"),
         col("n_grams").cast("long").as("n_grams"))
-    (out, () => { compact.unpersist(blocking = true); () })
   }
 
   /** Candidate-pair count above which the verify stage stops forcing a
@@ -548,37 +457,26 @@ object Dedup {
     * broadcast the pair list when it is small (big sides never shuffle),
     * shuffle-hash join on the pair keys when it is not (the payload shuffle
     * is linear and affordable; an oversized forced broadcast is a hard
-    * failure). The pair list is persisted so the count does not recompute
-    * candidate generation — blocks live until the caller's session releases
-    * them (same caveat as [[jaccardPairs]]'s postings). `l` must carry
-    * `id_a` (+ payload), `r` must carry `id_b` (+ payload).
+    * failure). The pair list is persisted in `seam` so the count does not
+    * recompute candidate generation. `l` must carry `id_a` (+ payload), `r`
+    * must carry `id_b` (+ payload).
     *
     * `maxBroadcastPairs < 0` (the default) reads the session conf
     * `spark.graft.dedup.maxBroadcastPairs` (falling back to
     * [[MaxBroadcastPairs]]) — deployments size the broadcast budget to
     * their driver/executor memory without touching pipeline code. */
-  def routedPairJoin(pairs: DataFrame, l: DataFrame, r: DataFrame,
-                     maxBroadcastPairs: Long = -1L): DataFrame =
-    routedPairJoinReleasable(pairs, l, r, maxBroadcastPairs)._1
-
-  /** [[routedPairJoin]] plus a RELEASE HANDLE for the persisted pair
-    * projection. The lazily-returned join cannot unpersist its own input
-    * before the caller runs it, so the handle-less overload leaves the
-    * MEMORY_AND_DISK blocks to the caller's session (fine for a
-    * run-one-query harness, accumulation in a long-lived engine). Callers
-    * that own their terminal action invoke the handle AFTER it completes
-    * (earlier is safe — the plan recomputes — just wasteful); the blocking
-    * unpersist makes "blocks gone" synchronous, so a session-hygiene gate
-    * (getPersistentRDDs empty) can assert it deterministically. */
-  def routedPairJoinReleasable(pairs: DataFrame, l: DataFrame, r: DataFrame,
-                               maxBroadcastPairs: Long = -1L): (DataFrame, () => Unit) = {
-    val limit = resolveMaxBroadcastPairs(pairs, maxBroadcastPairs)
-    val p = pairs.select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
-    (routedPairJoinCounted(p, n, limit, l, r),
-      () => { p.unpersist(blocking = true); () })
+  def routedPairJoin(seam: Seam, pairs: DataFrame, l: DataFrame, r: DataFrame,
+                     maxBroadcastPairs: Long = -1L): DataFrame = {
+    val p = seam.persist(pairs.select(col("id_a").cast("long").as("id_a"),
+      col("id_b").cast("long").as("id_b")))
+    if (p.count() <= resolveMaxBroadcastPairs(pairs, maxBroadcastPairs))
+      l.join(broadcast(p), Seq("id_a")).join(r, Seq("id_b"))
+    else
+      // shuffle_hash on the pair side: both joins repartition by their key
+      // and hash-build the (smaller) pair partitions — no sort of the
+      // payload side, no size-estimate gamble on a broadcast.
+      l.join(p.hint("shuffle_hash"), Seq("id_a"))
+        .join(r, Seq("id_b"))
   }
 
   private def resolveMaxBroadcastPairs(df: DataFrame,
@@ -588,23 +486,6 @@ object Dedup {
       .get("spark.graft.dedup.maxBroadcastPairs", MaxBroadcastPairs.toString)
       .toLong
 
-  /** the join-shape decision of [[routedPairJoinReleasable]] given an
-    * ALREADY-persisted, already-counted canonical (long id_a, id_b) pair
-    * projection — the shared tail reused by the measured route in
-    * [[pairStatsRoutedReleasable]], which has its own persisted copy and
-    * exact count in hand (ADVICE r13: the carry route used to persist and
-    * driver-count the same pair list a second time here). */
-  private def routedPairJoinCounted(p: DataFrame, n: Long, limit: Long,
-                                    l: DataFrame, r: DataFrame): DataFrame =
-    if (n <= limit)
-      l.join(broadcast(p), Seq("id_a")).join(r, Seq("id_b"))
-    else
-      // shuffle_hash on the pair side: both joins repartition by their key
-      // and hash-build the (smaller) pair partitions — no sort of the
-      // payload side, no size-estimate gamble on a broadcast.
-      l.join(p.hint("shuffle_hash"), Seq("id_a"))
-        .join(r, Seq("id_b"))
-
   /** Semi-join a payload side down to the ids a candidate pair list
     * touches, routing by the MEASURED distinct-id count — the same
     * discipline as [[routedPairJoin]], applied to the id projection. The
@@ -613,28 +494,13 @@ object Dedup {
     * the semi-join shuffles on `idCol` instead of forcing an unbounded
     * broadcast ("small by construction" is not a bound — a boilerplate
     * crawl's candidate explosion reaches the id set too). `ids` is
-    * persisted for the count; caller's session releases the blocks. */
-  def routedSemiJoin(payload: DataFrame, ids: DataFrame, idCol: String,
-                     maxBroadcastPairs: Long = -1L): DataFrame =
-    routedSemiJoinReleasable(payload, ids, idCol, maxBroadcastPairs)._1
-
-  /** [[routedSemiJoin]] plus a release handle for the persisted id set —
-    * same contract as [[routedPairJoinReleasable]]. Per-micro-batch callers
-    * (the streaming dedup twin) MUST use this form: one leaked cached id
-    * block per batch accumulates for the stream's lifetime. */
-  def routedSemiJoinReleasable(payload: DataFrame, ids: DataFrame, idCol: String,
-                               maxBroadcastPairs: Long = -1L): (DataFrame, () => Unit) = {
-    val limit = 2 * (
-      if (maxBroadcastPairs >= 0) maxBroadcastPairs
-      else ids.sparkSession.conf
-        .get("spark.graft.dedup.maxBroadcastPairs", MaxBroadcastPairs.toString)
-        .toLong)
-    val p = ids.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
-    val joined =
-      if (n <= limit) payload.join(broadcast(p), Seq(idCol), "left_semi")
-      else payload.join(p.hint("shuffle_hash"), Seq(idCol), "left_semi")
-    (joined, () => { p.unpersist(blocking = true); () })
+    * persisted in `seam` for the count. */
+  def routedSemiJoin(seam: Seam, payload: DataFrame, ids: DataFrame,
+                     idCol: String, maxBroadcastPairs: Long = -1L): DataFrame = {
+    val p = seam.persist(ids)
+    if (p.count() <= 2 * resolveMaxBroadcastPairs(ids, maxBroadcastPairs))
+      payload.join(broadcast(p), Seq(idCol), "left_semi")
+    else payload.join(p.hint("shuffle_hash"), Seq(idCol), "left_semi")
   }
 
   /** 64-bit-hashed twin of a shingle array column: per-element xxhash64,
@@ -654,263 +520,44 @@ object Dedup {
     transform(col(shinglesCol), s => xxhash64(s))
 
   /** exact Jaccard evaluated ONLY on given (id_a, id_b) pairs — the verify
-    * stage after LSH blocking. Per pair this is one array_intersect over the
-    * two (distinct) shingle arrays: no posting self-join, no quadratic
-    * blowup. The pair list joins via [[routedPairJoin]]: broadcast below
-    * [[MaxBroadcastPairs]] candidates, shuffle join above. The carried
-    * payload is [[hashedShingles]] longs, not the shingle strings — set
-    * sizes and intersections (hence the emitted jaccard) are unchanged up
-    * to 64-bit collisions (contract documented there), and the verify
-    * exchange narrows ~5-6×. */
-  def jaccardOnPairs(pairs: DataFrame, df: DataFrame, idCol: String,
-                     shinglesCol: String,
-                     maxBroadcastPairs: Long = -1L): DataFrame =
-    jaccardOnPairsReleasable(pairs, df, idCol, shinglesCol, maxBroadcastPairs)._1
-
-  /** [[jaccardOnPairs]] plus the routed join's release handle
-    * ([[routedPairJoinReleasable]]) — for callers that own their terminal
-    * action, e.g. the per-micro-batch verify in the streaming dedup twin. */
-  def jaccardOnPairsReleasable(pairs: DataFrame, df: DataFrame, idCol: String,
-                               shinglesCol: String,
-                               maxBroadcastPairs: Long = -1L): (DataFrame, () => Unit) = {
-    val (stats, release) = pairStatsCarry(pairs, df, idCol, shinglesCol,
-      maxBroadcastPairs)
-    (stats.withColumn("jaccard", round(col("_inter") /
+    * stage after LSH blocking: one array_intersect per pair over the two
+    * (distinct) shingle sets, no posting self-join, no quadratic blowup
+    * ([[pairStats]] has the plan shape). A pair sharing no gram verifies
+    * to 0.0; a pair whose id is absent from `df` drops. */
+  def jaccardOnPairs(seam: Seam, pairs: DataFrame, df: DataFrame, idCol: String,
+                     shinglesCol: String, maxBroadcastPairs: Long = -1L): DataFrame =
+    pairStats(seam, pairs, df, idCol, shinglesCol, maxBroadcastPairs)
+      .withColumn("jaccard", round(col("_inter") /
         (col("_n_a") + col("_n_b") - col("_inter")), 4))
-      .select(col("id_a"), col("id_b"), col("jaccard")), release)
-  }
+      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Pair-carry intersection stats — per candidate pair, the shared-gram
     * count plus both set sizes: (id_a, id_b, _inter, _n_a, _n_b). The
     * common core under Jaccard (union from sizes) and containment (either
-    * size as denominator); the payload moved is [[hashedShingles]] longs
-    * via [[routedPairJoinReleasable]]. */
-  private def pairStatsCarry(pairs: DataFrame, df: DataFrame, idCol: String,
-                             shinglesCol: String,
-                             maxBroadcastPairs: Long): (DataFrame, () => Unit) = {
-    val (l, r) = carryProjections(df, idCol, shinglesCol)
-    val (joined, release) = routedPairJoinReleasable(pairs, l, r, maxBroadcastPairs)
-    (carryStats(joined), release)
-  }
-
-  /** the carry route's per-side (id, hashed-gram set) projections.
-    * array_distinct matches the posting route's size projection (ADVICE
-    * r13: the two routes disagreed on _n_a/_n_b — hence jaccard — for a
-    * caller passing a shingles column with duplicate elements; every
-    * in-repo generator already emits distinct shingles, so this is
-    * value-neutral on the oracle set and closes the divergence for
-    * external callers). _inter was already consistent — array_intersect
-    * dedupes by definition. */
-  private def carryProjections(df: DataFrame, idCol: String,
-                               shinglesCol: String): (DataFrame, DataFrame) = (
-    df.select(col(idCol).cast("long").as("id_a"),
-      array_distinct(hashedShingles(shinglesCol)).as("_shs_a")),
-    df.select(col(idCol).cast("long").as("id_b"),
-      array_distinct(hashedShingles(shinglesCol)).as("_shs_b")))
-
-  private def carryStats(joined: DataFrame): DataFrame = joined
-    // cast matches the posting route's count(): one schema across routes
-    .withColumn("_inter",
-      size(array_intersect(col("_shs_a"), col("_shs_b"))).cast("long"))
-    .select(col("id_a"), col("id_b"), col("_inter"),
-      size(col("_shs_a")).as("_n_a"), size(col("_shs_b")).as("_n_b"))
-
-  /** Pairs-per-candidate-doc ratio above which the verify stage re-routes
-    * from the pair-carry join onto the posting-join shape — DEFAULT
-    * EFFECTIVELY OFF, by measurement (PERF.md r13). The hypothesis was
-    * that the pair carry's per-pair array duplication (~group-size copies
-    * of each doc's array through the exchange in a g-twin group) loses to
-    * a posting shape that explodes each candidate doc's grams once. The
-    * same-state 100× adversarial rows say otherwise: posting eliminates
-    * spill ENTIRELY (27.3 GB → 0, max task 427 MB → 0) but pays 2.3×
-    * shuffle (the cross-group gram fan-out pairs candidate docs the LSH
-    * list never admitted) and 1.86× wall (206 → 383 s). Spill at 427 MB
-    * per worst task is bounded, not a scale-killer, so wall rules and the
-    * carry stays the auto choice. The posting route remains behind
-    * `spark.graft.dedup.postingVerifyFactor` (or the per-call parameter)
-    * for deployments where executor memory, not wall, binds — both routes
-    * stay equivalence- and plan-pinned either way. */
-  val PostingVerifyFactor: Double = 1e9
-
-  /** [[jaccardOnPairs]] with the verify SHAPE itself routed by measurement:
-    * counts the candidate pairs and (approximately) the distinct ids they
-    * touch in one pass over the persisted pair list, then
-    *  - pairs ≤ factor × ids → the pair-carry join (broadcast/
-    *    shuffle-routed), whose exchange is O(pairs × signature array);
-    *  - pairs > factor × ids → a posting join RESTRICTED to the candidate
-    *    docs: semi-join the payload down to ids the pairs touch, explode
-    *    each doc's hashed grams once, count shared grams per co-occurring
-    *    pair (pair-key repartitioned BEFORE the count — the
-    *    lshCandidatePairs discipline; the map-side variant measured 221 GB
-    *    of partial-agg spill), then join the requested pair list back
-    *    (left — a candidate pair sharing no gram verifies to jaccard 0,
-    *    exactly as the pair carry scores it).
-    * Both routes emit identical (id_a, id_b, jaccard) values (OpsSpec pins
-    * equality pair-for-pair, zero-intersection pairs included).
+    * size as denominator). The pair list joins via [[routedPairJoin]]
+    * (broadcast below [[MaxBroadcastPairs]] candidates, shuffle above),
+    * carrying [[hashedShingles]] longs rather than the shingle strings:
+    * set sizes and intersections are unchanged up to 64-bit collisions
+    * (contract documented there), and the verify exchange narrows ~5-6×.
+    * Each side sizes its DISTINCT set (array_distinct), so a shingles
+    * column with duplicate elements scores on sets; array_intersect
+    * dedupes by definition.
     *
-    * CAVEAT the measurement surfaced ([[PostingVerifyFactor]], PERF.md
-    * r13): within one gram the posting join pairs ALL candidate docs that
-    * share it — including cross-group pairs the LSH candidate list never
-    * admitted — so boilerplate grams common across twin groups inflate its
-    * fan-out beyond the admitted pair set. At the 100× adversarial regime
-    * that made posting spill-free but 1.86× slower than the carry, which
-    * is why the default factor never auto-picks it. `postingFactor`: < 0
-    * reads the session conf (default [[PostingVerifyFactor]]); 0 forces
-    * the posting route (tests/stress/spill-bound deployments); a huge
-    * value pins the pair carry. At factor ≥ [[PostingVerifyFactor]] —
-    * including the default — posting is unreachable, so the measurement
-    * job is SKIPPED entirely: no extra pair persist, no count/HLL/head
-    * (VERDICT r13 attributed the dedup-family bench regression to that
-    * fixed per-call job running at the never-auto default). When the
-    * measurement does run and picks the carry, its persisted pair list
-    * and exact count feed the carry join directly — one cached copy, one
-    * driver job per verify.
-    *
-    * Contract: pairs are CANONICAL (`id_a < id_b`) — what every in-repo
-    * candidate generator emits ([[lshCandidatePairs]]'s `j > i` guard, the
-    * index store's delta probe). The posting route counts co-occurrence
-    * under that ordering; a reversed pair would verify to 0 there while
-    * the pair carry scores it symmetrically. */
-  def jaccardOnPairsRouted(pairs: DataFrame, df: DataFrame, idCol: String,
-                           shinglesCol: String, maxBroadcastPairs: Long = -1L,
-                           postingFactor: Double = -1.0): DataFrame =
-    jaccardOnPairsRoutedReleasable(pairs, df, idCol, shinglesCol,
-      maxBroadcastPairs, postingFactor)._1
-
-  /** [[jaccardOnPairsRouted]] plus the release handle for every block the
-    * chosen route persists (pair list, and on the posting route the
-    * semi-joined candidate projection) — contract of
-    * [[routedPairJoinReleasable]]. */
-  def jaccardOnPairsRoutedReleasable(pairs: DataFrame, df: DataFrame,
-                                     idCol: String, shinglesCol: String,
-                                     maxBroadcastPairs: Long = -1L,
-                                     postingFactor: Double = -1.0): (DataFrame, () => Unit) = {
-    val (stats, release) = pairStatsRoutedReleasable(pairs, df, idCol,
-      shinglesCol, maxBroadcastPairs, postingFactor)
-    (stats.withColumn("jaccard",
-        round(coalesce(col("_inter"), lit(0L)) /
-          (col("_n_a") + col("_n_b") - coalesce(col("_inter"), lit(0L))), 4))
-      .select(col("id_a"), col("id_b"), col("jaccard")), release)
-  }
-
-  /** Measured-routed pair intersection stats (id_a, id_b, _inter, _n_a,
-    * _n_b) — the shared core of [[jaccardOnPairsRoutedReleasable]] and the
-    * containment verify (both denominators are recoverable from the same
-    * three numbers). `_inter` is null (not 0) for a posting-route pair
-    * sharing no gram — consumers coalesce. Routing/contract as documented
-    * on [[jaccardOnPairsRouted]]. */
-  /** handle-less [[pairStatsRoutedReleasable]] — run-one-query harnesses;
-    * long-lived sessions take the releasable form */
-  def pairStatsRouted(pairs: DataFrame, df: DataFrame, idCol: String,
-                      shinglesCol: String, maxBroadcastPairs: Long = -1L,
-                      postingFactor: Double = -1.0): DataFrame =
-    pairStatsRoutedReleasable(pairs, df, idCol, shinglesCol,
-      maxBroadcastPairs, postingFactor)._1
-
-  def pairStatsRoutedReleasable(pairs: DataFrame, df: DataFrame,
-                                idCol: String, shinglesCol: String,
-                                maxBroadcastPairs: Long = -1L,
-                                postingFactor: Double = -1.0): (DataFrame, () => Unit) = {
-    val factor =
-      if (postingFactor >= 0) postingFactor
-      else pairs.sparkSession.conf
-        .get("spark.graft.dedup.postingVerifyFactor", PostingVerifyFactor.toString)
-        .toDouble
-    // Route pinned to the pair carry (factor at/above the never-auto
-    // default): the posting route is unreachable, so the measurement job
-    // below would buy NOTHING — skip it entirely (no extra pair persist, no
-    // count/HLL/head). VERDICT r13 attributed the dedup-family bench
-    // regression (d_dup_groups 2.31 -> 5.05 s) to exactly this fixed
-    // per-call driver job landing on all seven verify consumers at the
-    // default knob. Measure only when the knob makes routing a real
-    // decision.
-    if (factor >= PostingVerifyFactor)
-      pairStatsCarry(pairs, df, idCol, shinglesCol, maxBroadcastPairs)
-    else pairStatsMeasured(pairs, df, idCol, shinglesCol, maxBroadcastPairs,
-      factor)
-  }
-
-  /** the measured leg of [[pairStatsRoutedReleasable]]: one measurement job
-    * over the persisted pair list picks carry vs posting. Only reached when
-    * the effective factor makes posting genuinely reachable. */
-  private def pairStatsMeasured(pairs: DataFrame, df: DataFrame,
-                                idCol: String, shinglesCol: String,
-                                maxBroadcastPairs: Long,
-                                factor: Double): (DataFrame, () => Unit) = {
-    val p = pairs.select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE measurement job over the cached pairs: exact pair count + approx
-    // distinct touched ids (HLL partial-merged, no shuffle of the ids —
-    // the route threshold tolerates the ~2% estimate error)
-    val m = p.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
-      .agg(count(lit(1)).as("n2"), approx_count_distinct("_id").as("nid"))
-      .head()
-    val nPairs = m.getLong(0) / 2
-    val nIds = math.max(m.getLong(1), 1L)
-    if (nPairs <= factor * nIds) {
-      dedupLog.info(s"verify route: pair-carry (pairs=$nPairs ids~$nIds " +
-        s"factor=$factor)")
-      // reuse the ALREADY-persisted canonical pair list and its exact count
-      // for the carry join's broadcast-vs-shuffle decision (ADVICE r13: this
-      // path used to persist a second projection of the same pairs and run
-      // a second driver-blocking count inside routedPairJoinReleasable —
-      // two cached copies and two jobs per verify)
-      val limit = resolveMaxBroadcastPairs(pairs, maxBroadcastPairs)
-      val (lp, rp) = carryProjections(df, idCol, shinglesCol)
-      val out = carryStats(routedPairJoinCounted(p, nPairs, limit, lp, rp))
-      (out, () => { p.unpersist(blocking = true); () })
-    } else {
-      dedupLog.info(s"verify route: posting-join (pairs=$nPairs ids~$nIds " +
-        s"factor=$factor)")
-      val cand = p.select(col("id_a").as(idCol))
-        .union(p.select(col("id_b").as(idCol))).distinct()
-      // project BEFORE the semi-join: the exchange (if the id set is too
-      // big to broadcast) then moves (id, hashed grams), never the text
-      val payload = df.select(col(idCol).cast("long").as(idCol),
-        array_distinct(hashedShingles(shinglesCol)).as("_shs"))
-      val (candDocs0, relSemi) =
-        routedSemiJoinReleasable(payload, cand, idCol, maxBroadcastPairs)
-      // feeds the size projection + BOTH posting sides — cache the compact
-      // hashed projection once instead of recomputing the shingle pipeline
-      val candDocs = candDocs0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sizes = candDocs.select(col(idCol), size(col("_shs")).as("_n"))
-      val posts = candDocs.select(col(idCol), explode(col("_shs")).as("_g"))
-      // gram-keyed co-occurrence count: each candidate doc's grams cross
-      // the first exchange ONCE. The raw co-occurrence stream is then
-      // repartitioned by PAIR KEY before the count — the same discipline
-      // lshCandidatePairs documents: a partial aggregate inside the
-      // exploding join stage holds (pairs visible to this task) hash-map
-      // state against an input amplified ~|gram bucket|× over its input,
-      // which measured 221 GB of spill at the 100× adversarial regime;
-      // the repartitioned plan streams thin (id_a, id_b) rows through the
-      // exchange and builds each pair's count post-shuffle from its own
-      // partition's share.
-      val inter = posts.select(col("_g"), col(idCol).as("id_a"))
-        .join(posts.select(col("_g"), col(idCol).as("id_b")), "_g")
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .repartition(col("id_a"), col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("_inter"))
-      val out = p
-        .join(sizes.select(col(idCol).as("id_a"), col("_n").as("_n_a")), Seq("id_a"))
-        .join(sizes.select(col(idCol).as("id_b"), col("_n").as("_n_b")), Seq("id_b"))
-        .join(inter, Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("_inter"),
-          col("_n_a"), col("_n_b"))
-      (out, () => {
-        candDocs.unpersist(blocking = true)
-        relSemi()
-        p.unpersist(blocking = true)
-        ()
-      })
-    }
-  }
-
-  /** driver-side route-decision audit logger */
-  @transient private lazy val dedupLog =
-    org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
+    * A posting-join verify (explode each candidate doc's grams once,
+    * count co-occurrence per pair) was measured against this carry and
+    * deleted: at the 100× adversarial regime it removed the spill but
+    * paid 2.3× shuffle and 1.86× wall (PERF.md r13). */
+  def pairStats(seam: Seam, pairs: DataFrame, df: DataFrame, idCol: String,
+                shinglesCol: String, maxBroadcastPairs: Long = -1L): DataFrame =
+    routedPairJoin(seam, pairs,
+      df.select(col(idCol).cast("long").as("id_a"),
+        array_distinct(hashedShingles(shinglesCol)).as("_shs_a")),
+      df.select(col(idCol).cast("long").as("id_b"),
+        array_distinct(hashedShingles(shinglesCol)).as("_shs_b")),
+      maxBroadcastPairs)
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("_shs_a"), col("_shs_b"))).cast("long").as("_inter"),
+        size(col("_shs_a")).as("_n_a"), size(col("_shs_b")).as("_n_b"))
 
   /** SimHash over a words-array column: distinct words hashed (portable
     * md5-60-bit), bit b of the result set iff the signed sum of word-hash
@@ -1071,17 +718,9 @@ object Dedup {
     * each verified pair (vectordb upsert keeps first-write); this operator
     * is the corpus-scale generalization that makes the survivor choice
     * well-defined on chains. */
-  /** The persisted RDD behind a `localCheckpoint(true)`ed Dataset, if any.
-    * Checkpoint blocks live on the RDD (not in the CacheManager), so this
-    * is the only handle through which they can be released eagerly. */
-  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   def connectedComponents(edges: DataFrame, idACol: String = "id_a",
-                          idBCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                          idBCol: String = "id_b",
+                          maxIter: Int = 25): DataFrame = Seam.closedOnFailure { s =>
     // NO distinct on the symmetrized edge stream: min-label propagation is
     // IDEMPOTENT under duplicate edges (min over neighbors is unchanged by
     // repeats), so deduping here would spend a full shuffle + aggregate
@@ -1089,82 +728,70 @@ object Dedup {
     // inflation that aggregate was the stage's dominant spill. Callers
     // that pass duplicate edges just pay proportional join cost, never a
     // wrong answer.
-    val sym = edges
+    val sym = s.persist(edges
       .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
-      .union(edges.select(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    try {
-      // localCheckpoint per round: labels feeds the NEXT round's plan twice
-      // (neighbor join + least/coalesce), so without lineage truncation the
-      // logical plan doubles every iteration — O(2^rounds) plan nodes blows
-      // the driver before the data is ever large. Checkpointing makes each
-      // round's plan one join deep; on a cluster a reliable checkpoint
-      // (HDFS) replaces the local one, same shape. Superseded rounds'
-      // blocks are unpersisted EAGERLY below — waiting for the
-      // ContextCleaner to GC them lets one round per iteration pile up in
-      // the BlockManager for the rest of the session, squeezing execution
-      // memory for whatever runs next in the same JVM.
-      var labels = sym.select(col("src").as("id"))
-        .distinct()
-        .select(col("id"), col("id").as("comp"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIter) {
-        val nbrMin = sym
-          .join(labels.select(col("id").as("dst"), col("comp").as("nbr_comp")), Seq("dst"))
-          .groupBy("src").agg(min("nbr_comp").as("nbr_comp"))
-        val stepped = labels
-          .join(nbrMin.select(col("src").as("id"), col("nbr_comp")), Seq("id"), "left")
-          .select(col("id"), col("comp").as("old_comp"),
-            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        // Pointer jumping (shortcutting): additionally replace comp with
-        // label(comp). Labels are monotone non-increasing and label(x) <= x,
-        // so each round DOUBLES the propagation distance — a diameter-d
-        // chain converges in O(log d) rounds instead of O(d), removing the
-        // long-chain cliff (a 100-link boilerplate dup chain: ~8 rounds).
-        // Same per-round shape: one extra equi-join on the label table.
-        // The convergence count rides the checkpoint's own materialization
-        // job as an observed metric (CollectMetricsExec accumulates while
-        // the eager checkpoint computes the rows) — previously this was a
-        // SECOND job per round re-scanning the freshly checkpointed labels
-        // just to count changed rows: 2 jobs/round → 1, and at scale one
-        // full labels pass per round is gone. The metric is read
-        // SYNCHRONOUSLY off the executed plan's accumulators
-        // (queryExecution.observedMetrics), not via the Observation helper,
-        // whose value arrives on the async listener bus — measured slower
-        // than the count job it replaces when the bus lags a heavy round.
-        // coalesce: sum over an EMPTY label table is null (edges with zero
-        // distinct ids), which must read as converged, not crash.
-        // INVARIANT (ADVICE r17): the observed sum is accumulator-backed,
-        // so a stage retry / speculative duplicate can OVER-count changed
-        // rows — that only costs a spare round (the loop re-checks next
-        // iteration); an UNDER-count is impossible (every committed task's
-        // rows are accumulated at least once), so the loop can never exit
-        // while labels are still moving. A refactor must preserve this
-        // direction: convergence may be detected late, never early.
-        val observed = stepped
-          .join(labels.select(col("id").as("comp"), col("comp").as("hop")),
-            Seq("comp"), "left")
-          .select(col("id"), col("old_comp"),
-            least(col("comp"), coalesce(col("hop"), col("comp"))).as("comp"))
-          .observe("cc_changed", coalesce(
-            sum(when(col("comp") =!= col("old_comp"), 1L).otherwise(0L)),
-            lit(0L)).as("changed"))
-        val next = observed.localCheckpoint(true)
-        changed = observed.queryExecution.observedMetrics("cc_changed")
-          .getAs[Long]("changed")
-        // `next` is eagerly materialized into its own blocks, so the
-        // previous round's checkpoint is now dead weight — release it.
-        checkpointRdd(labels).foreach(_.unpersist(blocking = true))
-        labels = next.select("id", "comp")
-        iter += 1
-      }
-      if (changed > 0)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter rounds")
-      labels
-    } finally sym.unpersist()
+      .union(edges.select(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst"))))
+    // localCheckpoint per round: labels feeds the NEXT round's plan twice
+    // (neighbor join + least/coalesce), so without lineage truncation the
+    // logical plan doubles every iteration — O(2^rounds) plan nodes blows
+    // the driver before the data is ever large. Checkpointing makes each
+    // round's plan one join deep; on a cluster a reliable checkpoint
+    // (HDFS) replaces the local one, same shape. Superseded rounds'
+    // blocks are unpersisted EAGERLY below — waiting for the
+    // ContextCleaner to GC them lets one round per iteration pile up in
+    // the BlockManager for the rest of the session, squeezing execution
+    // memory for whatever runs next in the same JVM. A failure (no
+    // convergence included) closes the seam, so no round's labels stay.
+    var labels = s.checkpoint(sym.select(col("src").as("id"))
+      .distinct()
+      .select(col("id"), col("id").as("comp")))
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIter) {
+      val nbrMin = sym
+        .join(labels.select(col("id").as("dst"), col("comp").as("nbr_comp")), Seq("dst"))
+        .groupBy("src").agg(min("nbr_comp").as("nbr_comp"))
+      val stepped = labels
+        .join(nbrMin.select(col("src").as("id"), col("nbr_comp")), Seq("id"), "left")
+        .select(col("id"), col("comp").as("old_comp"),
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
+      // Pointer jumping (shortcutting): additionally replace comp with
+      // label(comp). Labels are monotone non-increasing and label(x) <= x,
+      // so each round DOUBLES the propagation distance — a diameter-d
+      // chain converges in O(log d) rounds instead of O(d), removing the
+      // long-chain cliff (a 100-link boilerplate dup chain: ~8 rounds).
+      // Same per-round shape: one extra equi-join on the label table.
+      // The convergence count rides the checkpoint's own materialization
+      // job as an observed metric: 1 job per round, not a re-count.
+      // coalesce: sum over an EMPTY label table is null (edges with zero
+      // distinct ids), which must read as converged, not crash.
+      // INVARIANT (ADVICE r17): the observed sum is accumulator-backed,
+      // so a stage retry / speculative duplicate can OVER-count changed
+      // rows — that only costs a spare round (the loop re-checks next
+      // iteration); an UNDER-count is impossible (every committed task's
+      // rows are accumulated at least once), so the loop can never exit
+      // while labels are still moving. A refactor must preserve this
+      // direction: convergence may be detected late, never early.
+      val (next, m) = s.checkpointObserved(stepped
+        .join(labels.select(col("id").as("comp"), col("comp").as("hop")),
+          Seq("comp"), "left")
+        .select(col("id"), col("old_comp"),
+          least(col("comp"), coalesce(col("hop"), col("comp"))).as("comp")),
+        "cc_changed", coalesce(
+          sum(when(col("comp") =!= col("old_comp"), 1L).otherwise(0L)),
+          lit(0L)).as("changed"))
+      changed = m.getAs[Long]("changed")
+      // `next` is eagerly materialized into its own blocks, so the
+      // previous round's checkpoint is now dead weight — release it.
+      s.release(labels)
+      labels = next.select("id", "comp")
+      iter += 1
+    }
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds")
+    s.release(sym, blocking = false)
+    labels
   }
 
   /** embedding-cosine near-dup pairs (a < b, rounded cosine >= threshold).

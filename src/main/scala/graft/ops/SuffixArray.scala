@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Seam
+
 /** Distributed suffix-array construction by prefix doubling
   * (Manber–Myers; the distributed formulation follows Flick & Aluru,
   * "Parallel distributed memory construction of suffix and LCP arrays",
@@ -101,7 +103,7 @@ object SuffixArray {
     * (exact, from the callers' ride-along agg) picks the round-cache
     * storage level via [[SerializeCacheAbove]]. */
   private def rankUnits(units: DataFrame, maxLen: Int,
-                        totalUnits: Long): DataFrame = {
+                        totalUnits: Long): DataFrame = Seam.closedOnFailure { seam =>
     val cacheLevel =
       if (totalUnits > SerializeCacheAbove)
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
@@ -110,13 +112,6 @@ object SuffixArray {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
 
-    def ckRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-    def release(df: DataFrame): Unit =
-      ckRdd(df).foreach(_.unpersist(blocking = true))
-
     // Sort + zipWithIndex dense ranking: rows ordered by `by`, indexed in
     // global sort order (range partitioning keeps this distributed).
     // zipWithIndex launches a per-partition-count job that EXECUTES the
@@ -124,7 +119,7 @@ object SuffixArray {
     // in the cache and the eager checkpoint below consumes it, instead of
     // re-running every sort twice; the parent blocks drop immediately
     // after. Returns an eagerly checkpointed frame — caller releases it
-    // (via the checkpoint RDD) when superseded.
+    // when superseded.
     def denseIndex(df: DataFrame, by: Seq[Column], out: Seq[String]): DataFrame = {
       val sorted = df.orderBy(by: _*)
       // ADAPTIVE storage (see SerializeCacheAbove): serialized above the
@@ -138,9 +133,8 @@ object SuffixArray {
       val indexed = srdd.zipWithIndex().map { case (r, i) =>
         Row.fromSeq(r.toSeq :+ i)
       }
-      val result = spark.createDataFrame(indexed, schema)
-        .select((out :+ "idx").map(col): _*)
-        .localCheckpoint(true)
+      val result = seam.checkpoint(spark.createDataFrame(indexed, schema)
+        .select((out :+ "idx").map(col): _*))
       srdd.unpersist(blocking = false)
       result
     }
@@ -149,10 +143,9 @@ object SuffixArray {
     val unitRanks = denseIndex(units.select("unit").distinct(),
         Seq(col("unit")), Seq("unit"))
       .withColumnRenamed("idx", "rank")
-    var ranks = units.join(unitRanks, "unit")
-      .select(col("doc_id"), col("pos"), col("rank"))
-      .localCheckpoint(true)
-    release(unitRanks)
+    var ranks = seam.checkpoint(units.join(unitRanks, "unit")
+      .select(col("doc_id"), col("pos"), col("rank")))
+    seam.release(unitRanks)
 
     def distinctRanks(df: DataFrame): Long =
       df.agg(countDistinct(col("rank"))).head().getLong(0)
@@ -172,12 +165,11 @@ object SuffixArray {
       val keys = denseIndex(
         paired.select("rank", "rank2").distinct(),
         Seq(col("rank"), col("rank2")), Seq("rank", "rank2"))
-      val next = paired.join(keys, Seq("rank", "rank2"))
-        .select(col("doc_id"), col("pos"), col("idx").as("rank"))
-        .localCheckpoint(true)
+      val next = seam.checkpoint(paired.join(keys, Seq("rank", "rank2"))
+        .select(col("doc_id"), col("pos"), col("idx").as("rank")))
       val d = distinctRanks(next)
-      release(keys)
-      release(ranks)
+      seam.release(keys)
+      seam.release(ranks)
       ranks = next
       fixed = d == prevDistinct // no refinement ⇒ fixed point
       prevDistinct = d
@@ -192,7 +184,7 @@ object SuffixArray {
       Seq("doc_id", "pos"))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("idx").as("rank"))
-    release(ranks)
+    seam.release(ranks)
     out
   }
 

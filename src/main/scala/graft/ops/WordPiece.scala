@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.DriverProbe
+import graft.core.{DriverProbe, Seam}
 
 /** WordPiece tokenizer training and application — the third tokenizer
   * family next to [[Bpe]] and [[Unigram]], and the BERT-lineage one
@@ -87,32 +87,29 @@ object WordPiece {
         math.min(8, spark.sparkContext.defaultParallelism).toString)
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try loop(spark, docs, textCol, numMerges, minCount, batchK)
+    try Seam.scoped(loop(_, spark, docs, textCol, numMerges, minCount, batchK))
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
 
-  private def loop(spark: SparkSession, docs: DataFrame, textCol: String,
+  private def loop(seam: Seam, spark: SparkSession, docs: DataFrame, textCol: String,
                    numMerges: Int, minCount: Long, batchK: Int): Seq[WpMerge] = {
     val initUdf = udf((w: String) => initSymbols(w))
-    var words = docs
+    var words = seam.checkpoint(docs
       .select(explode(Dedup.wordsArray(textCol)).as("w"))
       .repartition(spark.sparkContext.defaultParallelism, col("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(initUdf(col("w")).as("syms"), col("cnt"))
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint(true)
-    var pairCounts = words
+      .filter(size(col("syms")) >= 2))
+    var pairCounts = seam.checkpoint(words
       .select(explode(adjacentPairs(col("syms"))).as("p"), col("cnt"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
-    var symCounts = words
+      .agg(sum("cnt").as("cnt")))
+    var symCounts = seam.checkpoint(words
       .select(explode(col("syms")).as("s"), col("cnt"))
-      .groupBy("s").agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
+      .groupBy("s").agg(sum("cnt").as("cnt")))
 
     val merges = Seq.newBuilder[WpMerge]
     var ckpt = Seq(words, pairCounts, symCounts)
@@ -179,25 +176,14 @@ object WordPiece {
           .filter(col("cnt") > 0).coalesce(parts)
 
         // three independent eager checkpoints, overlapped (Bpe notes)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fs = Seq(nextWords0, nextPairs0, nextSyms0)
-          .map(df => Future(df.localCheckpoint(true)))
-        val Seq(nw, np, ns) = fs.map(Await.result(_, Duration.Inf))
-        ckpt.foreach(releaseCheckpoint)
+        val Seq(nw, np, ns) = seam.checkpointAll(Seq(nextWords0, nextPairs0, nextSyms0))
+        ckpt.foreach(seam.release(_, blocking = false))
         ckpt = Seq(nw, np, ns)
         words = nw; pairCounts = np; symCounts = ns
       }
     }
-    ckpt.foreach(releaseCheckpoint)
     merges.result()
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** the BERT-style vocabulary implied by a training run on `docs`:
     * every initial symbol of the corpus alphabet plus each merge's

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Seam, Tables}
 import graft.ops.{Dedup, Multimodal, Similarity}
 
 /** Dedup / similarity-search / multimodal operator queries.
@@ -34,7 +34,7 @@ object DedupQueries {
     * run one query at a time under Verify/Bench, and Verify runs
     * GraftSession.releaseAllBlocks after each — no per-query handle
     * needed. The LIBRARY surface for the same capability is ops/Dedup +
-    * ops/CleanCorpus, whose releasable forms own their caches.
+    * ops/CleanCorpus, whose caches belong to the caller's seam.
     * `filterEmpty` drops docs with no 5-shingle before caching
     * (d_lsh_recall_eval evaluates recall over shingled docs only — its
     * posting ground truth reads the corpus side directly). */
@@ -43,8 +43,8 @@ object DedupQueries {
     val sh = dupCorpus(s, d)
       .withColumn("ws", Dedup.wordsArray("text"))
       .withColumn("shs", Dedup.wordShingles("ws", 5))
-    val corpus = (if (filterEmpty) sh.filter(size(col("shs")) > 0) else sh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = Seam.session.persist(
+      if (filterEmpty) sh.filter(size(col("shs")) > 0) else sh)
     val withSig = corpus.filter(size(col("shs")) > 0)
       .withColumn("hs", Dedup.shingleBaseHashes("shs"))
       .withColumn("sig", Dedup.minhashSignature("hs", 16))
@@ -218,15 +218,14 @@ object DedupQueries {
     * near-dup drop → decontamination): d_corpus_pipeline reports its
     * retention funnel, d_train_manifest lays out its survivors — ONE
     * builder so the two can never drift. Since r15 the builder IS the
-    * library op ([[graft.ops.CleanCorpus]], which owns the funnel's
-    * caching + release contract); the queries run the handle-less form
-    * under the harness-scope contract (one JVM per Verify/Bench run —
-    * JVM exit reclaims the funnel's two stage caches). The holdout is
+    * library op ([[graft.ops.CleanCorpus]]); its caches go to
+    * [[Seam.session]], which Verify/Bench free with releaseAllBlocks after
+    * each query. The holdout is
     * RAW-corpus docs with doc_id % 97 == 0 (the benchmark set exists
     * independently of what cleaning kept); thresholds/banding are the
     * op's defaults, which the oracle CTEs mirror. */
   private def cleaningStages(s: SparkSession, d: String): graft.ops.CleanCorpusStages =
-    graft.ops.CleanCorpus.cleanCorpus(dupCorpus(s, d), "doc_id", "text",
+    graft.ops.CleanCorpus.cleanCorpus(Seam.session, dupCorpus(s, d), "doc_id", "text",
       isHoldout = Some(col("doc_id") % 97 === 0),
       droppedBuckets = Some(s.sparkContext.longAccumulator(
         "graft.lsh.dropped_hot_buckets.cleaning_pipeline")))
@@ -358,7 +357,7 @@ object DedupQueries {
         val withSh = dupCorpus(s, d)
           .withColumn("ws", Dedup.wordsArray("text"))
           .withColumn("shs", Dedup.wordShingles("ws", 5))
-        Dedup.jaccardPairs(withSh, "doc_id", "shs", threshold = 0.5)
+        Dedup.jaccardPairs(Seam.session, withSh, "doc_id", "shs", threshold = 0.5)
           .orderBy("id_a", "id_b")
       },
       Some(s"""WITH $ShinglesCte,
@@ -386,7 +385,7 @@ object DedupQueries {
         val withSh = dupCorpus(s, d)
           .withColumn("ws", Dedup.wordsArray("text"))
           .withColumn("shs", Dedup.wordShingleHashes("ws", 5))
-        Dedup.dupGramCoverage(withSh, "doc_id", "shs")
+        Dedup.dupGramCoverage(Seam.session, withSh, "doc_id", "shs")
           .orderBy("doc_id")
       },
       Some(s"""WITH $ShinglesCte,
@@ -417,9 +416,9 @@ object DedupQueries {
         // cut with the r14 doc-local reconstruction — plan notes and the
         // 100x adversarial rows live on the op; the suffix-array twin
         // d_span_dedup_sa cross-validates the same oracle through an
-        // exact string-comparison route). Blocks released post-query by
-        // the Verify/Bench harnesses.
-        Dedup.spanDedup(dupCorpus(s, d), "doc_id", "text", 5)
+        // exact string-comparison route). Seam.session blocks are
+        // released post-query by the Verify/Bench harnesses.
+        Dedup.spanDedup(Seam.session, dupCorpus(s, d), "doc_id", "text", 5)
           .select(col("doc_id"), col("n_words"), col("n_kept"),
             col("n_removed"), md5(col("cleaned")).as("cleaned_md5"))
           .orderBy("doc_id")
@@ -543,7 +542,7 @@ object DedupQueries {
         val (corpus, withSig) = shingledDupCorpus(s, d)
         val candidates = Dedup.lshCandidatePairs(
           Dedup.lshBands(withSig, "doc_id", "sig", 4, 4), "doc_id")
-        Dedup.jaccardOnPairsRouted(candidates, corpus, "doc_id", "shs")
+        Dedup.jaccardOnPairs(Seam.session, candidates, corpus, "doc_id", "shs")
           .filter(col("jaccard") >= 0.5)
           .orderBy("id_a", "id_b")
       },
@@ -607,7 +606,7 @@ object DedupQueries {
           Dedup.lshBands(withSig, "doc_id", "sig", 4, 4), "doc_id")
         val l = corpus.select(col("doc_id").cast("long").as("id_a"), col("text").as("ta"))
         val r = corpus.select(col("doc_id").cast("long").as("id_b"), col("text").as("tb"))
-        Dedup.routedPairJoin(candidates, l, r)
+        Dedup.routedPairJoin(Seam.session, candidates, l, r)
           .filter(round(lit(1.0) -
             abs(length(col("ta")) - length(col("tb"))).cast("double") /
             greatest(length(col("ta")), length(col("tb"))), 4) >= 0.8)
@@ -700,15 +699,14 @@ object DedupQueries {
         val (corpus, withSig) = shingledDupCorpus(s, d)
         val cand = Dedup.lshCandidatePairs(
           Dedup.lshBands(withSig, "doc_id", "sig", 4, 4), "doc_id")
-        // both containment denominators are SET SIZES — the r13 routed
-        // stats core carries them next to the shared-gram count, hashed
-        // (Dedup.hashedShingles' collision contract), and re-routes onto
-        // the posting shape in the adversarial pairs≫docs regime exactly
-        // like the Jaccard verify
-        Dedup.pairStatsRouted(cand, corpus, "doc_id", "shs")
+        // both containment denominators are SET SIZES — the pair-stats
+        // core carries them next to the shared-gram count, hashed
+        // (Dedup.hashedShingles' collision contract), like the Jaccard
+        // verify
+        Dedup.pairStats(Seam.session, cand, corpus, "doc_id", "shs")
           .select(col("id_a"), col("id_b"),
-            round(coalesce(col("_inter"), lit(0L)) / col("_n_a"), 4).as("c_ab"),
-            round(coalesce(col("_inter"), lit(0L)) / col("_n_b"), 4).as("c_ba"))
+            round(col("_inter") / col("_n_a"), 4).as("c_ab"),
+            round(col("_inter") / col("_n_b"), 4).as("c_ba"))
           .filter(greatest(col("c_ab"), col("c_ba")) >= 0.8)
           .orderBy("id_a", "id_b")
       },
@@ -755,7 +753,7 @@ object DedupQueries {
         val corpus = dupCorpus(s, d)
           .withColumn("ws", Dedup.wordsArray("text"))
           .withColumn("shs", Dedup.wordShingles("ws", 5))
-        Dedup.nearDupPairsAt(corpus, "doc_id", "shs", threshold = 0.5, nHashes = 16)
+        Dedup.nearDupPairsAt(Seam.session, corpus, "doc_id", "shs", threshold = 0.5, nHashes = 16)
           .orderBy("id_a", "id_b")
       },
       Some(s"""WITH $ShinglesCte,
@@ -879,7 +877,7 @@ object DedupQueries {
         val nStored = graft.core.SourceStamp.memoLong(
           s"$d/documents.parquet", "delta_stored")(stored.count())
         if (!st.exists || st.rowCount() != nStored) st.rebuild(stored)
-        val cands = st.deltaCandidates(batch)
+        val cands = st.deltaCandidates(Seam.session, batch)
         // exact-verify shingles ONLY the docs appearing in candidate pairs
         // (semi-join before the shingle projection): verify cost follows
         // |candidates|, not corpus size — at 100 TB these are data-skipped
@@ -888,15 +886,10 @@ object DedupQueries {
         // shuffle-semi when a candidate explosion reaches the id set too.
         val candIds = cands.select(col("id_a").as("doc_id"))
           .union(cands.select(col("id_b").as("doc_id"))).distinct()
-        val needed = Dedup.routedSemiJoin(dupCorpus(s, d), candIds, "doc_id")
+        val needed = Dedup.routedSemiJoin(Seam.session, dupCorpus(s, d), candIds, "doc_id")
           .withColumn("ws", Dedup.wordsArray("text"))
           .withColumn("shs", Dedup.wordShingles("ws", 5))
-        // the verify SHAPE itself is measured-routed (r13): at benign
-        // pair-to-doc ratios this is the same pair-carry join as before;
-        // in the adversarial twin-group regime (pairs ≫ candidate docs) it
-        // re-routes onto the posting join so no doc's signature array is
-        // duplicated per pair through the exchange
-        Dedup.jaccardOnPairsRouted(cands, needed, "doc_id", "shs")
+        Dedup.jaccardOnPairs(Seam.session, cands, needed, "doc_id", "shs")
           .filter(col("jaccard") >= 0.5)
           .orderBy("id_a", "id_b")
       },
@@ -962,7 +955,7 @@ object DedupQueries {
         val nStored = graft.core.SourceStamp.memoLong(
           s"$d/documents.parquet", "delta_pipeline_stored")(stored.count())
         if (!st.exists || st.rawCount() != nStored) st.rebuild(stored, hold)
-        st.applyBatch(batch, full, hold).survivors.orderBy("doc_id")
+        st.applyBatch(Seam.session, batch, full, hold).survivors.orderBy("doc_id")
       },
       Some(s"""WITH $CleaningCtes
               |SELECT doc_id FROM kept4 ORDER BY doc_id""".stripMargin),
@@ -997,7 +990,7 @@ object DedupQueries {
         val (corpus, withSig) = shingledDupCorpus(s, d)
         val candidates = Dedup.lshCandidatePairs(
           Dedup.lshBands(withSig, "doc_id", "sig", 4, 4), "doc_id")
-        val verified = Dedup.jaccardOnPairsRouted(candidates, corpus, "doc_id", "shs")
+        val verified = Dedup.jaccardOnPairs(Seam.session, candidates, corpus, "doc_id", "shs")
           .filter(col("jaccard") >= 0.5)
         val comp = Dedup.connectedComponents(verified)
         val sizes = comp.groupBy("comp").agg(count(lit(1)).as("group_size"))
@@ -1057,7 +1050,7 @@ object DedupQueries {
         val (corpus, withSig) = shingledDupCorpus(s, d)
         val candidates = Dedup.lshCandidatePairs(
           Dedup.lshBands(withSig, "doc_id", "sig", 4, 4), "doc_id")
-        val verified = Dedup.jaccardOnPairsRouted(candidates, corpus, "doc_id", "shs")
+        val verified = Dedup.jaccardOnPairs(Seam.session, candidates, corpus, "doc_id", "shs")
           .filter(col("jaccard") >= 0.5)
         val comp = Dedup.connectedComponents(verified)
         val scored = corpus.select(col("doc_id"),
@@ -1257,7 +1250,7 @@ object DedupQueries {
         // verify Jaccard ONLY on the LSH candidate pairs (the production
         // shape: candidates ≪ all-pairs, so the exact check is a per-pair
         // array_intersect, not a full shingle-posting self-join)
-        val verified = Dedup.jaccardOnPairsRouted(candidates, corpus, "doc_id", "shs")
+        val verified = Dedup.jaccardOnPairs(Seam.session, candidates, corpus, "doc_id", "shs")
           .filter(col("jaccard") >= 0.8)
         // drop the larger id of every verified pair (keep-canonical = min id)
         val dropped = verified.select(col("id_b").as("doc_id")).distinct()

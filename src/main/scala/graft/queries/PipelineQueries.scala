@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Seam, Tables}
 import graft.embed.HashedEmbedder
 import graft.ingest.Ingest
 import graft.search.HybridSearch
@@ -826,11 +826,11 @@ object PipelineQueries {
         // truncates the plan the ~10 references each re-embedded at
         // analysis time. In production the ingest output is a stored
         // table; the checkpoint is the in-session twin. Same rows.
-        // HARNESS-SCOPE release contract: Verify/Bench run
+        // The checkpoint belongs to Seam.session: Verify/Bench run
         // releaseAllBlocks (which drops checkpoint RDD blocks too) after
         // each query; the library path (api/Engine) stores chunks and
         // releases its own caches.
-        val chunks = ingestedChunks(s, d).localCheckpoint(true)
+        val chunks = Seam.session.checkpoint(ingestedChunks(s, d))
         val embedder = new HashedEmbedder(64)
         val qv = typedLit(embedder.embed("spark join stream table").toSeq)
         HybridSearch.search(chunks, qv,

@@ -3,8 +3,8 @@ package graft.store
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.core.Seam
 import graft.ops.{CleanCorpus, CleanCorpusConfig, Dedup, TextAnalysis}
 
 /** Per-batch output of [[CleanStateStore.applyBatch]]. The `quality` /
@@ -136,11 +136,9 @@ final class CleanStateStore(
     * state so a first absorb can bootstrap. */
   def rebuild(stored: DataFrame, isHoldout: Column): Unit = {
     drop()
-    val (st, release) = CleanCorpus.cleanCorpusReleasable(
-      stored, idCol, textCol, Some(isHoldout), cfg)
-    try {
-      val kept4Ids = st.decontaminated.select(col(idCol))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    Seam.scoped { seam =>
+      val st = CleanCorpus.cleanCorpus(seam, stored, idCol, textCol, Some(isHoldout), cfg)
+      val kept4Ids = seam.persist(st.decontaminated.select(col(idCol)))
       val nRaw = st.corpus.count()
       val nQuality = st.quality.count()
       val nExact = st.exactDeduped.count()
@@ -165,9 +163,8 @@ final class CleanStateStore(
         shingled(st.decontaminated)
           .select(col(idCol), explode(col("_shs")).as("_sh"))
           .write.mode(SaveMode.Overwrite).parquet(tmp))
-      kept4Ids.unpersist()
       writeStats(nRaw, nQuality, nExact, nNear, nFinal)
-    } finally release()
+    }
   }
 
   private def writeStats(raw: Long, q: Long, e: Long, n: Long, f: Long): Unit = {
@@ -179,12 +176,6 @@ final class CleanStateStore(
         .write.mode(SaveMode.Overwrite).parquet(tmp))
   }
 
-  /** handle-less [[applyBatchReleasable]] — run-one-query harnesses only
-    * (the funnel-op caching contract) */
-  def applyBatch(batch: DataFrame, fullCorpus: DataFrame,
-                 isHoldout: Column): DeltaCleanResult =
-    applyBatchReleasable(batch, fullCorpus, isHoldout)._1
-
   /** Clean one sync batch incrementally against the stored state. The
     * result's `survivors` equals what the batch funnel would output on the
     * UNION corpus (stored ∪ batch) — hash-matched by the `d_delta_pipeline`
@@ -194,7 +185,7 @@ final class CleanStateStore(
     * id (a sync batch is new documents — this is what makes first-wins
     * monotone); `fullCorpus` is the union source, read only through a
     * candidate-id semi-join (the near-dup verify re-shingles candidate
-    * docs exactly like [[graft.ops.Dedup.jaccardOnPairsRouted]] callers —
+    * docs exactly like [[graft.ops.Dedup.jaccardOnPairs]] callers —
     * at 100 TB these are data-skipped point reads, not a corpus scan).
     *
     * Shuffle posture, table by table: `fps`, `holdsh`, `post4` and the
@@ -202,9 +193,10 @@ final class CleanStateStore(
     * [[MinhashIndexStore.deltaCandidates]] posture — a sync batch is
     * bounded by the ingest contract), so nothing state-scale ever enters
     * an exchange; the only shuffles are batch-internal (its fingerprint
-    * groupBy, its candidate-pair distinct, the verify join). */
-  def applyBatchReleasable(batch: DataFrame, fullCorpus: DataFrame,
-                           isHoldout: Column): (DeltaCleanResult, () => Unit) = {
+    * groupBy, its candidate-pair distinct, the verify join). Every block
+    * the result's frames read belongs to `seam`. */
+  def applyBatch(seam: Seam, batch: DataFrame, fullCorpus: DataFrame,
+                 isHoldout: Column): DeltaCleanResult = {
     require(exists, "applyBatch requires built state (rebuild first)")
     val inCols = batch.columns.map(col).toSeq
 
@@ -217,33 +209,27 @@ final class CleanStateStore(
     // frames while the main thread drives the near-dup leg's eager chain
     // (index-probe checkpoint + routing counts); the consumer's terminal
     // action then reads them from cache instead of paying the post4 scan
-    // on its own critical path. The pool is the shared daemon executor —
+    // on its own critical path. The pool is the seams' daemon executor —
     // a failure surfaces at the await barrier before `survivors` is built;
     // if the MAIN thread throws first, the forked count is a read-only
     // probe on a daemon thread and completes harmlessly.
-    val batchHoldSh = batch.filter(isHoldout)
+    val batchHoldSh = seam.persist(batch.filter(isHoldout)
       .withColumn("_ws", Dedup.wordsArray(textCol))
       .select(explode(Dedup.wordShingles("_ws", cfg.shingleK)).as("_sh"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // stored live survivors sharing a shingle with the batch's new
     // benchmark shingles lose their survivor status (benchSh only ever
     // grows, so contamination is monotone — probing live survivors with
     // the NEW shingles alone is exact)
-    val revoked = storedPost4()
+    val revoked = seam.persist(storedPost4()
       .join(broadcast(batchHoldSh), Seq("_sh"), "left_semi")
       .select(idCol).distinct()
-      .join(storedRevoked(), Seq(idCol), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val revokedFut = {
-      import scala.concurrent.Future
-      implicit val ec: scala.concurrent.ExecutionContext = CleanStateStore.stateEc
-      Future { revoked.count() } // materializes batchHoldSh + revoked caches
-    }
+      .join(storedRevoked(), Seq(idCol), "left_anti"))
+    // materializes batchHoldSh + revoked caches
+    val revokedFut = scala.concurrent.Future(revoked.count())(Seam.pool)
 
     // --- stage 2: quality (per-row predicate, identical to the funnel) ---
-    val quality = batch.filter(CleanCorpus.qualityPredicate(textCol, cfg))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val quality = seam.persist(batch.filter(CleanCorpus.qualityPredicate(textCol, cfg)))
 
     // --- stage 3: exact dedup vs stored fingerprints + within-batch ---
     val bfp = quality.withColumn("_fp", TextAnalysis.fingerprint(col(textCol)))
@@ -255,10 +241,9 @@ final class CleanStateStore(
     val notStored = bfp.join(broadcast(hitFps), Seq("_fp"), "left_anti")
     val canonB = notStored.groupBy("_fp").agg(min(col(idCol)).as(idCol))
     val newFps = canonB.select("_fp")
-    val exactNew = notStored
+    val exactNew = seam.persist(notStored
       .join(canonB.select(idCol), Seq(idCol), "left_semi")
-      .select(inCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(inCols: _*))
 
     // --- stage 4: near-dup drop vs stored survivors + within-batch ---
     // candidates touching the batch, from the stored band table (index
@@ -267,17 +252,16 @@ final class CleanStateStore(
     val indexed = mh.rowCount() > 0L
     val cand =
       if (indexed)
-        mh.deltaCandidates(exactNew.select(col(idCol), col(textCol)), textCol)
+        mh.deltaCandidates(seam, exactNew.select(col(idCol), col(textCol)), textCol)
       else Dedup.lshCandidatePairs(
         Dedup.lshBands(
           mh.signatures(exactNew.select(col(idCol), col(textCol)), textCol),
           idCol, "sig", cfg.bands, cfg.rowsPerBand), idCol)
     val candIds = cand.select(col("id_a").as(idCol))
       .union(cand.select(col("id_b").as(idCol))).distinct()
-    val (needed0, relSemi) = Dedup.routedSemiJoinReleasable(
+    val needed = Dedup.routedSemiJoin(seam,
       fullCorpus.select(col(idCol), col(textCol)), candIds, idCol)
-    val (verified, relVerify) = Dedup.jaccardOnPairsRoutedReleasable(
-      cand, shingled(needed0), idCol, "_shs")
+    val verified = Dedup.jaccardOnPairs(seam, cand, shingled(needed), idCol, "_shs")
     // id_b is always the batch side of a cross pair (batch ids greater),
     // so first-wins can only drop batch docs here — stored survivors are
     // immune to the batch at this stage by construction
@@ -295,15 +279,13 @@ final class CleanStateStore(
     // verify jobs just run here instead of under the consumer's action.
     // The checkpointed set is the batch's near-dup survivors —
     // batch-bounded by the sync contract, never state-scale.
-    val nearNew = exactNew.join(droppedB, Seq(idCol), "left_anti")
-      .localCheckpoint(true)
+    val nearNew = seam.checkpoint(exactNew.join(droppedB, Seq(idCol), "left_anti"))
 
     // --- stage 5: decontamination (the non-monotone stage; batchHoldSh —
     // the batch's new benchmark shingles — and the revocation probe were
     // forked before stage 2 and are materializing concurrently) ---
-    val bexpl = shingled(nearNew.filter(!isHoldout))
-      .select(col(idCol), explode(col("_shs")).as("_sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val bexpl = seam.persist(shingled(nearNew.filter(!isHoldout))
+      .select(col(idCol), explode(col("_shs")).as("_sh")))
     // batch docs contaminated by the STORED benchmark set (state scanned,
     // batch shingles broadcast — same flip as fps) or by the batch's own
     // new benchmark shingles: the two tiny shingle sets fuse into ONE
@@ -314,10 +296,9 @@ final class CleanStateStore(
     val contaminated = bexpl
       .join(broadcast(hitSh.union(batchHoldSh)), Seq("_sh"), "left_semi")
       .select(idCol).distinct()
-    val finalNew = nearNew.filter(!isHoldout)
+    val finalNew = seam.persist(nearNew.filter(!isHoldout)
       .join(contaminated, Seq(idCol), "left_anti")
-      .select(idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(idCol))
     val finalPostings = bexpl.join(finalNew, Seq(idCol), "left_semi")
 
     // barrier: the forked revocation leg must be materialized (or have
@@ -329,41 +310,23 @@ final class CleanStateStore(
       .join(broadcast(revoked), Seq(idCol), "left_anti")
       .union(finalNew)
 
-    val result = DeltaCleanResult(
+    DeltaCleanResult(
       batchSource = batch,
       quality = quality, exactNew = exactNew, nearNew = nearNew,
       finalNew = finalNew, revoked = revoked, survivors = survivors,
       newFps = newFps, finalPostings = finalPostings,
       batchHoldSh = batchHoldSh)
-    val release = () => {
-      quality.unpersist(blocking = true)
-      exactNew.unpersist(blocking = true)
-      // nearNew is a localCheckpoint — its blocks live on the RDD, not in
-      // the CacheManager (df.unpersist would be a silent no-op)
-      Dedup.checkpointRdd(nearNew).foreach(_.unpersist(blocking = true))
-      // so is deltaCandidates' pair set; the unindexed arm's pairs are a
-      // plain plan, whose leaves must not be unpersisted
-      if (indexed) Dedup.checkpointRdd(cand).foreach(_.unpersist(blocking = true))
-      batchHoldSh.unpersist(blocking = true)
-      bexpl.unpersist(blocking = true)
-      finalNew.unpersist(blocking = true)
-      revoked.unpersist(blocking = true)
-      relSemi(); relVerify()
-    }
-    (result, release)
   }
 
   /** Absorb one [[applyBatch]] result into the stored state so the NEXT
     * batch cleans against the union — parquet appends plus one stats swap,
     * every write batch-sized (revocations land as tombstones in `revoked/`;
-    * nothing state-scale is rewritten). Call BEFORE the result's release
-    * handle, and treat the result as CONSUMED afterwards: its frames read
+    * nothing state-scale is rewritten). Call inside the result's seam,
+    * and treat the result as CONSUMED afterwards: its frames read
     * the pre-mutation state and re-evaluate wrongly once the state tables
     * have grown (absorb snapshots what it writes, callers get no such
     * protection) — read post-absorb truth from [[survivors]]/[[stageCounts]]. */
   def absorb(result: DeltaCleanResult): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val (raw0, q0, e0, n0, f0) = stageCounts()
     // absorb was ~20 driver-SEQUENTIAL small jobs (r17 attribution:
     // snapshots, counts, appends at the local ~0.2–0.4 s/job floor —
@@ -371,12 +334,9 @@ final class CleanStateStore(
     // has exactly three true barriers, so it now runs as three phases
     // (guide §2.6 / the BPE concurrent-checkpoint pattern): every job
     // inside a phase is independent and submitted concurrently, each
-    // phase pays its MAX job, not the sum. The pool is the JVM-shared
-    // daemon executor (r17 VERDICT #7: a long-lived ingest absorbing per
-    // batch must not churn a fresh pool per call).
-    implicit val ec: ExecutionContext = CleanStateStore.stateEc
-    def await[T](fs: Seq[Future[T]]): Seq[T] =
-      fs.map(f => Await.result(f, Duration.Inf))
+    // phase pays its MAX job, not the sum. Both waves run on the seams'
+    // JVM-shared daemon executor (r17 VERDICT #7: a long-lived ingest
+    // absorbing per batch must not churn a fresh pool per call).
     // --- phase 1: SNAPSHOT every frame that gets written (or re-read)
     // after the first state mutation: the delta frames' plans READ the
     // state tables they are about to update, and Spark's write path
@@ -389,62 +349,36 @@ final class CleanStateStore(
     // barrier is intact. Counts the stats row needs from snapshotted
     // frames ride the checkpoint job as observed metrics (the
     // connectedComponents discipline) instead of re-count jobs.
-    def snap(df: DataFrame, name: String): (DataFrame, Long) = {
-      val observed = df.observe(s"absorb_$name", count(lit(1)).as("n"))
-      val cp = observed.localCheckpoint(true)
-      (cp, observed.queryExecution.observedMetrics(s"absorb_$name").getAs[Long]("n"))
-    }
-    val fExact = Future(snap(result.exactNew.select(col(idCol), col(textCol)), "exact"))
-    val fFps = Future(result.newFps.localCheckpoint(true))
-    val fK4 = Future(snap(result.finalNew, "k4"))
-    val fRev = Future(snap(result.revoked, "rev"))
-    val fHold = Future(result.batchHoldSh.localCheckpoint(true))
-    val fPost = Future(result.finalPostings.localCheckpoint(true))
-    val fRaw = Future(result.batchSource.count())
-    val fQual = Future(result.quality.count())
-    val fNear = Future(result.nearNew.count())
-    // snapshots are localCheckpoints: their blocks live on the checkpointed
-    // RDD, not in the CacheManager, so df.unpersist would be a no-op
-    def release(df: DataFrame): Unit =
-      Dedup.checkpointRdd(df).foreach(_.unpersist(blocking = true))
-    // await EVERY phase-1 future before looking at any failure (ADVICE r17:
-    // rethrowing while siblings still ran leaked their Spark jobs and any
-    // already-completed checkpoint blocks), then release the snapshots
-    // that did complete and rethrow the first failure
-    val phase1: Seq[Future[Any]] =
-      Seq(fExact, fFps, fK4, fRev, fHold, fPost, fRaw, fQual, fNear)
-    val tried = phase1.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collectFirst { case scala.util.Failure(t) => t }.foreach { t =>
-      tried.foreach {
-        case scala.util.Success(df: org.apache.spark.sql.Dataset[_]) => release(df.toDF())
-        case scala.util.Success((df: org.apache.spark.sql.Dataset[_], _)) => release(df.toDF())
-        case _ => ()
+    // A failed phase-1 job rethrows only after every sibling finished, with
+    // the completed snapshots released (ADVICE r17).
+    Seam.scoped { seam =>
+      def snap(df: DataFrame, name: String)(s: Seam): (DataFrame, Long) = {
+        val (cp, m) = s.checkpointObserved(df, s"absorb_$name", count(lit(1)).as("n"))
+        (cp, m.getAs[Long]("n"))
       }
-      throw t
-    }
-    // all succeeded — each value below reads instantly off its future
-    def got[T](f: Future[T]): T = Await.result(f, Duration.Inf)
-    val (exactSnap, eN) = got(fExact)
-    val fpsSnap = got(fFps)
-    val (k4Snap, fN4) = got(fK4)
-    val (revSnap, rN) = got(fRev)
-    val holdSnap = got(fHold)
-    val postSnap = got(fPost)
-    val (rawN, qN, nN, fN) = (got(fRaw), got(fQual), got(fNear), fN4)
-    try {
+      def plain(df: DataFrame)(s: Seam): (DataFrame, Long) = (s.checkpoint(df), 0L)
+      def counted(df: DataFrame)(s: Seam): (DataFrame, Long) = (df, df.count())
+      val Seq((exactSnap, eN), (fpsSnap, _), (k4Snap, fN), (revSnap, rN),
+          (holdSnap, _), (postSnap, _), (_, rawN), (_, qN), (_, nN)) = seam.wave(Seq(
+        snap(result.exactNew.select(col(idCol), col(textCol)), "exact") _,
+        plain(result.newFps) _,
+        snap(result.finalNew, "k4") _,
+        snap(result.revoked, "rev") _,
+        plain(result.batchHoldSh) _,
+        plain(result.finalPostings) _,
+        counted(result.batchSource) _,
+        counted(result.quality) _,
+        counted(result.nearNew) _))
       // --- phase 2: the state appends — each targets its own directory
       // and reads only snapshotted frames (holdsh additionally reads its
       // own pre-append state, which nothing else touches), so all six are
       // independent and run concurrently
-      await(Seq(
-        Future { mh.appendBatch(exactSnap, textCol): Unit },
-        Future { fpsSnap.write.mode(SaveMode.Append).parquet(fpsPath) },
-        Future { k4Snap.write.mode(SaveMode.Append).parquet(kept4Path) },
-        Future {
-          if (rN > 0L)
-            revSnap.write.mode(SaveMode.Append).parquet(revokedPath)
-        },
-        Future {
+      seam.wave(Seq[Seam => Unit](
+        _ => mh.appendBatch(exactSnap, textCol),
+        _ => fpsSnap.write.mode(SaveMode.Append).parquet(fpsPath),
+        _ => k4Snap.write.mode(SaveMode.Append).parquet(kept4Path),
+        _ => if (rN > 0L) revSnap.write.mode(SaveMode.Append).parquet(revokedPath),
+        _ => {
           // keep holdsh a SET: append only the genuinely new shingles
           // (overlap computed with the same scan+broadcast flip as the
           // probes)
@@ -453,7 +387,7 @@ final class CleanStateStore(
           holdSnap.join(broadcast(overlap), Seq("_sh"), "left_anti")
             .write.mode(SaveMode.Append).parquet(holdshPath)
         },
-        Future { postSnap.write.mode(SaveMode.Append).parquet(post4Path) }))
+        _ => postSnap.write.mode(SaveMode.Append).parquet(post4Path)))
       // --- phase 3: stats LAST (the exists/staleness discipline — a
       // reader must never observe new stats over half-appended state)
       writeStats(raw0 + rawN, q0 + qN, e0 + eN, n0 + nN, f0 - rN + fN)
@@ -461,26 +395,7 @@ final class CleanStateStore(
       // listings for these paths (all were read during applyBatch); a
       // post-absorb reader would silently miss the appended files
       spark.catalog.refreshByPath(path)
-    } finally {
-      Seq(exactSnap, fpsSnap, k4Snap, revSnap, holdSnap, postSnap).foreach(release)
     }
   }
 }
 
-object CleanStateStore {
-  /** JVM-shared daemon executor for [[CleanStateStore.absorb]]'s phases
-    * (r17 VERDICT #7): per-call pools churned 6 threads per absorbed batch
-    * in a long-lived ingest. Daemon threads so JVM exit never blocks on it;
-    * 6 = the widest phase (six independent appends). Tasks are independent
-    * leaf jobs (no future spawns a future), so concurrent absorbs just
-    * queue — no deadlock possible. */
-  private lazy val statePool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(6,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-clean-state")
-        t.setDaemon(true)
-        t
-      })
-  private[store] lazy val stateEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(statePool)
-}

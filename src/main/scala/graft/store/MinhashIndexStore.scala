@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Seam
 import graft.ops.Dedup
 
 /** Persisted MinHash signature index — the dedup sibling of
@@ -120,8 +121,10 @@ final class MinhashIndexStore(
     * hot-bucket cap; batch×stored pairs are bounded by |batch|·|bucket|
     * (linear in the batch, not quadratic), so no cap is applied — a
     * production pipeline worried about degenerate stored buckets can
-    * pre-filter [[storedBands]] with [[Dedup.oversizedBuckets]]. */
-  def deltaCandidates(batchDocs: DataFrame, textCol: String = "text"): DataFrame = {
+    * pre-filter [[storedBands]] with [[Dedup.oversizedBuckets]]. The pair
+    * set is an eager checkpoint owned by `seam`. */
+  def deltaCandidates(seam: Seam, batchDocs: DataFrame,
+                      textCol: String = "text"): DataFrame = {
     require(exists, "deltaCandidates requires an existing index (rebuild first)")
     val batchSigs = signatures(batchDocs, textCol).persist()
     try {
@@ -135,7 +138,7 @@ final class MinhashIndexStore(
           greatest(col(idCol), col("_new_id")).cast("long").as("id_b"))
       val inBatchPairs = Dedup.lshCandidatePairs(batchBands, idCol)
       // materialize before unpersisting the signatures the plans reference
-      crossPairs.union(inBatchPairs).distinct().localCheckpoint(true)
+      seam.checkpoint(crossPairs.union(inBatchPairs).distinct())
     } finally batchSigs.unpersist()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Seam
 import graft.ops.Sketches
 
 /** Persisted corpus-statistics sketches — the monitoring sibling of the
@@ -79,12 +80,10 @@ final class SketchStore(spark: SparkSession, path: String,
                   textCol: String = "text"): Unit = {
     // three consumers (HLL, CMS, the row count) — cache so an expensive
     // upstream derivation isn't recomputed per consumer
-    val cached = batch.persist()
-    try { appendCached(cached, keyCol, textCol) }
-    finally { cached.unpersist(): Unit }
+    Seam.scoped(seam => appendCached(seam, seam.persist(batch), keyCol, textCol))
   }
 
-  private def appendCached(batch: DataFrame, keyCol: String,
+  private def appendCached(seam: Seam, batch: DataFrame, keyCol: String,
                            textCol: String): Unit = {
     val batchHll = Sketches.hllRegisters(batch, col(keyCol), b)
     val words = batch.select(explode(graft.ops.Dedup.wordsArray(textCol)).as("w"))
@@ -102,8 +101,8 @@ final class SketchStore(spark: SparkSession, path: String,
       } else (batchHll, batchCms, 1L, batch.count())
     // sketches are bounded (2^b / depth·width rows): localCheckpoint cuts
     // the union lineage BEFORE the swap replaces the parquet being read
-    val hllSnap = hll.localCheckpoint(true)
-    val cmsSnap = cms.localCheckpoint(true)
+    val hllSnap = seam.checkpoint(hll)
+    val cmsSnap = seam.checkpoint(cms)
     // all three tables land in one tmp dir and swap in with a SINGLE
     // rename — individually-atomic per-table swaps would still let a crash
     // between them pair a new hll/ with a stale cms/stats

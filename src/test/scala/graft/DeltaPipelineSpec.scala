@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Seam}
 import graft.ops.CleanCorpus
 import graft.store.CleanStateStore
 
@@ -51,7 +51,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
   // the batch funnel on any corpus — the ground truth every increment
   // must reproduce
   private def funnel(corpus: DataFrame, hold: Column) =
-    CleanCorpus.cleanCorpus(corpus, "doc_id", "text", Some(hold))
+    CleanCorpus.cleanCorpus(Seam.session, corpus, "doc_id", "text", Some(hold))
 
   test("applyBatch equals the union funnel at every stage, revocation included") {
     val holdoutIds = Set(5L, 250L)
@@ -88,7 +88,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
     // the stored funnel admitted doc 1 (nothing contaminated it yet)
     assert(ids(st.survivors()).contains(1L))
 
-    val r = st.applyBatch(batch, union, hold)
+    val r = st.applyBatch(Seam.session, batch, union, hold)
 
     val batchIds = ids(batch)
     assert(ids(r.quality) === ids(truth.quality).intersect(batchIds))
@@ -123,7 +123,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
 
     // empty batch: everything empty, survivors unchanged
     val empty = df(Seq.empty)
-    val r0 = st.applyBatch(empty, stored, hold)
+    val r0 = st.applyBatch(Seam.session, empty, stored, hold)
     assert(ids(r0.finalNew).isEmpty && ids(r0.revoked).isEmpty)
     assert(ids(r0.survivors) === storedSurvivors)
     st.absorb(r0) // must not throw or corrupt state
@@ -131,12 +131,12 @@ class DeltaPipelineSpec extends AnyFunSuite {
 
     // all rows fail quality: same as empty past stage 2
     val junk = df(Seq(210L -> "x", 211L -> "tiny"))
-    val r1 = st.applyBatch(junk, stored.union(junk), hold)
+    val r1 = st.applyBatch(Seam.session, junk, stored.union(junk), hold)
     assert(ids(r1.quality).isEmpty && ids(r1.survivors) === storedSurvivors)
 
     // all-holdout batch: nothing admitted, but its shingles can revoke
     val holdBatch = df(Seq(260L -> (words("alpha", 10) + " " + words("nu", 20))))
-    val r2 = st.applyBatch(holdBatch, stored.union(holdBatch), hold)
+    val r2 = st.applyBatch(Seam.session, holdBatch, stored.union(holdBatch), hold)
     assert(ids(r2.finalNew).isEmpty)
     assert(ids(r2.revoked) === Set(1L))
     assert(ids(r2.survivors) === storedSurvivors - 1L)
@@ -155,7 +155,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
       202L -> words("zeta"), // exact dup within the first batch
       5L -> words("bench")))  // holdout member
     val truth = funnel(batch, hold)
-    val r = st.applyBatch(batch, batch, hold)
+    val r = st.applyBatch(Seam.session, batch, batch, hold)
     assert(ids(r.survivors) === ids(truth.decontaminated))
     st.absorb(r)
     assert(ids(st.survivors()) === ids(truth.decontaminated))
@@ -203,14 +203,14 @@ class DeltaPipelineSpec extends AnyFunSuite {
     val st = new CleanStateStore(spark, tmpDir("delta-chain"))
     st.rebuild(stored, hold)
 
-    val r1 = st.applyBatch(batch1, stored.union(batch1), hold)
+    val r1 = st.applyBatch(Seam.session, batch1, stored.union(batch1), hold)
     val u2 = ids(funnel(stored.union(batch1), hold).decontaminated)
     assert(ids(r1.survivors) === u2)
     st.absorb(r1)
     assert(ids(st.survivors()) === u2, "absorbed state must serve the union survivors")
 
     val union3 = stored.union(batch1).union(batch2)
-    val r2 = st.applyBatch(batch2, union3, hold)
+    val r2 = st.applyBatch(Seam.session, batch2, union3, hold)
     val truth3 = funnel(union3, hold)
     assert(ids(r2.survivors) === ids(truth3.decontaminated))
     assert(!ids(r2.exactNew).contains(301L),
@@ -235,10 +235,9 @@ class DeltaPipelineSpec extends AnyFunSuite {
     // absorb snapshots its frames with localCheckpoint, and applyBatch
     // checkpoints its near-dup survivors and (over a non-empty minhash
     // index) deltaCandidates' pair set; those blocks live on the
-    // checkpointed RDDs, so only an RDD-level unpersist frees them. RDD ids
-    // are monotonic per context (SoakSpec's floor idiom): after
-    // applyBatchReleasable, absorb and the result's own release, no RDD
-    // created from the floor on may still be persisted.
+    // checkpointed RDDs, so only an RDD-level unpersist frees them. Once
+    // absorb and the seam owning applyBatch's result have closed, no RDD
+    // created since the census began may still be persisted.
     val hold = col("doc_id").isin(5L)
     val stored = df(Seq(
       1L -> words("alpha"),
@@ -253,9 +252,6 @@ class DeltaPipelineSpec extends AnyFunSuite {
     // the stored survivors seed the minhash index, so applyBatch probes it
     // through deltaCandidates
     assert(Files.exists(Paths.get(dir, "mh", "stats")))
-    def floor(): Int = spark.sparkContext.parallelize(Seq(0), 1).id
-    def persistedSince(f: Int): Seq[Int] =
-      spark.sparkContext.getPersistentRDDs.keys.filter(_ >= f).toSeq.sorted
 
     // phase-1 failure: the batch-size count runs a UDF that throws, while
     // the snapshots beside it complete
@@ -264,25 +260,24 @@ class DeltaPipelineSpec extends AnyFunSuite {
       true
     }
     val countsBefore = st.stageCounts()
-    val f1 = floor()
-    val (r1, release1) = st.applyBatchReleasable(batch, stored.union(batch), hold)
+    val census1 = new BlockCensus(spark)
     val err = intercept[Exception] {
-      st.absorb(r1.copy(batchSource = r1.batchSource.filter(boom(col("doc_id")))))
+      Seam.scoped { seam =>
+        val r1 = st.applyBatch(seam, batch, stored.union(batch), hold)
+        st.absorb(r1.copy(batchSource = r1.batchSource.filter(boom(col("doc_id")))))
+      }
     }
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("injected absorb failure")))
-    release1()
-    assert(persistedSince(f1).isEmpty,
-      s"failed absorb left persisted RDDs: ${persistedSince(f1).mkString(",")}")
+    assert(census1.left.isEmpty,
+      s"failed absorb left persisted RDDs: ${census1.left.mkString(",")}")
     assert(st.stageCounts() === countsBefore, "a phase-1 failure must not write state")
 
     // success
-    val f2 = floor()
-    val (r2, release2) = st.applyBatchReleasable(batch, stored.union(batch), hold)
-    st.absorb(r2)
-    release2()
-    assert(persistedSince(f2).isEmpty,
-      s"absorb left persisted RDDs: ${persistedSince(f2).mkString(",")}")
+    val census2 = new BlockCensus(spark)
+    Seam.scoped(seam => st.absorb(st.applyBatch(seam, batch, stored.union(batch), hold)))
+    assert(census2.left.isEmpty,
+      s"absorb left persisted RDDs: ${census2.left.mkString(",")}")
     assert(ids(st.survivors()) === ids(funnel(stored.union(batch), hold).decontaminated))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Seam}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 class OpsSpec extends AnyFunSuite {
@@ -71,10 +71,8 @@ class OpsSpec extends AnyFunSuite {
       (2L, "p q r s"),
       (3L, "u v"),
       (4L, "c d e")).toDF("doc_id", "text")
-    val (out, release) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3)
-    val got = out.orderBy("doc_id")
-      .as[(Long, Long, Long, Long, String)].collect()
-    release()
+    val got = Seam.scoped(seam => Dedup.spanDedup(seam, rows, "doc_id", "text", 3)
+      .orderBy("doc_id").as[(Long, Long, Long, Long, String)].collect())
     val want = Seq(
       (0L, 5L, 0L, 5L, ""),          // starts 0 ("a b c") and 2 ("c d e") cover 0-4
       (1L, 5L, 2L, 3L, "x y"),
@@ -82,27 +80,6 @@ class OpsSpec extends AnyFunSuite {
       (3L, 2L, 2L, 0L, "u v"),
       (4L, 3L, 0L, 3L, ""))
     assert(got === want)
-
-    // coverage-split route (r15 VERDICT #3, knob-gated): 3 of 5 docs are
-    // covered (0.6 ≤ 0.9), so clean docs 2 and 3 take the broadcast anti
-    // pass-through and covered docs ride the join — results byte-identical
-    // to the pinned single-join route, and both caches released
-    val floor = spark.sparkContext.parallelize(Seq(0), 1).id
-    val (outS, releaseS) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3,
-      splitMaxCoveredFraction = 0.9)
-    val gotS = outS.orderBy("doc_id")
-      .as[(Long, Long, Long, Long, String)].collect()
-    releaseS()
-    assert(gotS === want, "split route must match the single-join route")
-    val leftS = spark.sparkContext.getPersistentRDDs.keys.filter(_ >= floor)
-    assert(leftS.isEmpty, s"split route leaked persisted blocks: ${leftS.mkString(",")}")
-    // a fraction knob below the corpus's covered fraction falls back to
-    // the single join (and still releases the measurement persist)
-    val (outF, releaseF) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3,
-      splitMaxCoveredFraction = 0.1)
-    assert(outF.orderBy("doc_id")
-      .as[(Long, Long, Long, Long, String)].collect() === want)
-    releaseF()
   }
 
   test("url canonicalization: ports, params, tracking, fragments, slashes") {
@@ -420,11 +397,11 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "shs")
     val pairs = (for (a <- 0 until 40; b <- a + 1 until 40; if a % 5 == b % 5)
       yield (a.toLong, b.toLong)).toDF("id_a", "id_b")
-    val viaBroadcast = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaShuffle = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs",
-      maxBroadcastPairs = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def verify(limit: Long) = Seam.scoped(seam =>
+      Dedup.jaccardOnPairs(seam, pairs, docs, "doc_id", "shs", limit)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    val viaBroadcast = verify(-1L)
+    val viaShuffle = verify(0L)
     assert(viaBroadcast === viaShuffle)
     assert(viaBroadcast.nonEmpty)
   }
@@ -444,8 +421,8 @@ class OpsSpec extends AnyFunSuite {
     val docs = raw.toDF("doc_id", "shs")
     val pairs = (for (a <- raw.map(_._1); b <- raw.map(_._1); if a < b)
       yield (a, b)).toDF("id_a", "id_b")
-    val got = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val got = Seam.scoped(seam => Dedup.jaccardOnPairs(seam, pairs, docs, "doc_id", "shs")
+      .collect()).map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val sets = raw.map { case (id, shs) => id -> shs.toSet }.toMap
     for (((a, b), j) <- got) {
       val inter = sets(a).intersect(sets(b)).size
@@ -457,10 +434,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("routed-join release handles leave no persisted blocks, both routes") {
-    // the releasable variants exist for long-lived sessions: after the
-    // caller's terminal action + release(), the session must hold NO cached
-    // blocks from the routed join (getPersistentRDDs back to baseline) —
-    // on the broadcast route AND the shuffle route of all three entry points
+    // long-lived sessions own the routed joins' blocks through a seam:
+    // after the caller's terminal action the scope's close must leave NO
+    // cached blocks from the routed join (getPersistentRDDs back to
+    // baseline) — on the broadcast route AND the shuffle route of all
+    // three entry points
     val docs = (0 until 30).map(i =>
       (i.toLong, (0 until 8).map(j => s"sh_${(i % 3)}_$j"))).toDF("doc_id", "shs")
     val pairs = (for (a <- 0 until 30; b <- a + 1 until 30; if a % 3 == b % 3)
@@ -469,124 +447,77 @@ class OpsSpec extends AnyFunSuite {
       .union(pairs.select(col("id_b").as("doc_id"))).distinct()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     for (limit <- Seq(-1L, 0L)) { // -1 → conf default (broadcast), 0 → shuffle
-      val (verified, relPairs) =
-        Dedup.jaccardOnPairsReleasable(pairs, docs, "doc_id", "shs", limit)
-      assert(verified.count() > 0)
-      relPairs()
-      val (semi, relIds) =
-        Dedup.routedSemiJoinReleasable(docs, ids, "doc_id", limit)
-      assert(semi.count() > 0)
-      relIds()
+      Seam.scoped(seam => assert(
+        Dedup.jaccardOnPairs(seam, pairs, docs, "doc_id", "shs", limit).count() > 0))
+      Seam.scoped(seam => assert(
+        Dedup.routedSemiJoin(seam, docs, ids, "doc_id", limit).count() > 0))
       assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
         s"persisted blocks leaked at maxBroadcastPairs=$limit")
     }
     // the posting-persisting operators release the same way
-    val (jp, relJp) = Dedup.jaccardPairsReleasable(docs, "doc_id", "shs", 0.1)
-    assert(jp.count() > 0)
-    relJp()
-    val (cov, relCov) = Dedup.dupGramCoverageReleasable(docs, "doc_id", "shs")
-    assert(cov.count() > 0)
-    relCov()
+    Seam.scoped(seam => assert(
+      Dedup.jaccardPairs(seam, docs, "doc_id", "shs", 0.1).count() > 0))
+    Seam.scoped(seam => assert(
+      Dedup.dupGramCoverage(seam, docs, "doc_id", "shs").count() > 0))
     assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
       "posting blocks leaked")
   }
 
   test("routed verify: posting route equals pair-carry route pair-for-pair") {
-    // r13: jaccardOnPairsRouted may re-route the verify onto a posting join
-    // when pair mass dominates candidate-doc mass. The two shapes must emit
-    // IDENTICAL (id_a, id_b, jaccard) rows — including candidate pairs that
-    // share no gram (jaccard 0.0 on both routes, not a dropped row) and
-    // pairs whose ids are absent from the payload (dropped on both routes).
+    // the pair-carry verify (jaccardOnPairs) must emit exactly what the
+    // exact posting self-join (jaccardPairs) computes for every candidate
+    // pair sharing a gram — on the broadcast AND the shuffle join leg —
+    // while a candidate pair sharing no gram verifies to 0.0 (not a
+    // dropped row) and a pair whose id is absent from the payload drops.
     val docs = (0 until 40).map(i =>
       (i.toLong, (0 until 12).map(j => s"sh_${(i % 5)}_$j") :+ s"own_$i"))
       .toDF("doc_id", "shs")
-    val pairs = ((for (a <- 0 until 40; b <- a + 1 until 40; if a % 5 == b % 5)
-      yield (a.toLong, b.toLong)) ++
+    val grouped = for (a <- 0 until 40; b <- a + 1 until 40; if a % 5 == b % 5)
+      yield (a.toLong, b.toLong)
+    val pairs = (grouped ++
       Seq((0L, 1L),    // zero shared grams (different mod-5 groups)
           (2L, 8L),    // another disjoint pair
           (3L, 999L))) // id 999 not in docs — dropped by the payload join
       .toDF("id_a", "id_b")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val carry = rows(Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
-      postingFactor = 1e18)) // pin the pair carry
-    val posting = rows(Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
-      postingFactor = 0.0)) // force the posting route
-    assert(carry === posting)
-    assert(carry.exists { case (a, b, j) => (a, b) == (0L, 1L) && j == 0.0 },
-      "zero-intersection candidate pair must verify to 0.0, not vanish")
-    assert(!carry.exists { case (_, b, _) => b == 999L },
-      "pair with an id absent from the payload must drop on both routes")
-    // and the posting route under the SHUFFLE semi-join leg too
-    val postingShuffle = rows(Dedup.jaccardOnPairsRouted(pairs, docs,
-      "doc_id", "shs", maxBroadcastPairs = 0L, postingFactor = 0.0))
-    assert(postingShuffle === carry)
-    // the RAW stats core agrees too (containment consumes _inter/_n_a/_n_b
-    // directly, so jaccard equality alone would not pin the denominators)
-    def stats(factor: Double) =
-      Dedup.pairStatsRouted(pairs, docs, "doc_id", "shs", postingFactor = factor)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2).longValue,
-          r.getInt(3), r.getInt(4))).toSet
-    assert(stats(0.0) === stats(1e18))
-    // r14: factor >= PostingVerifyFactor skips the measurement job (pinned
-    // carry); a finite factor that still picks the carry takes the MEASURED
-    // leg, which reuses the measurement's persisted pair list + exact count
-    // for the join routing. All three carry shapes must agree with posting:
-    // 143 pairs over ~40 ids -> carry iff factor >= ~3.6, so 10.0 measures
-    // and picks carry while 0.0 still forces posting.
-    assert(stats(10.0) === stats(1e18))
+    val posting = Seam.scoped(seam =>
+      rows(Dedup.jaccardPairs(seam, docs, "doc_id", "shs", threshold = 0.0)))
+    for (limit <- Seq(-1L, 0L)) {
+      val carry = Seam.scoped(seam =>
+        rows(Dedup.jaccardOnPairs(seam, pairs, docs, "doc_id", "shs", limit)))
+      assert(carry.filter(_._3 > 0.0) === posting, s"maxBroadcastPairs=$limit")
+      assert(carry.size === grouped.size + 2)
+      assert(carry.exists { case (a, b, j) => (a, b) == (0L, 1L) && j == 0.0 },
+        "zero-intersection candidate pair must verify to 0.0, not vanish")
+      assert(carry.exists { case (a, b, j) => (a, b) == (2L, 8L) && j == 0.0 })
+      assert(!carry.exists { case (_, b, _) => b == 999L },
+        "pair with an id absent from the payload must drop")
+      // the RAW stats core (containment consumes _inter/_n_a/_n_b
+      // directly, so jaccard equality alone would not pin the denominators)
+      val stats = Seam.scoped(seam =>
+        Dedup.pairStats(seam, pairs, docs, "doc_id", "shs", limit).collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getInt(3), r.getInt(4))))
+          .toMap)
+      assert(stats((0L, 5L)) === ((12L, 13, 13)))
+      assert(stats((0L, 1L)) === ((0L, 13, 13)))
+    }
   }
 
   test("routed verify: duplicate-element shingles score identically on both routes") {
-    // ADVICE r13: the carry route sized the raw hashed array while the
-    // posting route sized array_distinct of it — a caller passing shingles
-    // with duplicate elements got route-dependent _n/jaccard. Both routes
-    // now size the DISTINCT set.
+    // ADVICE r13: each side sizes the DISTINCT set — a caller passing
+    // shingles with duplicate elements gets the set Jaccard, on the
+    // broadcast and on the shuffle join leg alike
     val docs = Seq(
       (1L, Seq("a", "b", "c", "a", "a")), // 3 distinct, 5 raw
       (2L, Seq("a", "b", "d", "b"))       // 3 distinct, 4 raw
     ).toDF("doc_id", "shs")
     val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
-    def j(factor: Double) =
-      Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
-        postingFactor = factor).collect().map(_.getDouble(2)).toSeq
-    val pinned = j(1e18)   // pinned carry (measurement skipped)
-    val measured = j(10.0) // measured carry
-    val posting = j(0.0)   // forced posting
-    assert(pinned === Seq(0.5)) // |{a,b}| / |{a,b,c,d}| on DISTINCT sets
-    assert(measured === pinned)
-    assert(posting === pinned)
-  }
-
-  test("routed verify: posting-route release leaves no persisted blocks") {
-    // the posting route persists the pair list, the semi-join id set, and
-    // the candidate-doc hashed projection — the release handle must drop
-    // all three (the same session-hygiene gate as the pair-carry twins)
-    val docs = (0 until 30).map(i =>
-      (i.toLong, (0 until 8).map(j => s"sh_${(i % 3)}_$j"))).toDF("doc_id", "shs")
-    val pairs = (for (a <- 0 until 30; b <- a + 1 until 30; if a % 3 == b % 3)
-      yield (a.toLong, b.toLong)).toDF("id_a", "id_b")
-    val baseline = spark.sparkContext.getPersistentRDDs.keySet
-    for (limit <- Seq(-1L, 0L)) {
-      val (verified, rel) = Dedup.jaccardOnPairsRoutedReleasable(
-        pairs, docs, "doc_id", "shs", limit, postingFactor = 0.0)
-      assert(verified.count() > 0)
-      rel()
-      assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
-        s"posting-route blocks leaked at maxBroadcastPairs=$limit")
-    }
-    // pair-carry route through the SAME entry point releases too —
-    // both the pinned leg (measurement skipped) and the measured leg
-    // (which keeps ONE persisted pair list for the carry join)
-    for (factor <- Seq(1e18, 1e6)) {
-      val (v2, rel2) = Dedup.jaccardOnPairsRoutedReleasable(
-        pairs, docs, "doc_id", "shs", postingFactor = factor)
-      assert(v2.count() > 0)
-      rel2()
-      assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
-        s"pair-carry blocks leaked through the routed entry at factor=$factor")
-    }
+    for (limit <- Seq(-1L, 0L))
+      assert(Seam.scoped(seam =>
+        Dedup.jaccardOnPairs(seam, pairs, docs, "doc_id", "shs", limit)
+          .collect().map(_.getDouble(2)).toSeq) === Seq(0.5), // |{a,b}| / |{a,b,c,d}|
+        s"maxBroadcastPairs=$limit")
   }
 
   test("dhash: constant image hashes to 0, monotone gradient to all-ones") {
@@ -1587,8 +1518,8 @@ class OpsSpec extends AnyFunSuite {
     for (t <- Seq(0.5, 0.6, 0.7, 0.8, 0.9)) {
       val docs = corpus(nClusters = 4, perCluster = 6)
       val df = docs.map { case (i, s) => (i, s.toSeq) }.toDF("id", "shs")
-      val got = Dedup.nearDupPairsAt(df, "id", "shs", t)
-        .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
+      val got = Seam.scoped(seam => Dedup.nearDupPairsAt(seam, df, "id", "shs", t)
+        .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect())
       val byId = docs.toMap
       // precision is EXACT modulo the 4-decimal rounding the operator
       // applies: every emitted pair re-verifies against the driver-side
@@ -1691,6 +1622,19 @@ class OpsSpec extends AnyFunSuite {
     finally rc.unpersist()
   }
 
+  test("connectedComponents: a run that does not converge leaves no blocks") {
+    // ROADMAP aim 3: the failure path releases what the success path
+    // would — the edge cache and every round's label checkpoint. A 64-link
+    // chain needs ~7 pointer-jumping rounds, so one round cannot converge.
+    val chain = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val census = new BlockCensus(spark)
+    val err = intercept[IllegalStateException](
+      Dedup.connectedComponents(chain, maxIter = 1))
+    assert(err.getMessage.contains("did not converge"))
+    assert(census.left.isEmpty,
+      s"a failed connectedComponents left blocks: ${census.left.mkString(",")}")
+  }
+
   test("sequence packing: offsets tile each (lang, shard) stream gaplessly") {
     val dir = "/root/testdata/sf0.001"
     val out = graft.queries.Registry.byName("t_pack_sequences")
@@ -1725,8 +1669,9 @@ class OpsSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
       .withColumn("ws", Dedup.wordsArray("text"))
       .withColumn("shs", Dedup.wordShingles("ws", 3))
-    val pairs = Dedup.nearDupPairsAt(docs, "doc_id", "shs", threshold = 0.5, nHashes = 32)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val pairs = Seam.scoped(seam => Dedup.nearDupPairsAt(seam, docs, "doc_id", "shs",
+        threshold = 0.5, nHashes = 32)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(pairs.contains((0L, 1L)) && pairs.contains((0L, 3L)))
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
   }
@@ -1740,8 +1685,8 @@ class OpsSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
       .withColumn("ws", Dedup.wordsArray("text"))
       .withColumn("shs", Dedup.wordShingles("ws", 5))
-    val out = Dedup.dupGramCoverage(docs, "doc_id", "shs")
-      .as[(Long, Double, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    val out = Seam.scoped(seam => Dedup.dupGramCoverage(seam, docs, "doc_id", "shs")
+      .as[(Long, Double, Long)].collect()).map(r => r._1 -> ((r._2, r._3))).toMap
     assert(out(0L) === ((1.0, 3L)) && out(1L) === ((1.0, 3L)))
     assert(out(2L) === ((0.0, 4L)))
     assert(out(3L) === ((0.0, 0L)))
@@ -2026,8 +1971,8 @@ class OpsSpec extends AnyFunSuite {
       val df = docs.toDF("doc_id", "text")
         .withColumn("ws", Dedup.wordsArray("text"))
         .withColumn("shs", Dedup.wordShingles("ws", k))
-      val got = Dedup.dupGramCoverage(df, "doc_id", "shs")
-        .as[(Long, Double, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+      val got = Seam.scoped(seam => Dedup.dupGramCoverage(seam, df, "doc_id", "shs")
+        .as[(Long, Double, Long)].collect()).map(r => r._1 -> ((r._2, r._3))).toMap
       // brute force: distinct k-grams per doc, gram -> containing-doc count
       val grams = docs.map { case (id, t) =>
         id -> t.split(" ").filter(_.nonEmpty).sliding(k)
@@ -2052,10 +1997,9 @@ class OpsSpec extends AnyFunSuite {
     // same null-in/empty-out contract as the sibling shingle UDFs.
     val rows = Seq((0L, "a b c d e"), (1L, null: String), (2L, "a b c x y"))
       .toDF("doc_id", "text")
-    val (out, release) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3)
-    val got = out.orderBy("doc_id")
-      .select($"doc_id", $"n_kept", $"cleaned").as[(Long, Long, String)].collect()
-    release()
+    val got = Seam.scoped(seam => Dedup.spanDedup(seam, rows, "doc_id", "text", 3)
+      .orderBy("doc_id")
+      .select($"doc_id", $"n_kept", $"cleaned").as[(Long, Long, String)].collect())
     assert(got(1) === ((1L, 0L, "")), "null text row must survive as empty")
     // the non-null rows still dedup normally around it
     assert(got(0)._2 === 2L && got(2)._2 === 2L)
@@ -2116,15 +2060,14 @@ class OpsSpec extends AnyFunSuite {
     val rows = Seq(
       (0L, ("word " * 25).trim),
       (1L, null: String)).toDF("doc_id", "text")
-    val (st, release) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text")
-    assert(st.corpus.count() === 2L && st.quality.count() === 1L)
-    assert(st.decontaminated.select("doc_id").as[Long].collect() === Seq(0L))
-    release()
+    Seam.scoped { seam =>
+      val st = CleanCorpus.cleanCorpus(seam, rows, "doc_id", "text")
+      assert(st.corpus.count() === 2L && st.quality.count() === 1L)
+      assert(st.decontaminated.select("doc_id").as[Long].collect() === Seq(0L))
+    }
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val (st0, release0) = CleanCorpus.cleanCorpusReleasable(empty, "doc_id", "text",
-      isHoldout = Some($"doc_id" === 0))
-    assert(st0.decontaminated.count() === 0L)
-    release0()
+    Seam.scoped(seam => assert(CleanCorpus.cleanCorpus(seam, empty, "doc_id", "text",
+      isHoldout = Some($"doc_id" === 0)).decontaminated.count() === 0L))
   }
 
   test("cleanCorpus funnel: hand-computed stage counts, preserved schema, released blocks") {
@@ -2159,27 +2102,26 @@ class OpsSpec extends AnyFunSuite {
       (6L, "wind rain snow hail storm cloud mist fog dew frost blue indigo " +
         "violet crimson scarlet thunder lightning breeze gale cyclone " +
         "typhoon monsoon drizzle sleet")).toDF("doc_id", "text")
-    val floor = spark.sparkContext.parallelize(Seq(0), 1).id
-    val (st, release) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text",
-      isHoldout = Some($"doc_id" === 5))
-    assert(st.corpus.count() === 7L)
-    assert(st.quality.count() === 6L)
-    assert(st.exactDeduped.count() === 5L)
-    assert(st.nearDeduped.count() === 4L)
-    val fin = st.decontaminated.select("doc_id").as[Long].collect().sorted
-    assert(fin === Seq(0L, 3L))
-    // every stage frame keeps the INPUT schema — no internal columns leak
-    for (f <- Seq(st.quality, st.exactDeduped, st.nearDeduped, st.decontaminated))
-      assert(f.columns.toSeq === Seq("doc_id", "text"))
-    // the one release handle drops every block the funnel cached
-    release()
-    val left = spark.sparkContext.getPersistentRDDs.keys.filter(_ >= floor)
-    assert(left.isEmpty, s"funnel leaked persisted blocks: ${left.mkString(",")}")
+    val census = new BlockCensus(spark)
+    Seam.scoped { seam =>
+      val st = CleanCorpus.cleanCorpus(seam, rows, "doc_id", "text",
+        isHoldout = Some($"doc_id" === 5))
+      assert(st.corpus.count() === 7L)
+      assert(st.quality.count() === 6L)
+      assert(st.exactDeduped.count() === 5L)
+      assert(st.nearDeduped.count() === 4L)
+      val fin = st.decontaminated.select("doc_id").as[Long].collect().sorted
+      assert(fin === Seq(0L, 3L))
+      // every stage frame keeps the INPUT schema — no internal columns leak
+      for (f <- Seq(st.quality, st.exactDeduped, st.nearDeduped, st.decontaminated))
+        assert(f.columns.toSeq === Seq("doc_id", "text"))
+    }
+    // closing the seam drops every block the funnel cached
+    assert(census.left.isEmpty, s"funnel leaked persisted blocks: ${census.left.mkString(",")}")
     // no holdout predicate -> decontamination is the identity on stage 4
-    val (st2, release2) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text")
-    assert(st2.decontaminated.select("doc_id").as[Long].collect().sorted ===
-      Seq(0L, 3L, 5L, 6L))
-    release2()
+    Seam.scoped(seam => assert(CleanCorpus.cleanCorpus(seam, rows, "doc_id", "text")
+      .decontaminated.select("doc_id").as[Long].collect().sorted ===
+      Seq(0L, 3L, 5L, 6L)))
 
     // oversized-holdout safety (r15 ADVICE): decontamination carries NO
     // forced broadcast hint — AQE sizes the holdout side at runtime, so a
@@ -2187,22 +2129,23 @@ class OpsSpec extends AnyFunSuite {
     // hint's absence in the optimized plan (a ResolvedHint would survive
     // to the join strategy as a requirement; its absence leaves the
     // decision to AQE's size estimate).
-    val (st3, release3) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text",
-      isHoldout = Some($"doc_id" === 5))
-    val plan = st3.decontaminated.queryExecution.optimizedPlan.toString
-    // a broadcast() hint survives optimization as the join's
-    // "rightHint=(strategy=broadcast)" field (EliminateResolvedHint folds
-    // the hint node into the join). Other funnel joins carry their own
-    // MEASURED broadcasts (the routed verify's pair join) — pin only the
-    // shingle-contamination join: the line joining on _sh must carry no
-    // forced strategy.
-    val shJoin = plan.linesIterator
-      .filter(l => l.contains("Join") && l.contains("_sh#")).toSeq
-    assert(shJoin.nonEmpty, s"expected a _sh contamination join in:\n$plan")
-    assert(shJoin.forall(l => !l.contains("strategy=broadcast")),
-      s"decontamination must not force a broadcast — AQE routes by measured size: $shJoin")
-    assert(st3.decontaminated.select("doc_id").as[Long].collect().sorted ===
-      Seq(0L, 3L))
-    release3()
+    Seam.scoped { seam =>
+      val st3 = CleanCorpus.cleanCorpus(seam, rows, "doc_id", "text",
+        isHoldout = Some($"doc_id" === 5))
+      val plan = st3.decontaminated.queryExecution.optimizedPlan.toString
+      // a broadcast() hint survives optimization as the join's
+      // "rightHint=(strategy=broadcast)" field (EliminateResolvedHint folds
+      // the hint node into the join). Other funnel joins carry their own
+      // MEASURED broadcasts (the routed verify's pair join) — pin only the
+      // shingle-contamination join: the line joining on _sh must carry no
+      // forced strategy.
+      val shJoin = plan.linesIterator
+        .filter(l => l.contains("Join") && l.contains("_sh#")).toSeq
+      assert(shJoin.nonEmpty, s"expected a _sh contamination join in:\n$plan")
+      assert(shJoin.forall(l => !l.contains("strategy=broadcast")),
+        s"decontamination must not force a broadcast — AQE routes by measured size: $shJoin")
+      assert(st3.decontaminated.select("doc_id").as[Long].collect().sorted ===
+        Seq(0L, 3L))
+    }
   }
 }

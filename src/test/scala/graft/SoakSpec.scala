@@ -9,7 +9,7 @@ import graft.api.Engine
 import graft.core.GraftSession
 
 /** Engine-session SOAK (VERDICT r12 ask #5): the lifecycle hygiene work —
-  * release handles on every routed/posting join, named result dirs,
+  * one seam owning every routed join's blocks, named result dirs,
   * refresh-per-batch index stores — is spec-pinned piecewise; this drives
   * one LONG-LIVED engine through repeated mixed-workload cycles
   * (mutate → sync → query mix → dedup scan → delete → re-sync) and asserts
@@ -50,22 +50,6 @@ class SoakSpec extends AnyFunSuite {
     rt.totalMemory() - rt.freeMemory()
   }
 
-  /** Persisted-block census scoped to RDDs created at-or-after `floor`.
-    * The suite shares one SparkSession, so the RAW `getPersistentRDDs`
-    * count also sees earlier tests' abandoned engines — whose dead blocks
-    * the ContextCleaner unpersists at some later GC, dropping the raw
-    * count BELOW a baseline captured before the GC landed (observed
-    * in-suite: 16 -> 15 mid-soak, a phantom "leak" of -1). RDD ids are
-    * monotonic per context, so floor-scoping counts only blocks this
-    * test's own engine holds — those are strongly referenced and cannot
-    * be cleaner-reclaimed, making the per-cycle equality deterministic
-    * while keeping its full leak-catching strictness. */
-  private def blockFloor(): Int =
-    spark.sparkContext.parallelize(Seq(0), 1).id
-
-  private def blocksSince(floor: Int): Seq[Int] =
-    spark.sparkContext.getPersistentRDDs.keys.filter(_ >= floor).toSeq.sorted
-
   test("long-lived engine session: blocks, disk, and heap stay bounded over mixed-workload cycles") {
     val root = Files.createTempDirectory("soak-root").toString
     val storeBase = Files.createTempDirectory("soak-store").toString
@@ -77,7 +61,7 @@ class SoakSpec extends AnyFunSuite {
         s"Document number $i unique token zq$i.\n\n" + boiler +
           (if (i % 3 == 0) " shared trailing boilerplate block for the near dup detector"
            else s" distinct tail $i ${"filler " * 10}"))
-    val floor = blockFloor()
+    val census = new BlockCensus(spark)
     val engine = new Engine(spark, store, Seq(root))
 
     // ---- warm-up cycle: first sync pays store/index bootstrap; measure
@@ -88,7 +72,7 @@ class SoakSpec extends AnyFunSuite {
     // COUNT, not id-set: the engine legitimately rotates one live
     // checkpoint per tool name (fresh RDD id each call, predecessor
     // released) — what must not happen is the count growing with calls
-    val blockBaseline = blocksSince(floor).size
+    val blockBaseline = census.left.size
     val diskBaseline = treeBytes(storeBase)
     val heapBaseline = usedHeapAfterGc()
     assert(diskBaseline > 0L)
@@ -114,9 +98,8 @@ class SoakSpec extends AnyFunSuite {
       assert(s2.upserted === 1, s"cycle $cycle: deleted doc must re-ingest")
 
       // invariant 1: no cached-block accumulation, checked EVERY cycle
-      assert(blocksSince(floor).size === blockBaseline,
-        s"cycle $cycle leaked persisted blocks: " +
-          blocksSince(floor).mkString(","))
+      assert(census.left.size === blockBaseline,
+        s"cycle $cycle leaked persisted blocks: " + census.left.mkString(","))
       // invariant 2: store tree byte-bounded (atomic swaps replace state;
       // allowance covers parquet size jitter from re-chunked revisions)
       val disk = treeBytes(storeBase)
@@ -138,53 +121,14 @@ class SoakSpec extends AnyFunSuite {
       s"heap still trending in the final cycles: ${heaps.map(_ / 1e6).mkString(", ")} MB")
   }
 
-  test("posting-route engine session: dedup cycles under postingVerifyFactor=0 leave no blocks") {
-    // VERDICT r13 ask #4: the default-knob soak exercises only the pair
-    // carry. The posting route persists DIFFERENT state per verify (the
-    // pair list, the semi-join id set, and the candidate-doc hashed
-    // projection, ops/Dedup.scala posting leg) — pin factor=0 on the
-    // session so every nearDuplicateFiles verify takes the posting route,
-    // and give those persists the same blocks-return-to-baseline gate.
-    val root = Files.createTempDirectory("soakp-root").toString
-    val storeBase = Files.createTempDirectory("soakp-store").toString
-    val boiler = "posting route soak boilerplate shared across documents " * 8
-    for (i <- 0 until 10)
-      write(s"$root/doc$i.txt",
-        s"Posting soak document $i token pq$i.\n\n" + boiler +
-          (if (i % 2 == 0) " common trailing block for near dup candidates"
-           else s" distinct tail $i ${"filler " * 10}"))
-    spark.conf.set("spark.graft.dedup.postingVerifyFactor", "0")
-    try {
-      val floor = blockFloor()
-      val engine = new Engine(spark, storeBase + "/chunks", Seq(root))
-      assert(engine.sync().upserted === 10)
-      assert(engine.nearDuplicateFiles(0.5).count() > 0,
-        "planted near-dups must surface through the posting route")
-      val blockBaseline = blocksSince(floor).size
-      val diskBaseline = treeBytes(storeBase)
-      for (cycle <- 1 to 3) {
-        write(s"$root/doc1.txt",
-          s"Posting soak document 1 REVISED cycle $cycle token pq1.\n\n" +
-            boiler + s" revision tail $cycle ${"filler " * 10}")
-        assert(engine.sync().upserted === 1, s"posting cycle $cycle")
-        assert(engine.nearDuplicateFiles(0.5).count() > 0)
-        assert(blocksSince(floor).size === blockBaseline,
-          s"posting cycle $cycle leaked persisted blocks: " +
-            blocksSince(floor).mkString(","))
-        val disk = treeBytes(storeBase)
-        assert(disk <= diskBaseline * 3 / 2 + (1 << 20),
-          s"posting cycle $cycle: store tree grew $diskBaseline -> $disk")
-      }
-    } finally spark.conf.unset("spark.graft.dedup.postingVerifyFactor")
-  }
-
-  test("cleanCorpus op: repeated funnel calls leave no blocks on the carry AND posting routes") {
+  test("cleanCorpus op: repeated funnel calls leave no blocks") {
     // VERDICT r14 ask #5: the funnel's two stage caches plus its routed
-    // verify's persists are exactly the class this soak exists to gate.
-    // Drive the ops-level API (not the benchmark query) through repeated
-    // build→consume→release cycles under both verify knobs — any cycle
-    // that strands even one block fails immediately.
+    // verify's persists and dropped-id checkpoint are exactly the class
+    // this soak exists to gate. Drive the ops-level API (not the benchmark
+    // query) through repeated build→consume→close cycles — any cycle that
+    // strands even one block fails immediately.
     import org.apache.spark.sql.functions.col
+    import graft.core.Seam
     import graft.ops.CleanCorpus
     val session = spark
     import session.implicits._
@@ -203,25 +147,17 @@ class SoakSpec extends AnyFunSuite {
       (i.toLong, text)
     }
     val corpus = base.toDF("doc_id", "text")
-    for (knob <- Seq(None, Some("0"))) {
-      knob.foreach(v => spark.conf.set("spark.graft.dedup.postingVerifyFactor", v))
-      try {
-        val floor = blockFloor()
-        var expected = -1L
-        for (cycle <- 1 to 3) {
-          val (st, release) = CleanCorpus.cleanCorpusReleasable(
-            corpus, "doc_id", "text",
-            isHoldout = Some(col("doc_id") % 13 === 0))
-          val n = st.decontaminated.count()
-          assert(n > 0, s"funnel produced no survivors (knob=$knob)")
-          if (expected < 0) expected = n
-          else assert(n === expected, s"cycle $cycle drifted (knob=$knob)")
-          release()
-          val left = blocksSince(floor)
-          assert(left.isEmpty,
-            s"cleanCorpus cycle $cycle (knob=$knob) leaked blocks: ${left.mkString(",")}")
-        }
-      } finally spark.conf.unset("spark.graft.dedup.postingVerifyFactor")
+    val census = new BlockCensus(spark)
+    var expected = -1L
+    for (cycle <- 1 to 3) {
+      val n = Seam.scoped(seam => CleanCorpus.cleanCorpus(seam,
+          corpus, "doc_id", "text", isHoldout = Some(col("doc_id") % 13 === 0))
+        .decontaminated.count())
+      assert(n > 0, "funnel produced no survivors")
+      if (expected < 0) expected = n
+      else assert(n === expected, s"cycle $cycle drifted")
+      assert(census.left.isEmpty,
+        s"cleanCorpus cycle $cycle leaked blocks: ${census.left.mkString(",")}")
     }
   }
 }

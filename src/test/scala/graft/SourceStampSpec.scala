@@ -114,7 +114,7 @@ class SourceStampSpec extends AnyFunSuite {
   test("memo retention is bounded under index-generation churn (r15 VERDICT)") {
     // A long-lived engine session churns index generations: each build
     // memoizes (bucket map / centroid / row count) for a fresh dir, then
-    // the dir is deleted or rebuilt. The maps must not retain an entry per
+    // the dir is deleted or rebuilt. The memo map must not retain an entry per
     // dead generation for the JVM's lifetime — dead-dir entries are
     // evicted and the total is LRU-capped at MaxEntries.
     SourceStamp.clear()
@@ -134,10 +134,8 @@ class SourceStampSpec extends AnyFunSuite {
       Files.delete(dir.resolve("idx.parquet"))
       Files.delete(dir)
     }
-    assert(SourceStamp.retainedRefEntries <= SourceStamp.MaxEntries,
-      s"ref memo retained ${SourceStamp.retainedRefEntries} entries after $generations dead generations")
-    assert(SourceStamp.retainedLongEntries <= SourceStamp.MaxEntries,
-      s"long memo retained ${SourceStamp.retainedLongEntries} entries after $generations dead generations")
+    assert(SourceStamp.retainedEntries <= SourceStamp.MaxEntries,
+      s"memo retained ${SourceStamp.retainedEntries} entries after $generations dead generations")
     // the live dir's entry survives the churn (dead dirs evict first;
     // post-sweep the map is under the cap, so LRU never reaches it)
     assert(liveProbe() === Seq(1, 2, 3))

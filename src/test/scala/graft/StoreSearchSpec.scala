@@ -363,7 +363,8 @@ class StoreSearchSpec extends AnyFunSuite {
     st.rebuild(stored)
     assert(st.exists && st.rowCount() === 3)
 
-    val delta = st.deltaCandidates(batch).as[(Long, Long)].collect().toSet
+    val delta = graft.core.Seam.scoped(seam =>
+      st.deltaCandidates(seam, batch).as[(Long, Long)].collect().toSet)
     // ground truth: band the UNION corpus, keep candidate pairs with a batch side
     val union = stored.union(batch)
       .withColumn("ws", Dedup.wordsArray("text"))
@@ -391,9 +392,12 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(!store.exists)
     val all = (0 until 600).map(i => (i.toLong, s"tok${i % 91} body ${i % 140}"))
       .toDF("doc_id", "text")
-    // three mutation batches merged incrementally
+    // three mutation batches merged incrementally, each leaving no blocks
+    // behind (the batch cache and both sketch snapshots are released)
+    val census = new BlockCensus(spark)
     for (k <- 0 until 3)
       store.appendBatch(all.filter($"doc_id" % 3 === k))
+    assert(census.left.isEmpty, s"appends left persisted RDDs: ${census.left.mkString(",")}")
     assert(store.exists)
     val st = store.stats().head()
     assert(st.getLong(0) === 3L && st.getLong(1) === 600L)
