@@ -14,7 +14,7 @@ import graft.core.{PathKeys, ScopeMatch, Seam}
 import graft.embed.{Embedder, HashedEmbedder}
 import graft.ingest.{DirectoryScanner, Ingest}
 import graft.search.{Bm25, HybridSearch, VectorSearch}
-import graft.store.{ChunkStore, DirSwap}
+import graft.store.ChunkStore
 import graft.sync.SyncPlanner
 
 /** Driver-side facade mirroring the reference's tool surface
@@ -137,6 +137,8 @@ final class Engine(
       annIndex.rebuild(chunks, annLists, minRows = annThreshold)
     }
   }
+  /** zero chunk rows: a chunk-table write that only deletes */
+  private def noChunks: DataFrame = Seq.empty[graft.core.ChunkSchema.ChunkRow].toDF()
   private def embedder: Embedder = mkEmbedder()
 
   final case class IngestResult(filePath: String, chunkCount: Long,
@@ -491,9 +493,11 @@ final class Engine(
           for (u <- upserts) {
             try { ingestFileNoRefresh(u.path); up += 1 }
             catch { case _: Ingest.NoChunksError => em += 1 }
-            describing("graft store: delete")(u.staleSpellings.foreach(store.deleteFile))
           }
-          describing("graft store: delete")(pruneSpellings.foreach(store.deleteFile))
+          // every stale spelling and prune in one table write
+          val deletes = (upserts.flatMap(_.staleSpellings) ++ pruneSpellings).distinct
+          if (deletes.nonEmpty) describing("graft store: delete")(
+            store.upsertFilesFromRows(noChunks, deletes))
           (up, em)
         }
       // ONE index refresh per batch iff anything mutated (ref: single
@@ -507,7 +511,7 @@ final class Engine(
     * above `batchExecuteThreshold` dirty files: ONE `binaryFile` read over
     * every upsert path → the distributed chunk+embed pipeline
     * ([[Ingest.buildChunks]], the same per-document logic the loop path
-    * runs) → ONE batched store overwrite ([[ChunkStore.upsertFiles]]) that
+    * runs) → ONE batched store write ([[ChunkStore.upsertFilesFromRows]]) that
     * also carries every stale-spelling and prune delete. Per-file
     * zero-chunk semantics are preserved exactly: a file whose parse
     * produces no chunks is counted `empty` and its existing rows stay (it
@@ -523,9 +527,8 @@ final class Engine(
     spelled.foreach(p => require(p.startsWith(rawDataDir) || containedInRoots(p),
       s"path outside configured roots: ${PathKeys.displayPath(p)}"))
     val deletes = (upserts.flatMap(_.staleSpellings) ++ pruneSpellings).distinct
-    if (spelled.isEmpty) { // prune-only batch: one deleting overwrite
-      store.upsertFiles(
-        Seq.empty[graft.core.ChunkSchema.ChunkRow].toDF(), Seq.empty, deletes)
+    if (spelled.isEmpty) { // prune-only batch: one deleting write
+      store.upsertFilesFromRows(noChunks, deletes)
       return (0L, 0L)
     }
     val mk = mkEmbedder // local copy: the executor closure must not drag `this`
@@ -848,16 +851,9 @@ final class Engine(
   def status(): (Long, Long) = store.status()
 
   /** once-per-batch maintenance (the reference's `optimize()` after a sync
-    * batch, `src/server/index.ts:546-549`): compact fragmented chunk
-    * partitions and sweep stale swap debris beside the chunk table and
-    * both index roots */
-  def optimize(): Unit = mutationGuard.synchronized {
-    store.optimize()
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (index <- Seq("-fts", "-ann"))
-      DirSwap.sweepDebris(fs, storePath + index, DirSwap.DebrisAgeMs)
-  }
+    * batch, `src/server/index.ts:546-549`): compact a fragmented chunk
+    * table. Every store vacuums its superseded versions as it commits. */
+  def optimize(): Unit = mutationGuard.synchronized(store.optimize())
 
   /** Export the chunk corpus in the sharded training layout
     * ([[graft.ops.CorpusWriter]]): split=/shard= directories, content-hash

@@ -1,6 +1,8 @@
 package graft.core
 
-/** Driver-side staleness stamps for cross-run cache probes.
+/** Driver-side staleness stamps for cross-run cache probes over SOURCE
+  * tables (the driver's sf parquet files and dirs). Persisted stores need
+  * none: their version log keys every memo exactly ([[graft.store.StoreLog]]).
   *
   * The index-backed queries guard their cross-run /tmp index caches with a
   * freshness probe — "does the index's recorded row count still equal the
@@ -31,16 +33,15 @@ object SourceStamp {
 
   /** Retention bound of the memo map (r15 VERDICT "What's wrong #1"): the
     * map previously grew without bound across `(key, dir)` pairs for the
-    * JVM's lifetime, and [[memo]]'s values are not small (a centroid table
-    * is k×dim floats) — an engine
+    * JVM's lifetime, and [[memo]]'s values need not be small — an engine
     * session churning index generations leaked retained heap. Every put
     * now (a) evicts entries whose dir no longer exists on disk (deleted /
     * rebuilt-elsewhere index generations), and (b) if still over the cap,
     * drops least-recently-USED entries. The cap is the sum of the two
     * 64-entry maps (Long probes, reference values) this one replaced —
     * far above any real session's concurrent-store count — and is shared:
-    * past it, a churn of Long probes can evict a centroid table, which the
-    * two separate maps could not. */
+    * past it, a churn of Long probes can evict a reference value, which
+    * the two separate maps could not. */
   private[graft] val MaxEntries = 128
 
   /** (dir, signature, value, lastUsedTick) — `dir` is carried in the value
@@ -139,8 +140,8 @@ object SourceStamp {
     * contents — then a signature hit is exactly as fresh as recomputing.
     * Further contracts: (a) the returned object is SHARED across hits —
     * `compute` must return an immutable value, or the caller must
-    * defensively copy before mutating (loadCentroids does); (b) values may
-    * be arbitrarily large (centroid tables) and are retained STRONGLY until
+    * defensively copy before mutating; (b) values may be arbitrarily
+    * large and are retained STRONGLY until
     * dead-dir / LRU eviction (cap [[MaxEntries]]) — don't memoize values
     * that dwarf the index they stand for. */
   def memo[T <: AnyRef](dir: String, key: String)(compute: => T): T =

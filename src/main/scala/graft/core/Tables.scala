@@ -19,9 +19,10 @@ object Tables {
     * the dir's filesystem signature ([[SourceStamp.memo]]). Every FRESH
     * parquet open otherwise pays footer-read schema inference — a small
     * Spark job plus 0.1–0.5 s of driver-side latency at the local floor —
-    * per QUERY for the source tables and per BATCH for the delta-protocol
-    * state tables (r18 job-timeline attribution: ~2.5 s of zero-job driver
-    * gaps in one d_delta_pipeline pass, clustered around these opens). A
+    * per QUERY for the source tables (r18 job-timeline attribution: ~2.5 s
+    * of zero-job driver gaps in one d_delta_pipeline pass, clustered around
+    * these opens; the persisted stores memoize on their immutable
+    * directories instead, [[graft.store.StoreLog]]). A
     * real deployment reads the schema from a catalog/manifest instead of
     * re-inferring per query; the signature-keyed memo is the engine's
     * in-JVM twin of that. The schema is a pure function of the dir's

@@ -868,12 +868,13 @@ object DedupQueries {
         val st = new graft.store.MinhashIndexStore(s, dir,
           nHashes = 16, bands = 4, rowsPerBand = 4)
         // staleness gate matches the ANN store queries: a row-count probe
-        // (one stats-file read + one metadata-cheap count) invalidates a
+        // (the index's manifest row count vs the corpus count) invalidates a
         // cached index if the corpus was regenerated in place. Real engine
         // freshness is the refresh path's job — this only protects the
         // cross-run tmp cache.
-        // both probe sides signature-memoized (stored derives purely from
-        // documents.parquet, the index rowCount from its stats dir)
+        // zero jobs when nothing changed: the corpus count is
+        // signature-memoized on documents.parquet, the index rowCount is a
+        // manifest read
         val nStored = graft.core.SourceStamp.memoLong(
           s"$d/documents.parquet", "delta_stored")(stored.count())
         if (!st.exists || st.rowCount() != nStored) st.rebuild(stored)
@@ -1965,8 +1966,8 @@ object DedupQueries {
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
         val st = new graft.store.SrpIndexStore(s, dir, dim = 64, planes = 8,
           Seq("vec_id"), "embedding")
-        // both probe sides are signature-memoized (SourceStamp): zero jobs
-        // when neither the corpus nor the index dir changed
+        // zero jobs when nothing changed: the corpus count is
+        // signature-memoized (SourceStamp), the index rowCount a manifest read
         val nCorpus = graft.core.SourceStamp.memoLong(
           s"$d/embeddings.parquet", "count")(e.count())
         if (!st.exists || st.rowCount() != nCorpus) st.rebuild(e)
@@ -2187,7 +2188,8 @@ object DedupQueries {
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
         val st = new graft.store.AnnIndexStore(s, dir, Seq("vec_id"), "embedding")
         // build once per (tmpdir, sf): warm pass builds, timed pass probes;
-        // probe sides signature-memoized — zero jobs when nothing changed
+        // zero-job probe sides when nothing changed (memoized corpus count,
+        // manifest row count)
         val nCorpus = graft.core.SourceStamp.memoLong(
           s"$d/embeddings.parquet", "count")(e.count())
         if (!st.exists || st.rowCount() != nCorpus) st.rebuild(e, nLists = 16)

@@ -296,10 +296,10 @@ object RagQueries {
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
         val fts = new graft.store.FtsIndexStore(s, dir)
         // staleness probe for the cross-run tmp cache: embeddings count ==
-        // chunk-table count (1:1 join by construction). Both sides are
-        // signature-memoized (SourceStamp / FtsIndexStore.nDocs): when
-        // neither the corpus nor the index dir changed, the probe costs
-        // zero Spark jobs
+        // chunk-table count (1:1 join by construction). The corpus count is
+        // signature-memoized (SourceStamp) and FtsIndexStore.nDocs is a
+        // manifest read: when nothing changed, the probe costs zero Spark
+        // jobs
         val stale = fts.nDocs() != graft.core.SourceStamp.memoLong(
           s"$d/embeddings.parquet", "count")(Tables.embeddings(s, d).count())
         if (stale) fts.rebuild(ch)

@@ -1,7 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.ChunkSchema
@@ -10,98 +9,91 @@ import graft.core.ChunkSchema
   * (`src/vectordb/index.ts`): insert, delete-by-filePath, upsert, neighbor
   * range reads, per-file aggregates, status counts, manifest projection.
   *
-  * Upsert is write-new-table-then-swap: the idiomatic, atomic replacement for
-  * the reference's delete → insert → backup/rollback dance
-  * (`src/server/index.ts:645-701`, SURVEY §7 "what's hard" #2). On a real
-  * deployment this is Delta `replaceWhere`/`MERGE` or an overwrite of the
-  * file's partition; plain parquet here, but the zero-chunk fail-fast BEFORE
-  * any destructive step (`:635-642`) is preserved as a hard invariant.
+  * Every mutation writes the new table into a fresh directory and
+  * publishes it with one [[StoreLog]] commit: the idiomatic, atomic
+  * replacement for the reference's delete → insert → backup/rollback dance
+  * (`src/server/index.ts:645-701`, SURVEY §7 "what's hard" #2). A crash
+  * before the commit leaves the previous version current; a reader reads
+  * the version it resolved, whatever commits meanwhile. The zero-chunk
+  * fail-fast BEFORE any write (`:635-642`) is preserved as a hard
+  * invariant.
   *
   * Scale posture: one unbucketed table, rewritten whole by every mutation
-  * batch through [[DirSwap]]; neighbor reads push (filePath, chunkIndex)
-  * predicates to parquet row groups. The scale layout for the chunk table
-  * is [[VersionedStore]]'s — bucket-granular copy-on-write upserts behind
-  * compare-and-swap commits — and moving the table onto it is ROADMAP.md
-  * open item 3 (one commit protocol), not a second path here.
+  * batch (an insert appends a directory); neighbor reads push
+  * (filePath, chunkIndex) predicates to parquet row groups. Bucket-granular
+  * copy-on-write on the same log is [[VersionedStore]]'s layout; moving
+  * this table onto it is ROADMAP.md open item 3's remaining half.
   */
 final class ChunkStore(spark: SparkSession, path: String) {
 
-  private def fs: FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val log = new StoreLog(spark, path)
+  private val Chunks = "chunks"
 
-  def exists: Boolean = fs.exists(new HPath(path))
+  def exists: Boolean = !log.latest().isEmpty
 
-  def read(): DataFrame =
-    if (exists) spark.read.schema(ChunkSchema.schema).parquet(path)
-    else spark.createDataFrame(
+  def read(): DataFrame = read(log.latest())
+
+  private def read(m: Manifest): DataFrame =
+    if (m.dirs(Chunks).isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ChunkSchema.schema)
+    else spark.read.schema(ChunkSchema.schema).parquet(m.dirs(Chunks).map(log.abs): _*)
 
-  /** append-only insert (first write creates the table) */
-  def insert(chunks: DataFrame): Unit =
-    chunks.write.mode(SaveMode.Append).parquet(path)
+  /** publish `dirs` as the table's next version over `base` */
+  private def publish(base: Manifest, dirs: Seq[String]): Unit =
+    log.publish(base, Manifest(tables = Map(Chunks -> dirs))): Unit
 
-  /** atomic replace of the table with `df` through [[DirSwap]] (its tmp/old
-    * siblings live beside the table root, never inside it) */
-  private def swapTable(df: DataFrame): Unit =
-    DirSwap.swapInto(fs, path, path)(tmp =>
-      df.write.mode(SaveMode.Overwrite).parquet(tmp))
+  /** replace the table with `df` */
+  private def rewrite(base: Manifest, df: DataFrame): Unit =
+    publish(base, Seq(log.write(Chunks, df)))
 
-  def deleteFile(filePath: String): Unit =
-    swapTable(read().filter(col("filePath") =!= filePath))
+  /** append-only insert: one more directory (the table is compacted into
+    * one when it would exceed [[StoreLog.MaxDirs]]) */
+  def insert(chunks: DataFrame): Unit = {
+    val base = log.latest()
+    val dirs = base.dirs(Chunks)
+    if (dirs.size < StoreLog.MaxDirs) publish(base, dirs :+ log.write(Chunks, chunks))
+    else rewrite(base, read(base).unionByName(chunks, allowMissingColumns = true))
+  }
+
+  def deleteFile(filePath: String): Unit = {
+    val base = log.latest()
+    rewrite(base, read(base).filter(col("filePath") =!= filePath))
+  }
 
   /** upsert = replace all chunks of `filePath` with `newChunks`.
-    * Fails BEFORE any destructive step if newChunks is empty — the
-    * reference's NoChunksError invariant. */
+    * Fails BEFORE any write if newChunks is empty — the reference's
+    * NoChunksError invariant. */
   def upsertFile(filePath: String, newChunks: DataFrame): Unit = {
     if (newChunks.isEmpty)
       throw new graft.ingest.Ingest.NoChunksError(filePath)
-    swapTable(read().filter(col("filePath") =!= filePath)
+    val base = log.latest()
+    rewrite(base, read(base).filter(col("filePath") =!= filePath)
       .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))
   }
 
-  /** Batched upsert — the sync execute path at scale: replace all chunks
-    * of `replacePaths` with the matching rows of `newChunks` AND delete
-    * all rows of `deletePaths`, as ONE Spark write job instead of one
-    * table rewrite per file. `newChunks` must contain rows ONLY for
-    * `replacePaths`; files in neither list keep their rows. The zero-chunk
-    * invariant lives one level up: the sync executor lists a file in
-    * `replacePaths` only when its parse produced chunks, so a zero-chunk
-    * file's existing rows survive by construction. */
-  def upsertFiles(newChunks: DataFrame, replacePaths: Seq[String],
-                  deletePaths: Seq[String] = Seq.empty): Unit = {
-    import spark.implicits._
-    val affected = (replacePaths ++ deletePaths).distinct
-    if (affected.isEmpty) return
-    // removal via broadcast anti-join, not a giant literal IN list — the
-    // affected set is every dirty file of the batch
-    replaceFiles(newChunks, broadcast(affected.toDF("filePath")))
-  }
-
-  /** [[upsertFiles]] with the replace set derived FROM `newChunks` instead
-    * of a driver-side path list: the anti-join key set comes from the rows
-    * themselves, so the driver never holds O(dirty files) strings. Returns
-    * the number of distinct files the rows cover (the batch's `upserted`
-    * count). Zero-chunk semantics are inherited: a file with no rows in
-    * `newChunks` is absent from the derived replace set, so its existing
-    * rows survive. */
+  /** Batched upsert — the sync execute path: replace all chunks of every
+    * file `newChunks` has rows for AND delete all rows of `deletePaths`, as
+    * ONE table write instead of one rewrite per file. The replace set is
+    * derived FROM the rows, so the driver never holds O(dirty files)
+    * strings. Returns the number of distinct files the rows cover (the
+    * batch's `upserted` count). Zero-chunk semantics: a file with no rows
+    * in `newChunks` is absent from the replace set, so its existing rows
+    * survive; a prune-only batch passes empty rows. */
   def upsertFilesFromRows(newChunks: DataFrame,
                           deletePaths: Seq[String] = Seq.empty): Long = {
     import spark.implicits._
     val producedPaths = newChunks.select("filePath").distinct()
     val produced = producedPaths.count()
     if (produced == 0L && deletePaths.isEmpty) return 0L
-    // no broadcast hint here: the derived key set is unbounded (every dirty
-    // file of the batch), so AQE's runtime sizing picks broadcast vs
-    // shuffled anti-join — the one place the literal-list path could not
-    replaceFiles(newChunks,
-      producedPaths.unionByName(deletePaths.toDF("filePath")).distinct())
+    // no broadcast hint: the derived key set is unbounded (every dirty file
+    // of the batch), so AQE's runtime sizing picks broadcast vs shuffled
+    // anti-join
+    val affected = producedPaths.unionByName(deletePaths.toDF("filePath")).distinct()
+    val base = log.latest()
+    rewrite(base, read(base).join(affected, Seq("filePath"), "left_anti")
+      .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))
     produced
   }
-
-  /** rewrite the table without the `affected` files' rows, plus `newChunks` */
-  private def replaceFiles(newChunks: DataFrame, affected: DataFrame): Unit =
-    swapTable(read().join(affected, Seq("filePath"), "left_anti")
-      .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))
 
   /** neighbor range read (reference `src/vectordb/index.ts:138-164`,
     * handler clamp `src/server/index.ts:1035-1037`): chunks of one file with
@@ -144,22 +136,13 @@ final class ChunkStore(spark: SparkSession, path: String) {
   def manifest(): DataFrame =
     read().select("filePath", "contentHash").distinct()
 
-  /** S12 compaction — the reference's `table.optimize({cleanupOlderThan})`
+  /** S12 compaction — the reference's `table.optimize()`
     * (`src/vectordb/index.ts:317-324`), called once per batch, not per
-    * file. Two jobs:
-    *  1. rewrite the table into one file when it holds more than
-    *     `maxFragments` parquet files, via the same atomic swap as upsert
-    *     (append-heavy ingest fragments: each insert adds files);
-    *  2. sweep swap debris older than `cleanupOlderThanMs`
-    *     ([[DirSwap.sweepDebris]]). */
-  def optimize(maxFragments: Int = 4,
-               cleanupOlderThanMs: Long = DirSwap.DebrisAgeMs): Unit = {
-    val f = fs
-    val root = new HPath(path)
-    val fragments =
-      if (!f.exists(root)) 0
-      else f.listStatus(root).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (fragments > maxFragments) swapTable(read().coalesce(1))
-    DirSwap.sweepDebris(f, path, cleanupOlderThanMs)
+    * file: when the latest version spans more than `maxFragments` parquet
+    * files (each insert adds files), rewrite it as one. Superseded
+    * directories go with the commit's vacuum. */
+  def optimize(maxFragments: Int = 4): Unit = {
+    val base = log.latest()
+    if (read(base).inputFiles.length > maxFragments) rewrite(base, read(base).coalesce(1))
   }
 }

@@ -1,7 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Seam
@@ -50,81 +49,86 @@ final case class DeltaCleanResult(
   *    stored survivors' posting table with the batch holdout shingles
   *    (broadcast: tiny) and recorded in an append-only tombstone list.
   *
-  * Layout under `path/` (all writes via [[DirSwap]]; `stats/` LAST so
-  * [[exists]] only observes complete state):
-  *  - `fps/` — distinct normalized fingerprints of exact-dedup survivors
+  * Each version names five tables, pins a version of its nested index,
+  * and carries the per-stage totals; a rebuild or an absorbed batch is one
+  * [[StoreLog]] commit, so a failure anywhere before it leaves the
+  * previous state whole:
+  *  - `fps` — distinct normalized fingerprints of exact-dedup survivors
   *    (the canonical-per-group set; probing it answers "is this batch
   *    doc an exact dup of anything stored").
-  *  - `mh/` — a [[MinhashIndexStore]] over the exact-dedup survivors
+  *  - `mh/` — a nested [[MinhashIndexStore]] over the exact-dedup survivors
   *    (the near-dup candidate state; batch probes via `deltaCandidates`).
-  *  - `kept4/` — final-survivor ids, append-only.
-  *  - `revoked/` — tombstoned kept4 ids (decontamination revocations),
+  *    Its own log commits first; the outer manifest records that version
+  *    (`mh_version`) and every read pins it, so an index commit the outer
+  *    store never published is invisible and the next absorb builds over
+  *    the pinned version.
+  *  - `kept4` — final-survivor ids, append-only.
+  *  - `revoked` — tombstoned kept4 ids (decontamination revocations),
   *    append-only; the live survivor set is `kept4 − revoked`.
-  *  - `holdsh/` — distinct holdout (benchmark) shingles seen so far.
-  *  - `post4/` — (id, shingle) postings of live final survivors: the
+  *  - `holdsh` — distinct holdout (benchmark) shingles seen so far.
+  *  - `post4` — (id, shingle) postings of live final survivors: the
   *    revocation probe target. At 100 TB this table is written bucketed
   *    by shingle hash so a probe is partition-pruned point reads; here it
   *    is scanned once per batch under a broadcast (no shuffle either way).
-  *  - `stats/` — one row of per-stage totals (raw/quality/exact/near/
-  *    final); answers staleness probes and the funnel counts without a
-  *    data scan.
+  *  - stats `n_raw`/`n_quality`/`n_exact`/`n_near`/`n_final` — per-stage
+  *    totals; they answer staleness probes and the funnel counts without
+  *    a data scan.
   */
 final class CleanStateStore(
     spark: SparkSession, path: String,
     cfg: CleanCorpusConfig = CleanCorpusConfig(),
     idCol: String = "doc_id", textCol: String = "text") {
 
-  private val fpsPath = path + "/fps"
-  private val kept4Path = path + "/kept4"
-  private val revokedPath = path + "/revoked"
-  private val holdshPath = path + "/holdsh"
-  private val post4Path = path + "/post4"
-  private val statsPath = path + "/stats"
+  private val log = new StoreLog(spark, path)
+  private val MhVersion = "mh_version"
+  private val Counts = Seq("n_raw", "n_quality", "n_exact", "n_near", "n_final")
 
   private val mh = new MinhashIndexStore(spark, path + "/mh",
     cfg.nHashes, cfg.bands, cfg.rowsPerBand, cfg.shingleK, idCol)
 
-  private def fs =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def exists: Boolean = !log.latest().isEmpty
 
-  def exists: Boolean = fs.exists(new HPath(statsPath))
-
-  def drop(): Unit =
-    if (fs.exists(new HPath(path))) fs.delete(new HPath(path), true): Unit
+  def drop(): Unit = log.drop()
 
   /** per-stage totals (n_raw, n_quality, n_exact, n_near, n_final) — the
     * union funnel counts, maintained incrementally; n_raw is the staleness
-    * probe callers compare against their source count. Signature-memoized:
-    * zero jobs until a swap rewrites the stats dir. */
-  def stageCounts(): (Long, Long, Long, Long, Long) =
-    graft.core.SourceStamp.memo(statsPath, "stageCounts") {
-      val r = spark.read.parquet(statsPath).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    }
+    * probe callers compare against their source count. Read from the
+    * latest manifest: no Spark job. */
+  def stageCounts(): (Long, Long, Long, Long, Long) = {
+    val m = log.latest()
+    val Seq(r, q, e, n, f) = Counts.map(m.stat)
+    (r, q, e, n, f)
+  }
 
-  def rawCount(): Long = if (!exists) 0L else stageCounts()._1
+  def rawCount(): Long = log.latest().stat("n_raw")
 
-  /** live final-survivor ids: kept4 minus revocation tombstones.
-    * All state-table opens go through [[graft.core.Tables.openParquet]]
-    * (schema memoized behind the dir signature): a fresh open otherwise
-    * pays footer-read schema inference per BATCH per table — ~6 small
-    * jobs plus their driver latency per applyBatch (r18 timeline). */
-  def survivors(): DataFrame =
-    graft.core.Tables.openParquet(spark, kept4Path)
-      .join(storedRevoked(), Seq(idCol), "left_anti")
+  /** live final-survivor ids: kept4 minus revocation tombstones */
+  def survivors(): DataFrame = survivors(log.latest())
 
-  private def storedFps(): DataFrame = graft.core.Tables.openParquet(spark, fpsPath)
-  private def storedHoldSh(): DataFrame = graft.core.Tables.openParquet(spark, holdshPath)
-  private def storedPost4(): DataFrame = graft.core.Tables.openParquet(spark, post4Path)
+  private def survivors(m: Manifest): DataFrame =
+    log.table(m, "kept4").join(storedRevoked(m), Seq(idCol), "left_anti")
+
   // ids are long by the store contract (the engine's doc keys); an empty
   // tombstone list is the common case until the first benchmark update
-  private def storedRevoked(): DataFrame =
-    if (fs.exists(new HPath(revokedPath))) graft.core.Tables.openParquet(spark, revokedPath)
+  private def storedRevoked(m: Manifest): DataFrame =
+    if (m.dirs("revoked").nonEmpty) log.table(m, "revoked")
     else {
       val sp = spark
       import sp.implicits._
       Seq.empty[Long].toDF(idCol)
     }
+
+  /** the nested index as `m` pinned it */
+  private def mhAt(m: Manifest): Manifest = mh.log.at(m.stats.getOrElse(MhVersion, -1L))
+
+  /** publish `next` over `base`, then vacuum the nested index down to the
+    * oldest version a kept outer version pins */
+  private def publish(base: Manifest, next: Manifest): Unit = {
+    log.publish(base, next)
+    val pinned = log.versions().map(log.manifest).flatMap(_.stats.get(MhVersion))
+    mh.log.latestVersion().foreach(latest => if (pinned.nonEmpty)
+      mh.log.vacuum(keepVersions = math.max(2, (latest - pinned.min + 1).toInt)))
+  }
 
   private def shingled(df: DataFrame): DataFrame = df
     .withColumn("_ws", Dedup.wordsArray(textCol))
@@ -135,45 +139,29 @@ final class CleanStateStore(
     * what the batch funnel computed. Empty corpus still writes (empty)
     * state so a first absorb can bootstrap. */
   def rebuild(stored: DataFrame, isHoldout: Column): Unit = {
-    drop()
+    val base = log.latest()
     Seam.scoped { seam =>
       val st = CleanCorpus.cleanCorpus(seam, stored, idCol, textCol, Some(isHoldout), cfg)
       val kept4Ids = seam.persist(st.decontaminated.select(col(idCol)))
-      val nRaw = st.corpus.count()
-      val nQuality = st.quality.count()
-      val nExact = st.exactDeduped.count()
-      val nNear = st.nearDeduped.count()
-      val nFinal = kept4Ids.count()
-      DirSwap.swapInto(fs, path, fpsPath)(tmp =>
-        st.exactDeduped.select(
-            TextAnalysis.fingerprint(col(textCol)).as("_fp")).distinct()
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      mh.rebuild(st.exactDeduped.select(col(idCol), col(textCol)), textCol)
-      DirSwap.swapInto(fs, path, kept4Path)(tmp =>
-        kept4Ids.write.mode(SaveMode.Overwrite).parquet(tmp))
-      DirSwap.swapInto(fs, path, holdshPath)(tmp =>
-        stored.filter(isHoldout)
-          .withColumn("_ws", Dedup.wordsArray(textCol))
-          .select(explode(Dedup.wordShingles("_ws", cfg.shingleK)).as("_sh"))
-          .distinct()
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
+      val counts = Counts.zip(Seq(st.corpus, st.quality, st.exactDeduped,
+        st.nearDeduped, kept4Ids).map(_.count())).toMap
+      val fps = log.write("fps", st.exactDeduped.select(
+        TextAnalysis.fingerprint(col(textCol)).as("_fp")).distinct())
+      val mhm = mh.commitRebuild(st.exactDeduped.select(col(idCol), col(textCol)), textCol)
+      val kept4 = log.write("kept4", kept4Ids)
+      val holdsh = log.write("holdsh", stored.filter(isHoldout)
+        .withColumn("_ws", Dedup.wordsArray(textCol))
+        .select(explode(Dedup.wordShingles("_ws", cfg.shingleK)).as("_sh"))
+        .distinct())
       // postings re-derive the kept2-era shingles from source text (the
       // derivation is deterministic, so this equals the funnel's _shs)
-      DirSwap.swapInto(fs, path, post4Path)(tmp =>
-        shingled(st.decontaminated)
-          .select(col(idCol), explode(col("_shs")).as("_sh"))
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      writeStats(nRaw, nQuality, nExact, nNear, nFinal)
+      val post4 = log.write("post4", shingled(st.decontaminated)
+        .select(col(idCol), explode(col("_shs")).as("_sh")))
+      publish(base, Manifest(
+        tables = Map("fps" -> Seq(fps), "kept4" -> Seq(kept4),
+          "holdsh" -> Seq(holdsh), "post4" -> Seq(post4)),
+        stats = counts + (MhVersion -> mhm.version)))
     }
-  }
-
-  private def writeStats(raw: Long, q: Long, e: Long, n: Long, f: Long): Unit = {
-    val sp = spark
-    import sp.implicits._
-    DirSwap.swapInto(fs, path, statsPath)(tmp =>
-      Seq((raw, q, e, n, f))
-        .toDF("n_raw", "n_quality", "n_exact", "n_near", "n_final")
-        .write.mode(SaveMode.Overwrite).parquet(tmp))
   }
 
   /** Clean one sync batch incrementally against the stored state. The
@@ -197,7 +185,9 @@ final class CleanStateStore(
     * the result's frames read belongs to `seam`. */
   def applyBatch(seam: Seam, batch: DataFrame, fullCorpus: DataFrame,
                  isHoldout: Column): DeltaCleanResult = {
-    require(exists, "applyBatch requires built state (rebuild first)")
+    val m = log.latest()
+    require(!m.isEmpty, "applyBatch requires built state (rebuild first)")
+    val mhm = mhAt(m)
     val inCols = batch.columns.map(col).toSeq
 
     // --- the REVOCATION leg, forked first (r17 VERDICT #1, guide §2.6):
@@ -221,10 +211,10 @@ final class CleanStateStore(
     // benchmark shingles lose their survivor status (benchSh only ever
     // grows, so contamination is monotone — probing live survivors with
     // the NEW shingles alone is exact)
-    val revoked = seam.persist(storedPost4()
+    val revoked = seam.persist(log.table(m, "post4")
       .join(broadcast(batchHoldSh), Seq("_sh"), "left_semi")
       .select(idCol).distinct()
-      .join(storedRevoked(), Seq(idCol), "left_anti"))
+      .join(storedRevoked(m), Seq(idCol), "left_anti"))
     // materializes batchHoldSh + revoked caches
     val revokedFut = scala.concurrent.Future(revoked.count())(Seam.pool)
 
@@ -236,7 +226,7 @@ final class CleanStateStore(
     // flip the membership probe so the STATE table is scanned, never
     // shuffled: stored fps ⋉ broadcast(batch fps) → the (tiny) matched set,
     // then the batch anti-joins the broadcast matches
-    val hitFps = storedFps()
+    val hitFps = log.table(m, "fps")
       .join(broadcast(bfp.select("_fp").distinct()), Seq("_fp"), "left_semi")
     val notStored = bfp.join(broadcast(hitFps), Seq("_fp"), "left_anti")
     val canonB = notStored.groupBy("_fp").agg(min(col(idCol)).as(idCol))
@@ -249,10 +239,10 @@ final class CleanStateStore(
     // candidates touching the batch, from the stored band table (index
     // probe, batch bands broadcast) — exactly the union LSH pairs that
     // involve a batch doc
-    val indexed = mh.rowCount() > 0L
+    val indexed = mhm.stat("n_rows") > 0L
     val cand =
       if (indexed)
-        mh.deltaCandidates(seam, exactNew.select(col(idCol), col(textCol)), textCol)
+        mh.deltaCandidates(seam, exactNew.select(col(idCol), col(textCol)), textCol, mhm)
       else Dedup.lshCandidatePairs(
         Dedup.lshBands(
           mh.signatures(exactNew.select(col(idCol), col(textCol)), textCol),
@@ -291,7 +281,7 @@ final class CleanStateStore(
     // new benchmark shingles: the two tiny shingle sets fuse into ONE
     // broadcast semi-join (each extra sequential job here is a fixed
     // ~0.2-0.4 s local scheduling floor on the benched path)
-    val hitSh = storedHoldSh()
+    val hitSh = log.table(m, "holdsh")
       .join(broadcast(bexpl.select("_sh").distinct()), Seq("_sh"), "left_semi")
     val contaminated = bexpl
       .join(broadcast(hitSh.union(batchHoldSh)), Seq("_sh"), "left_semi")
@@ -306,7 +296,7 @@ final class CleanStateStore(
     scala.concurrent.Await.result(revokedFut,
       scala.concurrent.duration.Duration.Inf): Unit
 
-    val survivors = this.survivors()
+    val survivors = this.survivors(m)
       .join(broadcast(revoked), Seq(idCol), "left_anti")
       .union(finalNew)
 
@@ -319,38 +309,29 @@ final class CleanStateStore(
   }
 
   /** Absorb one [[applyBatch]] result into the stored state so the NEXT
-    * batch cleans against the union — parquet appends plus one stats swap,
-    * every write batch-sized (revocations land as tombstones in `revoked/`;
-    * nothing state-scale is rewritten). Call inside the result's seam,
-    * and treat the result as CONSUMED afterwards: its frames read
-    * the pre-mutation state and re-evaluate wrongly once the state tables
-    * have grown (absorb snapshots what it writes, callers get no such
-    * protection) — read post-absorb truth from [[survivors]]/[[stageCounts]]. */
+    * batch cleans against the union — one new directory per table plus the
+    * nested index's append, every write batch-sized (revocations land as
+    * tombstones in `revoked`; nothing state-scale is rewritten), published
+    * by one commit. Call inside the result's seam, and treat the result as
+    * CONSUMED afterwards: read post-absorb truth from
+    * [[survivors]]/[[stageCounts]]. */
   def absorb(result: DeltaCleanResult): Unit = {
-    val (raw0, q0, e0, n0, f0) = stageCounts()
+    val base = log.latest()
+    val Seq(raw0, q0, e0, n0, f0) = Counts.map(base.stat)
     // absorb was ~20 driver-SEQUENTIAL small jobs (r17 attribution:
     // snapshots, counts, appends at the local ~0.2–0.4 s/job floor —
-    // 4 absorbs put e_stream_pipeline at ~46 s at sf0.01). The protocol
-    // has exactly three true barriers, so it now runs as three phases
-    // (guide §2.6 / the BPE concurrent-checkpoint pattern): every job
-    // inside a phase is independent and submitted concurrently, each
-    // phase pays its MAX job, not the sum. Both waves run on the seams'
-    // JVM-shared daemon executor (r17 VERDICT #7: a long-lived ingest
-    // absorbing per batch must not churn a fresh pool per call).
-    // --- phase 1: SNAPSHOT every frame that gets written (or re-read)
-    // after the first state mutation: the delta frames' plans READ the
-    // state tables they are about to update, and Spark's write path
-    // recaches-by-path — the first append would re-evaluate the remaining
-    // frames against the MUTATED state (observed: the fps append made
-    // finalNew re-resolve to empty, so kept4 absorbed nothing). Eager
-    // localCheckpoint pins each frame's pre-mutation value and severs the
-    // path dependence; ALL snapshots (and the three batch-frame counts)
-    // complete before phase 2 mutates anything, so the pre-mutation
-    // barrier is intact. Counts the stats row needs from snapshotted
-    // frames ride the checkpoint job as observed metrics (the
-    // connectedComponents discipline) instead of re-count jobs.
-    // A failed phase-1 job rethrows only after every sibling finished, with
-    // the completed snapshots released (ADVICE r17).
+    // 4 absorbs put e_stream_pipeline at ~46 s at sf0.01). It runs as
+    // three phases (guide §2.6 / the BPE concurrent-checkpoint pattern):
+    // every job inside a phase is independent and submitted concurrently,
+    // each phase pays its MAX job, not the sum. Both waves run on the
+    // seams' JVM-shared daemon executor (r17 VERDICT #7: a long-lived
+    // ingest absorbing per batch must not churn a fresh pool per call).
+    // --- phase 1: SNAPSHOT every frame that gets written, so each write
+    // reads its rows once instead of re-running the batch's joins, and the
+    // counts the stats need ride the checkpoint jobs as observed metrics
+    // (the connectedComponents discipline) instead of re-count jobs. A
+    // failed phase-1 job rethrows only after every sibling finished, with
+    // the completed snapshots released (ADVICE r17) and nothing written.
     Seam.scoped { seam =>
       def snap(df: DataFrame, name: String)(s: Seam): (DataFrame, Long) = {
         val (cp, m) = s.checkpointObserved(df, s"absorb_$name", count(lit(1)).as("n"))
@@ -369,32 +350,30 @@ final class CleanStateStore(
         counted(result.batchSource) _,
         counted(result.quality) _,
         counted(result.nearNew) _))
-      // --- phase 2: the state appends — each targets its own directory
-      // and reads only snapshotted frames (holdsh additionally reads its
-      // own pre-append state, which nothing else touches), so all six are
-      // independent and run concurrently
-      seam.wave(Seq[Seam => Unit](
-        _ => mh.appendBatch(exactSnap, textCol),
-        _ => fpsSnap.write.mode(SaveMode.Append).parquet(fpsPath),
-        _ => k4Snap.write.mode(SaveMode.Append).parquet(kept4Path),
-        _ => if (rN > 0L) revSnap.write.mode(SaveMode.Append).parquet(revokedPath),
-        _ => {
-          // keep holdsh a SET: append only the genuinely new shingles
-          // (overlap computed with the same scan+broadcast flip as the
-          // probes)
-          val overlap = storedHoldSh()
-            .join(broadcast(holdSnap), Seq("_sh"), "left_semi")
-          holdSnap.join(broadcast(overlap), Seq("_sh"), "left_anti")
-            .write.mode(SaveMode.Append).parquet(holdshPath)
-        },
-        _ => postSnap.write.mode(SaveMode.Append).parquet(post4Path)))
-      // --- phase 3: stats LAST (the exists/staleness discipline — a
-      // reader must never observe new stats over half-appended state)
-      writeStats(raw0 + rawN, q0 + qN, e0 + eN, n0 + nN, f0 - rN + fN)
-      // the session's shared file-status cache may still hold PRE-append
-      // listings for these paths (all were read during applyBatch); a
-      // post-absorb reader would silently miss the appended files
-      spark.catalog.refreshByPath(path)
+      // --- phase 2: one new directory per table and the nested index's
+      // commit over the version this state pins — independent writes,
+      // run concurrently; each returns its part of the next manifest
+      def table(name: String)(dirs: => Seq[String]): Seam => Manifest =
+        _ => Manifest(tables = Map(name -> dirs))
+      val parts = seam.wave(Seq[Seam => Manifest](
+        _ => Manifest(stats = Map(MhVersion ->
+          mh.commitAppend(mhAt(base), exactSnap, textCol)._2.version)),
+        table("fps")(log.append(base, "fps", fpsSnap)),
+        table("kept4")(log.append(base, "kept4", k4Snap)),
+        table("revoked")(
+          if (rN > 0L) log.append(base, "revoked", revSnap) else base.dirs("revoked")),
+        // keep holdsh a SET: append only the genuinely new shingles
+        // (overlap computed with the same scan+broadcast flip as the probes)
+        table("holdsh")(log.append(base, "holdsh", holdSnap.join(broadcast(
+          log.table(base, "holdsh").join(broadcast(holdSnap), Seq("_sh"), "left_semi")),
+          Seq("_sh"), "left_anti"))),
+        table("post4")(log.append(base, "post4", postSnap))))
+      // --- phase 3: publish every table, the pinned index version and the
+      // new totals at once
+      val counts = Counts.zip(Seq(raw0 + rawN, q0 + qN, e0 + eN, n0 + nN, f0 - rN + fN))
+      publish(base, Manifest(
+        tables = parts.flatMap(_.tables).filter(_._2.nonEmpty).toMap,
+        stats = parts.flatMap(_.stats).toMap ++ counts))
     }
   }
 }

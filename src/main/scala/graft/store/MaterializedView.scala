@@ -82,9 +82,13 @@ final class MaterializedView(spark: SparkSession, store: VersionedStore,
   /** the view as of its most recent refresh (must have refreshed once) */
   def read(): DataFrame = readAt(refreshedVersions().last)
 
-  // schema-memoized open (Tables.openParquet): the view is re-read per
-  // query, its schema is layout-constant per version dir
-  def readAt(v: Long): DataFrame = graft.core.Tables.openParquet(spark, dirFor(v))
+  // the view is re-read per query; its schema is fixed by the group
+  // columns and aggregates, so it is inferred once per version dir
+  def readAt(v: Long): DataFrame = {
+    val dir = dirFor(v)
+    spark.read.schema(StoreLog.memo(s"schema@$dir")(spark.read.parquet(dir).schema))
+      .parquet(dir)
+  }
 
   /** Bring the view up to the store's latest snapshot. No-op when already
     * current; full compute on first refresh; otherwise recompute only the

@@ -1,7 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Seam
@@ -24,25 +23,30 @@ import graft.ops.Dedup
   * reference refreshes its FTS index per mutation batch instead of
   * rebuilding (`src/server/index.ts:546-549`) applied to dedup state.
   *
-  * Layout under `path/`: `bands/` (id, band, band_hash), `sigs/` (id, sig)
-  * for introspection/rebuild audits, `stats/` the row count written
-  * LAST ([[exists]] keys on stats, so readers only see complete indexes —
-  * the FtsIndexStore discipline). All writes go through [[DirSwap]].
+  * Each version names `bands` (id, band, band_hash) and `sigs` (id, sig,
+  * for introspection/rebuild audits) and carries the row count; a rebuild
+  * or an appended batch is one [[StoreLog]] commit.
   *
   * Banding parameters are fixed at construction (they define the stored
   * band hashes); choose them with [[Dedup.bandingFor]].
   */
 final class MinhashIndexStore(
-    protected val spark: SparkSession, protected val path: String,
+    spark: SparkSession, path: String,
     nHashes: Int, bands: Int, rowsPerBand: Int,
     shingleK: Int = 5,
-    idCol: String = "doc_id") extends StatsLastIndexStore {
+    idCol: String = "doc_id") {
 
   require(bands * rowsPerBand == nHashes,
     s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal nHashes ($nHashes)")
 
-  private val bandsPath = path + "/bands"
-  private val sigsPath = path + "/sigs"
+  private[store] val log = new StoreLog(spark, path)
+
+  def exists: Boolean = !log.latest().isEmpty
+
+  /** indexed row count from the latest manifest (no Spark job) */
+  def rowCount(): Long = log.latest().stat("n_rows")
+
+  def drop(): Unit = log.drop()
 
   /** (id, sig) for docs with a non-empty shingle set — the signature
     * projection every caller shares (per-row, scan-speed, no shuffle) */
@@ -59,54 +63,62 @@ final class MinhashIndexStore(
 
   /** full rebuild from the document table (empty corpus drops the index) */
   def rebuild(docs: DataFrame, textCol: String = "text"): Unit = {
+    commitRebuild(docs, textCol)
+    log.vacuum()
+  }
+
+  /** [[rebuild]]'s commit without the vacuum (an owning store vacuums a
+    * nested index itself); returns the committed manifest */
+  private[store] def commitRebuild(docs: DataFrame, textCol: String): Manifest = {
+    val after = log.latest()
     val sigs = signatures(docs, textCol).persist()
     try {
-      if (sigs.isEmpty) { drop(); return }
-      DirSwap.swapInto(fs, path, bandsPath)(tmp =>
-        bandsOf(sigs).write.mode(SaveMode.Overwrite).parquet(tmp))
-      DirSwap.swapInto(fs, path, sigsPath)(tmp =>
-        sigs.write.mode(SaveMode.Overwrite).parquet(tmp))
-      writeStats(sigs)
+      val n = sigs.count()
+      if (n == 0L) { if (after.isEmpty) after else log.commit(after, Manifest.Empty) }
+      else log.commit(after, Manifest(
+        tables = Map("bands" -> Seq(log.write("bands", bandsOf(sigs))),
+          "sigs" -> Seq(log.write("sigs", sigs))),
+        stats = Map("n_rows" -> n)))
     } finally sigs.unpersist()
   }
 
   /** Append one mutation batch's signatures + bands to the stored index —
     * the streaming-ingest cadence
     * ([[graft.streaming.StreamingIngest.incrementalDedupAvailableNow]]):
-    * the index grows by |batch| rows with no corpus rescan and no directory
-    * swap. Bootstraps via [[rebuild]] when no index exists yet. Plain
-    * parquet append is safe here because the writer is single (foreachBatch
-    * executes serially) and a concurrent READER of a half-appended batch
-    * sees a superset of the previous index — which can only ADD candidate
-    * pairs, and candidates are always exact-verified downstream. Stats are
-    * merged LAST, same discipline as rebuild. Returns rows appended. */
+    * the index grows by |batch| rows with no corpus rescan — one new
+    * directory per table and one commit. Bootstraps via [[rebuild]] when no
+    * index exists yet. Returns rows appended. */
   def appendBatch(batchDocs: DataFrame, textCol: String = "text"): Long = {
-    if (!exists) { rebuild(batchDocs, textCol); return rowCount() }
-    val sp = spark
-    import sp.implicits._
+    val (n, _) = commitAppend(log.latest(), batchDocs, textCol)
+    log.vacuum()
+    n
+  }
+
+  /** [[appendBatch]]'s commit over the contents of `base` (an owner's
+    * pinned version, which may be older than the latest one), without the
+    * vacuum: (rows appended, committed manifest) */
+  private[store] def commitAppend(base: Manifest, batchDocs: DataFrame,
+                                  textCol: String): (Long, Manifest) = {
+    if (base.isEmpty) {
+      val m = commitRebuild(batchDocs, textCol)
+      return (m.stat("n_rows"), m)
+    }
     val sigs = signatures(batchDocs, textCol).persist()
     try {
       val n = sigs.count()
-      if (n == 0L) return 0L
-      bandsOf(sigs).write.mode(SaveMode.Append).parquet(bandsPath)
-      sigs.write.mode(SaveMode.Append).parquet(sigsPath)
-      // rowCount is signature-memoized: zero Spark jobs until the swap
-      // below rewrites the stats dir
-      val merged = rowCount() + n
-      DirSwap.swapInto(fs, path, statsPath)(tmp =>
-        Seq((0L, merged)).toDF("pbucket", "n_rows")
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      n
+      if (n == 0L) (0L, base)
+      else (n, log.commit(log.latest(), Manifest(
+        tables = Map("bands" -> log.append(base, "bands", bandsOf(sigs)),
+          "sigs" -> log.append(base, "sigs", sigs)),
+        stats = Map("n_rows" -> (base.stat("n_rows") + n)))))
     } finally sigs.unpersist()
   }
 
-  /** stored banded projection (id, band, band_hash) — schema-memoized open
-    * ([[graft.core.Tables.openParquet]]): the per-probe footer-read
-    * inference job and its driver latency are paid once per index state,
-    * not per delta batch */
-  def storedBands: DataFrame =
-    graft.core.Tables.openParquet(spark, bandsPath)
-      .select(col(idCol), col("band"), col("band_hash"))
+  /** stored banded projection (id, band, band_hash) of the latest version */
+  def storedBands: DataFrame = bandsAt(log.latest())
+
+  private def bandsAt(m: Manifest): DataFrame =
+    log.table(m, "bands").select(col(idCol), col("band"), col("band_hash"))
 
   /** Candidate near-dup pairs TOUCHING a new batch: batch×stored pairs from
     * a broadcast join of the batch's bands against the stored band table,
@@ -124,12 +136,17 @@ final class MinhashIndexStore(
     * pre-filter [[storedBands]] with [[Dedup.oversizedBuckets]]. The pair
     * set is an eager checkpoint owned by `seam`. */
   def deltaCandidates(seam: Seam, batchDocs: DataFrame,
-                      textCol: String = "text"): DataFrame = {
-    require(exists, "deltaCandidates requires an existing index (rebuild first)")
+                      textCol: String = "text"): DataFrame =
+    deltaCandidates(seam, batchDocs, textCol, log.latest())
+
+  /** [[deltaCandidates]] against the index as version `m` names it */
+  private[store] def deltaCandidates(seam: Seam, batchDocs: DataFrame,
+                                     textCol: String, m: Manifest): DataFrame = {
+    require(!m.isEmpty, "deltaCandidates requires an existing index (rebuild first)")
     val batchSigs = signatures(batchDocs, textCol).persist()
     try {
       val batchBands = bandsOf(batchSigs)
-      val crossPairs = storedBands
+      val crossPairs = bandsAt(m)
         .join(broadcast(batchBands
             .select(col(idCol).as("_new_id"), col("band"), col("band_hash"))),
           Seq("band", "band_hash"))

@@ -3,9 +3,8 @@ package graft.store
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.core.ChunkSchema
 
@@ -13,19 +12,18 @@ import graft.core.ChunkSchema
   * reference approximates with backup/rollback around delete+insert
   * (`src/server/index.ts:645-701`) — rebuilt on the log-structured pattern
   * the lakehouse formats use (public design: the Delta Lake paper,
-  * VLDB 2020):
+  * VLDB 2020). It runs on [[StoreLog]], the commit protocol every store in
+  * this package shares:
   *
   *  - data files are immutable; a write only ADDS files under `data/`;
-  *  - a snapshot is a manifest under `_log/` — itself a tiny SINGLE-FILE
-  *    parquet table with one row per data file carrying file-level stats
-  *    (bucket, path, min/max filePath, row count), so reads can DATA-SKIP:
-  *    [[readFile]] opens only the files whose [min,max] range can contain
-  *    the requested path (the lakehouse min/max pruning pattern);
-  *  - commit = stage the manifest, then an atomic FILE rename-if-absent to
-  *    `v%08d.manifest` — Hadoop file `rename` fails when the destination
-  *    exists, which is the compare-and-swap: two writers racing to the
-  *    same version number means exactly one wins (a directory rename would
-  *    not CAS: HDFS moves the source INTO an existing destination);
+  *  - a snapshot is a `_log/` manifest whose entries carry one row per data
+  *    file with file-level stats (bucket, path, min/max filePath, row
+  *    count), so reads can DATA-SKIP: [[readFile]] opens only the files
+  *    whose [min,max] range can contain the requested path (the lakehouse
+  *    min/max pruning pattern);
+  *  - commit is the log's compare-and-swap, a file rename-if-absent onto
+  *    the next version number: two writers racing to the same version
+  *    means exactly one wins;
   *  - the loser rebases: bucket-granular copy-on-write means a concurrent
   *    upsert to a DIFFERENT bucket commutes, so the retry re-reads the
   *    latest manifest and re-applies its single-bucket delta;
@@ -40,100 +38,31 @@ import graft.core.ChunkSchema
   * surface them from the write tasks' parquet footers instead — the
   * manifest format and the pruning are the load-bearing parts.
   */
-object VersionedStore {
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(logDir: String): Object =
-    locks.computeIfAbsent(logDir, _ => new Object)
-
-  /** one data file in a snapshot, with its pruning stats */
-  final case class ManifestEntry(bucket: Long, path: String,
-                                 minPath: String, maxPath: String, nRows: Long)
-
-  private val manifestSchema = StructType(Seq(
-    StructField("bucket", LongType, nullable = false),
-    StructField("path", StringType, nullable = false),
-    StructField("min_path", StringType, nullable = true),
-    StructField("max_path", StringType, nullable = true),
-    StructField("n_rows", LongType, nullable = false)))
-}
-
 final class VersionedStore(spark: SparkSession, root: String, numBuckets: Int = 16) {
-  import VersionedStore.{ManifestEntry, manifestSchema}
 
   private val dataDir = s"$root/data"
-  private val logDir = s"$root/_log"
+  private val log = new StoreLog(spark, root)
 
-  private def fs: FileSystem =
-    new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs: FileSystem = log.fs
 
   def bucketOf(filePath: String): Long =
     math.floorMod(graft.ops.Dedup.hash60Scala(filePath), numBuckets.toLong)
 
   // ---- manifests ----
 
-  private def manifestPath(v: Long): HPath =
-    new HPath(f"$logDir/v$v%08d.manifest")
-
   /** versions present in the log, ascending */
-  def versions(): Seq[Long] = {
-    val p = new HPath(logDir)
-    val f = fs
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".manifest") =>
-        n.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .sorted.toSeq
-  }
+  def versions(): Seq[Long] = log.versions()
 
-  def latestVersion(): Option[Long] = versions().lastOption
+  def latestVersion(): Option[Long] = log.latestVersion()
 
-  /** manifest body: one row per data file with min/max filePath stats */
-  private[store] def readManifest(v: Long): Seq[ManifestEntry] = {
-    val p = manifestPath(v)
-    if (!fs.exists(p)) throw new java.io.FileNotFoundException(p.toString)
-    spark.read.schema(manifestSchema).parquet(p.toString)
-      .collect().toSeq
-      .map(r => ManifestEntry(r.getLong(0), r.getString(1),
-        r.getString(2), r.getString(3), r.getLong(4)))
-      .sortBy(e => (e.bucket, e.path))
-  }
+  /** manifest body: one entry per data file with min/max filePath stats */
+  private[store] def readManifest(v: Long): Seq[ManifestEntry] =
+    log.manifest(v).entries.sortBy(e => (e.bucket, e.path))
 
   /** atomic commit of `entries` as version `v`: returns false when v was
-    * taken by a concurrent writer (caller rebases and retries).
-    *
-    * The compare-and-swap is exists-check + rename of a single FILE. The
-    * manifest parquet is staged as a directory write, but only its one
-    * part-file is renamed into `v%08d.manifest` — file rename onto an
-    * existing destination FAILS atomically at the HDFS namenode, which is
-    * the cross-process CAS. (A directory rename would NOT give this: HDFS
-    * moves the source INTO an existing destination dir and reports
-    * success, so two racing writers would both "win".) The LOCAL
-    * filesystem's file rename silently replaces (POSIX), so the critical
-    * section is additionally serialized per log dir within the JVM —
-    * which covers Spark's actual local topology (one driver commits;
-    * executors never write the log). */
-  private def tryCommit(v: Long, entries: Seq[ManifestEntry]): Boolean = {
-    val f = fs
-    f.mkdirs(new HPath(logDir))
-    val tmp = s"$logDir/.tmp-${UUID.randomUUID()}"
-    val rows = entries.map(e =>
-      Row(e.bucket, e.path, e.minPath, e.maxPath, e.nRows))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), manifestSchema)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val part = f.listStatus(new HPath(tmp))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath) match {
-      case Array(p) => p
-      case ps => throw new IllegalStateException(
-        s"expected exactly one staged manifest part, got ${ps.length}")
-    }
-    val target = manifestPath(v)
-    try VersionedStore.lockFor(logDir).synchronized {
-      if (f.exists(target)) false
-      else f.rename(part, target)
-    } finally f.delete(new HPath(tmp), true)
-  }
+    * taken by a concurrent writer (caller rebases and retries) */
+  private def tryCommit(v: Long, entries: Seq[ManifestEntry]): Boolean =
+    log.tryCommit(v, Manifest(entries = entries))
 
   // ---- data files ----
 
@@ -183,8 +112,7 @@ final class VersionedStore(spark: SparkSession, root: String, numBuckets: Int = 
 
   /** manifest paths are root-relative for files this table wrote, absolute
     * for files referenced across roots (shallow clones) */
-  private def resolvePath(p: String): String =
-    if (p.startsWith("/") || p.contains("://")) p else s"$root/$p"
+  private def resolvePath(p: String): String = log.abs(p)
 
   private def snapshotDF(entries: Seq[ManifestEntry]): DataFrame =
     if (entries.isEmpty)
@@ -394,8 +322,7 @@ final class VersionedStore(spark: SparkSession, root: String, numBuckets: Int = 
     val entries = readManifest(v).map { e =>
       // rewrite relative source paths to absolute so the clone resolves
       // them outside its own root; already-absolute entries pass through
-      if (e.path.startsWith("/") || e.path.contains("://")) e
-      else e.copy(path = s"$root/${e.path}")
+      e.copy(path = resolvePath(e.path))
     }
     val dest = new VersionedStore(spark, destRoot, numBuckets)
     require(dest.latestVersion().isEmpty, s"clone destination $destRoot is not empty")
@@ -467,21 +394,6 @@ final class VersionedStore(spark: SparkSession, root: String, numBuckets: Int = 
     * files into `data/` BEFORE the manifest commit, so an un-gated vacuum
     * racing that window would delete files the next commit references.
     * Files younger than the cutoff are always kept. */
-  def vacuum(keepVersions: Int = 2, retentionMs: Long = 60000L): Unit = {
-    val f = fs
-    val vs = versions()
-    if (vs.size <= keepVersions) return
-    val (drop, keep) = vs.splitAt(vs.size - keepVersions)
-    val referenced = keep.flatMap(readManifest).map(_.path).toSet
-    drop.foreach(v => f.delete(manifestPath(v), true))
-    val cutoff = System.currentTimeMillis() - math.max(0L, retentionMs)
-    val dd = new HPath(dataDir)
-    if (f.exists(dd)) {
-      f.listStatus(dd).foreach { s =>
-        if (!referenced.contains(s"data/${s.getPath.getName}") &&
-            s.getModificationTime < cutoff)
-          f.delete(s.getPath, false)
-      }
-    }
-  }
+  def vacuum(keepVersions: Int = 2, retentionMs: Long = 60000L): Unit =
+    log.vacuum(keepVersions, retentionMs)
 }

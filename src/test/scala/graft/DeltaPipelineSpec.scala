@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -251,7 +249,9 @@ class DeltaPipelineSpec extends AnyFunSuite {
     st.rebuild(stored, hold)
     // the stored survivors seed the minhash index, so applyBatch probes it
     // through deltaCandidates
-    assert(Files.exists(Paths.get(dir, "mh", "stats")))
+    val cfg = graft.ops.CleanCorpusConfig()
+    assert(new graft.store.MinhashIndexStore(spark, s"$dir/mh",
+      cfg.nHashes, cfg.bands, cfg.rowsPerBand, cfg.shingleK).rowCount() > 0L)
 
     // phase-1 failure: the batch-size count runs a UDF that throws, while
     // the snapshots beside it complete

@@ -556,17 +556,16 @@ class EngineSpec extends AnyFunSuite {
     write(s"$root/b.md", "# Doc B\nEntirely different prose describing pasta sauce technique.")
     new Engine(spark, store, Seq(root)).sync()
 
-    // simulate a table written before fileTitle/contentHash existed
-    val legacy = spark.read.parquet(store).drop("fileTitle", "contentHash")
-    val tmp = store + "-legacy"
-    legacy.write.parquet(tmp)
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(store)).deleteRecursively()
-    assert(new java.io.File(tmp).renameTo(new java.io.File(store)))
+    // simulate a table written before fileTitle/contentHash existed: a
+    // store whose committed files lack both columns
+    val legacyStore = store + "-legacy"
+    new graft.store.ChunkStore(spark, legacyStore).insert(
+      new graft.store.ChunkStore(spark, store).read().drop("fileTitle", "contentHash"))
 
     // null content hashes are DIRTY, never converged (reference re-hashes
     // hashless rows): every file re-upserts once, then the store converges
-    val engine = new Engine(spark, store, Seq(root))
+    val engine = new Engine(spark, legacyStore, Seq(root))
+    assert(engine.store.read().filter("contentHash IS NULL").count() === 2L)
     val s1 = engine.sync()
     assert(s1.upserted === 2 && s1.skipped === 0)
     assert(engine.store.read().filter("contentHash IS NULL").count() === 0)
@@ -665,7 +664,6 @@ class EngineSpec extends AnyFunSuite {
     // exhaustive, so the IVF route must return the exact rows.
     val engine = new Engine(spark, store, Seq(root),
       annLists = 4, annProbes = 4, annThreshold = base + 2)
-    val annDir = Paths.get(store + "-ann")
     val ann = "graft index: ANN refresh"
     def rows(e: Engine) =
       e.queryDocuments("spark shuffle partitions", limit = 10)
@@ -677,7 +675,7 @@ class EngineSpec extends AnyFunSuite {
     val (tiny, belowJobs) = jobDescriptions(engine.ingestFile(s"$root/tiny.md"))
     assert(tiny.chunkCount === 1L && engine.status()._1 === base + 1)
     assert(belowJobs.count(_ == ann) <= 1, belowJobs.mkString(", "))
-    assert(!Files.exists(annDir))
+    assert(!engine.annIndex.exists && !Files.exists(Paths.get(store + "-ann")))
     assert(belowJobs.forall(d => d != null && d.startsWith("graft ")),
       s"undescribed ingestFile jobs: ${belowJobs.mkString(", ")}")
 
@@ -701,7 +699,7 @@ class EngineSpec extends AnyFunSuite {
       try jobDescriptions(rows(engine))._1 // the window drains the listener bus
       finally spark.listenerManager.unregister(qel)
     import scala.jdk.CollectionConverters._
-    assert(scanned.asScala.exists(_.contains("-ann/assignments")),
+    assert(scanned.asScala.exists(_.contains("-ann/data/assignments-")),
       "an unscoped query above the threshold must take the IVF route")
     assert(ivfRows === rows(brute))
 
@@ -709,7 +707,7 @@ class EngineSpec extends AnyFunSuite {
     val (_, deleteJobs) = jobDescriptions(engine.deleteDocument(s"$root/cross.md"))
     assert(engine.status()._1 === base + 1)
     assert(deleteJobs.count(_ == ann) <= 1, deleteJobs.mkString(", "))
-    assert(!Files.exists(annDir))
+    assert(!engine.annIndex.exists && engine.annIndex.rowCount() === 0L)
     assert(deleteJobs.forall(d => d != null && d.startsWith("graft ")),
       s"undescribed deleteDocument jobs: ${deleteJobs.mkString(", ")}")
     assert(rows(engine) === rows(brute))
@@ -743,27 +741,39 @@ class EngineSpec extends AnyFunSuite {
     assert(jobs.size <= 2, jobs.mkString(", "))
   }
 
-  test("optimize sweeps stale swap debris beside the chunk table and both index roots") {
-    val root = Files.createTempDirectory("debris-root").toString
-    val base = Files.createTempDirectory("debris-store").toString + "/chunks"
+  test("every commit vacuums its store: aged unreferenced directories go, fresh ones and both live versions stay") {
+    val root = Files.createTempDirectory("vacuum-root").toString
+    val base = Files.createTempDirectory("vacuum-store").toString + "/chunks"
     write(s"$root/a.md", "# A\nSpark executors process partitions in parallel across the cluster.")
-    val engine = new Engine(spark, base, Seq(root))
+    write(s"$root/b.md", "# B\nPasta sauce simmers slowly with tomatoes, garlic and basil leaves.")
+    val engine = new Engine(spark, base, Seq(root), annThreshold = 1L)
     engine.sync()
     val hourAgo = System.currentTimeMillis() - 3600 * 1000L
-    val planted = for (suffix <- Seq("", "-fts", "-ann"); kind <- Seq("swap", "old"))
-      yield {
-        val stale = new java.io.File(s"$base$suffix-$kind-111")
-        val fresh = new java.io.File(s"$base$suffix-$kind-222")
-        stale.mkdirs(); fresh.mkdirs()
-        stale.setLastModified(hourAgo)
-        (stale, fresh)
-      }
-    engine.optimize()
-    for ((stale, fresh) <- planted) {
-      assert(!stale.exists, s"stale debris kept: $stale")
-      assert(fresh.exists, s"fresh debris (possible in-flight swap) swept: $fresh")
+    val roots = Seq("", "-fts", "-ann").map(suffix => new java.io.File(base + suffix))
+    // every directory aged past retention, and two orphans per store (a
+    // crashed writer's directories), stale and fresh
+    val planted = roots.map { r =>
+      val data = new java.io.File(r, "data")
+      data.listFiles().foreach(_.setLastModified(hourAgo))
+      val stale = new java.io.File(data, "orphan-111")
+      val fresh = new java.io.File(data, "orphan-222")
+      stale.mkdirs(); fresh.mkdirs()
+      stale.setLastModified(hourAgo)
+      val live = new graft.store.StoreLog(spark, r.toString).latest().referenced
+      (data, live.map(_.stripPrefix("data/")), stale, fresh)
     }
-    assert(new java.io.File(base + "-fts").exists, "index root itself must survive")
+    // one mutation commits a new version of every store
+    write(s"$root/a.md", "# A\nRewritten: executors shuffle blocks between stages.")
+    assert(engine.sync().upserted === 1L)
+    for ((data, previous, stale, fresh) <- planted) {
+      assert(!stale.exists, s"stale unreferenced directory kept: $stale")
+      assert(fresh.exists, s"fresh unreferenced directory (possible in-flight write) swept: $fresh")
+      assert(previous.forall(d => new java.io.File(data, d).exists),
+        s"the previous version's directories must stay for in-flight readers: $data")
+      assert(new java.io.File(data.getParentFile, "_log").list()
+        .count(_.endsWith(".json")) <= 2)
+    }
+    assert(engine.queryDocuments("executors shuffle").count() > 0)
   }
 
   test("engine-default IVF read path: recall@10 vs brute force at production probes") {

@@ -83,12 +83,12 @@ class StoreSearchSpec extends AnyFunSuite {
   }
 
   test("additive schema migration: old tables read with null new columns") {
-    // write a pre-migration table (no fileTitle / contentHash)
+    // commit a pre-migration table (no fileTitle / contentHash): insert
+    // writes the frame's own columns
     val dir = Files.createTempDirectory("old-schema").toString + "/table"
-    Seq(mkChunk("/a/x.md", 0, "legacy row")).toDF()
-      .drop("fileTitle", "contentHash")
-      .write.parquet(dir)
     val st = new ChunkStore(spark, dir)
+    st.insert(Seq(mkChunk("/a/x.md", 0, "legacy row")).toDF()
+      .drop("fileTitle", "contentHash"))
     val row = st.read().collect().head
     assert(row.getAs[String]("text") === "legacy row")
     assert(row.getAs[String]("fileTitle") === null)
@@ -101,13 +101,13 @@ class StoreSearchSpec extends AnyFunSuite {
     // current-schema parquet (the additive migration happens on first write,
     // reference ensureSchemaVersion, vectordb/index.ts:289-307)
     val dir = Files.createTempDirectory("old-schema-rt").toString + "/table"
-    Seq(mkChunk("/a/x.md", 0, "legacy row"), mkChunk("/a/y.md", 0, "other legacy")).toDF()
-      .drop("fileTitle", "contentHash")
-      .write.parquet(dir)
     val st = new ChunkStore(spark, dir)
+    st.insert(Seq(mkChunk("/a/x.md", 0, "legacy row"), mkChunk("/a/y.md", 0, "other legacy"))
+      .toDF().drop("fileTitle", "contentHash"))
+    assert(!spark.read.parquet(st.read().inputFiles: _*).columns.contains("contentHash"))
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "migrated row")).toDF())
     // physical schema of the rewritten table now includes the new columns
-    assert(spark.read.parquet(dir).columns.contains("contentHash"))
+    assert(spark.read.parquet(st.read().inputFiles: _*).columns.contains("contentHash"))
     val rows = st.read().collect().map(r => r.getAs[String]("filePath") -> r).toMap
     assert(rows("/a/x.md").getAs[String]("text") === "migrated row")
     assert(rows("/a/x.md").getAs[String]("contentHash") === "h")
@@ -118,7 +118,7 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(manifest("/a/y.md") === null)
   }
 
-  test("optimize compacts fragmented partitions and sweeps stale swap debris") {
+  test("optimize compacts fragmented directories; vacuum drops aged unreferenced data, keeps fresh") {
     val root = Files.createTempDirectory("compact")
     val base = root.toString + "/table"
     val st = new ChunkStore(spark, base)
@@ -128,23 +128,41 @@ class StoreSearchSpec extends AnyFunSuite {
     (0 until 6).foreach { gen =>
       st.insert(files.map(f => mkChunk(f, gen, s"gen $gen of $f")).toDF())
     }
-    def fragments(): Int = new java.io.File(base).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    def fragments(): Int = st.read().inputFiles.length
     assert(fragments() >= 6, "inserts should fragment the table")
     val beforeRows = st.read().orderBy("filePath", "chunkIndex").collect()
+    val data = new java.io.File(base, "data")
+    def live(): Set[String] =
+      st.read().inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
 
-    // plant stale + fresh swap debris next to the table
-    val stale = new java.io.File(root.toString + "/table-old-123")
+    // every directory ages past the retention window, and two orphans (a
+    // crashed writer's directories: no version references them) are
+    // planted, one stale and one fresh
+    val hourAgo = System.currentTimeMillis() - 3600 * 1000L
+    data.listFiles().foreach(_.setLastModified(hourAgo))
+    val stale = new java.io.File(data, "chunks-orphan-stale")
     stale.mkdirs()
-    stale.setLastModified(System.currentTimeMillis() - 3600 * 1000L)
-    val fresh = new java.io.File(root.toString + "/table-swap-456")
+    stale.setLastModified(hourAgo)
+    val fresh = new java.io.File(data, "chunks-orphan-fresh")
     fresh.mkdirs()
+    val superseded = live()
 
-    st.optimize(maxFragments = 2, cleanupOlderThanMs = 60000L)
+    st.optimize(maxFragments = 2)
     assert(fragments() === 1, "one file after compaction")
     assert(st.read().orderBy("filePath", "chunkIndex").collect() === beforeRows)
-    assert(!stale.exists, "stale debris swept")
-    assert(fresh.exists, "fresh debris (possible in-flight swap) kept")
+    // the compaction's vacuum: the previous version (the 6 directories)
+    // stays readable, the stale orphan goes, the fresh one (a possible
+    // in-flight writer) stays
+    assert(!stale.exists, "stale unreferenced directory swept")
+    assert(fresh.exists, "fresh unreferenced directory (possible in-flight write) kept")
+    assert(superseded.forall(d => new java.io.File(data, d).exists),
+      "the previous version's directories stay for in-flight readers")
+    assert(new java.io.File(base, "_log").list().count(_.endsWith(".json")) === 2)
+    // one more commit drops the previous version: its aged directories go
+    st.deleteFile(files.head)
+    assert(superseded.forall(d => !new java.io.File(data, d).exists),
+      "directories no kept version references are swept once aged")
+    assert(st.read().select("filePath").distinct().count() === 3L)
   }
 
   // ---- search semantics (reference vectordb.test.ts behavioral contracts) ----
@@ -421,25 +439,18 @@ class StoreSearchSpec extends AnyFunSuite {
       assert(r.getAs[Long]("cms_est") >= r.getAs[Long]("exact_cnt"))
     }
 
-    // legacy-layout migration: a store written by the pre-state/ layout
-    // (hll/, cms/, stats/ directly under the root) must not read as empty
-    // — simulate one by moving state/* up a level, then reopen
+    // a root in the pre-log layout (hll/, cms/, stats/ directly under the
+    // root) reads as absent; the next append rebuilds it from that batch
     val legacyDir = Files.createTempDirectory("sketches-legacy").toString + "/store"
     val lp = java.nio.file.Paths.get(legacyDir)
-    java.nio.file.Files.createDirectories(lp)
     for (sub <- Seq("hll", "cms", "stats"))
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$dir/state/$sub"), lp.resolve(sub))
+      java.nio.file.Files.createDirectories(lp.resolve(sub))
     val reopened = new graft.store.SketchStore(spark, legacyDir,
       b = 6, depth = 4, width = 64)
-    assert(reopened.exists) // triggers the migration
-    assert(!java.nio.file.Files.exists(lp.resolve("hll"))) // legacy removed
-    val mst = reopened.stats().head()
-    assert(mst.getLong(0) === 3L && mst.getLong(1) === 600L)
-    assert(reopened.distinctEstimate().head().getDouble(2)
-      === oneShot.getDouble(2))
-    // and the migrated store keeps accepting batches
+    assert(!reopened.exists)
+    assert(reopened.stats().count() === 0L)
     reopened.appendBatch(all.limit(10))
-    assert(reopened.stats().head().getLong(0) === 4L)
+    assert(reopened.stats().head().getLong(1) === 10L)
+    assert(reopened.stats().head().getLong(0) === 1L)
   }
 }
