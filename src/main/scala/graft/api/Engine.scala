@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{PathKeys, ScopeMatch, Seam}
 import graft.embed.{Embedder, HashedEmbedder}
@@ -118,9 +119,11 @@ final class Engine(
   /** run `body` under a job description so engine phases attribute cleanly
     * in the UI / listener tooling (IngestStress job table); restores the
     * PREVIOUS description (r16 ADVICE: restoring null silently cleared any
-    * ambient caller-set description, and broke nesting). Every job of a
-    * mutation runs under one: `graft sync: …`, `graft ingest: parse`,
-    * `graft store: upsert|delete`, `graft index: …`. */
+    * ambient caller-set description, and broke nesting). Every Engine job
+    * runs under one: mutations as `graft sync: …`, `graft ingest: parse`,
+    * `graft store: upsert|delete`, `graft index: …`; reads as
+    * `graft query: candidates|text|bm25`, `graft neighbors` and
+    * `graft catalog`. */
   private def describing[T](desc: String)(body: => T): T = {
     val prev = spark.sparkContext.getLocalProperty("spark.job.description")
     spark.sparkContext.setJobDescription(desc)
@@ -137,8 +140,6 @@ final class Engine(
       annIndex.rebuild(chunks, annLists, minRows = annThreshold)
     }
   }
-  /** zero chunk rows: a chunk-table write that only deletes */
-  private def noChunks: DataFrame = Seq.empty[graft.core.ChunkSchema.ChunkRow].toDF()
   private def embedder: Embedder = mkEmbedder()
 
   final case class IngestResult(filePath: String, chunkCount: Long,
@@ -178,25 +179,27 @@ final class Engine(
     // lists may hold no in-scope chunk, so probing first could return fewer
     // than `limit` rows while in-scope chunks exist. Both paths score with
     // the same expression.
-    val candidates =
-      if (scope.isEmpty && annIndex.exists && annIndex.rowCount() >= annThreshold)
-        withText(chunks, annIndex.probe(qArr, annProbes, k).collect())
-      else VectorSearch.topK(chunks, typedLit(qArr.toSeq), k,
+    val candidates = describing("graft query: candidates") {
+      if (scope.isEmpty && annIndex.exists && annIndex.rowCount() >= annThreshold) {
+        val probed = annIndex.probe(qArr, annProbes, k).collect()
+        describing("graft query: text")(withText(chunks, probed))
+      } else VectorSearch.topK(chunks, typedLit(qArr.toSeq), k,
           tiebreak = Seq("filePath", "chunkIndex"))
         .select("filePath", "chunkIndex", "text", "fileTitle", "score").collect().toSeq
         .map(r => HybridSearch.Hit(r.getString(0), r.getInt(1), r.getString(2),
           r.getString(3), r.getDouble(4)))
+    }
     graft.core.DriverProbe.record("query_candidates", candidates.size.toLong, k.toLong)
     // BM25 stats are GLOBAL regardless of scope — the reference's FTS index
     // is corpus-wide and scope only restricts which rows come back — so the
     // ad-hoc fallback (no persisted index) builds its index from the
     // UNSCOPED table too, keeping indexed and index-less scoring identical
     def keywordScores(files: Seq[String]): Map[(String, Int), Double] =
-      Bm25.scoreTerms(ftsIndex.queryTerms(tokens, files).getOrElse {
+      describing("graft query: bm25")(Bm25.scoreTerms(ftsIndex.queryTerms(tokens, files).getOrElse {
         val idx = Bm25.buildIndex(chunks0, Seq("filePath", "chunkIndex"),
           Bm25.wordTokens(col("text")))
         Bm25.queryTerms(idx.postings, idx.docLens, tokens, files, Bm25.sumStats(idx.stats))
-      }, tokens)
+      }, tokens))
     val hits = HybridSearch.searchHits(candidates,
       HybridSearch.Params(limit = limit, maxDistance = maxDistance,
         weight = weight, maxFiles = maxFiles, grouping = grouping,
@@ -442,13 +445,12 @@ final class Engine(
     val excludes = Seq(storePath, rawDataDir)
 
     val (upserts, prunes, skipped, held) = describing("graft sync: gather+plan") {
-      // one bounded read routes AND plans: at least `distributedThreshold`
-      // rows means the distributed route; fewer means the read saw the
-      // whole manifest, and those rows are the driver plan's db side
+      // the store's file count (a commit stat) routes with no job; below
+      // the threshold the collected catalog is the driver plan's db side
       val smallManifest =
-        if (allFiles.size >= distributedThreshold) None
-        else Some(store.manifest().limit(distributedThreshold).collect())
-          .filter(_.length < math.max(1L, distributedThreshold.toLong))
+        if (allFiles.size >= distributedThreshold ||
+            store.status()._2 >= distributedThreshold) None
+        else Some(store.manifest().collect())
       smallManifest match {
         case None =>
           describing("graft sync: distributed gather+plan") {
@@ -496,8 +498,7 @@ final class Engine(
           }
           // every stale spelling and prune in one table write
           val deletes = (upserts.flatMap(_.staleSpellings) ++ pruneSpellings).distinct
-          if (deletes.nonEmpty) describing("graft store: delete")(
-            store.upsertFilesFromRows(noChunks, deletes))
+          if (deletes.nonEmpty) describing("graft store: delete")(store.deleteFiles(deletes))
           (up, em)
         }
       // ONE index refresh per batch iff anything mutated (ref: single
@@ -528,7 +529,7 @@ final class Engine(
       s"path outside configured roots: ${PathKeys.displayPath(p)}"))
     val deletes = (upserts.flatMap(_.staleSpellings) ++ pruneSpellings).distinct
     if (spelled.isEmpty) { // prune-only batch: one deleting write
-      store.upsertFilesFromRows(noChunks, deletes)
+      store.deleteFiles(deletes)
       return (0L, 0L)
     }
     val mk = mkEmbedder // local copy: the executor closure must not drag `this`
@@ -627,7 +628,7 @@ final class Engine(
           // and no full decoded-String + re-encoded copy per file)
           .select(syncKeyUdf(col("path")).as("key"), col("path"),
             Ingest.utf8LossyHash(col("content")).as("hash"))
-    val db = store.manifest().select(
+    val db = store.files().select(
       syncKeyUdf(col("filePath")).as("key"),
       col("filePath").as("spelling"), col("contentHash").as("hash"))
     val acts = SyncPlanner.planActionsDF(disk, db, unobserved, scopeKeys,
@@ -659,19 +660,18 @@ final class Engine(
   }
 
   // ---- list_files (reference J4) ----
-  private val realpathUdf =
-    org.apache.spark.sql.functions.udf((p: String) => PathKeys.realpathForMatch(p))
+  /** the store's per-file catalog (filePath, chunkCount, lastModified),
+    * collected: no job warm, one small scan cold */
+  private def catalog(): Array[Row] = describing("graft catalog")(store.listFiles().collect())
 
-  /** One collect of the store's per-file aggregate, cross-referenced
-    * with the directory scan on the driver: both sides are O(files) and the
-    * tool's answer is too. */
+  /** The store's catalog cross-referenced with the directory scan on the
+    * driver: both sides are O(files) and the tool's answer is too. */
   def listFiles(): DataFrame = {
     val scanned = DirectoryScanner.scanRoots(roots,
       excludePrefixes = Seq(storePath, rawDataDir)).files
     // realpath BOTH sides (reference list.ts:31-70 keys on realpathForMatch)
     // so symlinked-but-identical spellings still cross-reference
-    val ingested = store.fileStats().collect()
-      .groupBy(r => PathKeys.realpathForMatch(r.getString(0)))
+    val ingested = catalog().groupBy(r => PathKeys.realpathForMatch(r.getString(0)))
     val rows = scanned.flatMap { f =>
       // home-abbreviated twin for anything user-facing (F18): the raw
       // `path` stays the machine key, `display_path` is what gets shown
@@ -682,7 +682,7 @@ final class Engine(
         case Some(hits) => hits.toSeq.map(r => row(Some(r.getLong(1)), r.getString(2)))
         case None => Seq(row(None, null))
       }
-    }.sortBy(r => org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
+    }.sortBy(r => UTF8String.fromString(r.getString(0)))
     spark.createDataFrame(rows.asJava, Engine.ListFilesSchema)
   }
 
@@ -786,18 +786,14 @@ final class Engine(
   def listSources(): DataFrame = {
     val scannedKeys = DirectoryScanner.scanRoots(roots,
       excludePrefixes = Seq(storePath, rawDataDir))
-      .files.map(f => Tuple1(PathKeys.realpathForMatch(f.path))).toDF("key")
-    val ingested = store.listFiles().withColumn("key", realpathUdf(col("filePath")))
-    val rd = rawDataDir // plain local: udf closures must not capture `this`
-    val decodeUdf = org.apache.spark.sql.functions.udf(
-      (p: String) => Engine.decodeRawData(rd, p).getOrElse(p))
-    val isRawUdf = org.apache.spark.sql.functions.udf(
-      (p: String) => Engine.decodeRawData(rd, p).isDefined)
-    ingested.join(scannedKeys, Seq("key"), "left_anti")
-      .select(decodeUdf(col("filePath")).as("source"),
-        isRawUdf(col("filePath")).as("is_raw_data"),
-        col("chunkCount").as("chunk_count"))
-      .orderBy("source")
+      .files.map(f => PathKeys.realpathForMatch(f.path)).toSet
+    val rows = catalog().toSeq
+      .filterNot(r => scannedKeys.contains(PathKeys.realpathForMatch(r.getString(0))))
+      .map { r =>
+        val decoded = Engine.decodeRawData(rawDataDir, r.getString(0))
+        Row(decoded.getOrElse(r.getString(0)), decoded.isDefined, r.getLong(1))
+      }.sortBy(r => UTF8String.fromString(r.getString(0)))
+    spark.createDataFrame(rows.asJava, Engine.SourcesSchema)
   }
 
   // ---- sync_start / sync_status: the one async boundary (reference
@@ -846,9 +842,11 @@ final class Engine(
 
   def readChunkNeighbors(path: String, chunkIndex: Int,
                          before: Int = 2, after: Int = 2): DataFrame =
-    store.neighbors(PathKeys.storageSpelling(path), chunkIndex, before, after)
+    describing("graft neighbors")(
+      store.neighbors(PathKeys.storageSpelling(path), chunkIndex, before, after))
 
-  def status(): (Long, Long) = store.status()
+  /** (chunks, files) from the store's commit stats: no job */
+  def status(): (Long, Long) = describing("graft catalog")(store.status())
 
   /** once-per-batch maintenance (the reference's `optimize()` after a sync
     * batch, `src/server/index.ts:546-549`): compact a fragmented chunk
@@ -950,6 +948,12 @@ object Engine {
     StructField("ingested", BooleanType, nullable = false),
     StructField("chunk_count", LongType, nullable = false),
     StructField("lastModified", StringType)))
+
+  /** [[Engine.listSources]]'s output columns */
+  private val SourcesSchema: StructType = StructType(Seq(
+    StructField("source", StringType, nullable = false),
+    StructField("is_raw_data", BooleanType, nullable = false),
+    StructField("chunk_count", LongType, nullable = false)))
 
   /** recover the external source id from a managed raw-data path
     * (reference `src/utils/raw-data-utils.ts:196-214`) */

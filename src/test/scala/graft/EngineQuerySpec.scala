@@ -140,7 +140,7 @@ class EngineQuerySpec extends AnyFunSuite {
     (out, rec.jobs.size)
   }
 
-  test("warm read calls: a plain query runs ≤ 6 Spark jobs, neighbors 1, status ≤ 3") {
+  test("warm read calls: query ≤ 6 jobs, neighbors 1, status and a warm listFiles 0") {
     val q = "spark shuffle partitions w12"
     for (e <- Seq(ivf, exact)) {
       e.queryDocuments(q).collect() // warms the stats and schema memos
@@ -153,9 +153,14 @@ class EngineQuerySpec extends AnyFunSuite {
     val (nb, nbJobs) = countJobs(ivf.readChunkNeighbors(doc, 0).collect())
     assert(nb.nonEmpty && nb.map(_.getAs[Int]("chunkIndex")).toSeq === nb.map(_.getAs[Int]("chunkIndex")).toSeq.sorted)
     assert(nbJobs === 1, s"readChunkNeighbors ran $nbJobs jobs")
+    // status reads the commit's stats; listFiles the catalog memoized on
+    // its directory, plus the directory walk
     val (st, stJobs) = countJobs(ivf.status())
     assert(st._2 === 30L)
-    info(s"status: $stJobs jobs")
-    assert(stJobs <= 3, s"status ran $stJobs jobs")
+    assert(stJobs === 0, s"status ran $stJobs jobs")
+    ivf.listFiles().collect()
+    val (lf, lfJobs) = countJobs(ivf.listFiles().collect())
+    assert(lf.length === 30 && lf.forall(_.getAs[Boolean]("ingested")))
+    assert(lfJobs === 0, s"a warm listFiles ran $lfJobs jobs")
   }
 }

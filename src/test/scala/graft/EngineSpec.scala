@@ -724,21 +724,44 @@ class EngineSpec extends AnyFunSuite {
     assert(syncJobs.count(_ == ann) <= 1)
   }
 
-  test("no-op sync: one bounded manifest read routes and plans") {
+  test("no-op sync: no job on an unchanged version, one catalog scan after a commit") {
     val root = Files.createTempDirectory("noop-root").toString
     val store = Files.createTempDirectory("noop-store").toString + "/chunks"
     for (i <- 0 until 8)
       write(s"$root/doc$i.md", s"# Doc $i\n" + s"spark shuffle partitions executors $i. " * 5)
     val engine = new Engine(spark, store, Seq(root))
     assert(engine.sync().upserted === 8)
-    assert(engine.sync().skipped === 8) // warm: schema and stats memos
+    // the first sync after a commit: the commit's n_files routes, and the
+    // catalog it plans against is scanned once
+    val (first, firstJobs) = jobDescriptions(engine.sync())
+    assert(first.skipped === 8 && first.upserted === 0 && first.pruned === 0)
+    assert(firstJobs.forall(_ == "graft sync: gather+plan"), firstJobs.mkString(", "))
+    assert(firstJobs.size <= 1, firstJobs.mkString(", "))
+    // an unchanged version: the catalog is memoized on its directory
     val (summary, jobs) = jobDescriptions(engine.sync())
     assert(summary.skipped === 8 && summary.upserted === 0 && summary.pruned === 0)
-    info(s"no-op sync: ${jobs.size} jobs: ${jobs.mkString(", ")}")
-    assert(jobs.forall(_ == "graft sync: gather+plan"), jobs.mkString(", "))
-    // a routing count followed by a manifest collect ran 5 jobs here; one
-    // limited collect of the distinct manifest runs its shuffle and its take
-    assert(jobs.size <= 2, jobs.mkString(", "))
+    assert(jobs.isEmpty, jobs.mkString(", "))
+  }
+
+  test("read calls describe every job: a cold listFiles, a plain IVF-route query, neighbors") {
+    val root = Files.createTempDirectory("readdesc-root").toString
+    val store = Files.createTempDirectory("readdesc-store").toString + "/chunks"
+    for (i <- 0 until 8)
+      write(s"$root/doc$i.md", s"# Doc $i\n" + s"spark shuffle partitions executors $i. " * 5)
+    val engine = new Engine(spark, store, Seq(root), annLists = 2, annProbes = 1, annThreshold = 1L)
+    assert(engine.sync().upserted === 8 && engine.annIndex.exists)
+    val (listed, listJobs) = jobDescriptions(engine.listFiles().collect())
+    assert(listed.length === 8)
+    assert(listJobs.nonEmpty && listJobs.forall(_ == "graft catalog"), listJobs.mkString(", "))
+    val (hits, queryJobs) = jobDescriptions(
+      engine.queryDocuments("spark shuffle partitions").collect())
+    assert(hits.nonEmpty)
+    assert(queryJobs.contains("graft query: text"), "the IVF route fetches the probed rows' text")
+    assert(queryJobs.forall(d => d != null && d.startsWith("graft ")),
+      s"undescribed query jobs: ${queryJobs.mkString(", ")}")
+    val (_, neighborJobs) = jobDescriptions(
+      engine.readChunkNeighbors(s"$root/doc3.md", 0).collect())
+    assert(neighborJobs === Seq("graft neighbors"))
   }
 
   test("every commit vacuums its store: aged unreferenced directories go, fresh ones and both live versions stay") {

@@ -193,6 +193,13 @@ class VersionedStoreSpec extends AnyFunSuite {
     val files = (0 until 6).map(i => s"/c/doc$i.md")
     files.foreach(f => st.upsertFile(f,
       Seq(mkChunk(f, 0, s"text of $f"), mkChunk(f, 1, s"more of $f")).toDF()))
+    // the fragmentation is explicit: the last upsert writes one data file
+    // per row (six rows dealt round-robin from one partition into six), so
+    // the bucket holds more than 4 files whatever the session's
+    // parallelism (the kept rows read back as about one split per core)
+    val spread = "/c/spread.md"
+    st.upsertFile(spread, (0 until 6).map(i => mkChunk(spread, i, s"piece $i of $spread"))
+      .toDF().coalesce(1).repartition(6))
     val vBefore = st.latestVersion().get
     val before = st.read().orderBy("id").collect()
     val nFilesBefore = st.read().inputFiles.length

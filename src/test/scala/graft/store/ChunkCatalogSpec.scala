@@ -1,0 +1,140 @@
+package graft.store
+
+import scala.util.Random
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.ChunkSchema.{ChunkMetadata, ChunkRow}
+import graft.core.{GraftSession, Profile}
+import graft.embed.HashedEmbedder
+
+/** The per-file catalog committed with every chunk-table version answers
+  * exactly what the aggregates over the chunk table it replaced answered:
+  * after every operation of a seeded sequence, on a store committed before
+  * the catalog existed, and with no Spark job on the read side. */
+class ChunkCatalogSpec extends AnyFunSuite {
+
+  private lazy val spark = GraftSession.local(4)
+  import spark.implicits._
+
+  private val embedder = new HashedEmbedder(8)
+
+  private def tmp(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString + "/table"
+
+  private def chunk(file: String, idx: Int, hash: Option[String], day: Int): ChunkRow =
+    ChunkRow(s"$file-$idx-${Random.nextLong()}", file, idx, s"text $idx of $file",
+      embedder.embed(s"$file $idx"), ChunkMetadata(file.split('/').last, 10L, "md"),
+      Some("t"), hash, f"2026-01-$day%02dT00:00:00Z")
+
+  /** the listing, manifest and status the chunk table's own aggregates
+    * give — the groupBy, distinct and countDistinct the catalog replaced.
+    * The old manifest had one row per distinct (filePath, contentHash)
+    * pair; a file reads as its hash when that is its one pair and the hash
+    * is not null, as null otherwise (both forms make sync upsert it). */
+  private def aggregates(rows: DataFrame) = {
+    val listed = rows.groupBy("filePath")
+      .agg(count(lit(1)).as("chunkCount"), max("timestamp").as("lastModified"))
+      .orderBy("filePath").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+    val pairs = rows.select("filePath", "contentHash").distinct().collect()
+      .map(r => r.getString(0) -> Option(r.getString(1)))
+    val manifest = pairs.groupBy(_._1).toSeq.map { case (f, ps) =>
+      f -> (ps.map(_._2).toSeq match { case Seq(Some(h)) => h; case _ => null })
+    }.sortBy(_._1)
+    val st = rows.agg(count(lit(1)), countDistinct("filePath")).head()
+    (listed, manifest, (st.getLong(0), st.getLong(1)))
+  }
+
+  private def answers(st: ChunkStore) = (
+    st.listFiles().collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq,
+    st.manifest().collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sortBy(_._1),
+    st.status())
+
+  test("a seeded sequence of mutations: after each, the catalog equals the aggregates over read(), and one commit names chunks and files") {
+    val rnd = new Random(20261019L)
+    val root = tmp("catalog-seq")
+    val st = new ChunkStore(spark, root)
+    val log = new StoreLog(spark, root)
+    val files = (0 until 10).map(i => s"/s/f$i.md")
+    def pick(n: Int) = rnd.shuffle(files).take(n)
+    def hash() = Seq(Some("a"), Some("b"), None)(rnd.nextInt(3))
+    // a file's rows share one hash; `mixed` gives each row its own draw
+    def rowsOf(f: String, mixed: Boolean = false): Seq[ChunkRow] = {
+      val h = hash()
+      (0 until 1 + rnd.nextInt(3)).map(i => chunk(f, i, if (mixed) hash() else h, 1 + rnd.nextInt(28)))
+    }
+    def step(what: String, commits: Boolean = true)(op: => Any): Unit = {
+      val before = log.latest().version
+      op
+      val m = log.latest()
+      if (commits) {
+        assert(m.version === before + 1, s"$what: one commit")
+        assert(m.tables.keySet === Set("chunks", "files"), s"$what: ${m.tables.keySet}")
+      } else assert(m.version === before, s"$what: no commit")
+      assert(answers(st) === aggregates(st.read()), what)
+    }
+    for (round <- 0 until 2) {
+      step(s"$round insert")(st.insert(pick(4).flatMap(f => rowsOf(f, mixed = true)).toDF()))
+      step(s"$round insert of legacy columns")(st.insert(
+        pick(2).flatMap(f => rowsOf(f)).toDF().drop("fileTitle", "contentHash")))
+      val f = pick(1).head
+      step(s"$round upsertFile $f")(st.upsertFile(f, rowsOf(f).toDF()))
+      step(s"$round deleteFile")(st.deleteFile(pick(1).head))
+      val (up, del) = pick(5).splitAt(3)
+      step(s"$round upsertFilesFromRows with deletes")(
+        assert(st.upsertFilesFromRows(up.flatMap(f => rowsOf(f)).toDF(), del) === 3L))
+      step(s"$round prune-only upsertFilesFromRows")(
+        assert(st.upsertFilesFromRows(Seq.empty[ChunkRow].toDF(), pick(2)) === 0L))
+      step(s"$round optimize")(st.optimize(maxFragments = 0))
+    }
+    // an empty batch that deletes nothing commits nothing
+    step("empty upsertFilesFromRows", commits = false)(
+      assert(st.upsertFilesFromRows(Seq.empty[ChunkRow].toDF()) === 0L))
+    // appends up to the directory cap, then the insert that compacts
+    while (log.latest().dirs("chunks").size < StoreLog.MaxDirs)
+      st.insert(pick(1).flatMap(f => rowsOf(f)).toDF())
+    assert(answers(st) === aggregates(st.read()), "appends up to MaxDirs")
+    step("insert past MaxDirs")(st.insert(pick(2).flatMap(f => rowsOf(f, mixed = true)).toDF()))
+    assert(log.latest().dirs("chunks").size === 1)
+  }
+
+  test("a version committed before the catalog answers the same, and its next commit names a files table") {
+    val root = tmp("catalog-legacy")
+    val log = new StoreLog(spark, root)
+    val hashed = Seq(chunk("/l/a.md", 0, Some("x"), 3), chunk("/l/a.md", 1, Some("x"), 4),
+      chunk("/l/b.md", 0, Some("x"), 5), chunk("/l/b.md", 1, Some("y"), 2)).toDF()
+    val legacy = Seq(chunk("/l/c.md", 0, None, 7)).toDF().drop("fileTitle", "contentHash")
+    log.publish(log.latest(), Manifest(tables = Map("chunks" ->
+      Seq(log.write("chunks", hashed), log.write("chunks", legacy)))))
+    val st = new ChunkStore(spark, root)
+    assert(st.exists, "a pre-catalog store is not absent")
+    assert(answers(st) === aggregates(st.read()))
+    assert(st.status() === ((5L, 3L)))
+    assert(st.manifest().collect().map(r => r.getString(0) -> r.getString(1)).toMap ===
+      Map("/l/a.md" -> "x", "/l/b.md" -> null, "/l/c.md" -> null))
+    val (_, rec) = Profile.window(spark.sparkContext)((st.status(), st.listFiles().collect()))
+    assert(rec.jobs.isEmpty, "the derived catalog is memoized on the version")
+
+    st.upsertFile("/l/d.md", Seq(chunk("/l/d.md", 0, Some("z"), 9)).toDF())
+    val m = log.latest()
+    assert(m.dirs("files").nonEmpty && m.stat("n_files") === 4L && m.stat("n_chunks") === 6L)
+    assert(answers(st) === aggregates(st.read()))
+  }
+
+  test("reads run no Spark job warm; upsertFile and deleteFile commit in two") {
+    val st = new ChunkStore(spark, tmp("catalog-jobs"))
+    st.insert((0 until 6).flatMap(i => Seq(chunk(s"/j/f$i.md", 0, Some("h"), 1),
+      chunk(s"/j/f$i.md", 1, Some("h"), 2))).toDF())
+    def jobs(body: => Any): Int = Profile.window(spark.sparkContext)(body)._2.jobs.size
+    assert(jobs(st.upsertFile("/j/f1.md", Seq(chunk("/j/f1.md", 0, Some("g"), 3)).toDF())) === 2,
+      "the table and the catalog")
+    assert(jobs(st.deleteFile("/j/f2.md")) === 2, "the table and the catalog")
+    assert(jobs(st.status()) === 0)
+    assert(jobs(st.listFiles().collect()) <= 1, "cold: one scan of the catalog")
+    assert(jobs((st.listFiles().collect(), st.manifest().collect())) === 0)
+    assert(st.status() === ((9L, 5L)))
+  }
+}

@@ -116,22 +116,32 @@ class StoreCommitSpec extends AnyFunSuite {
       .collect().toSeq.sorted
 
   test("ChunkStore upsert and delete: a fault before any write leaves the previous version; a resolved reader keeps its own") {
-    val st = new ChunkStore(spark, s"fault:${tmp("fault-chunks")}/table")
+    val root = s"fault:${tmp("fault-chunks")}/table"
+    val st = new ChunkStore(spark, root)
+    val log = new StoreLog(spark, root)
     st.insert(Seq(chunk("/a/x.md", 0, "old x"), chunk("/a/x.md", 1, "old x two"),
       chunk("/a/y.md", 0, "y text")).toDF())
-    val v0 = rows(st.read())
+    // rows, the catalog as listFiles and manifest read it, and the stats
+    // status reads, with the catalog directory the version names
+    def state() = (rows(st.read()), st.listFiles().collect().toSeq,
+      st.manifest().collect().toSeq, st.status(), log.latest().dirs("files"))
+    val v0 = state()
+    assert(v0._4 === ((3L, 2L)))
     val reader0 = st.read()
-    val upsertWrites = underEveryFault(v0, rows(st.read()))(
+    val upsertWrites = underEveryFault(v0, state())(
       st.upsertFile("/a/x.md", Seq(chunk("/a/x.md", 0, "new x")).toDF()))
-    assert(upsertWrites === 2, "one table directory and one commit")
-    val v1 = rows(st.read())
-    assert(v1 === Seq(("/a/x.md", 0, "new x"), ("/a/y.md", 0, "y text")))
-    assert(rows(reader0) === v0, "a reader resolved before the commit reads its version")
+    assert(upsertWrites === 3, "one table directory, one catalog directory and one commit")
+    val v1 = state()
+    assert(v1._1 === Seq(("/a/x.md", 0, "new x"), ("/a/y.md", 0, "y text")))
+    assert(v1._4 === ((2L, 2L)))
+    assert(rows(reader0) === v0._1, "a reader resolved before the commit reads its version")
 
     val reader1 = st.read()
-    assert(underEveryFault(v1, rows(st.read()))(st.deleteFile("/a/y.md")) === 2)
+    assert(underEveryFault(v1, state())(st.deleteFile("/a/y.md")) === 3)
     assert(rows(st.read()) === Seq(("/a/x.md", 0, "new x")))
-    assert(rows(reader1) === v1)
+    assert(st.status() === ((1L, 1L)))
+    assert(st.listFiles().collect().map(_.getString(0)).toSeq === Seq("/a/x.md"))
+    assert(rows(reader1) === v1._1)
   }
 
   test("FtsIndexStore and AnnIndexStore rebuilds: a fault before any write leaves rows and stats of the previous version") {
@@ -210,11 +220,18 @@ class StoreCommitSpec extends AnyFunSuite {
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val mismatched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val log = new StoreLog(spark, s"$root/chunks")
     val reader = new Thread(() => {
       while (!done.get) {
         try {
           seen.add(st.read().count())
           fts.queryTerms(Seq("spark", "pasta"), Seq("/c/doc0.md", "/w/f3.md"))
+          // one resolved version: its stats equal the counts of its rows
+          val m = log.latest()
+          val rows = st.read(m)
+          val counted = (rows.count(), rows.select("filePath").distinct().count())
+          if (st.status(m) != counted) mismatched.add(s"v${m.version}: ${st.status(m)} vs $counted")
         } catch { case t: Throwable => failures.add(t) }
       }
     })
@@ -228,6 +245,7 @@ class StoreCommitSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     assert(failures.isEmpty, failures.asScala.map(_.toString).take(3).mkString("; "))
     assert(seen.size > 0)
+    assert(mismatched.isEmpty, mismatched.asScala.take(3).mkString("; "))
     assert(seen.asScala.forall(committed.contains),
       s"uncommitted counts: ${seen.asScala.filterNot(committed.contains).toSet}")
   }
