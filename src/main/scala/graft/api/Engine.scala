@@ -751,7 +751,8 @@ final class Engine(
     * `src/pdf-visual/index.ts:17-29`): which pages a renderer + VLM
     * captioner (F20, the external seam) should run on, with the padded
     * crop rect the renderer would use. Scope validation matches sync's
-    * containment rule; the sweep itself is ONE `binaryFile` scan with
+    * containment rule; the sweep itself is ONE exact-path read
+    * ([[readFilesBinary]], no listing jobs) with
     * [[graft.ingest.VisualDetector.detect]] pure per document — at corpus
     * scale candidates fall out of a single distributed pass, no driver
     * loop. Returns (filePath, page, isCandidate, x0, y0, x1, y1); crop
@@ -774,9 +775,7 @@ final class Engine(
         Option[Double], Option[Double])]
         .toDF("filePath", "page", "isCandidate", "x0", "y0", "x1", "y1")
     else graft.ingest.PdfIngest.visualCandidatesDF(spark,
-      spark.read.format("binaryFile").load(pdfs: _*)
-        .select(regexp_replace(col("path"), "^file:", "").as("filePath"),
-          col("content")))
+      readFilesBinary(pdfs).withColumnRenamed("path", "filePath"))
   }
 
   /** sources classifier (reference J5, `src/utils/list-sources.ts:51-77`):

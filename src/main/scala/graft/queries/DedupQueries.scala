@@ -275,7 +275,7 @@ object DedupQueries {
     // batch dedup agree exactly. -----
     Q("e_stream_dedup",
       (s, d) => graft.streaming.StreamingIngest
-        .exactDedupAvailableNow(s, dupCorpus(s, d))
+        .exactDedupAvailableNow(s, dupCorpus(s, d))._1
         .orderBy("fp"),
       Some(s"""WITH $DupCorpusCte
               |SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
@@ -290,7 +290,7 @@ object DedupQueries {
     // row. -----
     Q("e_stream_hll",
       (s, d) => graft.streaming.StreamingIngest
-        .hllAvailableNow(s, Tables.documents(s, d), 6),
+        .hllAvailableNow(s, Tables.documents(s, d), 6)._1,
       Some("""WITH h AS (SELECT CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT) AS h
              |  FROM documents),
              |r AS (SELECT h % 64 AS register, h // 64 AS w FROM h),
@@ -321,7 +321,7 @@ object DedupQueries {
       (s, d) => {
         import graft.ops.{Dedup, Sketches}
         val snapshot = graft.streaming.StreamingIngest
-          .cmsAvailableNow(s, Tables.documents(s, d))
+          .cmsAvailableNow(s, Tables.documents(s, d))._1
         val words = Tables.documents(s, d)
           .select(explode(Dedup.wordsArray("text")).as("w"))
         val top = words.groupBy("w").agg(count(lit(1)).as("exact_cnt"))
@@ -655,7 +655,7 @@ object DedupQueries {
     // drift between the incremental and the one-shot path breaks the hash. -----
     Q("d_stream_delta_dedup",
       (s, d) => graft.streaming.StreamingIngest
-        .incrementalDedupAvailableNow(s, dupCorpus(s, d))
+        .incrementalDedupAvailableNow(s, dupCorpus(s, d))._1
         .orderBy("id_a", "id_b"),
       Some(s"""WITH $ShinglesCte,
               |hs AS (SELECT doc_id,
@@ -975,7 +975,7 @@ object DedupQueries {
     Q("e_stream_pipeline",
       (s, d) => graft.streaming.StreamingIngest
         .cleanPipelineAvailableNow(s, dupCorpus(s, d),
-          isHoldout = col("doc_id") % 97 === 0, numFiles = 4)
+          isHoldout = col("doc_id") % 97 === 0, numFiles = 4)._1
         .orderBy("doc_id"),
       Some(s"""WITH $CleaningCtes
               |SELECT doc_id FROM kept4 ORDER BY doc_id""".stripMargin)),

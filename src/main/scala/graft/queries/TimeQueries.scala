@@ -268,7 +268,7 @@ object TimeQueries {
     // and the SAME oracle hash-checks the streaming feed. -----
     Q("e_stream_anomaly",
       (s, d) => graft.streaming.StreamingIngest
-        .hourlyAnomalyAvailableNow(s, s"$d/events.parquet"),
+        .hourlyAnomalyAvailableNow(s, Tables.events(s, d))._1,
       Some("""WITH hourly AS (SELECT date_trunc('hour', ts) AS h, count(*) AS cnt
              |  FROM events GROUP BY 1),
              |win AS (SELECT h, cnt,
@@ -289,7 +289,7 @@ object TimeQueries {
     // bounds are spec-gated in StreamingSpec via StreamRunStats. -----
     Q("e_stream_anomaly_update",
       (s, d) => graft.streaming.StreamingIngest
-        .hourlyAnomalyUpdateMode(s, s"$d/events.parquet"),
+        .hourlyAnomalyUpdateMode(s, Tables.events(s, d))._1,
       Some("""WITH hourly AS (SELECT date_trunc('hour', ts) AS h, count(*) AS cnt
              |  FROM events GROUP BY 1),
              |win AS (SELECT h, cnt,
@@ -420,7 +420,7 @@ object TimeQueries {
     // stateful streaming) pinned to one answer. Session start AND end are
     // emitted so a state-merge defect can't hide behind matching counts. -----
     Q("e_stream_sessionize",
-      (s, d) => StreamingIngest.sessionizeAvailableNow(s, Tables.events(s, d))
+      (s, d) => StreamingIngest.sessionizeAvailableNow(s, Tables.events(s, d))._1
         .select(col("userId").as("user_id"),
           date_format(timestamp_millis(col("startTs")), "yyyy-MM-dd HH:mm:ss")
             .as("session_start"),
@@ -448,7 +448,7 @@ object TimeQueries {
     // the oracle checks the stream's complete-mode result equals the batch
     // aggregation over the same input -----
     Q("e_stream_rollup",
-      (s, d) => StreamingIngest.hourlyRollupAvailableNow(s, s"$d/events.parquet")
+      (s, d) => StreamingIngest.hourlyRollupAvailableNow(s, Tables.events(s, d))._1
         .orderBy("hour", "event_type"),
       Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
              |  count(*) AS cnt,
@@ -463,7 +463,7 @@ object TimeQueries {
     // oracle hash-proves the evicting run still equals the batch truth.
     // State bounds are spec-gated in StreamingSpec via StreamRunStats. -----
     Q("e_stream_rollup_update",
-      (s, d) => StreamingIngest.hourlyRollupUpdateMode(s, s"$d/events.parquet")
+      (s, d) => StreamingIngest.hourlyRollupUpdateMode(s, Tables.events(s, d))._1
         .orderBy("hour", "event_type"),
       Some("""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
              |  count(*) AS cnt,
@@ -476,7 +476,7 @@ object TimeQueries {
     // hash-compared against the batch join — the streaming twin of
     // j_asof_attrib the way e_stream_rollup twins e_hourly_rollup. -----
     Q("e_stream_attrib",
-      (s, d) => StreamingIngest.attributionAvailableNow(s, Tables.events(s, d))
+      (s, d) => StreamingIngest.attributionAvailableNow(s, Tables.events(s, d))._1
         .select(col("user_id"),
           date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
           date_format(col("action_ts"), "yyyy-MM-dd HH:mm:ss").as("action_ts"),

@@ -51,8 +51,10 @@ object Bm25 {
     * This is the batch-index-build shape (BASELINE's "batch index build via
     * DataFrame ops"): all three are plain DataFrames, persistable as parquet
     * next to the chunk table and incrementally rebuildable per upsert batch.
-    * At 100 TB the postings table is bucketed by `tok` so a query's postings
-    * lookup prunes to its tokens' buckets. */
+    * [[graft.store.FtsIndexStore]] persists the postings range-partitioned
+    * by `tok` and sorted within each file: the precondition for min/max
+    * skipping on a query's tokens, though at engine sizes the ranges
+    * coalesce into one file and a lookup still scans every posting. */
   final case class Index(postings: DataFrame, docLens: DataFrame, stats: DataFrame)
 
   /** build the (postings, docLens, stats) index for a corpus */

@@ -230,9 +230,8 @@ object HybridSearch {
         // files -- the reference's `IN (vector-hit files)` predicate
         // (`src/vectordb/index.ts:395-400`); max-normalization then runs
         // over exactly that restricted set (`search-filters.ts:121-135`).
-        // (Production note: postings/stats would be a prebuilt index table,
-        // not recomputed per query -- recomputed here because the verify
-        // harness is stateless.)
+        // With no `ftsIndex` (the registry's stateless queries) the
+        // postings and stats are recomputed from `chunks` per query.
         // NB: rename the hit-file key before the semi join — hitFiles and
         // ftsAll share lineage (both derive from `chunks`), and a same-name
         // self-join would resolve to a trivially-true condition, silently

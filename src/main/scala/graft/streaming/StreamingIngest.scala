@@ -1,16 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
 
-import graft.chunker.MaxMinChunker
 import graft.core.ChunkSchema.ChunkRow
 import graft.core.Seam
 import graft.embed.Embedder
 import graft.ingest.Ingest
+import graft.ops.{Dedup, Sketches}
 
 /** Structured Streaming surfaces. The reference has no stream processing
   * (SURVEY §2.10) — its only async is a driver-side sync job — but a
@@ -22,6 +28,13 @@ import graft.ingest.Ingest
   * The batch and streaming paths share `Ingest`'s per-document logic — one
   * code path, two triggers (the `Trigger.AvailableNow` reconciliation
   * pattern SURVEY §2.10 calls the optional stretch).
+  *
+  * Every oracle-matched run replays a batch frame as an ordered file stream
+  * through one [[Stage]]: the frame is written as single-file slices with
+  * ascending mtimes, read back one slice per micro-batch, drained
+  * AvailableNow into a memory sink ([[Stage.sink]]) or a foreachBatch step
+  * ([[Stage.drain]]), and the stage directory is deleted on return and on
+  * failure. Each run returns its result and its [[StreamRunStats]].
   */
 object StreamingIngest {
 
@@ -39,30 +52,24 @@ object StreamingIngest {
     * continuous-crawl deployment shape: Common Crawl segments land in a
     * bucket, and the pipeline indexes them incrementally — each file is
     * read once, all parsing is map-side inside the batch. */
-  def warcIngestAvailableNow(spark: org.apache.spark.sql.SparkSession,
+  def warcIngestAvailableNow(spark: SparkSession,
                              dir: String, mkEmbedder: () => Embedder,
                              timestamp: String): DataFrame = {
     import spark.implicits._
     val pages = spark.readStream.format("binaryFile")
       .option("pathGlobFilter", "*.warc*")
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType))))
+      .schema(StructType(Seq(StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType), StructField("content", BinaryType))))
       .load(dir)
       .select(col("content"))
       .as[Array[Byte]]
       .flatMap(bytes => graft.ingest.WarcSource.htmlDocs(bytes).map {
         case (uri, md) => Ingest.Doc(uri, md, None, None)
       })
-    val chunks = chunkStream(pages, mkEmbedder, timestamp).toDF()
-    runToMemorySink(spark, chunks, OutputMode.Append(), "graft_warc_ingest")(
-      identity)
+    // nothing to slice: the stage only holds the query's checkpoint
+    staged(spark, "warc")(
+      _.sink(chunkStream(pages, mkEmbedder, timestamp).toDF(), OutputMode.Append()))._1
   }
 
   /** event-time windowed counts with a watermark — late data beyond the
@@ -88,147 +95,184 @@ object StreamingIngest {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
 
+  /** Per-run stats of a streaming query: micro-batches that processed input
+    * and the PEAK buffered state-store rows across the run. The spec gates
+    * on both — batches > 1 proves state crossed batch boundaries, peak <
+    * input rows proves the watermark actually evicted instead of buffering
+    * the whole corpus. */
+  final case class StreamRunStats(batches: Long, maxStateRows: Long,
+                                  maxBatchWallSec: Double = 0.0)
+
   private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Run the watermarked hourly rollup as a real Structured Streaming job
-    * over the events parquet (AvailableNow trigger → terminates when the
-    * backlog drains) and return the final result table. Complete output
-    * mode makes the result deterministic and equal to the batch aggregation
-    * — which is exactly what the DuckDB oracle checks. The production twin
-    * runs the same plan with a micro-batch trigger and append mode. */
-  def hourlyRollupAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                               eventsPath: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    // FileStreamSource insists its basePath be a directory (it treats the
-    // monitored path as the partition-discovery root), so a single flat
-    // parquet file can't be streamed directly — stage a symlink to it in a
-    // fresh temp dir and stream that dir. (Production corpora are
-    // directories of part files anyway; this shim is test-data-shaped.)
-    val stageDir = stageSource(eventsPath)
-    try {
-      val raw = spark.readStream.schema(schema).parquet(stageDir.toString)
-      // same conditional ns→µs cast as Tables.load: a TIMESTAMP(NANOS) file
-      // surfaces ts as a raw nanos long (nanosAsLong) needing the DIV-1000
-      // conversion; a µs-typed file is already a usable timestamp
-      val ev =
-        if (schema.exists(f => f.name == "ts" &&
-              f.dataType == org.apache.spark.sql.types.LongType))
-          raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        else raw
-      val agg = ev
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 8)))
-            .cast("double").as("sum_value"))
-      runToMemorySink(spark, agg, OutputMode.Complete(), "graft_stream_rollup")(
-        _.select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
-          col("event_type"), col("cnt"), col("sum_value")))
-    } finally deleteRecursively(stageDir)
-  }
+  /** One AvailableNow run's scratch directory: the staged slices under
+    * `src/`, the query's checkpoint, and whatever state the run keeps
+    * beside them. Created and deleted only by [[staged]]. */
+  private final class Stage(spark: SparkSession, name: String, val dir: Path)
+      extends AutoCloseable {
+    private val src = dir.resolve("src")
+    private var slicesWritten = 0
+    private var schema: StructType = _ // of the first slice; every slice shares it
 
-  /** Stage `path` (a flat parquet file OR a directory of part files) into
-    * a fresh temp dir for FileStreamSource. Symlink when the filesystem
-    * supports it; otherwise a RECURSIVE copy — a flat `Files.copy` on a
-    * directory target would create only an empty directory and the stream
-    * would silently drain zero rows. Caller deletes the returned dir
-    * (via [[deleteRecursively]]) once the drain completes; `deleteOnExit`
-    * cannot remove a non-empty directory. */
-  private def stageSource(path: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val stageDir = Files.createTempDirectory("graft_stream_src")
-    val target = Paths.get(path).toAbsolutePath
-    val staged = stageDir.resolve(target.getFileName.toString)
-    try { Files.createSymbolicLink(staged, target); () }
-    catch {
-      case _: UnsupportedOperationException | _: java.io.IOException =>
-        if (Files.isDirectory(target)) {
-          import scala.jdk.CollectionConverters._
-          val s = Files.walk(target) // CLOSED: one open dir handle per level
-          try s.iterator().asScala.foreach { p =>
-            val dst = staged.resolve(target.relativize(p).toString)
-            if (Files.isDirectory(p)) Files.createDirectories(dst): Unit
-            else { Files.createDirectories(dst.getParent)
-                   Files.copy(p, dst): Unit }
-          } finally s.close()
-        } else Files.copy(target, staged): Unit
+    /** Write `frame` as `numFiles` slices over equal ranges of the Long
+      * `key` — equal key spans, not equal row counts: one min/max agg
+      * instead of a global sort, and each slice is a plain filtered scan
+      * (skewed slice sizes are fine — ordering is what matters). Rows with
+      * a null key are not staged; with none left every slice is empty.
+      * Returns the key's (min, max), (0, 0) when there is none. */
+    def slices(frame: DataFrame, key: Column, numFiles: Int): (Long, Long) = {
+      val r = frame.agg(min(key), max(key)).head()
+      val (lo, hi) = if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
+      val n = math.max(1, numFiles)
+      val span = math.max(1L, (hi - lo) / n + 1)
+      (0 until n).foreach(i =>
+        slice(frame.filter(key >= lo + i * span && key < lo + (i + 1) * span)))
+      (lo, hi)
     }
-    stageDir
-  }
 
-  /** stage `df` under `src` as `numFiles` event-time-ordered parquet
-    * files — equal TIME spans, not equal row counts: one cheap min/max
-    * agg instead of a global sort, and slice filters are plain
-    * distributed scans (skewed slice sizes are fine — ordering is what
-    * matters). File mtimes are forced ascending so FileStreamSource's
-    * mtime-ordered discovery provably IS event-time order. */
-  private def stageTimeSlicesInto(df: DataFrame, tsCol: String,
-                                  stage: java.nio.file.Path,
-                                  src: java.nio.file.Path,
-                                  numFiles: Int): Unit = {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val Array(lo, hi) = df.agg(min(unix_micros(col(tsCol))),
-      max(unix_micros(col(tsCol)))).collect()(0) match {
-      case r => Array(r.getLong(0), r.getLong(1))
+    /** Write `frame` as the next slice: one parquet file whose mtime is
+      * pinned after every earlier slice's, so FileStreamSource's
+      * mtime-ordered discovery replays the slices in write order. */
+    def slice(frame: DataFrame): Unit = {
+      val tmp = dir.resolve(s"write_$slicesWritten")
+      frame.coalesce(1).write.parquet(tmp.toString)
+      // the stream is closed: an open one leaks a directory handle per slice
+      val part = Using.resource(Files.newDirectoryStream(tmp, "*.parquet"))(
+        _.iterator().next())
+      val dest = Files.createDirectories(src).resolve(f"slice_$slicesWritten%04d.parquet")
+      Files.move(part, dest)
+      Files.setLastModifiedTime(dest,
+        FileTime.fromMillis(1_000_000_000_000L + slicesWritten * 60_000L))
+      if (schema == null) schema = frame.schema
+      slicesWritten += 1
     }
-    val n = math.max(1, numFiles)
-    val span = math.max(1L, (hi - lo) / n + 1)
-    (0 until n).foreach { i =>
-      val sliceLo = lo + i * span
-      val sliceHi = lo + (i + 1) * span // exclusive; last slice covers hi
-      val tmp = stage.resolve(s"slice_$i").toString
-      df.filter(unix_micros(col(tsCol)) >= sliceLo &&
-          unix_micros(col(tsCol)) < sliceHi)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      moveSinglePartInto(Paths.get(tmp), src.resolve(f"events_$i%04d.parquet"),
-        1_000_000_000_000L + i * 60_000L)
-    }
-  }
 
-  /** Move the single parquet part file out of a coalesce(1) write dir to
-    * `dest` and pin its mtime (file order = micro-batch arrival order). */
-  private def moveSinglePartInto(tmp: java.nio.file.Path,
-                                 dest: java.nio.file.Path,
-                                 mtimeMs: Long): Unit = {
-    import java.nio.file.{Files => JFiles, StandardCopyOption}
-    // Files.list requires close (else a directory handle leaks per slice)
-    val listing = JFiles.list(tmp)
-    val found =
+    /** The staged slices as a stream, one slice per micro-batch. */
+    def open(): DataFrame =
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(src.toString)
+
+    /** Start `writer` AvailableNow with its checkpoint inside the stage and
+      * wait until the backlog drains; a failed run rethrows. */
+    private def availableNow[T](writer: DataStreamWriter[T]): StreamingQuery = {
+      val q = writer.option("checkpointLocation", dir.resolve("checkpoint").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      try { q.awaitTermination(); q } finally q.stop()
+    }
+
+    /** Drain `df` into a memory sink and return the sink's rows,
+      * materialized driver-side, with the run's stats. The sink's view is
+      * dropped on return — the sink holds the full result per run, and
+      * repeated calls in a long-lived session would otherwise accumulate one
+      * table per call. */
+    def sink(df: DataFrame, mode: OutputMode): (DataFrame, StreamRunStats) = {
+      val view = s"graft_stream_${name}_${sinkCounter.incrementAndGet()}"
       try {
-        val part = listing.iterator()
-        val acc = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.toString.endsWith(".parquet")) acc += p
-        }
-        acc
-      } finally listing.close()
-    JFiles.move(found.head, dest, StandardCopyOption.REPLACE_EXISTING)
-    JFiles.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+        val progress = availableNow(
+          df.writeStream.format("memory").queryName(view).outputMode(mode)).recentProgress
+        val out = spark.table(view)
+        (spark.createDataFrame(out.collect().toSeq.asJava, out.schema),
+          StreamRunStats(
+            batches = progress.count(_.numInputRows > 0),
+            maxStateRows = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
+              .foldLeft(0L)(math.max)))
+      } finally spark.catalog.dropTempView(view): Unit
+    }
+
+    /** foreachBatch drain for runs that keep their own state beside the
+      * stream. Each non-empty batch is cached for
+      * `step(batch, lookup, batchId)`, where `lookup` is the batch plus
+      * every earlier batch (the accumulated doc store, read with the batch's
+      * schema), then joins the doc store. Returns batches with rows and the
+      * slowest batch's wall; `maxStateRows` is the caller's to fill.
+      *
+      * foreachBatch is AT-LEAST-ONCE: a crash between sink work and
+      * checkpoint advance replays the micro-batch with the same batchId.
+      * Callers' appends are not naturally idempotent, so each fully
+      * processed batchId leaves a marker and replays are skipped; the doc
+      * store (and any per-batch output a step writes) goes to per-batch
+      * `batch=<id>` subdirectories in Overwrite mode, so even a replay of a
+      * PARTIALLY processed batch cannot duplicate it. */
+    def drain(step: (DataFrame, DataFrame, Long) => Unit): StreamRunStats = {
+      val markers = Files.createDirectories(dir.resolve("processed"))
+      val docs = dir.resolve("docs")
+      var batches = 0L
+      // per-batch wall clock on the record: the scale claim for these runs
+      // is "cost follows the batch", and the stress run reads these lines
+      var maxWall = 0.0
+      availableNow(open().writeStream.foreachBatch { (batchDF: DataFrame, batchId: Long) =>
+        val marker = markers.resolve(f"batch-$batchId%08d")
+        val batch = batchDF.persist()
+        val t0 = System.nanoTime()
+        try {
+          // ONE count: materializes the cached batch and gates the empty case
+          val nRows = if (Files.exists(marker)) 0L else batch.count()
+          if (nRows > 0) {
+            val lookup = // the select drops the store's `batch` partition column
+              if (Files.exists(docs))
+                batch.unionByName(spark.read.schema(batch.schema).parquet(docs.toString)
+                  .select(batch.columns.map(col).toIndexedSeq: _*))
+              else batch
+            step(batch, lookup, batchId)
+            batch.write.mode("overwrite").parquet(s"$docs/batch=$batchId")
+            Files.createFile(marker)
+            batches += 1
+            val wall = (System.nanoTime() - t0) / 1e9
+            maxWall = math.max(maxWall, wall)
+            System.err.println(f"[stream-$name] batch=$batchId rows=$nRows wall=$wall%.2fs")
+          }
+        } finally batch.unpersist(): Unit
+      })
+      StreamRunStats(batches, maxStateRows = 0L, maxBatchWallSec = maxWall)
+    }
+
+    def close(): Unit = deleteTree(dir)
   }
 
-  private def stageTimeSlices(df: DataFrame, tsCol: String,
-                              stage: java.nio.file.Path,
-                              numFiles: Int): java.nio.file.Path = {
-    val src = stage.resolve("src")
-    java.nio.file.Files.createDirectories(src)
-    stageTimeSlicesInto(df, tsCol, stage, src, numFiles)
-    src
-  }
+  /** Run `body` in a fresh [[Stage]]; the stage directory is deleted when
+    * `body` returns and when it throws. */
+  private def staged[T](spark: SparkSession, name: String)(body: Stage => T): T =
+    Using.resource(new Stage(spark, name,
+      Files.createTempDirectory(s"graft_stream_$name")))(body)
 
-  /** recursive delete; the Files.walk Stream is CLOSED (one open directory
-    * handle per level otherwise — the ADVICE r12 / VERDICT r13 leak class).
-    * Unlike [[deleteTreeQuietly]] this propagates IO failures: staging-dir
-    * cleanup inside a `finally` should surface a wedged filesystem, not
-    * mask it. */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(dir)
-    try s.iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    finally s.close()
-  }
+  /** recursive delete; the Files.walk stream is CLOSED (one open directory
+    * handle per level otherwise — the ADVICE r12 / VERDICT r13 leak class) */
+  private def deleteTree(dir: Path): Unit =
+    Using.resource(Files.walk(dir))(
+      _.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p)))
+
+  private def hourOf(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm")
+
+  /** the watermarked (hour, event_type) rollup both rollup runs stream */
+  private def rollup(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast(DecimalType(30, 8))).cast("double").as("sum_value"))
+      .select(col("window.start").as("h"), col("event_type"), col("cnt"), col("sum_value"))
+
+  /** the watermarked hourly event volume both anomaly runs stream */
+  private def hourlyCounts(ev: DataFrame): DataFrame =
+    ev.withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("window.start").as("h"), col("cnt"))
+
+  /** Run the watermarked hourly rollup as a real Structured Streaming job
+    * over the events (AvailableNow trigger → terminates when the backlog
+    * drains) and return the final result table. Complete output mode makes
+    * the result deterministic and equal to the batch aggregation — which is
+    * exactly what the DuckDB oracle checks. The events are staged as one
+    * slice, drained in one micro-batch. The production twin runs the same
+    * plan with a micro-batch trigger and append mode. */
+  def hourlyRollupAvailableNow(spark: SparkSession,
+                               events: DataFrame): (DataFrame, StreamRunStats) =
+    staged(spark, "rollup") { stage =>
+      stage.slices(events.select("ts", "event_type", "value"), unix_micros(col("ts")), 1)
+      val (snapshot, stats) = stage.sink(rollup(stage.open()), OutputMode.Complete())
+      (snapshot.select(hourOf(col("h")).as("hour"), col("event_type"), col("cnt"),
+        col("sum_value")), stats)
+    }
 
   /** Streaming feed → batch monitor: hourly TOTAL event volume maintained
     * as a Complete-mode windowed aggregate over the staged stream, then
@@ -237,28 +281,13 @@ object StreamingIngest {
     * continuously and the anomaly sweep runs on each snapshot. The
     * windowed agg is the only streaming state (one row per hour); the
     * z-score window needs completed history and stays batch-side. */
-  def hourlyAnomalyAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                                eventsPath: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stageDir = stageSource(eventsPath)
-    val snapshot =
-      try {
-        val raw = spark.readStream.schema(schema).parquet(stageDir.toString)
-        val ev =
-          if (schema.exists(f => f.name == "ts" &&
-                f.dataType == org.apache.spark.sql.types.LongType))
-            raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-          else raw
-        val agg = ev
-          .withWatermark("ts", "30 minutes")
-          .groupBy(window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("cnt"))
-        runToMemorySink(spark, agg, OutputMode.Complete(),
-          "graft_stream_anomaly")(
-          _.select(col("window.start").as("h"), col("cnt")))
-      } finally deleteRecursively(stageDir)
-    anomalyZScoreTail(snapshot)
-  }
+  def hourlyAnomalyAvailableNow(spark: SparkSession,
+                                events: DataFrame): (DataFrame, StreamRunStats) =
+    staged(spark, "anomaly") { stage =>
+      stage.slices(events.select("ts"), unix_micros(col("ts")), 1)
+      val (snapshot, stats) = stage.sink(hourlyCounts(stage.open()), OutputMode.Complete())
+      (anomalyZScoreTail(snapshot), stats)
+    }
 
   /** trailing-24-bucket z-score over an (h, cnt) hourly snapshot — the
     * shared batch-side tail of both anomaly variants */
@@ -270,7 +299,7 @@ object StreamingIngest {
       .withColumn("mean", avg(col("cnt")).over(w))
       .withColumn("sd", stddev_samp(col("cnt")).over(w))
       .filter(col("n_win") === 24 && col("sd") > 0)
-      .select(date_format(col("h"), "yyyy-MM-dd HH:mm").as("hour"),
+      .select(hourOf(col("h")).as("hour"),
         col("cnt"),
         (round(col("mean"), 4) + 0.0).as("mean24"),
         (round((col("cnt") - col("mean")) / col("sd"), 4) + 0.0).as("z"))
@@ -283,56 +312,31 @@ object StreamingIngest {
     * streaming state is bounded by the watermark horizon (a few windows),
     * not by the feed's lifetime (every distinct hour — what Complete mode
     * retains and re-emits forever). Events are staged as `numFiles`
-    * event-time-ordered slices drained one per micro-batch (the
-    * [[stageTimeSlices]] discipline), so the watermark advances mid-run
-    * and eviction is observable: [[StreamRunStats.maxStateRows]] records
-    * the per-batch state high-water mark. Slice boundaries are strict
-    * time splits, so no event ever arrives behind the watermark — the
-    * Update-mode result equals the Complete twin row-for-row (the
-    * registry oracle hash-checks this against batch SQL).
+    * event-time slices drained one per micro-batch, so the watermark
+    * advances mid-run and eviction is observable:
+    * [[StreamRunStats.maxStateRows]] records the per-batch state
+    * high-water mark. Slice boundaries are strict time splits, so no event
+    * ever arrives behind the watermark — the Update-mode result equals the
+    * Complete twin row-for-row (the registry oracle hash-checks this
+    * against batch SQL).
     *
     * The memory sink receives each window's per-batch updates; the final
     * count per window is the LAST update — counts are monotone within a
     * window, so max-per-window reassembles it without ordering metadata.
     * The z-score tail is shared with the Complete twin. */
-  def hourlyAnomalyUpdateModeWithStats(spark: org.apache.spark.sql.SparkSession,
-                                       eventsPath: String, numFiles: Int = 12)
-      : (DataFrame, StreamRunStats) = {
-    import java.nio.file.{Files => JFiles}
-    val batch = spark.read.parquet(eventsPath)
-    val evBatch =
-      if (batch.schema.exists(f => f.name == "ts" &&
-            f.dataType == org.apache.spark.sql.types.LongType))
-        batch.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      else batch
-    val stage = JFiles.createTempDirectory("graft_stream_anomaly_upd")
-    try {
+  def hourlyAnomalyUpdateMode(spark: SparkSession, events: DataFrame,
+                              numFiles: Int = 12): (DataFrame, StreamRunStats) =
+    staged(spark, "anomaly_upd") { stage =>
       // only the event-time column feeds the aggregate: stage just it
-      val src = stageTimeSlices(evBatch.select("ts"), "ts", stage, numFiles)
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-      val agg = raw
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("cnt"))
-      val (updates, stats) = runToMemorySinkWithStats(spark, agg,
-        OutputMode.Update(), "graft_stream_anomaly_upd")(
-        _.select(col("window.start").as("h"), col("cnt")))
-      val byWindow = updates.groupBy("h").agg(max("cnt").as("cnt"))
-      (anomalyZScoreTail(byWindow), stats)
-    } finally deleteRecursively(stage)
-  }
-
-  /** registry shape of [[hourlyAnomalyUpdateModeWithStats]] */
-  def hourlyAnomalyUpdateMode(spark: org.apache.spark.sql.SparkSession,
-                              eventsPath: String): DataFrame =
-    hourlyAnomalyUpdateModeWithStats(spark, eventsPath)._1
+      stage.slices(events.select("ts"), unix_micros(col("ts")), numFiles)
+      val (updates, stats) = stage.sink(hourlyCounts(stage.open()), OutputMode.Update())
+      (anomalyZScoreTail(updates.groupBy("h").agg(max("cnt").as("cnt"))), stats)
+    }
 
   /** UPDATE-mode deployment shape of [[hourlyRollupAvailableNow]] — the
     * (window, event_type) rollup with the watermark actually EVICTING
     * window state once the event-time frontier passes it, completing the
-    * Update-mode family next to [[hourlyAnomalyUpdateModeWithStats]].
+    * Update-mode family next to [[hourlyAnomalyUpdateMode]].
     * State is bounded by the watermark horizon × event-type arity, not
     * the feed lifetime (what Complete mode retains and re-emits forever).
     * Events drain as strict event-time slices (one per micro-batch), so
@@ -345,104 +349,36 @@ object StreamingIngest {
     * because cnt strictly increases across a window's updates (each
     * update exists only when new rows arrived) — max(cnt) picks it and
     * max_by(sum_value, cnt) carries the matching sum. */
-  def hourlyRollupUpdateModeWithStats(spark: org.apache.spark.sql.SparkSession,
-                                      eventsPath: String, numFiles: Int = 12)
-      : (DataFrame, StreamRunStats) = {
-    import java.nio.file.{Files => JFiles}
-    val batch = spark.read.parquet(eventsPath)
-    val evBatch =
-      if (batch.schema.exists(f => f.name == "ts" &&
-            f.dataType == org.apache.spark.sql.types.LongType))
-        batch.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      else batch
-    val stage = JFiles.createTempDirectory("graft_stream_rollup_upd")
-    try {
-      val src = stageTimeSlices(evBatch.select("ts", "event_type", "value"),
-        "ts", stage, numFiles)
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-      val agg = raw
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 8)))
-            .cast("double").as("sum_value"))
-      val (updates, stats) = runToMemorySinkWithStats(spark, agg,
-        OutputMode.Update(), "graft_stream_rollup_upd")(
-        _.select(col("window.start").as("h"), col("event_type"),
-          col("cnt"), col("sum_value")))
+  def hourlyRollupUpdateMode(spark: SparkSession, events: DataFrame,
+                             numFiles: Int = 12): (DataFrame, StreamRunStats) =
+    staged(spark, "rollup_upd") { stage =>
+      stage.slices(events.select("ts", "event_type", "value"), unix_micros(col("ts")),
+        numFiles)
+      val (updates, stats) = stage.sink(rollup(stage.open()), OutputMode.Update())
       val last = updates.groupBy("h", "event_type")
-        .agg(max("cnt").as("cnt"),
-          expr("max_by(sum_value, cnt)").as("sum_value"))
-      (last.select(date_format(col("h"), "yyyy-MM-dd HH:mm").as("hour"),
-        col("event_type"), col("cnt"), col("sum_value")), stats)
-    } finally deleteRecursively(stage)
-  }
-
-  /** registry shape of [[hourlyRollupUpdateModeWithStats]] */
-  def hourlyRollupUpdateMode(spark: org.apache.spark.sql.SparkSession,
-                             eventsPath: String): DataFrame =
-    hourlyRollupUpdateModeWithStats(spark, eventsPath)._1
-
-  /** Shared memory-sink discipline for the oracle-matched streaming runs:
-    * AvailableNow until the backlog drains, project the sink table through
-    * `shape`, materialize driver-side, then DROP the sink view in a finally
-    * — the sink holds the full result per run, and repeated calls in a
-    * long-lived session would otherwise accumulate one table per call. */
-  private def runToMemorySink(spark: org.apache.spark.sql.SparkSession,
-                              df: DataFrame, mode: OutputMode, prefix: String)
-                             (shape: DataFrame => DataFrame): DataFrame =
-    runToMemorySinkWithStats(spark, df, mode, prefix)(shape)._1
-
-  private def runToMemorySinkWithStats(spark: org.apache.spark.sql.SparkSession,
-                                       df: DataFrame, mode: OutputMode, prefix: String)
-                                      (shape: DataFrame => DataFrame): (DataFrame, StreamRunStats) = {
-    val name = s"${prefix}_${sinkCounter.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val stats = StreamRunStats(
-        batches = progress.count(_.numInputRows > 0),
-        maxStateRows = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-          .foldLeft(0L)(math.max))
-      val out = shape(spark.table(name))
-      (spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema),
-        stats)
-    } finally spark.catalog.dropTempView(name)
-  }
+        .agg(max("cnt").as("cnt"), expr("max_by(sum_value, cnt)").as("sum_value"))
+      (last.select(hourOf(col("h")).as("hour"), col("event_type"), col("cnt"),
+        col("sum_value")), stats)
+    }
 
   /** Streaming HLL cardinality: the 2^b-row register table maintained as a
-    * streaming groupBy-max (Complete mode) over file-staged micro-batches.
-    * This is the sketch's whole point at stream scale — a running
-    * distinct-count over an unbounded arrival stream with STATE BOUNDED at
-    * 2^b rows, where exact streaming distinct would grow state with the
-    * key universe. max() is commutative/idempotent, so the final streaming
-    * state equals the batch sketch EXACTLY regardless of file arrival
-    * order — which lets the batch oracle hash-check the streaming run. */
-  def hllAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                      corpus: DataFrame, b: Int = 6,
-                      numFiles: Int = 4): DataFrame = {
-    import java.nio.file.{Files => JFiles}
-    val stage = JFiles.createTempDirectory("graft_stream_hll")
-    try {
-      val src = stage.resolve("src").toString
-      corpus.select("text").repartition(math.max(1, numFiles))
-        .write.mode("overwrite").parquet(src)
-      val raw = spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1") // one staged file per micro-batch
-        .parquet(src)
-      val regs = graft.ops.Sketches.hllRho(raw, col("text"), b)
+    * streaming groupBy-max (Complete mode) over file-staged micro-batches
+    * (doc-id slices). This is the sketch's whole point at stream scale — a
+    * running distinct-count over an unbounded arrival stream with STATE
+    * BOUNDED at 2^b rows, where exact streaming distinct would grow state
+    * with the key universe. max() is commutative/idempotent, so the final
+    * streaming state equals the batch sketch EXACTLY regardless of file
+    * arrival order — which lets the batch oracle hash-check the streaming
+    * run. */
+  def hllAvailableNow(spark: SparkSession, corpus: DataFrame, b: Int = 6,
+                      numFiles: Int = 4): (DataFrame, StreamRunStats) =
+    staged(spark, "hll") { stage =>
+      stage.slices(corpus.select("doc_id", "text"), col("doc_id"), numFiles)
+      val regs = Sketches.hllRho(stage.open(), col("text"), b)
         .groupBy("register").agg(max("rho").as("max_rho"))
-      val snapshot = runToMemorySink(spark, regs, OutputMode.Complete(),
-        "graft_stream_hll")(identity)
-      graft.ops.Sketches.hllEstimate(snapshot, b)
-    } finally deleteRecursively(stage)
-  }
+      val (snapshot, stats) = stage.sink(regs, OutputMode.Complete())
+      (Sketches.hllEstimate(snapshot, b), stats)
+    }
 
   /** Streaming Count-Min: the depth×width counter grid maintained as a
     * streaming groupBy-SUM (Complete mode) — the frequency twin of
@@ -451,26 +387,15 @@ object StreamingIngest {
     * snapshot equals the batch sketch exactly regardless of arrival
     * order; point estimates read the snapshot with the same batch
     * lookup. */
-  def cmsAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                      corpus: DataFrame, depth: Int = 4, width: Int = 256,
-                      numFiles: Int = 4): DataFrame = {
-    import java.nio.file.{Files => JFiles}
-    val stage = JFiles.createTempDirectory("graft_stream_cms")
-    try {
-      val src = stage.resolve("src").toString
-      corpus.select("text").repartition(math.max(1, numFiles))
-        .write.mode("overwrite").parquet(src)
-      val raw = spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+  def cmsAvailableNow(spark: SparkSession, corpus: DataFrame, depth: Int = 4,
+                      width: Int = 256, numFiles: Int = 4): (DataFrame, StreamRunStats) =
+    staged(spark, "cms") { stage =>
+      stage.slices(corpus.select("doc_id", "text"), col("doc_id"), numFiles)
       // the batch builder's projection+aggregate IS valid streaming SQL —
       // one code path for both triggers (the chunkStream discipline)
-      val words = raw.select(explode(graft.ops.Dedup.wordsArray("text")).as("w"))
-      val terms = graft.ops.Sketches.cmsSketch(words, col("w"), depth, width)
-      runToMemorySink(spark, terms, OutputMode.Complete(),
-        "graft_stream_cms")(identity)
-    } finally deleteRecursively(stage)
-  }
+      val words = stage.open().select(explode(Dedup.wordsArray("text")).as("w"))
+      stage.sink(Sketches.cmsSketch(words, col("w"), depth, width), OutputMode.Complete())
+    }
 
   final case class SessionState(count: Long, lastTs: Long)
   final case class SessionUpdate(userId: Long, events: Long, closed: Boolean)
@@ -566,65 +491,38 @@ object StreamingIngest {
   }
 
   /** Oracle-matched AvailableNow run of [[sessionizeWithTimeout]] over a
-    * batch events table, driven as a REAL multi-batch stream (same staging
-    * discipline as [[attributionAvailableNowWithStats]]): events are staged
-    * as `numFiles` event-time-ordered parquet files read one per trigger,
-    * so per-user session state lives ACROSS micro-batches and the watermark
+    * batch events table, driven as a REAL multi-batch stream: events are
+    * staged as `numFiles` event-time slices read one per trigger, so
+    * per-user session state lives ACROSS micro-batches and the watermark
     * both admits in-order arrivals and times out idle sessions batch-by-
-    * batch. Two SENTINEL files (user_id = −1, event time past every real
-    * session's `lastTs + gap + delay`) are appended after the slices: the
-    * first advances the watermark past every real timeout, the second
-    * triggers a batch in which those timeouts FIRE — so the run emits every
-    * session the batch gaps-and-islands query derives, without relying on
-    * trailing no-data micro-batches. Sentinel rows are filtered out of the
-    * result; emission is complete-and-exact vs the batch oracle because
-    * arrival is event-time-ordered (order is load-bearing, as in the
-    * attribution run). */
-  def sessionizeAvailableNowWithStats(spark: org.apache.spark.sql.SparkSession,
-                                      events: DataFrame,
-                                      gapMs: Long = 30L * 60 * 1000,
-                                      watermarkDelayMs: Long = 30L * 60 * 1000,
-                                      numFiles: Int = 6): (DataFrame, StreamRunStats) = {
-    import java.nio.file.{Files => JFiles}
-    val stage = JFiles.createTempDirectory("graft_stream_sess")
-    val src = stage.resolve("src")
-    JFiles.createDirectories(src)
-    try {
-      val ev = events.select("user_id", "ts")
-      stageTimeSlicesInto(ev, "ts", stage, src, numFiles)
-      val hiUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-      (1 to 2).foreach { i =>
-        val sentinelUs = hiUs + (gapMs + watermarkDelayMs) * 1000L + i * 60_000_000L
-        val tmp = stage.resolve(s"sentinel_$i").toString
-        spark.sql(
-            s"SELECT CAST(-1 AS BIGINT) AS user_id, timestamp_micros(${sentinelUs}L) AS ts")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        moveSinglePartInto(java.nio.file.Paths.get(tmp),
-          src.resolve(f"events_${numFiles + i}%04d.parquet"),
-          1_000_000_000_000L + (numFiles + i) * 60_000L)
-      }
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1") // ONE staged file per micro-batch
-        .parquet(src.toString)
-      import spark.implicits._
-      val sessions = sessionizeWithTimeout(
-          raw.select(col("user_id"), col("ts"))
-            .as[(Long, java.sql.Timestamp)],
-          gapMs, s"$watermarkDelayMs milliseconds")
-        .filter(_.userId >= 0L) // drop the watermark-advancing sentinels
-      runToMemorySinkWithStats(spark, sessions.toDF(), OutputMode.Append(),
-        "graft_stream_sess")(identity)
-    } finally deleteRecursively(stage)
-  }
-
-  /** [[sessionizeAvailableNowWithStats]] without the run stats. */
-  def sessionizeAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                             events: DataFrame,
+    * batch. Two SENTINEL slices (user_id = −1, event time past every real
+    * session's `lastTs + gap + delay`) are staged after them: the first
+    * advances the watermark past every real timeout, the second triggers a
+    * batch in which those timeouts FIRE — so the run emits every session
+    * the batch gaps-and-islands query derives, without relying on trailing
+    * no-data micro-batches. Sentinel rows are filtered out of the result;
+    * emission is complete-and-exact vs the batch oracle because arrival is
+    * event-time-ordered (order is load-bearing, as in the attribution
+    * run). */
+  def sessionizeAvailableNow(spark: SparkSession, events: DataFrame,
                              gapMs: Long = 30L * 60 * 1000,
                              watermarkDelayMs: Long = 30L * 60 * 1000,
-                             numFiles: Int = 6): DataFrame =
-    sessionizeAvailableNowWithStats(spark, events, gapMs, watermarkDelayMs,
-      numFiles)._1
+                             numFiles: Int = 6): (DataFrame, StreamRunStats) =
+    staged(spark, "sess") { stage =>
+      val (_, hiUs) = stage.slices(events.select("user_id", "ts"), unix_micros(col("ts")),
+        numFiles)
+      (1 to 2).foreach { i =>
+        val sentinelUs = hiUs + (gapMs + watermarkDelayMs) * 1000L + i * 60_000_000L
+        stage.slice(spark.range(1).select(lit(-1L).as("user_id"),
+          timestamp_micros(lit(sentinelUs)).as("ts")))
+      }
+      import spark.implicits._
+      val sessions = sessionizeWithTimeout(
+          stage.open().select(col("user_id"), col("ts")).as[(Long, java.sql.Timestamp)],
+          gapMs, s"$watermarkDelayMs milliseconds")
+        .filter(_.userId >= 0L) // drop the watermark-advancing sentinels
+      stage.sink(sessions.toDF(), OutputMode.Append())
+    }
 
   /** Watermarked stream-stream inner join — the streaming twin of the batch
     * as-of/attribution join (`ops/TimeJoins`): each `click` joins follow-up
@@ -652,37 +550,19 @@ object StreamingIngest {
         col("action_ts"), col("action_type"))
   }
 
-  /** Per-run stats of a streaming query: micro-batches that processed input
-    * and the PEAK buffered state-store rows across the run. The spec gates
-    * on both — batches > 1 proves state crossed batch boundaries, peak <
-    * input rows proves the watermark actually evicted instead of buffering
-    * the whole corpus. */
-  final case class StreamRunStats(batches: Long, maxStateRows: Long,
-                                  maxBatchWallSec: Double = 0.0)
-
   /** JVM-lifetime temp dirs (returned-result parquet that must outlive the
     * producing call): ONE shutdown hook, a shared queue of dirs — repeated
     * invocations must not each register their own hook */
   private val jvmLifetimeDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
   private lazy val jvmLifetimeHook: Unit = {
     sys.addShutdownHook {
-      jvmLifetimeDirs.iterator().asScala.foreach(deleteTreeQuietly)
+      jvmLifetimeDirs.iterator().asScala.foreach(d => Try(deleteTree(d)))
     }
     ()
   }
 
-  /** best-effort recursive delete; the Files.walk Stream is CLOSED (it holds
-    * an open directory handle per level — leaking one per engine-session
-    * result-dir rotation was the ADVICE r12 finding) */
-  private def deleteTreeQuietly(d: java.nio.file.Path): Unit =
-    try {
-      val s = java.nio.file.Files.walk(d)
-      try s.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-  private def registerJvmLifetimeDir(dir: java.nio.file.Path): Unit = {
+  private def registerJvmLifetimeDir(dir: Path): Unit = {
     jvmLifetimeHook
     jvmLifetimeDirs.add(dir): Unit
   }
@@ -696,9 +576,9 @@ object StreamingIngest {
     * caller consume a result before re-running its producer); all live
     * dirs are still swept by the shutdown hook. */
   private val namedResultDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def claimResultDir(name: String): java.nio.file.Path = {
-    val fresh = java.nio.file.Files.createTempDirectory(s"graft_${name}_out")
+    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+  private def claimResultDir(name: String): Path = {
+    val fresh = Files.createTempDirectory(s"graft_${name}_out")
     registerJvmLifetimeDir(fresh)
     // claim-then-delete runs inside compute(), so it is atomic PER NAME:
     // two concurrent claims of the same name serialize on the map bin and
@@ -713,7 +593,7 @@ object StreamingIngest {
     namedResultDirs.compute(name, (_, prev) => {
       if (prev != null) {
         jvmLifetimeDirs.remove(prev): Unit
-        deleteTreeQuietly(prev)
+        Try(deleteTree(prev)): Unit // best effort: a stuck predecessor must not fail this run
       }
       fresh
     })
@@ -721,16 +601,16 @@ object StreamingIngest {
   }
 
   /** test-visible probe: the live result dir claimed under `name`, if any */
-  private[graft] def currentResultDir(name: String): Option[java.nio.file.Path] =
+  private[graft] def currentResultDir(name: String): Option[Path] =
     Option(namedResultDirs.get(name))
 
   /** Oracle-matched AvailableNow run of [[clickAttributionJoin]] over a
     * batch events table, driven as a REAL multi-batch stream: events are
-    * staged as `numFiles` event-time-ordered parquet files (equal time
-    * spans, strictly increasing mtimes) and read with maxFilesPerTrigger=1,
-    * so the join's buffered state lives ACROSS micro-batches and the
-    * watermark evicts it batch-by-batch as event time advances — the
-    * semantics a stream-stream join exists to provide, exercised for real.
+    * staged as `numFiles` event-time slices (equal time spans, strictly
+    * increasing mtimes) read one per trigger, so the join's buffered state
+    * lives ACROSS micro-batches and the watermark evicts it batch-by-batch
+    * as event time advances — the semantics a stream-stream join exists to
+    * provide, exercised for real.
     *
     * Emission stays complete (= the batch join exactly) because arrival is
     * event-time-ordered across files: a click buffered at time T is only
@@ -738,56 +618,32 @@ object StreamingIngest {
     * action with action_ts ≤ T + windowMs has already arrived (the
     * watermark trails the max arrived ts by the full window). Out-of-order
     * staging would forfeit this guarantee — order is load-bearing here.
-    *
-    * The staging copy is deleted before returning — it is real data, not
-    * the rollup's symlink. Returns (user_id, click_ts, action_ts,
-    * action_type). */
-  def attributionAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                              events: DataFrame,
+    * Returns (user_id, click_ts, action_ts, action_type). */
+  def attributionAvailableNow(spark: SparkSession, events: DataFrame,
                               windowMs: Long = 10L * 60 * 1000,
-                              numFiles: Int = 4): DataFrame =
-    attributionAvailableNowWithStats(spark, events, windowMs, numFiles)._1
-
-  /** [[attributionAvailableNow]] plus the run's [[StreamRunStats]]. */
-  def attributionAvailableNowWithStats(spark: org.apache.spark.sql.SparkSession,
-                                       events: DataFrame,
-                                       windowMs: Long = 10L * 60 * 1000,
-                                       numFiles: Int = 4): (DataFrame, StreamRunStats) = {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val stage = JFiles.createTempDirectory("graft_stream_attrib")
-    val src = stage.resolve("src")
-    JFiles.createDirectories(src)
-    try {
-      val ev = events.select("user_id", "ts", "event_type")
-      stageTimeSlicesInto(ev, "ts", stage, src, numFiles)
-      // read schema from the staged files themselves: write and read sides
-      // stay coupled by construction if the events schema ever drifts
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1") // ONE staged file per micro-batch
-        .parquet(src.toString)
-      val joined = clickAttributionJoin(
-        raw.filter(col("event_type") === "click"),
-        raw.filter(col("event_type") =!= "click"), windowMs)
-      runToMemorySinkWithStats(spark, joined, OutputMode.Append(),
-        "graft_stream_attrib")(identity)
-    } finally deleteRecursively(stage)
-  }
+                              numFiles: Int = 4): (DataFrame, StreamRunStats) =
+    staged(spark, "attrib") { stage =>
+      stage.slices(events.select("user_id", "ts", "event_type"), unix_micros(col("ts")),
+        numFiles)
+      val raw = stage.open()
+      stage.sink(clickAttributionJoin(raw.filter(col("event_type") === "click"),
+        raw.filter(col("event_type") =!= "click"), windowMs), OutputMode.Append())
+    }
 
   /** Streaming exact dedup run AvailableNow over a batch corpus, driven as
-    * a REAL multi-batch stream (same staging discipline as
-    * [[attributionAvailableNowWithStats]]): docs are staged as `numFiles`
-    * event-time-ordered parquet files (ts = base + doc_id seconds —
-    * synthetic but strictly increasing and unique, so doc-id order IS
-    * arrival order) and read one file per trigger, so the fingerprint state
-    * built in batch k drops re-arrivals in batch k+n. This is the streaming
-    * twin of the exact-dedup groupBy (`ops/Dedup.exactDupGroups`): on an
-    * unbounded corpus a lifetime dedup set is impossible, and
-    * `dropDuplicatesWithinWatermark` keys state on the fingerprint and
-    * EXPIRES entries once the watermark passes them — state follows the
-    * window, never the corpus. Here the delay exceeds the staged corpus's
-    * synthetic time span, so the run equals global first-wins dedup — which
-    * is what the DuckDB oracle hash-checks; the expiry semantics (bounded
-    * state, expired keys re-admitted) are spec-gated in StreamingSpec.
+    * a REAL multi-batch stream: docs are staged as `numFiles` doc-id slices
+    * (ts = base + doc_id seconds — synthetic but strictly increasing and
+    * unique, so doc-id order IS arrival order) and read one slice per
+    * trigger, so the fingerprint state built in batch k drops re-arrivals
+    * in batch k+n. This is the streaming twin of the exact-dedup groupBy
+    * (`ops/Dedup.exactDupGroups`): on an unbounded corpus a lifetime dedup
+    * set is impossible, and `dropDuplicatesWithinWatermark` keys state on
+    * the fingerprint and EXPIRES entries once the watermark passes them —
+    * state follows the window, never the corpus. Here the delay exceeds
+    * the staged corpus's synthetic time span, so the run equals global
+    * first-wins dedup — which is what the DuckDB oracle hash-checks; the
+    * expiry semantics (bounded state, expired keys re-admitted) are
+    * spec-gated in StreamingSpec.
     *
     * The output keeps only fingerprint-DETERMINED columns: the fp itself
     * and the length of the NORMALIZED text (the exact string the
@@ -798,70 +654,33 @@ object StreamingIngest {
     * same fp can differ in raw length by whitespace/case) would be
     * nondeterministic; only columns the fp functionally determines are
     * safe. */
-  def exactDedupAvailableNowWithStats(spark: org.apache.spark.sql.SparkSession,
-                                      corpus: DataFrame, numFiles: Int = 4,
-                                      watermarkDelay: String = "90 days"): (DataFrame, StreamRunStats) = {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val stage = JFiles.createTempDirectory("graft_stream_dedup")
-    val src = stage.resolve("src")
-    JFiles.createDirectories(src)
-    try {
+  def exactDedupAvailableNow(spark: SparkSession, corpus: DataFrame, numFiles: Int = 4,
+                             watermarkDelay: String = "90 days"): (DataFrame, StreamRunStats) =
+    staged(spark, "dedup") { stage =>
       // synthetic event time: 2025-01-01 + doc_id seconds (unique per row)
-      val ev = corpus.select(col("doc_id"), col("text"))
-        .withColumn("ts", timestamp_seconds(lit(1735689600L) + col("doc_id")))
-      val Array(lo, hi) = ev.agg(min(col("doc_id")), max(col("doc_id")))
-        .collect()(0) match { case r => Array(r.getLong(0), r.getLong(1)) }
-      val n = math.max(1, numFiles)
-      val span = math.max(1L, (hi - lo) / n + 1)
-      (0 until n).foreach { i =>
-        val tmp = stage.resolve(s"slice_$i").toString
-        ev.filter(col("doc_id") >= lo + i * span && col("doc_id") < lo + (i + 1) * span)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val listing = JFiles.list(Paths.get(tmp)) // requires close (handle leak)
-        val found = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-        try {
-          val part = listing.iterator()
-          while (part.hasNext) { val p = part.next(); if (p.toString.endsWith(".parquet")) found += p }
-        } finally listing.close()
-        val dest = src.resolve(f"docs_$i%04d.parquet")
-        JFiles.move(found.head, dest, StandardCopyOption.REPLACE_EXISTING)
-        // mtime order = event-time order, so FileStreamSource discovery
-        // replays arrival in doc-id order (same trick as the attribution run)
-        JFiles.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-      }
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1") // ONE staged file per micro-batch
-        .parquet(src.toString)
-      val deduped = raw
+      stage.slices(corpus.select(col("doc_id"), col("text"),
+        timestamp_seconds(lit(1735689600L) + col("doc_id")).as("ts")), col("doc_id"), numFiles)
+      val deduped = stage.open()
         .withColumn("fingerprint", graft.ops.TextAnalysis.fingerprint(col("text")))
         .withWatermark("ts", watermarkDelay)
         .dropDuplicatesWithinWatermark("fingerprint")
-      runToMemorySinkWithStats(spark, deduped, OutputMode.Append(),
-        "graft_stream_dedup")(
-        _.select(col("fingerprint").as("fp"),
-          length(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
-            .cast("long").as("text_len")))
-    } finally deleteRecursively(stage)
-  }
-
-  def exactDedupAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                             corpus: DataFrame, numFiles: Int = 4,
-                             watermarkDelay: String = "90 days"): DataFrame =
-    exactDedupAvailableNowWithStats(spark, corpus, numFiles, watermarkDelay)._1
+        .select(col("fingerprint").as("fp"),
+          length(trim(regexp_replace(lower(col("text")), "\\s+", " "))).cast("long")
+            .as("text_len"))
+      stage.sink(deduped, OutputMode.Append())
+    }
 
   /** Streaming INCREMENTAL near-dup dedup — the continuous-ingest shape of
-    * `d_delta_dedup`: each micro-batch (one staged doc-id-ordered file per
-    * trigger, same discipline as the other AvailableNow runs) runs inside
-    * foreachBatch as
+    * `d_delta_dedup`: each micro-batch (one staged doc-id slice per
+    * trigger) runs inside the [[Stage.drain]] as
     *
     *   1. candidates of the batch against everything indexed SO FAR
     *      ([[graft.store.MinhashIndexStore.deltaCandidates]]: broadcast the
     *      batch's bands onto the stored band table) plus in-batch banding;
     *   2. exact Jaccard verify, shingling ONLY candidate-touched docs
     *      (point-lookups into the accumulated doc store, never a rescan);
-    *   3. append the verified pairs to the output, the batch to the doc
-    *      store, and the batch's signatures to the index
+    *   3. append the verified pairs to the output and the batch's
+    *      signatures to the index
     *      ([[graft.store.MinhashIndexStore.appendBatch]]).
     *
     * Per-batch cost follows |batch| + |candidates| — the 100 TB posture: a
@@ -870,256 +689,98 @@ object StreamingIngest {
     * exactly once, in the batch where its LATER member arrives — so the
     * union over batches equals the full-corpus banded LSH pairs at the same
     * threshold, which is what the e2e oracle (d_stream_delta_dedup)
-    * hash-checks. Returns (id_a, id_b, jaccard) materialized driver-side;
-    * all staging/index/store state lives under a fresh temp dir, deleted on
-    * return (each invocation is a self-contained run). */
-  def incrementalDedupAvailableNowWithStats(spark: org.apache.spark.sql.SparkSession,
-                                            corpus: DataFrame,
-                                            threshold: Double = 0.5,
-                                            numFiles: Int = 4): (DataFrame, StreamRunStats) = {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val stage = JFiles.createTempDirectory("graft_stream_delta")
-    val src = stage.resolve("src")
-    JFiles.createDirectories(src)
-    val indexDir = stage.resolve("mh-index").toString
-    val docsDir = stage.resolve("docs").toString
-    val pairsDir = stage.resolve("pairs").toString
-    try {
-      val ev = corpus.select(col("doc_id"), col("text"))
-      val Array(lo, hi) = ev.agg(min(col("doc_id")), max(col("doc_id")))
-        .collect()(0) match { case r => Array(r.getLong(0), r.getLong(1)) }
-      val n = math.max(1, numFiles)
-      val span = math.max(1L, (hi - lo) / n + 1)
-      (0 until n).foreach { i =>
-        val tmp = stage.resolve(s"slice_$i").toString
-        ev.filter(col("doc_id") >= lo + i * span && col("doc_id") < lo + (i + 1) * span)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val listing = JFiles.list(Paths.get(tmp)) // requires close (handle leak)
-        val found = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-        try {
-          val part = listing.iterator()
-          while (part.hasNext) { val p = part.next(); if (p.toString.endsWith(".parquet")) found += p }
-        } finally listing.close()
-        val dest = src.resolve(f"docs_$i%04d.parquet")
-        JFiles.move(found.head, dest, StandardCopyOption.REPLACE_EXISTING)
-        JFiles.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-      }
-      val st = new graft.store.MinhashIndexStore(spark, indexDir,
-        nHashes = 16, bands = 4, rowsPerBand = 4)
-      var batchesWithRows = 0L
-      // foreachBatch is AT-LEAST-ONCE: a crash between sink work and
-      // checkpoint advance replays the micro-batch with the same batchId.
-      // The appends below are not naturally idempotent (index signatures,
-      // the doc store, and emitted pairs would all double), so each fully
-      // processed batchId leaves a marker and replays are skipped; the pair
-      // and doc writes additionally go to per-batch `batch=<id>`
-      // subdirectories in Overwrite mode, so even a replay of a PARTIALLY
-      // processed batch cannot duplicate them. The one remaining
-      // at-least-once window is MinhashIndexStore.appendBatch on a
-      // mid-batch crash — production closes it by keying index segments on
-      // batchId the same way.
-      val markerDir = stage.resolve("processed")
-      JFiles.createDirectories(markerDir)
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-      // per-batch wall clock on the record: the scale claim for this path
-      // is "cost follows the batch", and the stress run reads these lines
-      var maxBatchWall = 0.0
-      val q = raw.writeStream
-        .foreachBatch { (batchDF: DataFrame, batchId: Long) =>
-          val marker = markerDir.resolve(f"batch-$batchId%08d")
-          val batch = batchDF.persist()
-          val tBatch0 = System.nanoTime()
-          try {
-            // ONE count: materializes the persisted batch, gates the empty
-            // case, and is reused by the log line below (a second count
-            // purely for logging was an extra Spark job inside the timed
-            // path this line reports on)
-            val nRows = if (JFiles.exists(marker)) 0L else batch.count()
-            if (!JFiles.exists(marker) && nRows > 0) {
-              batchesWithRows += 1
-              // every block of the batch's verify (the candidate
-              // checkpoint, its cache, the routed joins' id set and pair
-              // list) belongs to one seam, closed after the pair write —
-              // else blocks leak per batch for the stream's lifetime
-              Seam.scoped { seam =>
-                val cands = seam.persist(
-                  if (st.exists) st.deltaCandidates(seam, batch)
-                  else { // first batch: no stored side yet, in-batch pairs only
-                    val sigs = st.signatures(batch)
-                    graft.ops.Dedup.lshCandidatePairs(
-                      graft.ops.Dedup.lshBands(sigs, "doc_id", "sig", 4, 4), "doc_id")
-                  })
-                if (cands.take(1).nonEmpty) {
-                  val candIds = cands.select(col("id_a").as("doc_id"))
-                    .union(cands.select(col("id_b").as("doc_id"))).distinct()
-                  // texts of candidate-touched docs: this batch plus point
-                  // lookups into the accumulated doc store
-                  val lookup =
-                    if (new java.io.File(docsDir).exists)
-                      batch.select("doc_id", "text")
-                        .unionByName(spark.read.parquet(docsDir).select("doc_id", "text"))
-                    else batch.select("doc_id", "text")
-                  // count-and-route like the batch twin: broadcast only a
-                  // measured-bounded id set, shuffle-semi otherwise
-                  val needed = graft.ops.Dedup
-                    .routedSemiJoin(seam, lookup, candIds, "doc_id")
-                    .withColumn("ws", graft.ops.Dedup.wordsArray("text"))
-                    .withColumn("shs", graft.ops.Dedup.wordShingles("ws", 5))
-                  graft.ops.Dedup.jaccardOnPairs(seam, cands, needed, "doc_id", "shs")
-                    .filter(col("jaccard") >= threshold)
-                    .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-                }
-              }
-              batch.select("doc_id", "text").write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-              st.appendBatch(batch): Unit
-              JFiles.createFile(marker): Unit
-              val wall = (System.nanoTime() - tBatch0) / 1e9
-              if (wall > maxBatchWall) maxBatchWall = wall
-              System.err.println(
-                f"[stream-delta] batch=$batchId rows=$nRows wall=$wall%.2fs")
-            }
-          } finally batch.unpersist(): Unit
+    * hash-checks. Returns (id_a, id_b, jaccard) as a lazy scan of a
+    * per-name claimed result dir (never a driver collect: at the 100×
+    * adversarial regime the pairs are O(group²)); `maxStateRows` is the
+    * index's row count. The one at-least-once window the drain's markers
+    * leave open is appendBatch on a mid-batch crash — production closes it
+    * by keying index segments on batchId the same way. */
+  def incrementalDedupAvailableNow(spark: SparkSession, corpus: DataFrame,
+                                   threshold: Double = 0.5,
+                                   numFiles: Int = 4): (DataFrame, StreamRunStats) =
+    staged(spark, "delta") { stage =>
+      stage.slices(corpus.select("doc_id", "text"), col("doc_id"), numFiles)
+      val index = new graft.store.MinhashIndexStore(spark,
+        stage.dir.resolve("mh-index").toString, nHashes = 16, bands = 4, rowsPerBand = 4)
+      val pairsDir = stage.dir.resolve("pairs")
+      val stats = stage.drain { (batch, lookup, batchId) =>
+        // every block of the batch's verify (the candidate checkpoint, its
+        // cache, the routed joins' id set and pair list) belongs to one
+        // seam, closed after the pair write — else blocks leak per batch
+        // for the stream's lifetime
+        Seam.scoped { seam =>
+          val cands = seam.persist(
+            if (index.exists) index.deltaCandidates(seam, batch)
+            else // first batch: no stored side yet, in-batch pairs only
+              Dedup.lshCandidatePairs(
+                Dedup.lshBands(index.signatures(batch), "doc_id", "sig", 4, 4), "doc_id"))
+          if (cands.take(1).nonEmpty) {
+            val candIds = cands.select(col("id_a").as("doc_id"))
+              .union(cands.select(col("id_b").as("doc_id"))).distinct()
+            // count-and-route like the batch twin: broadcast only a
+            // measured-bounded id set, shuffle-semi otherwise
+            val needed = Dedup.routedSemiJoin(seam, lookup, candIds, "doc_id")
+              .withColumn("ws", Dedup.wordsArray("text"))
+              .withColumn("shs", Dedup.wordShingles("ws", 5))
+            Dedup.jaccardOnPairs(seam, cands, needed, "doc_id", "shs")
+              .filter(col("jaccard") >= threshold)
+              .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+          }
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("id_b",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("jaccard",
-          org.apache.spark.sql.types.DoubleType, nullable = true)))
-      // the emitted pairs STAY distributed: move the pair parquet out of
-      // the staging tree (deleted below) into a JVM-lifetime dir and hand
-      // back a lazy scan. The previous shape — collect() into a
-      // LocalRelation so the result could outlive the cleanup — was an
-      // O(all pairs) driver materialization: fine at sf scale, a
-      // multi-minute GC-bound cliff at the 100× adversarial regime (every
-      // doc in a ~100-twin group), and exactly the cost shape a 100 TB
-      // corpus would OOM the driver with.
+        index.appendBatch(batch): Unit
+      }
+      val pairSchema = StructType(Seq(
+        StructField("id_a", LongType, nullable = false),
+        StructField("id_b", LongType, nullable = false),
+        StructField("jaccard", DoubleType, nullable = true)))
       val out =
-        if (new java.io.File(pairsDir).exists) {
-          // per-name claim: re-running this query deletes the previous
-          // run's result dir — disk stays bounded by live queries, not by
-          // invocation count (the predecessor's returned handle is dead by
-          // contract once its producer re-runs)
-          val keep = claimResultDir("stream_delta")
-          JFiles.move(Paths.get(pairsDir), keep.resolve("pairs"),
-            StandardCopyOption.ATOMIC_MOVE)
-          spark.read.parquet(keep.resolve("pairs").toString)
-            .select(col("id_a").cast("long"), col("id_b").cast("long"),
-              col("jaccard").cast("double"))
-        } else spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), pairSchema)
-      (out, StreamRunStats(batches = batchesWithRows, maxStateRows = st.rowCount(),
-        maxBatchWallSec = maxBatchWall))
-    } finally deleteRecursively(stage)
-  }
-
-  def incrementalDedupAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                                   corpus: DataFrame, threshold: Double = 0.5,
-                                   numFiles: Int = 4): DataFrame =
-    incrementalDedupAvailableNowWithStats(spark, corpus, threshold, numFiles)._1
+        if (Files.exists(pairsDir)) {
+          // moved out of the stage (deleted on return) into a result dir
+          // that lives until this query runs again
+          val keep = claimResultDir("stream_delta").resolve("pairs")
+          Files.move(pairsDir, keep, StandardCopyOption.ATOMIC_MOVE)
+          spark.read.schema(pairSchema).parquet(keep.toString)
+            .select(col("id_a"), col("id_b"), col("jaccard")) // drops `batch`
+        } else spark.createDataFrame(java.util.Collections.emptyList[Row](), pairSchema)
+      (out, stats.copy(maxStateRows = index.rowCount()))
+    }
 
   /** Streaming twin of the INCREMENTAL CLEANING FUNNEL — the
     * d_stream_delta_dedup pattern lifted to the whole quality → exact →
-    * near-dup → decontamination pipeline: the corpus replays as
-    * event-time-ordered staged files (ascending doc_id slices, one per
-    * trigger — the id ordering is what makes first-wins monotone across
-    * micro-batches), each foreachBatch cleans the arriving batch against
-    * the persisted [[graft.store.CleanStateStore]] via
-    * `applyBatch` and folds it in via `absorb`, including the
-    * revocation edge (a later batch's holdout docs can retract earlier
-    * survivors). State bootstraps from an EMPTY rebuild, so batch 0 runs
-    * the same delta protocol as every other batch (spec-pinned: the first
-    * batch against empty state IS the batch funnel).
+    * near-dup → decontamination pipeline: the corpus replays as ascending
+    * doc_id slices, one per trigger — the id ordering is what makes
+    * first-wins monotone across micro-batches — and each batch of the
+    * [[Stage.drain]] is cleaned against the persisted
+    * [[graft.store.CleanStateStore]] via `applyBatch` and folded in via
+    * `absorb`, including the revocation edge (a later batch's holdout docs
+    * can retract earlier survivors). State bootstraps from an EMPTY
+    * rebuild, so batch 0 runs the same delta protocol as every other batch
+    * (spec-pinned: the first batch against empty state IS the batch
+    * funnel).
     *
     * The final survivor set equals the batch funnel on the whole corpus —
     * the e_stream_pipeline oracle hash-checks exactly that (same
-    * CleaningCtes as d_corpus_pipeline/d_delta_pipeline).
-    *
-    * At-least-once discipline matches the dedup twin: absorb's appends are
-    * not idempotent, so each fully processed batchId leaves a marker and
-    * replays are skipped; the accumulated doc store (the candidate-verify
-    * lookup side) writes per-batch subdirectories in Overwrite mode.
-    * Survivors are moved to a per-name claimed result dir and returned as
-    * a lazy scan (never a driver collect). */
-  def cleanPipelineAvailableNow(spark: org.apache.spark.sql.SparkSession,
-                                corpus: DataFrame,
+    * CleaningCtes as d_corpus_pipeline/d_delta_pipeline). Survivors are
+    * written to a per-name claimed result dir and returned as a lazy scan
+    * (never a driver collect). */
+  def cleanPipelineAvailableNow(spark: SparkSession, corpus: DataFrame,
                                 isHoldout: Column,
-                                numFiles: Int = 4): DataFrame = {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val stage = JFiles.createTempDirectory("graft_stream_pipe")
-    val src = stage.resolve("src")
-    JFiles.createDirectories(src)
-    val stateDir = stage.resolve("clean-state").toString
-    val docsDir = stage.resolve("docs").toString
-    try {
-      val ev = corpus.select(col("doc_id"), col("text"))
-      val Array(lo, hi) = ev.agg(min(col("doc_id")), max(col("doc_id")))
-        .collect()(0) match { case r => Array(r.getLong(0), r.getLong(1)) }
-      val n = math.max(1, numFiles)
-      val span = math.max(1L, (hi - lo) / n + 1)
-      (0 until n).foreach { i =>
-        val tmp = stage.resolve(s"slice_$i").toString
-        ev.filter(col("doc_id") >= lo + i * span && col("doc_id") < lo + (i + 1) * span)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val listing = JFiles.list(Paths.get(tmp))
-        val found = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-        try {
-          val part = listing.iterator()
-          while (part.hasNext) { val p = part.next(); if (p.toString.endsWith(".parquet")) found += p }
-        } finally listing.close()
-        val dest = src.resolve(f"docs_$i%04d.parquet")
-        JFiles.move(found.head, dest, StandardCopyOption.REPLACE_EXISTING)
-        JFiles.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
+                                numFiles: Int = 4): (DataFrame, StreamRunStats) =
+    staged(spark, "pipe") { stage =>
+      val docs = corpus.select("doc_id", "text")
+      stage.slices(docs, col("doc_id"), numFiles)
+      val st = new graft.store.CleanStateStore(spark,
+        stage.dir.resolve("clean-state").toString)
+      st.rebuild(docs.filter(lit(false)), isHoldout) // empty bootstrap
+      val stats = stage.drain { (batch, lookup, _) =>
+        Seam.scoped(seam => st.absorb(st.applyBatch(seam, batch, lookup, isHoldout)))
       }
-      val st = new graft.store.CleanStateStore(spark, stateDir)
-      st.rebuild(ev.filter(lit(false)), isHoldout) // empty bootstrap
-      val markerDir = stage.resolve("processed")
-      JFiles.createDirectories(markerDir)
-      val raw = spark.readStream.schema(spark.read.parquet(src.toString).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src.toString)
-      val q = raw.writeStream
-        .foreachBatch { (batchDF: DataFrame, batchId: Long) =>
-          val marker = markerDir.resolve(f"batch-$batchId%08d")
-          val batch = batchDF.persist()
-          try {
-            val nRows = if (JFiles.exists(marker)) 0L else batch.count()
-            if (!JFiles.exists(marker) && nRows > 0) {
-              // the candidate-verify lookup side: this batch plus the
-              // accumulated doc store (point lookups at scale)
-              val full =
-                if (new java.io.File(docsDir).exists)
-                  batch.unionByName(
-                    spark.read.parquet(docsDir).select("doc_id", "text"))
-                else batch
-              Seam.scoped(seam => st.absorb(st.applyBatch(seam, batch, full, isHoldout)))
-              batch.write.mode("overwrite").parquet(s"$docsDir/batch=$batchId")
-              JFiles.createFile(marker): Unit
-              System.err.println(s"[stream-pipe] batch=$batchId rows=$nRows " +
-                s"survivors=${st.stageCounts()._5}")
-            }
-          } finally batch.unpersist(): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // hand the survivors back OUTSIDE the staging tree (deleted below)
-      val keep = claimResultDir("stream_pipeline")
-      st.survivors().write.mode("overwrite")
-        .parquet(keep.resolve("survivors").toString)
-      spark.read.parquet(keep.resolve("survivors").toString)
-        .select(col("doc_id").cast("long"))
-    } finally deleteRecursively(stage)
-  }
+      val keep = claimResultDir("stream_pipeline").resolve("survivors").toString
+      val survivors = st.survivors()
+      survivors.write.parquet(keep)
+      (spark.read.schema(survivors.schema).parquet(keep).select(col("doc_id").cast("long")),
+        stats)
+    }
 
   /** run the streaming ingest over a directory of text files using
     * AvailableNow (incremental batch), writing chunk parquet + checkpoint */
@@ -1131,7 +792,7 @@ object StreamingIngest {
       .option("path", outPath)
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
   }

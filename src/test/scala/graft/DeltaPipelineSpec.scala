@@ -174,7 +174,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
       305L -> (words("epsilon", 10) + " " + words("mu", 20)),
       401L -> words("omega")))
     val got = graft.streaming.StreamingIngest
-      .cleanPipelineAvailableNow(spark, corpus, hold, numFiles = 4)
+      .cleanPipelineAvailableNow(spark, corpus, hold, numFiles = 4)._1
     val truth = funnel(corpus, hold)
     assert(ids(got) === ids(truth.decontaminated))
     assert(!ids(got).contains(8L), "late-arriving holdout must revoke doc 8")

@@ -400,57 +400,4 @@ class StoreSearchSpec extends AnyFunSuite {
     st.drop()
     assert(!st.exists)
   }
-
-  test("sketch store: incremental appends equal the one-shot sketches") {
-    import org.apache.spark.sql.functions._
-    import graft.ops.Sketches
-    import spark.implicits._
-    val dir = Files.createTempDirectory("sketches").toString + "/store"
-    val store = new graft.store.SketchStore(spark, dir, b = 6, depth = 4, width = 64)
-    assert(!store.exists)
-    val all = (0 until 600).map(i => (i.toLong, s"tok${i % 91} body ${i % 140}"))
-      .toDF("doc_id", "text")
-    // three mutation batches merged incrementally, each leaving no blocks
-    // behind (the batch cache and both sketch snapshots are released)
-    val census = new BlockCensus(spark)
-    for (k <- 0 until 3)
-      store.appendBatch(all.filter($"doc_id" % 3 === k))
-    assert(census.left.isEmpty, s"appends left persisted RDDs: ${census.left.mkString(",")}")
-    assert(store.exists)
-    val st = store.stats().head()
-    assert(st.getLong(0) === 3L && st.getLong(1) === 600L)
-    // HLL: stored registers == one-shot corpus sketch → identical estimate
-    val oneShot = Sketches.hllEstimate(
-      Sketches.hllRegisters(all, col("text"), 6), 6).head()
-    val stored = store.distinctEstimate().head()
-    assert(stored.getDouble(2) === oneShot.getDouble(2))
-    assert(stored.getString(3) === oneShot.getString(3))
-    // CMS: point estimates over the merged grid == one-shot grid lookups
-    val words = all.select(explode(graft.ops.Dedup.wordsArray("text")).as("w"))
-    val items = words.groupBy("w").agg(count(lit(1)).as("exact_cnt"))
-    val inc = store.frequencyEstimates(items, "w")
-      .collect().map(r => r.getAs[String]("w") -> r.getAs[Long]("cms_est")).toMap
-    val one = Sketches.cmsLookup(
-        Sketches.cmsSketch(words, col("w"), 4, 64), items, "w", 4, 64)
-      .collect().map(r => r.getAs[String]("w") -> r.getAs[Long]("cms_est")).toMap
-    assert(inc === one)
-    // estimates stay one-sided after merging
-    store.frequencyEstimates(items, "w").collect().foreach { r =>
-      assert(r.getAs[Long]("cms_est") >= r.getAs[Long]("exact_cnt"))
-    }
-
-    // a root in the pre-log layout (hll/, cms/, stats/ directly under the
-    // root) reads as absent; the next append rebuilds it from that batch
-    val legacyDir = Files.createTempDirectory("sketches-legacy").toString + "/store"
-    val lp = java.nio.file.Paths.get(legacyDir)
-    for (sub <- Seq("hll", "cms", "stats"))
-      java.nio.file.Files.createDirectories(lp.resolve(sub))
-    val reopened = new graft.store.SketchStore(spark, legacyDir,
-      b = 6, depth = 4, width = 64)
-    assert(!reopened.exists)
-    assert(reopened.stats().count() === 0L)
-    reopened.appendBatch(all.limit(10))
-    assert(reopened.stats().head().getLong(1) === 10L)
-    assert(reopened.stats().head().getLong(0) === 1L)
-  }
 }

@@ -191,7 +191,7 @@ class StreamingSpec extends AnyFunSuite {
       (11L, "iota kappa"),
       (20L, "delta epsilon"), // batch 3: exact copy of doc 1
       (21L, "lambda mu nu")).toDF("doc_id", "text")
-    val (out, stats) = StreamingIngest.exactDedupAvailableNowWithStats(
+    val (out, stats) = StreamingIngest.exactDedupAvailableNow(
       spark, corpus, numFiles = 3)
     val fps = out.select("fp").as[String].collect().toSeq
     assert(fps.distinct.size === fps.size, "a fingerprint was emitted twice")
@@ -214,7 +214,7 @@ class StreamingSpec extends AnyFunSuite {
       (20L, base), // batch 3: exact dup of doc 0 (and near-dup of 10)
       (21L, "final filler text mentioning embeddings vectors indexes and probes for completeness sake right")
     ).toDF("doc_id", "text")
-    val (pairs, stats) = StreamingIngest.incrementalDedupAvailableNowWithStats(
+    val (pairs, stats) = StreamingIngest.incrementalDedupAvailableNow(
       spark, corpus, threshold = 0.5, numFiles = 3)
     val got = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // one-shot twin over the same corpus
@@ -249,12 +249,12 @@ class StreamingSpec extends AnyFunSuite {
       (10L, base + " tail"), // near-dup of 0, later batch
       (11L, "second filler document also long enough for shingles to exist in it okay")
     ).toDF("doc_id", "text")
-    val first = StreamingIngest.incrementalDedupAvailableNow(spark, corpus, 0.5, 2)
+    val first = StreamingIngest.incrementalDedupAvailableNow(spark, corpus, 0.5, 2)._1
     assert(first.count() > 0, "fixture must emit pairs so a result dir is claimed")
     val dir1 = StreamingIngest.currentResultDir("stream_delta")
       .getOrElse(fail("no result dir claimed by first run"))
     assert(java.nio.file.Files.exists(dir1))
-    val second = StreamingIngest.incrementalDedupAvailableNow(spark, corpus, 0.5, 2)
+    val second = StreamingIngest.incrementalDedupAvailableNow(spark, corpus, 0.5, 2)._1
     assert(second.count() > 0)
     val dir2 = StreamingIngest.currentResultDir("stream_delta")
       .getOrElse(fail("no result dir claimed by second run"))
@@ -268,7 +268,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (0 until 900).map(i => (i.toLong, s"stream text ${i % 333}"))
       .toDF("doc_id", "text")
     val streamed = StreamingIngest.hllAvailableNow(spark, corpus, b = 6,
-      numFiles = 5).head()
+      numFiles = 5)._1.head()
     val batch = Sketches.hllEstimate(
       Sketches.hllRegisters(corpus, col("text"), 6), 6).head()
     // commutative max ⇒ the streaming snapshot is bit-identical to batch
@@ -283,7 +283,7 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (0 until 400).map(i => (i.toLong, s"alpha beta w${i % 57}"))
       .toDF("doc_id", "text")
     val streamed = StreamingIngest.cmsAvailableNow(spark, corpus,
-      depth = 4, width = 64, numFiles = 3)
+      depth = 4, width = 64, numFiles = 3)._1
     val words = corpus.select(
       org.apache.spark.sql.functions.explode(
         graft.ops.Dedup.wordsArray("text")).as("w"))
@@ -383,7 +383,7 @@ class StreamingSpec extends AnyFunSuite {
       u <- 1L to 3L; s <- 0 until 4; e <- 0 until 3
     } yield (u, new Timestamp(base + u * 17_000L + s * 3_600_000L + e * 60_000L))
     val ev = rows.toDF("user_id", "ts")
-    val (out, stats) = StreamingIngest.sessionizeAvailableNowWithStats(
+    val (out, stats) = StreamingIngest.sessionizeAvailableNow(
       spark, ev, gapMs = 30L * 60000L, watermarkDelayMs = 30L * 60000L, numFiles = 5)
     val got = out.as[StreamingIngest.ClosedSession].collect()
       .map(s => (s.userId, s.startTs, s.endTs, s.events)).sorted
@@ -555,7 +555,7 @@ class StreamingSpec extends AnyFunSuite {
   test("multi-batch attribution: state crosses micro-batches, watermark evicts, result equals batch join") {
     import org.apache.spark.sql.functions._
     val events = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
-    val (result, stats) = StreamingIngest.attributionAvailableNowWithStats(
+    val (result, stats) = StreamingIngest.attributionAvailableNow(
       spark, events, windowMs = 10L * 60 * 1000, numFiles = 4)
     // a REAL multi-batch run: join state survived at least 3 batch
     // boundaries (4 staged files; a time-slice could in principle be empty)
@@ -621,12 +621,13 @@ class StreamingSpec extends AnyFunSuite {
   test("Update-mode anomaly feed: watermark bounds state across a multi-day timeline, result equals Complete twin") {
     import org.apache.spark.sql.functions._
     val eventsPath = "/root/testdata/sf0.001/events.parquet"
+    val events = graft.core.Tables.events(spark, new java.io.File(eventsPath).getParent)
     // ~30 days of events → ~531 distinct hourly windows. Complete mode
     // holds every one in state forever; the Update run stages 12
     // event-time-ordered slices (~2.5 days each), so the watermark
     // advances at every batch boundary and evicted hours leave the store.
-    val (updated, stats) = StreamingIngest.hourlyAnomalyUpdateModeWithStats(
-      spark, eventsPath, numFiles = 12)
+    val (updated, stats) = StreamingIngest.hourlyAnomalyUpdateMode(
+      spark, events, numFiles = 12)
     val totalHours = graft.core.Tables
       .events(spark, "/root/testdata/sf0.001")
       .select(date_trunc("hour", col("ts"))).distinct().count()
@@ -640,7 +641,7 @@ class StreamingSpec extends AnyFunSuite {
     // and eviction lost nothing: row-for-row equal to the Complete twin
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, Long, Double, Double)].collect().sorted.toSeq
-    val complete = StreamingIngest.hourlyAnomalyAvailableNow(spark, eventsPath)
+    val complete = StreamingIngest.hourlyAnomalyAvailableNow(spark, events)._1
     assert(rows(updated).nonEmpty)
     assert(rows(updated) === rows(complete))
   }
@@ -648,12 +649,13 @@ class StreamingSpec extends AnyFunSuite {
   test("Update-mode hourly rollup: watermark bounds state, result equals the Complete twin") {
     import org.apache.spark.sql.functions._
     val eventsPath = "/root/testdata/sf0.001/events.parquet"
+    val events = graft.core.Tables.events(spark, new java.io.File(eventsPath).getParent)
     // the rollup keys state on (window, event_type): Complete mode holds
     // every pair of the ~30-day timeline forever; the Update run drains 12
     // strict event-time slices, so evicted windows leave the store and the
     // high-water mark stays near one slice's pairs + the watermark tail
-    val (updated, stats) = StreamingIngest.hourlyRollupUpdateModeWithStats(
-      spark, eventsPath, numFiles = 12)
+    val (updated, stats) = StreamingIngest.hourlyRollupUpdateMode(
+      spark, events, numFiles = 12)
     val totalGroups = graft.core.Tables
       .events(spark, "/root/testdata/sf0.001")
       .select(date_trunc("hour", col("ts")), col("event_type"))
@@ -666,9 +668,58 @@ class StreamingSpec extends AnyFunSuite {
     // and eviction lost nothing: row-for-row equal to the Complete twin
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, String, Long, Double)].collect().sorted.toSeq
-    val complete = StreamingIngest.hourlyRollupAvailableNow(spark, eventsPath)
+    val complete = StreamingIngest.hourlyRollupAvailableNow(spark, events)._1
       .select(col("hour"), col("event_type"), col("cnt"), col("sum_value"))
     assert(rows(updated).nonEmpty)
     assert(rows(updated) === rows(complete))
+  }
+
+  test("a failing staged run rethrows and leaves no stage, stream, sink view or checkpoint") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.udf
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    // stage dirs, and the temporary checkpoints Spark creates for a query
+    // without a checkpointLocation (and keeps when the query fails)
+    def leftovers(): Set[String] = {
+      val s = Files.list(tmp)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft_stream_") || n.startsWith("temporary-")).toSet
+      finally s.close()
+    }
+    def sinkViews(): Set[String] = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_stream_")).map(_.name).toSet
+    // memory-sink run: a null user_id in the second slice fails the session
+    // decode mid-drain
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    val events = Seq[(Option[Long], Timestamp)](
+      (Some(1L), new Timestamp(t0)), (Some(1L), new Timestamp(t0 + 60000L)),
+      (None, new Timestamp(t0 + 7200000L))).toDF("user_id", "ts")
+    // foreachBatch run: the holdout predicate throws on the second slice
+    val holdout = udf((id: Long) => if (id >= 10L) sys.error("holdout check failed") else false)
+    val corpus = Seq((0L, "alpha beta gamma delta"), (10L, "epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+    val runs = Seq[() => Any](
+      () => StreamingIngest.sessionizeAvailableNow(spark, events, numFiles = 2),
+      () => StreamingIngest.cleanPipelineAvailableNow(spark, corpus,
+        holdout(col("doc_id")), numFiles = 2))
+    val before = leftovers()
+    runs.foreach { run =>
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+      assert(leftovers() -- before === Set.empty[String])
+      assert(spark.streams.active.isEmpty)
+      assert(sinkViews() === Set.empty[String])
+    }
+  }
+
+  test("staged runs over an empty input drain to empty results") {
+    val corpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val (hll, _) = StreamingIngest.hllAvailableNow(spark, corpus, b = 6, numFiles = 2)
+    val batch = graft.ops.Sketches.hllEstimate(
+      graft.ops.Sketches.hllRegisters(corpus, col("text"), 6), 6)
+    assert(hll.collect().toSeq === batch.collect().toSeq)
+    val events = Seq.empty[(Long, Timestamp, String)].toDF("user_id", "ts", "event_type")
+    val (joined, stats) = StreamingIngest.attributionAvailableNow(spark, events, numFiles = 2)
+    assert(joined.count() === 0L)
+    assert(stats.batches === 0L)
   }
 }

@@ -2,11 +2,14 @@
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
 Runs after `tools/run.sh graft.Verify <sfDir> <outDir>`:
-  python tools/check.py <sfDir> <outDir>
+  python tools/check.py <sfDir> <outDir> [name1,name2,...]
 
 For every query parquet in outDir: if oracle_sql.json has SQL for it, run the
 SQL in DuckDB (tables = the sfDir parquet files), sort both results by all
 columns (column order = sorted names), and compare values row by row.
+With the optional comma-separated list, compare exactly those queries (a
+listed name with no result dir fails), e.g. after a Verify run narrowed by
+SPARK_GRAFT_VERIFY_ONLY to the same list.
 """
 import sys, os, json, math
 import duckdb
@@ -20,7 +23,7 @@ def norm(v):
         return repr(round(v, 9))
     return str(v)
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -31,7 +34,9 @@ def main(sf_dir, out_dir):
                    if os.path.isdir(os.path.join(out_dir, d)))
     # an oracle whose result dir is missing means the query CRASHED at build
     # time — that must fail loudly, not vanish from the report
-    missing = sorted(set(oracles) - set(names))
+    missing = sorted((set(oracles) if only is None else only) - set(names))
+    if only is not None:
+        names = [n for n in names if n in only]
     n_pass = n_fail = n_rowsonly = 0
     for name in missing:
         print(f"  FAIL       {name} no result written (query crashed during Verify)")
@@ -90,4 +95,6 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = ({n.strip() for n in sys.argv[3].split(",") if n.strip()}
+            if len(sys.argv) > 3 else None)
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
