@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{PathKeys, ScopeMatch, Seam}
+import graft.core.{ChunkSchema, PathKeys, ScopeMatch, Seam}
 import graft.embed.{Embedder, HashedEmbedder}
 import graft.ingest.{DirectoryScanner, Ingest}
 import graft.search.{Bm25, HybridSearch, VectorSearch}
@@ -192,14 +192,11 @@ final class Engine(
     graft.core.DriverProbe.record("query_candidates", candidates.size.toLong, k.toLong)
     // BM25 stats are GLOBAL regardless of scope — the reference's FTS index
     // is corpus-wide and scope only restricts which rows come back — so the
-    // ad-hoc fallback (no persisted index) builds its index from the
-    // UNSCOPED table too, keeping indexed and index-less scoring identical
+    // ad-hoc fallback (no persisted index) scores the UNSCOPED table too,
+    // keeping indexed and index-less scoring identical
     def keywordScores(files: Seq[String]): Map[(String, Int), Double] =
-      describing("graft query: bm25")(Bm25.scoreTerms(ftsIndex.queryTerms(tokens, files).getOrElse {
-        val idx = Bm25.buildIndex(chunks0, Seq("filePath", "chunkIndex"),
-          Bm25.wordTokens(col("text")))
-        Bm25.queryTerms(idx.postings, idx.docLens, tokens, files, Bm25.sumStats(idx.stats))
-      }, tokens))
+      describing("graft query: bm25")(Bm25.scoreTerms(ftsIndex.queryTerms(tokens, files)
+        .getOrElse(Bm25.adHocTerms(chunks0, tokens, files)), tokens))
     val hits = HybridSearch.searchHits(candidates,
       HybridSearch.Params(limit = limit, maxDistance = maxDistance,
         weight = weight, maxFiles = maxFiles, grouping = grouping,
@@ -217,10 +214,9 @@ final class Engine(
   private def withText(chunks: DataFrame, probed: Array[Row]): Seq[HybridSearch.Hit] =
     if (probed.isEmpty) Seq.empty
     else {
-      val wanted = probed.toSeq.groupMap(_.getString(0))(_.getInt(1)).map { case (f, ixs) =>
-        col("filePath") === f && col("chunkIndex").isin(ixs: _*)
-      }.reduce(_ || _)
-      val text = chunks.filter(wanted).select("filePath", "chunkIndex", "text", "fileTitle")
+      val keys = probed.toSeq.map(p => (p.getString(0), p.getInt(1)))
+      val text = chunks.filter(ChunkSchema.keyIn(keys))
+        .select("filePath", "chunkIndex", "text", "fileTitle")
         .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
       probed.toSeq.flatMap(p => text.get((p.getString(0), p.getInt(1))).map(t =>
         HybridSearch.Hit(t.getString(0), t.getInt(1), t.getString(2), t.getString(3),

@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** The engine's one persistent table (reference `VectorChunk`,
@@ -35,4 +37,13 @@ object ChunkSchema {
     StructField("fileTitle", StringType, nullable = true),
     StructField("contentHash", StringType, nullable = true),
     StructField("timestamp", StringType, nullable = false)))
+
+  /** the rows whose (filePath, chunkIndex) key is one of `keys` (non-empty):
+    * one `filePath = f AND chunkIndex IN (…)` term per file, OR-ed. The
+    * read tools' key-set fetches (probed candidates' text, matched
+    * documents' BM25 lengths) all filter through it. */
+  def keyIn(keys: Seq[(String, Int)]): Column =
+    keys.groupMap(_._1)(_._2).map { case (f, ixs) =>
+      col("filePath") === f && col("chunkIndex").isin(ixs: _*)
+    }.reduce(_ || _)
 }

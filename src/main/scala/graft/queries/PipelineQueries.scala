@@ -815,17 +815,14 @@ object PipelineQueries {
     // ----- flagship end-to-end: ingest → embed query → hybrid search -----
     Q("rag_e2e_search",
       (s, d) => {
-        // EAGER localCheckpoint (was a lazy persist): hybrid search
-        // references the chunk table ~10× (ANN scan, BM25 postings, corpus
-        // stats, windows) and AQE submits those leaf stages concurrently —
-        // against a lazy persist they RACED to populate the same cache,
-        // each recomputing the full chunk+embed pipeline (r18 job
-        // timeline: ten concurrent ~1.1 s jobs at pass start, one
-        // pipeline's work duplicated tenfold). The checkpoint materializes
-        // the pipeline ONCE and every reference reads the leaf; it also
-        // truncates the plan the ~10 references each re-embedded at
-        // analysis time. In production the ingest output is a stored
-        // table; the checkpoint is the in-session twin. Same rows.
+        // EAGER localCheckpoint: hybrid search reads the chunk table
+        // twice (the candidate top-k, then the ad-hoc BM25 pass over the
+        // hit files), and without it each read would recompute the full
+        // chunk+embed pipeline. The checkpoint materializes the pipeline
+        // ONCE and both reads scan the leaf; it also truncates the plan
+        // each read would re-embed at analysis time. In production the
+        // ingest output is a stored table; the checkpoint is the
+        // in-session twin. Same rows.
         // The checkpoint belongs to Seam.session: Verify/Bench run
         // releaseAllBlocks (which drops checkpoint RDD blocks too) after
         // each query; the library path (api/Engine) stores chunks and

@@ -33,6 +33,13 @@ object RagQueries {
       .join(Tables.embeddings(s, d), col("doc_id") === col("vec_id"))
       .select(col("doc_id"), col("source"), col("lang"), col("text"), col("embedding"))
 
+  /** [[chunks]] keyed as `HybridSearch.search` reads them: `file` as
+    * filePath, doc_id as chunkIndex, the embedding as vector */
+  private def searchChunks(s: SparkSession, d: String, file: String): DataFrame =
+    chunks(s, d).withColumn("filePath", col(file))
+      .withColumn("chunkIndex", col("doc_id").cast("int"))
+      .withColumnRenamed("embedding", "vector")
+
   private def qv(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
@@ -54,6 +61,23 @@ object RagQueries {
        |      FROM tf, dfq, dl, st WHERE tf.tok = dfq.tok AND tf.doc_id = dl.doc_id),
        |bm AS (SELECT doc_id, sum(w) AS bm25raw FROM wt GROUP BY 1)""".stripMargin
   }
+
+  /** The hybrid queries' oracle after the candidate CTE c(doc_id, source,
+    * raw): corpus-wide BM25 for "spark join", restricted to the candidates'
+    * files, max-normalized boost, the top 10 by boosted score. */
+  private lazy val HybridTailSql: String =
+    s"""toks AS (SELECT d.doc_id, unnest(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS tok
+       |         FROM documents d, embeddings e WHERE d.doc_id = e.vec_id),
+       |${bm25Sql(Seq("spark", "join"))},
+       |fts AS (SELECT bm.* FROM bm JOIN documents dd ON bm.doc_id = dd.doc_id
+       |        WHERE dd.source IN (SELECT DISTINCT source FROM c)),
+       |mx AS (SELECT max(bm25raw) AS mkw FROM fts),
+       |fin AS (SELECT c.doc_id, c.raw,
+       |          c.raw / (1.0 + coalesce(fts.bm25raw / mx.mkw, 0.0) * 0.6) AS boosted
+       |        FROM c CROSS JOIN mx LEFT JOIN fts ON c.doc_id = fts.doc_id)
+       |SELECT doc_id, round(raw, 4) + 0.0 AS score, round(boosted, 4) + 0.0 AS boosted
+       |FROM fin ORDER BY boosted, doc_id LIMIT 10""".stripMargin
+
 
   val qs: Seq[Q] = Seq(
 
@@ -253,10 +277,7 @@ object RagQueries {
     // ----- §3.1 end-to-end: ANN 2k candidates → BM25 boost → re-rank → k -----
     Q("q_hybrid",
       (s, d) => {
-        val ch = chunks(s, d)
-          .withColumn("filePath", col("source"))
-          .withColumn("chunkIndex", col("doc_id").cast("int"))
-          .withColumnRenamed("embedding", "vector")
+        val ch = searchChunks(s, d, "source")
           .crossJoin(broadcast(qv(s, d)))
         HybridSearch.search(ch, col("qv"),
           HybridSearch.Params(limit = 10, weight = 0.6,
@@ -266,17 +287,7 @@ object RagQueries {
       },
       Some(s"""$DotCte,
               |c AS (SELECT doc_id, source, raw FROM s ORDER BY raw, source, doc_id LIMIT 20),
-              |toks AS (SELECT d.doc_id, unnest(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS tok
-              |         FROM documents d, embeddings e WHERE d.doc_id = e.vec_id),
-              |${bm25Sql(Seq("spark", "join"))},
-              |fts AS (SELECT bm.* FROM bm JOIN documents dd ON bm.doc_id = dd.doc_id
-              |        WHERE dd.source IN (SELECT DISTINCT source FROM c)),
-              |mx AS (SELECT max(bm25raw) AS mkw FROM fts),
-              |fin AS (SELECT c.doc_id, c.raw,
-              |          c.raw / (1.0 + coalesce(fts.bm25raw / mx.mkw, 0.0) * 0.6) AS boosted
-              |        FROM c CROSS JOIN mx LEFT JOIN fts ON c.doc_id = fts.doc_id)
-              |SELECT doc_id, round(raw, 4) + 0.0 AS score, round(boosted, 4) + 0.0 AS boosted
-              |FROM fin ORDER BY boosted, doc_id LIMIT 10""".stripMargin),
+              |$HybridTailSql""".stripMargin),
       bench = true),
 
     // ----- §3.1 with the PERSISTED BM25 index: same pipeline and ORACLE as
@@ -288,10 +299,7 @@ object RagQueries {
     // additionally spec-gated (OpsSpec "indexed equals ad-hoc"). -----
     Q("q_hybrid_idx",
       (s, d) => {
-        val ch = chunks(s, d)
-          .withColumn("filePath", col("source"))
-          .withColumn("chunkIndex", col("doc_id").cast("int"))
-          .withColumnRenamed("embedding", "vector")
+        val ch = searchChunks(s, d, "source")
         val dir = s"${System.getProperty("java.io.tmpdir")}/graft-fts-idx-" +
           d.replaceAll("[^a-zA-Z0-9._-]", "_")
         val fts = new graft.store.FtsIndexStore(s, dir)
@@ -312,17 +320,7 @@ object RagQueries {
       },
       Some(s"""$DotCte,
               |c AS (SELECT doc_id, source, raw FROM s ORDER BY raw, source, doc_id LIMIT 20),
-              |toks AS (SELECT d.doc_id, unnest(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS tok
-              |         FROM documents d, embeddings e WHERE d.doc_id = e.vec_id),
-              |${bm25Sql(Seq("spark", "join"))},
-              |fts AS (SELECT bm.* FROM bm JOIN documents dd ON bm.doc_id = dd.doc_id
-              |        WHERE dd.source IN (SELECT DISTINCT source FROM c)),
-              |mx AS (SELECT max(bm25raw) AS mkw FROM fts),
-              |fin AS (SELECT c.doc_id, c.raw,
-              |          c.raw / (1.0 + coalesce(fts.bm25raw / mx.mkw, 0.0) * 0.6) AS boosted
-              |        FROM c CROSS JOIN mx LEFT JOIN fts ON c.doc_id = fts.doc_id)
-              |SELECT doc_id, round(raw, 4) + 0.0 AS score, round(boosted, 4) + 0.0 AS boosted
-              |FROM fin ORDER BY boosted, doc_id LIMIT 10""".stripMargin),
+              |$HybridTailSql""".stripMargin),
       bench = true),
 
     // ----- §3.1 via the Engine's ANN route shape: persisted SRP probe
@@ -347,16 +345,12 @@ object RagQueries {
         val nCorpus = graft.core.SourceStamp.memoLong(
           s"$d/embeddings.parquet", "count")(e.count())
         if (!st.exists || st.rowCount() != nCorpus) st.rebuild(e)
-        val ch = chunks(s, d)
-          .withColumn("filePath", col("source"))
-          .withColumn("chunkIndex", col("doc_id").cast("int"))
-          .withColumnRenamed("embedding", "vector")
-        // candidate set = bucket-pruned probe top-(2·limit); recover the
-        // fileCol by a broadcast join of the ≤ 20 probe rows onto the slim
-        // (filePath, chunkIndex) projection — the engine's candidate shape
-        // hammingRadius=1: the probe reads the query's bucket plus its 8
-        // Hamming-1 neighbor partitions — still a pruned scan, ~9/256 of
-        // the index
+        val ch = searchChunks(s, d, "source")
+        // candidate set = bucket-pruned probe top-(2·limit), its filePath
+        // recovered by a broadcast join of the ≤ 20 probe rows onto the slim
+        // (filePath, chunkIndex) projection. hammingRadius=1: the probe
+        // reads the query's bucket plus its 8 Hamming-1 neighbor partitions,
+        // ~9/256 of the index
         val cand = st.probe(qArr, k = 20, hammingRadius = 1)
           .select(col("vec_id").cast("int").as("chunkIndex"), col("score"))
         val annC = ch.select("filePath", "chunkIndex")
@@ -399,26 +393,13 @@ object RagQueries {
               |    AND e.vec_id IN (SELECT b.vec_id FROM buck b, probeb WHERE b.bucket = probeb.pb)
               |  GROUP BY 1, 2),
               |c AS (SELECT doc_id, source, raw FROM sc ORDER BY raw, doc_id LIMIT 20),
-              |toks AS (SELECT d.doc_id, unnest(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS tok
-              |         FROM documents d, embeddings e WHERE d.doc_id = e.vec_id),
-              |${bm25Sql(Seq("spark", "join"))},
-              |fts AS (SELECT bm.* FROM bm JOIN documents dd ON bm.doc_id = dd.doc_id
-              |        WHERE dd.source IN (SELECT DISTINCT source FROM c)),
-              |mx AS (SELECT max(bm25raw) AS mkw FROM fts),
-              |fin AS (SELECT c.doc_id, c.raw,
-              |          c.raw / (1.0 + coalesce(fts.bm25raw / mx.mkw, 0.0) * 0.6) AS boosted
-              |        FROM c CROSS JOIN mx LEFT JOIN fts ON c.doc_id = fts.doc_id)
-              |SELECT doc_id, round(raw, 4) + 0.0 AS score, round(boosted, 4) + 0.0 AS boosted
-              |FROM fin ORDER BY boosted, doc_id LIMIT 10""".stripMargin),
+              |$HybridTailSql""".stripMargin),
       bench = true),
 
     // ----- W2/A4: per-file filter — keep chunks of the top-2 files -----
     Q("q_file_filter",
       (s, d) => {
-        val ch = chunks(s, d)
-          .withColumn("filePath", col("lang"))
-          .withColumn("chunkIndex", col("doc_id").cast("int"))
-          .withColumnRenamed("embedding", "vector")
+        val ch = searchChunks(s, d, "lang")
           .crossJoin(broadcast(qv(s, d)))
         HybridSearch.search(ch, col("qv"),
           HybridSearch.Params(limit = 20, maxFiles = Some(2)))

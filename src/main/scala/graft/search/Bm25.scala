@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * Lucene BM25 form ln(1 + (N - df + 0.5)/(df + 0.5)), which is what
   * Tantivy implements.
   *
-  * Scale shape: postings are (id, token, tf) — built by explode + groupBy
-  * (one shuffle, map-side combined). At query time only the query's tokens
-  * survive the filter (predicate pushdown), the per-token df aggregate is
-  * tiny and broadcast, and the per-doc sum is a shuffle on ids that have at
-  * least one matching token — never the full corpus.
+  * Scale shape: postings are (id, token, tf), built by explode + groupBy
+  * (one shuffle, map-side combined). A hybrid query reads only its tokens'
+  * postings (predicate pushdown) in one pass that counts each token's df
+  * and keeps the hit files' postings ([[queryTerms]]), then scores the
+  * collected terms on the driver ([[scoreTerms]]).
   */
 object Bm25 {
 
@@ -41,11 +41,6 @@ object Bm25 {
     }
     concat(grams: _*)
   }
-
-  /** (idCols..., tok, tf) postings from a tokens column */
-  def postings(docs: DataFrame, idCols: Seq[String], tokens: Column): DataFrame =
-    docs.select(idCols.map(col) :+ explode(tokens).as("tok"): _*)
-      .groupBy(idCols.map(col) :+ col("tok"): _*).agg(count(lit(1)).as("tf"))
 
   /** A prebuilt FTS index: token postings, per-doc lengths, corpus stats.
     * This is the batch-index-build shape (BASELINE's "batch index build via
@@ -77,9 +72,11 @@ object Bm25 {
   /** BM25 scores for `queryTokens` from a prebuilt index, as a lazy
     * DataFrame: only the query's postings survive the filter
     * (pushdown-friendly), per-token df is a tiny broadcast, and the per-doc
-    * sum shuffles only matching docs. The registry queries use this form
-    * through [[HybridSearch.search]]; `Engine.queryDocuments` collects the
-    * same inputs with [[queryTerms]] and scores them with [[scoreTerms]]. */
+    * sum shuffles only matching docs. No query path uses it: the hybrid
+    * search collects the same inputs with [[queryTerms]] and scores them
+    * with [[scoreTerms]]. It stays as the DataFrame reference the
+    * "indexed equals ad-hoc" spec and perfbench's `search.bm25_ms` probe
+    * call. */
   def scoreIndexed(idx: Index, idCols: Seq[String], queryTokens: Seq[String],
                    p: Params = Params()): DataFrame = {
     val idc = idCols.map(col)
@@ -143,15 +140,45 @@ object Bm25 {
     val docLens =
       if (docs.isEmpty) Map.empty[(String, Int), Long]
       else {
-        val wanted = docs.groupMap(_._1)(_._2).map { case (f, ixs) =>
-          col("filePath") === f && col("chunkIndex").isin(ixs: _*)
-        }.reduce(_ || _)
-        docLenTable.filter(wanted).select("filePath", "chunkIndex", "dl").collect()
+        docLenTable.filter(graft.core.ChunkSchema.keyIn(docs))
+          .select("filePath", "chunkIndex", "dl").collect()
           .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
       }
     graft.core.DriverProbe.record("query_keyword_postings", postings.size.toLong,
       tokens.size.toLong * docLens.size)
     QueryTerms(stats._1, stats._2, df, postings, docLens)
+  }
+
+  /** The query's BM25 inputs when no persisted index exists: the values
+    * [[queryTerms]] reads from the [[buildIndex]] of a chunk table's `text`
+    * ([[wordTokens]]; (filePath, chunkIndex) keys distinct), in one Spark
+    * job over the tokenized rows instead of three over a rebuilt index.
+    * Each partition counts its documents with tokens, their lengths and the
+    * query tokens' document frequencies, and keeps the lengths and
+    * query-token postings of the matching documents inside `files`. */
+  def adHocTerms(chunks: DataFrame, queryTokens: Seq[String],
+                 files: Seq[String]): QueryTerms = {
+    val (tokens, fileSet) = (queryTokens.toSet, files.toSet)
+    val parts = chunks.select(col("filePath"), col("chunkIndex"), wordTokens(col("text")))
+      .rdd.mapPartitions { rows =>
+        var (nDocs, sumDl) = (0L, 0L)
+        val df = scala.collection.mutable.HashMap.empty[String, Long]
+        val kept = Vector.newBuilder[((String, Int), Long, Map[String, Long])]
+        rows.foreach { r =>
+          val toks = Option(r.getSeq[String](2)).getOrElse(Nil)
+          val tf = toks.filter(tokens).groupMapReduce(identity)(_ => 1L)(_ + _)
+          if (toks.nonEmpty) { nDocs += 1L; sumDl += toks.size }
+          tf.keys.foreach(t => df(t) = df.getOrElse(t, 0L) + 1L)
+          if (tf.nonEmpty && fileSet(r.getString(0)))
+            kept += (((r.getString(0), r.getInt(1)), toks.size.toLong, tf))
+        }
+        Iterator((nDocs, sumDl, df.toMap, kept.result()))
+      }.collect()
+    val kept = parts.toSeq.flatMap(_._4)
+    QueryTerms(parts.map(_._1).sum, parts.map(_._2).sum,
+      parts.flatMap(_._3).groupMapReduce(_._1)(_._2)(_ + _),
+      kept.flatMap { case (doc, _, tf) => tf.map { case (t, n) => (doc, t, n) } },
+      kept.map { case (doc, dl, _) => doc -> dl }.toMap)
   }
 
   /** BM25 per document from collected [[QueryTerms]] — the arithmetic of
@@ -190,13 +217,11 @@ object Bm25 {
     if (queryTokens.isEmpty)
       return docs.select(idCols.map(col): _*).where(lit(false))
         .withColumn("bm25", lit(0.0))
-    // ad-hoc path, single-pass: the query's tokens are known statically, so
-    // per-token tf pivots into the SAME map-side-combined groupBy that
-    // computes doc length — one tokenize, one explode, one shuffle carrying
-    // (id, dl, tf_0..tf_k). Corpus stats AND per-token document frequencies
-    // then collapse into ONE broadcast row. (The previous shape tokenized
-    // and exploded the corpus twice — once for lengths, once for postings —
-    // and paid a second shuffle joining them back.)
+    // single pass: the query's tokens are known statically, so per-token
+    // tf pivots into the SAME map-side-combined groupBy that computes doc
+    // length — one tokenize, one explode, one shuffle carrying (id, dl,
+    // tf_0..tf_k). Corpus stats AND per-token document frequencies then
+    // collapse into ONE broadcast row.
     val idc = idCols.map(col)
     val toks = docs.select(idc :+ explode(tokens).as("tok"): _*)
     val tfCols = queryTokens.zipWithIndex.map { case (t, i) =>

@@ -1,39 +1,32 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.DriverProbe
 
 /** The hybrid query dataflow of the reference
   * (`src/vectordb/index.ts:339-431`, SURVEY §3.1). Stage order is
   * load-bearing and preserved exactly:
   *
   *   ANN top-(2·limit) → maxDistance filter → relevance-gap grouping (on raw
-  *   vector distances, BEFORE boost) → BM25 keyword boost (left join, missing
-  *   match ⇒ 0) → re-sort by boosted → per-file filter (AFTER boost) →
-  *   final limit.
+  *   vector distances, BEFORE boost) → BM25 keyword boost (missing match ⇒
+  *   0) → re-sort by boosted → per-file filter (AFTER boost) → final limit.
   *
-  * Two forms of the same dataflow, one per caller:
-  *  - [[searchHits]], the serving form `Engine.queryDocuments` uses: Spark
-  *    runs only the corpus-scale reads (the candidate top-(2·limit) and one
-  *    BM25 pass for the query's tokens), and every stage after the top-k
-  *    runs as plain Scala over the ≤ 2·limit ≤ 40 collected rows
-  *    ([[groupHits]], [[boostHits]], [[fileFilterHits]]). At that size a
-  *    Spark window, join or aggregate costs an analysis pass and a job per
-  *    stage and buys nothing.
-  *  - [[search]], the DataFrame form the registry queries (`q_hybrid*`,
-  *    `v_grouping`, `q_file_filter`, `rag_e2e_search`) and their plan pins
-  *    use: the whole dataflow as one lazy plan. Its post-top-k windows are
-  *    unpartitioned, which is deliberate on the bounded candidate set (the
-  *    reference bounds limit to 1..20, `src/vectordb/index.ts:346-348`).
-  *
-  * The Scala stages are twins of [[applyGrouping]], [[applyKeywordBoost]]
-  * and [[applyFileFilter]] — the [[graft.core.ScopeMatch]] pattern: they
-  * order rows the way Spark does and evaluate the same arithmetic in the
-  * same order (a sequential sum for the gap mean, the Welford updates of
-  * Spark's `stddev_pop`), so both forms keep the same rows.
+  * Spark runs only the corpus-scale reads: the candidate top-(2·limit) and
+  * one BM25 pass for the query's tokens. Every later stage runs once, as
+  * Scala over the ≤ 2·limit ≤ 40 collected rows ([[searchHits]]), for
+  * `Engine.queryDocuments` and the registry's [[search]] alike: at that size
+  * a Spark window, join or aggregate costs an analysis pass and a job per
+  * stage and buys nothing. The stages order rows as Spark does and evaluate
+  * Spark's arithmetic in its order (a sequential sum for the gap mean, the
+  * Welford updates of `stddev_pop`), so the oracle's window SQL keeps the
+  * same rows.
   */
 object HybridSearch {
 
@@ -51,64 +44,6 @@ object HybridSearch {
       maxFiles: Option[Int] = None,
       grouping: Option[String] = None, // "similar" | "related"
       queryTokens: Seq[String] = Seq())
-
-  /** Relevance-gap grouping (`src/vectordb/search-filters.ts:23-64`): over
-    * rows sorted asc by score, gap(i) = score(i+1) - score(i); boundary where
-    * gap > mean + 1.5·stddev_pop(gaps); group ordinal = boundaries crossed
-    * before the row; `similar` keeps group 0, `related` groups 0-1.
-    * Input is the (≤ 2·limit)-row candidate set. */
-  def applyGrouping(results: DataFrame, mode: String,
-                    scoreCol: String = "score",
-                    tiebreak: Seq[String] = Seq(),
-                    keepGroupCol: Boolean = false): DataFrame = {
-    val keepGroups = groupsKept(mode)
-    // unpartitioned window: input is the bounded (≤ 2·limit) candidate set,
-    // so a single window partition is deliberate (WindowExec's degradation
-    // warning is silenced in the mains — a constant partition key would be
-    // constant-folded away anyway)
-    val w = Window.orderBy((col(scoreCol) +: tiebreak.map(col)): _*)
-    val gaps = results.withColumn("_gap", lead(col(scoreCol), 1).over(w) - col(scoreCol))
-    val stats = gaps.filter(col("_gap").isNotNull)
-      .agg(avg("_gap").as("_mean"), stddev_pop(col("_gap")).as("_sd"))
-    gaps.crossJoin(broadcast(stats))
-      .withColumn("_boundary",
-        when(col("_gap") > col("_mean") + lit(GapStdMultiplier) * col("_sd"), 1).otherwise(0))
-      .withColumn("_grp",
-        coalesce(sum(col("_boundary"))
-          .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0)))
-      .filter(col("_grp") < keepGroups)
-      .withColumn("grp", col("_grp"))
-      .drop("_gap", "_mean", "_sd", "_boundary", "_grp")
-      .transform(df => if (keepGroupCol) df else df.drop("grp"))
-  }
-
-  /** Keyword boost (`src/vectordb/search-filters.ts:121-152`): BM25 scores
-    * max-normalized to 0-1, then boosted = score / (1 + norm·weight); rows
-    * with no keyword match keep their score (norm 0). */
-  def applyKeywordBoost(vecResults: DataFrame, ftsScores: DataFrame,
-                        joinCols: Seq[String], weight: Double,
-                        scoreCol: String = "score"): DataFrame = {
-    val mx = ftsScores.agg(max("bm25").as("_max_kw"))
-    vecResults.join(ftsScores, joinCols, "left_outer")
-      .crossJoin(broadcast(mx))
-      .withColumn("_kw_norm", coalesce(col("bm25") / col("_max_kw"), lit(0.0)))
-      .withColumn("boosted", col(scoreCol) / (lit(1.0) + col("_kw_norm") * weight))
-      .drop("bm25", "_max_kw", "_kw_norm")
-  }
-
-  /** Top-N-files filter (`src/vectordb/search-filters.ts:76-101`): rank files
-    * by their best (lowest) score, keep all chunks of the top `maxFiles`
-    * files. Runs AFTER boost — "should respect the final ranking including
-    * keyword boost" (`src/vectordb/index.ts:419-424`). */
-  def applyFileFilter(results: DataFrame, fileCol: String, maxFiles: Int,
-                      scoreCol: String = "boosted"): DataFrame = {
-    val best = results.groupBy(fileCol).agg(min(scoreCol).as("_best"))
-      .withColumn("_rank", dense_rank().over( // bounded input: ≤ 2·limit files
-        Window.orderBy(col("_best"), col(fileCol))))
-      .filter(col("_rank") <= maxFiles)
-      .select(fileCol)
-    results.join(broadcast(best), Seq(fileCol), "left_semi")
-  }
 
   /** One row of the driver-side tail — the Engine's output columns.
     * `boosted` equals `score` until [[boostHits]] sets it. */
@@ -133,16 +68,18 @@ object HybridSearch {
   private val byScore = sqlOrder(_.score)
   private val byBoosted = sqlOrder(_.boosted)
 
-  private def groupsKept(mode: String): Int = mode match {
-    case "similar" => 1
-    case "related" => 2
-    case other => throw new IllegalArgumentException(s"grouping mode: $other")
-  }
-
-  /** [[applyGrouping]] over collected rows; returns the kept rows in
-    * (score, filePath, chunkIndex) order */
-  def groupHits(hits: Seq[Hit], mode: String): Seq[Hit] = {
-    val keepGroups = groupsKept(mode)
+  /** Relevance-gap grouping (`src/vectordb/search-filters.ts:23-64`): over
+    * rows sorted asc by score, gap(i) = score(i+1) - score(i); boundary where
+    * gap > mean + 1.5·stddev_pop(gaps); group ordinal = boundaries crossed
+    * before the row; `similar` keeps group 0, `related` groups 0-1. Returns
+    * the kept rows with their group ordinal, in (score, filePath,
+    * chunkIndex) order. */
+  def groupHits(hits: Seq[Hit], mode: String): Seq[(Hit, Int)] = {
+    val keepGroups = mode match {
+      case "similar" => 1
+      case "related" => 2
+      case other => throw new IllegalArgumentException(s"grouping mode: $other")
+    }
     val sorted = hits.sorted(byScore)
     val gaps = sorted.zip(sorted.drop(1)).map { case (a, b) => b.score - a.score }
     // avg: a sequential sum over the gaps, divided by their count;
@@ -161,12 +98,14 @@ object HybridSearch {
       if (gaps.isEmpty) Double.PositiveInfinity
       else sum / n + GapStdMultiplier * math.sqrt(m2 / n)
     val groups = gaps.scanLeft(0)((grp, g) => if (g > threshold) grp + 1 else grp)
-    sorted.zip(groups).collect { case (h, grp) if grp < keepGroups => h }
+    sorted.zip(groups).filter(_._2 < keepGroups)
   }
 
-  /** [[applyKeywordBoost]] over collected rows: `bm25` holds the scores of
-    * every keyword-matching document in the hit files (the
-    * max-normalisation set), keyed by (filePath, chunkIndex) */
+  /** Keyword boost (`src/vectordb/search-filters.ts:121-152`): BM25 scores
+    * max-normalized to 0-1, then boosted = score / (1 + norm·weight); rows
+    * with no keyword match keep their score (norm 0). `bm25` holds the
+    * scores of every keyword-matching document in the hit files (the
+    * max-normalisation set), keyed by (filePath, chunkIndex). */
   def boostHits(hits: Seq[Hit], bm25: Map[(String, Int), Double],
                 weight: Double): Seq[Hit] = {
     val mx = if (bm25.isEmpty) 0.0 else bm25.values.max
@@ -176,23 +115,25 @@ object HybridSearch {
     }
   }
 
-  /** [[applyFileFilter]] over collected rows (on `boosted`); keeps the
-    * input order */
+  /** Top-N-files filter (`src/vectordb/search-filters.ts:76-101`): rank files
+    * by their best (lowest) `boosted`, keep all rows of the top `maxFiles`
+    * files, in input order. Runs AFTER boost — "should respect the final
+    * ranking including keyword boost" (`src/vectordb/index.ts:419-424`). */
   def fileFilterHits(hits: Seq[Hit], maxFiles: Int): Seq[Hit] = {
-    val bestPerFile = hits.groupBy(_.filePath).values.map(_.min(byBoosted)).toSeq
-    val kept = bestPerFile.sorted(byBoosted).take(maxFiles).map(_.filePath).toSet
+    val bestPerFile = hits.groupMapReduce(_.filePath)(identity)((a, b) => byBoosted.min(a, b))
+    val kept = bestPerFile.values.toSeq.sorted(byBoosted).take(maxFiles).map(_.filePath).toSet
     hits.filter(h => kept(h.filePath))
   }
 
-  /** The post-top-k dataflow of [[search]] over the collected candidate
-    * top-(2·limit) rows. `keywordScores` runs the BM25 pass for the hit
-    * files (after grouping, as the reference restricts its FTS query) and
-    * is called only when there are tokens and rows to boost. */
+  /** The post-top-k dataflow over the collected candidate top-(2·limit)
+    * rows. `keywordScores` runs the BM25 pass for the hit files (after
+    * grouping, as the reference restricts its FTS query) and is called only
+    * when there are tokens and rows to boost. */
   def searchHits(candidates: Seq[Hit], p: Params,
                  keywordScores: Seq[String] => Map[(String, Int), Double]): Seq[Hit] = {
     require(p.limit >= 1 && p.limit <= 20, "limit must be in 1..20") // ref: index.ts:346-348
     val inRange = p.maxDistance.fold(candidates)(md => candidates.filter(_.score <= md))
-    val grouped = p.grouping.fold(inRange)(m => groupHits(inRange, m))
+    val grouped = p.grouping.fold(inRange)(m => groupHits(inRange, m).map(_._1))
     val boosted =
       if (p.queryTokens.isEmpty || grouped.isEmpty) grouped
       else boostHits(grouped, keywordScores(grouped.map(_.filePath).distinct), p.weight)
@@ -200,56 +141,96 @@ object HybridSearch {
     filtered.sorted(byBoosted).take(p.limit)
   }
 
-  /** Full hybrid search over a chunks DataFrame with columns
-    * (filePath, chunkIndex, text, vector, ...). `queryVec` is typically a
-    * one-row broadcast column (crossJoin upstream) or a literal array. */
+  /** rows a driver-side stage collects: the candidates of the largest limit */
+  private val TailBound = 20 * CandidateMultiplier
+  private val Boosted = StructField("boosted", DoubleType, nullable = false)
+
+  /** One driver-side stage over the rows of `df`: collects them (more than
+    * [[TailBound]] fails the [[DriverProbe]] bound instead of reaching the
+    * driver), makes row i the [[Hit]] keyed `key(row, i)` (distinct) scored
+    * by `scoreCol`, and returns the rows of the hits `stage` keeps, in its
+    * order and followed by its `extra` column values, as a local DataFrame. */
+  private def onHits(df: DataFrame, scoreCol: String, key: (Row, Int) => (String, Int),
+                     extra: Seq[StructField])(stage: Seq[Hit] => Seq[(Hit, Seq[Any])]): DataFrame = {
+    val rows = df.limit(TailBound + 1).collect()
+    DriverProbe.record("hybrid_tail", rows.length.toLong, TailBound)
+    val hits = rows.toSeq.zipWithIndex.map { case (r, i) =>
+      val (f, ix) = key(r, i)
+      Hit(f, ix, "", "", r.getAs[Double](scoreCol)) -> r
+    }
+    val rowOf = hits.map { case (h, r) => (h.filePath, h.chunkIndex) -> r }.toMap
+    val kept = stage(hits.map(_._1)).map { case (h, vs) =>
+      Row.fromSeq(rowOf((h.filePath, h.chunkIndex)).toSeq ++ vs)
+    }
+    df.sparkSession.createDataFrame(kept.asJava, StructType(df.schema.fields ++ extra))
+  }
+
+  /** [[groupHits]] over the rows of `results`, ordered by `scoreCol` and
+    * then `tiebreak`; `keepGroupCol` appends the group ordinal as `grp`
+    * (BIGINT). */
+  def applyGrouping(results: DataFrame, mode: String,
+                    scoreCol: String = "score",
+                    tiebreak: Seq[String] = Seq(),
+                    keepGroupCol: Boolean = false): DataFrame = {
+    // Spark sorts the rows, so each hit's chunkIndex is its rank in
+    // (score, tiebreak...) order and groupHits keeps that order
+    onHits(results.orderBy((col(scoreCol) +: tiebreak.map(col)): _*), scoreCol,
+      (_, i) => ("", i),
+      if (keepGroupCol) Seq(StructField("grp", LongType, nullable = false)) else Seq())(
+      groupHits(_, mode).map { case (h, g) => h -> (if (keepGroupCol) Seq(g.toLong) else Seq()) })
+  }
+
+  /** [[boostHits]] over the rows of `vecResults`, appending `boosted`.
+    * `joinCols` is the (file, chunk index) key of both inputs; `ftsScores`
+    * (key, `bm25`), the max-normalisation set, is collected whole. */
+  def applyKeywordBoost(vecResults: DataFrame, ftsScores: DataFrame,
+                        joinCols: Seq[String], weight: Double,
+                        scoreCol: String = "score"): DataFrame = {
+    val Seq(file, index) = joinCols
+    val bm25 = ftsScores.select(col(file), col(index), col("bm25")).collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    onHits(vecResults, scoreCol, (r, _) => (r.getAs[String](file), r.getAs[Int](index)),
+      Seq(Boosted))(
+      boostHits(_, bm25, weight).map(h => h -> Seq(h.boosted)))
+  }
+
+  /** [[fileFilterHits]] over the rows of `results`, ranking the files of
+    * `fileCol` (a string column) by their best `scoreCol`. */
+  def applyFileFilter(results: DataFrame, fileCol: String, maxFiles: Int,
+                      scoreCol: String = "boosted"): DataFrame =
+    onHits(results, scoreCol, (r, i) => (r.getAs[String](fileCol), i), Seq())(
+      fileFilterHits(_, maxFiles).map(_ -> Seq()))
+
+  /** Full hybrid search over a chunks DataFrame with columns (filePath,
+    * chunkIndex, text, vector, ...): [[searchHits]] over the collected
+    * candidate top-(2·limit). Returns the kept candidate rows (the input
+    * columns and `score`) with `boosted` appended, in (boosted, filePath,
+    * chunkIndex) order, as a local DataFrame. `queryVec` is typically a
+    * column of a broadcast one-row frame joined upstream, or a literal array.
+    * `annCandidates` swaps the exact top-k scan for a persisted ANN index's
+    * (filePath, chunkIndex, score) candidates (scope-filtered, ≤ 2·limit
+    * rows), broadcast back onto the chunk table. BM25 reads `ftsIndex`, or
+    * without one scores `chunks` ad hoc ([[Bm25.adHocTerms]]). */
   def search(chunks: DataFrame, queryVec: Column, p: Params,
-             fileCol: String = "filePath", indexCol: String = "chunkIndex",
-             textColName: String = "text",
              ftsIndex: Option[Bm25.Index] = None,
              annCandidates: Option[DataFrame] = None): DataFrame = {
     require(p.limit >= 1 && p.limit <= 20, "limit must be in 1..20") // ref: index.ts:346-348
-    val tiebreak = Seq(fileCol, indexCol)
-    // `annCandidates` swaps the exact top-k scan for a precomputed
-    // (fileCol, indexCol, score) candidate set from a persisted ANN index
-    // (already scope-filtered, ≤ 2·limit rows by construction) — broadcast
-    // back onto the chunk table to recover the text/title columns the later
-    // stages and the final projection need. Every stage downstream is
-    // identical between the two routes.
-    val cand0 = annCandidates match {
-      case Some(c) => chunks.join(broadcast(c), Seq(fileCol, indexCol))
+    val ids = Seq("filePath", "chunkIndex")
+    val candidates = annCandidates match {
+      case Some(c) => chunks.join(broadcast(c), ids)
       case None => VectorSearch.topK(chunks, queryVec, p.limit * CandidateMultiplier,
-        scoreCol = "score", tiebreak = tiebreak)
+        tiebreak = ids)
     }
-    val cand1 = p.maxDistance.map(md => cand0.filter(col("score") <= md)).getOrElse(cand0)
-    val cand2 = p.grouping.map(m => applyGrouping(cand1, m, tiebreak = tiebreak)).getOrElse(cand1)
-    val boosted =
-      if (p.queryTokens.isEmpty) cand2.withColumn("boosted", col("score"))
-      else {
-        // BM25 with global corpus stats; results restricted to vector-hit
-        // files -- the reference's `IN (vector-hit files)` predicate
-        // (`src/vectordb/index.ts:395-400`); max-normalization then runs
-        // over exactly that restricted set (`search-filters.ts:121-135`).
-        // With no `ftsIndex` (the registry's stateless queries) the
-        // postings and stats are recomputed from `chunks` per query.
-        // NB: rename the hit-file key before the semi join — hitFiles and
-        // ftsAll share lineage (both derive from `chunks`), and a same-name
-        // self-join would resolve to a trivially-true condition, silently
-        // un-restricting the max-normalization to the whole corpus.
-        val hitFiles = cand2.select(col(fileCol).as("_hit_file")).distinct()
-        // a prebuilt index (FtsIndexStore) skips per-query corpus
-        // tokenization; the ad-hoc path computes the same values inline
-        val ftsAll = ftsIndex match {
-          case Some(idx) => Bm25.scoreIndexed(idx, Seq(fileCol, indexCol), p.queryTokens)
-          case None => Bm25.score(chunks, Seq(fileCol, indexCol),
-            Bm25.wordTokens(col(textColName)), p.queryTokens)
-        }
-        val fts = ftsAll.join(broadcast(hitFiles),
-          col(fileCol) === col("_hit_file"), "left_semi")
-        applyKeywordBoost(cand2, fts, Seq(fileCol, indexCol), p.weight)
-      }
-    val reSorted = boosted.orderBy((col("boosted") +: tiebreak.map(col)): _*)
-    val filtered = p.maxFiles.map(n => applyFileFilter(reSorted, fileCol, n)).getOrElse(reSorted)
-    filtered.orderBy((col("boosted") +: tiebreak.map(col)): _*).limit(p.limit)
+    // BM25 with global corpus stats, restricted to the hit files -- the
+    // reference's `IN (vector-hit files)` predicate
+    // (`src/vectordb/index.ts:395-400`); max-normalization then runs over
+    // exactly that restricted set (`search-filters.ts:121-135`)
+    def keywordScores(files: Seq[String]): Map[(String, Int), Double] =
+      Bm25.scoreTerms(ftsIndex.fold(Bm25.adHocTerms(chunks, p.queryTokens, files))(idx =>
+        Bm25.queryTerms(idx.postings, idx.docLens, p.queryTokens, files,
+          Bm25.sumStats(idx.stats))), p.queryTokens)
+    onHits(candidates, "score",
+      (r, _) => (r.getAs[String]("filePath"), r.getAs[Int]("chunkIndex")), Seq(Boosted))(
+      searchHits(_, p, keywordScores).map(h => h -> Seq(h.boosted)))
   }
 }

@@ -30,15 +30,6 @@ object VectorSearch {
     * self-match scores exactly 0.0. */
   def dotDistance(a: Column, b: Column): Column = (lit(1.0) - dot(a, b)) + lit(0.0)
 
-  /** cosine similarity with the reference's zero-norm/dim-mismatch guard → 0
-    * (`src/chunker/semantic-chunker.ts:333-354`) */
-  def cosine(a: Column, b: Column): Column = {
-    val na = sqrt(dot(a, a))
-    val nb = sqrt(dot(b, b))
-    when(size(a) =!= size(b) || na === 0.0 || nb === 0.0, lit(0.0))
-      .otherwise(dot(a, b) / (na * nb))
-  }
-
   /** Brute-force top-k by dot distance: the correctness baseline every ANN
     * variant is checked against. `tiebreak` must reach a total order so the
     * k-th element is deterministic. Over-fetch (2× limit) is applied by the

@@ -48,8 +48,10 @@ final class FtsIndexStore(spark: SparkSession, path: String) {
     } finally { postings.unpersist(); docLens.unpersist() }
   }
 
-  /** the persisted index as a [[Bm25.Index]] for the DataFrame scorer
-    * ([[Bm25.scoreIndexed]]); the one-row stats frame is local */
+  /** the persisted index as a [[Bm25.Index]] (its one-row stats frame is
+    * local), for callers that hold an index rather than this store: the
+    * registry's hybrid queries pass it to `HybridSearch.search`, and the
+    * DataFrame reference scorer [[Bm25.scoreIndexed]] reads it */
   def load(): Option[Bm25.Index] = {
     val m = log.latest()
     if (m.isEmpty) None

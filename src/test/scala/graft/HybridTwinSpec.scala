@@ -8,25 +8,26 @@ import graft.search.HybridSearch
 import graft.search.HybridSearch.Hit
 
 /** The driver-side hybrid tail (`groupHits`, `boostHits`,
-  * `fileFilterHits`) against its DataFrame twins (`applyGrouping`,
-  * `applyKeywordBoost`, `applyFileFilter`) on seeded random candidate sets
-  * plus the edge cases: ties, one row, equal gaps, an empty set, no keyword
-  * hits. Rows must match exactly; boosted scores within 1e-12. */
+  * `fileFilterHits`) against an independent reference: each stage's oracle
+  * SQL from the registry queries that check it against DuckDB (`v_grouping`'s
+  * lead / `stddev_pop` / running-boundary grouping, `q_hybrid`'s boost
+  * formula, `q_file_filter`'s `dense_rank`), run with `spark.sql` over the
+  * candidate set as a temp view. Seeded random candidate sets plus the edge
+  * cases: ties, one row, equal gaps, an empty set, no keyword hits. Rows and
+  * group ordinals must match exactly; boosted scores within 1e-12. */
 class HybridTwinSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(2)
-  private val Ids = Seq("filePath", "chunkIndex")
 
-  private def df(hits: Seq[Hit]): DataFrame = {
+  /** `hits` as the temp view `c(filePath, chunkIndex, score, boosted)` */
+  private def view(name: String, hits: Seq[Hit]): Unit = {
     val sp = spark
     import sp.implicits._
     hits.map(h => (h.filePath, h.chunkIndex, h.score, h.boosted))
-      .toDF("filePath", "chunkIndex", "score", "boosted")
+      .toDF("filePath", "chunkIndex", "score", "boosted").createOrReplaceTempView(name)
   }
 
-  private def rows(d: DataFrame, scoreCol: String): Seq[(String, Int, Double)] =
-    d.select("filePath", "chunkIndex", scoreCol).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq.sortBy(r => (r._1, r._2))
+  private def sql(q: String): DataFrame = spark.sql(q.stripMargin)
 
   /** a candidate set of `n` rows over a few files; `tied` draws scores
     * from a small set so ties and equal gaps are common */
@@ -39,38 +40,70 @@ class HybridTwinSpec extends AnyFunSuite {
     }
   }
 
-  private def checkGrouping(hits: Seq[Hit], clue: String): Unit =
-    for (mode <- Seq("similar", "related")) {
+  private def checkGrouping(hits: Seq[Hit], clue: String): Unit = {
+    view("c", hits)
+    for ((mode, keep) <- Seq("similar" -> 1, "related" -> 2)) {
       val local = HybridSearch.groupHits(hits, mode)
-      val spark = rows(HybridSearch.applyGrouping(df(hits), mode, tiebreak = Ids), "score")
-      assert(local.map(h => (h.filePath, h.chunkIndex, h.score)).sortBy(r => (r._1, r._2)) ===
-        spark, s"$clue grouping $mode")
+        .map { case (h, g) => (h.filePath, h.chunkIndex, h.score, g.toLong) }
+      // v_grouping's oracle, over (score, filePath, chunkIndex) order
+      val want = sql(
+        s"""WITH g AS (SELECT filePath, chunkIndex, score,
+           |    lead(score) OVER (ORDER BY score, filePath, chunkIndex) - score AS gap FROM c),
+           |st AS (SELECT avg(gap) AS m, stddev_pop(gap) AS sd FROM g WHERE gap IS NOT NULL),
+           |b AS (SELECT filePath, chunkIndex, score,
+           |    CASE WHEN gap > m + 1.5 * sd THEN 1 ELSE 0 END AS boundary FROM g, st),
+           |k AS (SELECT filePath, chunkIndex, score,
+           |    coalesce(sum(boundary) OVER (ORDER BY score, filePath, chunkIndex
+           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS grp FROM b)
+           |SELECT filePath, chunkIndex, score, grp::BIGINT AS grp
+           |FROM k WHERE grp < $keep ORDER BY score, filePath, chunkIndex""")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2), r.getLong(3))).toSeq
+      assert(local === want, s"$clue grouping $mode")
     }
+  }
 
   private def checkBoost(hits: Seq[Hit], bm25: Map[(String, Int), Double],
                          clue: String): Unit = {
     val sp = spark
     import sp.implicits._
-    val fts = bm25.toSeq.map { case ((f, i), s) => (f, i, s) }.toDF("filePath", "chunkIndex", "bm25")
+    view("c", hits)
+    bm25.toSeq.map { case ((f, i), s) => (f, i, s) }.toDF("filePath", "chunkIndex", "bm25")
+      .createOrReplaceTempView("fts")
     val local = HybridSearch.boostHits(hits, bm25, 0.6)
-    val dfRows = rows(HybridSearch.applyKeywordBoost(df(hits).drop("boosted"), fts, Ids, 0.6),
-      "boosted")
-    val localRows = local.map(h => (h.filePath, h.chunkIndex, h.boosted)).sortBy(r => (r._1, r._2))
-    assert(localRows.map(r => (r._1, r._2)) === dfRows.map(r => (r._1, r._2)), clue)
-    localRows.zip(dfRows).foreach { case (a, b) =>
+      .map(h => (h.filePath, h.chunkIndex, h.boosted)).sortBy(r => (r._1, r._2))
+    // q_hybrid's oracle: max-normalized BM25, missing match ⇒ 0
+    val want = sql(
+      """WITH mx AS (SELECT max(bm25) AS mkw FROM fts)
+        |SELECT c.filePath, c.chunkIndex,
+        |  c.score / (1.0 + coalesce(fts.bm25 / mx.mkw, 0.0) * 0.6) AS boosted
+        |FROM c CROSS JOIN mx
+        |LEFT JOIN fts ON c.filePath = fts.filePath AND c.chunkIndex = fts.chunkIndex""")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
+      .toSeq.sortBy(r => (r._1, r._2))
+    assert(local.map(r => (r._1, r._2)) === want.map(r => (r._1, r._2)), clue)
+    local.zip(want).foreach { case (a, b) =>
       assert(math.abs(a._3 - b._3) <= 1e-12, s"$clue boosted ${a._3} vs ${b._3}")
     }
   }
 
-  private def checkFileFilter(hits: Seq[Hit], clue: String): Unit =
+  private def checkFileFilter(hits: Seq[Hit], clue: String): Unit = {
+    view("c", hits)
     for (maxFiles <- Seq(1, 2, 3)) {
       val local = HybridSearch.fileFilterHits(hits, maxFiles)
-      val dfRows = rows(HybridSearch.applyFileFilter(df(hits), "filePath", maxFiles), "boosted")
-      assert(local.map(h => (h.filePath, h.chunkIndex, h.boosted)).sortBy(r => (r._1, r._2)) ===
-        dfRows, s"$clue maxFiles $maxFiles")
+        .map(h => (h.filePath, h.chunkIndex, h.boosted)).sortBy(r => (r._1, r._2))
+      // q_file_filter's oracle: files ranked by their best boosted score
+      val want = sql(
+        s"""WITH best AS (SELECT filePath, min(boosted) AS b FROM c GROUP BY 1),
+           |r AS (SELECT filePath, dense_rank() OVER (ORDER BY b, filePath) AS rk FROM best)
+           |SELECT c.filePath, c.chunkIndex, c.boosted
+           |FROM c JOIN r USING (filePath) WHERE r.rk <= $maxFiles""")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
+        .toSeq.sortBy(r => (r._1, r._2))
+      assert(local === want, s"$clue maxFiles $maxFiles")
     }
+  }
 
-  test("seeded random candidate sets: twins keep the DataFrame rows") {
+  test("seeded random candidate sets: the Scala stages keep the oracle SQL's rows") {
     for (seed <- 0 until 20) {
       val rnd = new scala.util.Random(seed)
       val hits = candidates(rnd, 1 + rnd.nextInt(40), tied = seed % 3 == 0)

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{GraftSession, Seam}
+import graft.core.{GraftSession, Profile, Seam}
 import graft.queries.Registry
 
 /** Physical-plan regression guards: the scale properties argued in the
@@ -15,6 +17,30 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     Registry.byName(name).build(spark, dir).queryExecution.executedPlan.toString
+
+  /** The executed plans of every action `name`'s build runs, one string.
+    * For queries that collect a bounded intermediate on the driver (the
+    * hybrid searches return a local frame), the scale properties live in
+    * those actions' plans, not in the returned frame's. A first build warms
+    * the query's index caches (its window drains the bus before the
+    * listener registers), so only the steady-state read is captured. */
+  private def actionPlans(name: String): String = {
+    val q = Registry.byName(name)
+    Profile.window(spark.sparkContext)(q.build(spark, dir))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString): Unit
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the window's closing sentinel drains the listener bus: every action
+    // of the build has been reported once it returns
+    try Profile.window(spark.sparkContext)(q.build(spark, dir))
+    finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, s"$name ran no action")
+    plans.toArray.mkString("\n")
+  }
 
   test("predicate scan pushes filters into parquet and prunes columns") {
     val p = plan("s2_predicate_scan")
@@ -92,10 +118,11 @@ class PlanSpec extends AnyFunSuite {
   test("ANN-routed hybrid e2e: partition-pruned probe inside the full pipeline") {
     // the engine's routed read path (q_hybrid_ann): the candidate scan must
     // be the pruned index-partition read, broadcast back onto the corpus —
-    // NEVER a corpus-wide vector scan or a shuffled candidate join
-    val p = plan("q_hybrid_ann")
+    // NEVER a corpus-wide vector scan or a shuffled candidate join. The
+    // re-rank runs on the driver over the collected candidates.
+    val p = actionPlans("q_hybrid_ann")
     assert(p.contains("PartitionFilters: [") && p.contains("abucket"), p.take(2000))
-    assert(p.contains("TakeOrderedAndProject")) // probe top-k + final re-rank
+    assert(p.contains("TakeOrderedAndProject")) // the probe's top-k
     assert(p.contains("BroadcastHashJoin")) // ≤ 2·limit candidates broadcast
     assert(!p.contains("float_vector_dot(vector"), // no brute-force corpus scan:
       "corpus-wide dot product found in the ANN-routed plan") // dot runs on
@@ -133,7 +160,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("indexed BM25 probe: token filter pushed into the postings scan") {
-    val p = plan("q_hybrid_idx")
+    val p = actionPlans("q_hybrid_idx")
     // the query's tok IN (...) must reach the postings parquet as a pushed
     // filter — an unpushed filter means every probe scans the whole
     // inverted index

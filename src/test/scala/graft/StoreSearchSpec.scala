@@ -201,6 +201,14 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(HybridSearch.applyGrouping(ladder, "similar", tiebreak = Seq("filePath")).count() === 5)
   }
 
+  test("driver-side stages refuse a corpus-sized input: a 41-row frame fails the tail bound") {
+    val ladder = scoreLadder((0 until 41).map(_ * 0.01))
+    val e = intercept[IllegalArgumentException](
+      HybridSearch.applyGrouping(ladder, "related", tiebreak = Seq("filePath")))
+    assert(e.getMessage.contains("hybrid_tail materialized 41 driver rows — above its bound 40"),
+      e.getMessage)
+  }
+
   test("keyword boost: monotone (boosted <= score), no-match unchanged") {
     val vec = scoreLadder(Seq(0.2, 0.3, 0.4))
     val fts = Seq(("/f0.md", 0, 2.0), ("/f1.md", 1, 1.0))
