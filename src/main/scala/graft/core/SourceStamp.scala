@@ -136,6 +136,11 @@ object SourceStamp {
 
   /** `compute`, memoized while `dir`'s signature is unchanged in this JVM.
     * `key` distinguishes different probes derived from the same dir.
+    * ASSUMPTION: a source file whose (size, mtime-ms) pair is unchanged
+    * has unchanged content. Writers of source tables replace files or
+    * append new ones, each of which moves the pair; a rewrite that keeps
+    * both the byte count and the millisecond mtime (or sets the mtime
+    * back) is the one change the memo misses.
     * CONTRACT: `compute`'s value must be a pure function of `dir`'s
     * contents — then a signature hit is exactly as fresh as recomputing.
     * Further contracts: (a) the returned object is SHARED across hits —

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Final-stage corpus export: write a cleaned document table in the layout
   * a training-data reader wants,
   *
@@ -62,7 +64,7 @@ object CorpusWriter {
     * scanning other cells' files */
   def readCell(spark: SparkSession, outDir: String,
                split: String, lang: String, shard: Long): DataFrame =
-    spark.read.parquet(outDir)
+    Tables.openParquet(spark, outDir)
       .filter(col("split") === split && col("lang") === lang &&
         col("shard") === shard)
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Z-order (Morton-curve) multi-dimensional clustering + stats-based file
   * pruning — the data-layout half of multi-column data skipping.
   *
@@ -37,7 +39,7 @@ import org.apache.spark.sql.functions._
   * Reference scope note: the reference engine has no multi-dim layout
   * operator (its store is an embedded per-chunk vectordb); this is part of
   * the corpus-scale layer this library adds on top of the reference's
-  * query surface, alongside [[graft.store.VersionedStore]]'s manifest
+  * query surface, alongside [[graft.store.ChunkStore]]'s manifest
   * min/max skipping (single path dimension) which it generalizes.
   */
 object ZOrder {
@@ -214,7 +216,7 @@ object ZOrder {
     * of files the batch added. */
   def appendZOrdered(df: DataFrame, outDir: String, batchFiles: Int = 8): Long = {
     val spark = df.sparkSession
-    val meta = spark.read.parquet(metaDir(outDir))
+    val meta = Tables.openParquet(spark, metaDir(outDir))
       .collect().sortBy(_.getAs[Int]("ord"))
     require(meta.nonEmpty, s"no _zmeta under $outDir — not a z-ordered layout")
     val bits = meta.head.getAs[Int]("bits")
@@ -248,7 +250,7 @@ object ZOrder {
 
   /** the sidecar stats table (tiny: one row per data file) */
   def stats(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(statsDir(outDir))
+    Tables.openParquet(spark, statsDir(outDir))
 
   /** FSCK for the layout: data files the stats sidecar doesn't know
     * (an append that crashed between its data and stats writes — such
@@ -278,7 +280,7 @@ object ZOrder {
     * orphan drop is a sidecar-sized rewrite. */
   def repair(spark: SparkSession, outDir: String): (Long, Long) = {
     val (unstated, orphaned) = scrub(spark, outDir)
-    val meta = spark.read.parquet(metaDir(outDir))
+    val meta = Tables.openParquet(spark, metaDir(outDir))
       .collect().sortBy(_.getAs[Int]("ord"))
     val dims = meta.map(_.getAs[String]("dim")).toSeq
     if (orphaned.nonEmpty) {

@@ -844,19 +844,21 @@ object PipelineQueries {
     // ----- incrementally maintained materialized view over the versioned
     // chunk table (store/MaterializedView): documents land as chunk rows in
     // 8 logical files; files 0–2 then take an editing batch (deletes at
-    // doc_id%7==0, text revisions at doc_id%5==0). The per-file rollup is
-    // refreshed INCREMENTALLY — the change feed names the 3 touched
-    // groups, only their data files are re-read (manifest-stats pruned),
-    // untouched groups carry forward. The final view state is
-    // layout-invariant, so the oracle replays the edit rule over the
-    // source table directly. Store build is cached per sf dir; the first
+    // doc_id%7==0, text revisions at doc_id%5==0), one upsert per file.
+    // The per-file rollup is refreshed INCREMENTALLY after each upsert
+    // (the store's log keeps two versions) — the change feed names the
+    // touched group, only its bucket is re-read (range-pruned), untouched
+    // groups carry forward. The final view state is layout-invariant, so
+    // the oracle replays the edit rule over the source table directly. Store build is cached per sf dir and bucket
+    // layout (a cache built in another layout is never opened); the first
     // run exercises full→incremental, later runs hit the noop path and
     // read the same committed view snapshot. -----
     Q("mv_incremental",
       (s, d) => {
         val suffix = d.replaceAll("[^a-zA-Z0-9]", "_")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-mv-$suffix"
-        val store = new graft.store.VersionedStore(s, s"$root/table", numBuckets = 4)
+        val root = s"${System.getProperty("java.io.tmpdir")}/graft-mv-buckets" +
+          s"${graft.store.ChunkStore.Buckets}-$suffix"
+        val store = new graft.store.ChunkStore(s, s"$root/table")
         val mv = new graft.store.MaterializedView(s, store, s"$root/view",
           "filePath", Seq(
             count(lit(1)).as("n_chunks"),
@@ -880,7 +882,6 @@ object PipelineQueries {
             lit(null).cast("string").as("fileTitle"),
             md5(col("text")).as("contentHash"),
             lit("2026-01-01T00:00:00Z").as("timestamp"))
-          store.create()
           (0 until 8).foreach { f =>
             store.upsertFile(s"corpus/f$f.txt",
               chunkRows(docs.filter(col("doc_id") % 8 === f)))
@@ -893,6 +894,7 @@ object PipelineQueries {
           (0 to 2).foreach { f =>
             store.upsertFile(s"corpus/f$f.txt",
               chunkRows(edited.filter(col("doc_id") % 8 === f)))
+            mv.refresh()
           }
           done.createNewFile()
         }

@@ -277,8 +277,9 @@ object RagQueries {
     // ----- §3.1 end-to-end: ANN 2k candidates → BM25 boost → re-rank → k -----
     Q("q_hybrid",
       (s, d) => {
-        val ch = searchChunks(s, d, "source")
-          .crossJoin(broadcast(qv(s, d)))
+        // the top-k and the BM25 pass both read the join: materialized once
+        val ch = graft.core.Seam.session.checkpoint(searchChunks(s, d, "source")
+          .crossJoin(broadcast(qv(s, d))))
         HybridSearch.search(ch, col("qv"),
           HybridSearch.Params(limit = 10, weight = 0.6,
             queryTokens = Seq("spark", "join")))

@@ -1,10 +1,12 @@
 package graft.store
 
+import java.util.ConcurrentModificationException
 import java.util.concurrent.{ExecutionException, FutureTask}
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -15,36 +17,45 @@ import graft.core.ChunkSchema
 /** Parquet-backed chunk table with the reference's store operations
   * (`src/vectordb/index.ts`): insert, delete-by-filePath, upsert, neighbor
   * range reads, and the per-file questions — listing, status counts, the
-  * sync manifest — answered from a per-file catalog.
+  * sync manifest — answered from a per-file catalog. The reference keeps
+  * its chunks in one versioned table (LanceDB manifests, SURVEY §7 "what's
+  * hard" #2); this is that table on [[StoreLog]], in the Delta Lake layout
+  * (VLDB 2020):
   *
-  * Every mutation writes the new table into a fresh directory and
-  * publishes it with one [[StoreLog]] commit: the idiomatic, atomic
-  * replacement for the reference's delete → insert → backup/rollback dance
-  * (`src/server/index.ts:645-701`, SURVEY §7 "what's hard" #2). A crash
-  * before the commit leaves the previous version current; a reader reads
-  * the version it resolved, whatever commits meanwhile. The zero-chunk
-  * fail-fast BEFORE any write (`:635-642`) is preserved as a hard
-  * invariant.
+  *  - Rows live in [[Buckets]] buckets, bucket = hash60(filePath) mod
+  *    [[Buckets]]. A version's manifest lists, per non-empty bucket, its
+  *    `chunks` entries (directories of the bucket's rows: one, plus one per
+  *    insert since the bucket was last rewritten) and one `files` entry
+  *    (its catalog slice: one row per filePath with contentHash,
+  *    chunkCount and lastModified), each with its row count and filePath
+  *    range. `status` is the sum of the entries' counts.
+  *  - A mutation rewrites only the buckets it touches, chunks and catalog
+  *    slice, and carries every other entry by reference. Its commit is
+  *    the log's compare-and-swap: a writer that lost the race to a commit
+  *    touching none of its buckets rebases as pure manifest arithmetic;
+  *    one that overlaps reruns against the winner, within a bounded
+  *    budget. A crash before the commit leaves the previous version
+  *    current; a reader reads the version it resolved, whatever commits
+  *    meanwhile (the reference's delete → insert → backup/rollback dance,
+  *    `src/server/index.ts:645-701`, made atomic).
+  *  - The zero-chunk fail-fast BEFORE any write (`:635-642`) is a hard
+  *    invariant.
+  *  - An entry's counts and range are observed metrics of the write that
+  *    made it. The catalog is derived from the base slices plus the
+  *    mutation's delta, never from an aggregate over the chunks, except
+  *    for `insert`, which derives its slices from the rows it wrote. A
+  *    file's `contentHash` is null when its chunks carry a null hash or
+  *    more than one hash; sync treats such a file as dirty either way.
+  *  - Reads: a pruned read ([[readFiles]], neighbors) opens only the
+  *    entries whose bucket and range can hold its files; `listFiles` and
+  *    `manifest` collect the catalog once per version (one small scan
+  *    cold, none warm); past versions stay readable until vacuumed, and
+  *    [[changes]] derives a row-level feed from two versions' differing
+  *    entries.
   *
-  * The catalog (the Delta Lake pattern of per-file facts in the log): the
-  * same commit that names `chunks` names a small `files` table — one row
-  * per filePath with (contentHash, chunkCount, lastModified) — and carries
-  * the stats `n_chunks`/`n_files`, so the catalog is exact by
-  * construction. The writer derives it from the base version's catalog
-  * plus the mutation's delta, never from an aggregate over `chunks`, and
-  * the stats are observed metrics of that one write. A file's
-  * `contentHash` is null when its chunks carry a null hash or more than
-  * one hash; sync treats such a file as dirty either way. Readers answer
-  * `status` from the stats (no job) and `listFiles`/`manifest` from the
-  * collected catalog, memoized on its immutable directory (one small scan
-  * cold, none warm). A version committed before the catalog existed
-  * derives it from its chunks once, and the next commit persists it.
-  *
-  * Scale posture: one unbucketed table, rewritten whole by every mutation
-  * batch (an insert appends a directory); neighbor reads push
-  * (filePath, chunkIndex) predicates to parquet row groups. Bucket-granular
-  * copy-on-write on the same log is [[VersionedStore]]'s layout; moving
-  * this table onto it is ROADMAP.md open item 3's remaining half.
+  * A version committed in the earlier table layout (`chunks` and `files`
+  * directories, or `chunks` alone from before the catalog) still answers
+  * every read; the next mutation rewrites it into buckets.
   */
 final class ChunkStore(spark: SparkSession, path: String) {
   import ChunkStore._
@@ -53,45 +64,98 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   def exists: Boolean = !log.latest().isEmpty
 
+  /** the versions the log keeps, ascending */
+  def versions(): Seq[Long] = log.versions()
+
+  def latestVersion(): Option[Long] = log.latestVersion()
+
   def read(): DataFrame = read(log.latest())
 
+  /** the table as version `version` committed it (time travel, within the
+    * versions the log keeps) */
+  def read(version: Long): DataFrame = read(log.manifest(version))
+
   private[store] def read(m: Manifest): DataFrame =
-    if (m.dirs(Chunks).isEmpty) local(Seq.empty, ChunkSchema.schema)
-    else spark.read.schema(ChunkSchema.schema).parquet(m.dirs(Chunks).map(log.abs): _*)
+    scan(if (tableLayout(m)) m.dirs(Chunks) else paths(m, Chunks), ChunkSchema.schema)
+
+  /** the rows of `filePaths`, reading only the chunk entries whose bucket
+    * and filePath range can hold one of them */
+  def readFiles(filePaths: Seq[String]): DataFrame = {
+    val m = log.latest()
+    (if (tableLayout(m)) read(m) else scan(holding(m, filePaths).map(_.path), ChunkSchema.schema))
+      .filter(col("filePath").isInCollection(filePaths))
+  }
+
+  /** `m`'s chunk entries whose bucket and range can hold one of `filePaths` */
+  private def holding(m: Manifest, filePaths: Seq[String]): Seq[ManifestEntry] = {
+    val byBucket = filePaths.groupBy(bucketOf)
+    of(m, Chunks).filter(e => byBucket.get(e.bucket).exists(_.exists(p =>
+      utf8(e.minPath).compareTo(utf8(p)) <= 0 && utf8(p).compareTo(utf8(e.maxPath)) <= 0)))
+  }
+
+  private def scan(dirs: Seq[String], schema: StructType): DataFrame =
+    if (dirs.isEmpty) local(Seq.empty, schema)
+    else spark.read.schema(schema).parquet(dirs.map(log.abs): _*)
 
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  // ---- writes: every commit names `chunks` and `files` ----
+  /** `m`'s rows of `table` in `buckets`: their entries, or the whole table
+    * of a version in the table layout (whose every mutation touches every
+    * bucket) */
+  private def inBuckets(m: Manifest, table: String, buckets: Set[Long]): DataFrame =
+    if (tableLayout(m)) (if (table == Chunks) read(m) else catalogFrame(m))
+    else scan(of(m, table).filter(e => buckets(e.bucket)).map(_.path), schemas(table))
 
-  /** Writes `catalog` (the files columns plus a `_fresh` flag) as a fresh
-    * `files` directory. The stats, and the number of fresh rows, are
-    * observed metrics of that one write. */
-  private def writeCatalog(catalog: DataFrame): (Catalog, Long) = {
+  // ---- writes ----
+
+  /** Writes `rows` (the table's columns they carry) as one directory per
+    * bucket and returns the entries of `buckets` that got rows, plus the
+    * values of `extra`: each entry's row count and filePath range, and
+    * `extra`, are observed metrics of the one write. The write lands
+    * partitioned by bucket, and each bucket's directory then moves up
+    * beside the other data directories. `rows` may carry the bucket column
+    * already (sorted by it). */
+  private def writeBuckets(table: String, rows: DataFrame, buckets: Seq[Long],
+                           extra: Column*): (Seq[ManifestEntry], Map[String, Any]) = {
     val obs = Observation()
-    val dir = log.write(Files, catalog.observe(obs,
-        count(lit(1)).as(NFiles), coalesce(sum("chunkCount"), lit(0L)).as(NChunks),
-        count(when(col("_fresh"), 1)).as("fresh"))
-      .select(FilesSchema.fieldNames.map(col): _*))
+    val stats = count(lit(1)).as("rows") +: buckets.flatMap { b =>
+      val in = col(B) === b
+      Seq(count(when(in, 1)).as(s"n$b"), min(when(in, col("filePath"))).as(s"lo$b"),
+        max(when(in, col("filePath"))).as(s"hi$b"))
+    } ++: extra
+    val bucketed = if (rows.columns.contains(B)) rows else rows.withColumn(B, bucketCol)
+    val dir = log.write(table, bucketed.observe(obs, stats.head, stats.tail: _*)
+      .select((schemas(table).fieldNames.filter(rows.columns.contains) :+ B).map(col): _*), Seq(B))
     val m = obs.get
-    def n(k: String) = m(k).asInstanceOf[Long]
-    (Catalog(dir, Map(NChunks -> n(NChunks), NFiles -> n(NFiles))), n("fresh"))
+    def n(b: Long) = m(s"n$b").asInstanceOf[Long]
+    val fs = log.fs
+    val entries = buckets.filter(n(_) > 0).map { b =>
+      val to = s"$dir-$b"
+      if (!fs.rename(new HPath(log.abs(s"$dir/$B=$b")), new HPath(log.abs(to))))
+        throw new java.io.IOException(s"$path: could not move bucket $b of $dir")
+      ManifestEntry(table, b, to, m(s"lo$b").asInstanceOf[String], m(s"hi$b").asInstanceOf[String], n(b))
+    }
+    fs.delete(new HPath(log.abs(dir)), true)
+    (entries, m)
   }
 
-  /** Writes `kept` catalog rows plus driver-built `added` entries as one
-    * file: a filter and a union, no shuffle and no aggregate to plan —
-    * the catalog of a delete or of one file's upsert. */
-  private def writeKept(kept: DataFrame, added: Seq[Row]): Catalog =
-    writeCatalog(kept.unionByName(local(added, FilesSchema)).coalesce(1)
-      .withColumn("_fresh", lit(false)))._1
+  /** `chunks` and `files` written as `buckets`' new entries, the two writes
+    * overlapped */
+  private def rewrite(buckets: Set[Long], chunks: DataFrame, files: DataFrame)
+      : Option[(Set[Long], Seq[ManifestEntry])] = {
+    val bs = buckets.toSeq.sorted
+    val (c, f) = both(writeBuckets(Chunks, chunks, bs)._1, writeBuckets(Files, files, bs)._1)
+    Some((buckets, c ++ f))
+  }
 
   /** Runs `a` here and `b` on a fresh thread, and returns both once both
-    * finished (the first failure rethrown). A single-file mutation's table
-    * and catalog writes are independent and mostly a write job's fixed
-    * cost, so they overlap. The thread is fresh so that it inherits this
-    * thread's Spark job group, description and call site. */
-  private def both[A, B](a: => A, b: => B): (A, B) = {
-    val fb = new FutureTask[B](() => b)
+    * finished (the first failure rethrown). A mutation's table and catalog
+    * writes are independent and mostly a write job's fixed cost, so they
+    * overlap. The thread is fresh so that it inherits this thread's Spark
+    * job group, description and call site. */
+  private def both[A, C](a: => A, b: => C): (A, C) = {
+    val fb = new FutureTask[C](() => b)
     val t = new Thread(fb, "graft-store-write")
     t.setDaemon(true)
     t.start()
@@ -100,44 +164,74 @@ final class ChunkStore(spark: SparkSession, path: String) {
     (ra.get, rb.get)
   }
 
-  /** publish `chunks` and `files` as the table's next version over `base` */
-  private def publish(base: Manifest, chunks: Seq[String], files: Catalog): Unit =
-    log.publish(base, Manifest(
-      tables = Map(Chunks -> chunks, Files -> Seq(files.dir)), stats = files.stats)): Unit
+  /** Runs `write` against the latest version and commits the entries it
+    * wrote in place of its buckets' entries. A commit that lost the race
+    * rebases onto the winner when the winner changed none of those
+    * buckets, and reruns `write` against it when it did: [[MaxAttempts]]
+    * commit attempts in all. `write` returns None when there is nothing
+    * to commit. */
+  private def mutate(write: Manifest => Option[(Set[Long], Seq[ManifestEntry])]): Unit = {
+    var attempts = 0
+    var base = log.latest()
+    while (attempts < MaxAttempts) write(base) match {
+      case None => return
+      case Some((buckets, written)) =>
+        def slice(m: Manifest) = (m.tables, m.entries.filter(e => buckets(e.bucket)).toSet)
+        var cur = base
+        while (attempts < MaxAttempts && slice(cur) == slice(base)) {
+          val next = Manifest(entries = cur.entries.filterNot(e => buckets(e.bucket)) ++ written)
+          if (log.tryCommit(cur.version + 1, next)) { log.vacuum(); return }
+          attempts += 1
+          cur = log.latest()
+        }
+        base = cur
+    }
+    throw new ConcurrentModificationException(s"$path: lost $MaxAttempts commit races")
+  }
 
-  /** append-only insert: one more directory (at [[StoreLog.MaxDirs]] the
-    * table is compacted into one, that directory included). The catalog
-    * merges the new directory's rows, read back by their keys, so the
-    * caller's frame is computed once. */
-  def insert(chunks: DataFrame): Unit = {
-    val base = log.latest()
-    val added = Seq(log.write(Chunks, chunks))
-    val (files, _) = writeCatalog(merged(catalogFrame(base).withColumn("_src", lit(Replacing))
-      .unionByName(entries(read(Manifest(Map(Chunks -> added))), Replacing)).coalesce(1)))
-    val dirs = base.dirs(Chunks) ++ added
-    publish(base,
-      if (dirs.size <= StoreLog.MaxDirs) dirs
-      else Seq(log.write(Chunks, read(base.copy(tables = Map(Chunks -> dirs))))),
-      files)
+  /** Append-only insert: one more chunk entry per bucket the rows touch,
+    * written with the frame's own columns (a legacy frame without a hash
+    * or title reads them as null). When the appended entries could pass
+    * [[StoreLog.MaxDirs]] paths per read, every bucket is rewritten as one
+    * entry instead. The touched buckets' catalog slices merge the rows
+    * written, read back by their keys, so the caller's frame is computed
+    * once. */
+  def insert(chunks: DataFrame): Unit = mutate { base =>
+    val compact = tableLayout(base) || of(base, Chunks).size + Buckets > StoreLog.MaxDirs
+    val (added, _) = writeBuckets(Chunks,
+      if (!compact) chunks
+      else inBuckets(base, Chunks, AllBuckets).coalesce(1).unionByName(chunks, allowMissingColumns = true),
+      AllBuckets.toSeq.sorted)
+    val buckets = if (compact) AllBuckets else added.map(_.bucket).toSet
+    val kept = if (compact) Seq.empty else of(base, Chunks).filter(e => buckets(e.bucket))
+    val (slices, _) = writeBuckets(Files, merged(
+        (if (compact) local(Seq.empty, FilesSchema) else inBuckets(base, Files, buckets))
+          .withColumn("_src", lit(Replacing))
+          .unionByName(entries(scan(added.map(_.path), ChunkSchema.schema), Replacing))).coalesce(1),
+      buckets.toSeq.sorted)
+    Some((buckets, kept ++ added ++ slices))
   }
 
   def deleteFile(filePath: String): Unit = deleteFiles(Seq(filePath))
 
-  /** delete every row of `paths` as one table write (sync's stale-spelling
-    * and prune deletes); no paths, no commit */
-  def deleteFiles(paths: Seq[String]): Unit = if (paths.nonEmpty) {
-    val base = log.latest()
+  /** delete every row of `paths` (sync's stale-spelling and prune deletes),
+    * rewriting only their buckets; a delete no entry can hold commits
+    * nothing */
+  def deleteFiles(paths: Seq[String]): Unit = {
     val kept = !col("filePath").isin(paths: _*)
-    val (dir, files) = both(log.write(Chunks, read(base).filter(kept)),
-      writeKept(catalogFrame(base).filter(kept), Seq.empty))
-    publish(base, Seq(dir), files)
+    mutate { base =>
+      val buckets = touched(base, holding(base, paths).map(_.bucket).toSet)
+      if (buckets.isEmpty) None
+      else rewrite(buckets, inBuckets(base, Chunks, buckets).filter(kept).coalesce(1),
+        inBuckets(base, Files, buckets).filter(kept).coalesce(1))
+    }
   }
 
   /** upsert = replace all chunks of `filePath` with `newChunks`, every one
-    * of which must belong to `filePath`. Fails BEFORE any write if
-    * newChunks is empty — the reference's NoChunksError invariant. The
-    * file's catalog entry is built on the driver from the new rows'
-    * collected keys, by [[merged]]'s rule. */
+    * of which must belong to `filePath`, rewriting only its bucket. Fails
+    * BEFORE any write if newChunks is empty — the reference's
+    * NoChunksError invariant. The file's catalog entry is built on the
+    * driver from the new rows' collected keys, by [[merged]]'s rule. */
   def upsertFile(filePath: String, newChunks: DataFrame): Unit = {
     val keys = newChunks.select("filePath", "contentHash", "timestamp").collect()
     if (keys.isEmpty)
@@ -150,41 +244,60 @@ final class ChunkStore(spark: SparkSession, path: String) {
     }
     val entry = Row(filePath, hash, keys.length.toLong,
       keys.flatMap(r => Option(r.getString(2))).maxOption.orNull)
-    val base = log.latest()
     val kept = col("filePath") =!= filePath
-    val (dir, files) = both(log.write(Chunks, read(base).filter(kept)
-        .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*))),
-      writeKept(catalogFrame(base).filter(kept), Seq(entry)))
-    publish(base, Seq(dir), files)
+    mutate { base =>
+      val buckets = touched(base, Set(bucketOf(filePath)))
+      rewrite(buckets,
+        inBuckets(base, Chunks, buckets).filter(kept)
+          .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)).coalesce(1),
+        inBuckets(base, Files, buckets).filter(kept)
+          .unionByName(local(Seq(entry), FilesSchema)).coalesce(1))
+    }
   }
 
   /** Batched upsert — the sync execute path: replace all chunks of every
-    * file `newChunks` has rows for AND delete all rows of `deletePaths`, as
-    * ONE table write instead of one rewrite per file. The replace set is
-    * derived FROM the rows, so the driver never holds O(dirty files)
-    * strings. Returns the number of distinct files the rows cover (the
-    * batch's `upserted` count), observed on the catalog write. Zero-chunk
-    * semantics: a file with no rows in `newChunks` is absent from the
-    * replace set, so its existing rows survive; a prune-only batch passes
-    * empty rows. A batch that covers no file and deletes nothing commits
-    * nothing (its catalog directory is debris for the vacuum). */
+    * file `newChunks` has rows for AND delete all rows of `deletePaths`, in
+    * one commit. The replace set is derived FROM the rows, so the driver
+    * never holds O(dirty files) strings: the merged catalog is written
+    * first, and its observed per-bucket counts of fresh files (plus the
+    * deletes' buckets) name the buckets the commit rewrites. Returns the
+    * number of distinct files the rows cover (the batch's `upserted`
+    * count). Zero-chunk semantics: a file with no rows in `newChunks` is
+    * absent from the replace set, so its existing rows survive; a
+    * prune-only batch passes empty rows. A batch that covers no file and
+    * deletes nothing commits nothing (its catalog directory is debris for
+    * the vacuum). */
   def upsertFilesFromRows(newChunks: DataFrame,
                           deletePaths: Seq[String] = Seq.empty): Long = {
     import spark.implicits._
-    val base = log.latest()
     val deletes = deletePaths.map(p => Row(p, null, 0L, null))
-    val (files, produced) = writeCatalog(merged(
-      catalogFrame(base).withColumn("_src", lit(Base))
-        .unionByName(local(deletes, FilesSchema).withColumn("_src", lit(Removing)))
-        .unionByName(entries(newChunks, Replacing))))
-    if (produced == 0L && deletePaths.isEmpty) return 0L
-    // no broadcast hint: the derived key set is unbounded (every dirty file
-    // of the batch), so AQE's runtime sizing picks broadcast vs shuffled
-    // anti-join
-    val affected = newChunks.select("filePath").unionByName(deletePaths.toDF("filePath")).distinct()
-    publish(base, Seq(log.write(Chunks, read(base).join(affected, Seq("filePath"), "left_anti")
-        .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)))),
-      files)
+    val all = AllBuckets.toSeq.sorted
+    var produced = 0L
+    mutate { base =>
+      val (slices, m) = writeBuckets(Files, merged(
+          inBuckets(base, Files, AllBuckets).withColumn("_src", lit(Base))
+            .unionByName(local(deletes, FilesSchema).withColumn("_src", lit(Removing)))
+            .unionByName(entries(newChunks, Replacing))).coalesce(1),
+        all, count(when(col("_fresh"), 1)).as("fresh") +:
+          all.map(b => count(when(col("_fresh") && col(B) === b, 1)).as(s"fresh$b")): _*)
+      produced = m("fresh").asInstanceOf[Long]
+      val buckets = touched(base, all.filter(b => m(s"fresh$b").asInstanceOf[Long] > 0).toSet ++
+        deletePaths.map(bucketOf))
+      if (produced == 0L && deletePaths.isEmpty) None
+      else {
+        // no broadcast hint: the derived key set is unbounded (every dirty
+        // file of the batch), so AQE's runtime sizing picks broadcast vs
+        // shuffled anti-join. Partitioned by bucket (a count AQE keeps), so
+        // each bucket is written as one file, the buckets in parallel
+        val affected = newChunks.select("filePath").unionByName(deletePaths.toDF("filePath"))
+        val (chunks, _) = writeBuckets(Chunks,
+          inBuckets(base, Chunks, buckets).join(affected, Seq("filePath"), "left_anti")
+            .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*))
+            .withColumn(B, bucketCol).repartition(Buckets, col(B)),
+          buckets.toSeq.sorted)
+        Some((buckets, chunks ++ slices.filter(e => buckets(e.bucket))))
+      }
+    }
     produced
   }
 
@@ -192,14 +305,14 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * handler clamp `src/server/index.ts:1035-1037`): chunks of one file with
     * chunkIndex ∈ [max(0, target-before), target+after], sorted asc
     * (a contract, not incidental order), target flagged. The range is at
-    * most 101 rows, so it is collected in one Spark job and sorted on the
-    * driver; the returned DataFrame is local. */
+    * most 101 rows of one bucket, so it is collected in one Spark job and
+    * sorted on the driver; the returned DataFrame is local. */
   def neighbors(filePath: String, target: Int, before: Int = 2, after: Int = 2): DataFrame = {
     require(before >= 0 && before <= 50 && after >= 0 && after <= 50,
       "before/after must be in 0..50") // ref: tool-input.ts:195-204
     val lo = math.max(0, target - before)
     val hi = target + after
-    val range = read().filter(col("filePath") === filePath && col("chunkIndex").between(lo, hi))
+    val range = readFiles(Seq(filePath)).filter(col("chunkIndex").between(lo, hi))
       .withColumn("isTarget", col("chunkIndex") === target)
     val rows = range.collect()
     graft.core.DriverProbe.record("neighbors_range", rows.length.toLong, hi - lo + 1L)
@@ -209,22 +322,22 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   // ---- the catalog ----
 
-  /** `m`'s catalog as a Spark scan: its `files` table, or — for a version
-    * committed before the catalog existed — the same entries derived from
-    * its chunks */
+  /** `m`'s catalog as a Spark scan: its slices, its `files` table, or — for
+    * a version committed before the catalog existed — the same entries
+    * derived from its chunks */
   private def catalogFrame(m: Manifest): DataFrame =
-    if (m.dirs(Files).nonEmpty)
-      spark.read.schema(FilesSchema).parquet(m.dirs(Files).map(log.abs): _*)
-    else if (m.dirs(Chunks).isEmpty) local(Seq.empty, FilesSchema)
+    if (!tableLayout(m) || m.dirs(Files).nonEmpty)
+      scan(if (tableLayout(m)) m.dirs(Files) else paths(m, Files), FilesSchema)
     else merged(entries(read(m), Replacing)).select(FilesSchema.fieldNames.map(col): _*)
 
   /** `m`'s catalog collected and sorted by filePath, memoized on the
     * immutable directories it is read from */
   private def catalog(m: Manifest): IndexedSeq[Row] = {
-    val dirs = (if (m.dirs(Files).nonEmpty) m.dirs(Files) else m.dirs(Chunks)).map(log.abs)
+    val dirs = (if (!tableLayout(m)) paths(m, Files)
+      else if (m.dirs(Files).nonEmpty) m.dirs(Files) else m.dirs(Chunks)).map(log.abs)
     if (dirs.isEmpty) IndexedSeq.empty
     else StoreLog.memo(s"catalog@${dirs.mkString(",")}")(
-      catalogFrame(m).collect().toIndexedSeq.sortBy(r => UTF8String.fromString(r.getString(0))))
+      catalogFrame(m).collect().toIndexedSeq.sortBy(r => utf8(r.getString(0))))
   }
 
   /** the latest version's catalog (filePath, contentHash, chunkCount,
@@ -239,11 +352,12 @@ final class ChunkStore(spark: SparkSession, path: String) {
     local(catalog(log.latest()).map(r => Row(r.get(0), r.get(2), r.get(3))), ListSchema)
 
   /** status counts (reference `src/vectordb/index.ts:585-595`): (chunks,
-    * files) from the version's stats — no Spark job */
+    * files) summed over the version's entries — no Spark job */
   def status(): (Long, Long) = status(log.latest())
 
   private[store] def status(m: Manifest): (Long, Long) =
-    if (m.dirs(Files).nonEmpty) (m.stat(NChunks), m.stat(NFiles))
+    if (!tableLayout(m)) (of(m, Chunks).map(_.nRows).sum, of(m, Files).map(_.nRows).sum)
+    else if (m.dirs(Files).nonEmpty) (m.stat(NChunks), m.stat(NFiles))
     else { val c = catalog(m); (c.map(_.getLong(2)).sum, c.size.toLong) }
 
   /** manifest projection for sync (reference `listChunkHashes`,
@@ -254,26 +368,148 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   /** S12 compaction — the reference's `table.optimize()`
     * (`src/vectordb/index.ts:317-324`), called once per batch, not per
-    * file: when the latest version spans more than `maxFragments` parquet
-    * files (each insert adds files), rewrite it as one. Superseded
-    * directories go with the commit's vacuum. */
-  def optimize(maxFragments: Int = 4): Unit = {
-    val base = log.latest()
-    if (read(base).inputFiles.length > maxFragments)
-      // the catalog and its stats carry over unchanged
-      log.publish(base, base.copy(tables =
-        base.tables + (Chunks -> Seq(log.write(Chunks, read(base).coalesce(1)))))): Unit
+    * file: every bucket whose chunk entries hold more than `maxFragments`
+    * parquet files (each insert adds an entry, a batched write a file per
+    * input partition) is rewritten as one file sorted by (filePath,
+    * chunkIndex). Rows and the catalog carry over unchanged; a version in
+    * the table layout is rewritten into buckets. */
+  def optimize(maxFragments: Int = 4): Unit = mutate { base =>
+    val fs = log.fs
+    val buckets =
+      if (tableLayout(base)) AllBuckets
+      else of(base, Chunks).groupBy(_.bucket).collect { case (b, es) if es.map(e =>
+        fs.listStatus(new HPath(log.abs(e.path))).count(_.getPath.getName.endsWith(".parquet")))
+        .sum > maxFragments => b }.toSet
+    if (buckets.isEmpty) None
+    else {
+      val bs = buckets.toSeq.sorted
+      val (chunks, _) = writeBuckets(Chunks, inBuckets(base, Chunks, buckets)
+        .withColumn(B, bucketCol).repartition(Buckets, col(B))
+        .sortWithinPartitions(B, "filePath", "chunkIndex"), bs)
+      val files =
+        if (tableLayout(base)) writeBuckets(Files, catalogFrame(base).coalesce(1), bs)._1
+        else of(base, Files).filter(e => buckets(e.bucket))
+      Some((buckets, chunks ++ files))
+    }
+  }
+
+  // ---- versions ----
+
+  /** (version, chunk entries, chunk rows) of every kept version, from the
+    * manifests alone */
+  def history(): Seq[(Long, Int, Long)] = versions().map { v =>
+    val m = log.manifest(v)
+    (v, of(m, Chunks).size, status(m)._1)
+  }
+
+  /** the chunk entries version `to` reads and `from` does not, and the
+    * reverse: manifest arithmetic, no data read */
+  def diff(from: Long, to: Long): (Seq[ManifestEntry], Seq[ManifestEntry]) = {
+    val (a, b) = (of(log.manifest(from), Chunks), of(log.manifest(to), Chunks))
+    (b.filterNot(a.toSet), a.filterNot(b.toSet))
+  }
+
+  /** Row-level change feed between two versions, derived from the rows of
+    * the entries [[diff]] names (a carried entry's rows cannot have
+    * changed): chunk identity is `id`, so an id only in `to` is an
+    * insert, one in both whose contentHash differs null-safely is an
+    * update (its post-image is emitted), and one only in `from` is a
+    * delete. Returns `to`-schema rows plus `_change_type`. */
+  def changes(from: Long, to: Long): DataFrame = {
+    val (added, removed) = diff(from, to)
+    def side(v: Long, es: Seq[ManifestEntry]) = {
+      val m = log.manifest(v)
+      if (tableLayout(m)) read(m) else scan(es.map(_.path), ChunkSchema.schema)
+    }
+    val before = side(from, removed)
+    val after = side(to, added)
+    val beforeKeys = before.select(col("id"), col("contentHash").as("_old_hash"))
+    val inserts = after.join(beforeKeys.select("id"), Seq("id"), "left_anti")
+      .withColumn("_change_type", lit("insert"))
+    // null-SAFE inequality: under =!= a row with a null hash on either side
+    // would be neither insert, update nor delete
+    val updates = after.join(beforeKeys, Seq("id"))
+      .filter(!(col("contentHash") <=> col("_old_hash")))
+      .drop("_old_hash")
+      .withColumn("_change_type", lit("update_postimage"))
+    val deletes = before.join(after.select(col("id")), Seq("id"), "left_anti")
+      .withColumn("_change_type", lit("delete"))
+    inserts.unionByName(updates).unionByName(deletes)
+  }
+
+  /** The latest version's entries checked against the filesystem: each
+    * must exist and hold the row count it records. Returns the problems
+    * (empty = clean), from one column-pruned count per table. */
+  def scrub(): Seq[String] = {
+    val m = log.latest()
+    val fs = log.fs
+    val (present, missing) = m.entries.partition(e => fs.exists(new HPath(log.abs(e.path))))
+    missing.map(e => s"missing data file: ${e.path}") ++
+      present.groupBy(_.table).toSeq.flatMap { case (table, es) =>
+        val counts = scan(es.map(_.path), schemas(table))
+          .groupBy(input_file_name().as("f")).agg(count(lit(1)))
+          .collect().groupMapReduce(r => new HPath(r.getString(0)).getParent.getName)(_.getLong(1))(_ + _)
+        es.flatMap { e =>
+          val actual = counts.getOrElse(new HPath(e.path).getName, 0L)
+          if (actual == e.nRows) None
+          else Some(s"row-count drift: ${e.path} manifest=${e.nRows} actual=$actual")
+        }
+      }
+  }
+
+  /** Zero-copy shallow clone of the latest version into the empty root
+    * `dest`: its first version names this store's files by absolute path,
+    * so nothing is copied, and its writes land under `dest`. This store
+    * must keep those files while the clone reads them (the same retention
+    * contract readers rely on). */
+  def cloneTo(dest: String): ChunkStore = {
+    val m = log.latest()
+    require(!m.isEmpty, s"$path: nothing to clone")
+    val target = new StoreLog(spark, dest)
+    require(target.latestVersion().isEmpty, s"clone destination $dest is not empty")
+    require(target.tryCommit(0L, Manifest(tables = m.tables.map { case (t, ds) => t -> ds.map(log.abs) },
+      stats = m.stats, entries = m.entries.map(e => e.copy(path = log.abs(e.path))))),
+      s"concurrent writer at clone destination $dest")
+    new ChunkStore(spark, dest)
   }
 }
 
 object ChunkStore {
-  /** One written catalog: its directory and the commit's stats. */
-  private final case class Catalog(dir: String, stats: Map[String, Long])
+  /** the bucket count of the layout */
+  val Buckets = 4
+
+  private val AllBuckets: Set[Long] = (0L until Buckets).toSet
+
+  /** most commit attempts of one mutation */
+  private val MaxAttempts = 20
+
+  def bucketOf(filePath: String): Long =
+    math.floorMod(graft.ops.Dedup.hash60Scala(filePath), Buckets.toLong)
+
+  private def bucketCol: Column = pmod(graft.ops.Dedup.hash60(col("filePath")), lit(Buckets.toLong))
+
+  /** the partition column of a bucketed write */
+  private val B = "b"
 
   private val Chunks = "chunks"
   private val Files = "files"
   private val NChunks = "n_chunks"
   private val NFiles = "n_files"
+
+  /** a version committed before the bucket layout: `chunks` (and `files`)
+    * directories instead of entries */
+  private def tableLayout(m: Manifest): Boolean = m.entries.isEmpty && m.tables.nonEmpty
+
+  private def of(m: Manifest, table: String): Seq[ManifestEntry] = m.entries.filter(_.table == table)
+
+  private def paths(m: Manifest, table: String): Seq[String] = of(m, table).map(_.path)
+
+  /** the buckets a mutation of `m` rewrites: `mine`, or every bucket of a
+    * version in the table layout */
+  private def touched(m: Manifest, mine: Set[Long]): Set[Long] =
+    if (tableLayout(m)) AllBuckets else mine
+
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
   /** the `files` table: one row per stored filePath */
   private val FilesSchema: StructType = StructType(Seq(
@@ -281,6 +517,8 @@ object ChunkStore {
     StructField("contentHash", StringType),
     StructField("chunkCount", LongType, nullable = false),
     StructField("lastModified", StringType)))
+
+  private val schemas = Map(Chunks -> ChunkSchema.schema, Files -> FilesSchema)
 
   private val ListSchema = StructType(Seq(FilesSchema(0), FilesSchema(2), FilesSchema(3)))
   private val ManifestSchema = StructType(Seq(FilesSchema(0), FilesSchema(1)))

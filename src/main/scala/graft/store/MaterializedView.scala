@@ -11,15 +11,15 @@ import org.apache.spark.sql.functions._
 final case class MvRefresh(df: DataFrame, mode: String,
                            recomputedGroups: Long, storeVersion: Long)
 
-/** Incrementally maintained grouped aggregate over a [[VersionedStore]] —
+/** Incrementally maintained grouped aggregate over a [[ChunkStore]] —
   * the materialized-view pattern every warehouse keeps per-source rollups
   * with, driven here by the store's snapshot-derived change feed.
   *
   * Maintenance is PARTIAL RECOMPUTE, not +/- delta arithmetic: a refresh
   * asks the change feed which GROUP KEYS were touched between the last
   * refreshed snapshot and the current one, recomputes exactly those groups
-  * from the current snapshot (via [[VersionedStore.readFiles]], which
-  * prunes to the groups' data files through manifest stats), and carries
+  * from the current snapshot (via [[ChunkStore.readFiles]], which
+  * prunes to the groups' bucket entries through their ranges), and carries
   * every untouched group's row forward as-is. Compared to incremental
   * +/- maintenance this
   *  - supports NON-DISTRIBUTIVE aggregates (min/max/count-distinct) that
@@ -41,14 +41,14 @@ final case class MvRefresh(df: DataFrame, mode: String,
   * corpus-scale infrastructure added on top, in the same family as the
   * incremental dedup index.
   */
-final class MaterializedView(spark: SparkSession, store: VersionedStore,
+final class MaterializedView(spark: SparkSession, store: ChunkStore,
                              mvRoot: String, groupCols: Seq[String],
                              aggs: Seq[Column]) {
   require(groupCols.nonEmpty, "materialized view needs at least one group column")
   require(aggs.nonEmpty, "materialized view needs at least one aggregate")
 
   /** single-group-column convenience */
-  def this(spark: SparkSession, store: VersionedStore, mvRoot: String,
+  def this(spark: SparkSession, store: ChunkStore, mvRoot: String,
            groupCol: String, aggs: Seq[Column]) =
     this(spark, store, mvRoot, Seq(groupCol), aggs)
 
@@ -91,15 +91,16 @@ final class MaterializedView(spark: SparkSession, store: VersionedStore,
   }
 
   /** Bring the view up to the store's latest snapshot. No-op when already
-    * current; full compute on first refresh; otherwise recompute only the
-    * groups the change feed names. */
+    * current; full compute on first refresh, or when the view's last
+    * version is no longer kept by the store's log; otherwise recompute
+    * only the groups the change feed names. */
   def refresh(): MvRefresh = {
     val latest = store.latestVersion().getOrElse(
       throw new IllegalStateException("store has no snapshots to refresh from"))
     val have = refreshedVersions()
     if (have.contains(latest))
       return MvRefresh(readAt(latest), "noop", 0L, latest)
-    have.filter(_ < latest).lastOption match {
+    have.filter(_ < latest).lastOption.filter(store.versions().contains) match {
       case None =>
         write(compute(store.read()), latest)
         MvRefresh(readAt(latest), "full", -1L, latest)
@@ -130,7 +131,7 @@ final class MaterializedView(spark: SparkSession, store: VersionedStore,
           // whole current snapshot restricted to the affected keys. When
           // the LEADING group column is the store's stats dimension
           // (filePath), that restriction prunes to the groups' data files
-          // through the manifest ([[VersionedStore.readFiles]]); for any
+          // through the manifest ([[ChunkStore.readFiles]]); for any
           // other grouping the restriction is a scan-time filter — at
           // production scale you'd lay the table out (bucket/z-order) on
           // the view's leading dim to get the same pruning.

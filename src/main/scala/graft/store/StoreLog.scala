@@ -9,15 +9,16 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** One data file of a [[VersionedStore]] snapshot, with its pruning stats */
-final case class ManifestEntry(bucket: Long, path: String,
+/** One directory of one bucket of a [[ChunkStore]] table (`chunks` or its
+  * `files` catalog slice), with its row count and filePath range */
+final case class ManifestEntry(table: String, bucket: Long, path: String,
                                minPath: String, maxPath: String, nRows: Long)
 
 /** One committed version of a store: the immutable directories of every
-  * table (root-relative), the store's scalar stats, and — for
-  * [[VersionedStore]] — per-file entries with pruning stats. An empty
-  * manifest is a dropped store (or one never written); `version` is -1
-  * for the empty store that has no commit at all. */
+  * table (root-relative), the store's scalar stats, and — for the
+  * bucketed [[ChunkStore]] — its bucket entries. An empty manifest is a
+  * dropped store (or one never written); `version` is -1 for the empty
+  * store that has no commit at all. */
 final case class Manifest(tables: Map[String, Seq[String]] = Map.empty,
                           stats: Map[String, Long] = Map.empty,
                           entries: Seq[ManifestEntry] = Seq.empty,
@@ -43,7 +44,7 @@ object Manifest {
     m.stats.toSeq.sortBy(_._1).foreach { case (k, v) => stats.put(k, v) }
     val entries = root.putArray("entries")
     m.entries.foreach { e =>
-      entries.addObject().put("bucket", e.bucket).put("path", e.path)
+      entries.addObject().put("table", e.table).put("bucket", e.bucket).put("path", e.path)
         .put("min_path", e.minPath).put("max_path", e.maxPath).put("n_rows", e.nRows)
     }
     json.writeValueAsBytes(root)
@@ -59,7 +60,7 @@ object Manifest {
       tables = obj("tables").map { case (t, a) => t -> a.asScala.map(_.asText).toSeq }.toMap,
       stats = obj("stats").map { case (k, v) => k -> v.asLong }.toMap,
       entries = n.path("entries").asScala.toSeq.map(e => ManifestEntry(
-        e.get("bucket").asLong, e.get("path").asText,
+        e.get("table").asText, e.get("bucket").asLong, e.get("path").asText,
         str(e, "min_path"), str(e, "max_path"), e.get("n_rows").asLong)),
       version = version)
   }
@@ -137,7 +138,10 @@ final class StoreLog(spark: SparkSession, val root: String) {
     * one listing of the log, the parse memoized */
   def latest(): Manifest = committed().lastOption.fold(Manifest.Empty) { case (v, s) => parsed(v, s) }
 
-  /** Commit `m` as version `v`; false when `v` is already taken. */
+  /** Commit `m` as version `v`; false when `v` is already taken. A version
+    * the vacuum dropped counts as taken: `v` must be the successor of the
+    * latest version, so version `v - 1` must still exist (the vacuum drops
+    * versions oldest first), or, for version 0, no version at all. */
   def tryCommit(v: Long, m: Manifest): Boolean = {
     val f = fs
     val tmp = new HPath(s"$logDir/.tmp-${UUID.randomUUID()}")
@@ -145,7 +149,8 @@ final class StoreLog(spark: SparkSession, val root: String) {
     try out.write(Manifest.toJson(m)) finally out.close()
     val target = manifestPath(v)
     try locks.computeIfAbsent(key, _ => new Object).synchronized {
-      !f.exists(target) && f.rename(tmp, target)
+      !f.exists(target) && (if (v == 0) committed().isEmpty else f.exists(manifestPath(v - 1))) &&
+        f.rename(tmp, target)
     } finally f.delete(tmp, false)
   }
 

@@ -95,6 +95,31 @@ class SourceStampSpec extends AnyFunSuite {
     assert(probe() === 9L); assert(runs === 3)
   }
 
+  test("a same-size rewrite with a new mtime recomputes; one that also keeps the mtime is the named miss") {
+    // memo's contract: a source file is unchanged while its (size,
+    // mtime-ms) pair is. New content of the same length written at a new
+    // mtime changes the pair, so the memo recomputes.
+    import java.nio.file.attribute.FileTime
+    SourceStamp.clear()
+    val dir = Files.createTempDirectory("stampsame").toString
+    val file = s"$dir/table.parquet"
+    write(dir, "table.parquet", "aaaa")
+    Files.setLastModifiedTime(Paths.get(file), FileTime.fromMillis(1_700_000_000_000L))
+    var runs = 0
+    def probe(): Long = SourceStamp.memoLong(file, "t") { runs += 1; runs.toLong }
+    def dirProbe(): Long = SourceStamp.memoLong(dir, "t") { runs += 1; runs.toLong }
+    assert(probe() === 1L && dirProbe() === 2L)
+    write(dir, "table.parquet", "bbbb")
+    Files.setLastModifiedTime(Paths.get(file), FileTime.fromMillis(1_700_000_001_000L))
+    assert(probe() === 3L, "same size, new mtime: the file's memo recomputes")
+    assert(dirProbe() === 4L, "same size, new mtime: the dir's memo recomputes")
+    // the assumption named at SourceStamp.memo: a rewrite that keeps both
+    // the size and the millisecond mtime is indistinguishable
+    write(dir, "table.parquet", "cccc")
+    Files.setLastModifiedTime(Paths.get(file), FileTime.fromMillis(1_700_000_001_000L))
+    assert(probe() === 3L && dirProbe() === 4L)
+  }
+
   test("generic memo: reference values hit while unchanged, recompute on mutation") {
     SourceStamp.clear()
     val dir = Files.createTempDirectory("stampref").toString

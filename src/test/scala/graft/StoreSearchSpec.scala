@@ -27,6 +27,11 @@ class StoreSearchSpec extends AnyFunSuite {
   private def tmpStore(): ChunkStore =
     new ChunkStore(spark, Files.createTempDirectory("chunks").toString + "/table")
 
+  /** `n` file names `<prefix><i>.md` that share one bucket of the store */
+  private def sameBucket(prefix: String, n: Int): Seq[String] =
+    (0 until 64 * n).map(i => s"$prefix$i.md").groupBy(ChunkStore.bucketOf)
+      .values.filter(_.size >= n).minBy(_.head).take(n)
+
   // ---- ChunkStore ----
 
   test("insert + read round trip with fixed schema") {
@@ -101,21 +106,23 @@ class StoreSearchSpec extends AnyFunSuite {
     // current-schema parquet (the additive migration happens on first write,
     // reference ensureSchemaVersion, vectordb/index.ts:289-307)
     val dir = Files.createTempDirectory("old-schema-rt").toString + "/table"
+    // two files of one bucket: the upsert rewrites the whole table
+    val Seq(x, y) = sameBucket("/a/f", 2)
     val st = new ChunkStore(spark, dir)
-    st.insert(Seq(mkChunk("/a/x.md", 0, "legacy row"), mkChunk("/a/y.md", 0, "other legacy"))
+    st.insert(Seq(mkChunk(x, 0, "legacy row"), mkChunk(y, 0, "other legacy"))
       .toDF().drop("fileTitle", "contentHash"))
     assert(!spark.read.parquet(st.read().inputFiles: _*).columns.contains("contentHash"))
-    st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "migrated row")).toDF())
+    st.upsertFile(x, Seq(mkChunk(x, 0, "migrated row")).toDF())
     // physical schema of the rewritten table now includes the new columns
     assert(spark.read.parquet(st.read().inputFiles: _*).columns.contains("contentHash"))
     val rows = st.read().collect().map(r => r.getAs[String]("filePath") -> r).toMap
-    assert(rows("/a/x.md").getAs[String]("text") === "migrated row")
-    assert(rows("/a/x.md").getAs[String]("contentHash") === "h")
-    assert(rows("/a/y.md").getAs[String]("contentHash") === null) // untouched legacy
+    assert(rows(x).getAs[String]("text") === "migrated row")
+    assert(rows(x).getAs[String]("contentHash") === "h")
+    assert(rows(y).getAs[String]("contentHash") === null) // untouched legacy
     // hashless rows are never "converged": the manifest exposes the null
     // for sync to classify as dirty (SyncPlannerSpec pins the classification)
     val manifest = st.manifest().collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(manifest("/a/y.md") === null)
+    assert(manifest(y) === null)
   }
 
   test("optimize compacts fragmented directories; vacuum drops aged unreferenced data, keeps fresh") {
@@ -124,7 +131,8 @@ class StoreSearchSpec extends AnyFunSuite {
     val st = new ChunkStore(spark, base)
     // 6 separate inserts of the same file set → the table accumulates at
     // least one parquet fragment per insert
-    val files = (0 until 4).map(i => s"/corpus/doc$i.md")
+    // four files of one bucket: compaction leaves one file
+    val files = sameBucket("/corpus/doc", 4)
     (0 until 6).foreach { gen =>
       st.insert(files.map(f => mkChunk(f, gen, s"gen $gen of $f")).toDF())
     }

@@ -397,9 +397,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch commits micro-batches into the versioned store") {
     implicit val sqlCtx = spark.sqlContext
-    val store = new graft.store.VersionedStore(spark,
-      Files.createTempDirectory("stream-vstore").toString + "/table", numBuckets = 4)
-    store.create()
+    val store = new graft.store.ChunkStore(spark,
+      Files.createTempDirectory("stream-vstore").toString + "/table")
     val mem = MemoryStream[Ingest.Doc]
     val ckpt = Files.createTempDirectory("stream-vckpt").toString
     val q = StreamingIngest.chunkStream(mem.toDS(), () => new HashedEmbedder(64), "2026-01-01T00:00:00Z")
@@ -431,15 +430,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.read().select("filePath").distinct().as[String].collect().toSet ===
       Set("/v/a.md", "/v/b.md"))
     // time travel still sees the first commit's state
-    assert(store.readVersion(v1).select("filePath").distinct().as[String]
+    assert(store.read(v1).select("filePath").distinct().as[String]
       .collect().toSet === Set("/v/a.md"))
   }
 
   test("streaming materialized view: per-batch refresh tracks the store incrementally") {
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("stream-mv").toString
-    val store = new graft.store.VersionedStore(spark, s"$root/table", numBuckets = 4)
-    store.create()
+    val store = new graft.store.ChunkStore(spark, s"$root/table")
     val mv = new graft.store.MaterializedView(spark, store, s"$root/view",
       "filePath", Seq(
         org.apache.spark.sql.functions.count(

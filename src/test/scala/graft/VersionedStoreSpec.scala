@@ -8,8 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.ChunkSchema.{ChunkMetadata, ChunkRow}
 import graft.core.GraftSession
 import graft.embed.HashedEmbedder
-import graft.store.VersionedStore
+import graft.store.{ChunkStore, ManifestEntry, StoreLog}
 
+/** The versioned-table behaviours of the chunk table, pinned on
+  * [[ChunkStore]]'s bucket layout: time travel, bucket-disjoint CAS and
+  * rebase, bounded same-bucket retry, vacuum retention, compaction,
+  * history, the change feed, scrub, shallow clone, the pruned one-file
+  * read, ghost deletes and the materialized view over the store. (The
+  * suite keeps the name of the class these behaviours were first written
+  * for, so its test ids stay stable.) */
 class VersionedStoreSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)
@@ -21,20 +28,44 @@ class VersionedStoreSpec extends AnyFunSuite {
       ChunkMetadata(file.split('/').last, text.length.toLong, "md"),
       Some("t"), Some("h"), "2026-01-01T00:00:00Z")
 
-  private def tmpStore(buckets: Int = 4): VersionedStore =
-    new VersionedStore(spark,
-      Files.createTempDirectory("vstore").toString + "/table", buckets)
+  private def tmpRoot(name: String = "vstore"): String =
+    Files.createTempDirectory(name).toString + "/table"
+
+  private def tmpStore(): ChunkStore = new ChunkStore(spark, tmpRoot())
+
+  private def candidates(prefix: String): Iterator[String] =
+    Iterator.from(0).map(i => s"$prefix$i.md")
+
+  /** `n` file names that share one bucket */
+  private def sameBucket(prefix: String, n: Int): Seq[String] =
+    candidates(prefix).scanLeft(Map.empty[Long, Seq[String]]) { (m, f) =>
+      val b = ChunkStore.bucketOf(f); m.updated(b, m.getOrElse(b, Seq.empty) :+ f)
+    }.flatMap(_.values.find(_.size == n)).next()
+
+  /** `n` file names in `n` different buckets */
+  private def distinctBuckets(prefix: String, n: Int): Seq[String] =
+    candidates(prefix).distinctBy(ChunkStore.bucketOf).take(n).toSeq
+
+  /** the latest chunk entries whose bucket and range can hold `p` */
+  private def entriesFor(root: String, p: String): Seq[ManifestEntry] =
+    new StoreLog(spark, root).latest().entries.filter(e => e.table == "chunks" &&
+      e.bucket == ChunkStore.bucketOf(p) && e.minPath <= p && p <= e.maxPath)
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
+    assert(f.delete(), s"could not delete $f")
+  }
 
   test("commits advance versions; reads resolve the latest snapshot") {
     val st = tmpStore()
-    st.create()
-    assert(st.latestVersion() === Some(0L))
+    assert(st.latestVersion() === None)
     assert(st.read().count() === 0)
 
-    val v1 = st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "one")).toDF())
-    val v2 = st.upsertFile("/a/y.md", Seq(mkChunk("/a/y.md", 0, "two"),
+    st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "one")).toDF())
+    assert(st.latestVersion() === Some(0L))
+    st.upsertFile("/a/y.md", Seq(mkChunk("/a/y.md", 0, "two"),
       mkChunk("/a/y.md", 1, "three")).toDF())
-    assert(v1 === 1L && v2 === 2L)
+    assert(st.latestVersion() === Some(1L))
     assert(st.read().count() === 3)
     assert(st.read().select("filePath").distinct().count() === 2)
   }
@@ -45,22 +76,27 @@ class VersionedStoreSpec extends AnyFunSuite {
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "v2 text"),
       mkChunk("/a/x.md", 1, "v2 extra")).toDF())
 
-    assert(st.readVersion(1L).select("text").as[String].collect().toSet ===
+    assert(st.read(0L).select("text").as[String].collect().toSet ===
       Set("v1 text"))
-    assert(st.readVersion(2L).select("text").as[String].collect().toSet ===
+    assert(st.read(1L).select("text").as[String].collect().toSet ===
       Set("v2 text", "v2 extra"))
-    // a reader holding the v1 DataFrame is unaffected by later commits
-    val v1df = st.readVersion(1L)
+    // a reader holding the first version's DataFrame is unaffected by later commits
+    val v1df = st.read(0L)
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "v3 text")).toDF())
     assert(v1df.select("text").as[String].collect().toSet === Set("v1 text"))
   }
 
   test("upsert replaces only the target file; other buckets carried by reference") {
-    val st = tmpStore()
-    val files = (0 until 8).map(i => s"/corpus/doc$i.md")
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
+    val log = new StoreLog(spark, root)
+    val files = distinctBuckets("/corpus/doc", ChunkStore.Buckets)
     files.foreach(f => st.upsertFile(f, Seq(mkChunk(f, 0, s"text $f")).toDF()))
     val before = st.read().filter(col("filePath") =!= files.head)
       .orderBy("id").collect()
+    val b = ChunkStore.bucketOf(files.head)
+    def carried(m: graft.store.Manifest) = m.entries.filter(_.bucket != b).toSet
+    val m0 = log.latest()
 
     st.upsertFile(files.head, Seq(mkChunk(files.head, 0, "updated")).toDF())
     val after = st.read().filter(col("filePath") =!= files.head)
@@ -68,13 +104,27 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(after === before)
     assert(st.read().filter(col("filePath") === files.head)
       .select("text").as[String].collect().toSeq === Seq("updated"))
+    // the one bucket's chunk entry and catalog slice are new, every other
+    // entry is the same path
+    val m1 = log.latest()
+    assert(carried(m1) === carried(m0) && carried(m0).size === 2 * (ChunkStore.Buckets - 1))
+    val mine = m1.entries.filter(_.bucket == b)
+    assert(mine.map(_.table).sorted === Seq("chunks", "files"))
+    assert((mine.map(_.path).toSet & m0.entries.map(_.path).toSet).isEmpty)
+
+    // a one-file delete rewrites only its bucket too
+    st.deleteFile(files(1))
+    val m2 = log.latest()
+    val b1 = ChunkStore.bucketOf(files(1))
+    assert(m2.entries.filter(_.bucket != b1).toSet === m1.entries.filter(_.bucket != b1).toSet)
+    assert(m2.entries.forall(_.bucket != b1), "the emptied bucket has no entry")
   }
 
   test("zero-chunk upsert fails before any commit") {
     val st = tmpStore()
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "keep me")).toDF())
     val v = st.latestVersion()
-    intercept[IllegalArgumentException] {
+    intercept[graft.ingest.Ingest.NoChunksError] {
       st.upsertFile("/a/x.md", Seq.empty[ChunkRow].toDF())
     }
     assert(st.latestVersion() === v)
@@ -82,11 +132,11 @@ class VersionedStoreSpec extends AnyFunSuite {
   }
 
   test("concurrent writers to disjoint buckets all commit (CAS + rebase)") {
-    val st = tmpStore(buckets = 16)
-    st.create()
-    // run 8 upserts of distinct files concurrently; rebase must absorb the
-    // CAS races without losing any writer's data
-    val files = (0 until 8).map(i => s"/corpus/par$i.md")
+    val st = tmpStore()
+    // upsert one file into every bucket concurrently; rebase must absorb
+    // the CAS races without losing any writer's data
+    val n = ChunkStore.Buckets
+    val files = distinctBuckets("/corpus/par", n)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -94,28 +144,31 @@ class VersionedStoreSpec extends AnyFunSuite {
       st.upsertFile(f, Seq(mkChunk(f, 0, s"text of $f")).toDF())
     })
     Await.result(Future.sequence(futures), 120.seconds)
-    assert(st.latestVersion() === Some(8L)) // one version per successful commit
+    assert(st.latestVersion() === Some(n - 1L)) // one version per successful commit
     assert(st.read().select("filePath").as[String].collect().toSet ===
       files.toSet)
+    assert(st.status() === ((n.toLong, n.toLong)))
   }
 
   test("vacuum keeps recent snapshots intact and drops unreferenced files") {
-    val st = tmpStore()
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
+    val log = new StoreLog(spark, root)
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen1")).toDF())
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen2")).toDF())
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen3")).toDF())
-    st.vacuum(keepVersions = 2, retentionMs = 0L)
-    assert(st.versions() === Seq(2L, 3L))
+    log.vacuum(keepVersions = 2, retentionMs = 0L)
+    assert(st.versions() === Seq(1L, 2L))
     // kept snapshots still fully readable
-    assert(st.readVersion(2L).select("text").as[String].collect().toSet === Set("gen2"))
+    assert(st.read(1L).select("text").as[String].collect().toSet === Set("gen2"))
     assert(st.read().select("text").as[String].collect().toSet === Set("gen3"))
     // vacuumed version is gone
-    intercept[Exception] { st.readVersion(1L).collect() }
+    intercept[Exception] { st.read(0L).collect() }
   }
 
   test("vacuum retention never deletes young data files (in-flight writer safety)") {
-    val root = Files.createTempDirectory("vstore").toString + "/table"
-    val st = new VersionedStore(spark, root, 4)
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen1")).toDF())
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen2")).toDF())
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen3")).toDF())
@@ -123,52 +176,55 @@ class VersionedStoreSpec extends AnyFunSuite {
     // all data files were written seconds ago: with the default retention
     // window they survive vacuum even when unreferenced, so a concurrent
     // upsert's staged-but-not-yet-committed files can never be swept
-    st.vacuum(keepVersions = 1)
-    assert(st.versions() === Seq(3L))
+    new StoreLog(spark, root).vacuum(keepVersions = 1)
+    assert(st.versions() === Seq(2L))
     assert(st.read().select("text").as[String].collect().toSet === Set("gen3"))
     assert(new java.io.File(s"$root/data").list().toSet === filesBefore)
   }
 
   test("same-bucket contention is bounded: retry budget shrinks across rebases") {
-    val st = tmpStore(buckets = 1) // every file collides in one bucket
-    st.create() // table must exist before writers race (create() is exclusive)
+    val st = tmpStore()
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val files = (0 until 4).map(i => s"/hot/f$i.md")
+    val files = sameBucket("/hot/f", 4) // every file collides in one bucket
     val futures = files.map(f => Future {
       st.upsertFile(f, Seq(mkChunk(f, 0, s"text of $f")).toDF())
     })
     Await.result(Future.sequence(futures), 180.seconds)
     // all four land despite sharing the single bucket (serialized by redo)
     assert(st.read().select("filePath").as[String].collect().toSet === files.toSet)
+    assert(st.status() === ((4L, 4L)))
   }
 
   test("a reader's resolved snapshot survives vacuum of its version (retention)") {
-    val st = tmpStore()
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
+    val log = new StoreLog(spark, root)
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen1")).toDF())
-    // reader resolves v1 BEFORE the version is vacuumed away: snapshotDF
-    // pins the concrete data-file paths at resolve time
-    val v1df = st.readVersion(1L)
+    // reader resolves v0 BEFORE the version is vacuumed away: the read
+    // pins the concrete data paths at resolve time
+    val v1df = st.read(0L)
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen2")).toDF())
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "gen3")).toDF())
-    st.vacuum(keepVersions = 1) // default retention window (60 s)
-    assert(st.versions() === Seq(3L))
-    // new readers can no longer resolve v1 (its manifest is gone)...
-    intercept[Exception] { st.readVersion(1L).collect() }
-    // ...but the in-flight reader still collects: v1's data files are
+    log.vacuum(keepVersions = 1) // default retention window (60 s)
+    assert(st.versions() === Seq(2L))
+    // new readers can no longer resolve v0 (its manifest is gone)...
+    intercept[Exception] { st.read(0L).collect() }
+    // ...but the in-flight reader still collects: v0's data files are
     // younger than the retention cutoff, so vacuum kept them even though
     // no surviving manifest references them — the retention window is what
     // makes "readers never lock" safe against a concurrent vacuum
     assert(v1df.select("text").as[String].collect().toSet === Set("gen1"))
     // an aged-out sweep (retentionMs = 0) finally drops the orphaned files
-    st.vacuum(keepVersions = 1, retentionMs = 0L)
+    log.vacuum(keepVersions = 1, retentionMs = 0L)
     assert(st.read().select("text").as[String].collect().toSet === Set("gen3"))
   }
 
   test("vacuum racing concurrent upserts never loses committed rows") {
-    val st = tmpStore(buckets = 8)
-    st.create()
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
+    val log = new StoreLog(spark, root)
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -180,44 +236,44 @@ class VersionedStoreSpec extends AnyFunSuite {
     // just-resolved latest manifest cannot age out mid-upsert; the
     // retention window protects the writers' staged-but-uncommitted files
     val vac = Future {
-      (1 to 8).foreach { _ => st.vacuum(keepVersions = 3); blocking(Thread.sleep(25)) }
+      (1 to 8).foreach { _ => log.vacuum(keepVersions = 3); blocking(Thread.sleep(25)) }
     }
-    Await.result(Future.sequence(writers :+ vac.map(_ => 0L)), 180.seconds)
-    st.vacuum(keepVersions = 1)
+    Await.result(Future.sequence(writers :+ vac.map(_ => ())), 180.seconds)
+    log.vacuum(keepVersions = 1)
     assert(st.read().select("filePath").as[String].collect().toSet === files.toSet)
     assert(st.read().count() === files.size.toLong)
   }
 
   test("compaction: fragmented bucket collapses to one sorted file, rows and history intact") {
-    val st = tmpStore(buckets = 1) // every upsert fragments the same bucket
-    val files = (0 until 6).map(i => s"/c/doc$i.md")
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
+    val all = sameBucket("/c/doc", 7) // every row lands in the same bucket
+    val (files, spread) = (all.init, all.last)
     files.foreach(f => st.upsertFile(f,
       Seq(mkChunk(f, 0, s"text of $f"), mkChunk(f, 1, s"more of $f")).toDF()))
-    // the fragmentation is explicit: the last upsert writes one data file
-    // per row (six rows dealt round-robin from one partition into six), so
-    // the bucket holds more than 4 files whatever the session's
-    // parallelism (the kept rows read back as about one split per core)
-    val spread = "/c/spread.md"
-    st.upsertFile(spread, (0 until 6).map(i => mkChunk(spread, i, s"piece $i of $spread"))
+    // the fragmentation is explicit: an insert appends an entry in its
+    // frame's partitioning, and six rows dealt round-robin from one
+    // partition into six add six files to the bucket beside the one it held
+    st.insert((0 until 6).map(i => mkChunk(spread, i, s"piece $i of $spread"))
       .toDF().coalesce(1).repartition(6))
     val vBefore = st.latestVersion().get
     val before = st.read().orderBy("id").collect()
     val nFilesBefore = st.read().inputFiles.length
     assert(nFilesBefore > 4, s"fixture not fragmented: $nFilesBefore files")
 
-    val vc = st.compact(maxFilesPerBucket = 4)
-    assert(vc === Some(vBefore + 1))
+    st.optimize(maxFragments = 4)
+    assert(st.latestVersion() === Some(vBefore + 1))
     // rows unchanged, file count collapsed to one
     assert(st.read().orderBy("id").collect() === before)
     assert(st.read().inputFiles.length === 1)
-    // sorted rewrite → tight stats: a point read now opens exactly one file
-    assert(st.dataFilesFor(files(3)).size === 1)
-    assert(st.readFile(files(3)).count() === 2L)
+    // a point read now opens exactly one file
+    assert(st.readFiles(Seq(files(3))).inputFiles.length === 1)
+    assert(st.readFiles(Seq(files(3))).count() === 2L)
     // history is untouched (compaction adds a version, rewrites nothing old)
-    assert(st.readVersion(vBefore).orderBy("id").collect() === before)
+    assert(st.read(vBefore).orderBy("id").collect() === before)
     // an already-compact table is a no-op, not a new version
-    assert(st.compact(maxFilesPerBucket = 4) === None)
-    assert(st.latestVersion() === vc)
+    st.optimize(maxFragments = 4)
+    assert(st.latestVersion() === Some(vBefore + 1))
     // post-compaction upserts still work against the compacted layout
     st.upsertFile(files.head, Seq(mkChunk(files.head, 0, "recompacted")).toDF())
     assert(st.read().filter(col("filePath") === files.head)
@@ -225,80 +281,74 @@ class VersionedStoreSpec extends AnyFunSuite {
   }
 
   test("history reports per-version file/row counts from manifests alone") {
-    val st = tmpStore(buckets = 1)
-    st.upsertFile("/h/a.md", Seq(mkChunk("/h/a.md", 0, "one")).toDF())
-    st.upsertFile("/h/b.md", Seq(mkChunk("/h/b.md", 0, "two"),
-      mkChunk("/h/b.md", 1, "three")).toDF())
+    val st = tmpStore()
+    val Seq(a, b) = sameBucket("/h/f", 2)
+    st.upsertFile(a, Seq(mkChunk(a, 0, "one")).toDF())
+    st.upsertFile(b, Seq(mkChunk(b, 0, "two"), mkChunk(b, 1, "three")).toDF())
     val h = st.history()
-    assert(h.map(_._1) === Seq(0L, 1L, 2L)) // v0 = the auto-created empty table
-    assert(h.map(_._3) === Seq(0L, 1L, 3L)) // cumulative row counts per snapshot
-    st.compact(maxFilesPerBucket = 0)
+    assert(h.map(_._1) === Seq(0L, 1L))
+    assert(h.map(_._3) === Seq(1L, 3L)) // cumulative row counts per snapshot
+    st.optimize(maxFragments = 0)
     val h2 = st.history()
-    assert(h2.last._1 === 3L && h2.last._2 === 1 && h2.last._3 === 3L)
+    assert(h2.last._1 === 2L && h2.last._2 === 1 && h2.last._3 === 3L)
   }
 
   test("change data feed: insert/update/delete derived from snapshot diff") {
-    val st = tmpStore(buckets = 2)
+    val st = tmpStore()
     // contentHash must track content for CDF identity (mkChunk's constant
     // hash would make every rewrite look unchanged — correctly so, since
     // contentHash IS this store's content identity)
     def ck(file: String, idx: Int, text: String): ChunkRow =
       mkChunk(file, idx, text).copy(contentHash = Some(s"h-${text.hashCode}"))
     st.upsertFile("/c/a.md", Seq(ck("/c/a.md", 0, "alpha v1"),
-      ck("/c/a.md", 1, "beta v1")).toDF()) // v1
-    st.upsertFile("/c/b.md", Seq(ck("/c/b.md", 0, "gamma")).toDF()) // v2
-    // v3: /c/a.md rewritten — chunk 0 changed, chunk 1 identical, chunk 2 new
+      ck("/c/a.md", 1, "beta v1")).toDF()) // v0
+    st.upsertFile("/c/b.md", Seq(ck("/c/b.md", 0, "gamma")).toDF()) // v1
+    // v2: /c/a.md rewritten — chunk 0 changed, chunk 1 identical, chunk 2 new
     st.upsertFile("/c/a.md", Seq(ck("/c/a.md", 0, "alpha v2"),
       ck("/c/a.md", 1, "beta v1"),
       ck("/c/a.md", 2, "delta new")).toDF())
 
-    // file diff: only the churned bucket's files move
-    val (added, removed) = st.diff(2L, 3L)
+    // file diff: only the churned bucket's entries move
+    val (added, removed) = st.diff(1L, 2L)
     assert(added.nonEmpty && removed.nonEmpty)
-    assert((added ++ removed).forall(_.bucket === st.bucketOf("/c/a.md")))
+    assert((added ++ removed).forall(_.bucket === ChunkStore.bucketOf("/c/a.md")))
 
-    val ch = st.changes(2L, 3L)
+    val ch = st.changes(1L, 2L)
       .select("id", "_change_type").as[(String, String)].collect().toMap
     // carried-over identical rows (beta, gamma) are NOT in the feed
     assert(ch === Map(
       "/c/a.md-0" -> "update_postimage",
       "/c/a.md-2" -> "insert"))
     // a delete shows up as delete
-    st.upsertFile("/c/a.md", Seq(ck("/c/a.md", 0, "alpha v2")).toDF()) // v4
-    val ch2 = st.changes(3L, 4L)
+    st.upsertFile("/c/a.md", Seq(ck("/c/a.md", 0, "alpha v2")).toDF()) // v3
+    val ch2 = st.changes(2L, 3L)
       .select("id", "_change_type").as[(String, String)].collect().toMap
     assert(ch2 === Map(
       "/c/a.md-1" -> "delete",
       "/c/a.md-2" -> "delete"))
-    // full-span feed composes: v1 → v4 sees b.md's insert and a.md's net state
-    val span = st.changes(1L, 4L)
-      .select("id", "_change_type").as[(String, String)].collect().toMap
-    assert(span("/c/b.md-0") === "insert")
-    assert(span("/c/a.md-0") === "update_postimage")
-    assert(span("/c/a.md-1") === "delete")
   }
 
   test("scrub: clean table passes; a deleted data file is named precisely") {
-    val root = Files.createTempDirectory("vstore-scrub").toString + "/table"
-    val st = new VersionedStore(spark, root, 2)
+    val root = tmpRoot("vstore-scrub")
+    val st = new ChunkStore(spark, root)
     val files = (0 until 4).map(i => s"/s/doc$i.md")
     files.foreach(f => st.upsertFile(f, Seq(mkChunk(f, 0, s"text $f")).toDF()))
     assert(st.scrub() === Seq.empty)
-    // sabotage: delete one referenced data file behind the manifest's back
-    val victim = st.dataFilesFor(files.head).head
-    assert(new java.io.File(s"$root/${victim.path}").delete())
+    // sabotage: delete one referenced data directory behind the manifest's back
+    val victim = entriesFor(root, files.head).head
+    deleteTree(new java.io.File(s"$root/${victim.path}"))
     val problems = st.scrub()
     assert(problems.size === 1 && problems.head.contains(victim.path),
       problems.mkString(";"))
   }
 
   test("shallow clone: zero-copy branch reads the source and diverges on write") {
-    val srcRoot = Files.createTempDirectory("vstore-src").toString + "/table"
-    val src = new VersionedStore(spark, srcRoot, 4)
+    val srcRoot = tmpRoot("vstore-src")
+    val src = new ChunkStore(spark, srcRoot)
     val files = (0 until 4).map(i => s"/cl/doc$i.md")
     files.foreach(f => src.upsertFile(f, Seq(mkChunk(f, 0, s"base $f")).toDF()))
 
-    val cloneRoot = Files.createTempDirectory("vstore-clone").toString + "/table"
+    val cloneRoot = tmpRoot("vstore-clone")
     val clone = src.cloneTo(cloneRoot)
     // zero-copy: the clone resolves the SOURCE's files; it owns none yet
     assert(clone.read().orderBy("id").collect() === src.read().orderBy("id").collect())
@@ -319,7 +369,7 @@ class VersionedStoreSpec extends AnyFunSuite {
 
     // compaction LOCALIZES the clone: afterwards every file it reads is its
     // own, so the source's retention no longer constrains it
-    clone.compact(maxFilesPerBucket = 0)
+    clone.optimize(maxFragments = 0)
     assert(clone.read().inputFiles.forall(_.contains(cloneRoot)),
       clone.read().inputFiles.take(3).mkString(","))
     assert(clone.read().count() === 4L)
@@ -329,18 +379,19 @@ class VersionedStoreSpec extends AnyFunSuite {
   }
 
   test("parquet manifest stats: a one-file read opens only matching data files") {
-    val st = tmpStore(buckets = 8)
+    val root = tmpRoot()
+    val st = new ChunkStore(spark, root)
     val files = (0 until 8).map(i => s"/corpus/doc$i.md")
     files.foreach(f => st.upsertFile(f, Seq(mkChunk(f, 0, s"text of $f"),
       mkChunk(f, 1, s"second chunk of $f")).toDF())): Unit
 
     // every manifest entry carries usable stats
     val target = files(3)
-    val all = st.dataFilesFor(target)
-    // bucket + range pruning leaves exactly the file(s) holding the target;
-    // at 8 files over 8 buckets that is a strict subset of the snapshot
+    val all = entriesFor(root, target)
+    // bucket + range pruning leaves exactly the entry holding the target;
+    // at 8 files over every bucket that is a strict subset of the snapshot
     assert(all.nonEmpty)
-    assert(all.forall(e => e.bucket == st.bucketOf(target)))
+    assert(all.forall(e => e.bucket == ChunkStore.bucketOf(target)))
     assert(all.forall(e => e.minPath <= target && target <= e.maxPath))
     assert(all.map(_.nRows).sum >= 2L)
     val snapshotFiles = st.read().inputFiles.length
@@ -348,8 +399,8 @@ class VersionedStoreSpec extends AnyFunSuite {
       s"pruned ${all.size} vs snapshot $snapshotFiles — no skipping happened")
 
     // the pruned read sees exactly the file's rows, and ONLY the pruned
-    // files back the scan
-    val df = st.readFile(target)
+    // entries back the scan
+    val df = st.readFiles(Seq(target))
     assert(df.select("text").as[String].collect().toSet ===
       Set(s"text of $target", s"second chunk of $target"))
     assert(df.inputFiles.length === all.size)
@@ -357,12 +408,12 @@ class VersionedStoreSpec extends AnyFunSuite {
     // a path whose stats ranges cannot contain it opens ZERO files
     // (same-bucket membership alone is not enough — ranges must match)
     val ghost = "/zzz/never-written.md"
-    assert(st.dataFilesFor(ghost).forall(e =>
+    assert(entriesFor(root, ghost).forall(e =>
       e.minPath <= ghost && ghost <= e.maxPath))
-    assert(st.readFile(ghost).count() === 0L)
+    assert(st.readFiles(Seq(ghost)).count() === 0L)
     val below = "/AAA/before-everything.md"
-    assert(st.dataFilesFor(below).isEmpty)
-    assert(st.readFile(below).inputFiles.isEmpty)
+    assert(entriesFor(root, below).isEmpty)
+    assert(st.readFiles(Seq(below)).inputFiles.isEmpty)
   }
 
   test("deleteFile: single-bucket copy-on-write removal; ghost delete is a no-op") {
@@ -370,13 +421,14 @@ class VersionedStoreSpec extends AnyFunSuite {
     st.upsertFile("/a/x.md", Seq(mkChunk("/a/x.md", 0, "xx")).toDF())
     st.upsertFile("/a/y.md", Seq(mkChunk("/a/y.md", 0, "yy")).toDF())
     val vBefore = st.latestVersion().get
-    val vDel = st.deleteFile("/a/x.md")
+    st.deleteFile("/a/x.md")
+    val vDel = st.latestVersion().get
     assert(vDel === vBefore + 1)
     assert(st.read().select("filePath").as[String].collect().toSeq === Seq("/a/y.md"))
     // the deleted file's rows are still visible via time travel
-    assert(st.readVersion(vBefore).filter(col("filePath") === "/a/x.md").count() === 1L)
+    assert(st.read(vBefore).filter(col("filePath") === "/a/x.md").count() === 1L)
     // deleting a path no stats range can contain commits nothing
-    assert(st.deleteFile("/zzz/ghost.md") === vDel)
+    st.deleteFile("/zzz/ghost.md")
     assert(st.latestVersion() === Some(vDel))
     // the change feed reports exactly the one delete
     val ch = st.changes(vBefore, vDel)
@@ -394,7 +446,7 @@ class VersionedStoreSpec extends AnyFunSuite {
           text.length.toLong, "md"),
         Some("t"), Some(s"h-${text.hashCode}"), "2026-01-01T00:00:00Z")
     val root = Files.createTempDirectory("mvstore").toString
-    val st = new VersionedStore(spark, s"$root/table", 4)
+    val st = new ChunkStore(spark, s"$root/table")
     val mv = new MaterializedView(spark, st, s"$root/view", "filePath", Seq(
       count(lit(1)).as("n_chunks"),
       sum(length(col("text"))).cast("long").as("total_chars"),
@@ -451,7 +503,7 @@ class VersionedStoreSpec extends AnyFunSuite {
         graft.core.ChunkSchema.ChunkMetadata(file.split('/').last, text.length.toLong, ftype),
         Some("t"), Some(s"h-${text.hashCode}"), "2026-01-01T00:00:00Z")
     val root = Files.createTempDirectory("mvmulti").toString
-    val st = new VersionedStore(spark, s"$root/table", 4)
+    val st = new ChunkStore(spark, s"$root/table")
     // group on (fileTitle, timestamp) — NOT the store's stats dimension,
     // so the incremental recompute must source affected groups from the
     // whole snapshot (a group can span files the batch never touched)
@@ -491,9 +543,9 @@ class VersionedStoreSpec extends AnyFunSuite {
         ChunkMetadata(file.split('/').last, text.length.toLong, "md"),
         title, Some(s"h-${text.hashCode}"), "2026-01-01T00:00:00Z")
     val root = Files.createTempDirectory("mvnull").toString
-    val st = new VersionedStore(spark, s"$root/table", 4)
+    val st = new ChunkStore(spark, s"$root/table")
     // group on nullable fileTitle: one of the groups' key IS null. The
-    // r5 failure mode: concat_ws SKIPS nulls in the Catalyst key while the
+    // failure mode: concat_ws SKIPS nulls in the Catalyst key while the
     // driver side rendered them as a different string, so the null-keyed
     // group never matched isInCollection — its stale row was carried
     // forward AND excluded from the recompute. Sentinel keying on both

@@ -72,7 +72,9 @@ class ChunkCatalogSpec extends AnyFunSuite {
       val m = log.latest()
       if (commits) {
         assert(m.version === before + 1, s"$what: one commit")
-        assert(m.tables.keySet === Set("chunks", "files"), s"$what: ${m.tables.keySet}")
+        // every non-empty bucket names its chunk entries and one catalog slice
+        assert(m.tables.isEmpty && m.entries.groupBy(_.bucket).values.forall(es =>
+          es.count(_.table == "files") == 1 && es.exists(_.table == "chunks")), s"$what: ${m.entries}")
       } else assert(m.version === before, s"$what: no commit")
       assert(answers(st) === aggregates(st.read()), what)
     }
@@ -82,7 +84,11 @@ class ChunkCatalogSpec extends AnyFunSuite {
         pick(2).flatMap(f => rowsOf(f)).toDF().drop("fileTitle", "contentHash")))
       val f = pick(1).head
       step(s"$round upsertFile $f")(st.upsertFile(f, rowsOf(f).toDF()))
-      step(s"$round deleteFile")(st.deleteFile(pick(1).head))
+      step(s"$round deleteFile")(st.deleteFile(
+        rnd.shuffle(st.listFiles().collect().map(_.getString(0)).toSeq).head))
+      // a path no bucket entry can hold deletes nothing and commits nothing
+      step(s"$round deleteFile of a never-stored path", commits = false)(
+        st.deleteFile("/zzz/never-stored.md"))
       val (up, del) = pick(5).splitAt(3)
       step(s"$round upsertFilesFromRows with deletes")(
         assert(st.upsertFilesFromRows(up.flatMap(f => rowsOf(f)).toDF(), del) === 3L))
@@ -93,12 +99,15 @@ class ChunkCatalogSpec extends AnyFunSuite {
     // an empty batch that deletes nothing commits nothing
     step("empty upsertFilesFromRows", commits = false)(
       assert(st.upsertFilesFromRows(Seq.empty[ChunkRow].toDF()) === 0L))
-    // appends up to the directory cap, then the insert that compacts
-    while (log.latest().dirs("chunks").size < StoreLog.MaxDirs)
+    // inserts append an entry per touched bucket while one more insert
+    // cannot pass StoreLog.MaxDirs paths per read; the insert that could
+    // rewrites every bucket as one entry
+    def chunkEntries() = log.latest().entries.filter(_.table == "chunks")
+    while (chunkEntries().size + ChunkStore.Buckets <= StoreLog.MaxDirs)
       st.insert(pick(1).flatMap(f => rowsOf(f)).toDF())
     assert(answers(st) === aggregates(st.read()), "appends up to MaxDirs")
     step("insert past MaxDirs")(st.insert(pick(2).flatMap(f => rowsOf(f, mixed = true)).toDF()))
-    assert(log.latest().dirs("chunks").size === 1)
+    assert(chunkEntries().map(_.bucket).distinct.size === chunkEntries().size)
   }
 
   test("a version committed before the catalog answers the same, and its next commit names a files table") {
@@ -120,7 +129,33 @@ class ChunkCatalogSpec extends AnyFunSuite {
 
     st.upsertFile("/l/d.md", Seq(chunk("/l/d.md", 0, Some("z"), 9)).toDF())
     val m = log.latest()
-    assert(m.dirs("files").nonEmpty && m.stat("n_files") === 4L && m.stat("n_chunks") === 6L)
+    assert(m.tables.isEmpty && m.entries.exists(_.table == "files"), "the next commit writes buckets")
+    assert(st.status() === ((6L, 4L)))
+    assert(answers(st) === aggregates(st.read()))
+  }
+
+  test("a version committed in the table layout (chunks and files directories) answers the same, and its next commit writes buckets") {
+    val root = tmp("catalog-tables")
+    val log = new StoreLog(spark, root)
+    val rows = Seq(chunk("/t/a.md", 0, Some("x"), 3), chunk("/t/a.md", 1, Some("x"), 4),
+      chunk("/t/b.md", 0, Some("y"), 5)).toDF()
+    val files = Seq(("/t/a.md", "x", 2L, "2026-01-04T00:00:00Z"),
+      ("/t/b.md", "y", 1L, "2026-01-05T00:00:00Z"))
+      .toDF("filePath", "contentHash", "chunkCount", "lastModified")
+    log.publish(log.latest(), Manifest(
+      tables = Map("chunks" -> Seq(log.write("chunks", rows)), "files" -> Seq(log.write("files", files))),
+      stats = Map("n_chunks" -> 3L, "n_files" -> 2L)))
+    val st = new ChunkStore(spark, root)
+    assert(answers(st) === aggregates(st.read()))
+    assert(st.status() === ((3L, 2L)))
+    val (_, rec) = Profile.window(spark.sparkContext)(st.status())
+    assert(rec.jobs.isEmpty, "status reads the version's stats")
+    assert(st.readFiles(Seq("/t/b.md")).count() === 1L)
+
+    st.deleteFile("/t/b.md")
+    val m = log.latest()
+    assert(m.tables.isEmpty && m.entries.map(_.table).sorted === Seq("chunks", "files"))
+    assert(st.status() === ((2L, 1L)))
     assert(answers(st) === aggregates(st.read()))
   }
 

@@ -119,18 +119,20 @@ class StoreCommitSpec extends AnyFunSuite {
     val root = s"fault:${tmp("fault-chunks")}/table"
     val st = new ChunkStore(spark, root)
     val log = new StoreLog(spark, root)
-    st.insert(Seq(chunk("/a/x.md", 0, "old x"), chunk("/a/x.md", 1, "old x two"),
-      chunk("/a/y.md", 0, "y text")).toDF())
-    // rows, the catalog as listFiles and manifest read it, and the stats
-    // status reads, with the catalog directory the version names
+    // rows, the catalog as listFiles and manifest read it, the counts
+    // status reads, and the bucket entries the version names
     def state() = (rows(st.read()), st.listFiles().collect().toSeq,
-      st.manifest().collect().toSeq, st.status(), log.latest().dirs("files"))
+      st.manifest().collect().toSeq, st.status(), log.latest().entries)
+    val empty = state()
+    assert(underEveryFault(empty, state())(st.insert(Seq(chunk("/a/x.md", 0, "old x"),
+      chunk("/a/x.md", 1, "old x two"), chunk("/a/y.md", 0, "y text")).toDF())) === 3,
+      "the chunks, the catalog derived from them and one commit")
     val v0 = state()
     assert(v0._4 === ((3L, 2L)))
     val reader0 = st.read()
     val upsertWrites = underEveryFault(v0, state())(
       st.upsertFile("/a/x.md", Seq(chunk("/a/x.md", 0, "new x")).toDF()))
-    assert(upsertWrites === 3, "one table directory, one catalog directory and one commit")
+    assert(upsertWrites === 3, "one bucket's chunks, its catalog slice and one commit")
     val v1 = state()
     assert(v1._1 === Seq(("/a/x.md", 0, "new x"), ("/a/y.md", 0, "y text")))
     assert(v1._4 === ((2L, 2L)))
@@ -142,6 +144,20 @@ class StoreCommitSpec extends AnyFunSuite {
     assert(st.status() === ((1L, 1L)))
     assert(st.listFiles().collect().map(_.getString(0)).toSeq === Seq("/a/x.md"))
     assert(rows(reader1) === v1._1)
+
+    // the batched mutations: the merged catalog, the touched buckets'
+    // chunks and one commit; a compaction rewrites chunks only
+    val v2 = state()
+    assert(underEveryFault(v2, state())(assert(st.upsertFilesFromRows((0 until 4).flatMap(i =>
+      Seq(chunk(s"/b/f$i.md", 0, s"b $i"), chunk(s"/b/f$i.md", 1, s"b $i two"))).toDF()
+      .repartition(3), Seq("/a/x.md")) === 4L)) === 3)
+    val v3 = state()
+    assert(v3._4 === ((8L, 4L)) && !v3._1.exists(_._1 == "/a/x.md"))
+    assert(underEveryFault(v3, state())(st.deleteFiles(Seq("/b/f0.md", "/b/f3.md"))) === 3)
+    val v4 = state()
+    assert(v4._4 === ((4L, 2L)))
+    assert(underEveryFault(v4, state())(st.optimize(maxFragments = 0)) === 2)
+    assert(state()._1 === v4._1 && state()._4 === v4._4)
   }
 
   test("FtsIndexStore and AnnIndexStore rebuilds: a fault before any write leaves rows and stats of the previous version") {
@@ -215,7 +231,10 @@ class StoreCommitSpec extends AnyFunSuite {
     val fts = new FtsIndexStore(spark, s"$root/fts")
     st.insert(corpus(files = 2, chunks = 3))
     fts.rebuild(st.read())
-    // version i holds 6 + i chunks: each upsert adds one file of one chunk
+    // two writers on disjoint buckets (even and odd), ten one-chunk files
+    // each: version i holds 6 + i chunks
+    val (even, odd) = Iterator.from(1).map(i => s"/w/f$i.md").take(80).toSeq
+      .partition(f => ChunkStore.bucketOf(f) % 2 == 0)
     val committed = (0 to 20).map(i => 6L + i).toSet
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -227,27 +246,38 @@ class StoreCommitSpec extends AnyFunSuite {
         try {
           seen.add(st.read().count())
           fts.queryTerms(Seq("spark", "pasta"), Seq("/c/doc0.md", "/w/f3.md"))
-          // one resolved version: its stats equal the counts of its rows
+          // one resolved version: its counts equal the counts of its rows,
+          // and each bucket's catalog slice equals that bucket's chunks
           val m = log.latest()
           val rows = st.read(m)
           val counted = (rows.count(), rows.select("filePath").distinct().count())
           if (st.status(m) != counted) mismatched.add(s"v${m.version}: ${st.status(m)} vs $counted")
+          val chunks = rows.groupBy("filePath").count().collect()
+            .map(r => (ChunkStore.bucketOf(r.getString(0)), r.getString(0), r.getLong(1))).toSet
+          val slices = m.entries.filter(_.table == "files").map(e =>
+              spark.read.parquet(log.abs(e.path))
+                .select(lit(e.bucket).as("b"), col("filePath"), col("chunkCount")))
+            .reduce(_ union _).collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+          if (slices != chunks) mismatched.add(s"v${m.version}: slices ${slices -- chunks} vs chunks ${chunks -- slices}")
         } catch { case t: Throwable => failures.add(t) }
       }
     })
+    def writer(files: Seq[String], rebuild: Boolean) = new Thread(() =>
+      try files.take(10).foreach { f =>
+        st.upsertFile(f, Seq(chunk(f, 0, s"spark write $f")).toDF())
+        if (rebuild) fts.rebuild(st.read())
+      } catch { case t: Throwable => failures.add(t) })
+    val writers = Seq(writer(even, rebuild = true), writer(odd, rebuild = false))
     reader.start()
-    try {
-      for (i <- 1 to 20) {
-        st.upsertFile(s"/w/f$i.md", Seq(chunk(s"/w/f$i.md", 0, s"spark write $i")).toDF())
-        fts.rebuild(st.read())
-      }
-    } finally { done.set(true); reader.join() }
+    try { writers.foreach(_.start()); writers.foreach(_.join()) }
+    finally { done.set(true); reader.join() }
     import scala.jdk.CollectionConverters._
     assert(failures.isEmpty, failures.asScala.map(_.toString).take(3).mkString("; "))
     assert(seen.size > 0)
     assert(mismatched.isEmpty, mismatched.asScala.take(3).mkString("; "))
     assert(seen.asScala.forall(committed.contains),
       s"uncommitted counts: ${seen.asScala.filterNot(committed.contains).toSet}")
+    assert(st.status() === ((26L, 22L)))
   }
 
   test("memos on a file:-qualified root: a second rowCount, corpusStats and loadCentroids run no Spark job") {
