@@ -8,6 +8,7 @@ import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,8 +28,9 @@ import graft.core.ChunkSchema
   *    `chunks` entries (directories of the bucket's rows: one, plus one per
   *    insert since the bucket was last rewritten) and one `files` entry
   *    (its catalog slice: one row per filePath with contentHash,
-  *    chunkCount and lastModified), each with its row count and filePath
-  *    range. `status` is the sum of the entries' counts.
+  *    chunkCount and lastModified; one write's slices share a file),
+  *    each with its row count and filePath range. `status` is the sum of
+  *    the entries' counts.
   *  - A mutation rewrites only the buckets it touches, chunks and catalog
   *    slice, and carries every other entry by reference. Its commit is
   *    the log's compare-and-swap: a writer that lost the race to a commit
@@ -49,9 +51,9 @@ import graft.core.ChunkSchema
   *  - Reads: a pruned read ([[readFiles]], neighbors) opens only the
   *    entries whose bucket and range can hold its files; `listFiles` and
   *    `manifest` collect the catalog once per version (one small scan
-  *    cold, none warm); past versions stay readable until vacuumed, and
-  *    [[changes]] derives a row-level feed from two versions' differing
-  *    entries.
+  *    cold, none warm); every commit keeps the last [[KeepVersions]]
+  *    versions readable, and [[changes]] derives a row-level feed from two
+  *    of them by their differing entries.
   *
   * A version committed in the earlier table layout (`chunks` and `files`
   * directories, or `chunks` alone from before the catalog) still answers
@@ -75,22 +77,21 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * versions the log keeps) */
   def read(version: Long): DataFrame = read(log.manifest(version))
 
-  private[store] def read(m: Manifest): DataFrame =
-    scan(if (tableLayout(m)) m.dirs(Chunks) else paths(m, Chunks), ChunkSchema.schema)
+  private[store] def read(m: Manifest): DataFrame = inBuckets(m, Chunks, AllBuckets)
 
   /** the rows of `filePaths`, reading only the chunk entries whose bucket
     * and filePath range can hold one of them */
-  def readFiles(filePaths: Seq[String]): DataFrame = {
-    val m = log.latest()
-    (if (tableLayout(m)) read(m) else scan(holding(m, filePaths).map(_.path), ChunkSchema.schema))
+  def readFiles(filePaths: Seq[String]): DataFrame =
+    scan(holding(log.latest(), filePaths).map(_.path), ChunkSchema.schema)
       .filter(col("filePath").isInCollection(filePaths))
-  }
 
-  /** `m`'s chunk entries whose bucket and range can hold one of `filePaths` */
+  /** `m`'s chunk entries whose bucket and range can hold one of `filePaths`
+    * (an entry of every bucket, with no range, can hold any) */
   private def holding(m: Manifest, filePaths: Seq[String]): Seq[ManifestEntry] = {
     val byBucket = filePaths.groupBy(bucketOf)
-    of(m, Chunks).filter(e => byBucket.get(e.bucket).exists(_.exists(p =>
-      utf8(e.minPath).compareTo(utf8(p)) <= 0 && utf8(p).compareTo(utf8(e.maxPath)) <= 0)))
+    of(m, Chunks).filter(e => (if (e.bucket == AnyBucket) filePaths else byBucket.getOrElse(e.bucket, Nil))
+      .exists(p => e.minPath == null ||
+        utf8(e.minPath).compareTo(utf8(p)) <= 0 && utf8(p).compareTo(utf8(e.maxPath)) <= 0))
   }
 
   private def scan(dirs: Seq[String], schema: StructType): DataFrame =
@@ -100,22 +101,43 @@ final class ChunkStore(spark: SparkSession, path: String) {
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** `m`'s rows of `table` in `buckets`: their entries, or the whole table
-    * of a version in the table layout (whose every mutation touches every
-    * bucket) */
-  private def inBuckets(m: Manifest, table: String, buckets: Set[Long]): DataFrame =
-    if (tableLayout(m)) (if (table == Chunks) read(m) else catalogFrame(m))
-    else scan(of(m, table).filter(e => buckets(e.bucket)).map(_.path), schemas(table))
+  /** `m`'s rows of `table` in `buckets`, read from their entries (and
+    * the entries of every bucket). The catalog of a version committed
+    * before the catalog existed, chunks and no `files` entry, is derived
+    * from its chunks. */
+  private def inBuckets(m: Manifest, table: String, buckets: Set[Long]): DataFrame = {
+    def in(t: String) = of(m, t).filter(e => e.bucket == AnyBucket || buckets(e.bucket))
+    if (table == Chunks) scan(in(Chunks).map(_.path), ChunkSchema.schema)
+    else if (of(m, Files).isEmpty && of(m, Chunks).nonEmpty)
+      merged(entries(scan(in(Chunks).map(_.path), ChunkSchema.schema), Replacing))
+        .select(FilesSchema.fieldNames.map(col): _*)
+    else slices(in(Files))
+  }
+
+  /** the catalog rows of the `files` entries `es`, in one scan: each
+    * directory's rows of the buckets its entries name (a write's slices
+    * share one directory, and a later write may replace some of them) */
+  private def slices(es: Seq[ManifestEntry]): DataFrame = {
+    val dirs = es.groupBy(_.path).toSeq.sortBy(_._1)
+    if (es.forall(_.bucket == AnyBucket)) scan(dirs.map(_._1), FilesSchema)
+    else scan(dirs.map(_._1), SliceSchema).filter(dirs.map { case (dir, named) =>
+        col("_metadata.file_path").contains(s"/${new HPath(dir).getName}/") &&
+          col(B).isin(named.map(_.bucket): _*)
+      }.reduce(_ || _))
+      .select(FilesSchema.fieldNames.map(col): _*)
+  }
 
   // ---- writes ----
 
-  /** Writes `rows` (the table's columns they carry) as one directory per
-    * bucket and returns the entries of `buckets` that got rows, plus the
-    * values of `extra`: each entry's row count and filePath range, and
-    * `extra`, are observed metrics of the one write. The write lands
-    * partitioned by bucket, and each bucket's directory then moves up
-    * beside the other data directories. `rows` may carry the bucket column
-    * already (sorted by it). */
+  /** Writes `rows` (the table's columns they carry) and returns the
+    * entries of `buckets` that got rows, plus the values of `extra`: each
+    * entry's row count and filePath range, and `extra`, are observed
+    * metrics of the one write. Chunks land partitioned by bucket, and each
+    * bucket's directory then moves up beside the other data directories.
+    * Catalog slices are a few rows each, so one write's slices share one
+    * directory, rows with their bucket column, each entry naming the rows
+    * of its bucket there ([[slices]] reads them). `rows` may carry the
+    * bucket column already (sorted by it). */
   private def writeBuckets(table: String, rows: DataFrame, buckets: Seq[Long],
                            extra: Column*): (Seq[ManifestEntry], Map[String, Any]) = {
     val obs = Observation()
@@ -124,19 +146,21 @@ final class ChunkStore(spark: SparkSession, path: String) {
       Seq(count(when(in, 1)).as(s"n$b"), min(when(in, col("filePath"))).as(s"lo$b"),
         max(when(in, col("filePath"))).as(s"hi$b"))
     } ++: extra
-    val bucketed = if (rows.columns.contains(B)) rows else rows.withColumn(B, bucketCol)
-    val dir = log.write(table, bucketed.observe(obs, stats.head, stats.tail: _*)
-      .select((schemas(table).fieldNames.filter(rows.columns.contains) :+ B).map(col): _*), Seq(B))
+    val bucketed = (if (rows.columns.contains(B)) rows else rows.withColumn(B, bucketCol))
+      .observe(obs, stats.head, stats.tail: _*)
+    val cols = schemas(table).fieldNames.filter(rows.columns.contains)
+    val shared = table == Files
+    val dir = log.write(table, bucketed.select((cols :+ B).map(col): _*), if (shared) Nil else Seq(B))
     val m = obs.get
     def n(b: Long) = m(s"n$b").asInstanceOf[Long]
     val fs = log.fs
     val entries = buckets.filter(n(_) > 0).map { b =>
-      val to = s"$dir-$b"
-      if (!fs.rename(new HPath(log.abs(s"$dir/$B=$b")), new HPath(log.abs(to))))
+      val to = if (shared) dir else s"$dir-$b"
+      if (!shared && !fs.rename(new HPath(log.abs(s"$dir/$B=$b")), new HPath(log.abs(to))))
         throw new java.io.IOException(s"$path: could not move bucket $b of $dir")
       ManifestEntry(table, b, to, m(s"lo$b").asInstanceOf[String], m(s"hi$b").asInstanceOf[String], n(b))
     }
-    fs.delete(new HPath(log.abs(dir)), true)
+    if (!shared || entries.isEmpty) fs.delete(new HPath(log.abs(dir)), true)
     (entries, m)
   }
 
@@ -169,7 +193,7 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * rebases onto the winner when the winner changed none of those
     * buckets, and reruns `write` against it when it did: [[MaxAttempts]]
     * commit attempts in all. `write` returns None when there is nothing
-    * to commit. */
+    * to commit. A commit vacuums the log to [[KeepVersions]] versions. */
   private def mutate(write: Manifest => Option[(Set[Long], Seq[ManifestEntry])]): Unit = {
     var attempts = 0
     var base = log.latest()
@@ -180,7 +204,7 @@ final class ChunkStore(spark: SparkSession, path: String) {
         var cur = base
         while (attempts < MaxAttempts && slice(cur) == slice(base)) {
           val next = Manifest(entries = cur.entries.filterNot(e => buckets(e.bucket)) ++ written)
-          if (log.tryCommit(cur.version + 1, next)) { log.vacuum(); return }
+          if (log.tryCommit(cur.version + 1, next)) { log.vacuum(KeepVersions); return }
           attempts += 1
           cur = log.latest()
         }
@@ -197,6 +221,7 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * written, read back by their keys, so the caller's frame is computed
     * once. */
   def insert(chunks: DataFrame): Unit = mutate { base =>
+    // a version in the table layout has no bucket entry to append to
     val compact = tableLayout(base) || of(base, Chunks).size + Buckets > StoreLog.MaxDirs
     val (added, _) = writeBuckets(Chunks,
       if (!compact) chunks
@@ -258,15 +283,15 @@ final class ChunkStore(spark: SparkSession, path: String) {
   /** Batched upsert — the sync execute path: replace all chunks of every
     * file `newChunks` has rows for AND delete all rows of `deletePaths`, in
     * one commit. The replace set is derived FROM the rows, so the driver
-    * never holds O(dirty files) strings: the merged catalog is written
-    * first, and its observed per-bucket counts of fresh files (plus the
-    * deletes' buckets) name the buckets the commit rewrites. Returns the
-    * number of distinct files the rows cover (the batch's `upserted`
-    * count). Zero-chunk semantics: a file with no rows in `newChunks` is
-    * absent from the replace set, so its existing rows survive; a
-    * prune-only batch passes empty rows. A batch that covers no file and
-    * deletes nothing commits nothing (its catalog directory is debris for
-    * the vacuum). */
+    * never holds O(dirty files) strings: the catalog is merged and written
+    * first, only the slices of the buckets a fresh file or a delete
+    * touches, and its observed per-bucket counts of fresh files name the
+    * buckets the commit rewrites. Returns the number of distinct
+    * files the rows cover (the batch's `upserted` count). Zero-chunk
+    * semantics: a file with no rows in `newChunks` is absent from the
+    * replace set, so its existing rows survive; a prune-only batch passes
+    * empty rows. A batch that covers no file and deletes nothing commits
+    * nothing (its catalog directory is debris for the vacuum). */
   def upsertFilesFromRows(newChunks: DataFrame,
                           deletePaths: Seq[String] = Seq.empty): Long = {
     import spark.implicits._
@@ -274,15 +299,21 @@ final class ChunkStore(spark: SparkSession, path: String) {
     val all = AllBuckets.toSeq.sorted
     var produced = 0L
     mutate { base =>
-      val (slices, m) = writeBuckets(Files, merged(
-          inBuckets(base, Files, AllBuckets).withColumn("_src", lit(Base))
-            .unionByName(local(deletes, FilesSchema).withColumn("_src", lit(Removing)))
-            .unionByName(entries(newChunks, Replacing))).coalesce(1),
+      val deleting = touched(base, deletePaths.map(bucketOf).toSet)
+      // one task merges the catalog and writes the slices of the buckets
+      // a fresh file or a delete touches (its one partition needs no
+      // exchange for the per-bucket window)
+      val catalog = merged(inBuckets(base, Files, AllBuckets).withColumn("_src", lit(Base))
+          .unionByName(local(deletes, FilesSchema).withColumn("_src", lit(Removing)))
+          .unionByName(entries(newChunks, Replacing))).coalesce(1)
+        .withColumn(B, bucketCol)
+      val (slices, m) = writeBuckets(Files, catalog.withColumn("_touched",
+          max(col("_fresh")).over(Window.partitionBy(B)) || col(B).isin(deleting.toSeq: _*))
+          .filter(col("_touched")),
         all, count(when(col("_fresh"), 1)).as("fresh") +:
           all.map(b => count(when(col("_fresh") && col(B) === b, 1)).as(s"fresh$b")): _*)
       produced = m("fresh").asInstanceOf[Long]
-      val buckets = touched(base, all.filter(b => m(s"fresh$b").asInstanceOf[Long] > 0).toSet ++
-        deletePaths.map(bucketOf))
+      val buckets = deleting ++ all.filter(b => m(s"fresh$b").asInstanceOf[Long] > 0)
       if (produced == 0L && deletePaths.isEmpty) None
       else {
         // no broadcast hint: the derived key set is unbounded (every dirty
@@ -295,7 +326,7 @@ final class ChunkStore(spark: SparkSession, path: String) {
             .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*))
             .withColumn(B, bucketCol).repartition(Buckets, col(B)),
           buckets.toSeq.sorted)
-        Some((buckets, chunks ++ slices.filter(e => buckets(e.bucket))))
+        Some((buckets, chunks ++ slices))
       }
     }
     produced
@@ -322,28 +353,17 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   // ---- the catalog ----
 
-  /** `m`'s catalog as a Spark scan: its slices, its `files` table, or — for
-    * a version committed before the catalog existed — the same entries
-    * derived from its chunks */
-  private def catalogFrame(m: Manifest): DataFrame =
-    if (!tableLayout(m) || m.dirs(Files).nonEmpty)
-      scan(if (tableLayout(m)) m.dirs(Files) else paths(m, Files), FilesSchema)
-    else merged(entries(read(m), Replacing)).select(FilesSchema.fieldNames.map(col): _*)
-
   /** `m`'s catalog collected and sorted by filePath, memoized on the
-    * immutable directories it is read from */
-  private def catalog(m: Manifest): IndexedSeq[Row] = {
-    val dirs = (if (!tableLayout(m)) paths(m, Files)
-      else if (m.dirs(Files).nonEmpty) m.dirs(Files) else m.dirs(Chunks)).map(log.abs)
-    if (dirs.isEmpty) IndexedSeq.empty
-    else StoreLog.memo(s"catalog@${dirs.mkString(",")}")(
-      catalogFrame(m).collect().toIndexedSeq.sortBy(r => utf8(r.getString(0))))
-  }
+    * immutable directories (and buckets) it is read from */
+  private def catalog(m: Manifest): IndexedSeq[Row] =
+    Seq(Files, Chunks).map(of(m, _).map(e => s"${log.abs(e.path)}#${e.bucket}")).find(_.nonEmpty)
+      .fold(IndexedSeq.empty[Row])(named => StoreLog.memo(s"catalog@${named.mkString(",")}")(
+        inBuckets(m, Files, AllBuckets).collect().toIndexedSeq.sortBy(r => utf8(r.getString(0)))))
 
   /** the latest version's catalog (filePath, contentHash, chunkCount,
     * lastModified) as a Spark scan — O(files) rows for the distributed
     * sync route, never collected */
-  def files(): DataFrame = catalogFrame(log.latest())
+  def files(): DataFrame = inBuckets(log.latest(), Files, AllBuckets)
 
   /** per-file listing (reference `listFiles`, `src/vectordb/index.ts:511-556`):
     * (filePath, chunkCount, lastModified) sorted by filePath, as a local
@@ -352,13 +372,16 @@ final class ChunkStore(spark: SparkSession, path: String) {
     local(catalog(log.latest()).map(r => Row(r.get(0), r.get(2), r.get(3))), ListSchema)
 
   /** status counts (reference `src/vectordb/index.ts:585-595`): (chunks,
-    * files) summed over the version's entries — no Spark job */
+    * files) summed over the version's entries — no Spark job. A version
+    * in the table layout records no count per directory: its counts come
+    * from its memoized catalog. */
   def status(): (Long, Long) = status(log.latest())
 
-  private[store] def status(m: Manifest): (Long, Long) =
-    if (!tableLayout(m)) (of(m, Chunks).map(_.nRows).sum, of(m, Files).map(_.nRows).sum)
-    else if (m.dirs(Files).nonEmpty) (m.stat(NChunks), m.stat(NFiles))
+  private[store] def status(m: Manifest): (Long, Long) = {
+    val (chunks, files) = (of(m, Chunks), of(m, Files))
+    if ((chunks ++ files).forall(_.nRows >= 0)) (chunks.map(_.nRows).sum, files.map(_.nRows).sum)
     else { val c = catalog(m); (c.map(_.getLong(2)).sum, c.size.toLong) }
+  }
 
   /** manifest projection for sync (reference `listChunkHashes`,
     * `src/vectordb/index.ts:480-504`): one (filePath, contentHash) row per
@@ -375,19 +398,19 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * the table layout is rewritten into buckets. */
   def optimize(maxFragments: Int = 4): Unit = mutate { base =>
     val fs = log.fs
-    val buckets =
-      if (tableLayout(base)) AllBuckets
-      else of(base, Chunks).groupBy(_.bucket).collect { case (b, es) if es.map(e =>
-        fs.listStatus(new HPath(log.abs(e.path))).count(_.getPath.getName.endsWith(".parquet")))
-        .sum > maxFragments => b }.toSet
+    val buckets = touched(base, of(base, Chunks).groupBy(_.bucket).collect { case (b, es) if es.map(e =>
+      fs.listStatus(new HPath(log.abs(e.path))).count(_.getPath.getName.endsWith(".parquet")))
+      .sum > maxFragments => b }.toSet)
     if (buckets.isEmpty) None
     else {
       val bs = buckets.toSeq.sorted
       val (chunks, _) = writeBuckets(Chunks, inBuckets(base, Chunks, buckets)
         .withColumn(B, bucketCol).repartition(Buckets, col(B))
         .sortWithinPartitions(B, "filePath", "chunkIndex"), bs)
+      // the slices carry over; a version in the table layout has none, so
+      // its catalog is written into buckets
       val files =
-        if (tableLayout(base)) writeBuckets(Files, catalogFrame(base).coalesce(1), bs)._1
+        if (tableLayout(base)) writeBuckets(Files, inBuckets(base, Files, buckets).coalesce(1), bs)._1
         else of(base, Files).filter(e => buckets(e.bucket))
       Some((buckets, chunks ++ files))
     }
@@ -417,12 +440,8 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * delete. Returns `to`-schema rows plus `_change_type`. */
   def changes(from: Long, to: Long): DataFrame = {
     val (added, removed) = diff(from, to)
-    def side(v: Long, es: Seq[ManifestEntry]) = {
-      val m = log.manifest(v)
-      if (tableLayout(m)) read(m) else scan(es.map(_.path), ChunkSchema.schema)
-    }
-    val before = side(from, removed)
-    val after = side(to, added)
+    val before = scan(removed.map(_.path), ChunkSchema.schema)
+    val after = scan(added.map(_.path), ChunkSchema.schema)
     val beforeKeys = before.select(col("id"), col("contentHash").as("_old_hash"))
     val inserts = after.join(beforeKeys.select("id"), Seq("id"), "left_anti")
       .withColumn("_change_type", lit("insert"))
@@ -438,19 +457,21 @@ final class ChunkStore(spark: SparkSession, path: String) {
   }
 
   /** The latest version's entries checked against the filesystem: each
-    * must exist and hold the row count it records. Returns the problems
-    * (empty = clean), from one column-pruned count per table. */
+    * must exist and hold the row count it records for its bucket. Returns
+    * the problems (empty = clean), from one column-pruned count per table. */
   def scrub(): Seq[String] = {
     val m = log.latest()
     val fs = log.fs
     val (present, missing) = m.entries.partition(e => fs.exists(new HPath(log.abs(e.path))))
     missing.map(e => s"missing data file: ${e.path}") ++
       present.groupBy(_.table).toSeq.flatMap { case (table, es) =>
-        val counts = scan(es.map(_.path), schemas(table))
-          .groupBy(input_file_name().as("f")).agg(count(lit(1)))
-          .collect().groupMapReduce(r => new HPath(r.getString(0)).getParent.getName)(_.getLong(1))(_ + _)
+        // per directory and bucket: a write's catalog slices share one
+        val counts = scan(es.map(_.path).distinct, schemas(table))
+          .groupBy(input_file_name().as("f"), bucketCol.as("b")).agg(count(lit(1)))
+          .collect().groupMapReduce(r =>
+            (new HPath(r.getString(0)).getParent.getName, r.getLong(1)))(_.getLong(2))(_ + _)
         es.flatMap { e =>
-          val actual = counts.getOrElse(new HPath(e.path).getName, 0L)
+          val actual = counts.getOrElse((new HPath(e.path).getName, e.bucket), 0L)
           if (actual == e.nRows) None
           else Some(s"row-count drift: ${e.path} manifest=${e.nRows} actual=$actual")
         }
@@ -483,6 +504,11 @@ object ChunkStore {
   /** most commit attempts of one mutation */
   private val MaxAttempts = 20
 
+  /** the versions every commit keeps: time travel and the change feed
+    * reach back three commits, and a reader that resolved any of them
+    * keeps reading it */
+  val KeepVersions = 4
+
   def bucketOf(filePath: String): Long =
     math.floorMod(graft.ops.Dedup.hash60Scala(filePath), Buckets.toLong)
 
@@ -493,16 +519,19 @@ object ChunkStore {
 
   private val Chunks = "chunks"
   private val Files = "files"
-  private val NChunks = "n_chunks"
-  private val NFiles = "n_files"
+
+  /** the bucket of an entry that holds rows of every bucket */
+  private val AnyBucket = -1L
 
   /** a version committed before the bucket layout: `chunks` (and `files`)
     * directories instead of entries */
   private def tableLayout(m: Manifest): Boolean = m.entries.isEmpty && m.tables.nonEmpty
 
-  private def of(m: Manifest, table: String): Seq[ManifestEntry] = m.entries.filter(_.table == table)
-
-  private def paths(m: Manifest, table: String): Seq[String] = of(m, table).map(_.path)
+  /** `m`'s entries of `table`. A version in the table layout reads as one
+    * entry per directory, of every bucket, with no range or row count. */
+  private def of(m: Manifest, table: String): Seq[ManifestEntry] =
+    if (tableLayout(m)) m.dirs(table).map(ManifestEntry(table, AnyBucket, _, null, null, -1L))
+    else m.entries.filter(_.table == table)
 
   /** the buckets a mutation of `m` rewrites: `mine`, or every bucket of a
     * version in the table layout */
@@ -517,6 +546,9 @@ object ChunkStore {
     StructField("contentHash", StringType),
     StructField("chunkCount", LongType, nullable = false),
     StructField("lastModified", StringType)))
+
+  /** a catalog file's rows: the `files` table plus the bucket column */
+  private val SliceSchema: StructType = FilesSchema.add(StructField(B, LongType, nullable = false))
 
   private val schemas = Map(Chunks -> ChunkSchema.schema, Files -> FilesSchema)
 

@@ -9,8 +9,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** One directory of one bucket of a [[ChunkStore]] table (`chunks` or its
-  * `files` catalog slice), with its row count and filePath range */
+/** One bucket's rows of a [[ChunkStore]] table: a `chunks` directory, or
+  * the directory holding its `files` catalog slice (one write's slices
+  * share one), with the bucket's row count and filePath range */
 final case class ManifestEntry(table: String, bucket: Long, path: String,
                                minPath: String, maxPath: String, nRows: Long)
 

@@ -788,13 +788,16 @@ class EngineSpec extends AnyFunSuite {
     // one mutation commits a new version of every store
     write(s"$root/a.md", "# A\nRewritten: executors shuffle blocks between stages.")
     assert(engine.sync().upserted === 1L)
-    for ((data, previous, stale, fresh) <- planted) {
+    // the chunk store keeps its last ChunkStore.KeepVersions versions, the
+    // index stores their last two
+    val keeps = Seq(graft.store.ChunkStore.KeepVersions, 2, 2)
+    for (((data, previous, stale, fresh), keep) <- planted.zip(keeps)) {
       assert(!stale.exists, s"stale unreferenced directory kept: $stale")
       assert(fresh.exists, s"fresh unreferenced directory (possible in-flight write) swept: $fresh")
       assert(previous.forall(d => new java.io.File(data, d).exists),
         s"the previous version's directories must stay for in-flight readers: $data")
       assert(new java.io.File(data.getParentFile, "_log").list()
-        .count(_.endsWith(".json")) <= 2)
+        .count(_.endsWith(".json")) <= keep)
     }
     assert(engine.queryDocuments("executors shuffle").count() > 0)
   }

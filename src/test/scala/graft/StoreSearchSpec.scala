@@ -165,9 +165,12 @@ class StoreSearchSpec extends AnyFunSuite {
     assert(fresh.exists, "fresh unreferenced directory (possible in-flight write) kept")
     assert(superseded.forall(d => new java.io.File(data, d).exists),
       "the previous version's directories stay for in-flight readers")
-    assert(new java.io.File(base, "_log").list().count(_.endsWith(".json")) === 2)
-    // one more commit drops the previous version: its aged directories go
+    assert(new java.io.File(base, "_log").list().count(_.endsWith(".json")) === ChunkStore.KeepVersions)
+    // KeepVersions - 1 more commits drop the previous version, the last one
+    // that names them: their aged directories go
     st.deleteFile(files.head)
+    (2 until ChunkStore.KeepVersions).foreach(gen =>
+      st.upsertFile(files(1), Seq(mkChunk(files(1), 0, s"gen 6.$gen of ${files(1)}")).toDF()))
     assert(superseded.forall(d => !new java.io.File(data, d).exists),
       "directories no kept version references are swept once aged")
     assert(st.read().select("filePath").distinct().count() === 3L)

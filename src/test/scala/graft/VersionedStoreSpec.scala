@@ -133,10 +133,12 @@ class VersionedStoreSpec extends AnyFunSuite {
 
   test("concurrent writers to disjoint buckets all commit (CAS + rebase)") {
     val st = tmpStore()
-    // upsert one file into every bucket concurrently; rebase must absorb
-    // the CAS races without losing any writer's data
-    val n = ChunkStore.Buckets
-    val files = distinctBuckets("/corpus/par", n)
+    // run 8 upserts of distinct files concurrently, two per bucket: a
+    // writer that lost to a commit in another bucket rebases, one that
+    // lost to its bucket's other writer reruns; no writer's data is lost
+    val n = 2 * ChunkStore.Buckets
+    val files = distinctBuckets("/corpus/par", ChunkStore.Buckets) ++
+      distinctBuckets("/corpus/qar", ChunkStore.Buckets)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -326,6 +328,12 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(ch2 === Map(
       "/c/a.md-1" -> "delete",
       "/c/a.md-2" -> "delete"))
+    // full-span feed composes: v0 → v3 sees b.md's insert and a.md's net state
+    val span = st.changes(0L, 3L)
+      .select("id", "_change_type").as[(String, String)].collect().toMap
+    assert(span("/c/b.md-0") === "insert")
+    assert(span("/c/a.md-0") === "update_postimage")
+    assert(span("/c/a.md-1") === "delete")
   }
 
   test("scrub: clean table passes; a deleted data file is named precisely") {
@@ -493,6 +501,32 @@ class VersionedStoreSpec extends AnyFunSuite {
     mv.prune(keep = 1)
     assert(mv.refreshedVersions().size === 1)
     assert(mv.read().count() === 2L)
+  }
+
+  test("materialized view: a view whose version the store no longer keeps recomputes in full") {
+    import graft.store.MaterializedView
+    val root = Files.createTempDirectory("mvkept").toString
+    val st = new ChunkStore(spark, s"$root/table")
+    val mv = new MaterializedView(spark, st, s"$root/view", "filePath",
+      Seq(count(lit(1)).as("n_chunks")))
+    def add(f: String): Unit = st.upsertFile(f, Seq(mkChunk(f, 0, s"text of $f")).toDF())
+    val keep = ChunkStore.KeepVersions
+    add("/k/a.md")
+    assert(mv.refresh().mode === "full")
+    // keep - 1 commits later the view's version is still kept: the change
+    // feed spans the gap
+    (1 until keep).foreach(i => add(s"/k/b$i.md"))
+    val inc = mv.refresh()
+    assert(inc.mode === "incremental" && inc.recomputedGroups === keep - 1L)
+    // keep commits later the vacuum has dropped it: no feed reaches back
+    (0 until keep).foreach(i => add(s"/k/c$i.md"))
+    assert(!st.versions().contains(inc.storeVersion))
+    val full = mv.refresh()
+    assert(full.mode === "full")
+    assert(full.df.orderBy("filePath").as[(String, Long)].collect().toSeq ===
+      st.read().groupBy("filePath").agg(count(lit(1)).as("n_chunks"))
+        .orderBy("filePath").as[(String, Long)].collect().toSeq)
+    assert(full.df.count() === 2L * keep)
   }
 
   test("materialized view: multi-column groups and torn-refresh recovery") {

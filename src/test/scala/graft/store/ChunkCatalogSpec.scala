@@ -149,7 +149,7 @@ class ChunkCatalogSpec extends AnyFunSuite {
     assert(answers(st) === aggregates(st.read()))
     assert(st.status() === ((3L, 2L)))
     val (_, rec) = Profile.window(spark.sparkContext)(st.status())
-    assert(rec.jobs.isEmpty, "status reads the version's stats")
+    assert(rec.jobs.isEmpty, "warm: the version's catalog is memoized")
     assert(st.readFiles(Seq("/t/b.md")).count() === 1L)
 
     st.deleteFile("/t/b.md")

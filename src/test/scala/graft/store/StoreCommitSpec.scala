@@ -253,21 +253,25 @@ class StoreCommitSpec extends AnyFunSuite {
           val counted = (rows.count(), rows.select("filePath").distinct().count())
           if (st.status(m) != counted) mismatched.add(s"v${m.version}: ${st.status(m)} vs $counted")
           val chunks = rows.groupBy("filePath").count().collect()
-            .map(r => (ChunkStore.bucketOf(r.getString(0)), r.getString(0), r.getLong(1))).toSet
-          val slices = m.entries.filter(_.table == "files").map(e =>
-              spark.read.parquet(log.abs(e.path))
-                .select(lit(e.bucket).as("b"), col("filePath"), col("chunkCount")))
-            .reduce(_ union _).collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-          if (slices != chunks) mismatched.add(s"v${m.version}: slices ${slices -- chunks} vs chunks ${chunks -- slices}")
+            .map(r => (ChunkStore.bucketOf(r.getString(0)), r.getString(0), r.getLong(1))).toSeq.sorted
+          // a slice is its directory's rows of its bucket (one write's
+          // slices share a directory)
+          val slices = m.entries.filter(_.table == "files").flatMap(e =>
+              spark.read.parquet(log.abs(e.path)).select("filePath", "chunkCount").collect()
+                .map(r => (e.bucket, r.getString(0), r.getLong(1))).filter(t => ChunkStore.bucketOf(t._2) == e.bucket))
+            .sorted
+          if (slices != chunks) mismatched.add(s"v${m.version}: slices ${slices.diff(chunks)} vs chunks ${chunks.diff(slices)}")
         } catch { case t: Throwable => failures.add(t) }
       }
     })
-    def writer(files: Seq[String], rebuild: Boolean) = new Thread(() =>
+    // both rebuild the FTS index after each upsert (20 rebuilds), one
+    // rebuild at a time: the index's commit has one writer
+    def writer(files: Seq[String]) = new Thread(() =>
       try files.take(10).foreach { f =>
         st.upsertFile(f, Seq(chunk(f, 0, s"spark write $f")).toDF())
-        if (rebuild) fts.rebuild(st.read())
+        fts.synchronized(fts.rebuild(st.read()))
       } catch { case t: Throwable => failures.add(t) })
-    val writers = Seq(writer(even, rebuild = true), writer(odd, rebuild = false))
+    val writers = Seq(writer(even), writer(odd))
     reader.start()
     try { writers.foreach(_.start()); writers.foreach(_.join()) }
     finally { done.set(true); reader.join() }
