@@ -40,16 +40,17 @@ final class Engine(
 
   val store = new ChunkStore(spark, storePath)
   private val rawDataDir = storePath + "-raw-data"
-  /** persisted FTS index, rebuilt once per mutation batch (the reference's
-    * optimize() cadence — never once per file) */
+  /** persisted FTS index, refreshed once per mutation batch (the
+    * reference's optimize() cadence — never once per file): the buckets
+    * whose chunk entries changed are rebuilt */
   private[graft] val ftsIndex =
     new graft.store.FtsIndexStore(spark, storePath + "-fts")
   /** persisted IVF ANN index on the same refresh cadence — the reference
     * keeps its vector index inside the store and queries it with an ANN
     * scan, never a full scan (`src/vectordb/index.ts:352-353`). Recall is
-    * tuned by annProbes/annLists. Below `annThreshold` chunks a refresh
-    * trains nothing and drops the index (the rebuild's own row count
-    * decides), and queries brute-force (exact, and cheaper than probe
+    * tuned by annProbes/annLists. Below `annThreshold` chunks (the count
+    * the chunk store's manifest records) a refresh trains nothing and drops
+    * the index, and queries brute-force (exact, and cheaper than probe
     * overhead at tool scale). */
   private[graft] val annIndex =
     new graft.store.AnnIndexStore(spark, storePath + "-ann")
@@ -130,14 +131,15 @@ final class Engine(
     try body finally spark.sparkContext.setJobDescription(prev)
   }
 
-  /** rebuild both indexes from one open of the chunk table. The ANN
-    * rebuild takes `annThreshold` as its minimum row count, so below the
-    * threshold its one count drops the index before any training. */
+  /** refresh both indexes: the FTS index rebuilds only the buckets whose
+    * chunk entries changed, in one job. The ANN index routes on the chunk
+    * count the manifest records: below `annThreshold` it is dropped with no
+    * Spark job, above it rebuilt. */
   private def refreshIndexes(): Unit = {
-    val chunks = store.read()
-    describing("graft index: FTS rebuild") { ftsIndex.rebuild(chunks) }
+    describing("graft index: FTS refresh") { ftsIndex.refresh(store) }
     describing("graft index: ANN refresh") {
-      annIndex.rebuild(chunks, annLists, minRows = annThreshold)
+      if (store.status()._1 < annThreshold) annIndex.drop()
+      else annIndex.rebuild(store.read(), annLists)
     }
   }
   private def embedder: Embedder = mkEmbedder()

@@ -308,7 +308,8 @@ object RagQueries {
         // chunk-table count (1:1 join by construction). The corpus count is
         // signature-memoized (SourceStamp) and FtsIndexStore.nDocs is a
         // manifest read: when nothing changed, the probe costs zero Spark
-        // jobs
+        // jobs. An index cached in an earlier layout reads as absent (-1),
+        // so it is rebuilt
         val stale = fts.nDocs() != graft.core.SourceStamp.memoLong(
           s"$d/embeddings.parquet", "count")(Tables.embeddings(s, d).count())
         if (stale) fts.rebuild(ch)

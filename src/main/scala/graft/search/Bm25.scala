@@ -17,11 +17,13 @@ import org.apache.spark.sql.functions._
   * Lucene BM25 form ln(1 + (N - df + 0.5)/(df + 0.5)), which is what
   * Tantivy implements.
   *
-  * Scale shape: postings are (id, token, tf), built by explode + groupBy
-  * (one shuffle, map-side combined). A hybrid query reads only its tokens'
-  * postings (predicate pushdown) in one pass that counts each token's df
-  * and keeps the hit files' postings ([[queryTerms]]), then scores the
-  * collected terms on the driver ([[scoreTerms]]).
+  * Scale shape: postings are (id, token, tf, dl), built row by row with no
+  * shuffle: each document's term counts, exploded, each posting carrying
+  * its document's length ([[docTerms]], [[postings]]). A hybrid query
+  * reads only its tokens' postings (predicate pushdown) in one pass that
+  * counts each token's df and keeps the hit files' postings with their
+  * lengths ([[queryTerms]]), then scores the collected terms on the driver
+  * ([[scoreTerms]]).
   */
 object Bm25 {
 
@@ -42,31 +44,41 @@ object Bm25 {
     concat(grams: _*)
   }
 
-  /** A prebuilt FTS index: token postings, per-doc lengths, corpus stats.
-    * This is the batch-index-build shape (BASELINE's "batch index build via
-    * DataFrame ops"): all three are plain DataFrames, persistable as parquet
-    * next to the chunk table and incrementally rebuildable per upsert batch.
-    * [[graft.store.FtsIndexStore]] persists the postings range-partitioned
-    * by `tok` and sorted within each file: the precondition for min/max
-    * skipping on a query's tokens, though at engine sizes the ranges
-    * coalesce into one file and a lookup still scans every posting. */
-  final case class Index(postings: DataFrame, docLens: DataFrame, stats: DataFrame)
+  /** A prebuilt FTS index: postings (ids…, tok, tf, dl) and the corpus
+    * stats (n_docs, sum_dl). This is the batch-index-build shape
+    * (BASELINE's "batch index build via DataFrame ops"): plain DataFrames,
+    * persistable as parquet next to the chunk table
+    * ([[graft.store.FtsIndexStore]] keeps them per bucket). */
+  final case class Index(postings: DataFrame, stats: DataFrame) {
+    /** (ids…, dl) per document: a projection of the postings, which carry
+      * their document's length */
+    def docLens: DataFrame = Bm25.docLens(postings)
+  }
 
-  /** build the (postings, docLens, stats) index for a corpus */
+  private def docLens(postings: DataFrame): DataFrame =
+    postings.select(postings.columns.filterNot(Set("tok", "tf")).map(col): _*).distinct()
+
+  private val termCounts = udf((toks: Seq[String]) => toks.groupMapReduce(identity)(_ => 1L)(_ + _))
+
+  /** Each document's term counts, computed row by row: (keep…, dl, terms),
+    * `terms` a token → tf map and `dl` the document's token count.
+    * Documents without tokens have no row. A posting's identity is its
+    * row: the key columns must be unique per row of `docs` (a key on two
+    * rows gives two postings per token, not one with the summed count). */
+  def docTerms(docs: DataFrame, keep: Seq[String], tokens: Column): DataFrame =
+    docs.select(keep.map(col) :+ tokens.as("_toks"): _*).filter(size(col("_toks")) > 0)
+      .select(keep.map(col) ++ Seq(size(col("_toks")).cast("long").as("dl"),
+        termCounts(col("_toks")).as("terms")): _*)
+
+  /** the postings (keep…, tok, tf, dl) of [[docTerms]] rows */
+  def postings(terms: DataFrame, keep: Seq[String]): DataFrame =
+    terms.select(keep.map(col) ++ Seq(explode(col("terms")).as(Seq("tok", "tf")), col("dl")): _*)
+
+  /** build the (postings, stats) index for a corpus whose `idCols` are
+    * unique per row ([[docTerms]]) */
   def buildIndex(docs: DataFrame, idCols: Seq[String], tokens: Column): Index = {
-    val idc = idCols.map(col)
-    val toks = docs.select(idc :+ explode(tokens).as("tok"): _*)
-    val postings = toks.groupBy(idc :+ col("tok"): _*).agg(count(lit(1)).as("tf"))
-    // doc length = Σtf over the doc's postings — derived FROM postings
-    // instead of a second groupBy over the raw token stream, so the
-    // tokenize+explode of the corpus is evaluated once, not twice (the
-    // r16 ANN-rebuild lineage lesson on the FTS path). Identical values:
-    // both shapes drop zero-token docs through the same explode. When
-    // postings is persisted (store rebuild) dl reads the cache; in one
-    // ad-hoc plan the shared postings exchange is ReusedExchange-deduped.
-    val dl = postings.groupBy(idc: _*).agg(sum("tf").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-    Index(postings, dl, stats)
+    val postings = Bm25.postings(docTerms(docs, idCols, tokens), idCols)
+    Index(postings, docLens(postings).agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl")))
   }
 
   /** BM25 scores for `queryTokens` from a prebuilt index, as a lazy
@@ -84,7 +96,6 @@ object Bm25 {
     val dfreq = tf.groupBy("tok")
       .agg(countDistinct(concat_ws(" ", idc: _*)).as("df"))
     tf.join(broadcast(dfreq), "tok")
-      .join(idx.docLens, idCols)
       .crossJoin(broadcast(idx.stats))
       .withColumn("avgdl", col("sum_dl") / col("n_docs"))
       .withColumn("idf",
@@ -109,50 +120,41 @@ object Bm25 {
       (n + r.getLong(0), s + (if (r.isNullAt(1)) 0L else r.getLong(1)))
     }
 
-  /** The query's BM25 inputs for the documents of `files`, in two Spark
-    * jobs over the (filePath, chunkIndex)-keyed postings and doc-length
-    * tables of an [[Index]]: one postings scan
-    * filtered to the query's tokens that counts each token's global df and
-    * keeps the postings inside `files`, then the doc lengths of the matched
-    * documents. `stats` is (n_docs, sum_dl). Both collects are bounded: the
-    * matched postings by the tokens times the matched documents
-    * ([[graft.core.DriverProbe]]). */
-  def queryTerms(postingTable: DataFrame, docLenTable: DataFrame,
-                 queryTokens: Seq[String], files: Seq[String],
+  /** The query's BM25 inputs for the documents of `files`, in one Spark
+    * job over (filePath, chunkIndex)-keyed postings that carry their
+    * document's length: one scan filtered to the query's tokens counts each
+    * token's global df and keeps the postings, with their lengths, inside
+    * `files`. `stats` is (n_docs, sum_dl). The collect is bounded by the
+    * tokens times the matched documents ([[graft.core.DriverProbe]]). */
+  def queryTerms(postingTable: DataFrame, queryTokens: Seq[String], files: Seq[String],
                  stats: (Long, Long)): QueryTerms = {
     val tokens = queryTokens.distinct
     val fileSet = files.toSet
     val parts = postingTable.filter(col("tok").isin(tokens: _*))
-      .select(col("tok"), col("filePath"), col("chunkIndex"), col("tf").cast("long"))
+      .select(col("tok"), col("filePath"), col("chunkIndex"), col("tf").cast("long"),
+        col("dl").cast("long"))
       .rdd.mapPartitions { rows =>
         val df = scala.collection.mutable.HashMap.empty[String, Long]
-        val kept = Vector.newBuilder[((String, Int), String, Long)]
+        val kept = Vector.newBuilder[((String, Int), String, Long, Long)]
         rows.foreach { r =>
           val (tok, file) = (r.getString(0), r.getString(1))
           df(tok) = df.getOrElse(tok, 0L) + 1L
-          if (fileSet(file)) kept += (((file, r.getInt(2)), tok, r.getLong(3)))
+          if (fileSet(file)) kept += (((file, r.getInt(2)), tok, r.getLong(3), r.getLong(4)))
         }
         Iterator((df.toMap, kept.result()))
       }.collect()
-    val df = parts.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
-    val postings = parts.toSeq.flatMap(_._2)
-    val docs = postings.map(_._1).distinct
-    val docLens =
-      if (docs.isEmpty) Map.empty[(String, Int), Long]
-      else {
-        docLenTable.filter(graft.core.ChunkSchema.keyIn(docs))
-          .select("filePath", "chunkIndex", "dl").collect()
-          .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-      }
-    graft.core.DriverProbe.record("query_keyword_postings", postings.size.toLong,
+    val kept = parts.toSeq.flatMap(_._2)
+    val docLens = kept.map(p => p._1 -> p._4).toMap
+    graft.core.DriverProbe.record("query_keyword_postings", kept.size.toLong,
       tokens.size.toLong * docLens.size)
-    QueryTerms(stats._1, stats._2, df, postings, docLens)
+    QueryTerms(stats._1, stats._2, parts.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _),
+      kept.map(p => (p._1, p._2, p._3)), docLens)
   }
 
   /** The query's BM25 inputs when no persisted index exists: the values
     * [[queryTerms]] reads from the [[buildIndex]] of a chunk table's `text`
     * ([[wordTokens]]; (filePath, chunkIndex) keys distinct), in one Spark
-    * job over the tokenized rows instead of three over a rebuilt index.
+    * job over the tokenized rows, with no index built.
     * Each partition counts its documents with tokens, their lengths and the
     * query tokens' document frequencies, and keeps the lengths and
     * query-token postings of the matching documents inside `files`. */
@@ -184,13 +186,12 @@ object Bm25 {
   /** BM25 per document from collected [[QueryTerms]] — the arithmetic of
     * [[scoreIndexed]] evaluated in the same order (StrictMath.log, as
     * Spark's `log`), with each document's terms summed in query-token
-    * order. Documents without a length row score nothing, as the inner
-    * join drops them there. */
+    * order. */
   def scoreTerms(t: QueryTerms, queryTokens: Seq[String],
                  p: Params = Params()): Map[(String, Int), Double] = {
     val avgdl = t.sumDl.toDouble / t.nDocs.toDouble
     val order = queryTokens.distinct.zipWithIndex.toMap
-    t.postings.filter(x => t.docLens.contains(x._1)).groupBy(_._1).map { case (doc, ps) =>
+    t.postings.groupBy(_._1).map { case (doc, ps) =>
       val dl = t.docLens(doc).toDouble
       doc -> ps.sortBy(x => order(x._2)).foldLeft(0.0) { case (acc, (_, tok, tf0)) =>
         val dfq = t.df(tok)

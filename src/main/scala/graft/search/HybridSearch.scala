@@ -227,8 +227,8 @@ object HybridSearch {
     // exactly that restricted set (`search-filters.ts:121-135`)
     def keywordScores(files: Seq[String]): Map[(String, Int), Double] =
       Bm25.scoreTerms(ftsIndex.fold(Bm25.adHocTerms(chunks, p.queryTokens, files))(idx =>
-        Bm25.queryTerms(idx.postings, idx.docLens, p.queryTokens, files,
-          Bm25.sumStats(idx.stats))), p.queryTokens)
+        Bm25.queryTerms(idx.postings, p.queryTokens, files, Bm25.sumStats(idx.stats))),
+        p.queryTokens)
     onHits(candidates, "score",
       (r, _) => (r.getAs[String]("filePath"), r.getAs[Int]("chunkIndex")), Seq(Boosted))(
       searchHits(_, p, keywordScores).map(h => h -> Seq(h.boosted)))

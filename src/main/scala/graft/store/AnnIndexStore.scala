@@ -9,9 +9,9 @@ import graft.search.VectorSearch
 /** Persisted IVF ANN index next to the chunk table — the scale twin of the
   * brute-force vector scan behind the SAME query API (reference ANN scan,
   * `src/vectordb/index.ts:352-353`; SURVEY §7 step 7 "swap brute-force top-k
-  * behind the same API"). Refresh cadence matches [[FtsIndexStore]]: one
-  * full rebuild per mutation batch, published with one [[StoreLog]]
-  * commit.
+  * behind the same API"). Refresh cadence matches [[FtsIndexStore]]'s, one
+  * refresh per mutation batch; here it is a full rebuild, published with
+  * one [[StoreLog]] commit.
   *
   * Each version names two tables and carries the row count:
   *  - `assignments` — (idCols…, vector, list_id), partitioned by
@@ -38,11 +38,11 @@ final class AnnIndexStore(
   def drop(): Unit = log.drop()
 
   /** full rebuild: train the coarse quantizer, assign every vector, publish
-    * both tables in one commit. Below max(2, `minRows`) rows its one count
-    * drops the index before any training — the query path falls back to
-    * the brute-force scan. `nLists` is clamped to the row count (KMeans
-    * cannot seed more centers than points). */
-  def rebuild(rows: DataFrame, nLists: Int, seed: Long = 42L, minRows: Long = 2L): Unit = {
+    * both tables in one commit. Below 2 rows its one count drops the index
+    * before any training — the query path falls back to the brute-force
+    * scan. `nLists` is clamped to the row count (KMeans cannot seed more
+    * centers than points). */
+  def rebuild(rows: DataFrame, nLists: Int, seed: Long = 42L): Unit = {
     import spark.implicits._
     // The slim (ids, vector) projection is PERSISTED for the whole train+
     // assign window: KMeans consumes it many times (the distinct-count
@@ -58,9 +58,8 @@ final class AnnIndexStore(
     try {
       // one job that fills the cache (Dataset.count under AQE runs three)
       val n = src.queryExecution.toRdd.count()
-      // KMeans needs k >= 2; below the caller's minimum the query path's
-      // brute-force scan serves, so there is nothing to train
-      if (n < math.max(2L, minRows)) { drop(); return }
+      // KMeans needs k >= 2
+      if (n < 2L) { drop(); return }
       val base = log.latest()
       val idx = Similarity.buildIvfCols(src, idCols, vecCol,
         math.min(nLists.toLong, n).toInt, seed, rowCount = Some(n))

@@ -79,6 +79,21 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   private[store] def read(m: Manifest): DataFrame = inBuckets(m, Chunks, AllBuckets)
 
+  /** `m`'s rows of `buckets`, read from their chunk entries and those of
+    * every bucket: rows of other buckets can come along */
+  private[store] def read(m: Manifest, buckets: Set[Long]): DataFrame = inBuckets(m, Chunks, buckets)
+
+  /** The latest version, and per bucket the chunk entries its rows are
+    * read from (qualified paths; an entry of every bucket counts in each).
+    * Entries are immutable directories, so equal entries are equal rows:
+    * an index built over this table follows them. */
+  private[store] def sources(): (Manifest, Map[Long, Seq[ManifestEntry]]) = {
+    val m = log.latest()
+    val fs = log.fs
+    val es = of(m, Chunks).map(e => e.copy(path = fs.makeQualified(new HPath(log.abs(e.path))).toString))
+    (m, AllBuckets.toSeq.map(b => b -> es.filter(e => e.bucket == b || e.bucket == AnyBucket)).toMap)
+  }
+
   /** the rows of `filePaths`, reading only the chunk entries whose bucket
     * and filePath range can hold one of them */
   def readFiles(filePaths: Seq[String]): DataFrame =
@@ -148,19 +163,14 @@ final class ChunkStore(spark: SparkSession, path: String) {
     } ++: extra
     val bucketed = (if (rows.columns.contains(B)) rows else rows.withColumn(B, bucketCol))
       .observe(obs, stats.head, stats.tail: _*)
-    val cols = schemas(table).fieldNames.filter(rows.columns.contains)
-    val shared = table == Files
-    val dir = log.write(table, bucketed.select((cols :+ B).map(col): _*), if (shared) Nil else Seq(B))
+    val out = bucketed.select((schemas(table).fieldNames.filter(rows.columns.contains) :+ B).map(col): _*)
+    val shared = if (table == Files) Some(log.write(table, out)) else None
+    val dirs = shared.fold(log.writeBuckets(table, out, B))(d => buckets.map(_ -> d).toMap)
     val m = obs.get
     def n(b: Long) = m(s"n$b").asInstanceOf[Long]
-    val fs = log.fs
-    val entries = buckets.filter(n(_) > 0).map { b =>
-      val to = if (shared) dir else s"$dir-$b"
-      if (!shared && !fs.rename(new HPath(log.abs(s"$dir/$B=$b")), new HPath(log.abs(to))))
-        throw new java.io.IOException(s"$path: could not move bucket $b of $dir")
-      ManifestEntry(table, b, to, m(s"lo$b").asInstanceOf[String], m(s"hi$b").asInstanceOf[String], n(b))
-    }
-    if (!shared || entries.isEmpty) fs.delete(new HPath(log.abs(dir)), true)
+    val entries = buckets.filter(n(_) > 0).map(b => ManifestEntry(table, b, dirs(b),
+      m(s"lo$b").asInstanceOf[String], m(s"hi$b").asInstanceOf[String], n(b)))
+    if (entries.isEmpty) shared.foreach(d => log.fs.delete(new HPath(log.abs(d)), true))
     (entries, m)
   }
 
@@ -499,7 +509,7 @@ object ChunkStore {
   /** the bucket count of the layout */
   val Buckets = 4
 
-  private val AllBuckets: Set[Long] = (0L until Buckets).toSet
+  private[store] val AllBuckets: Set[Long] = (0L until Buckets).toSet
 
   /** most commit attempts of one mutation */
   private val MaxAttempts = 20
@@ -512,10 +522,10 @@ object ChunkStore {
   def bucketOf(filePath: String): Long =
     math.floorMod(graft.ops.Dedup.hash60Scala(filePath), Buckets.toLong)
 
-  private def bucketCol: Column = pmod(graft.ops.Dedup.hash60(col("filePath")), lit(Buckets.toLong))
+  private[store] def bucketCol: Column = pmod(graft.ops.Dedup.hash60(col("filePath")), lit(Buckets.toLong))
 
   /** the partition column of a bucketed write */
-  private val B = "b"
+  private[store] val B = "b"
 
   private val Chunks = "chunks"
   private val Files = "files"

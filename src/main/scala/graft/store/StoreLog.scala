@@ -9,9 +9,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** One bucket's rows of a [[ChunkStore]] table: a `chunks` directory, or
-  * the directory holding its `files` catalog slice (one write's slices
-  * share one), with the bucket's row count and filePath range */
+/** One bucket's rows of a bucketed store's table, with the bucket's row
+  * count and filePath range (null when not recorded): a [[ChunkStore]]
+  * `chunks` directory or the directory holding its `files` catalog slice
+  * (one write's slices share one); an [[FtsIndexStore]] `postings`
+  * directory, or a `source`: a chunk entry (qualified path) the bucket's
+  * postings were built from */
 final case class ManifestEntry(table: String, bucket: Long, path: String,
                                minPath: String, maxPath: String, nRows: Long)
 
@@ -27,8 +30,10 @@ final case class Manifest(tables: Map[String, Seq[String]] = Map.empty,
   def isEmpty: Boolean = tables.isEmpty && entries.isEmpty
   def dirs(table: String): Seq[String] = tables.getOrElse(table, Seq.empty)
   def stat(key: String): Long = stats.getOrElse(key, 0L)
-  /** every root-relative path this version needs */
-  def referenced: Set[String] = (tables.values.flatten ++ entries.map(_.path)).toSet
+  /** every root-relative path this version needs (an absolute path names
+    * another root's files: a clone's source, an index's chunk entries) */
+  def referenced: Set[String] =
+    (tables.values.flatten ++ entries.map(_.path)).filterNot(new HPath(_).isAbsolute).toSet
 }
 
 object Manifest {
@@ -185,6 +190,23 @@ final class StoreLog(spark: SparkSession, val root: String) {
     val w = if (partitionBy.isEmpty) df.write else df.write.partitionBy(partitionBy: _*)
     w.parquet(abs(rel))
     rel
+  }
+
+  /** one write of `table` partitioned by the bucket column `bucket`: each
+    * bucket that got rows then has its directory moved up beside the other
+    * data directories, and its root-relative path is returned */
+  def writeBuckets(table: String, df: DataFrame, bucket: String): Map[Long, String] = {
+    val dir = write(table, df, Seq(bucket))
+    val f = fs
+    val moved = f.listStatus(new HPath(abs(dir))).toSeq.flatMap { s =>
+      s.getPath.getName.stripPrefix(s"$bucket=").toLongOption.map { b =>
+        if (!f.rename(s.getPath, new HPath(abs(s"$dir-$b"))))
+          throw new java.io.IOException(s"$root: could not move bucket $b of $dir")
+        b -> s"$dir-$b"
+      }
+    }
+    f.delete(new HPath(abs(dir)), true)
+    moved.toMap
   }
 
   /** `m`'s directories of `table` plus one holding `df`; at [[MaxDirs]]

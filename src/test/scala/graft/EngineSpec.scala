@@ -670,11 +670,15 @@ class EngineSpec extends AnyFunSuite {
         .select("filePath", "chunkIndex", "score", "boosted").collect().toSeq
         .map(r => (r.getString(0), r.getInt(1), r.getDouble(2), r.getDouble(3)))
 
-    // below: the refresh's one count drops the index, no KMeans runs
+    // below: the manifest's chunk count drops the index, no job runs
     write(s"$root/tiny.md", "Volcano geology studies magma chambers erupting basalt.")
     val (tiny, belowJobs) = jobDescriptions(engine.ingestFile(s"$root/tiny.md"))
     assert(tiny.chunkCount === 1L && engine.status()._1 === base + 1)
-    assert(belowJobs.count(_ == ann) <= 1, belowJobs.mkString(", "))
+    assert(belowJobs.count(_ == ann) === 0, belowJobs.mkString(", "))
+    assert(belowJobs.count(_.startsWith("graft index:")) <= 1, belowJobs.mkString(", "))
+    // the first query after the mutation reads the fresh index in one job
+    val (_, queryJobs) = jobDescriptions(rows(engine))
+    assert(queryJobs.count(_ == "graft query: bm25") === 1, queryJobs.mkString(", "))
     assert(!engine.annIndex.exists && !Files.exists(Paths.get(store + "-ann")))
     assert(belowJobs.forall(d => d != null && d.startsWith("graft ")),
       s"undescribed ingestFile jobs: ${belowJobs.mkString(", ")}")

@@ -183,10 +183,21 @@ class StoreCommitSpec extends AnyFunSuite {
     val fts0 = ftsState()
     val postings0 = fts.load().get.postings
     val ftsWrites = underEveryFault(fts0, ftsState())(fts.rebuild(c1))
-    assert(ftsWrites === 3, "postings, doc lengths and one commit")
+    assert(ftsWrites === 2, "the bucketed postings and one commit")
     assert(fts.corpusStats().map(_._1) === Some(36L))
     assert(ftsState() !== fts0)
     assert(postings0.count() === fts0._2, "a reader resolved before the commit reads its version")
+
+    // a refresh over a chunk store: the changed bucket's postings and one
+    // commit, the index readable at the old version or the new one
+    val st = new ChunkStore(spark, s"$root/chunks")
+    st.insert(c1)
+    fts.refresh(st)
+    val refreshed = ftsState()
+    st.upsertFile("/c/doc2.md", Seq(chunk("/c/doc2.md", 0, "spark pasta doc")).toDF())
+    assert(underEveryFault(refreshed, ftsState())(fts.refresh(st)) === 2)
+    assert(fts.corpusStats().map(_._1) === Some(31L))
+    assert(ftsState() !== refreshed)
 
     val ann0 = annState()
     val annWrites = underEveryFault(ann0, annState())(ann.rebuild(c1, nLists = 4))
