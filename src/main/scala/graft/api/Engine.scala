@@ -595,9 +595,8 @@ final class Engine(
       .reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // upserted/empty counts come from the store's own count-distinct
-      // aggregate over the persisted rows — the driver never materializes
-      // the O(dirty files) produced-path set
+      // upserted/empty counts come from the store's one per-file aggregate
+      // over the persisted rows (the new files' catalog entries)
       val produced = store.upsertFilesFromRows(rows, deletes)
       (produced, spelled.size - produced)
     } finally { rows.unpersist(); pdfRaw.foreach(_.unpersist()); () }
@@ -915,10 +914,10 @@ object Engine {
   val DistributedSyncThreshold = 512
 
   /** dirty-file count at which the sync EXECUTE batches (one binaryFile →
-    * chunk+embed → single partitioned overwrite) instead of looping one
+    * chunk+embed → one write of the touched buckets) instead of looping one
     * ingest job per file. Lower than the gather threshold: the execute
-    * loop pays a full store rewrite per file, so batching wins as soon as
-    * a few dozen files are dirty, while the gather loop only pays a
+    * loop pays a bucket rewrite and a commit per file, so batching wins as
+    * soon as a few dozen files are dirty, while the gather loop only pays a
     * driver-side read+hash per file. */
   val BatchedExecuteThreshold = 32
 

@@ -849,15 +849,15 @@ object PipelineQueries {
     // groups, only their buckets are re-read (range-pruned), untouched
     // groups carry forward. The final view state is layout-invariant, so
     // the oracle replays the edit rule over the source table directly.
-    // Store build is cached per sf dir and bucket layout (a cache built in
-    // another layout is never opened); the first run exercises
+    // Store build is cached per sf dir and store layout (`ChunkStore.Layout`:
+    // a cache built in another layout is never opened); the first run exercises
     // full→incremental, later runs hit the noop path and read the same
     // committed view snapshot. -----
     Q("mv_incremental",
       (s, d) => {
         val suffix = d.replaceAll("[^a-zA-Z0-9]", "_")
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft-mv-buckets" +
-          s"${graft.store.ChunkStore.Buckets}-$suffix"
+        val root = s"${System.getProperty("java.io.tmpdir")}/graft-mv-" +
+          s"${graft.store.ChunkStore.Layout}-$suffix"
         val store = new graft.store.ChunkStore(s, s"$root/table")
         val mv = new graft.store.MaterializedView(s, store, s"$root/view",
           "filePath", Seq(

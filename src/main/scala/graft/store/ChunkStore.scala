@@ -1,14 +1,11 @@
 package graft.store
 
-import java.util.ConcurrentModificationException
-import java.util.concurrent.{ExecutionException, FutureTask}
+import java.util.{ConcurrentModificationException, UUID}
 
 import scala.jdk.CollectionConverters._
-import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,12 +22,17 @@ import graft.core.ChunkSchema
   *
   *  - Rows live in [[Buckets]] buckets, bucket = hash60(filePath) mod
   *    [[Buckets]]. A version's manifest lists, per non-empty bucket, its
-  *    `chunks` entries (directories of the bucket's rows: one, plus one per
-  *    insert since the bucket was last rewritten) and one `files` entry
-  *    (its catalog slice: one row per filePath with contentHash,
-  *    chunkCount and lastModified; one write's slices share a file),
-  *    each with its row count and filePath range. `status` is the sum of
-  *    the entries' counts.
+  *    `chunks` entries (parquet directories of the bucket's rows: one,
+  *    plus one per insert since the bucket was last rewritten) and one
+  *    `files` entry (its catalog slice), each with its row count and
+  *    filePath range. `status` is the sum of the entries' counts.
+  *  - The catalog is small metadata, so it stays out of Spark (the split
+  *    Krypton, VLDB 2023, makes): a slice is one JSON-lines file, one row
+  *    per filePath with contentHash, chunkCount and lastModified, read and
+  *    written on the driver through the Hadoop `FileSystem`, as the
+  *    manifests are. A mutation merges each touched bucket's new slice in
+  *    Scala from the base slice and its own entries; its one Spark job is
+  *    the chunk rewrite.
   *  - A mutation rewrites only the buckets it touches, chunks and catalog
   *    slice, and carries every other entry by reference. Its commit is
   *    the log's compare-and-swap: a writer that lost the race to a commit
@@ -42,160 +44,134 @@ import graft.core.ChunkSchema
   *    `src/server/index.ts:645-701`, made atomic).
   *  - The zero-chunk fail-fast BEFORE any write (`:635-642`) is a hard
   *    invariant.
-  *  - An entry's counts and range are observed metrics of the write that
-  *    made it. The catalog is derived from the base slices plus the
-  *    mutation's delta, never from an aggregate over the chunks, except
-  *    for `insert`, which derives its slices from the rows it wrote. A
-  *    file's `contentHash` is null when its chunks carry a null hash or
-  *    more than one hash; sync treats such a file as dirty either way.
+  *  - A chunk entry's count and range are observed metrics of the write
+  *    that made it; a slice's come from its rows. A file's `contentHash`
+  *    is null when its chunks carry a null hash or more than one hash;
+  *    sync treats such a file as dirty either way.
   *  - Reads: a pruned read ([[readFiles]], neighbors) opens only the
-  *    entries whose bucket and range can hold its files; `listFiles` and
-  *    `manifest` collect the catalog once per version (one small scan
-  *    cold, none warm); every commit keeps the last [[KeepVersions]]
-  *    versions readable, and [[changes]] derives a row-level feed from two
-  *    of them by their differing entries.
+  *    entries whose bucket and range can hold its files; `listFiles`,
+  *    `manifest` and `status` run no Spark job (each slice file is read
+  *    once); [[files]] scans the slices for the distributed sync route;
+  *    every commit keeps the last [[KeepVersions]] versions readable, and
+  *    [[changes]] derives a row-level feed from two of them by their
+  *    differing entries.
   *
-  * A version committed in the earlier table layout (`chunks` and `files`
-  * directories, or `chunks` alone from before the catalog) still answers
-  * every read; the next mutation rewrites it into buckets.
+  * A version in an earlier layout (`chunks`/`files` directories under
+  * `tables`, or parquet catalog slices) is refused with an error naming
+  * the root; such a store is built again under a new root ([[Layout]]
+  * names this one).
   */
 final class ChunkStore(spark: SparkSession, path: String) {
   import ChunkStore._
 
   private val log = new StoreLog(spark, path)
 
-  def exists: Boolean = !log.latest().isEmpty
+  /** `m`, refused unless it is in this layout */
+  private def checked(m: Manifest): Manifest = {
+    if (m.tables.nonEmpty || of(m, Files).exists(!_.path.endsWith(SliceSuffix)))
+      throw new IllegalStateException(s"chunk store $path: version ${m.version} is in an " +
+        s"earlier layout (table directories or parquet catalog slices, not $Layout); " +
+        "build the store again under a new root")
+    m
+  }
+
+  private def latest(): Manifest = checked(log.latest())
+
+  private def at(version: Long): Manifest = checked(log.manifest(version))
+
+  def exists: Boolean = !latest().isEmpty
 
   /** the versions the log keeps, ascending */
   def versions(): Seq[Long] = log.versions()
 
   def latestVersion(): Option[Long] = log.latestVersion()
 
-  def read(): DataFrame = read(log.latest())
+  def read(): DataFrame = read(latest())
 
   /** the table as version `version` committed it (time travel, within the
     * versions the log keeps) */
-  def read(version: Long): DataFrame = read(log.manifest(version))
+  def read(version: Long): DataFrame = read(at(version))
 
-  private[store] def read(m: Manifest): DataFrame = inBuckets(m, Chunks, AllBuckets)
+  private[store] def read(m: Manifest): DataFrame = read(m, AllBuckets)
 
-  /** `m`'s rows of `buckets`, read from their chunk entries and those of
-    * every bucket: rows of other buckets can come along */
-  private[store] def read(m: Manifest, buckets: Set[Long]): DataFrame = inBuckets(m, Chunks, buckets)
+  /** `m`'s rows of `buckets`, read from their chunk entries */
+  private[store] def read(m: Manifest, buckets: Set[Long]): DataFrame =
+    scan(of(m, Chunks).filter(e => buckets(e.bucket)).map(_.path))
 
   /** The latest version, and per bucket the chunk entries its rows are
-    * read from (qualified paths; an entry of every bucket counts in each).
-    * Entries are immutable directories, so equal entries are equal rows:
-    * an index built over this table follows them. */
+    * read from (qualified paths). Entries are immutable directories, so
+    * equal entries are equal rows: an index built over this table follows
+    * them. */
   private[store] def sources(): (Manifest, Map[Long, Seq[ManifestEntry]]) = {
-    val m = log.latest()
+    val m = latest()
     val fs = log.fs
     val es = of(m, Chunks).map(e => e.copy(path = fs.makeQualified(new HPath(log.abs(e.path))).toString))
-    (m, AllBuckets.toSeq.map(b => b -> es.filter(e => e.bucket == b || e.bucket == AnyBucket)).toMap)
+    (m, AllBuckets.toSeq.map(b => b -> es.filter(_.bucket == b)).toMap)
   }
 
   /** the rows of `filePaths`, reading only the chunk entries whose bucket
     * and filePath range can hold one of them */
   def readFiles(filePaths: Seq[String]): DataFrame =
-    scan(holding(log.latest(), filePaths).map(_.path), ChunkSchema.schema)
-      .filter(col("filePath").isInCollection(filePaths))
+    scan(holding(latest(), filePaths).map(_.path)).filter(col("filePath").isInCollection(filePaths))
 
-  /** `m`'s chunk entries whose bucket and range can hold one of `filePaths`
-    * (an entry of every bucket, with no range, can hold any) */
+  /** `m`'s chunk entries whose bucket and range can hold one of `filePaths` */
   private def holding(m: Manifest, filePaths: Seq[String]): Seq[ManifestEntry] = {
     val byBucket = filePaths.groupBy(bucketOf)
-    of(m, Chunks).filter(e => (if (e.bucket == AnyBucket) filePaths else byBucket.getOrElse(e.bucket, Nil))
-      .exists(p => e.minPath == null ||
-        utf8(e.minPath).compareTo(utf8(p)) <= 0 && utf8(p).compareTo(utf8(e.maxPath)) <= 0))
+    of(m, Chunks).filter(e => byBucket.getOrElse(e.bucket, Nil).exists(p =>
+      utf8(e.minPath).compareTo(utf8(p)) <= 0 && utf8(p).compareTo(utf8(e.maxPath)) <= 0))
   }
 
-  private def scan(dirs: Seq[String], schema: StructType): DataFrame =
-    if (dirs.isEmpty) local(Seq.empty, schema)
-    else spark.read.schema(schema).parquet(dirs.map(log.abs): _*)
+  private def scan(dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) local(Seq.empty, ChunkSchema.schema)
+    else spark.read.schema(ChunkSchema.schema).parquet(dirs.map(log.abs): _*)
 
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** `m`'s rows of `table` in `buckets`, read from their entries (and
-    * the entries of every bucket). The catalog of a version committed
-    * before the catalog existed, chunks and no `files` entry, is derived
-    * from its chunks. */
-  private def inBuckets(m: Manifest, table: String, buckets: Set[Long]): DataFrame = {
-    def in(t: String) = of(m, t).filter(e => e.bucket == AnyBucket || buckets(e.bucket))
-    if (table == Chunks) scan(in(Chunks).map(_.path), ChunkSchema.schema)
-    else if (of(m, Files).isEmpty && of(m, Chunks).nonEmpty)
-      merged(entries(scan(in(Chunks).map(_.path), ChunkSchema.schema), Replacing))
-        .select(FilesSchema.fieldNames.map(col): _*)
-    else slices(in(Files))
-  }
-
-  /** the catalog rows of the `files` entries `es`, in one scan: each
-    * directory's rows of the buckets its entries name (a write's slices
-    * share one directory, and a later write may replace some of them) */
-  private def slices(es: Seq[ManifestEntry]): DataFrame = {
-    val dirs = es.groupBy(_.path).toSeq.sortBy(_._1)
-    if (es.forall(_.bucket == AnyBucket)) scan(dirs.map(_._1), FilesSchema)
-    else scan(dirs.map(_._1), SliceSchema).filter(dirs.map { case (dir, named) =>
-        col("_metadata.file_path").contains(s"/${new HPath(dir).getName}/") &&
-          col(B).isin(named.map(_.bucket): _*)
-      }.reduce(_ || _))
-      .select(FilesSchema.fieldNames.map(col): _*)
-  }
-
   // ---- writes ----
 
-  /** Writes `rows` (the table's columns they carry) and returns the
-    * entries of `buckets` that got rows, plus the values of `extra`: each
-    * entry's row count and filePath range, and `extra`, are observed
-    * metrics of the one write. Chunks land partitioned by bucket, and each
-    * bucket's directory then moves up beside the other data directories.
-    * Catalog slices are a few rows each, so one write's slices share one
-    * directory, rows with their bucket column, each entry naming the rows
-    * of its bucket there ([[slices]] reads them). `rows` may carry the
-    * bucket column already (sorted by it). */
-  private def writeBuckets(table: String, rows: DataFrame, buckets: Seq[Long],
-                           extra: Column*): (Seq[ManifestEntry], Map[String, Any]) = {
+  /** Writes `rows` (the chunk columns they carry) partitioned by bucket and
+    * returns the entries of `buckets` that got rows: each entry's row count
+    * and filePath range are observed metrics of the one write. `rows` may
+    * carry the bucket column already. */
+  private def writeChunks(rows: DataFrame, buckets: Seq[Long]): Seq[ManifestEntry] = {
     val obs = Observation()
-    val stats = count(lit(1)).as("rows") +: buckets.flatMap { b =>
+    val stats = buckets.flatMap { b =>
       val in = col(B) === b
       Seq(count(when(in, 1)).as(s"n$b"), min(when(in, col("filePath"))).as(s"lo$b"),
         max(when(in, col("filePath"))).as(s"hi$b"))
-    } ++: extra
+    }
     val bucketed = (if (rows.columns.contains(B)) rows else rows.withColumn(B, bucketCol))
       .observe(obs, stats.head, stats.tail: _*)
-    val out = bucketed.select((schemas(table).fieldNames.filter(rows.columns.contains) :+ B).map(col): _*)
-    val shared = if (table == Files) Some(log.write(table, out)) else None
-    val dirs = shared.fold(log.writeBuckets(table, out, B))(d => buckets.map(_ -> d).toMap)
+    val dirs = log.writeBuckets(Chunks,
+      bucketed.select((ChunkSchema.schema.fieldNames.filter(rows.columns.contains) :+ B).map(col): _*), B)
     val m = obs.get
     def n(b: Long) = m(s"n$b").asInstanceOf[Long]
-    val entries = buckets.filter(n(_) > 0).map(b => ManifestEntry(table, b, dirs(b),
+    buckets.filter(n(_) > 0).map(b => ManifestEntry(Chunks, b, dirs(b),
       m(s"lo$b").asInstanceOf[String], m(s"hi$b").asInstanceOf[String], n(b)))
-    if (entries.isEmpty) shared.foreach(d => log.fs.delete(new HPath(log.abs(d)), true))
-    (entries, m)
   }
 
-  /** `chunks` and `files` written as `buckets`' new entries, the two writes
-    * overlapped */
-  private def rewrite(buckets: Set[Long], chunks: DataFrame, files: DataFrame)
-      : Option[(Set[Long], Seq[ManifestEntry])] = {
-    val bs = buckets.toSeq.sorted
-    val (c, f) = both(writeBuckets(Chunks, chunks, bs)._1, writeBuckets(Files, files, bs)._1)
-    Some((buckets, c ++ f))
-  }
-
-  /** Runs `a` here and `b` on a fresh thread, and returns both once both
-    * finished (the first failure rethrown). A mutation's table and catalog
-    * writes are independent and mostly a write job's fixed cost, so they
-    * overlap. The thread is fresh so that it inherits this thread's Spark
-    * job group, description and call site. */
-  private def both[A, C](a: => A, b: => C): (A, C) = {
-    val fb = new FutureTask[C](() => b)
-    val t = new Thread(fb, "graft-store-write")
-    t.setDaemon(true)
-    t.start()
-    val ra = Try(a)
-    val rb = Try(fb.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
-    (ra.get, rb.get)
+  /** Writes the catalog slices of `buckets`, each `m`'s slice of the
+    * bucket without the files `drop` names, plus `add`'s entries of the
+    * bucket (a file's entries merged by [[combine]]), and returns their
+    * entries. A non-empty slice is one JSON-lines file written from the
+    * driver, sorted by filePath; its entry's count and range come from its
+    * rows. An emptied bucket gets no slice. */
+  private def writeSlices(m: Manifest, buckets: Set[Long], drop: String => Boolean,
+                          add: Seq[FileEntry]): Seq[ManifestEntry] = {
+    val id = UUID.randomUUID()
+    val fs = log.fs
+    buckets.toSeq.sorted.flatMap { b =>
+      val rows = (slice(m, b).filterNot(f => drop(f.filePath)) ++ add.filter(f => bucketOf(f.filePath) == b))
+        .groupMapReduce(_.filePath)(identity)(combine).values.toSeq.sortBy(f => utf8(f.filePath))
+      if (rows.isEmpty) None
+      else {
+        val rel = s"data/$Files-$id-$b$SliceSuffix"
+        val out = fs.create(new HPath(log.abs(rel)), false)
+        try rows.foreach(f => out.write(toJson(f))) finally out.close()
+        Some(ManifestEntry(Files, b, rel, rows.head.filePath, rows.last.filePath, rows.size.toLong))
+      }
+    }
   }
 
   /** Runs `write` against the latest version and commits the entries it
@@ -206,17 +182,17 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * to commit. A commit vacuums the log to [[KeepVersions]] versions. */
   private def mutate(write: Manifest => Option[(Set[Long], Seq[ManifestEntry])]): Unit = {
     var attempts = 0
-    var base = log.latest()
+    var base = latest()
     while (attempts < MaxAttempts) write(base) match {
       case None => return
       case Some((buckets, written)) =>
-        def slice(m: Manifest) = (m.tables, m.entries.filter(e => buckets(e.bucket)).toSet)
+        def mine(m: Manifest) = m.entries.filter(e => buckets(e.bucket)).toSet
         var cur = base
-        while (attempts < MaxAttempts && slice(cur) == slice(base)) {
+        while (attempts < MaxAttempts && mine(cur) == mine(base)) {
           val next = Manifest(entries = cur.entries.filterNot(e => buckets(e.bucket)) ++ written)
           if (log.tryCommit(cur.version + 1, next)) { log.vacuum(KeepVersions); return }
           attempts += 1
-          cur = log.latest()
+          cur = latest()
         }
         base = cur
     }
@@ -227,24 +203,20 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * written with the frame's own columns (a legacy frame without a hash
     * or title reads them as null). When the appended entries could pass
     * [[StoreLog.MaxDirs]] paths per read, every bucket is rewritten as one
-    * entry instead. The touched buckets' catalog slices merge the rows
-    * written, read back by their keys, so the caller's frame is computed
-    * once. */
+    * entry instead. The touched buckets' slices add the catalog entries of
+    * the rows written, read back in one aggregate, so the caller's frame is
+    * computed once. */
   def insert(chunks: DataFrame): Unit = mutate { base =>
-    // a version in the table layout has no bucket entry to append to
-    val compact = tableLayout(base) || of(base, Chunks).size + Buckets > StoreLog.MaxDirs
-    val (added, _) = writeBuckets(Chunks,
+    val compact = of(base, Chunks).size + Buckets > StoreLog.MaxDirs
+    val added = writeChunks(
       if (!compact) chunks
-      else inBuckets(base, Chunks, AllBuckets).coalesce(1).unionByName(chunks, allowMissingColumns = true),
+      else read(base).coalesce(1).unionByName(chunks, allowMissingColumns = true),
       AllBuckets.toSeq.sorted)
     val buckets = if (compact) AllBuckets else added.map(_.bucket).toSet
     val kept = if (compact) Seq.empty else of(base, Chunks).filter(e => buckets(e.bucket))
-    val (slices, _) = writeBuckets(Files, merged(
-        (if (compact) local(Seq.empty, FilesSchema) else inBuckets(base, Files, buckets))
-          .withColumn("_src", lit(Replacing))
-          .unionByName(entries(scan(added.map(_.path), ChunkSchema.schema), Replacing))).coalesce(1),
-      buckets.toSeq.sorted)
-    Some((buckets, kept ++ added ++ slices))
+    // a compaction's rows are the whole table: its slices replace the base's
+    Some((buckets, kept ++ added ++
+      writeSlices(base, buckets, _ => compact, entriesOf(scan(added.map(_.path))))))
   }
 
   def deleteFile(filePath: String): Unit = deleteFiles(Seq(filePath))
@@ -253,12 +225,13 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * rewriting only their buckets; a delete no entry can hold commits
     * nothing */
   def deleteFiles(paths: Seq[String]): Unit = {
-    val kept = !col("filePath").isin(paths: _*)
+    val gone = paths.toSet
     mutate { base =>
-      val buckets = touched(base, holding(base, paths).map(_.bucket).toSet)
+      val buckets = holding(base, paths).map(_.bucket).toSet
       if (buckets.isEmpty) None
-      else rewrite(buckets, inBuckets(base, Chunks, buckets).filter(kept).coalesce(1),
-        inBuckets(base, Files, buckets).filter(kept).coalesce(1))
+      else Some((buckets,
+        writeChunks(read(base, buckets).filter(!col("filePath").isInCollection(paths)).coalesce(1),
+          buckets.toSeq.sorted) ++ writeSlices(base, buckets, gone, Nil)))
     }
   }
 
@@ -266,80 +239,46 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * of which must belong to `filePath`, rewriting only its bucket. Fails
     * BEFORE any write if newChunks is empty — the reference's
     * NoChunksError invariant. The file's catalog entry is built on the
-    * driver from the new rows' collected keys, by [[merged]]'s rule. */
+    * driver from the new rows' collected keys. */
   def upsertFile(filePath: String, newChunks: DataFrame): Unit = {
     val keys = newChunks.select("filePath", "contentHash", "timestamp").collect()
     if (keys.isEmpty)
       throw new graft.ingest.Ingest.NoChunksError(filePath)
     require(keys.forall(_.getString(0) == filePath),
       s"upsertFile($filePath) got rows of another file")
-    val hash = keys.map(r => Option(r.getString(1))).distinct match {
-      case Array(Some(h)) => h
-      case _ => null
-    }
-    val entry = Row(filePath, hash, keys.length.toLong,
-      keys.flatMap(r => Option(r.getString(2))).maxOption.orNull)
-    val kept = col("filePath") =!= filePath
+    val entry = keys.map(r => FileEntry(filePath, r.getString(1), 1L, r.getString(2))).reduce(combine)
+    val buckets = Set(bucketOf(filePath))
     mutate { base =>
-      val buckets = touched(base, Set(bucketOf(filePath)))
-      rewrite(buckets,
-        inBuckets(base, Chunks, buckets).filter(kept)
+      Some((buckets, writeChunks(read(base, buckets).filter(col("filePath") =!= filePath)
           .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*)).coalesce(1),
-        inBuckets(base, Files, buckets).filter(kept)
-          .unionByName(local(Seq(entry), FilesSchema)).coalesce(1))
+          buckets.toSeq) ++ writeSlices(base, buckets, _ == filePath, Seq(entry))))
     }
   }
 
   /** Batched upsert — the sync execute path: replace all chunks of every
     * file `newChunks` has rows for AND delete all rows of `deletePaths`, in
-    * one commit. The replace set is derived FROM the rows, so the driver
-    * never holds O(dirty files) strings: the catalog is merged and written
-    * first, only the slices of the buckets a fresh file or a delete
-    * touches, and its observed per-bucket counts of fresh files name the
-    * buckets the commit rewrites. Returns the number of distinct
-    * files the rows cover (the batch's `upserted` count). Zero-chunk
-    * semantics: a file with no rows in `newChunks` is absent from the
-    * replace set, so its existing rows survive; a prune-only batch passes
-    * empty rows. A batch that covers no file and deletes nothing commits
-    * nothing (its catalog directory is debris for the vacuum). */
+    * one commit. The new files' catalog entries come from one aggregate
+    * over the rows, collected before the commit loop (a retry does not
+    * repeat it); they name the replaced files and, with the deletes, the
+    * buckets the commit rewrites. Returns the number of distinct files the
+    * rows cover (the batch's `upserted` count). Zero-chunk semantics: a
+    * file with no rows in `newChunks` is absent from the replace set, so
+    * its existing rows survive; a prune-only batch passes empty rows. A
+    * batch that covers no file and deletes nothing commits nothing. */
   def upsertFilesFromRows(newChunks: DataFrame,
                           deletePaths: Seq[String] = Seq.empty): Long = {
-    import spark.implicits._
-    val deletes = deletePaths.map(p => Row(p, null, 0L, null))
-    val all = AllBuckets.toSeq.sorted
-    var produced = 0L
-    mutate { base =>
-      val deleting = touched(base, deletePaths.map(bucketOf).toSet)
-      // one task merges the catalog and writes the slices of the buckets
-      // a fresh file or a delete touches (its one partition needs no
-      // exchange for the per-bucket window)
-      val catalog = merged(inBuckets(base, Files, AllBuckets).withColumn("_src", lit(Base))
-          .unionByName(local(deletes, FilesSchema).withColumn("_src", lit(Removing)))
-          .unionByName(entries(newChunks, Replacing))).coalesce(1)
-        .withColumn(B, bucketCol)
-      val (slices, m) = writeBuckets(Files, catalog.withColumn("_touched",
-          max(col("_fresh")).over(Window.partitionBy(B)) || col(B).isin(deleting.toSeq: _*))
-          .filter(col("_touched")),
-        all, count(when(col("_fresh"), 1)).as("fresh") +:
-          all.map(b => count(when(col("_fresh") && col(B) === b, 1)).as(s"fresh$b")): _*)
-      produced = m("fresh").asInstanceOf[Long]
-      val buckets = deleting ++ all.filter(b => m(s"fresh$b").asInstanceOf[Long] > 0)
-      if (produced == 0L && deletePaths.isEmpty) None
-      else {
-        // no broadcast hint: the derived key set is unbounded (every dirty
-        // file of the batch), so AQE's runtime sizing picks broadcast vs
-        // shuffled anti-join. Partitioned by bucket (a count AQE keeps), so
-        // each bucket is written as one file, the buckets in parallel
-        val affected = newChunks.select("filePath").unionByName(deletePaths.toDF("filePath"))
-        val (chunks, _) = writeBuckets(Chunks,
-          inBuckets(base, Chunks, buckets).join(affected, Seq("filePath"), "left_anti")
-            .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*))
-            .withColumn(B, bucketCol).repartition(Buckets, col(B)),
-          buckets.toSeq.sorted)
-        Some((buckets, chunks ++ slices))
-      }
+    val fresh = entriesOf(newChunks)
+    val replaced = fresh.map(_.filePath) ++ deletePaths
+    val buckets = replaced.map(bucketOf).toSet
+    if (replaced.nonEmpty) mutate { base =>
+      // partitioned by bucket id: each bucket is written as one file by its
+      // own task
+      Some((buckets, writeChunks(read(base, buckets).filter(!col("filePath").isInCollection(replaced))
+          .unionByName(newChunks.select(ChunkSchema.schema.fieldNames.map(col): _*))
+          .withColumn(B, bucketCol).repartitionById(Buckets, col(B).cast("int")),
+          buckets.toSeq.sorted) ++ writeSlices(base, buckets, replaced.toSet, fresh)))
     }
-    produced
+    fresh.size.toLong
   }
 
   /** neighbor range read (reference `src/vectordb/index.ts:138-164`,
@@ -363,67 +302,67 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   // ---- the catalog ----
 
-  /** `m`'s catalog collected and sorted by filePath, memoized on the
-    * immutable directories (and buckets) it is read from */
-  private def catalog(m: Manifest): IndexedSeq[Row] =
-    Seq(Files, Chunks).map(of(m, _).map(e => s"${log.abs(e.path)}#${e.bucket}")).find(_.nonEmpty)
-      .fold(IndexedSeq.empty[Row])(named => StoreLog.memo(s"catalog@${named.mkString(",")}")(
-        inBuckets(m, Files, AllBuckets).collect().toIndexedSeq.sortBy(r => utf8(r.getString(0)))))
+  /** one slice file's entries */
+  private def readSlice(e: ManifestEntry): IndexedSeq[FileEntry] = {
+    val in = log.fs.open(new HPath(log.abs(e.path)))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(parse).toIndexedSeq
+    finally in.close()
+  }
+
+  /** `m`'s catalog slice of bucket `b`, memoized on its immutable file */
+  private def slice(m: Manifest, b: Long): Seq[FileEntry] =
+    of(m, Files).filter(_.bucket == b).flatMap(e => StoreLog.memo(s"slice@${log.abs(e.path)}")(readSlice(e)))
+
+  /** `m`'s catalog sorted by filePath, memoized on the slices it is read
+    * from */
+  private def catalog(m: Manifest): IndexedSeq[FileEntry] =
+    StoreLog.memo(s"catalog@${of(m, Files).map(e => log.abs(e.path)).mkString(",")}")(
+      AllBuckets.toSeq.flatMap(slice(m, _)).sortBy(f => utf8(f.filePath)).toIndexedSeq)
 
   /** the latest version's catalog (filePath, contentHash, chunkCount,
-    * lastModified) as a Spark scan — O(files) rows for the distributed
-    * sync route, never collected */
-  def files(): DataFrame = inBuckets(log.latest(), Files, AllBuckets)
+    * lastModified) as a Spark scan of its slices — O(files) rows for the
+    * distributed sync route, never collected */
+  def files(): DataFrame = {
+    val slices = of(latest(), Files).map(e => log.abs(e.path))
+    if (slices.isEmpty) local(Seq.empty, FilesSchema)
+    else spark.read.schema(FilesSchema).json(slices: _*)
+  }
 
   /** per-file listing (reference `listFiles`, `src/vectordb/index.ts:511-556`):
     * (filePath, chunkCount, lastModified) sorted by filePath, as a local
-    * DataFrame over the collected catalog */
+    * DataFrame over the catalog */
   def listFiles(): DataFrame =
-    local(catalog(log.latest()).map(r => Row(r.get(0), r.get(2), r.get(3))), ListSchema)
+    local(catalog(latest()).map(f => Row(f.filePath, f.chunkCount, f.lastModified)), ListSchema)
 
   /** status counts (reference `src/vectordb/index.ts:585-595`): (chunks,
-    * files) summed over the version's entries — no Spark job. A version
-    * in the table layout records no count per directory: its counts come
-    * from its memoized catalog. */
-  def status(): (Long, Long) = status(log.latest())
+    * files) summed over the version's entries — no Spark job */
+  def status(): (Long, Long) = status(latest())
 
-  private[store] def status(m: Manifest): (Long, Long) = {
-    val (chunks, files) = (of(m, Chunks), of(m, Files))
-    if ((chunks ++ files).forall(_.nRows >= 0)) (chunks.map(_.nRows).sum, files.map(_.nRows).sum)
-    else { val c = catalog(m); (c.map(_.getLong(2)).sum, c.size.toLong) }
-  }
+  private[store] def status(m: Manifest): (Long, Long) =
+    (of(m, Chunks).map(_.nRows).sum, of(m, Files).map(_.nRows).sum)
 
   /** manifest projection for sync (reference `listChunkHashes`,
     * `src/vectordb/index.ts:480-504`): one (filePath, contentHash) row per
-    * stored file, as a local DataFrame over the collected catalog */
+    * stored file, as a local DataFrame over the catalog */
   def manifest(): DataFrame =
-    local(catalog(log.latest()).map(r => Row(r.get(0), r.get(1))), ManifestSchema)
+    local(catalog(latest()).map(f => Row(f.filePath, f.contentHash)), ManifestSchema)
 
   /** S12 compaction — the reference's `table.optimize()`
     * (`src/vectordb/index.ts:317-324`), called once per batch, not per
     * file: every bucket whose chunk entries hold more than `maxFragments`
-    * parquet files (each insert adds an entry, a batched write a file per
-    * input partition) is rewritten as one file sorted by (filePath,
-    * chunkIndex). Rows and the catalog carry over unchanged; a version in
-    * the table layout is rewritten into buckets. */
+    * parquet files (each insert adds an entry, with a file per write task
+    * that had rows of the bucket) is rewritten as one file sorted by
+    * (filePath, chunkIndex). Rows and the catalog carry over unchanged. */
   def optimize(maxFragments: Int = 4): Unit = mutate { base =>
     val fs = log.fs
-    val buckets = touched(base, of(base, Chunks).groupBy(_.bucket).collect { case (b, es) if es.map(e =>
+    val buckets = of(base, Chunks).groupBy(_.bucket).collect { case (b, es) if es.map(e =>
       fs.listStatus(new HPath(log.abs(e.path))).count(_.getPath.getName.endsWith(".parquet")))
-      .sum > maxFragments => b }.toSet)
+      .sum > maxFragments => b }.toSet
     if (buckets.isEmpty) None
-    else {
-      val bs = buckets.toSeq.sorted
-      val (chunks, _) = writeBuckets(Chunks, inBuckets(base, Chunks, buckets)
-        .withColumn(B, bucketCol).repartition(Buckets, col(B))
-        .sortWithinPartitions(B, "filePath", "chunkIndex"), bs)
-      // the slices carry over; a version in the table layout has none, so
-      // its catalog is written into buckets
-      val files =
-        if (tableLayout(base)) writeBuckets(Files, inBuckets(base, Files, buckets).coalesce(1), bs)._1
-        else of(base, Files).filter(e => buckets(e.bucket))
-      Some((buckets, chunks ++ files))
-    }
+    else Some((buckets, writeChunks(read(base, buckets).withColumn(B, bucketCol)
+        .repartitionById(Buckets, col(B).cast("int"))
+        .sortWithinPartitions(B, "filePath", "chunkIndex"), buckets.toSeq.sorted) ++
+      of(base, Files).filter(e => buckets(e.bucket))))
   }
 
   // ---- versions ----
@@ -431,14 +370,14 @@ final class ChunkStore(spark: SparkSession, path: String) {
   /** (version, chunk entries, chunk rows) of every kept version, from the
     * manifests alone */
   def history(): Seq[(Long, Int, Long)] = versions().map { v =>
-    val m = log.manifest(v)
+    val m = at(v)
     (v, of(m, Chunks).size, status(m)._1)
   }
 
   /** the chunk entries version `to` reads and `from` does not, and the
     * reverse: manifest arithmetic, no data read */
   def diff(from: Long, to: Long): (Seq[ManifestEntry], Seq[ManifestEntry]) = {
-    val (a, b) = (of(log.manifest(from), Chunks), of(log.manifest(to), Chunks))
+    val (a, b) = (of(at(from), Chunks), of(at(to), Chunks))
     (b.filterNot(a.toSet), a.filterNot(b.toSet))
   }
 
@@ -450,8 +389,8 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * delete. Returns `to`-schema rows plus `_change_type`. */
   def changes(from: Long, to: Long): DataFrame = {
     val (added, removed) = diff(from, to)
-    val before = scan(removed.map(_.path), ChunkSchema.schema)
-    val after = scan(added.map(_.path), ChunkSchema.schema)
+    val before = scan(removed.map(_.path))
+    val after = scan(added.map(_.path))
     val beforeKeys = before.select(col("id"), col("contentHash").as("_old_hash"))
     val inserts = after.join(beforeKeys.select("id"), Seq("id"), "left_anti")
       .withColumn("_change_type", lit("insert"))
@@ -468,24 +407,26 @@ final class ChunkStore(spark: SparkSession, path: String) {
 
   /** The latest version's entries checked against the filesystem: each
     * must exist and hold the row count it records for its bucket. Returns
-    * the problems (empty = clean), from one column-pruned count per table. */
+    * the problems (empty = clean), from one column-pruned count of the
+    * chunk entries and a read of each slice. */
   def scrub(): Seq[String] = {
-    val m = log.latest()
+    val m = latest()
     val fs = log.fs
     val (present, missing) = m.entries.partition(e => fs.exists(new HPath(log.abs(e.path))))
-    missing.map(e => s"missing data file: ${e.path}") ++
-      present.groupBy(_.table).toSeq.flatMap { case (table, es) =>
-        // per directory and bucket: a write's catalog slices share one
-        val counts = scan(es.map(_.path).distinct, schemas(table))
-          .groupBy(input_file_name().as("f"), bucketCol.as("b")).agg(count(lit(1)))
-          .collect().groupMapReduce(r =>
-            (new HPath(r.getString(0)).getParent.getName, r.getLong(1)))(_.getLong(2))(_ + _)
-        es.flatMap { e =>
-          val actual = counts.getOrElse((new HPath(e.path).getName, e.bucket), 0L)
-          if (actual == e.nRows) None
-          else Some(s"row-count drift: ${e.path} manifest=${e.nRows} actual=$actual")
-        }
-      }
+    val chunks = present.filter(_.table == Chunks)
+    // per directory and bucket
+    val counts =
+      if (chunks.isEmpty) Map.empty[(String, Long), Long]
+      else scan(chunks.map(_.path)).groupBy(input_file_name().as("f"), bucketCol.as("b"))
+        .agg(count(lit(1))).collect().groupMapReduce(r =>
+          (new HPath(r.getString(0)).getParent.getName, r.getLong(1)))(_.getLong(2))(_ + _)
+    def actual(e: ManifestEntry): Long =
+      if (e.table == Files) readSlice(e).count(f => bucketOf(f.filePath) == e.bucket).toLong
+      else counts.getOrElse((new HPath(e.path).getName, e.bucket), 0L)
+    missing.map(e => s"missing data file: ${e.path}") ++ present.flatMap { e =>
+      val n = actual(e)
+      if (n == e.nRows) None else Some(s"row-count drift: ${e.path} manifest=${e.nRows} actual=$n")
+    }
   }
 
   /** Zero-copy shallow clone of the latest version into the empty root
@@ -494,12 +435,12 @@ final class ChunkStore(spark: SparkSession, path: String) {
     * must keep those files while the clone reads them (the same retention
     * contract readers rely on). */
   def cloneTo(dest: String): ChunkStore = {
-    val m = log.latest()
+    val m = latest()
     require(!m.isEmpty, s"$path: nothing to clone")
     val target = new StoreLog(spark, dest)
     require(target.latestVersion().isEmpty, s"clone destination $dest is not empty")
-    require(target.tryCommit(0L, Manifest(tables = m.tables.map { case (t, ds) => t -> ds.map(log.abs) },
-      stats = m.stats, entries = m.entries.map(e => e.copy(path = log.abs(e.path))))),
+    require(target.tryCommit(0L, Manifest(stats = m.stats,
+      entries = m.entries.map(e => e.copy(path = log.abs(e.path))))),
       s"concurrent writer at clone destination $dest")
     new ChunkStore(spark, dest)
   }
@@ -508,6 +449,11 @@ final class ChunkStore(spark: SparkSession, path: String) {
 object ChunkStore {
   /** the bucket count of the layout */
   val Buckets = 4
+
+  /** this layout's name: its bucket count and catalog format. A store kept
+    * across runs keys its root on it, so a store built in another layout
+    * is never opened. */
+  val Layout = s"buckets$Buckets-json"
 
   private[store] val AllBuckets: Set[Long] = (0L until Buckets).toSet
 
@@ -530,77 +476,55 @@ object ChunkStore {
   private val Chunks = "chunks"
   private val Files = "files"
 
-  /** the bucket of an entry that holds rows of every bucket */
-  private val AnyBucket = -1L
+  /** the extension of a catalog slice file */
+  private val SliceSuffix = ".json"
 
-  /** a version committed before the bucket layout: `chunks` (and `files`)
-    * directories instead of entries */
-  private def tableLayout(m: Manifest): Boolean = m.entries.isEmpty && m.tables.nonEmpty
-
-  /** `m`'s entries of `table`. A version in the table layout reads as one
-    * entry per directory, of every bucket, with no range or row count. */
-  private def of(m: Manifest, table: String): Seq[ManifestEntry] =
-    if (tableLayout(m)) m.dirs(table).map(ManifestEntry(table, AnyBucket, _, null, null, -1L))
-    else m.entries.filter(_.table == table)
-
-  /** the buckets a mutation of `m` rewrites: `mine`, or every bucket of a
-    * version in the table layout */
-  private def touched(m: Manifest, mine: Set[Long]): Set[Long] =
-    if (tableLayout(m)) AllBuckets else mine
+  private def of(m: Manifest, table: String): Seq[ManifestEntry] = m.entries.filter(_.table == table)
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
-  /** the `files` table: one row per stored filePath */
+  /** one catalog row: a stored file */
+  private final case class FileEntry(filePath: String, contentHash: String, chunkCount: Long,
+                                     lastModified: String)
+
+  /** One file's two catalog entries as one: counts add, the later
+    * lastModified wins, and a hash survives only when both carry it. Over a
+    * file's rows as one-chunk entries this is the catalog's rule: a file
+    * keeps a hash only when all its rows carry that same hash. */
+  private def combine(a: FileEntry, b: FileEntry): FileEntry =
+    FileEntry(a.filePath, if (a.contentHash != null && a.contentHash == b.contentHash) a.contentHash else null,
+      a.chunkCount + b.chunkCount, Seq(a.lastModified, b.lastModified).filter(_ != null).maxByOption(utf8).orNull)
+
+  /** The catalog entries of `rows`' files, by [[combine]]'s rule, from one
+    * aggregate collected; a frame of legacy columns without a hash or
+    * timestamp gives null ones */
+  private def entriesOf(rows: DataFrame): Seq[FileEntry] = {
+    def opt(c: String) = if (rows.columns.contains(c)) col(c) else lit(null).cast(StringType)
+    rows.groupBy("filePath").agg(count(lit(1)), count(opt("contentHash")), min(opt("contentHash")),
+        max(opt("contentHash")), max(opt("timestamp")))
+      .collect().toSeq.map(r => FileEntry(r.getString(0),
+        if (r.getLong(1) == r.getLong(2) && r.getString(3) == r.getString(4)) r.getString(3) else null,
+        r.getLong(1), r.getString(5)))
+  }
+
+  private def toJson(f: FileEntry): Array[Byte] =
+    (Manifest.json.writeValueAsString(Manifest.json.createObjectNode().put("filePath", f.filePath)
+      .put("contentHash", f.contentHash).put("chunkCount", f.chunkCount)
+      .put("lastModified", f.lastModified)) + "\n").getBytes("UTF-8")
+
+  private def parse(line: String): FileEntry = {
+    val n = Manifest.json.readTree(line)
+    def str(f: String) = if (n.path(f).isTextual) n.get(f).asText else null
+    FileEntry(n.get("filePath").asText, str("contentHash"), n.get("chunkCount").asLong, str("lastModified"))
+  }
+
+  /** a slice's rows: one per stored filePath */
   private val FilesSchema: StructType = StructType(Seq(
     StructField("filePath", StringType, nullable = false),
     StructField("contentHash", StringType),
     StructField("chunkCount", LongType, nullable = false),
     StructField("lastModified", StringType)))
 
-  /** a catalog file's rows: the `files` table plus the bucket column */
-  private val SliceSchema: StructType = FilesSchema.add(StructField(B, LongType, nullable = false))
-
-  private val schemas = Map(Chunks -> ChunkSchema.schema, Files -> FilesSchema)
-
   private val ListSchema = StructType(Seq(FilesSchema(0), FilesSchema(2), FilesSchema(3)))
   private val ManifestSchema = StructType(Seq(FilesSchema(0), FilesSchema(1)))
-
-  // where a catalog row comes from, for [[merged]]
-  private val Base = 0
-  private val Removing = 1
-  private val Replacing = 2
-
-  /** chunk rows as one-chunk catalog entries (filePath, contentHash,
-    * chunkCount = 1, lastModified = timestamp); a frame of legacy columns
-    * without a hash or timestamp gives null ones */
-  private def entries(chunks: DataFrame, src: Int): DataFrame = {
-    def opt(c: String) = if (chunks.columns.contains(c)) col(c) else lit(null).cast(StringType)
-    chunks.select(col("filePath"), opt("contentHash").as("contentHash"),
-      lit(1L).as("chunkCount"), opt("timestamp").as("lastModified"), lit(src).as("_src"))
-  }
-
-  /** The per-file catalog of `rows`, catalog entries tagged with `_src`, in
-    * one aggregate on filePath. A file with `Replacing` entries keeps only
-    * those, merged: counts add, the latest lastModified wins, and the hash
-    * survives only when every entry carries the same one. Otherwise a
-    * file with a `Removing` entry is dropped, and one with only its `Base`
-    * entry keeps it. `_fresh` marks the files with `Replacing` entries. */
-  private def merged(rows: DataFrame): DataFrame = {
-    def fresh(c: Column) = when(col("_src") === Replacing, c)
-    def base(c: String) = max(when(col("_src") === Base, col(c)))
-    val hash = fresh(col("contentHash"))
-    rows.groupBy("filePath").agg(
-        count(fresh(lit(1))).as("n"), count(hash).as("hashed"),
-        min(hash).as("h"), max(hash).as("h1"),
-        sum(fresh(col("chunkCount"))).as("c"), max(fresh(col("lastModified"))).as("t"),
-        base("contentHash").as("bh"), base("chunkCount").as("bc"), base("lastModified").as("bt"),
-        count(when(col("_src") === Base, 1)).as("nb"), max(col("_src") === Removing).as("gone"))
-      .filter(col("n") > 0 || (col("nb") > 0 && !col("gone")))
-      .select(col("filePath"),
-        when(col("n") > 0, when(col("hashed") === col("n") && col("h") === col("h1"), col("h")))
-          .otherwise(col("bh")).as("contentHash"),
-        when(col("n") > 0, col("c")).otherwise(col("bc")).as("chunkCount"),
-        when(col("n") > 0, col("t")).otherwise(col("bt")).as("lastModified"),
-        (col("n") > 0).as("_fresh"))
-  }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
 
 /** One bucket's rows of a bucketed store's table, with the bucket's row
   * count and filePath range (null when not recorded): a [[ChunkStore]]
-  * `chunks` directory or the directory holding its `files` catalog slice
-  * (one write's slices share one); an [[FtsIndexStore]] `postings`
+  * `chunks` directory or the JSON-lines file of its `files` catalog
+  * slice; an [[FtsIndexStore]] `postings`
   * directory, or a `source`: a chunk entry (qualified path) the bucket's
   * postings were built from */
 final case class ManifestEntry(table: String, bucket: Long, path: String,
@@ -39,7 +39,8 @@ final case class Manifest(tables: Map[String, Seq[String]] = Map.empty,
 object Manifest {
   val Empty: Manifest = Manifest()
 
-  private val json = new ObjectMapper()
+  /** the JSON codec of manifests and of the chunk store's catalog slices */
+  private[store] val json = new ObjectMapper()
 
   private[store] def toJson(m: Manifest): Array[Byte] = {
     val root = json.createObjectNode()

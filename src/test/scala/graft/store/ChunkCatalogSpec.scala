@@ -11,9 +11,9 @@ import graft.core.{GraftSession, Profile}
 import graft.embed.HashedEmbedder
 
 /** The per-file catalog committed with every chunk-table version answers
-  * exactly what the aggregates over the chunk table it replaced answered:
-  * after every operation of a seeded sequence, on a store committed before
-  * the catalog existed, and with no Spark job on the read side. */
+  * exactly what the aggregates over the chunk table it replaced answered,
+  * after every operation of a seeded sequence, with no Spark job on the
+  * read side; a root in an earlier layout is refused. */
 class ChunkCatalogSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)
@@ -110,65 +110,47 @@ class ChunkCatalogSpec extends AnyFunSuite {
     assert(chunkEntries().map(_.bucket).distinct.size === chunkEntries().size)
   }
 
-  test("a version committed before the catalog answers the same, and its next commit names a files table") {
-    val root = tmp("catalog-legacy")
-    val log = new StoreLog(spark, root)
-    val hashed = Seq(chunk("/l/a.md", 0, Some("x"), 3), chunk("/l/a.md", 1, Some("x"), 4),
-      chunk("/l/b.md", 0, Some("x"), 5), chunk("/l/b.md", 1, Some("y"), 2)).toDF()
-    val legacy = Seq(chunk("/l/c.md", 0, None, 7)).toDF().drop("fileTitle", "contentHash")
-    log.publish(log.latest(), Manifest(tables = Map("chunks" ->
-      Seq(log.write("chunks", hashed), log.write("chunks", legacy)))))
-    val st = new ChunkStore(spark, root)
-    assert(st.exists, "a pre-catalog store is not absent")
-    assert(answers(st) === aggregates(st.read()))
-    assert(st.status() === ((5L, 3L)))
-    assert(st.manifest().collect().map(r => r.getString(0) -> r.getString(1)).toMap ===
-      Map("/l/a.md" -> "x", "/l/b.md" -> null, "/l/c.md" -> null))
-    val (_, rec) = Profile.window(spark.sparkContext)((st.status(), st.listFiles().collect()))
-    assert(rec.jobs.isEmpty, "the derived catalog is memoized on the version")
-
-    st.upsertFile("/l/d.md", Seq(chunk("/l/d.md", 0, Some("z"), 9)).toDF())
-    val m = log.latest()
-    assert(m.tables.isEmpty && m.entries.exists(_.table == "files"), "the next commit writes buckets")
-    assert(st.status() === ((6L, 4L)))
-    assert(answers(st) === aggregates(st.read()))
-  }
-
-  test("a version committed in the table layout (chunks and files directories) answers the same, and its next commit writes buckets") {
-    val root = tmp("catalog-tables")
-    val log = new StoreLog(spark, root)
-    val rows = Seq(chunk("/t/a.md", 0, Some("x"), 3), chunk("/t/a.md", 1, Some("x"), 4),
-      chunk("/t/b.md", 0, Some("y"), 5)).toDF()
-    val files = Seq(("/t/a.md", "x", 2L, "2026-01-04T00:00:00Z"),
-      ("/t/b.md", "y", 1L, "2026-01-05T00:00:00Z"))
+  test("a table-layout or parquet-slice version is refused, naming the root") {
+    val rows = Seq(chunk("/t/a.md", 0, Some("x"), 3), chunk("/t/a.md", 1, Some("x"), 4)).toDF()
+    val files = Seq(("/t/a.md", "x", 2L, "2026-01-04T00:00:00Z"))
       .toDF("filePath", "contentHash", "chunkCount", "lastModified")
-    log.publish(log.latest(), Manifest(
-      tables = Map("chunks" -> Seq(log.write("chunks", rows)), "files" -> Seq(log.write("files", files))),
-      stats = Map("n_chunks" -> 3L, "n_files" -> 2L)))
-    val st = new ChunkStore(spark, root)
-    assert(answers(st) === aggregates(st.read()))
-    assert(st.status() === ((3L, 2L)))
-    val (_, rec) = Profile.window(spark.sparkContext)(st.status())
-    assert(rec.jobs.isEmpty, "warm: the version's catalog is memoized")
-    assert(st.readFiles(Seq("/t/b.md")).count() === 1L)
-
-    st.deleteFile("/t/b.md")
-    val m = log.latest()
-    assert(m.tables.isEmpty && m.entries.map(_.table).sorted === Seq("chunks", "files"))
-    assert(st.status() === ((2L, 1L)))
-    assert(answers(st) === aggregates(st.read()))
+    // the table layout: `chunks` and `files` directories under `tables`
+    val tables = tmp("refuse-tables")
+    val tlog = new StoreLog(spark, tables)
+    tlog.publish(tlog.latest(), Manifest(
+      tables = Map("chunks" -> Seq(tlog.write("chunks", rows)), "files" -> Seq(tlog.write("files", files)))))
+    // the bucket layout with a parquet catalog slice
+    val slices = tmp("refuse-slices")
+    val slog = new StoreLog(spark, slices)
+    val b = ChunkStore.bucketOf("/t/a.md")
+    slog.publish(slog.latest(), Manifest(entries = Seq(
+      ManifestEntry("chunks", b, slog.write("chunks", rows), "/t/a.md", "/t/a.md", 2L),
+      ManifestEntry("files", b, slog.write("files", files), "/t/a.md", "/t/a.md", 1L))))
+    for (root <- Seq(tables, slices)) {
+      val st = new ChunkStore(spark, root)
+      val calls: Seq[(String, () => Any)] = Seq(
+        "exists" -> (() => st.exists), "read" -> (() => st.read()), "status" -> (() => st.status()),
+        "listFiles" -> (() => st.listFiles()), "files" -> (() => st.files()),
+        "upsertFile" -> (() => st.upsertFile("/t/b.md", Seq(chunk("/t/b.md", 0, Some("y"), 5)).toDF())),
+        "deleteFile" -> (() => st.deleteFile("/t/a.md")), "optimize" -> (() => st.optimize(0)))
+      for ((name, call) <- calls) {
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(root), s"$name on $root: ${e.getMessage}")
+      }
+      assert(new StoreLog(spark, root).versions() === Seq(0L), s"$root: nothing committed")
+    }
   }
 
-  test("reads run no Spark job warm; upsertFile and deleteFile commit in two") {
+  test("reads run no Spark job cold or warm; upsertFile, deleteFile run one") {
     val st = new ChunkStore(spark, tmp("catalog-jobs"))
     st.insert((0 until 6).flatMap(i => Seq(chunk(s"/j/f$i.md", 0, Some("h"), 1),
       chunk(s"/j/f$i.md", 1, Some("h"), 2))).toDF())
     def jobs(body: => Any): Int = Profile.window(spark.sparkContext)(body)._2.jobs.size
-    assert(jobs(st.upsertFile("/j/f1.md", Seq(chunk("/j/f1.md", 0, Some("g"), 3)).toDF())) === 2,
-      "the table and the catalog")
-    assert(jobs(st.deleteFile("/j/f2.md")) === 2, "the table and the catalog")
+    assert(jobs(st.upsertFile("/j/f1.md", Seq(chunk("/j/f1.md", 0, Some("g"), 3)).toDF())) === 1,
+      "the table; the catalog slice is written on the driver")
+    assert(jobs(st.deleteFile("/j/f2.md")) === 1, "the table; the catalog slice is written on the driver")
     assert(jobs(st.status()) === 0)
-    assert(jobs(st.listFiles().collect()) <= 1, "cold: one scan of the catalog")
+    assert(jobs((st.listFiles().collect(), st.manifest().collect())) === 0, "cold: the slices are read on the driver")
     assert(jobs((st.listFiles().collect(), st.manifest().collect())) === 0)
     assert(st.status() === ((9L, 5L)))
   }

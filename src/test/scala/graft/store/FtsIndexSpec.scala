@@ -13,7 +13,7 @@ import graft.search.Bm25
   * of a seeded sequence a refresh equals a full rebuild of the same rows
   * (postings, per-bucket and total stats, BM25 scores to the bit), a
   * one-file refresh rewrites one bucket and carries the others by path,
-  * and a version in the table layout reads as absent. */
+  * and an index version in the table layout reads as absent. */
 class FtsIndexSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)
@@ -80,19 +80,6 @@ class FtsIndexSpec extends AnyFunSuite {
     val st = new ChunkStore(spark, s"${tmp("fts-seq")}/chunks")
     st.insert((0 until 4).flatMap(i => (0 until 3).map(chunk(rnd, s"/s/seq/f$i.md", _))).toDF())
     sequence(st, rnd, "seq")
-  }
-
-  test("from a chunk store in the table layout, refresh equals a fresh rebuild") {
-    val rnd = new Random(7L)
-    val root = s"${tmp("fts-tables")}/chunks"
-    val log = new StoreLog(spark, root)
-    val rows = (0 until 5).flatMap(i => (0 until 2).map(chunk(rnd, s"/s/tab/f$i.md", _))).toDF()
-    val files = rows.groupBy("filePath").count()
-      .selectExpr("filePath", "'h' AS contentHash", "count AS chunkCount",
-        "'2026-01-01T00:00:00Z' AS lastModified")
-    log.publish(log.latest(), Manifest(
-      tables = Map("chunks" -> Seq(log.write("chunks", rows)), "files" -> Seq(log.write("files", files)))))
-    sequence(new ChunkStore(spark, root), rnd, "tab")
   }
 
   test("a one-file refresh rewrites its bucket in one job and carries every other bucket by path") {

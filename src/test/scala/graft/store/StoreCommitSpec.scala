@@ -5,8 +5,9 @@ import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,8 +19,10 @@ import graft.ops.CleanCorpus
 
 /** The local filesystem under the `fault:` scheme, throwing at the k-th
   * write of a store mutation once armed. A write is a table write starting
-  * (the first mkdirs of a new directory directly under a `data/` dir) or a
-  * commit (a rename into a `_log/` dir), so arming k = 1, 2, … kills a
+  * (the first mkdirs of a new directory directly under a `data/` dir, or
+  * the first file created directly under one by a write: the files
+  * `<table>-<id>-<bucket>.json` of one write share its `<table>-<id>`) or
+  * a commit (a rename into a `_log/` dir), so arming k = 1, 2, … kills a
   * mutation before each of its writes in turn. */
 class FaultFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("fault:///")
@@ -28,6 +31,15 @@ class FaultFs extends RawLocalFileSystem {
     FaultFs.onMkdirs(this, f); super.mkdirs(f, permission)
   }
   override def mkdirs(f: Path): Boolean = { FaultFs.onMkdirs(this, f); super.mkdirs(f) }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FaultFs.onCreate(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FaultFs.onCreate(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
   override def rename(src: Path, dst: Path): Boolean = {
     if (dst.getParent != null && dst.getParent.getName == "_log") FaultFs.write()
     super.rename(src, dst)
@@ -53,6 +65,11 @@ object FaultFs {
     if (p != null && p.getParent != null && !fs.exists(p) && started.add(p.toUri.getPath))
       write()
   }
+
+  private def onCreate(f: Path): Unit =
+    if (f.getParent != null && f.getParent.getName == "data" &&
+        started.add(s"${f.getParent.toUri.getPath}/${f.getName.take(f.getName.lastIndexOf('-'))}"))
+      write()
 
   def fired(t: Throwable): Boolean =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -126,7 +143,7 @@ class StoreCommitSpec extends AnyFunSuite {
     val empty = state()
     assert(underEveryFault(empty, state())(st.insert(Seq(chunk("/a/x.md", 0, "old x"),
       chunk("/a/x.md", 1, "old x two"), chunk("/a/y.md", 0, "y text")).toDF())) === 3,
-      "the chunks, the catalog derived from them and one commit")
+      "the chunks, the catalog slices derived from them and one commit")
     val v0 = state()
     assert(v0._4 === ((3L, 2L)))
     val reader0 = st.read()
@@ -139,14 +156,16 @@ class StoreCommitSpec extends AnyFunSuite {
     assert(rows(reader0) === v0._1, "a reader resolved before the commit reads its version")
 
     val reader1 = st.read()
-    assert(underEveryFault(v1, state())(st.deleteFile("/a/y.md")) === 3)
+    // the delete empties its bucket: its (empty) chunk write and one
+    // commit, and no catalog slice to write
+    assert(underEveryFault(v1, state())(st.deleteFile("/a/y.md")) === 2)
     assert(rows(st.read()) === Seq(("/a/x.md", 0, "new x")))
     assert(st.status() === ((1L, 1L)))
     assert(st.listFiles().collect().map(_.getString(0)).toSeq === Seq("/a/x.md"))
     assert(rows(reader1) === v1._1)
 
-    // the batched mutations: the merged catalog, the touched buckets'
-    // chunks and one commit; a compaction rewrites chunks only
+    // the batched mutations: the touched buckets' chunks, their catalog
+    // slices and one commit; a compaction rewrites chunks only
     val v2 = state()
     assert(underEveryFault(v2, state())(assert(st.upsertFilesFromRows((0 until 4).flatMap(i =>
       Seq(chunk(s"/b/f$i.md", 0, s"b $i"), chunk(s"/b/f$i.md", 1, s"b $i two"))).toDF()
@@ -265,11 +284,10 @@ class StoreCommitSpec extends AnyFunSuite {
           if (st.status(m) != counted) mismatched.add(s"v${m.version}: ${st.status(m)} vs $counted")
           val chunks = rows.groupBy("filePath").count().collect()
             .map(r => (ChunkStore.bucketOf(r.getString(0)), r.getString(0), r.getLong(1))).toSeq.sorted
-          // a slice is its directory's rows of its bucket (one write's
-          // slices share a directory)
+          // a slice is one JSON-lines file of its bucket's rows
           val slices = m.entries.filter(_.table == "files").flatMap(e =>
-              spark.read.parquet(log.abs(e.path)).select("filePath", "chunkCount").collect()
-                .map(r => (e.bucket, r.getString(0), r.getLong(1))).filter(t => ChunkStore.bucketOf(t._2) == e.bucket))
+              spark.read.schema("filePath STRING, chunkCount LONG").json(log.abs(e.path)).collect()
+                .map(r => (e.bucket, r.getString(0), r.getLong(1))))
             .sorted
           if (slices != chunks) mismatched.add(s"v${m.version}: slices ${slices.diff(chunks)} vs chunks ${chunks.diff(slices)}")
         } catch { case t: Throwable => failures.add(t) }
